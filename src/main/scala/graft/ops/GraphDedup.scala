@@ -91,8 +91,10 @@ object GraphDedup {
     // large-star/small-star loop below, unchanged.
     if (maxDriverEdges > 0L &&
         e0.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType)) {
+      // clamp BEFORE the +1: Long.MaxValue + 1 wraps negative, which
+      // would collect nothing and pass the empty probe off as the graph
       val probed = e0
-        .limit(math.min(maxDriverEdges + 1, Int.MaxValue.toLong).toInt)
+        .limit((math.min(maxDriverEdges, Int.MaxValue - 1L) + 1).toInt)
         .collect()
       if (probed.length <= maxDriverEdges) {
         releaseCheckpoints(e0)

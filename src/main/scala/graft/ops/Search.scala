@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Inverted-index build and keyword search over the corpus — the
@@ -40,6 +40,23 @@ import org.apache.spark.sql.functions._
   *    — a per-document window (a partition is one document, never
   *    skewed) so the phrase check is a single pass with no self-join
   *    re-scan.
+  *
+  * Every route has ONE implementation, and the token analyzer is a
+  * parameter of it: pass [[Analyzer.Raw]] (the default — tokens as
+  * written) or [[Analyzer.Folded]] (case and edge punctuation folded
+  * on both sides — the mode a production search box serves). The
+  * analyzer owns the query-term normalisation, the token column a
+  * route builds and prunes on, and the names of the persisted
+  * relations it reads, so the term, BM25, batch, phrase, slop, facet,
+  * grouped, passage, KWIC and query-string routes — corpus and index
+  * alike — share one code path per route; every index probe starts
+  * from the one bucket-pruned scan ([[pruned]]) and scores with the
+  * one idf model ([[idfModel]]). Builds and maintenance take
+  * `analyzed = true` to ALSO maintain the folded tier (a cold-start
+  * stream has no index yet to read that choice from).
+  * [[analyzedFromIndex]], [[analyzedBm25FromIndex]] and
+  * [[analyzedPhraseFromIndex]] keep their published names as one-line
+  * calls into the shared routes for existing callers.
   */
 object Search {
   type Q = (SparkSession, String) => DataFrame
@@ -74,65 +91,96 @@ object Search {
   private[ops] val fixturePhrase = ("hash", "join")
   private val topK = 10
 
-  /** (token, doc_id, tf) postings. */
-  private def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs
-      .select(col(idCol).cast("long").as("doc_id"), explode(split(col(textCol), " ")).as("token"))
-      .groupBy(col("token"), col("doc_id"))
-      .agg(count(lit(1)).as("tf"))
-
-  /** [[postings]] with the document's token length DENORMALIZED onto
-    * every row — the PERSISTED-index variant of the relation. BM25's
-    * length normalizer then rides the posting row itself, so an
-    * index-served BM25 probe touches ONLY its terms' bucket dirs:
-    * joining a separate doc-keyed doclen relation would re-read a
-    * corpus-cardinality table per probe (~10¹⁰ rows at 100 TB) for a
-    * candidate-sized dl lookup. Cost at build time: one extra BIGINT
-    * column on rows the build materializes anyway (dl is constant per
-    * doc, so adding it to the grouping key changes no group).
+  /** The token ANALYZER a route serves under. [[Analyzer.Raw]]
+    * matches whitespace tokens as written; [[Analyzer.Folded]] lowercases
+    * and strips non-alphanumeric token edges on BOTH sides (corpus tokens
+    * and query terms alike — the property that makes search correct: an
+    * unanalyzed probe misses every case/punctuation variant of its term),
+    * dropping tokens that fold to empty. Each member owns its query-term
+    * normalisation, its token array and coarse prune, and the names of
+    * the index relations, length column and dictionary it serves from;
+    * the persisted folded tier mirrors the raw one under its own names
+    * (same token-hash bucket layout, keyed by the FOLDED token's hash).
     */
-  private def postingsWithDl(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs
-      .select(col(idCol).cast("long").as("doc_id"), split(col(textCol), " ").as("toks"))
-      .select(
-        col("doc_id"),
-        size(col("toks")).cast("long").as("dl"),
-        explode(col("toks")).as("token")
-      )
-      .groupBy(col("token"), col("doc_id"), col("dl"))
-      .agg(count(lit(1)).as("tf"))
-      .select(col("token"), col("doc_id"), col("tf"), col("dl"))
+  sealed abstract class Analyzer(
+      private[ops] val postings: String,
+      private[ops] val positions: String,
+      private[ops] val dl: String,
+      private[ops] val vocab: String
+  ) {
 
-  /** (token, doc_id, pos) POSITIONAL postings — the phrase-serving
-    * relation. Corpus-token-sized by construction (a positional index
-    * IS the corpus re-encoded as rows), but bucketed exactly like
-    * [[postings]], so a phrase probe still reads only its terms'
-    * bucket dirs — the row count is the corpus's, the probe I/O is
-    * the query's.
-    */
-  private def positionalPostings(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs
-      .select(
-        col(idCol).cast("long").as("doc_id"),
-        posexplode(split(col(textCol), " ")).as(Seq("pos", "token"))
-      )
-      .select(col("token"), col("doc_id"), col("pos").cast("long").as("pos"))
+    /** Driver-side query-term normalisation. */
+    def term(t: String): String
 
-  /** (token, doc_id, pos) positions over the ANALYZED token stream —
-    * the phrase-serving relation for the mode real users run: pos is
-    * the token's index in the FILTERED analyzed sequence (pure-punct
-    * tokens dropped BEFORE numbering, so adjacency means "adjacent
-    * after analysis" — `"big, hash"` and `"big hash"` both yield
-    * consecutive positions). Same bucket layout as [[positionalPostings]],
-    * keyed by the analyzed token's hash.
+    /** In-plan per-token normalisation — [[term]]'s executor twin. */
+    private[ops] def token(c: Column): Column
+
+    /** The document's token array. */
+    private[ops] def tokens(textCol: String): Column
+
+    /** Coarse pushable prune: a necessary condition for an exact token
+      * match of the normalised term `t`.
+      */
+    private[ops] def contains(textCol: String, t: String): Column
+
+    /** Case fold for a dictionary pattern (a glob, or a regex whose
+      * escapes must survive).
+      */
+    private[ops] def pattern(p: String, regex: Boolean): String
+
+    /** (N, total tokens) of a persisted index — BM25's model scalars. */
+    private[ops] def scalars(s: SparkSession, dir: String): (Long, Long)
+
+    /** Query terms as a route matches them: normalised, empties
+      * dropped, repeats collapsed (a repeated term must neither
+      * double-count nor make an all-terms gate unreachable).
+      */
+    private[ops] def terms(raw: Seq[String]): Seq[String] = raw.map(term).filter(_.nonEmpty).distinct
+  }
+
+  object Analyzer {
+    case object Raw extends Analyzer("postings", "positions", "dl", "vocab") {
+      def term(t: String): String = t
+      private[ops] def token(c: Column): Column = c
+      private[ops] def tokens(textCol: String): Column = split(col(textCol), " ")
+      private[ops] def contains(textCol: String, t: String): Column = col(textCol).contains(t)
+      private[ops] def pattern(p: String, regex: Boolean): String = p
+      private[ops] def scalars(s: SparkSession, dir: String): (Long, Long) = readMeta(s, dir)
+    }
+
+    case object Folded extends Analyzer("apostings", "apositions", "adl", "avocab") {
+
+      /** The folded-total scalar relation (N is analyzer-independent
+        * and lives in the main meta); raw-only indexes never pay for it.
+        */
+      private[ops] val meta = "ameta"
+      def term(t: String): String = analyzeTerm(t)
+      private[ops] def token(c: Column): Column = analyzeCol(c)
+      private[ops] def tokens(textCol: String): Column = atoksCol(textCol)
+      // an analyzed token's body appears contiguously in the lowered text
+      private[ops] def contains(textCol: String, t: String): Column = lower(col(textCol)).contains(t)
+      private[ops] def pattern(p: String, regex: Boolean): String =
+        if (regex) lowerRegexLiterals(p) else p.toLowerCase
+      private[ops] def scalars(s: SparkSession, dir: String): (Long, Long) =
+        (readMeta(s, dir)._1, readAmeta(s, dir))
+    }
+
+    /** The tiers a build or maintenance step writes: raw always, the
+      * folded tier too when asked.
+      */
+    private[ops] def tiers(folded: Boolean): Seq[Analyzer] = if (folded) Seq(Raw, Folded) else Seq(Raw)
+  }
+  import Analyzer.{Folded, Raw}
+
+  /** Kept to two engine-portable operations so the DuckDB oracle runs
+    * the same chain.
     */
-  private def analyzedPositionalPostings(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs
-      .select(
-        col(idCol).cast("long").as("doc_id"),
-        posexplode(atoksCol(textCol)).as(Seq("pos", "token"))
-      )
-      .select(col("token"), col("doc_id"), col("pos").cast("long").as("pos"))
+  private def analyzeCol(c: Column): Column =
+    regexp_replace(lower(c), "^[^a-z0-9]+|[^a-z0-9]+$", "")
+
+  /** Driver-side twin of [[analyzeCol]] for query terms. */
+  private[ops] def analyzeTerm(t: String): String =
+    t.toLowerCase.replaceAll("^[^a-z0-9]+|[^a-z0-9]+$", "")
 
   /** The analyzer as a SQL snippet usable inside array lambdas —
     * byte-identical semantics to [[analyzeCol]] (regexp_replace in
@@ -144,49 +192,105 @@ object Search {
   /** The document's ANALYZED token array: every whitespace token
     * through the analyzer, pure-punct (empty) results dropped.
     */
-  private def atoksCol(textCol: String): org.apache.spark.sql.Column =
+  private def atoksCol(textCol: String): Column =
     expr(s"filter(transform(split($textCol, ' '), t -> ${analyzeSql("t")}), t -> t != '')")
 
-  /** (token, doc_id, tf) postings over the ANALYZED token stream —
-    * lowercase + punctuation-stripped ([[analyzeCol]]), pure-punct
-    * tokens dropped. The relation the analyzed index routes serve
-    * from; the same chain [[analyzedSearch]] runs corpus-side, so the
-    * two routes must agree token for token.
-    */
-  private def analyzedPostings(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+  /** (token, doc_id, tf) postings over the analyzer's token stream. */
+  private def postings(docs: DataFrame, idCol: String, textCol: String, a: Analyzer = Raw): DataFrame =
     docs
-      .select(col(idCol).cast("long").as("doc_id"), explode(split(col(textCol), " ")).as("raw"))
-      .select(col("doc_id"), analyzeCol(col("raw")).as("token"))
-      .filter(col("token") =!= "")
+      .select(col(idCol).cast("long").as("doc_id"), explode(a.tokens(textCol)).as("token"))
       .groupBy(col("token"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
 
-  /** [[analyzedPostings]] with the ANALYZED document length (count of
-    * non-empty analyzed tokens) denormalized onto every row — the
-    * persisted form, mirroring [[postingsWithDl]]: analyzed BM25's
-    * normalizer rides the posting row, so the analyzed ranked probe
-    * reads nothing doc-keyed.
+  /** [[postings]] with the document's token length DENORMALIZED onto
+    * every row (under the analyzer's length column) — the
+    * PERSISTED-index variant of the relation. BM25's length normalizer
+    * then rides the posting row itself, so an index-served BM25 probe
+    * touches ONLY its terms' bucket dirs: joining a separate doc-keyed
+    * doclen relation would re-read a corpus-cardinality table per probe
+    * (~10¹⁰ rows at 100 TB) for a candidate-sized dl lookup. Cost at
+    * build time: one extra BIGINT column on rows the build materializes
+    * anyway (dl is constant per doc, so adding it to the grouping key
+    * changes no group).
     */
-  private def analyzedPostingsWithDl(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+  private def postingsWithDl(docs: DataFrame, idCol: String, textCol: String, a: Analyzer = Raw): DataFrame =
     docs
-      .select(col(idCol).cast("long").as("doc_id"), atoksCol(textCol).as("atoks"))
+      .select(col(idCol).cast("long").as("doc_id"), a.tokens(textCol).as("toks"))
       .select(
         col("doc_id"),
-        size(col("atoks")).cast("long").as("adl"),
-        explode(col("atoks")).as("token")
+        size(col("toks")).cast("long").as(a.dl),
+        explode(col("toks")).as("token")
       )
-      .groupBy(col("token"), col("doc_id"), col("adl"))
+      .groupBy(col("token"), col("doc_id"), col(a.dl))
       .agg(count(lit(1)).as("tf"))
-      .select(col("token"), col("doc_id"), col("tf"), col("adl"))
+      .select(col("token"), col("doc_id"), col("tf"), col(a.dl))
 
-  /** (doc_id, dl) document token lengths — BM25's length normalizer,
-    * recorded at build time so an index probe never needs the corpus.
+  /** (token, doc_id, pos) POSITIONAL postings — the phrase-serving
+    * relation. Corpus-token-sized by construction (a positional index
+    * IS the corpus re-encoded as rows), but bucketed exactly like
+    * [[postings]], so a phrase probe still reads only its terms'
+    * bucket dirs — the row count is the corpus's, the probe I/O is
+    * the query's. Under [[Analyzer.Folded]] pos indexes the FILTERED
+    * token sequence (pure-punct tokens dropped before numbering), so
+    * adjacency means "adjacent after analysis" — `"big, hash"` and
+    * `"big hash"` both yield consecutive positions.
+    */
+  private def positionalPostings(docs: DataFrame, idCol: String, textCol: String, a: Analyzer = Raw): DataFrame =
+    docs
+      .select(
+        col(idCol).cast("long").as("doc_id"),
+        posexplode(a.tokens(textCol)).as(Seq("pos", "token"))
+      )
+      .select(col("token"), col("doc_id"), col("pos").cast("long").as("pos"))
+
+  /** Summed token count of a document relation under the analyzer (0
+    * on an empty relation).
+    */
+  private def tokenTotal(textCol: String, a: Analyzer): Column =
+    coalesce(sum(size(a.tokens(textCol)).cast("long")), lit(0L)).cast("long")
+
+  /** (doc_id, dl) document token lengths — recorded at build time so
+    * an index probe never needs the corpus.
     */
   private def docLengths(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(
       col(idCol).cast("long").as("doc_id"),
       size(split(col(textCol), " ")).cast("long").as("dl")
     )
+
+  /** Smoothed idf, floor(ln((N+1)/(df+1))·scale) over a `df` column —
+    * the one float op every scorer shares (scale 10⁶ for the tf·idf
+    * routes, 10³ for BM25).
+    */
+  private def idfCol(nDocsPlus1: Column, scale: Long): Column =
+    floor(log(nDocsPlus1.cast("double") / (col("df") + 1)) * scale).cast("bigint")
+
+  private def idfName(scale: Long): String = if (scale == 1000L) "idf_milli" else "idf_micro"
+
+  /** (token, idf) model over PRUNED posting rows: df per token is the
+    * rows' count (postings are one row per (token, doc)), N comes from
+    * the index meta — the model every index probe broadcasts.
+    */
+  private def idfModel(p: DataFrame, nDocs: Long, scale: Long): DataFrame =
+    p.groupBy(col("token"))
+      .agg(count(lit(1)).cast("long").as("df"))
+      .withColumn(idfName(scale), idfCol(lit(nDocs + 1), scale))
+      .select(col("token"), col(idfName(scale)))
+
+  /** (token, df) over the corpus for each query term: one pruned pass
+    * PER TERM — df over a conjunctive candidate set would undercount,
+    * so each term's df counts on its own single-term prune (term-count
+    * bounded).
+    */
+  private def corpusDf(docs: DataFrame, idCol: String, textCol: String, terms: Seq[String], a: Analyzer): DataFrame =
+    terms
+      .map { t =>
+        postings(docs.filter(a.contains(textCol, t)), idCol, textCol, a)
+          .filter(col("token") === t)
+          .groupBy(col("token"))
+          .agg(count(lit(1)).cast("long").as("df"))
+      }
+      .reduce(_ union _)
 
   /** Shared top-k tail: orderBy+limit plans as TakeOrderedAndProject
     * (per-partition heaps, no full sort); the rank column is stamped
@@ -242,8 +346,9 @@ object Search {
       idCol: String,
       textCol: String,
       terms: Seq[String],
-      k: Int
-  ): DataFrame = termSearch(docs, idCol, textCol, terms, k, requireAll = true)
+      k: Int,
+      a: Analyzer = Raw
+  ): DataFrame = termSearch(docs, idCol, textCol, terms, k, requireAll = true, a = a)
 
   /** OR-of-terms search: same scoring, scan pruned with the UNION of
     * the per-term contains predicates (any term admits a candidate),
@@ -255,20 +360,23 @@ object Search {
       idCol: String,
       textCol: String,
       terms: Seq[String],
-      k: Int
-  ): DataFrame = termSearch(docs, idCol, textCol, terms, k, requireAll = false)
+      k: Int,
+      a: Analyzer = Raw
+  ): DataFrame = termSearch(docs, idCol, textCol, terms, k, requireAll = false, a = a)
 
   private def termSearch(
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      terms: Seq[String],
+      rawTerms: Seq[String],
       k: Int,
       requireAll: Boolean,
       minMatched: Int = 1,
-      exclude: Option[DataFrame] = None
+      exclude: Option[DataFrame] = None,
+      a: Analyzer = Raw
   ): DataFrame = {
-    require(terms.nonEmpty, "term search needs at least one term")
+    val terms = a.terms(rawTerms)
+    require(terms.nonEmpty, "term search needs at least one non-empty term")
     require(
       minMatched >= 1 && minMatched <= terms.size,
       s"minMatched must be in [1, ${terms.size}], got $minMatched"
@@ -277,32 +385,15 @@ object Search {
     // exact token match — AND of contains for conjunctive queries, OR
     // for disjunctive — and pushes to the scan, keeping the explode
     // candidate-sized
-    val containsTerms = terms.map(t => col(textCol).contains(t))
+    val containsTerms = terms.map(a.contains(textCol, _))
     val pruned = docs.filter(
       if (requireAll) containsTerms.reduce(_ && _) else containsTerms.reduce(_ || _)
     )
-    val p = postings(pruned, idCol, textCol)
-      .filter(col("token").isin(terms: _*))
-    // df per query term over the candidate set equals the corpus df
-    // for that term (every doc containing the token survives the
-    // conjunctive contains-prune only if it contains ALL terms) — so
-    // the model must count df on a single-term prune, not the
-    // conjunctive one. One extra pruned pass per term stays
-    // term-count-bounded.
+    val p = postings(pruned, idCol, textCol, a).filter(col("token").isin(terms: _*))
     val nDocs = docs.agg(countDistinct(col(idCol)).as("n_docs"))
-    val dfModel = terms
-      .map { t =>
-        postings(docs.filter(col(textCol).contains(t)), idCol, textCol)
-          .filter(col("token") === t)
-          .groupBy(col("token"))
-          .agg(count(lit(1)).cast("long").as("df"))
-      }
-      .reduce(_ union _)
+    val dfModel = corpusDf(docs, idCol, textCol, terms, a)
       .crossJoin(broadcast(nDocs))
-      .withColumn(
-        "idf_micro",
-        floor(log((col("n_docs") + 1).cast("double") / (col("df") + 1)) * 1000000L).cast("bigint")
-      )
+      .withColumn("idf_micro", idfCol(col("n_docs") + 1, 1000000L))
       .select(col("token"), col("idf_micro"))
     val scored = p
       .join(broadcast(dfModel), "token")
@@ -340,8 +431,9 @@ object Search {
       textCol: String,
       terms: Seq[String],
       minMatched: Int,
-      k: Int
-  ): DataFrame = termSearch(docs, idCol, textCol, terms, k, requireAll = false, minMatched)
+      k: Int,
+      a: Analyzer = Raw
+  ): DataFrame = termSearch(docs, idCol, textCol, terms, k, requireAll = false, minMatched, a = a)
 
   val searchConjunctive: Q = (s, d) =>
     conjunctiveSearch(documents(s, d), "doc_id", "text", fixtureAndTerms, topK)
@@ -371,9 +463,9 @@ object Search {
     *
     * Semantics are disjunctive (the BM25 norm): any term admits a
     * candidate, matched terms accumulate. dl is the candidate's token
-    * count (computed on the pruned scan); avgdl and N are two corpus
-    * scalars from one distributed aggregate. Same coarse-then-exact
-    * prune, broadcast term model and TakeOrderedAndProject top-k as
+    * count under the analyzer; avgdl and N are two corpus scalars from
+    * one distributed aggregate. Same coarse-then-exact prune, broadcast
+    * term model and TakeOrderedAndProject top-k as
     * [[disjunctiveSearch]].
     */
   def bm25Search(
@@ -381,8 +473,15 @@ object Search {
       idCol: String,
       textCol: String,
       terms: Seq[String],
-      k: Int
-  ): DataFrame = rankTop(bm25ScoredCorpus(docs, idCol, textCol, terms), "score_milli", k)
+      k: Int,
+      a: Analyzer = Raw
+  ): DataFrame = rankTop(bm25ScoredCorpus(docs, idCol, textCol, terms, a), "score_milli", k)
+
+  /** The per-term BM25 contribution over (tf, dl-column) rows joined to
+    * an idf_milli model — one BIGINT division.
+    */
+  private def bm25Contrib(avgdl: Long, dl: String): Column =
+    expr(s"(44 * idf_milli * tf * $avgdl) div (20 * $avgdl * tf + 6 * $avgdl + 18 * $dl)")
 
   /** The scored-candidate relation under [[bm25Search]] — factored out
     * so chunk-level retrieval can pool scores per parent document
@@ -393,49 +492,30 @@ object Search {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      terms: Seq[String]
+      rawTerms: Seq[String],
+      a: Analyzer
   ): DataFrame = {
-    require(terms.nonEmpty, "bm25 search needs at least one term")
+    val terms = a.terms(rawTerms)
+    require(terms.nonEmpty, "bm25 search needs at least one non-empty term")
     // N is countDistinct(id) — the ONE convention every search route
     // shares (termSearch's model, the index meta): with duplicate doc
     // ids a count(*) N would silently diverge from the others' idf
-    val stats = docs
-      .agg(
-        countDistinct(col(idCol)).cast("long").as("n_docs"),
-        sum(size(split(col(textCol), " ")).cast("long")).as("total_toks")
-      )
-      .head()
+    val stats = docs.agg(countDistinct(col(idCol)).cast("long"), tokenTotal(textCol, a)).head()
     val (nDocs, totalToks) = (stats.getLong(0), stats.getLong(1))
+    require(nDocs > 0, "bm25 search over an empty corpus")
     val avgdl = totalToks / nDocs
-    val pruned = docs
-      .filter(terms.map(t => col(textCol).contains(t)).reduce(_ || _))
-      .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("__text"))
-    val dl = pruned.select(col("doc_id"), size(split(col("__text"), " ")).cast("long").as("dl"))
-    val p = pruned
-      .select(col("doc_id"), explode(split(col("__text"), " ")).as("token"))
-      .filter(col("token").isin(terms: _*))
-      .groupBy(col("token"), col("doc_id"))
-      .agg(count(lit(1)).as("tf"))
-    val dfModel = terms
-      .map { t =>
-        postings(docs.filter(col(textCol).contains(t)), idCol, textCol)
-          .filter(col("token") === t)
-          .groupBy(col("token"))
-          .agg(count(lit(1)).cast("long").as("df"))
-      }
-      .reduce(_ union _)
-      .withColumn(
-        "idf_milli",
-        floor(log(lit(nDocs + 1).cast("double") / (col("df") + 1)) * 1000L).cast("bigint")
-      )
+    require(avgdl > 0, "bm25 search over an all-empty corpus (avgdl = 0)")
+    val p = postingsWithDl(
+      docs.filter(terms.map(a.contains(textCol, _)).reduce(_ || _)),
+      idCol,
+      textCol,
+      a
+    ).filter(col("token").isin(terms: _*))
+    val dfModel = corpusDf(docs, idCol, textCol, terms, a)
+      .withColumn("idf_milli", idfCol(lit(nDocs + 1), 1000L))
       .select(col("token"), col("idf_milli"))
-    p
-      .join(broadcast(dfModel), "token")
-      .join(dl, "doc_id")
-      .withColumn(
-        "contrib",
-        expr(s"(44 * idf_milli * tf * $avgdl) div (20 * $avgdl * tf + 6 * $avgdl + 18 * dl)")
-      )
+    p.join(broadcast(dfModel), "token")
+      .withColumn("contrib", bm25Contrib(avgdl, a.dl))
       .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).cast("long").as("n_matched"),
@@ -528,7 +608,7 @@ object Search {
   ): DataFrame = {
     val ch = chunkRelation(docs, idCol, textCol, chunkSize)
       .select(chunkCidCol.as("cid"), col("ctext"))
-    chunkPool(bm25ScoredCorpus(ch, "cid", "ctext", terms), k)
+    chunkPool(bm25ScoredCorpus(ch, "cid", "ctext", terms, Raw), k)
   }
 
   /** [[chunkBm25TopK]] served from a PERSISTED chunk index (the chunk
@@ -640,11 +720,14 @@ object Search {
   private def tokenBucketCol: org.apache.spark.sql.Column =
     expr(s"CAST(conv(substring(md5(cast(token as binary)), 1, 12), 16, 10) AS BIGINT) % $indexBuckets")
 
-  private val postingsSchema = new org.apache.spark.sql.types.StructType()
+  /** Schema of a persisted postings relation — the analyzer's length
+    * column denormalized per row (BM25's normalizer).
+    */
+  private def postingsSchema(a: Analyzer) = new org.apache.spark.sql.types.StructType()
     .add("token", "string")
     .add("doc_id", "long")
     .add("tf", "long")
-    .add("dl", "long")
+    .add(a.dl, "long")
     .add("tbucket", "long")
 
   private val positionsSchema = new org.apache.spark.sql.types.StructType()
@@ -653,15 +736,48 @@ object Search {
     .add("pos", "long")
     .add("tbucket", "long")
 
-  /** Schema of `dir/apostings` — ANALYZED postings with the analyzed
-    * doc length denormalized per row (analyzed BM25's normalizer).
+  /** The bucket-pruned read every index probe starts from: the terms'
+    * token-hash buckets, computed driver-side (no Spark pass), become a
+    * static PartitionFilter (spec-pinned) next to the token predicate,
+    * and dead rows drop through [[liveRows]] — or [[rowsAsOf]] for a
+    * time-travel read — directly over the scan. A probe for Q terms
+    * reads at most Q bucket dirs, never the index.
     */
-  private val apostingsSchema = new org.apache.spark.sql.types.StructType()
-    .add("token", "string")
-    .add("doc_id", "long")
-    .add("tf", "long")
-    .add("adl", "long")
-    .add("tbucket", "long")
+  private def pruned(
+      s: SparkSession,
+      dir: String,
+      rel: DataFrame,
+      terms: Seq[String],
+      asOf: Option[Long] = None
+  ): DataFrame = {
+    val scan = rel.filter(
+      col("tbucket").isin(terms.map(tokenBucket).distinct: _*) && col("token").isin(terms: _*)
+    )
+    asOf.fold(liveRows(s, dir, scan))(g => rowsAsOf(s, dir, scan, g))
+  }
+
+  /** [[pruned]] over the analyzer's persisted postings. */
+  private def postingsScan(
+      s: SparkSession,
+      dir: String,
+      terms: Seq[String],
+      a: Analyzer = Raw,
+      asOf: Option[Long] = None
+  ): DataFrame =
+    pruned(s, dir, s.read.schema(postingsSchema(a)).parquet(s"$dir/${a.postings}"), terms, asOf)
+
+  /** [[pruned]] over the analyzer's persisted positions, as (token,
+    * doc_id, pos).
+    */
+  private def positionsScan(
+      s: SparkSession,
+      dir: String,
+      terms: Seq[String],
+      a: Analyzer = Raw,
+      asOf: Option[Long] = None
+  ): DataFrame =
+    pruned(s, dir, s.read.schema(positionsSchema).parquet(s"$dir/${a.positions}"), terms, asOf)
+      .select(col("token"), col("doc_id"), col("pos"))
 
   /** The two corpus scalars every scorer needs: N (distinct docs) and
     * total token count (BM25's avgdl numerator), computed in ONE
@@ -669,10 +785,7 @@ object Search {
     */
   private def corpusScalars(docs: DataFrame, idCol: String, textCol: String): (Long, Long) = {
     val r = docs
-      .agg(
-        countDistinct(col(idCol)).cast("long"),
-        coalesce(sum(size(split(col(textCol), " ")).cast("long")), lit(0L))
-      )
+      .agg(countDistinct(col(idCol)).cast("long"), tokenTotal(textCol, Raw))
       .head()
     (r.getLong(0), r.getLong(1))
   }
@@ -737,17 +850,16 @@ object Search {
     (r._1, r._2)
   }
 
-  /** The ANALYZED-total meta scalar (sum of analyzed doc lengths) —
-    * analyzed BM25's avgdl numerator; N comes from the main meta (the
-    * doc count is analyzer-independent). Kept in its own relation so
-    * raw-only indexes never pay for it.
+  /** The FOLDED-total meta scalar (sum of folded doc lengths) — folded
+    * BM25's avgdl numerator; N comes from the main meta (the doc count
+    * is analyzer-independent).
     */
   private def writeAmeta(s: SparkSession, dir: String, totalAtoks: Long): Unit =
     graft.core.ScalarParquet.overwriteDir(
       s.sessionState.newHadoopConf(),
       fsFor(s, dir),
-      new org.apache.hadoop.fs.Path(s"$dir/ameta"),
-      "message ameta { optional int64 total_atoks; }",
+      new org.apache.hadoop.fs.Path(s"$dir/${Folded.meta}"),
+      s"message ${Folded.meta} { optional int64 total_atoks; }",
       Seq(Seq(totalAtoks))
     )
 
@@ -756,26 +868,49 @@ object Search {
     graft.core.ScalarParquet.foreachRow(
       s.sessionState.newHadoopConf(),
       fsFor(s, dir),
-      new org.apache.hadoop.fs.Path(s"$dir/ameta")
+      new org.apache.hadoop.fs.Path(s"$dir/${Folded.meta}")
     )(g => v = Some(g.getLong("total_atoks", 0)))
-    v.getOrElse(throw new IllegalStateException(s"search index at $dir: empty ameta relation"))
+    v.getOrElse(throw new IllegalStateException(s"search index at $dir: empty ${Folded.meta} relation"))
   }
 
-  /** total_atoks recomputed from the apostings relation itself: adl is
-    * constant per doc, so the distinct (doc_id, adl) pairs sum to the
-    * analyzed total (docs whose every token analyzed to empty appear
-    * nowhere and contribute zero) — the compaction-repair / idempotent
-    * stream form, a pure function of the on-disk rows.
+  /** True iff the index at `dir` carries the folded tier. */
+  private def hasFoldedTier(s: SparkSession, dir: String): Boolean =
+    fsFor(s, dir).exists(new org.apache.hadoop.fs.Path(s"$dir/${Folded.postings}"))
+
+  /** The folded meta scalar (0 on an index without the folded tier). */
+  private def foldedTotalOrZero(s: SparkSession, dir: String): Long =
+    if (fsFor(s, dir).exists(new org.apache.hadoop.fs.Path(s"$dir/${Folded.meta}"))) readAmeta(s, dir)
+    else 0L
+
+  /** total_atoks recomputed from the folded postings themselves: the
+    * folded length is constant per doc, so the distinct (doc_id, dl)
+    * pairs sum to the folded total (docs whose every token folded to
+    * empty appear nowhere and contribute zero) — the compaction-repair
+    * / idempotent stream form, a pure function of the on-disk rows.
     */
-  private def ametaFromApostings(s: SparkSession, dir: String): Long =
+  private def foldedTotalFromPostings(s: SparkSession, dir: String): Long =
     s.read
-      .schema(apostingsSchema)
-      .parquet(s"$dir/apostings")
-      .select(col("doc_id"), col("adl"))
+      .schema(postingsSchema(Folded))
+      .parquet(s"$dir/${Folded.postings}")
+      .select(col("doc_id"), col(Folded.dl))
       .distinct()
-      .agg(coalesce(sum(col("adl")), lit(0L)).cast("long"))
+      .agg(coalesce(sum(col(Folded.dl)), lit(0L)).cast("long"))
       .head()
       .getLong(0)
+
+  /** Write one bucketed index relation (postings or positions shaped)
+    * partitioned by token-hash bucket, co-located to one file per
+    * bucket before the partitioned write (the small-files guard every
+    * index write here uses).
+    */
+  private def writeBucketed(rel: DataFrame, path: String, mode: String): Unit =
+    rel
+      .withColumn("tbucket", tokenBucketCol)
+      .repartition(col("tbucket"))
+      .write
+      .mode(mode)
+      .partitionBy("tbucket")
+      .parquet(path)
 
   /** Persist the inverted index partitioned by token-hash bucket:
     * `dir/postings/tbucket=N/` holds every (token, doc_id, tf) whose
@@ -799,60 +934,25 @@ object Search {
       dir: String,
       analyzed: Boolean = false
   ): Unit = {
-    postingsWithDl(docs, idCol, textCol)
-      .withColumn("tbucket", tokenBucketCol)
-      .repartition(col("tbucket"))
-      .write
-      .mode("overwrite")
-      .partitionBy("tbucket")
-      .parquet(s"$dir/postings")
-    positionalPostings(docs, idCol, textCol)
-      .withColumn("tbucket", tokenBucketCol)
-      .repartition(col("tbucket"))
-      .write
-      .mode("overwrite")
-      .partitionBy("tbucket")
-      .parquet(s"$dir/positions")
     // production search is ALWAYS analyzed, so the serving index can
-    // carry the analyzed postings twin: same bucket layout keyed by
-    // the ANALYZED token's hash (query terms analyze driver-side to
-    // the same key — [[analyzeTerm]] is [[analyzeCol]]'s twin), with
-    // the analyzed doc length denormalized per row for analyzed BM25
-    if (analyzed) {
-      analyzedPostingsWithDl(docs, idCol, textCol)
-        .withColumn("tbucket", tokenBucketCol)
-        .repartition(col("tbucket"))
-        .write
-        .mode("overwrite")
-        .partitionBy("tbucket")
-        .parquet(s"$dir/apostings")
-      // analyzed positional twin — analyzed PHRASE serving reads only
-      // its terms' bucket dirs here, like raw phrase over positions
-      analyzedPositionalPostings(docs, idCol, textCol)
-        .withColumn("tbucket", tokenBucketCol)
-        .repartition(col("tbucket"))
-        .write
-        .mode("overwrite")
-        .partitionBy("tbucket")
-        .parquet(s"$dir/apositions")
-      writeAmeta(docs.sparkSession, dir, analyzedTotal(docs, textCol))
+    // carry the folded tier: same bucket layout keyed by the FOLDED
+    // token's hash (query terms fold driver-side to the same key), the
+    // folded doc length denormalized per row for folded BM25
+    val tiers = Analyzer.tiers(analyzed)
+    tiers.foreach { a =>
+      writeBucketed(postingsWithDl(docs, idCol, textCol, a), s"$dir/${a.postings}", "overwrite")
+      writeBucketed(positionalPostings(docs, idCol, textCol, a), s"$dir/${a.positions}", "overwrite")
     }
+    if (analyzed)
+      writeAmeta(docs.sparkSession, dir, docs.agg(tokenTotal(textCol, Folded)).head().getLong(0))
     docLengths(docs, idCol, textCol).write.mode("overwrite").parquet(s"$dir/doclen")
     writeMeta(docs.sparkSession, dir, corpusScalars(docs, idCol, textCol))
-    // the term dictionary, derived from the just-written postings (a
-    // types-scale aggregate over data the build materialized anyway);
-    // analyzed indexes carry the analyzed twin — the dictionary real
-    // prefix/fuzzy/autocomplete queries consult
-    writeVocabFromPostings(docs.sparkSession, dir)
-    if (analyzed) writeVocabFromPostings(docs.sparkSession, dir, analyzed = true)
+    // the term dictionary per tier, derived from the just-written
+    // postings (a types-scale aggregate over data the build
+    // materialized anyway) — the dictionary prefix/fuzzy/autocomplete
+    // queries consult
+    tiers.foreach(writeVocabFromPostings(docs.sparkSession, dir, _))
   }
-
-  /** Sum of analyzed doc lengths over a document relation. */
-  private def analyzedTotal(docs: DataFrame, textCol: String): Long =
-    docs
-      .agg(coalesce(sum(size(atoksCol(textCol)).cast("long")), lit(0L)).cast("long"))
-      .head()
-      .getLong(0)
 
   /** Conjunctive search served from the PERSISTED index: the query
     * terms' buckets are computed driver-side (no Spark pass) and the
@@ -864,72 +964,70 @@ object Search {
     * document frequency), so the probe needs no corpus pass at all;
     * N comes from the index meta.
     */
-  def conjunctiveFromIndex(s: SparkSession, indexDir: String, terms: Seq[String], k: Int): DataFrame =
-    termSearchFromIndex(s, indexDir, terms, k, requireAll = true)
+  def conjunctiveFromIndex(
+      s: SparkSession,
+      indexDir: String,
+      terms: Seq[String],
+      k: Int,
+      a: Analyzer = Raw
+  ): DataFrame = termSearchFromIndex(s, indexDir, terms, k, requireAll = true, a = a)
 
   /** OR-of-terms from the persisted index — completes the index twin
     * for every corpus search route; shares search_disjunctive's
     * oracle (same df model: pruned posting counts ARE the corpus df).
     */
-  def disjunctiveFromIndex(s: SparkSession, indexDir: String, terms: Seq[String], k: Int): DataFrame =
-    termSearchFromIndex(s, indexDir, terms, k, requireAll = false)
-
-  private def termSearchFromIndex(
+  def disjunctiveFromIndex(
       s: SparkSession,
       indexDir: String,
       terms: Seq[String],
       k: Int,
+      a: Analyzer = Raw
+  ): DataFrame = termSearchFromIndex(s, indexDir, terms, k, requireAll = false, a = a)
+
+  /** The search_serve benchmark's folded term route, kept under its
+    * published name: [[conjunctiveFromIndex]] / [[disjunctiveFromIndex]]
+    * with [[Analyzer.Folded]].
+    */
+  def analyzedFromIndex(
+      s: SparkSession,
+      indexDir: String,
+      rawTerms: Seq[String],
+      k: Int,
+      requireAll: Boolean
+  ): DataFrame = termSearchFromIndex(s, indexDir, rawTerms, k, requireAll, a = Folded)
+
+  /** The index term route shared by the live and AS-OF probes: df from
+    * the pruned posting rows, micro-idf model broadcast, matched-count
+    * gate, optional must-not anti-join, top-k.
+    */
+  private def termSearchFromIndex(
+      s: SparkSession,
+      indexDir: String,
+      rawTerms: Seq[String],
+      k: Int,
       requireAll: Boolean,
       minMatched: Int = 1,
-      exclude: Option[DataFrame] = None
+      exclude: Option[DataFrame] = None,
+      a: Analyzer = Raw,
+      asOf: Option[Long] = None
   ): DataFrame = {
-    require(terms.nonEmpty, "term search needs at least one term")
+    val terms = a.terms(rawTerms)
+    require(terms.nonEmpty, "term search needs at least one non-empty term")
     require(
       minMatched >= 1 && minMatched <= terms.size,
       s"minMatched must be in [1, ${terms.size}], got $minMatched"
     )
-    val buckets = terms.map(tokenBucket).distinct
-    val p = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(postingsSchema)
-        .parquet(s"$indexDir/postings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    )
-    scoreTermRows(p, readMeta(s, indexDir)._1, terms.size, k, requireAll, minMatched, exclude)
-  }
-
-  /** The index-scoring tail shared by the live and AS-OF probes: df
-    * from the pruned posting rows, micro-idf model broadcast,
-    * matched-count gate, optional must-not anti-join, top-k.
-    */
-  private def scoreTermRows(
-      p: DataFrame,
-      nDocs: Long,
-      nTerms: Int,
-      k: Int,
-      requireAll: Boolean,
-      minMatched: Int,
-      exclude: Option[DataFrame]
-  ): DataFrame = {
-    val dfModel = p
-      .groupBy(col("token"))
-      .agg(count(lit(1)).cast("long").as("df"))
-      .withColumn(
-        "idf_micro",
-        floor(log(lit(nDocs + 1).cast("double") / (col("df") + 1)) * 1000000L).cast("bigint")
-      )
-      .select(col("token"), col("idf_micro"))
+    val p = postingsScan(s, indexDir, terms, a, asOf)
+    val nDocs = asOf.fold(readMeta(s, indexDir))(g => metaAsOf(s, indexDir, g))._1
     val scored = p
-      .join(broadcast(dfModel), "token")
+      .join(broadcast(idfModel(p, nDocs, 1000000L)), "token")
       .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).cast("long").as("n_matched"),
         sum(col("tf") * col("idf_micro")).cast("long").as("score_micro")
       )
       .filter(
-        if (requireAll) col("n_matched") === nTerms.toLong
+        if (requireAll) col("n_matched") === terms.size.toLong
         else col("n_matched") >= minMatched.toLong
       )
     // exclusion join unhinted — must-not-df-sized, AQE's call (see
@@ -1085,16 +1183,9 @@ object Search {
     import s.implicits._
     val pairs = fieldTerms.toDF("field", "token", "boost")
     val terms = fieldTerms.map(_._2).distinct
-    val buckets = terms.map(tokenBucket).distinct
     val pairCond =
       fieldTerms.map { case (f, t, _) => col("field") === f && col("token") === t }.reduce(_ || _)
-    val fp = liveRows(
-      s,
-      fdir,
-      s.read
-        .parquet(s"$fdir/fpostings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    )
+    val fp = pruned(s, fdir, s.read.parquet(s"$fdir/fpostings"), terms)
       .filter(pairCond)
       .select(col("field"), col("token"), col("doc_id"), col("tf"))
     // per-field N riding a CASE chain — the request's fields only
@@ -1104,10 +1195,7 @@ object Search {
     val model = fp
       .groupBy(col("field"), col("token"))
       .agg(count(lit(1)).cast("long").as("df"))
-      .withColumn(
-        "idf_micro",
-        floor(log((nCol + 1).cast("double") / (col("df") + 1)) * 1000000L).cast("bigint")
-      )
+      .withColumn("idf_micro", idfCol(nCol + 1, 1000000L))
       .join(pairs, Seq("field", "token"))
       .select(col("field"), col("token"), col("idf_micro"), col("boost"))
     fp.join(broadcast(model), Seq("field", "token"))
@@ -1140,9 +1228,10 @@ object Search {
       q: String,
       k: Int,
       fieldedDir: Option[String] = None,
-      maxExpand: Int = 8
+      maxExpand: Int = 8,
+      a: Analyzer = Raw
   ): DataFrame =
-    rankTop(queryStringGated(s, indexDir, q, fieldedDir, maxExpand), "score_micro", k)
+    rankTop(queryStringGated(s, indexDir, q, fieldedDir, maxExpand, a), "score_micro", k)
 
   /** KEYSET pagination for the query-string front door — page 2+ of
     * the one entry point real applications call: the same gated scored
@@ -1158,12 +1247,15 @@ object Search {
       afterScoreMicro: Long,
       afterDocId: Long,
       fieldedDir: Option[String] = None,
-      maxExpand: Int = 8
+      maxExpand: Int = 8,
+      a: Analyzer = Raw
   ): DataFrame =
     rankTop(
-      queryStringGated(s, indexDir, q, fieldedDir, maxExpand).filter(
-        col("score_micro") < afterScoreMicro ||
-          (col("score_micro") === afterScoreMicro && col("doc_id") > afterDocId)
+      afterCursor(
+        queryStringGated(s, indexDir, q, fieldedDir, maxExpand, a),
+        "score_micro",
+        afterScoreMicro,
+        afterDocId
       ),
       "score_micro",
       k
@@ -1171,17 +1263,35 @@ object Search {
 
   /** The front door's gated scored relation (doc_id, score_micro) —
     * every clause compiled and applied, no rank/limit yet; shared by
-    * the first page and keyset pagination.
+    * the first page and keyset pagination. Under [[Analyzer.Folded]]
+    * every clause's terms fold driver-side (a clause whose term folds
+    * to empty — pure punctuation — is ill-formed, not silently
+    * dropped), the scoring/gating legs serve from the folded relations
+    * and fuzzy/wildcard rewrites consult the folded dictionary; field
+    * and len clauses reject loudly there — the fielded index and the
+    * doclen relation are raw artifacts with no folded tier to serve
+    * them.
     */
   private def queryStringGated(
       s: SparkSession,
       indexDir: String,
       q: String,
       fieldedDir: Option[String],
-      maxExpand: Int
+      maxExpand: Int,
+      a: Analyzer
   ): DataFrame = {
     val pq = parseQueryString(q)
-    val explicitTerms = pq.must ++ pq.should
+    if (a == Folded) {
+      require(pq.fieldTerms.isEmpty, s"the analyzed front door has no fielded artifacts to serve field clauses: $q")
+      require(pq.ranges.isEmpty, s"the analyzed front door has no analyzed doclen relation for len clauses: $q")
+    }
+    def fold(t: String, what: String): String = {
+      val f = a.term(t)
+      require(f.nonEmpty, s"$what clause '$t' analyzed to empty (pure punctuation) in: $q")
+      f
+    }
+    val must = pq.must.map { case (t, b) => fold(t, "must") -> b }
+    val explicitTerms = must ++ pq.should.map { case (t, b) => fold(t, "should") -> b }
     require(
       explicitTerms.map(_._1).distinct.size == explicitTerms.size,
       s"duplicate term across clauses in '$q'"
@@ -1196,16 +1306,17 @@ object Search {
       s"query '$q' has field clauses but no fielded index dir was provided"
     )
     require(maxExpand >= 1, s"maxExpand must be >= 1, got $maxExpand")
+    val mustNot = pq.mustNot.map(fold(_, "must-not")).distinct
     val expanded: Seq[(String, Long)] =
       pq.fuzzy.flatMap { case (t, dist, b) =>
-        fuzzyExpansion(s, indexDir, t, dist, maxExpand)
+        fuzzyExpansion(s, indexDir, t, dist, maxExpand, a)
           .select("token")
           .collect()
           .map(_.getString(0) -> b)
           .toSeq
       } ++
         pq.wildcards.flatMap { case (p, b) =>
-          wildcardExpansion(s, indexDir, p, maxExpand).map(_ -> b)
+          wildcardExpansion(s, indexDir, p, maxExpand, a).map(_ -> b)
         }
     val scoreTerms: Seq[(String, Long)] =
       (explicitTerms ++ expanded)
@@ -1213,33 +1324,15 @@ object Search {
         .map { case (t, xs) => t -> xs.map(_._2).sum }
         .toSeq
         .sortBy(_._1)
-    val mustTerms = pq.must.map(_._1)
+    val mustTerms = must.map(_._1)
     import s.implicits._
     val unfieldedLeg: Option[DataFrame] =
       if (scoreTerms.isEmpty) None
       else
         Some {
-          val terms = scoreTerms.map(_._1)
-          val buckets = terms.map(tokenBucket).distinct
-          val p = liveRows(
-            s,
-            indexDir,
-            s.read
-              .schema(postingsSchema)
-              .parquet(s"$indexDir/postings")
-              .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*))
-          )
-          val nDocs = readMeta(s, indexDir)._1
-          val boostDf = scoreTerms.toDF("token", "boost")
-          val model = p
-            .groupBy(col("token"))
-            .agg(count(lit(1)).cast("long").as("df"))
-            .withColumn(
-              "idf_micro",
-              floor(log(lit(nDocs + 1).cast("double") / (col("df") + 1)) * 1000000L).cast("bigint")
-            )
-            .join(boostDf, "token")
-            .select(col("token"), col("idf_micro"), col("boost"))
+          val p = postingsScan(s, indexDir, scoreTerms.map(_._1), a)
+          val model = idfModel(p, readMeta(s, indexDir)._1, 1000000L)
+            .join(scoreTerms.toDF("token", "boost"), "token")
           p.join(broadcast(model), "token")
             .groupBy(col("doc_id"))
             .agg(
@@ -1253,10 +1346,7 @@ object Search {
     val legs = unfieldedLeg.toSeq ++ fieldedLeg.toSeq
     // a fuzzy/wildcard-only query whose expansions found no dictionary
     // term rewrites to nothing — Lucene's empty rewrite matches nothing
-    if (legs.isEmpty) {
-      import s.implicits._
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score_micro")
-    }
+    if (legs.isEmpty) return Seq.empty[(Long, Long)].toDF("doc_id", "score_micro")
     // single-leg queries keep the one-aggregate plan; two legs meet in
     // a second doc-keyed aggregate over hit-set-sized inputs
     val combined =
@@ -1277,151 +1367,22 @@ object Search {
         .select(col("doc_id"))
       acc.join(dl, Seq("doc_id"), "left_semi")
     }
+    // phrases gate through the analyzer's positional fold (raw terms
+    // in — the phrase route folds and validates per term)
     val phraseGated = pq.phrases.foldLeft(rangeGated) { (acc, ph) =>
       acc.join(
-        phraseFromIndex(s, indexDir, ph).select(col("doc_id")),
+        phraseFromIndex(s, indexDir, ph, a).select(col("doc_id")),
         Seq("doc_id"),
         "left_semi"
       )
     }
-    val gated =
-      if (pq.mustNot.isEmpty) phraseGated
-      else {
-        val nbuckets = pq.mustNot.map(tokenBucket).distinct
-        val excluded = liveRows(
-          s,
-          indexDir,
-          s.read
-            .schema(postingsSchema)
-            .parquet(s"$indexDir/postings")
-            .filter(col("tbucket").isin(nbuckets: _*) && col("token").isin(pq.mustNot: _*))
-        ).select(col("doc_id")).distinct()
-        phraseGated.join(excluded, Seq("doc_id"), "left_anti")
-      }
-    gated
-  }
-
-  /** The ANALYZED query-string front door — the mode a production
-    * search box actually serves (real queries carry case and
-    * punctuation): the same grammar, with every clause's terms folded
-    * through the index's analyzer driver-side ([[analyzeTerm]]), the
-    * scoring/gating legs served from the ANALYZED relations
-    * (apostings, apositions) and fuzzy/wildcard rewrites consulting
-    * the ANALYZED dictionary. A clause whose term analyzes to empty
-    * (pure punctuation) is ill-formed, not silently dropped. Field and
-    * len clauses reject loudly — the fielded index and the doclen
-    * relation are raw artifacts with no analyzed twin to serve them.
-    */
-  def searchQueryStringAnalyzed(
-      s: SparkSession,
-      indexDir: String,
-      q: String,
-      k: Int,
-      maxExpand: Int = 8
-  ): DataFrame = {
-    val pq = parseQueryString(q)
-    require(
-      pq.fieldTerms.isEmpty,
-      s"the analyzed front door has no fielded artifacts to serve field clauses: $q"
-    )
-    require(
-      pq.ranges.isEmpty,
-      s"the analyzed front door has no analyzed doclen relation for len clauses: $q"
-    )
-    require(maxExpand >= 1, s"maxExpand must be >= 1, got $maxExpand")
-    def fold(t: String, what: String): String = {
-      val a = analyzeTerm(t)
-      require(a.nonEmpty, s"$what clause '$t' analyzed to empty (pure punctuation) in: $q")
-      a
-    }
-    val must = pq.must.map { case (t, b) => fold(t, "must") -> b }
-    val should = pq.should.map { case (t, b) => fold(t, "should") -> b }
-    val explicitTerms = must ++ should
-    require(
-      explicitTerms.map(_._1).distinct.size == explicitTerms.size,
-      s"duplicate ANALYZED term across clauses in '$q'"
-    )
-    require(
-      explicitTerms.nonEmpty || pq.fuzzy.nonEmpty || pq.wildcards.nonEmpty,
-      s"query '$q' has no scoring clause (only must-not/phrase clauses)"
-    )
-    val mustNot = pq.mustNot.map(fold(_, "must-not")).distinct
-    val expanded: Seq[(String, Long)] =
-      pq.fuzzy.flatMap { case (t, dist, b) =>
-        fuzzyExpansion(s, indexDir, t, dist, maxExpand, analyzed = true)
-          .select("token")
-          .collect()
-          .map(_.getString(0) -> b)
-          .toSeq
-      } ++
-        pq.wildcards.flatMap { case (p, b) =>
-          wildcardExpansion(s, indexDir, p, maxExpand, analyzed = true).map(_ -> b)
-        }
-    val scoreTerms: Seq[(String, Long)] =
-      (explicitTerms ++ expanded)
-        .groupBy(_._1)
-        .map { case (t, xs) => t -> xs.map(_._2).sum }
-        .toSeq
-        .sortBy(_._1)
-    val mustTerms = must.map(_._1)
-    // a fuzzy/wildcard-only query whose expansions found no dictionary
-    // term rewrites to nothing — Lucene's empty rewrite matches nothing
-    if (scoreTerms.isEmpty) return emptyHits(s)
-    import s.implicits._
-    val terms = scoreTerms.map(_._1)
-    val buckets = terms.map(tokenBucket).distinct
-    val p = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(apostingsSchema)
-        .parquet(s"$indexDir/apostings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    )
-    val nDocs = readMeta(s, indexDir)._1
-    val boostDf = scoreTerms.toDF("token", "boost")
-    val model = p
-      .groupBy(col("token"))
-      .agg(count(lit(1)).cast("long").as("df"))
-      .withColumn(
-        "idf_micro",
-        floor(log(lit(nDocs + 1).cast("double") / (col("df") + 1)) * 1000000L).cast("bigint")
-      )
-      .join(boostDf, "token")
-      .select(col("token"), col("idf_micro"), col("boost"))
-    val scored = p
-      .join(broadcast(model), "token")
-      .groupBy(col("doc_id"))
-      .agg(
-        sum(col("boost") * col("tf") * col("idf_micro")).cast("long").as("score_micro"),
-        count(when(col("token").isin(mustTerms: _*), lit(1))).cast("long").as("n_must")
-      )
-      .filter(col("n_must") === mustTerms.size.toLong)
-      .select(col("doc_id"), col("score_micro"))
-    // phrases gate through the ANALYZED positional fold (raw terms in
-    // — analyzedPhraseFromIndex analyzes and validates per term)
-    val phraseGated = pq.phrases.foldLeft(scored) { (acc, ph) =>
-      acc.join(
-        analyzedPhraseFromIndex(s, indexDir, ph).select(col("doc_id")),
+    if (mustNot.isEmpty) phraseGated
+    else
+      phraseGated.join(
+        postingsScan(s, indexDir, mustNot, a).select(col("doc_id")).distinct(),
         Seq("doc_id"),
-        "left_semi"
+        "left_anti"
       )
-    }
-    val gated =
-      if (mustNot.isEmpty) phraseGated
-      else {
-        val nbuckets = mustNot.map(tokenBucket).distinct
-        val excluded = liveRows(
-          s,
-          indexDir,
-          s.read
-            .schema(apostingsSchema)
-            .parquet(s"$indexDir/apostings")
-            .filter(col("tbucket").isin(nbuckets: _*) && col("token").isin(mustNot: _*))
-        ).select(col("doc_id")).distinct()
-        phraseGated.join(excluded, Seq("doc_id"), "left_anti")
-      }
-    rankTop(gated, "score_micro", k)
   }
 
   /** HIT-COUNT header ("about 1,234 results"): the AND and OR match-set
@@ -1432,20 +1393,12 @@ object Search {
     * and an approximate variant would ride the existing HLL sketches.
     */
   def hitCounts(s: SparkSession, indexDir: String, rawTerms: Seq[String]): DataFrame = {
-    require(rawTerms.nonEmpty, "hit counts need at least one term")
-    // dedupe: a duplicated term would make n_and structurally 0 (the
-    // per-doc matched-row count can never reach a duplicated size —
-    // postings are one row per (token, doc))
-    val terms = rawTerms.distinct
-    val buckets = terms.map(tokenBucket).distinct
-    liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(postingsSchema)
-        .parquet(s"$indexDir/postings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    )
+    // the shared term rule dedupes: a duplicated term would make n_and
+    // structurally 0 (the per-doc matched-row count can never reach a
+    // duplicated size — postings are one row per (token, doc))
+    val terms = Raw.terms(rawTerms)
+    require(terms.nonEmpty, "hit counts need at least one term")
+    postingsScan(s, indexDir, terms)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_matched"))
       .agg(
@@ -1504,7 +1457,7 @@ object Search {
   ): DataFrame = {
     require(terms.nonEmpty, "auto-correct needs at least one term")
     require(terms.distinct.size == terms.size, s"duplicate terms: ${terms.mkString(", ")}")
-    val alive = vocabRows(s, indexDir, analyzed = false)
+    val alive = vocabRows(s, indexDir, Raw)
       .filter(col("token").isin(terms: _*))
       .select("token")
       .collect()
@@ -1535,8 +1488,9 @@ object Search {
       indexDir: String,
       terms: Seq[String],
       minMatched: Int,
-      k: Int
-  ): DataFrame = termSearchFromIndex(s, indexDir, terms, k, requireAll = false, minMatched)
+      k: Int,
+      a: Analyzer = Raw
+  ): DataFrame = termSearchFromIndex(s, indexDir, terms, k, requireAll = false, minMatched, a = a)
 
   /** PER-TERM QUERY BOOSTS from the persisted index (`dup^1 window^3`
     * — Lucene's term boost, the knob every query DSL exposes): the
@@ -1562,27 +1516,9 @@ object Search {
     )
     boosts.foreach { case (t, w) => require(w > 0, s"boost for '$t' must be positive, got $w") }
     import s.implicits._
-    val terms = boosts.map(_._1)
-    val buckets = terms.map(tokenBucket).distinct
-    val p = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(postingsSchema)
-        .parquet(s"$indexDir/postings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    )
-    val nDocs = readMeta(s, indexDir)._1
-    val boostDf = boosts.toDF("token", "boost")
-    val dfModel = p
-      .groupBy(col("token"))
-      .agg(count(lit(1)).cast("long").as("df"))
-      .withColumn(
-        "idf_micro",
-        floor(log(lit(nDocs + 1).cast("double") / (col("df") + 1)) * 1000000L).cast("bigint")
-      )
-      .join(boostDf, "token")
-      .select(col("token"), col("idf_micro"), col("boost"))
+    val p = postingsScan(s, indexDir, boosts.map(_._1))
+    val dfModel =
+      idfModel(p, readMeta(s, indexDir)._1, 1000000L).join(boosts.toDF("token", "boost"), "token")
     val scored = p
       .join(broadcast(dfModel), "token")
       .groupBy(col("doc_id"))
@@ -1604,49 +1540,47 @@ object Search {
     * [[bm25Search]]'s exact rows — search_bm25_index shares
     * search_bm25's oracle, and that equality is the gate.
     */
-  def bm25FromIndex(s: SparkSession, indexDir: String, terms: Seq[String], k: Int): DataFrame =
-    rankTop(bm25ScoredFromIndex(s, indexDir, terms), "score_milli", k)
+  def bm25FromIndex(
+      s: SparkSession,
+      indexDir: String,
+      terms: Seq[String],
+      k: Int,
+      a: Analyzer = Raw
+  ): DataFrame = rankTop(bm25ScoredFromIndex(s, indexDir, terms, a), "score_milli", k)
+
+  /** The search_serve benchmark's folded BM25 route, kept under its
+    * published name: [[bm25FromIndex]] with [[Analyzer.Folded]].
+    */
+  def analyzedBm25FromIndex(s: SparkSession, indexDir: String, rawTerms: Seq[String], k: Int): DataFrame =
+    bm25FromIndex(s, indexDir, rawTerms, k, Folded)
 
   /** The scored-candidate relation under [[bm25FromIndex]] — factored
     * out so keyset pagination ([[bm25PageAfter]]) can cursor-filter
-    * BEFORE the top-k instead of ranking the whole result.
+    * BEFORE the top-k instead of ranking the whole result. Folded
+    * BM25 normalizes by the folded length riding each folded posting
+    * row, over the folded total from the index's folded meta.
     */
   private def bm25ScoredFromIndex(
       s: SparkSession,
       indexDir: String,
-      terms: Seq[String],
+      rawTerms: Seq[String],
+      a: Analyzer = Raw,
       asOf: Option[Long] = None
   ): DataFrame = {
-    require(terms.nonEmpty, "bm25 search needs at least one term")
-    val (nDocs, totalToks) = asOf.fold(readMeta(s, indexDir))(g => metaAsOf(s, indexDir, g))
+    val terms = a.terms(rawTerms)
+    require(terms.nonEmpty, "bm25 search needs at least one non-empty term")
+    require(asOf.isEmpty || a == Raw, "time-travel reads serve the raw tier only")
+    val (nDocs, totalToks) = asOf.fold(a.scalars(s, indexDir))(g => metaAsOf(s, indexDir, g))
     // an empty or all-empty-text index has no meaningful BM25 model:
     // nDocs = 0 divides by zero computing avgdl, and avgdl = 0 zeroes
     // the contrib denominator for dl = 0 docs — fail loudly instead
     require(nDocs > 0, s"bm25FromIndex: index at $indexDir is empty (n_docs = 0)")
     val avgdl = totalToks / nDocs
     require(avgdl > 0, s"bm25FromIndex: index at $indexDir has avgdl = 0 (all-empty documents)")
-    val buckets = terms.map(tokenBucket).distinct
-    val scan = s.read
-      .schema(postingsSchema)
-      .parquet(s"$indexDir/postings")
-      .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    val p = asOf
-      .fold(liveRows(s, indexDir, scan))(g => rowsAsOf(s, indexDir, scan, g))
-      .select(col("token"), col("doc_id"), col("tf"), col("dl"))
-    val dfModel = p
-      .groupBy(col("token"))
-      .agg(count(lit(1)).cast("long").as("df"))
-      .withColumn(
-        "idf_milli",
-        floor(log(lit(nDocs + 1).cast("double") / (col("df") + 1)) * 1000L).cast("bigint")
-      )
-      .select(col("token"), col("idf_milli"))
-    p
-      .join(broadcast(dfModel), "token")
-      .withColumn(
-        "contrib",
-        expr(s"(44 * idf_milli * tf * $avgdl) div (20 * $avgdl * tf + 6 * $avgdl + 18 * dl)")
-      )
+    val p = postingsScan(s, indexDir, terms, a, asOf)
+      .select(col("token"), col("doc_id"), col("tf"), col(a.dl))
+    p.join(broadcast(idfModel(p, nDocs, 1000L)), "token")
+      .withColumn("contrib", bm25Contrib(avgdl, a.dl))
       .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).cast("long").as("n_matched"),
@@ -1670,15 +1604,19 @@ object Search {
       terms: Seq[String],
       k: Int,
       afterScoreMilli: Long,
-      afterDocId: Long
+      afterDocId: Long,
+      a: Analyzer = Raw
   ): DataFrame =
     rankTop(
-      bm25ScoredFromIndex(s, indexDir, terms).filter(
-        col("score_milli") < afterScoreMilli ||
-          (col("score_milli") === afterScoreMilli && col("doc_id") > afterDocId)
-      ),
+      afterCursor(bm25ScoredFromIndex(s, indexDir, terms, a), "score_milli", afterScoreMilli, afterDocId),
       "score_milli",
       k
+    )
+
+  /** Strictly-after rows of a (score, doc_id) keyset cursor. */
+  private def afterCursor(scored: DataFrame, scoreCol: String, afterScore: Long, afterDocId: Long): DataFrame =
+    scored.filter(
+      col(scoreCol) < afterScore || (col(scoreCol) === afterScore && col("doc_id") > afterDocId)
     )
 
   /** ATTRIBUTE-FILTERED ranked search from persisted artifacts — the
@@ -2145,16 +2083,9 @@ object Search {
     avg.foreach { case (f, a) =>
       require(a > 0, s"bm25f: field '$f' has avgdl = 0 (all-empty field)")
     }
-    val buckets = terms.map(tokenBucket).distinct
     // tombstone gating directly over the pruned scan (liveRows'
     // input_file_name contract) — a deleted doc's rows never score
-    val scan = liveRows(
-      s,
-      dir,
-      s.read
-        .parquet(s"$dir/fpostings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    )
+    val scan = pruned(s, dir, s.read.parquet(s"$dir/fpostings"), terms)
     val aggCols =
       fields.map(f =>
         coalesce(sum(when(col("field") === f, col("tf"))), lit(0L)).cast("long").as(s"tf_$f")
@@ -2163,10 +2094,7 @@ object Search {
     val dfModel = pivoted
       .groupBy(col("token"))
       .agg(count(lit(1)).cast("long").as("df"))
-      .withColumn(
-        "idf_milli",
-        floor(log(lit(n + 1).cast("double") / (col("df") + 1)) * 1000L).cast("bigint")
-      )
+      .withColumn("idf_milli", idfCol(lit(n + 1), 1000L))
       .select(col("token"), col("idf_milli"))
     val dExpr = fields.map(f => s"(${avg(f)} + 3 * len_$f)").mkString(" * ")
     val xSum = fields
@@ -2207,28 +2135,10 @@ object Search {
       meta.contains(field),
       s"field '$field' not in the index at $dir (fields: ${meta.keys.toSeq.sorted.mkString(", ")})"
     )
-    val nDocs = meta(field)._1
-    val buckets = terms.map(tokenBucket).distinct
-    val p = liveRows(
-      s,
-      dir,
-      s.read
-        .parquet(s"$dir/fpostings")
-        .filter(
-          col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*) &&
-            col("field") === field
-        )
-    ).select(col("token"), col("doc_id"), col("tf"))
-    val dfModel = p
-      .groupBy(col("token"))
-      .agg(count(lit(1)).cast("long").as("df"))
-      .withColumn(
-        "idf_micro",
-        floor(log(lit(nDocs + 1).cast("double") / (col("df") + 1)) * 1000000L).cast("bigint")
-      )
-      .select(col("token"), col("idf_micro"))
+    val p = pruned(s, dir, s.read.parquet(s"$dir/fpostings").filter(col("field") === field), terms)
+      .select(col("token"), col("doc_id"), col("tf"))
     val scored = p
-      .join(broadcast(dfModel), "token")
+      .join(broadcast(idfModel(p, meta(field)._1, 1000000L)), "token")
       .groupBy(col("doc_id"))
       .agg(sum(col("tf") * col("idf_micro")).cast("long").as("score_micro"))
     rankTop(scored, "score_micro", k)
@@ -2255,19 +2165,27 @@ object Search {
     * Must land on [[phraseSearch]]'s exact rows — the index gates
     * share the corpus route's oracles.
     */
-  def phraseFromIndex(s: SparkSession, indexDir: String, terms: Seq[String]): DataFrame = {
+  def phraseFromIndex(s: SparkSession, indexDir: String, rawTerms: Seq[String], a: Analyzer = Raw): DataFrame = {
+    val terms = phraseTerms(rawTerms, a)
+    phraseFoldOverPositions(positionsScan(s, indexDir, terms.distinct, a), terms)
+  }
+
+  /** The search_serve benchmark's folded phrase route, kept under its
+    * published name: [[phraseFromIndex]] with [[Analyzer.Folded]].
+    */
+  def analyzedPhraseFromIndex(s: SparkSession, indexDir: String, rawTerms: Seq[String]): DataFrame =
+    phraseFromIndex(s, indexDir, rawTerms, Folded)
+
+  /** A phrase's terms under the analyzer, IN ORDER with repeats kept —
+    * every term must survive the analyzer (a pure-punct phrase term
+    * has no position in the filtered stream, so the phrase is
+    * ill-formed rather than silently shorter).
+    */
+  private def phraseTerms(rawTerms: Seq[String], a: Analyzer): Seq[String] = {
+    val terms = rawTerms.map(a.term)
     require(terms.size >= 2, "phrase search needs at least two terms")
-    val distinctTerms = terms.distinct
-    val buckets = distinctTerms.map(tokenBucket).distinct
-    val pos = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(positionsSchema)
-        .parquet(s"$indexDir/positions")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(distinctTerms: _*))
-    ).select(col("token"), col("doc_id"), col("pos"))
-    phraseFoldOverPositions(pos, terms)
+    require(terms.forall(_.nonEmpty), "every phrase term must survive the analyzer")
+    terms
   }
 
   /** PROXIMITY search (the unordered sloppy pair — "hash NEAR/3
@@ -2308,16 +2226,7 @@ object Search {
   ): DataFrame = {
     require(first != second, "proximity needs two distinct terms")
     require(slop >= 1, "proximity needs slop >= 1")
-    val buckets = Seq(first, second).map(tokenBucket).distinct
-    val pos = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(positionsSchema)
-        .parquet(s"$indexDir/positions")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(first, second))
-    ).select(col("token"), col("doc_id"), col("pos"))
-    proximityPairs(pos, first, second, slop)
+    proximityPairs(positionsScan(s, indexDir, Seq(first, second)), first, second, slop)
   }
 
   private def proximityPairs(pos: DataFrame, first: String, second: String, slop: Int): DataFrame = {
@@ -2357,27 +2266,23 @@ object Search {
 
   /** [[orderedSlopSearch]] served from the persisted positional
     * postings — bucket-pruned scan, identical pair join; shares the
-    * corpus route's oracle.
+    * corpus route's oracle. Under [[Analyzer.Folded]] both terms fold
+    * driver-side (both must survive the analyzer) and positions come
+    * from the FILTERED folded stream, so the slop distance counts
+    * folded tokens (`"Hash Join"~3` matches `HASH ... JOIN.`).
     */
   def orderedSlopFromIndex(
       s: SparkSession,
       indexDir: String,
-      first: String,
-      second: String,
-      slop: Int
+      rawFirst: String,
+      rawSecond: String,
+      slop: Int,
+      a: Analyzer = Raw
   ): DataFrame = {
+    val Seq(first, second) = phraseTerms(Seq(rawFirst, rawSecond), a)
     require(first != second, "ordered slop needs two distinct terms")
     require(slop >= 1, "ordered slop needs slop >= 1")
-    val buckets = Seq(first, second).map(tokenBucket).distinct
-    val pos = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(positionsSchema)
-        .parquet(s"$indexDir/positions")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(first, second))
-    ).select(col("token"), col("doc_id"), col("pos"))
-    orderedSlopPairs(pos, first, second, slop)
+    orderedSlopPairs(positionsScan(s, indexDir, Seq(first, second), a), first, second, slop)
   }
 
   private def orderedSlopPairs(pos: DataFrame, first: String, second: String, slop: Int): DataFrame = {
@@ -2425,67 +2330,6 @@ object Search {
       .agg(count(lit(1)).cast("long").as("n_occurrences"))
   }
 
-  /** ANALYZED n-term phrase served from the PERSISTED index — the
-    * phrase mode real users run (`"Hash Join"` must match `hash join`,
-    * `[hash] [join]`, `HASH JOIN.`): raw terms analyze DRIVER-side
-    * ([[analyzeTerm]], the executor chain's twin) and every term must
-    * survive the analyzer (a pure-punct phrase term has no position in
-    * the filtered stream, so the phrase is ill-formed rather than
-    * silently shorter). The probe then runs [[phraseFoldOverPositions]]
-    * over `dir/apositions` pruned to the analyzed terms' bucket dirs —
-    * identical plan shape and bounds to the raw route, zero corpus
-    * passes. Shares [[analyzedPhraseSearch]]'s oracle through the
-    * build→append→compact lifecycle.
-    */
-  def analyzedPhraseFromIndex(s: SparkSession, indexDir: String, rawTerms: Seq[String]): DataFrame = {
-    val terms = rawTerms.map(analyzeTerm)
-    require(terms.size >= 2, "phrase search needs at least two terms")
-    require(terms.forall(_.nonEmpty), "every phrase term must survive the analyzer")
-    val distinctTerms = terms.distinct
-    val buckets = distinctTerms.map(tokenBucket).distinct
-    val pos = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(positionsSchema)
-        .parquet(s"$indexDir/apositions")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(distinctTerms: _*))
-    ).select(col("token"), col("doc_id"), col("pos"))
-    phraseFoldOverPositions(pos, terms)
-  }
-
-  /** ANALYZED ordered sloppy phrase from the persisted apositions —
-    * the slop mode real users run (`"Hash Join"~3` must match
-    * `HASH ... JOIN.`): raw terms analyze driver-side (both must
-    * survive the analyzer), positions come from the FILTERED analyzed
-    * stream (so the slop distance counts analyzed tokens, not raw
-    * ones), and the pair join is [[orderedSlopFromIndex]]'s exactly —
-    * bucket-pruned, per-document, occurrence-bounded.
-    */
-  def analyzedOrderedSlopFromIndex(
-      s: SparkSession,
-      indexDir: String,
-      rawFirst: String,
-      rawSecond: String,
-      slop: Int
-  ): DataFrame = {
-    val first = analyzeTerm(rawFirst)
-    val second = analyzeTerm(rawSecond)
-    require(first.nonEmpty && second.nonEmpty, "both slop terms must survive the analyzer")
-    require(first != second, "ordered slop needs two distinct terms")
-    require(slop >= 1, "ordered slop needs slop >= 1")
-    val buckets = Seq(first, second).map(tokenBucket).distinct
-    val pos = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(positionsSchema)
-        .parquet(s"$indexDir/apositions")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(first, second))
-    ).select(col("token"), col("doc_id"), col("pos"))
-    orderedSlopPairs(pos, first, second, slop)
-  }
-
   /** Index MAINTENANCE twin of Dedup.appendToMinhashIndex: append an
     * increment's postings, positions and doc lengths so later probes
     * see it as part of the corpus. New docs only add rows (their ids
@@ -2511,7 +2355,7 @@ object Search {
       analyzed: Boolean = false
   ): Unit = {
     val s = newDocs.sparkSession
-    requireAnalyzedTwinMaintained(s, dir, analyzed, "appendToSearchIndex")
+    requireFoldedTierMaintained(s, dir, analyzed, "appendToSearchIndex")
     // plain-append files carry generation −1: appending onto LIVE
     // tombstones would let any tombstone (asof ≥ 0) wrongly kill a
     // re-added doc's new rows — fail loudly instead
@@ -2522,66 +2366,34 @@ object Search {
         "compactSearchIndex first (purges the tombstones) or maintain through the " +
         "streaming upsert apply"
     )
-    postingsWithDl(newDocs, idCol, textCol)
-      .withColumn("tbucket", tokenBucketCol)
-      .repartition(col("tbucket"))
-      .write
-      .mode("append")
-      .partitionBy("tbucket")
-      .parquet(s"$dir/postings")
-    positionalPostings(newDocs, idCol, textCol)
-      .withColumn("tbucket", tokenBucketCol)
-      .repartition(col("tbucket"))
-      .write
-      .mode("append")
-      .partitionBy("tbucket")
-      .parquet(s"$dir/positions")
-    if (analyzed) {
-      analyzedPostingsWithDl(newDocs, idCol, textCol)
-        .withColumn("tbucket", tokenBucketCol)
-        .repartition(col("tbucket"))
-        .write
-        .mode("append")
-        .partitionBy("tbucket")
-        .parquet(s"$dir/apostings")
-      analyzedPositionalPostings(newDocs, idCol, textCol)
-        .withColumn("tbucket", tokenBucketCol)
-        .repartition(col("tbucket"))
-        .write
-        .mode("append")
-        .partitionBy("tbucket")
-        .parquet(s"$dir/apositions")
-      // same read-then-overwrite contract (and compaction repair) as
-      // the main meta
-      writeAmeta(s, dir, readAmeta(s, dir) + analyzedTotal(newDocs, textCol))
+    val tiers = Analyzer.tiers(analyzed)
+    tiers.foreach { a =>
+      writeBucketed(postingsWithDl(newDocs, idCol, textCol, a), s"$dir/${a.postings}", "append")
+      writeBucketed(positionalPostings(newDocs, idCol, textCol, a), s"$dir/${a.positions}", "append")
     }
+    // same read-then-overwrite contract (and compaction repair) as the
+    // main meta
+    if (analyzed)
+      writeAmeta(s, dir, readAmeta(s, dir) + newDocs.agg(tokenTotal(textCol, Folded)).head().getLong(0))
     docLengths(newDocs, idCol, textCol).write.mode("append").parquet(s"$dir/doclen")
-    // vocab increment: the new docs' term stats land as one types-of-
-    // the-increment-scale file; readers fold base ⊕ increments (the
-    // append contract is new doc ids only, so the group-sum is exact).
-    // A pre-vocab index skips it — compaction backfills from postings,
-    // which now include these rows.
+    // vocab increment per tier: the new docs' term stats land as one
+    // types-of-the-increment-scale file; readers fold base ⊕ increments
+    // (the append contract is new doc ids only, so the group-sum is
+    // exact). A pre-vocab index skips it — compaction backfills from
+    // postings, which now include these rows.
     val appendTag = s"append-${java.util.UUID.randomUUID().toString.take(8)}"
-    if (fsFor(s, dir).exists(new org.apache.hadoop.fs.Path(vocabDir(dir))))
-      writeVocabIncrement(
-        s,
-        dir,
-        vocabFromPostingRows(
-          postingsWithDl(newDocs, idCol, textCol).select(col("token"), col("doc_id"), col("tf"))
-        ),
-        appendTag
-      )
-    if (analyzed && fsFor(s, dir).exists(new org.apache.hadoop.fs.Path(vocabDir(dir, analyzed = true))))
-      writeVocabIncrement(
-        s,
-        dir,
-        vocabFromPostingRows(
-          analyzedPostingsWithDl(newDocs, idCol, textCol)
-            .select(col("token"), col("doc_id"), col("tf"))
-        ),
-        appendTag,
-        analyzed = true
-      )
+    tiers.foreach { a =>
+      if (fsFor(s, dir).exists(new org.apache.hadoop.fs.Path(vocabDir(dir, a))))
+        writeVocabIncrement(
+          s,
+          dir,
+          vocabFromPostingRows(
+            postingsWithDl(newDocs, idCol, textCol, a).select(col("token"), col("doc_id"), col("tf"))
+          ),
+          appendTag,
+          a
+        )
+    }
     val (n0, t0) = readMeta(s, dir)
     val (n1, t1) = corpusScalars(newDocs, idCol, textCol)
     writeMeta(s, dir, (n0 + n1, t0 + t1))
@@ -2591,8 +2403,7 @@ object Search {
     // replayed, so a wholesale rewrite is safe here
     val fs = fsFor(s, dir)
     if (ledgerFiles(fs, dir).nonEmpty) {
-      val a =
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/ameta"))) readAmeta(s, dir) else 0L
+      val a = foldedTotalOrZero(s, dir)
       fs.delete(new org.apache.hadoop.fs.Path(ledgerDir(dir)), true)
       writeLedgerRow(s, dir, (n0 + n1, t0 + t1, a), "seed")
     }
@@ -2603,24 +2414,24 @@ object Search {
   private def fsFor(s: SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path).getFileSystem(s.sessionState.newHadoopConf())
 
-  /** Maintaining an ANALYZED index with analyzed = false would update
-    * postings/positions/doclen/meta but silently leave apostings/
-    * apositions/ameta STALE — analyzed probes would then serve old
-    * results with no error. Every maintenance entry point fails loudly
-    * instead: if the analyzed twin exists on disk, the maintainer must
-    * say analyzed = true.
+  /** Maintaining an index that carries the folded tier with
+    * analyzed = false would update the raw relations and meta but
+    * silently leave the folded tier STALE — folded probes would then
+    * serve old results with no error. Every maintenance entry point
+    * fails loudly instead: if the folded tier exists on disk, the
+    * maintainer must say analyzed = true.
     */
-  private def requireAnalyzedTwinMaintained(
+  private def requireFoldedTierMaintained(
       s: SparkSession,
       dir: String,
       analyzed: Boolean,
       op: String
   ): Unit =
     require(
-      analyzed || !fsFor(s, dir).exists(new org.apache.hadoop.fs.Path(s"$dir/apostings")),
-      s"$op(analyzed = false) onto the ANALYZED index at $dir would leave apostings/" +
-        "apositions/ameta stale (analyzed probes would silently serve old results) — " +
-        "pass analyzed = true"
+      analyzed || !hasFoldedTier(s, dir),
+      s"$op(analyzed = false) onto the ANALYZED index at $dir would leave " +
+        s"${Folded.postings}/${Folded.positions}/${Folded.meta} stale (analyzed probes would " +
+        "silently serve old results) — pass analyzed = true"
     )
 
   /** Last batch id fully applied to the index at `dir` (−1 if none) —
@@ -2758,9 +2569,7 @@ object Search {
     val fs = fsFor(s, dir)
     if (ledgerFiles(fs, dir).isEmpty && fs.exists(new org.apache.hadoop.fs.Path(s"$dir/meta"))) {
       val (n0, t0) = readMeta(s, dir)
-      val a0 =
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/ameta"))) readAmeta(s, dir) else 0L
-      writeLedgerRow(s, dir, (n0, t0, a0), "seed")
+      writeLedgerRow(s, dir, (n0, t0, foldedTotalOrZero(s, dir)), "seed")
     }
   }
 
@@ -2836,10 +2645,8 @@ object Search {
     .add("df", "long")
     .add("tf_total", "long")
 
-  private def vocabDir(dir: String, analyzed: Boolean = false) =
-    if (analyzed) s"$dir/avocab" else s"$dir/vocab"
-  private def vocabIncDir(dir: String, analyzed: Boolean = false) =
-    if (analyzed) s"$dir/avocab_inc" else s"$dir/vocab_inc"
+  private def vocabDir(dir: String, a: Analyzer = Raw) = s"$dir/${a.vocab}"
+  private def vocabIncDir(dir: String, a: Analyzer = Raw) = s"$dir/${a.vocab}_inc"
 
   /** Range partitions of the base vocab. Sized for the fixture here;
     * at 100 TB this scales with type count (still a metadata-relative
@@ -2860,23 +2667,21 @@ object Search {
     * compaction form (exact), staged behind the crash-safe marker-
     * commit swap; increments are consumed (the base now counts them).
     */
-  private def writeVocabFromPostings(s: SparkSession, dir: String, analyzed: Boolean = false): Unit = {
+  private def writeVocabFromPostings(s: SparkSession, dir: String, a: Analyzer = Raw): Unit = {
     import org.apache.hadoop.fs.Path
-    val (rel, schema) =
-      if (analyzed) (s"$dir/apostings", apostingsSchema) else (s"$dir/postings", postingsSchema)
     val fs = fsFor(s, dir)
     // repair first: a prior crash between the swap and the delete
     // below left increments the then-new base already counted —
     // excluded by name since, physically dropped now
-    deleteConsumedIncrements(s, dir, analyzed)
+    deleteConsumedIncrements(s, dir, a)
     val incNames =
-      Option(fs.globStatus(new Path(s"${vocabIncDir(dir, analyzed)}/*.parquet")))
+      Option(fs.globStatus(new Path(s"${vocabIncDir(dir, a)}/*.parquet")))
         .getOrElse(Array.empty)
         .map(_.getPath.getName)
         .sorted
-    graft.core.Compaction.replaceWith(s, vocabDir(dir, analyzed)) { staged =>
+    graft.core.Compaction.replaceWith(s, vocabDir(dir, a)) { staged =>
       vocabFromPostingRows(
-        liveRows(s, dir, s.read.schema(schema).parquet(rel))
+        liveRows(s, dir, s.read.schema(postingsSchema(a)).parquet(s"$dir/${a.postings}"))
           .select(col("token"), col("doc_id"), col("tf"))
       )
         .repartitionByRange(vocabParts, col("token"))
@@ -2898,10 +2703,10 @@ object Search {
           incNames.mkString("\n") + "\n"
         )
     }
-    deleteConsumedIncrements(s, dir, analyzed)
+    deleteConsumedIncrements(s, dir, a)
     // only unconsumed (post-swap) increments may remain; drop the dir
     // when it emptied so the no-increment fast path stays a dir probe
-    val incPath = new Path(vocabIncDir(dir, analyzed))
+    val incPath = new Path(vocabIncDir(dir, a))
     if (fs.exists(incPath) && !fs.listFiles(incPath, false).hasNext) fs.delete(incPath, true)
   }
 
@@ -2911,9 +2716,9 @@ object Search {
     * list its committed swap carried ([[writeVocabFromPostings]]).
     * Empty when no marker (no crash window pending).
     */
-  private def consumedIncNames(s: SparkSession, dir: String, analyzed: Boolean): Set[String] =
+  private def consumedIncNames(s: SparkSession, dir: String, a: Analyzer): Set[String] =
     graft.core.Compaction
-      .readTextFile(s, s"${vocabDir(dir, analyzed)}/$consumedIncMarker")
+      .readTextFile(s, s"${vocabDir(dir, a)}/$consumedIncMarker")
       .map(_.split("\n").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty)
 
@@ -2922,10 +2727,10 @@ object Search {
     * the base via the relation files the replay also rewrote, so the
     * drop stays correct).
     */
-  private def deleteConsumedIncrements(s: SparkSession, dir: String, analyzed: Boolean): Unit = {
+  private def deleteConsumedIncrements(s: SparkSession, dir: String, a: Analyzer): Unit = {
     val fs = fsFor(s, dir)
-    consumedIncNames(s, dir, analyzed).foreach { n =>
-      fs.delete(new org.apache.hadoop.fs.Path(vocabIncDir(dir, analyzed), n), false)
+    consumedIncNames(s, dir, a).foreach { n =>
+      fs.delete(new org.apache.hadoop.fs.Path(vocabIncDir(dir, a), n), false)
     }
   }
 
@@ -2939,16 +2744,16 @@ object Search {
       dir: String,
       inc: DataFrame,
       tag: String,
-      analyzed: Boolean = false
+      a: Analyzer = Raw
   ): Unit = {
     import org.apache.hadoop.fs.Path
     val fs = fsFor(s, dir)
-    val staged = s"$dir/_stage_${if (analyzed) "avocab" else "vocab"}_$tag"
+    val staged = s"$dir/_stage_${a.vocab}_$tag"
     inc.coalesce(1).write.mode("overwrite").parquet(staged)
     val files = fs.globStatus(new Path(s"$staged/part-*")).map(_.getPath).sortBy(_.toString)
-    fs.mkdirs(new Path(vocabIncDir(dir, analyzed)))
+    fs.mkdirs(new Path(vocabIncDir(dir, a)))
     files.zipWithIndex.foreach { case (src, i) =>
-      val dest = new Path(vocabIncDir(dir, analyzed), s"$tag-$i.parquet")
+      val dest = new Path(vocabIncDir(dir, a), s"$tag-$i.parquet")
       if (fs.exists(dest)) fs.delete(dest, false)
       if (!fs.rename(src, dest))
         throw new java.io.IOException(s"vocab increment write: rename $src -> $dest failed")
@@ -2961,24 +2766,24 @@ object Search {
     * both scans). Fails loudly on an index persisted before the vocab
     * existed — compaction backfills it.
     */
-  private def vocabRows(s: SparkSession, dir: String, analyzed: Boolean = false): DataFrame = {
+  private def vocabRows(s: SparkSession, dir: String, a: Analyzer = Raw): DataFrame = {
     val fs = fsFor(s, dir)
     require(
-      fs.exists(new org.apache.hadoop.fs.Path(vocabDir(dir, analyzed))),
-      s"search index at $dir has no ${if (analyzed) "analyzed " else ""}vocab relation " +
+      fs.exists(new org.apache.hadoop.fs.Path(vocabDir(dir, a))),
+      s"search index at $dir has no ${a.vocab} relation " +
         "(pre-vocab layout) — run compactSearchIndex to backfill it"
     )
-    val base = s.read.schema(vocabSchema).parquet(vocabDir(dir, analyzed))
-    if (!fs.exists(new org.apache.hadoop.fs.Path(vocabIncDir(dir, analyzed)))) base
+    val base = s.read.schema(vocabSchema).parquet(vocabDir(dir, a))
+    if (!fs.exists(new org.apache.hadoop.fs.Path(vocabIncDir(dir, a)))) base
     else {
       // skip increments the base's committed swap already consumed —
       // present on disk only inside the crash window between that swap
       // and their physical delete (or re-written by a batch replay);
       // reading them would double-count df/tf_total
-      val consumed = consumedIncNames(s, dir, analyzed)
+      val consumed = consumedIncNames(s, dir, a)
       val incFiles =
         Option(
-          fs.globStatus(new org.apache.hadoop.fs.Path(s"${vocabIncDir(dir, analyzed)}/*.parquet"))
+          fs.globStatus(new org.apache.hadoop.fs.Path(s"${vocabIncDir(dir, a)}/*.parquet"))
         )
           .getOrElse(Array.empty)
           .map(_.getPath)
@@ -3012,13 +2817,11 @@ object Search {
       s: SparkSession,
       indexDir: String,
       terms: Seq[String],
-      analyzed: Boolean = false
+      a: Analyzer = Raw
   ): DataFrame = {
     require(terms.nonEmpty, "termStats needs at least one term")
-    val probe =
-      if (analyzed) terms.map(analyzeTerm).filter(_.nonEmpty).distinct else terms.distinct
-    vocabRows(s, indexDir, analyzed)
-      .filter(col("token").isin(probe: _*))
+    vocabRows(s, indexDir, a)
+      .filter(col("token").isin(a.terms(terms): _*))
       .select(col("token"), col("df"), col("tf_total"))
   }
 
@@ -3035,15 +2838,15 @@ object Search {
       indexDir: String,
       rawPrefix: String,
       n: Int,
-      analyzed: Boolean = false
+      a: Analyzer = Raw
   ): DataFrame = {
-    // analyzed mode folds the user's raw prefix through the same
-    // analyzer the dictionary was built with (case/punct-insensitive
-    // completion — what a search box actually does)
-    val prefix = if (analyzed) analyzeTerm(rawPrefix) else rawPrefix
+    // the user's raw prefix folds through the same analyzer the
+    // dictionary was built with (case/punct-insensitive completion on
+    // the folded tier — what a search box actually does)
+    val prefix = a.term(rawPrefix)
     require(prefix.nonEmpty, "autocomplete needs a non-empty prefix")
     import org.apache.spark.sql.expressions.Window
-    vocabRows(s, indexDir, analyzed)
+    vocabRows(s, indexDir, a)
       .filter(col("token").startsWith(prefix))
       .orderBy(col("df").desc, col("token").asc)
       .limit(n)
@@ -3064,9 +2867,9 @@ object Search {
       dir: String,
       prefix: String,
       maxExpand: Int,
-      analyzed: Boolean = false
+      a: Analyzer
   ): Seq[String] =
-    vocabRows(s, dir, analyzed)
+    vocabRows(s, dir, a)
       .filter(col("token").startsWith(prefix))
       .orderBy(col("df").desc, col("token").asc)
       .limit(maxExpand)
@@ -3089,18 +2892,27 @@ object Search {
       rawPrefix: String,
       maxExpand: Int,
       k: Int,
-      analyzed: Boolean = false
+      a: Analyzer = Raw
   ): DataFrame = {
-    val prefix = if (analyzed) analyzeTerm(rawPrefix) else rawPrefix
+    val prefix = a.term(rawPrefix)
     require(prefix.nonEmpty, "prefix search needs a non-empty prefix")
-    val terms = prefixExpansion(s, indexDir, prefix, maxExpand, analyzed)
-    if (terms.isEmpty) emptyHits(s)
-    // avocab tokens are analyzer FIXPOINTS (lowercase, alnum-edged),
-    // so feeding them back through the analyzed route's analyzeTerm
-    // is the identity — one scoring path per mode, no duplication
-    else if (analyzed) analyzedFromIndex(s, indexDir, terms, k, requireAll = false)
-    else termSearchFromIndex(s, indexDir, terms, k, requireAll = false)
+    expandedSearch(s, indexDir, prefixExpansion(s, indexDir, prefix, maxExpand, a), k, a)
   }
+
+  /** The disjunctive serve over a dictionary expansion (empty
+    * expansion → empty page). Dictionary tokens are analyzer
+    * FIXPOINTS, so the route's term normalisation is the identity on
+    * them — one scoring path per analyzer.
+    */
+  private def expandedSearch(
+      s: SparkSession,
+      indexDir: String,
+      terms: Seq[String],
+      k: Int,
+      a: Analyzer
+  ): DataFrame =
+    if (terms.isEmpty) emptyHits(s)
+    else termSearchFromIndex(s, indexDir, terms, k, requireAll = false, a = a)
 
   /** [[prefixSearchFromIndex]]'s corpus-pass twin (the oracle-shaped
     * route): a document containing a token with this prefix
@@ -3129,10 +2941,7 @@ object Search {
       .limit(maxExpand)
     val model = expansion
       .crossJoin(broadcast(nDocs))
-      .withColumn(
-        "idf_micro",
-        floor(log((col("n_docs") + 1).cast("double") / (col("df") + 1)) * 1000000L).cast("bigint")
-      )
+      .withColumn("idf_micro", idfCol(col("n_docs") + 1, 1000000L))
       .select(col("token"), col("idf_micro"))
     val scored = cp
       .join(broadcast(model), "token")
@@ -3159,13 +2968,10 @@ object Search {
       pattern: String,
       maxExpand: Int,
       k: Int,
-      analyzed: Boolean = false
+      a: Analyzer = Raw
   ): DataFrame = {
     require(pattern.nonEmpty, "wildcard search needs a non-empty pattern")
-    val terms = wildcardExpansion(s, indexDir, pattern, maxExpand, analyzed)
-    if (terms.isEmpty) emptyHits(s)
-    else if (analyzed) analyzedFromIndex(s, indexDir, terms, k, requireAll = false)
-    else termSearchFromIndex(s, indexDir, terms, k, requireAll = false)
+    expandedSearch(s, indexDir, wildcardExpansion(s, indexDir, pattern, maxExpand, a), k, a)
   }
 
   /** REGEX term search (Lucene's RegexpQuery under the same capped
@@ -3187,21 +2993,18 @@ object Search {
       pattern: String,
       maxExpand: Int,
       k: Int,
-      analyzed: Boolean = false
+      a: Analyzer = Raw
   ): DataFrame = {
     require(pattern.nonEmpty, "regex search needs a non-empty pattern")
-    val p = if (analyzed) lowerRegexLiterals(pattern) else pattern
-    val terms = vocabRows(s, indexDir, analyzed)
-      .filter(col("token").rlike("^(?:" + p + ")$"))
+    val terms = vocabRows(s, indexDir, a)
+      .filter(col("token").rlike("^(?:" + a.pattern(pattern, regex = true) + ")$"))
       .orderBy(col("df").desc, col("token").asc)
       .limit(maxExpand)
       .select("token")
       .collect()
       .map(_.getString(0))
       .toSeq
-    if (terms.isEmpty) emptyHits(s)
-    else if (analyzed) analyzedFromIndex(s, indexDir, terms, k, requireAll = false)
-    else termSearchFromIndex(s, indexDir, terms, k, requireAll = false)
+    expandedSearch(s, indexDir, terms, k, a)
   }
 
   /** Analyzer case fold for a REGEX pattern: lowercase LITERAL
@@ -3233,18 +3036,16 @@ object Search {
       indexDir: String,
       pattern: String,
       maxExpand: Int,
-      analyzed: Boolean = false
-  ): Seq[String] = {
-    val p = if (analyzed) pattern.toLowerCase else pattern
-    vocabRows(s, indexDir, analyzed)
-      .filter(col("token").like(likePattern(p)))
+      a: Analyzer
+  ): Seq[String] =
+    vocabRows(s, indexDir, a)
+      .filter(col("token").like(likePattern(a.pattern(pattern, regex = false))))
       .orderBy(col("df").desc, col("token").asc)
       .limit(maxExpand)
       .select("token")
       .collect()
       .map(_.getString(0))
       .toSeq
-  }
 
   /** Glob-style pattern → LIKE pattern: literal %/_/\ escaped (both
     * engines read backslash as the escape here), * → %, ? → _.
@@ -3273,12 +3074,12 @@ object Search {
       rawTerm: String,
       maxDist: Int,
       maxExpand: Int,
-      analyzed: Boolean = false
+      a: Analyzer
   ): DataFrame = {
-    val term = if (analyzed) analyzeTerm(rawTerm) else rawTerm
+    val term = a.term(rawTerm)
     require(term.nonEmpty, "fuzzy matching needs a non-empty term")
     require(maxDist >= 1, "fuzzy matching needs maxDist >= 1")
-    vocabRows(s, dir, analyzed)
+    vocabRows(s, dir, a)
       .filter(abs(length(col("token")) - lit(term.length)) <= maxDist)
       .withColumn("dist", levenshtein(col("token"), lit(term)).cast("bigint"))
       .filter(col("dist") <= maxDist)
@@ -3297,10 +3098,10 @@ object Search {
       term: String,
       maxDist: Int,
       n: Int,
-      analyzed: Boolean = false
+      a: Analyzer = Raw
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    fuzzyExpansion(s, indexDir, term, maxDist, n, analyzed)
+    fuzzyExpansion(s, indexDir, term, maxDist, n, a)
       .withColumn(
         "rank",
         row_number()
@@ -3322,16 +3123,14 @@ object Search {
       maxDist: Int,
       maxExpand: Int,
       k: Int,
-      analyzed: Boolean = false
+      a: Analyzer = Raw
   ): DataFrame = {
-    val terms = fuzzyExpansion(s, indexDir, term, maxDist, maxExpand, analyzed)
+    val terms = fuzzyExpansion(s, indexDir, term, maxDist, maxExpand, a)
       .select("token")
       .collect()
       .map(_.getString(0))
       .toSeq
-    if (terms.isEmpty) emptyHits(s)
-    else if (analyzed) analyzedFromIndex(s, indexDir, terms, k, requireAll = false)
-    else termSearchFromIndex(s, indexDir, terms, k, requireAll = false)
+    expandedSearch(s, indexDir, terms, k, a)
   }
 
   /** BOOLEAN must/must-not search (the NOT clause that completes the
@@ -3377,15 +3176,7 @@ object Search {
     require(must.nonEmpty, "boolean search needs at least one must term")
     require(mustNot.nonEmpty, "boolean search with no must-not terms IS conjunctiveFromIndex")
     require(must.intersect(mustNot).isEmpty, s"terms in both must and mustNot: $must vs $mustNot")
-    val buckets = mustNot.map(tokenBucket).distinct
-    val excluded = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(postingsSchema)
-        .parquet(s"$indexDir/postings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(mustNot: _*))
-    ).select(col("doc_id")).distinct()
+    val excluded = postingsScan(s, indexDir, mustNot).select(col("doc_id")).distinct()
     termSearchFromIndex(s, indexDir, must, k, requireAll = true, exclude = Some(excluded))
   }
 
@@ -3430,10 +3221,7 @@ object Search {
       }
       .reduce(_ union _)
       .crossJoin(broadcast(nDocs))
-      .withColumn(
-        "idf_micro",
-        floor(log((col("n_docs") + 1).cast("double") / (col("df") + 1)) * 1000000L).cast("bigint")
-      )
+      .withColumn("idf_micro", idfCol(col("n_docs") + 1, 1000000L))
       .select(col("gid"), col("idf_micro"))
     scoreSynonymGroups(cp, dfModel, groups.size, k, requireAll)
   }
@@ -3452,15 +3240,7 @@ object Search {
       requireAll: Boolean
   ): DataFrame = {
     val (gmap, all) = synonymGroupMap(s, groups)
-    val buckets = all.map(tokenBucket).distinct
-    val p = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(postingsSchema)
-        .parquet(s"$indexDir/postings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(all: _*))
-    ).join(broadcast(gmap), "token")
+    val p = postingsScan(s, indexDir, all).join(broadcast(gmap), "token")
     val cp = p
       .groupBy(col("gid"), col("doc_id"))
       .agg(sum(col("tf")).cast("long").as("tf"))
@@ -3468,10 +3248,7 @@ object Search {
     val dfModel = p
       .groupBy(col("gid"))
       .agg(countDistinct(col("doc_id")).cast("long").as("df"))
-      .withColumn(
-        "idf_micro",
-        floor(log(lit(nDocs + 1).cast("double") / (col("df") + 1)) * 1000000L).cast("bigint")
-      )
+      .withColumn("idf_micro", idfCol(lit(nDocs + 1), 1000000L))
       .select(col("gid"), col("idf_micro"))
     scoreSynonymGroups(cp, dfModel, groups.size, k, requireAll)
   }
@@ -3541,11 +3318,7 @@ object Search {
     val nDocs = readMeta(s, indexDir)._1
     val sel = vocabRows(s, indexDir)
       .join(broadcast(dt), "token")
-      .withColumn(
-        "sc",
-        floor(log(lit(nDocs + 1).cast("double") / (col("df") + 1)) * 1000000L).cast("bigint") *
-          col("tf")
-      )
+      .withColumn("sc", idfCol(lit(nDocs + 1), 1000000L) * col("tf"))
       .orderBy(col("sc").desc, col("token").asc)
       .limit(maxQueryTerms)
       .select("token")
@@ -3838,9 +3611,11 @@ object Search {
       asOfGen: Long
   ): DataFrame =
     rankTop(
-      bm25ScoredFromIndex(s, indexDir, terms, asOf = Some(asOfGen)).filter(
-        col("score_milli") < afterScoreMilli ||
-          (col("score_milli") === afterScoreMilli && col("doc_id") > afterDocId)
+      afterCursor(
+        bm25ScoredFromIndex(s, indexDir, terms, asOf = Some(asOfGen)),
+        "score_milli",
+        afterScoreMilli,
+        afterDocId
       ),
       "score_milli",
       k
@@ -3860,30 +3635,21 @@ object Search {
       terms: Seq[String],
       k: Int,
       asOfGen: Long
-  ): DataFrame = {
-    require(terms.nonEmpty, "term search needs at least one term")
-    val buckets = terms.map(tokenBucket).distinct
-    val p = rowsAsOf(
-      s,
-      indexDir,
-      s.read
-        .schema(postingsSchema)
-        .parquet(s"$indexDir/postings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*)),
-      asOfGen
-    )
-    scoreTermRows(p, metaAsOf(s, indexDir, asOfGen)._1, terms.size, k, requireAll = true, 1, None)
-  }
+  ): DataFrame = termSearchFromIndex(s, indexDir, terms, k, requireAll = true, asOf = Some(asOfGen))
 
   /** High-water generation: max over the applied-batch marker, every
     * data file's parsed `gbatch-<B>` generation, and every tombstone
     * file's `del-<asof>` tag — a driver-side file LISTING, run only at
     * the maintenance cadence (deletes), never in a probe.
     */
+  /** Every generation-carrying relation of a search index, both tiers. */
+  private def indexRels: Seq[String] =
+    Analyzer.tiers(folded = true).flatMap(a => Seq(a.postings, a.positions)) ++ Seq("doclen", "tombstones")
+
   private[ops] def currentHighGen(
       s: SparkSession,
       dir: String,
-      rels: Seq[String] = Seq("postings", "positions", "apostings", "apositions", "doclen", "tombstones")
+      rels: Seq[String] = indexRels
   ): Long = {
     import org.apache.hadoop.fs.Path
     val fs = fsFor(s, dir)
@@ -3919,7 +3685,6 @@ object Search {
     * entry point here.
     */
   def deleteFromSearchIndex(s: SparkSession, dir: String, ids: DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
     val fs = fsFor(s, dir)
     val asof = currentHighGen(s, dir) + 1L
     val idRel = ids.select(col(ids.columns.head).cast("long").as("doc_id")).distinct()
@@ -3932,15 +3697,15 @@ object Search {
       .agg(count(lit(1)).cast("long"), coalesce(sum(col("dl")), lit(0L)).cast("long"))
       .head()
     val (nDel, tDel) = (hr.getLong(0), hr.getLong(1))
-    val analyzed = fs.exists(new Path(s"$dir/apostings"))
+    val analyzed = hasFoldedTier(s, dir)
     val aDel =
       if (!analyzed) 0L
       else
-        liveRows(s, dir, s.read.schema(apostingsSchema).parquet(s"$dir/apostings"))
+        liveRows(s, dir, s.read.schema(postingsSchema(Folded)).parquet(s"$dir/${Folded.postings}"))
           .join(broadcast(idRel), "doc_id")
-          .select(col("doc_id"), col("adl"))
+          .select(col("doc_id"), col(Folded.dl))
           .distinct()
-          .agg(coalesce(sum(col("adl")), lit(0L)).cast("long"))
+          .agg(coalesce(sum(col(Folded.dl)), lit(0L)).cast("long"))
           .head()
           .getLong(0)
     // tombstones first, stats second: a crash between the two leaves a
@@ -4050,28 +3815,17 @@ object Search {
     import org.apache.hadoop.fs.Path
     val s = batch.sparkSession
     val fs = fsFor(s, dir)
-    requireAnalyzedTwinMaintained(s, dir, analyzed, "applySearchIndexBatch")
+    requireFoldedTierMaintained(s, dir, analyzed, "applySearchIndexBatch")
     seedLedgerIfNeeded(s, dir)
     // the batch's GENERATION: its batch id offset by the dir's
     // recorded base, so generations always exceed whatever a
     // pre-adoption lifecycle (build / append / delete / purge) left
     // on disk — see [[genBase]]
-    val gen = genBase(
-      s,
-      dir,
-      Seq("postings", "positions", "apostings", "apositions", "doclen", "tombstones")
-    ) + batchId
-    Seq(
-      s"$dir/postings/tbucket=*",
-      s"$dir/positions/tbucket=*",
-      s"$dir/apostings/tbucket=*",
-      s"$dir/apositions/tbucket=*",
-      s"$dir/doclen",
-      tombstonesDir(dir),
-      ledgerDir(dir),
-      vocabIncDir(dir),
-      vocabIncDir(dir, analyzed = true)
-    )
+    val gen = genBase(s, dir, indexRels) + batchId
+    val allTiers = Analyzer.tiers(folded = true)
+    (allTiers.flatMap(a => Seq(s"$dir/${a.postings}/tbucket=*", s"$dir/${a.positions}/tbucket=*")) ++
+      Seq(s"$dir/doclen", tombstonesDir(dir), ledgerDir(dir)) ++
+      allTiers.map(vocabIncDir(dir, _)))
       .foreach { d =>
         Option(fs.globStatus(new Path(s"$d/gbatch-$gen-*")))
           .getOrElse(Array.empty)
@@ -4090,28 +3844,24 @@ object Search {
     // reads memory, not the source — the per-batch fixed-cost floor,
     // not the asymptotics (those are already batch/ledger-sized).
     // cache decisions, measured at fixture scale and reasoned at 100 TB:
-    // the minimal raw path (no upsert, no analyzed twin, no vocab yet)
+    // the minimal raw path (no upsert, no folded tier, no vocab yet)
     // reads the at-rest micro-batch four times through cheap
     // projections — caching it there costs more than the re-scans
-    // save; every heavier path (upsert tombstones, analyzed twins,
+    // save; every heavier path (upsert tombstones, the folded tier,
     // vocab increments) multiplies the consumers and the persist wins
     // outright (isolated A/B: upsert replay 23.9 → 14.5 s)
-    val hasVocab = fs.exists(new Path(vocabDir(dir)))
-    val hasAvocab = analyzed && fs.exists(new Path(vocabDir(dir, analyzed = true)))
-    val persistBatch = analyzed || upsert || hasVocab || tombstoneIds.isDefined
+    // per tier: (analyzer, its grouped postings, whether it carries a
+    // vocab to increment) — the postings persist when the vocab
+    // increment re-reads them
+    val tiers = Analyzer.tiers(analyzed).map(a => (a, fs.exists(new Path(vocabDir(dir, a)))))
+    val persistBatch = analyzed || upsert || tiers.head._2 || tombstoneIds.isDefined
     val b =
       if (persistBatch) batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else batch
-    val pwd0 = postingsWithDl(b, idCol, textCol)
-    val pwd =
-      if (hasVocab) pwd0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else pwd0
-    val apwd =
-      if (analyzed) {
-        val a0 = analyzedPostingsWithDl(b, idCol, textCol)
-        Some(
-          if (hasAvocab) a0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else a0
-        )
-      } else None
+    val pwds = tiers.map { case (a, hasVocab) =>
+      val p = postingsWithDl(b, idCol, textCol, a)
+      if (hasVocab) p.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else p
+    }
     try {
       // UPSERT: tombstone the batch's ids at asof = gen BEFORE the new
       // rows land — every OLDER version of these docs dies (its
@@ -4137,12 +3887,7 @@ object Search {
       // the batch's scalar deltas — increment-sized, in ONE fused
       // aggregate over the persisted batch (was two jobs, each
       // re-tokenizing the source: corpusScalars + analyzedTotal)
-      val scalarAggs = Seq(
-        countDistinct(col(idCol)).cast("long"),
-        coalesce(sum(size(split(col(textCol), " ")).cast("long")), lit(0L)).cast("long")
-      ) ++ (if (analyzed)
-              Seq(coalesce(sum(size(atoksCol(textCol)).cast("long")), lit(0L)).cast("long"))
-            else Nil)
+      val scalarAggs = countDistinct(col(idCol)).cast("long") +: tiers.map(t => tokenTotal(textCol, t._1))
       // the batch's relation writes, its scalar aggregate and its vocab
       // increments are mutually independent (distinct staged dirs,
       // distinct live dirs, all reading the persisted batch/postings) —
@@ -4150,40 +3895,22 @@ object Search {
       // slowest job instead of the sum of 4-7 tiny jobs' fixed floors
       @volatile var scalarRow: org.apache.spark.sql.Row = null
       val writes = Seq.newBuilder[() => Unit]
-      writes += (() =>
-        stageAndMove(
-          pwd.withColumn("tbucket", tokenBucketCol).repartition(col("tbucket")),
-          s"$staged/postings",
-          s"$dir/postings",
-          partitionCol = Some("tbucket"),
-          gen
-        ))
-      writes += (() =>
-        stageAndMove(
-          positionalPostings(b, idCol, textCol)
-            .withColumn("tbucket", tokenBucketCol)
-            .repartition(col("tbucket")),
-          s"$staged/positions",
-          s"$dir/positions",
-          partitionCol = Some("tbucket"),
-          gen
-        ))
-      apwd.foreach { a =>
+      tiers.zip(pwds).foreach { case ((a, _), pwd) =>
         writes += (() =>
           stageAndMove(
-            a.withColumn("tbucket", tokenBucketCol).repartition(col("tbucket")),
-            s"$staged/apostings",
-            s"$dir/apostings",
+            pwd.withColumn("tbucket", tokenBucketCol).repartition(col("tbucket")),
+            s"$staged/${a.postings}",
+            s"$dir/${a.postings}",
             partitionCol = Some("tbucket"),
             gen
           ))
         writes += (() =>
           stageAndMove(
-            analyzedPositionalPostings(b, idCol, textCol)
+            positionalPostings(b, idCol, textCol, a)
               .withColumn("tbucket", tokenBucketCol)
               .repartition(col("tbucket")),
-            s"$staged/apositions",
-            s"$dir/apositions",
+            s"$staged/${a.positions}",
+            s"$dir/${a.positions}",
             partitionCol = Some("tbucket"),
             gen
           ))
@@ -4200,30 +3927,22 @@ object Search {
           gen
         ))
       writes += (() => scalarRow = b.agg(scalarAggs.head, scalarAggs.tail: _*).head())
-      // the batch's vocab increment under its deterministic gbatch name
-      // (the replay cleanup above already removed a prior attempt's),
-      // derived from the ALREADY-grouped persisted postings; upsert
-      // batches leave the OLD versions' vocab counts in place — the
-      // documented Lucene stale-stats window, healed at compaction
-      if (hasVocab)
-        writes += (() =>
-          writeVocabIncrement(
-            s,
-            dir,
-            vocabFromPostingRows(pwd.select(col("token"), col("doc_id"), col("tf"))),
-            s"gbatch-$gen"
-          ))
-      if (hasAvocab)
-        apwd.foreach { a =>
+      // the batch's vocab increment per tier under its deterministic
+      // gbatch name (the replay cleanup above already removed a prior
+      // attempt's), derived from the ALREADY-grouped persisted postings;
+      // upsert batches leave the OLD versions' vocab counts in place —
+      // the documented Lucene stale-stats window, healed at compaction
+      tiers.zip(pwds).foreach { case ((a, hasVocab), pwd) =>
+        if (hasVocab)
           writes += (() =>
             writeVocabIncrement(
               s,
               dir,
-              vocabFromPostingRows(a.select(col("token"), col("doc_id"), col("tf"))),
+              vocabFromPostingRows(pwd.select(col("token"), col("doc_id"), col("tf"))),
               s"gbatch-$gen",
-              analyzed = true
+              a
             ))
-        }
+      }
       graft.core.Par.run(writes.result(): _*)
       fs.delete(new Path(staged), true)
       val r = scalarRow
@@ -4234,8 +3953,7 @@ object Search {
       writeMeta(s, dir, (n, t))
       if (analyzed) writeAmeta(s, dir, a)
     } finally {
-      if (hasVocab) pwd.unpersist(false)
-      if (hasAvocab) apwd.foreach(_.unpersist(false))
+      tiers.zip(pwds).foreach { case ((_, hasVocab), pwd) => if (hasVocab) pwd.unpersist(false) }
       if (persistBatch) b.unpersist(false)
     }
   }
@@ -4289,31 +4007,28 @@ object Search {
     // (distinct dirs; vocab/ameta derive from their own relation's
     // rewrite) — overlap them (§2.6): compaction wall drops from the
     // sum of 4-6 rewrites to the slowest chain
-    val hasAnalyzed = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/apostings"))
+    // the folded tier exists only on analyzed-enabled indexes; its
+    // meta scalar repairs from the compacted rows like the main meta
+    val hasFolded = hasFoldedTier(spark, dir)
     @volatile var repairedAtoks = 0L
     @volatile var doclenRow: org.apache.spark.sql.Row = null
     val chains = Seq.newBuilder[() => Unit]
-    chains += (() => {
-      rewriteRel(s"$dir/postings", Some("tbucket"))
-      // re-derive the term dictionary from the (now purged) live
-      // postings — exact again after any tombstone window — consuming
-      // the increment files; also BACKFILLS pre-vocab indexes
-      writeVocabFromPostings(spark, dir)
-    })
-    chains += (() => rewriteRel(s"$dir/positions", Some("tbucket")))
-    // the analyzed twin exists only on analyzed-enabled indexes; its
-    // meta scalar repairs from the compacted rows like the main meta
-    if (hasAnalyzed)
+    Analyzer.tiers(hasFolded).foreach { a =>
       chains += (() => {
-        rewriteRel(s"$dir/apostings", Some("tbucket"))
-        // analyzed dictionary re-derived (and backfilled) like the raw one
-        writeVocabFromPostings(spark, dir, analyzed = true)
-        val a = ametaFromApostings(spark, dir)
-        writeAmeta(spark, dir, a)
-        repairedAtoks = a
+        rewriteRel(s"$dir/${a.postings}", Some("tbucket"))
+        // re-derive the term dictionary from the (now purged) live
+        // postings — exact again after any tombstone window — consuming
+        // the increment files; also BACKFILLS pre-vocab indexes
+        writeVocabFromPostings(spark, dir, a)
+        if (a == Folded) {
+          repairedAtoks = foldedTotalFromPostings(spark, dir)
+          writeAmeta(spark, dir, repairedAtoks)
+        }
       })
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/apositions")))
-      chains += (() => rewriteRel(s"$dir/apositions", Some("tbucket")))
+      // a folded tier older than its positional relation has none
+      if (a == Raw || fs.exists(new org.apache.hadoop.fs.Path(s"$dir/${a.positions}")))
+        chains += (() => rewriteRel(s"$dir/${a.positions}", Some("tbucket")))
+    }
     chains += (() => {
       rewriteRel(s"$dir/doclen", None)
       doclenRow = spark.read
@@ -4498,7 +4213,7 @@ object Search {
             s"merge part $p is stream-maintained — quiesce it (compact + drop its markers) first"
           )
         }
-        val analyzedFlags = parts.map(p => fs.exists(new Path(s"$p/apostings")))
+        val analyzedFlags = parts.map(hasFoldedTier(s, _))
         require(
           analyzedFlags.distinct.size == 1,
           s"cannot merge analyzed with raw-only parts: ${parts.zip(analyzedFlags)}"
@@ -4508,24 +4223,23 @@ object Search {
         // fail its first DICTIONARY query — if the parts disagree, say
         // so now (compaction backfills a missing vocab) instead of
         // deferring to vocabRows' require at probe time
-        Seq(false -> "vocab", true -> "avocab").foreach { case (av, what) =>
-          if (!av || an) {
-            val flags = parts.map(p => fs.exists(new Path(vocabDir(p, av))))
-            require(
-              flags.distinct.size == 1,
-              s"cannot merge parts with mixed $what state (run compactSearchIndex on the " +
-                s"missing ones to backfill): ${parts.zip(flags)}"
-            )
-          }
+        val tiers = Analyzer.tiers(an)
+        tiers.foreach { a =>
+          val flags = parts.map(p => fs.exists(new Path(vocabDir(p, a))))
+          require(
+            flags.distinct.size == 1,
+            s"cannot merge parts with mixed ${a.vocab} state (run compactSearchIndex on the " +
+              s"missing ones to backfill): ${parts.zip(flags)}"
+          )
         }
         // ARTIFACTS phase: scalar + dictionary artifacts land in the
         // staged dir FIRST, while the parts are intact
         val metas = parts.map(p => readMeta(s, p))
         val atoks = if (an) parts.map(p => readAmeta(s, p)).sum else 0L
-        def mergeVocab(av: Boolean): Unit =
-          if (parts.forall(p => fs.exists(new Path(vocabDir(p, av)))))
+        def mergeVocab(a: Analyzer): Unit =
+          if (parts.forall(p => fs.exists(new Path(vocabDir(p, a)))))
             parts
-              .map(p => vocabRows(s, p, av))
+              .map(p => vocabRows(s, p, a))
               .reduce(_ unionAll _)
               .groupBy(col("token"))
               .agg(
@@ -4536,9 +4250,8 @@ object Search {
               .sortWithinPartitions("token")
               .write
               .mode("overwrite")
-              .parquet(vocabDir(staged, av))
-        mergeVocab(av = false)
-        if (an) mergeVocab(av = true)
+              .parquet(vocabDir(staged, a))
+        tiers.foreach(mergeVocab)
         writeMeta(s, staged, (metas.map(_._1).sum, metas.map(_._2).sum))
         if (an) writeAmeta(s, staged, atoks)
         graft.core.Compaction.writeTextFile(
@@ -4555,8 +4268,7 @@ object Search {
     // indices come from the MANIFEST's order, so a resume with the
     // parts listed differently still produces the same names)
     val orderedParts = readMergeManifest(s, staged).get._2
-    val partitionedRels = Seq("postings", "positions") ++
-      (if (analyzed) Seq("apostings", "apositions") else Nil)
+    val partitionedRels = Analyzer.tiers(analyzed).flatMap(a => Seq(a.postings, a.positions))
     def moveRel(rel: String, partitioned: Boolean): Unit =
       orderedParts.zipWithIndex.foreach { case (p, i) =>
         val glob =
@@ -4725,10 +4437,7 @@ object Search {
       .groupBy(col("token"))
       .agg(count(lit(1)).cast("long").as("df"))
       .crossJoin(broadcast(nDocs))
-      .withColumn(
-        "idf_micro",
-        floor(log((col("n_docs") + 1).cast("double") / (col("df") + 1)) * 1000000L).cast("bigint")
-      )
+      .withColumn("idf_micro", idfCol(col("n_docs") + 1, 1000000L))
       .select(col("token"), col("idf_micro"))
     scoreBatch(p, queries, dfModel, k, modes)
   }
@@ -4826,29 +4535,30 @@ object Search {
       indexDir: String,
       queries: DataFrame,
       k: Int,
-      modes: Option[DataFrame] = None
+      modes: Option[DataFrame] = None,
+      a: Analyzer = Raw
   ): DataFrame = {
-    val terms = queries.select(col("term")).distinct().collect().map(_.getString(0)).toSeq
-    require(terms.nonEmpty, "batched search needs at least one term")
-    val buckets = terms.map(tokenBucket).distinct
-    val p = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(postingsSchema)
-        .parquet(s"$indexDir/postings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    ).select(col("token"), col("doc_id"), col("tf"))
-    val nDocs = readMeta(s, indexDir)._1
-    val dfModel = p
-      .groupBy(col("token"))
-      .agg(count(lit(1)).cast("long").as("df"))
-      .withColumn(
-        "idf_micro",
-        floor(log(lit(nDocs + 1).cast("double") / (col("df") + 1)) * 1000000L).cast("bigint")
-      )
-      .select(col("token"), col("idf_micro"))
-    scoreBatch(p, queries, dfModel, k, modes)
+    val (batch, terms) = batchTerms(queries, a)
+    val p = postingsScan(s, indexDir, terms, a).select(col("token"), col("doc_id"), col("tf"))
+    scoreBatch(p, batch, idfModel(p, readMeta(s, indexDir)._1, 1000000L), k, modes)
+  }
+
+  /** A (query_id, term) batch under the analyzer, plus its distinct
+    * terms driver-side for the bucket prune: terms normalise IN-PLAN
+    * (the one analyzer site of a batched route — the collect is
+    * request-sized by contract, a query batch is thousands of terms,
+    * never corpus-scale), empties drop, and repeated or variant rows of
+    * one normalised term collapse, so a query's AND gate counts
+    * distinct terms and no term double-counts.
+    */
+  private def batchTerms(queries: DataFrame, a: Analyzer): (DataFrame, Seq[String]) = {
+    val batch = queries
+      .select(col("query_id"), a.token(col("term")).as("term"))
+      .filter(col("term") =!= "")
+      .distinct()
+    val terms = batch.select(col("term")).distinct().collect().map(_.getString(0)).toSeq
+    require(terms.nonEmpty, "batched search needs at least one non-empty term")
+    (batch, terms)
   }
 
   val searchBatchIndex: Q = (s, d) => {
@@ -4875,41 +4585,22 @@ object Search {
       s: SparkSession,
       indexDir: String,
       queries: DataFrame, // (query_id, term)
-      k: Int
+      k: Int,
+      a: Analyzer = Raw
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val terms = queries.select(col("term")).distinct().collect().map(_.getString(0)).toSeq
-    require(terms.nonEmpty, "batched bm25 needs at least one term")
-    val (nDocs, totalToks) = readMeta(s, indexDir)
+    val (batch, terms) = batchTerms(queries, a)
+    val (nDocs, totalToks) = a.scalars(s, indexDir)
     // same empty-index guard as bm25FromIndex: no docs → divide by
     // zero, all-empty docs → zero contrib denominator for dl = 0
     require(nDocs > 0, s"bm25BatchFromIndex: index at $indexDir is empty (n_docs = 0)")
     val avgdl = totalToks / nDocs
     require(avgdl > 0, s"bm25BatchFromIndex: index at $indexDir has avgdl = 0 (all-empty documents)")
-    val buckets = terms.map(tokenBucket).distinct
-    val p = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(postingsSchema)
-        .parquet(s"$indexDir/postings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    ).select(col("token"), col("doc_id"), col("tf"), col("dl"))
-    val dfModel = p
-      .groupBy(col("token"))
-      .agg(count(lit(1)).cast("long").as("df"))
-      .withColumn(
-        "idf_milli",
-        floor(log(lit(nDocs + 1).cast("double") / (col("df") + 1)) * 1000L).cast("bigint")
-      )
-      .select(col("token"), col("idf_milli"))
+    val p = postingsScan(s, indexDir, terms, a).select(col("token"), col("doc_id"), col("tf"), col(a.dl))
     val scored = p
-      .join(broadcast(queries.withColumnRenamed("term", "token")), "token")
-      .join(broadcast(dfModel), "token")
-      .withColumn(
-        "contrib",
-        expr(s"(44 * idf_milli * tf * $avgdl) div (20 * $avgdl * tf + 6 * $avgdl + 18 * dl)")
-      )
+      .join(broadcast(batch.withColumnRenamed("term", "token")), "token")
+      .join(broadcast(idfModel(p, nDocs, 1000L)), "token")
+      .withColumn("contrib", bm25Contrib(avgdl, a.dl))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("contrib")).cast("long").as("score_milli"))
     scored
@@ -5139,7 +4830,7 @@ object Search {
       fixtureRegex.toUpperCase,
       fixtureRegexExpand,
       topK,
-      analyzed = true
+      Folded
     ).orderBy("rank")
 
   val searchFuzzyIndex: Q = (s, d) =>
@@ -5299,12 +4990,13 @@ object Search {
     * replays the damage + analyzer + in-order pair join.
     */
   val searchPhraseSlopAnalyzed: Q = (s, d) =>
-    analyzedOrderedSlopFromIndex(
+    orderedSlopFromIndex(
       s,
       demoAnalyzedIndexDir(s, d),
       fixturePhrase._1.toUpperCase,
       fixturePhrase._2.toUpperCase,
-      fixtureSlop
+      fixtureSlop,
+      Folded
     ).orderBy("doc_id")
 
   /** Term-boost fixture: the OR pair with the RARER term boosted 3× —
@@ -5400,7 +5092,7 @@ object Search {
   private[ops] val fixtureQueryStringAnalyzed = "+DUP Window^3 -Merge \"HASH JOIN.\""
 
   val searchQueryStringAnalyzedQ: Q = (s, d) =>
-    searchQueryStringAnalyzed(s, demoAnalyzedIndexDir(s, d), fixtureQueryStringAnalyzed, topK)
+    searchQueryString(s, demoAnalyzedIndexDir(s, d), fixtureQueryStringAnalyzed, topK, a = Folded)
       .orderBy("rank")
 
   /** Chunk-retrieval fixtures: 16-token windows. */
@@ -5526,38 +5218,41 @@ object Search {
       fixturePassageK
     ).orderBy("rank")
 
-  /** ANALYZED twins of the range-facet / grouped-top-k / best-passage
-    * page surfaces — the damaged corpus served through the analyzed
-    * chain with UPPERCASED raw terms (the established twin pattern:
-    * the analyzer must fold both sides or the gate diverges).
+  /** The range-facet / grouped-top-k / best-passage page surfaces
+    * under [[Analyzer.Folded]] — the damaged corpus with UPPERCASED
+    * raw terms (the analyzer must fold both sides or the gate
+    * diverges).
     */
   val searchRangeFacetAnalyzed: Q = (s, d) =>
-    rangeFacetCountsAnalyzed(
+    rangeFacetCounts(
       s,
       demoAnalyzedIndexDir(s, d),
       fixtureAndTerms.map(_.toUpperCase),
-      fixtureRangeWidth
+      fixtureRangeWidth,
+      Folded
     ).orderBy("range_lo")
 
   val searchGroupedTopKAnalyzed: Q = (s, d) =>
-    groupedTopKAnalyzedFromIndex(
+    groupedTopKFromIndex(
       s,
       demoAnalyzedIndexDir(s, d),
       demoDocStoreDir(s, d),
       fixtureOrTerms.map(_.toUpperCase),
       "lang",
       fixturePerGroup,
-      topK
+      topK,
+      Folded
     ).orderBy("rank")
 
   val searchBestPassageAnalyzed: Q = (s, d) =>
-    bestPassagesAnalyzed(
+    bestPassages(
       s,
       demoAnalyzedIndexDir(s, d),
       demoDamagedDocStoreDir(s, d),
       Seq(fixturePhrase._1.toUpperCase, fixturePhrase._2.toUpperCase),
       fixturePassageWindow,
-      fixturePassageK
+      fixturePassageK,
+      Folded
     ).orderBy("rank")
 
   /** Synonym fixture: {fast, slow} fold into one logical term (both
@@ -5659,11 +5354,11 @@ object Search {
   // avocab rides the demo index's full build→append→compact lifecycle
 
   val searchAutocompleteAnalyzed: Q = (s, d) =>
-    autocomplete(s, demoAnalyzedIndexDir(s, d), fixturePrefix.toUpperCase, fixtureAutoN, analyzed = true)
+    autocomplete(s, demoAnalyzedIndexDir(s, d), fixturePrefix.toUpperCase, fixtureAutoN, Folded)
       .orderBy("rank")
 
   val searchDidYouMeanAnalyzed: Q = (s, d) =>
-    didYouMean(s, demoAnalyzedIndexDir(s, d), s"[${fixtureTypo.toUpperCase}]", fixtureFuzzyDist, fixtureDymN, analyzed = true)
+    didYouMean(s, demoAnalyzedIndexDir(s, d), s"[${fixtureTypo.toUpperCase}]", fixtureFuzzyDist, fixtureDymN, Folded)
       .orderBy("rank")
 
   val searchPrefixAnalyzedIndex: Q = (s, d) =>
@@ -5673,7 +5368,7 @@ object Search {
       fixturePrefix.toUpperCase,
       fixturePrefixExpand,
       topK,
-      analyzed = true
+      Folded
     ).orderBy("rank")
 
   val searchFuzzyAnalyzedIndex: Q = (s, d) =>
@@ -5684,7 +5379,7 @@ object Search {
       fixtureFuzzyDist,
       fixtureFuzzyExpand,
       topK,
-      analyzed = true
+      Folded
     ).orderBy("rank")
 
   /** Min-should-match served from the index, sharing search_min_match's
@@ -5706,17 +5401,7 @@ object Search {
     */
   private[ops] def candidateDocsForTerms(s: SparkSession, indexDir: String, terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "candidate probe needs at least one term")
-    val buckets = terms.map(tokenBucket).distinct
-    liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(postingsSchema)
-        .parquet(s"$indexDir/postings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    )
-      .select(col("doc_id"))
-      .distinct()
+    postingsScan(s, indexDir, terms).select(col("doc_id")).distinct()
   }
 
   /** Build-even → append-odd → compact, then probe: the maintained
@@ -5747,26 +5432,21 @@ object Search {
   /** N-term corpus-pass phrase match: one posexplode over the
     * contains-pruned candidates, then lead(token, i) per offset over
     * the per-document window — a single pass whatever the phrase
-    * length (k−1 lead columns share one window sort).
+    * length (k−1 lead columns share one window sort). Under
+    * [[Analyzer.Folded]] positions number the FILTERED folded stream,
+    * so adjacency means "adjacent after punctuation-token drop".
     */
-  def phraseSearch(docs: DataFrame, idCol: String, textCol: String, terms: Seq[String]): DataFrame = {
-    require(terms.size >= 2, "phrase search needs at least two terms")
-    val pruned = docs.filter(terms.distinct.map(t => col(textCol).contains(t)).reduce(_ && _))
-    val pos = pruned.select(
-      col(idCol).cast("long").as("doc_id"),
-      posexplode(split(col(textCol), " ")).as(Seq("pos", "token"))
-    )
-    phraseWindowFold(pos, terms)
-  }
-
-  /** The k−1-lead window gate shared by the raw and ANALYZED corpus
-    * phrase routes: one per-document window sort carries every lead
-    * column whatever the phrase length.
-    */
-  private def phraseWindowFold(pos: DataFrame, terms: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val withLeads = terms.indices.tail.foldLeft(pos) { (df, i) =>
+  def phraseSearch(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      rawTerms: Seq[String],
+      a: Analyzer = Raw
+  ): DataFrame = {
+    val terms = phraseTerms(rawTerms, a)
+    val pruned = docs.filter(terms.distinct.map(a.contains(textCol, _)).reduce(_ && _))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+    val withLeads = terms.indices.tail.foldLeft(positionalPostings(pruned, idCol, textCol, a)) { (df, i) =>
       df.withColumn(s"__next_$i", lead(col("token"), i).over(w))
     }
     withLeads
@@ -5777,28 +5457,6 @@ object Search {
       )
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).cast("long").as("n_occurrences"))
-  }
-
-  /** ANALYZED n-term corpus-pass phrase match — [[phraseSearch]]'s
-    * window gate over the ANALYZED position stream: raw terms fold
-    * driver-side ([[analyzeTerm]]), every term must survive the
-    * analyzer, candidates prune on contains over lower(text) (an
-    * analyzed token's body is a contiguous substring of the lowered
-    * raw token — still a necessary condition), and positions number
-    * the FILTERED analyzed sequence, so adjacency means "adjacent
-    * after punctuation-token drop". The arithmetic reference for the
-    * index route's shared oracle.
-    */
-  def analyzedPhraseSearch(docs: DataFrame, idCol: String, textCol: String, rawTerms: Seq[String]): DataFrame = {
-    val terms = rawTerms.map(analyzeTerm)
-    require(terms.size >= 2, "phrase search needs at least two terms")
-    require(terms.forall(_.nonEmpty), "every phrase term must survive the analyzer")
-    val pruned = docs.filter(terms.distinct.map(t => lower(col(textCol)).contains(t)).reduce(_ && _))
-    val pos = pruned.select(
-      col(idCol).cast("long").as("doc_id"),
-      posexplode(atoksCol(textCol)).as(Seq("pos", "token"))
-    )
-    phraseWindowFold(pos, terms)
   }
 
   val searchPhrase: Q = (s, d) =>
@@ -5821,372 +5479,6 @@ object Search {
   val searchPhrase3Index: Q = (s, d) =>
     phraseFromIndex(s, demoAppendedSearchIndexDir(s, d), fixturePhrase3).orderBy("doc_id")
 
-  /** The token ANALYZER: lowercase + strip non-alphanumeric edges —
-    * applied IDENTICALLY to corpus tokens and query terms, which is
-    * the property that makes search correct (an unanalyzed probe
-    * misses every case/punctuation variant of its term). Kept to two
-    * engine-portable operations so the DuckDB oracle runs the same
-    * chain.
-    */
-  private def analyzeCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_replace(lower(c), "^[^a-z0-9]+|[^a-z0-9]+$", "")
-
-  /** Driver-side twin of [[analyzeCol]] for query terms. */
-  private[ops] def analyzeTerm(t: String): String =
-    t.toLowerCase.replaceAll("^[^a-z0-9]+|[^a-z0-9]+$", "")
-
-  /** ANALYZED search: [[termSearch]]'s exact structure over the
-    * analyzed token stream — the coarse prune becomes contains on
-    * lower(text) (still a necessary condition: an analyzed token's
-    * body appears contiguously in the lowered text), the exact match
-    * compares analyzed tokens to analyzed terms, scoring/gate/top-k
-    * unchanged. Tokens that analyze to empty (pure punctuation) are
-    * dropped.
-    */
-  def analyzedSearch(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      rawTerms: Seq[String],
-      k: Int,
-      requireAll: Boolean
-  ): DataFrame = {
-    val terms = rawTerms.map(analyzeTerm).filter(_.nonEmpty).distinct
-    require(terms.nonEmpty, "analyzed search needs at least one non-empty term")
-    val containsTerms = terms.map(t => lower(col(textCol)).contains(t))
-    val pruned = docs.filter(
-      if (requireAll) containsTerms.reduce(_ && _) else containsTerms.reduce(_ || _)
-    )
-    val p = analyzedPostings(pruned, idCol, textCol).filter(col("token").isin(terms: _*))
-    val nDocs = docs.agg(countDistinct(col(idCol)).as("n_docs"))
-    val dfModel = terms
-      .map { t =>
-        analyzedPostings(docs.filter(lower(col(textCol)).contains(t)), idCol, textCol)
-          .filter(col("token") === t)
-          .groupBy(col("token"))
-          .agg(count(lit(1)).cast("long").as("df"))
-      }
-      .reduce(_ union _)
-      .crossJoin(broadcast(nDocs))
-      .withColumn(
-        "idf_micro",
-        floor(log((col("n_docs") + 1).cast("double") / (col("df") + 1)) * 1000000L).cast("bigint")
-      )
-      .select(col("token"), col("idf_micro"))
-    val scored = p
-      .join(broadcast(dfModel), "token")
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).cast("long").as("n_matched"),
-        sum(col("tf") * col("idf_micro")).cast("long").as("score_micro")
-      )
-      .filter(if (requireAll) col("n_matched") === terms.size.toLong else col("n_matched") >= 1L)
-    rankTop(scored, "score_micro", k)
-  }
-
-  /** ANALYZED search served from the PERSISTED index — the serving
-    * shape for the one mode real users run (case/punctuation-folded):
-    * query terms analyze DRIVER-side ([[analyzeTerm]], the executor
-    * chain's twin), their buckets prune the `apostings` scan
-    * statically (PartitionFilters, spec-pinned), df per analyzed term
-    * is the pruned postings' row count, N comes from the index meta —
-    * zero corpus passes, where [[analyzedSearch]] pays one pruned
-    * corpus pass PER TERM for its df model. Same scoring/gate/top-k,
-    * so it must land on the corpus route's exact rows —
-    * search_analyzed_index shares search_analyzed's oracle through
-    * the build→append→compact lifecycle.
-    */
-  def analyzedFromIndex(
-      s: SparkSession,
-      indexDir: String,
-      rawTerms: Seq[String],
-      k: Int,
-      requireAll: Boolean
-  ): DataFrame = {
-    val terms = rawTerms.map(analyzeTerm).filter(_.nonEmpty).distinct
-    require(terms.nonEmpty, "analyzed search needs at least one non-empty term")
-    val buckets = terms.map(tokenBucket).distinct
-    val p = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(apostingsSchema)
-        .parquet(s"$indexDir/apostings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    )
-    val nDocs = readMeta(s, indexDir)._1
-    val dfModel = p
-      .groupBy(col("token"))
-      .agg(count(lit(1)).cast("long").as("df"))
-      .withColumn(
-        "idf_micro",
-        floor(log(lit(nDocs + 1).cast("double") / (col("df") + 1)) * 1000000L).cast("bigint")
-      )
-      .select(col("token"), col("idf_micro"))
-    val scored = p
-      .join(broadcast(dfModel), "token")
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).cast("long").as("n_matched"),
-        sum(col("tf") * col("idf_micro")).cast("long").as("score_micro")
-      )
-      .filter(if (requireAll) col("n_matched") === terms.size.toLong else col("n_matched") >= 1L)
-    rankTop(scored, "score_micro", k)
-  }
-
-  /** ANALYZED BM25 over the corpus — the corpus-pass twin of
-    * [[analyzedBm25FromIndex]] and the arithmetic reference for its
-    * shared oracle: the token stream and the length normalizer are
-    * both ANALYZED (dl = count of non-empty analyzed tokens), N is the
-    * doc count (analyzer-independent), avgdl = analyzed-total div N,
-    * and the per-term contribution is the same ONE-BIGINT-division
-    * rational form as [[bm25Search]] (k1 = 6/5, b = 3/4).
-    */
-  def analyzedBm25Search(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      rawTerms: Seq[String],
-      k: Int
-  ): DataFrame = {
-    val terms = rawTerms.map(analyzeTerm).filter(_.nonEmpty).distinct
-    require(terms.nonEmpty, "analyzed bm25 needs at least one non-empty term")
-    val stats = docs
-      .agg(
-        countDistinct(col(idCol)).cast("long"),
-        coalesce(sum(size(atoksCol(textCol)).cast("long")), lit(0L)).cast("long")
-      )
-      .head()
-    val (nDocs, totalA) = (stats.getLong(0), stats.getLong(1))
-    require(nDocs > 0, "analyzed bm25 over an empty corpus")
-    val avgdl = totalA / nDocs
-    require(avgdl > 0, "analyzed bm25 over an all-empty corpus (avgdl = 0)")
-    val pruned = docs
-      .filter(terms.map(t => lower(col(textCol)).contains(t)).reduce(_ || _))
-      .select(col(idCol).cast("long").as("doc_id"), atoksCol(textCol).as("atoks"))
-    val p = pruned
-      .select(col("doc_id"), size(col("atoks")).cast("long").as("adl"), explode(col("atoks")).as("token"))
-      .filter(col("token").isin(terms: _*))
-      .groupBy(col("token"), col("doc_id"), col("adl"))
-      .agg(count(lit(1)).as("tf"))
-    val dfModel = terms
-      .map { t =>
-        analyzedPostings(docs.filter(lower(col(textCol)).contains(t)), idCol, textCol)
-          .filter(col("token") === t)
-          .groupBy(col("token"))
-          .agg(count(lit(1)).cast("long").as("df"))
-      }
-      .reduce(_ union _)
-      .withColumn(
-        "idf_milli",
-        floor(log(lit(nDocs + 1).cast("double") / (col("df") + 1)) * 1000L).cast("bigint")
-      )
-      .select(col("token"), col("idf_milli"))
-    val scored = p
-      .join(broadcast(dfModel), "token")
-      .withColumn(
-        "contrib",
-        expr(s"(44 * idf_milli * tf * $avgdl) div (20 * $avgdl * tf + 6 * $avgdl + 18 * adl)")
-      )
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).cast("long").as("n_matched"),
-        sum(col("contrib")).cast("long").as("score_milli")
-      )
-    rankTop(scored, "score_milli", k)
-  }
-
-  /** ANALYZED BM25 served from the PERSISTED index — the serving shape
-    * of production ranked retrieval (always analyzed, always
-    * length-normalized): analyzed terms prune the apostings buckets
-    * statically, df comes from the pruned rows, adl rides each posting
-    * row ([[analyzedPostingsWithDl]]), N from the main meta and the
-    * analyzed total from `dir/ameta` — zero corpus passes and zero
-    * doc-keyed reads. Must equal [[analyzedBm25Search]] bit for bit;
-    * search_analyzed_bm25_index shares search_analyzed_bm25's oracle
-    * through build→append→compact (which also gates the ameta
-    * append-RMW and compaction repair).
-    */
-  def analyzedBm25FromIndex(s: SparkSession, indexDir: String, rawTerms: Seq[String], k: Int): DataFrame =
-    rankTop(analyzedBm25ScoredFromIndex(s, indexDir, rawTerms), "score_milli", k)
-
-  /** The analyzed scored-candidate relation — factored out so keyset
-    * pagination ([[analyzedBm25PageAfter]]) cursor-filters before the
-    * top-k, exactly like the raw route's split.
-    */
-  private def analyzedBm25ScoredFromIndex(
-      s: SparkSession,
-      indexDir: String,
-      rawTerms: Seq[String]
-  ): DataFrame = {
-    val terms = rawTerms.map(analyzeTerm).filter(_.nonEmpty).distinct
-    require(terms.nonEmpty, "analyzed bm25 needs at least one non-empty term")
-    val nDocs = readMeta(s, indexDir)._1
-    require(nDocs > 0, s"analyzedBm25FromIndex: index at $indexDir is empty (n_docs = 0)")
-    val avgdl = readAmeta(s, indexDir) / nDocs
-    require(avgdl > 0, s"analyzedBm25FromIndex: index at $indexDir has analyzed avgdl = 0")
-    val buckets = terms.map(tokenBucket).distinct
-    val p = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(apostingsSchema)
-        .parquet(s"$indexDir/apostings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    ).select(col("token"), col("doc_id"), col("tf"), col("adl"))
-    val dfModel = p
-      .groupBy(col("token"))
-      .agg(count(lit(1)).cast("long").as("df"))
-      .withColumn(
-        "idf_milli",
-        floor(log(lit(nDocs + 1).cast("double") / (col("df") + 1)) * 1000L).cast("bigint")
-      )
-      .select(col("token"), col("idf_milli"))
-    p
-      .join(broadcast(dfModel), "token")
-      .withColumn(
-        "contrib",
-        expr(s"(44 * idf_milli * tf * $avgdl) div (20 * $avgdl * tf + 6 * $avgdl + 18 * adl)")
-      )
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).cast("long").as("n_matched"),
-        sum(col("contrib")).cast("long").as("score_milli")
-      )
-  }
-
-  /** ANALYZED keyset pagination — [[bm25PageAfter]] for the mode real
-    * users run: same (score_milli, doc_id) cursor over the analyzed
-    * scored relation, page-local ranks, top-k plan on every page.
-    */
-  def analyzedBm25PageAfter(
-      s: SparkSession,
-      indexDir: String,
-      rawTerms: Seq[String],
-      k: Int,
-      afterScoreMilli: Long,
-      afterDocId: Long
-  ): DataFrame =
-    rankTop(
-      analyzedBm25ScoredFromIndex(s, indexDir, rawTerms).filter(
-        col("score_milli") < afterScoreMilli ||
-          (col("score_milli") === afterScoreMilli && col("doc_id") > afterDocId)
-      ),
-      "score_milli",
-      k
-    )
-
-  /** ANALYZED facet counts — [[facetCounts]] for the mode real users
-    * run: the match set is the all-ANALYZED-terms gate over the
-    * apostings bucket dirs (query terms fold through the same analyzer
-    * chain the index applied at build), facet values from the doc
-    * store's meta columns.
-    */
-  def analyzedFacetCounts(
-      s: SparkSession,
-      indexDir: String,
-      storeDir: String,
-      rawTerms: Seq[String],
-      facetCol: String
-  ): DataFrame = {
-    val terms = rawTerms.map(analyzeTerm).filter(_.nonEmpty).distinct
-    require(terms.nonEmpty, "analyzed facet counts need at least one non-empty term")
-    val buckets = terms.map(tokenBucket).distinct
-    val matched = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(apostingsSchema)
-        .parquet(s"$indexDir/apostings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    )
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast("long").as("n_matched"))
-      .filter(col("n_matched") === terms.size.toLong)
-      .select(col("doc_id"))
-    val meta = docStoreLive(s, storeDir).select(col("doc_id"), col(facetCol))
-    matched
-      .join(meta, "doc_id")
-      .groupBy(col(facetCol))
-      .agg(count(lit(1)).cast("long").as("n_hits"))
-  }
-
-  /** BATCHED analyzed BM25 from the persisted index — the full
-    * production tier in one operator: a RELATION of (query_id, term)
-    * pairs (raw; the terms analyze IN-PLAN with the same chain the
-    * index applied at build — the one analyzer site in this route —
-    * and the driver collects only the analyzed output, request-sized,
-    * for the bucket prune), the
-    * union of the batch's analyzed terms prunes the apostings buckets,
-    * df from the pruned rows, adl on each posting row, ameta/meta
-    * scalars, ONE BIGINT division per (query, doc, term), rank-limit
-    * per query (WindowGroupLimit — never a global sort). Each query's
-    * rows must equal its single-query [[analyzedBm25FromIndex]] route
-    * (spec-pinned); the oracle replays the batch.
-    */
-  def analyzedBm25BatchFromIndex(
-      s: SparkSession,
-      indexDir: String,
-      queries: DataFrame, // (query_id, term) — raw terms
-      k: Int
-  ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val aQueries = queries
-      .select(col("query_id"), analyzeCol(col("term")).as("token"))
-      .filter(col("token") =!= "")
-      .distinct() // two raw variants of one analyzed term must not double-count
-    // the bucket prune needs the batch's ANALYZED terms driver-side;
-    // collecting them from the in-plan analyzed relation keeps the
-    // analyzer chain in exactly ONE place per route (the collect is
-    // request-sized by contract — a query batch is thousands of terms,
-    // never corpus-scale)
-    val terms = aQueries.select(col("token")).distinct().collect().map(_.getString(0)).toSeq
-    require(terms.nonEmpty, "batched analyzed bm25 needs at least one non-empty term")
-    val nDocs = readMeta(s, indexDir)._1
-    require(nDocs > 0, s"analyzedBm25BatchFromIndex: index at $indexDir is empty (n_docs = 0)")
-    val avgdl = readAmeta(s, indexDir) / nDocs
-    require(avgdl > 0, s"analyzedBm25BatchFromIndex: index at $indexDir has analyzed avgdl = 0")
-    val buckets = terms.map(tokenBucket).distinct
-    val p = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(apostingsSchema)
-        .parquet(s"$indexDir/apostings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    ).select(col("token"), col("doc_id"), col("tf"), col("adl"))
-    val dfModel = p
-      .groupBy(col("token"))
-      .agg(count(lit(1)).cast("long").as("df"))
-      .withColumn(
-        "idf_milli",
-        floor(log(lit(nDocs + 1).cast("double") / (col("df") + 1)) * 1000L).cast("bigint")
-      )
-      .select(col("token"), col("idf_milli"))
-    val scored = p
-      .join(broadcast(aQueries), "token")
-      .join(broadcast(dfModel), "token")
-      .withColumn(
-        "contrib",
-        expr(s"(44 * idf_milli * tf * $avgdl) div (20 * $avgdl * tf + 6 * $avgdl + 18 * adl)")
-      )
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("contrib")).cast("long").as("score_milli"))
-    scored
-      .withColumn(
-        "rank",
-        row_number()
-          .over(
-            Window
-              .partitionBy(col("query_id"))
-              .orderBy(col("score_milli").desc, col("doc_id").asc)
-          )
-          .cast("bigint")
-      )
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("doc_id"), col("score_milli"))
-  }
-
   /** The deliberately case/punctuation-damaged fixture corpus both
     * analyzed gates run on: every doc_id % 7 == 0 document is
     * UPPERCASED and every doc_id % 11 == 0 document gets its tokens
@@ -6208,14 +5500,8 @@ object Search {
     * damage + the same analyzer chain).
     */
   val searchAnalyzed: Q = (s, d) =>
-    analyzedSearch(
-      damagedFixtureDocs(s, d),
-      "doc_id",
-      "text",
-      fixtureAndTerms.map(_.toUpperCase),
-      topK,
-      requireAll = true
-    ).orderBy("rank")
+    conjunctiveSearch(damagedFixtureDocs(s, d), "doc_id", "text", fixtureAndTerms.map(_.toUpperCase), topK, Folded)
+      .orderBy("rank")
 
   /** Once-per-process ANALYZED demo index over the damaged corpus,
     * through the full maintained lifecycle (build-even → append-odd →
@@ -6284,12 +5570,13 @@ object Search {
     * into the counts (the raw facet route would miss them).
     */
   val searchFacetsAnalyzed: Q = (s, d) =>
-    analyzedFacetCounts(
+    facetCounts(
       s,
       demoAnalyzedIndexDir(s, d),
       demoDocStoreDir(s, d),
       fixtureAndTerms.map(_.toUpperCase),
-      "lang"
+      "lang",
+      Folded
     ).orderBy(desc("n_hits"), col("lang"))
 
   /** ANALYZED keyset-pagination gate: page 2 cursored from page 1's
@@ -6298,14 +5585,15 @@ object Search {
   val searchPageAfterAnalyzed: Q = (s, d) => {
     val dir = demoAnalyzedIndexDir(s, d)
     val raw = fixtureOrTerms.map(_.toUpperCase)
-    val last = analyzedBm25FromIndex(s, dir, raw, topK).orderBy(desc("rank")).limit(1).head()
-    analyzedBm25PageAfter(
+    val last = bm25FromIndex(s, dir, raw, topK, Folded).orderBy(desc("rank")).limit(1).head()
+    bm25PageAfter(
       s,
       dir,
       raw,
       topK,
       last.getAs[Long]("score_milli"),
-      last.getAs[Long]("doc_id")
+      last.getAs[Long]("doc_id"),
+      Folded
     ).orderBy("rank")
   }
 
@@ -6314,19 +5602,19 @@ object Search {
     * equality IS the gate.
     */
   val searchAnalyzedIndex: Q = (s, d) =>
-    analyzedFromIndex(s, demoAnalyzedIndexDir(s, d), fixtureAndTerms.map(_.toUpperCase), topK, requireAll = true)
+    conjunctiveFromIndex(s, demoAnalyzedIndexDir(s, d), fixtureAndTerms.map(_.toUpperCase), topK, Folded)
       .orderBy("rank")
 
   /** Analyzed BM25 corpus route over the damaged corpus. */
   val searchAnalyzedBm25: Q = (s, d) =>
-    analyzedBm25Search(damagedFixtureDocs(s, d), "doc_id", "text", fixtureOrTerms.map(_.toUpperCase), topK)
+    bm25Search(damagedFixtureDocs(s, d), "doc_id", "text", fixtureOrTerms.map(_.toUpperCase), topK, Folded)
       .orderBy("rank")
 
   /** Analyzed BM25 served from the maintained analyzed index, sharing
     * the corpus route's oracle.
     */
   val searchAnalyzedBm25Index: Q = (s, d) =>
-    analyzedBm25FromIndex(s, demoAnalyzedIndexDir(s, d), fixtureOrTerms.map(_.toUpperCase), topK)
+    bm25FromIndex(s, demoAnalyzedIndexDir(s, d), fixtureOrTerms.map(_.toUpperCase), topK, Folded)
       .orderBy("rank")
 
   /** Fixture batch of RAW (damaged-case/punctuated) query terms — the
@@ -6338,48 +5626,6 @@ object Search {
       2L -> "[hash]", 2L -> "JOIN",
       3L -> "Window.", 3L -> "dup"
     )
-
-  /** BATCHED analyzed search with per-query MATCH MODES from the
-    * persisted index — the analyzed twin of [[batchedSearchFromIndex]]
-    * that completes the batch tier: raw variants of one analyzed term
-    * collapse before scoring (so a query's AND gate counts ANALYZED
-    * terms), the batch's analyzed-term union prunes the apostings
-    * buckets, and the scoring/mode/rank-limit tail is [[scoreBatch]]
-    * verbatim.
-    */
-  def analyzedBatchFromIndex(
-      s: SparkSession,
-      indexDir: String,
-      queries: DataFrame, // (query_id, term) — raw terms
-      k: Int,
-      modes: Option[DataFrame] = None
-  ): DataFrame = {
-    val aQueries = queries
-      .select(col("query_id"), analyzeCol(col("term")).as("term"))
-      .filter(col("term") =!= "")
-      .distinct()
-    val terms = aQueries.select(col("term")).distinct().collect().map(_.getString(0)).toSeq
-    require(terms.nonEmpty, "batched analyzed search needs at least one non-empty term")
-    val buckets = terms.map(tokenBucket).distinct
-    val p = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(apostingsSchema)
-        .parquet(s"$indexDir/apostings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    ).select(col("token"), col("doc_id"), col("tf"))
-    val nDocs = readMeta(s, indexDir)._1
-    val dfModel = p
-      .groupBy(col("token"))
-      .agg(count(lit(1)).cast("long").as("df"))
-      .withColumn(
-        "idf_micro",
-        floor(log(lit(nDocs + 1).cast("double") / (col("df") + 1)) * 1000000L).cast("bigint")
-      )
-      .select(col("token"), col("idf_micro"))
-    scoreBatch(p, aQueries, dfModel, k, modes)
-  }
 
   /** Modes for [[fixtureAnalyzedBatch]] — query 3 exercises the OR
     * gate through the analyzer.
@@ -6393,22 +5639,24 @@ object Search {
     */
   val searchBatchAnalyzedServe: Q = (s, d) => {
     import s.implicits._
-    analyzedBatchFromIndex(
+    batchedSearchFromIndex(
       s,
       demoAnalyzedIndexDir(s, d),
       fixtureAnalyzedBatch.toDF("query_id", "term"),
       k = 5,
-      modes = Some(fixtureAnalyzedModes.toDF("query_id", "mode"))
+      modes = Some(fixtureAnalyzedModes.toDF("query_id", "mode")),
+      Folded
     ).orderBy("query_id", "rank")
   }
 
   val searchBatchAnalyzedBm25: Q = (s, d) => {
     import s.implicits._
-    analyzedBm25BatchFromIndex(
+    bm25BatchFromIndex(
       s,
       demoAnalyzedIndexDir(s, d),
       fixtureAnalyzedBatch.toDF("query_id", "term"),
-      k = 5
+      k = 5,
+      Folded
     ).orderBy("query_id", "rank")
   }
 
@@ -6421,7 +5669,7 @@ object Search {
 
   /** Analyzed trigram, corpus route, over the damaged corpus. */
   val searchPhraseAnalyzed: Q = (s, d) =>
-    analyzedPhraseSearch(damagedFixtureDocs(s, d), "doc_id", "text", fixtureAnalyzedPhrase)
+    phraseSearch(damagedFixtureDocs(s, d), "doc_id", "text", fixtureAnalyzedPhrase, Folded)
       .orderBy("doc_id")
 
   /** Analyzed trigram served from the MAINTAINED analyzed index
@@ -6430,7 +5678,7 @@ object Search {
     * the driver-side term fold in one gate.
     */
   val searchPhraseAnalyzedIndex: Q = (s, d) =>
-    analyzedPhraseFromIndex(s, demoAnalyzedIndexDir(s, d), fixtureAnalyzedPhrase)
+    phraseFromIndex(s, demoAnalyzedIndexDir(s, d), fixtureAnalyzedPhrase, Folded)
       .orderBy("doc_id")
 
   /** KWIC (keyword-in-context) snippets — the result-rendering pass of
@@ -6440,14 +5688,27 @@ object Search {
     * array slice — no re-scan, no per-occurrence string search).
     * Emitted positions are 1-based (the SQL convention both engines
     * share). Scale: rows = term occurrences, each bounded at 2w+1
-    * tokens — output-sized however large the corpus.
+    * tokens — output-sized however large the corpus. Under
+    * [[Analyzer.Folded]] the occurrence test runs on folded tokens (the
+    * term matches its case/punctuation variants) but positions and
+    * snippets stay RAW, position-aligned with no pure-punct filtering —
+    * a renderer shows the document's actual tokens around the hit.
     */
-  def kwicSnippets(docs: DataFrame, idCol: String, textCol: String, term: String, window: Int): DataFrame =
+  def kwicSnippets(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      rawTerm: String,
+      window: Int,
+      a: Analyzer = Raw
+  ): DataFrame = {
+    val term = a.term(rawTerm)
+    require(term.nonEmpty, "the KWIC term must survive the analyzer")
     docs
-      .filter(col(textCol).contains(term))
+      .filter(a.contains(textCol, term))
       .select(col(idCol).cast("long").as("doc_id"), split(col(textCol), " ").as("toks"))
       .select(col("doc_id"), col("toks"), posexplode(col("toks")).as(Seq("pos", "token")))
-      .filter(col("token") === term)
+      .filter(a.token(col("token")) === term)
       .select(
         col("doc_id"),
         (col("pos") + 1).cast("long").as("pos"),
@@ -6457,55 +5718,18 @@ object Search {
              |  least(size(toks), pos + 1 + $window) - greatest(1, pos + 1 - $window) + 1), ' ')""".stripMargin
         ).as("snippet")
       )
+  }
 
   val searchKwic: Q = (s, d) =>
     kwicSnippets(documents(s, d), "doc_id", "text", fixturePhrase._1, 3)
       .orderBy("doc_id", "pos")
-
-  /** ANALYZED KWIC — the rendering pass for analyzed retrieval: the
-    * occurrence test runs in the ANALYZED stream (the term matches its
-    * case/punctuation variants), but positions and snippets stay RAW —
-    * a renderer shows the document's actual tokens around the hit.
-    * Each raw token pairs with its analyzed twin POSITION-ALIGNED (no
-    * pure-punct filtering here — unlike the phrase relation, display
-    * wants the raw index; a pure-punct raw token is simply never a
-    * hit). Same one-posexplode, output-sized shape as [[kwicSnippets]].
-    */
-  def analyzedKwicSnippets(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      rawTerm: String,
-      window: Int
-  ): DataFrame = {
-    val term = analyzeTerm(rawTerm)
-    require(term.nonEmpty, "the KWIC term must survive the analyzer")
-    docs
-      .filter(lower(col(textCol)).contains(term))
-      .select(col(idCol).cast("long").as("doc_id"), split(col(textCol), " ").as("rtoks"))
-      .select(
-        col("doc_id"),
-        col("rtoks"),
-        posexplode(expr(s"transform(rtoks, t -> ${analyzeSql("t")})")).as(Seq("pos", "atoken"))
-      )
-      .filter(col("atoken") === lit(term))
-      .select(
-        col("doc_id"),
-        (col("pos") + 1).cast("long").as("pos"),
-        expr(
-          s"""array_join(slice(rtoks,
-             |  greatest(1, pos + 1 - $window),
-             |  least(size(rtoks), pos + 1 + $window) - greatest(1, pos + 1 - $window) + 1), ' ')""".stripMargin
-        ).as("snippet")
-      )
-  }
 
   /** Analyzed KWIC over the damaged corpus: the raw-cased query term
     * must hit every damage form, with snippets showing the RAW
     * (damaged) context a renderer would display.
     */
   val searchKwicAnalyzed: Q = (s, d) =>
-    analyzedKwicSnippets(damagedFixtureDocs(s, d), "doc_id", "text", fixturePhrase._1.toUpperCase, 3)
+    kwicSnippets(damagedFixtureDocs(s, d), "doc_id", "text", fixturePhrase._1.toUpperCase, 3, Folded)
       .orderBy("doc_id", "pos")
 
   // ---- KWIC for a RESULT PAGE, served from persisted artifacts -------
@@ -6665,27 +5889,30 @@ object Search {
       indexDir: String,
       storeDir: String,
       terms: Seq[String],
-      facetCol: String
+      facetCol: String,
+      a: Analyzer = Raw
   ): DataFrame = {
-    require(terms.nonEmpty, "facet counts need at least one term")
-    val buckets = terms.map(tokenBucket).distinct
-    val matched = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(postingsSchema)
-        .parquet(s"$indexDir/postings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    )
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast("long").as("n_matched"))
-      .filter(col("n_matched") === terms.size.toLong)
-      .select(col("doc_id"))
     val meta = docStoreLive(s, storeDir).select(col("doc_id"), col(facetCol))
-    matched
+    allTermsMatched(s, indexDir, terms, a)
+      .select(col("doc_id"))
       .join(meta, "doc_id")
       .groupBy(col(facetCol))
       .agg(count(lit(1)).cast("long").as("n_hits"))
+  }
+
+  /** The all-terms match set — (doc_id, dl) per doc holding EVERY
+    * query term, over the terms' pruned bucket dirs (dl is constant per
+    * doc and rides each posting row, so max is just the pick).
+    * Match-set-sized, never top-k: what the facet sidebars count.
+    */
+  private def allTermsMatched(s: SparkSession, indexDir: String, rawTerms: Seq[String], a: Analyzer): DataFrame = {
+    val terms = a.terms(rawTerms)
+    require(terms.nonEmpty, "facet counts need at least one non-empty term")
+    postingsScan(s, indexDir, terms, a)
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).cast("long").as("n_matched"), max(col(a.dl)).cast("long").as("dl"))
+      .filter(col("n_matched") === terms.size.toLong)
+      .select(col("doc_id"), col("dl"))
   }
 
   /** MULTI-FACET sidebar — every dimension of the real SERP sidebar
@@ -6704,22 +5931,9 @@ object Search {
       terms: Seq[String],
       facetCols: Seq[String]
   ): DataFrame = {
-    require(terms.nonEmpty, "facet counts need at least one term")
     require(facetCols.nonEmpty, "multi-facet counts need at least one facet column")
     require(facetCols.distinct.size == facetCols.size, s"duplicate facet columns: $facetCols")
-    val buckets = terms.map(tokenBucket).distinct
-    val matched = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(postingsSchema)
-        .parquet(s"$indexDir/postings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    )
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast("long").as("n_matched"))
-      .filter(col("n_matched") === terms.size.toLong)
-      .select(col("doc_id"))
+    val matched = allTermsMatched(s, indexDir, terms, Raw).select(col("doc_id"))
     val meta = docStoreLive(s, storeDir).select(col("doc_id") +: facetCols.map(col): _*)
     matched
       .join(meta, "doc_id")
@@ -6735,75 +5949,23 @@ object Search {
   /** NUMERIC RANGE FACETS over the match set — the SERP sidebar's
     * histogram dimension ("length: 0–31 (12) · 32–63 (8) · …"): the
     * conjunctive match set comes from the postings index (terms'
-    * pruned bucket dirs), the numeric attribute from the index's OWN
-    * `doclen` relation — the forward index the build already persists,
-    * so no doc-store read and no text column ever loads. Buckets are
-    * fixed-width floors ((dl div width)·width), counts per occupied
-    * bucket. Same hit-set-sized join shape as [[facetCounts]].
+    * pruned bucket dirs), the numeric attribute is the doc length the
+    * build denormalized onto every posting row (the analyzer's length
+    * column) — one pruned scan serves gate AND histogram, so no
+    * doc-keyed relation, no doc-store read and no text column ever
+    * loads. Buckets are fixed-width floors ((dl div width)·width),
+    * counts per occupied bucket.
     */
   def rangeFacetCounts(
       s: SparkSession,
       indexDir: String,
       terms: Seq[String],
-      width: Long
+      width: Long,
+      a: Analyzer = Raw
   ): DataFrame = {
-    require(terms.nonEmpty, "range facets need at least one term")
     require(width > 0, s"range facet width must be positive, got $width")
-    val buckets = terms.map(tokenBucket).distinct
-    val matched = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(postingsSchema)
-        .parquet(s"$indexDir/postings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    )
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast("long").as("n_matched"))
-      .filter(col("n_matched") === terms.size.toLong)
-      .select(col("doc_id"))
-    val dl = liveRows(s, indexDir, s.read.parquet(s"$indexDir/doclen"), keyCol = "doc_id")
-      .select(col("doc_id"), col("dl"))
-    matched
-      .join(dl, "doc_id")
+    allTermsMatched(s, indexDir, terms, a)
       .groupBy(((col("dl") / width).cast("long") * width).as("range_lo"))
-      .agg(count(lit(1)).cast("long").as("n_hits"))
-  }
-
-  /** [[rangeFacetCounts]]'s ANALYZED twin — the mode real SERPs run
-    * (damaged input must still histogram correctly): the conjunctive
-    * match gate over the ANALYZED postings, with the histogram over
-    * the ANALYZED doc length. Cheaper than the raw route: adl rides
-    * every apostings row ([[analyzedPostingsWithDl]]), so no doclen
-    * relation is read at all — one pruned scan serves gate AND
-    * histogram.
-    */
-  def rangeFacetCountsAnalyzed(
-      s: SparkSession,
-      indexDir: String,
-      rawTerms: Seq[String],
-      width: Long
-  ): DataFrame = {
-    val terms = rawTerms.map(analyzeTerm).filter(_.nonEmpty).distinct
-    require(terms.nonEmpty, "analyzed range facets need at least one non-empty term")
-    require(width > 0, s"range facet width must be positive, got $width")
-    val buckets = terms.map(tokenBucket).distinct
-    liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(apostingsSchema)
-        .parquet(s"$indexDir/apostings")
-        .filter(col("tbucket").isin(buckets: _*) && col("token").isin(terms: _*))
-    )
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).cast("long").as("n_matched"),
-        // adl is constant per doc — max is just the pick
-        max(col("adl")).cast("long").as("adl")
-      )
-      .filter(col("n_matched") === terms.size.toLong)
-      .groupBy(((col("adl") / width).cast("long") * width).as("range_lo"))
       .agg(count(lit(1)).cast("long").as("n_hits"))
   }
 
@@ -6825,51 +5987,13 @@ object Search {
       terms: Seq[String],
       facetCol: String,
       perGroup: Int,
-      k: Int
+      k: Int,
+      a: Analyzer = Raw
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(perGroup >= 1, s"perGroup must be >= 1, got $perGroup")
     val meta = docStoreLive(s, storeDir).select(col("doc_id"), col(facetCol))
-    val kept = bm25ScoredFromIndex(s, indexDir, terms)
-      .join(meta, "doc_id")
-      .withColumn(
-        "gr",
-        row_number().over(
-          Window.partitionBy(col(facetCol)).orderBy(col("score_milli").desc, col("doc_id").asc)
-        )
-      )
-      .filter(col("gr") <= perGroup)
-    kept
-      .orderBy(col("score_milli").desc, col("doc_id").asc)
-      .limit(k)
-      .withColumn(
-        "rank",
-        row_number()
-          .over(Window.orderBy(col("score_milli").desc, col("doc_id").asc))
-          .cast("bigint")
-      )
-      .select(col("rank"), col("doc_id"), col(facetCol), col("score_milli"))
-  }
-
-  /** [[groupedTopKFromIndex]]'s ANALYZED twin: analyzed BM25 scores
-    * from the apostings index ([[analyzedBm25ScoredFromIndex]]'s exact
-    * chain), the grouping attribute from the doc store's meta column
-    * (the facet is analyzer-independent, so the RAW store serves it),
-    * the same g-deep per-group window over the hit set.
-    */
-  def groupedTopKAnalyzedFromIndex(
-      s: SparkSession,
-      indexDir: String,
-      storeDir: String,
-      rawTerms: Seq[String],
-      facetCol: String,
-      perGroup: Int,
-      k: Int
-  ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(perGroup >= 1, s"perGroup must be >= 1, got $perGroup")
-    val meta = docStoreLive(s, storeDir).select(col("doc_id"), col(facetCol))
-    val kept = analyzedBm25ScoredFromIndex(s, indexDir, rawTerms)
+    val kept = bm25ScoredFromIndex(s, indexDir, terms, a)
       .join(meta, "doc_id")
       .withColumn(
         "gr",
@@ -6902,7 +6026,10 @@ object Search {
     * classic highlighter bound — over the terms' pruned bucket dirs;
     * the store read is page-sized. idf is the term-search micro model
     * (df from the pruned postings, N from meta), so passage scores are
-    * exact integers end to end.
+    * exact integers end to end. Under [[Analyzer.Folded]] positions
+    * index the folded stream and each snippet renders the winner's
+    * FOLDED token window (the store text re-folds in-plan with the
+    * index's own chain) — pass the store of the text the index saw.
     *
     * Output: (rank, doc_id, start — 1-based, score_micro, snippet).
     */
@@ -6910,106 +6037,18 @@ object Search {
       s: SparkSession,
       indexDir: String,
       storeDir: String,
-      terms: Seq[String],
-      window: Int,
-      k: Int
-  ): DataFrame = {
-    require(terms.nonEmpty, "best passage needs at least one term")
-    val distinctTerms = terms.distinct
-    val tbuckets = distinctTerms.map(tokenBucket).distinct
-    val p = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(postingsSchema)
-        .parquet(s"$indexDir/postings")
-        .filter(col("tbucket").isin(tbuckets: _*) && col("token").isin(distinctTerms: _*))
-    )
-    val pos = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(positionsSchema)
-        .parquet(s"$indexDir/positions")
-        .filter(col("tbucket").isin(tbuckets: _*) && col("token").isin(distinctTerms: _*))
-    ).select(col("token"), col("doc_id"), col("pos"))
-    bestPassagesOver(s, p, pos, readMeta(s, indexDir)._1, window, k) { ids =>
-      val dbuckets = ids.map(docBucket).distinct
-      docStoreLive(s, storeDir)
-        .filter(col("dbucket").isin(dbuckets: _*) && col("doc_id").isin(ids: _*))
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
-    }
-  }
-
-  /** [[bestPassages]]'s ANALYZED twin: the same anchored-window argmax
-    * over the ANALYZED positional index (apositions — positions index
-    * the analyzer's filtered token stream), idf from the apostings df,
-    * and each snippet rendered as the winner's ANALYZED token window —
-    * the store text re-analyzes in-plan with the index's own chain, so
-    * positions and rendering stay aligned even on damaged documents.
-    * Pass the DAMAGED doc store so the page renders what the index
-    * actually saw.
-    */
-  def bestPassagesAnalyzed(
-      s: SparkSession,
-      indexDir: String,
-      storeDir: String,
       rawTerms: Seq[String],
       window: Int,
-      k: Int
+      k: Int,
+      a: Analyzer = Raw
   ): DataFrame = {
-    val terms = rawTerms.map(analyzeTerm).filter(_.nonEmpty).distinct
-    require(terms.nonEmpty, "analyzed best passage needs at least one non-empty term")
-    val tbuckets = terms.map(tokenBucket).distinct
-    val p = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(apostingsSchema)
-        .parquet(s"$indexDir/apostings")
-        .filter(col("tbucket").isin(tbuckets: _*) && col("token").isin(terms: _*))
-    )
-    val pos = liveRows(
-      s,
-      indexDir,
-      s.read
-        .schema(positionsSchema)
-        .parquet(s"$indexDir/apositions")
-        .filter(col("tbucket").isin(tbuckets: _*) && col("token").isin(terms: _*))
-    ).select(col("token"), col("doc_id"), col("pos"))
-    bestPassagesOver(s, p, pos, readMeta(s, indexDir)._1, window, k) { ids =>
-      val dbuckets = ids.map(docBucket).distinct
-      docStoreLive(s, storeDir)
-        .filter(col("dbucket").isin(dbuckets: _*) && col("doc_id").isin(ids: _*))
-        .select(col("doc_id"), atoksCol("text").as("toks"))
-    }
-  }
-
-  /** The passage machinery shared by the raw and analyzed routes:
-    * micro-idf from the pruned posting rows, anchored-window argmax
-    * (ties to the earliest start), top-k page collected driver-side
-    * (request-sized), snippets joined from the caller's page-pruned
-    * token arrays.
-    */
-  private def bestPassagesOver(
-      s: SparkSession,
-      p: DataFrame,
-      pos: DataFrame,
-      nDocs: Long,
-      window: Int,
-      k: Int
-  )(toksFor: Seq[Long] => DataFrame): DataFrame = {
     import s.implicits._
     require(window >= 1, s"passage window must be >= 1, got $window")
-    val idf = p
-      .groupBy(col("token"))
-      .agg(count(lit(1)).cast("long").as("df"))
-      .withColumn(
-        "idf_micro",
-        floor(log(lit(nDocs + 1).cast("double") / (col("df") + 1)) * 1000000L).cast("bigint")
-      )
-      .select(col("token"), col("idf_micro"))
-    val occ = pos
+    val terms = a.terms(rawTerms)
+    require(terms.nonEmpty, "best passage needs at least one non-empty term")
+    val p = postingsScan(s, indexDir, terms, a)
+    val idf = idfModel(p, readMeta(s, indexDir)._1, 1000000L)
+    val occ = positionsScan(s, indexDir, terms, a)
       .join(broadcast(idf), "token")
       .select(col("doc_id"), col("pos"), col("idf_micro"))
     val anchors = occ.select(col("doc_id").as("__d"), col("pos").as("start"))
@@ -7038,11 +6077,17 @@ object Search {
         .toDF("rank", "doc_id", "start", "score_micro", "snippet")
     }
     val ids = page.map(_._1).toSeq
+    val dbuckets = ids.map(docBucket).distinct
+    // the page's token arrays under the analyzer, so positions and
+    // rendering stay aligned even on damaged documents
+    val toks = docStoreLive(s, storeDir)
+      .filter(col("dbucket").isin(dbuckets: _*) && col("doc_id").isin(ids: _*))
+      .select(col("doc_id"), a.tokens("text").as("toks"))
     val ranked = page.zipWithIndex.toSeq
       .map { case ((id, st, sc), i) => (i + 1L, id, st, sc) }
       .toDF("rank", "doc_id", "start0", "score_micro")
     broadcast(ranked)
-      .join(toksFor(ids), "doc_id")
+      .join(toks, "doc_id")
       .select(
         col("rank"),
         col("doc_id"),
@@ -7063,7 +6108,9 @@ object Search {
     * (PartitionFilters, spec-pinned). Same 1-based positions and
     * ±window slice arithmetic as the corpus route, with the hit's page
     * rank riding each snippet row — search_kwic_page shares a
-    * page-restricted form of search_kwic's oracle.
+    * page-restricted form of search_kwic's oracle. Under
+    * [[Analyzer.Folded]] see [[kwicPageMulti]]: raw positions and
+    * snippets, folded hit test.
     */
   def kwicPage(
       s: SparkSession,
@@ -7071,9 +6118,10 @@ object Search {
       storeDir: String,
       hits: DataFrame, // (rank, doc_id) — a result page, request-sized
       term: String,
-      window: Int
+      window: Int,
+      a: Analyzer = Raw
   ): DataFrame =
-    kwicPageMulti(s, indexDir, storeDir, hits, Seq(term), window)
+    kwicPageMulti(s, indexDir, storeDir, hits, Seq(term), window, a = a)
       .select(col("rank"), col("doc_id"), col("pos"), col("snippet"))
 
   /** MULTI-TERM page highlighting — a production SERP renders snippets
@@ -7082,25 +6130,32 @@ object Search {
     * positional read pruned to the terms' bucket dirs ∪ the page's doc
     * ids, ONE store read pruned to the hits' dbucket dirs, a snippet
     * window per (doc, term, occurrence) with the matched term riding
-    * each row. The optional `asOf` generation serves the ERA's
-    * snippets: both the positional read and the store read reconstruct
-    * through [[rowsAsOf]] (same horizon contract as every time-travel
-    * route), so an as-of page renders exactly what the index served
-    * then. Gates: search_kwic_page_multi's oracle is the UNION of the
-    * per-term page oracles; search_asof_page shares the restricted-
-    * corpus form search_asof_probe uses.
+    * each row. Under [[Analyzer.Folded]] no positional index is read at
+    * all: folded positions number the FILTERED stream, while display
+    * wants the document's actual indices, so the occurrences come from
+    * the page's own store tokens folded in-plan (position-aligned, no
+    * pure-punct filtering; ≤ k docs exploded) — the folded hit test
+    * over raw tokens, raw snippets. The optional `asOf` generation
+    * serves the ERA's snippets: both the positional read and the store
+    * read reconstruct through [[rowsAsOf]] (same horizon contract as
+    * every time-travel route), so an as-of page renders exactly what
+    * the index served then. Gates: search_kwic_page_multi's oracle is
+    * the UNION of the per-term page oracles; search_asof_page shares
+    * the restricted-corpus form search_asof_probe uses.
     */
   def kwicPageMulti(
       s: SparkSession,
       indexDir: String,
       storeDir: String,
       hits: DataFrame, // (rank, doc_id) — a result page, request-sized
-      terms: Seq[String],
+      rawTerms: Seq[String],
       window: Int,
-      asOf: Option[Long] = None
+      asOf: Option[Long] = None,
+      a: Analyzer = Raw
   ): DataFrame = {
     import s.implicits._
-    require(terms.nonEmpty, "kwic page needs at least one term")
+    val terms = a.terms(rawTerms)
+    require(terms.nonEmpty, "kwic page needs at least one term that survives the analyzer")
     val hitRows = hits
       .select(col("rank").cast("long"), col("doc_id").cast("long"))
       .collect()
@@ -7112,26 +6167,25 @@ object Search {
         .toDF("rank", "doc_id", "term", "pos", "snippet")
     }
     val dbuckets = ids.map(docBucket).distinct
-    val tbuckets = terms.map(tokenBucket).distinct
     val ranks = hitRows.toSeq.toDF("rank", "doc_id")
-    val posScan = s.read
-      .schema(positionsSchema)
-      .parquet(s"$indexDir/positions")
-      .filter(
-        col("tbucket").isin(tbuckets: _*) && col("token").isin(terms: _*) &&
-          col("doc_id").isin(ids: _*)
-      )
-    val pos = asOf
-      .fold(liveRows(s, indexDir, posScan))(g => rowsAsOf(s, indexDir, posScan, g))
-      .select(col("token").as("term"), col("doc_id"), col("pos"))
     val storeScan = s.read
       .parquet(s"$storeDir/docs")
       .filter(col("dbucket").isin(dbuckets: _*) && col("doc_id").isin(ids: _*))
     val toks = asOf
       .fold(liveRows(s, storeDir, storeScan))(g => rowsAsOf(s, storeDir, storeScan, g))
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
-    pos
-      .join(toks, "doc_id") // page-sized both sides
+    val occ =
+      if (a == Raw)
+        positionsScan(s, indexDir, terms, a, asOf)
+          .filter(col("doc_id").isin(ids: _*))
+          .select(col("token").as("term"), col("doc_id"), col("pos"))
+          .join(toks, "doc_id") // page-sized both sides
+      else
+        toks
+          .select(col("doc_id"), col("toks"), posexplode(col("toks")).as(Seq("pos", "tok")))
+          .select(col("doc_id"), col("toks"), col("pos"), a.token(col("tok")).as("term"))
+          .filter(col("term").isin(terms: _*))
+    occ
       .join(broadcast(ranks), "doc_id")
       .select(
         col("rank"),
@@ -7187,67 +6241,16 @@ object Search {
       saveDocStore(damagedFixtureDocs(s, d), "doc_id", "text", _)
     )
 
-  /** ANALYZED KWIC for a RESULT PAGE from the persisted doc store —
-    * the analyzed rendering pass at page cost: no positional index is
-    * needed at all, because the page's token arrays are already in
-    * hand (the store read, pruned to the hits' dbucket dirs) and the
-    * hit test analyzes each RAW token in-plan with the index's chain
-    * — position-aligned with NO pure-punct filtering, since display
-    * wants the document's actual indices. Work is page-sized: ≤ k docs
-    * exploded, each ≤ its own length.
-    */
-  def analyzedKwicPage(
-      s: SparkSession,
-      storeDir: String,
-      hits: DataFrame, // (rank, doc_id) — request-sized
-      rawTerm: String,
-      window: Int
-  ): DataFrame = {
-    import s.implicits._
-    val term = analyzeTerm(rawTerm)
-    require(term.nonEmpty, s"analyzed kwic page: term '$rawTerm' does not survive the analyzer")
-    val hitRows = hits
-      .select(col("rank").cast("long"), col("doc_id").cast("long"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val ids = hitRows.map(_._2).toSeq
-    if (ids.isEmpty) {
-      return Seq.empty[(Long, Long, Long, String)].toDF("rank", "doc_id", "pos", "snippet")
-    }
-    val dbuckets = ids.map(docBucket).distinct
-    val ranks = hitRows.toSeq.toDF("rank", "doc_id")
-    docStoreLive(s, storeDir)
-      .filter(col("dbucket").isin(dbuckets: _*) && col("doc_id").isin(ids: _*))
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .join(broadcast(ranks), "doc_id")
-      .select(col("rank"), col("doc_id"), col("toks"), posexplode(col("toks")).as(Seq("p", "tok")))
-      .filter(analyzeCol(col("tok")) === term)
-      .select(
-        col("rank"),
-        col("doc_id"),
-        (col("p") + 1).cast("long").as("pos"),
-        expr(
-          s"""array_join(slice(toks,
-             |  greatest(1, p + 1 - $window),
-             |  least(size(toks), p + 1 + $window) - greatest(1, p + 1 - $window) + 1), ' ')""".stripMargin
-        ).as("snippet")
-      )
-  }
-
   /** The analyzed rendered page: hits from the persisted ANALYZED
     * index (uppercased raw term — the analyzer folds both sides),
     * snippets from the damaged-corpus doc store pruned to the page —
     * raw damaged text, analyzed hit test, page-sized I/O.
     */
   val searchKwicPageAnalyzed: Q = (s, d) => {
-    val hits = analyzedFromIndex(
-      s,
-      demoAnalyzedIndexDir(s, d),
-      Seq(fixturePhrase._1.toUpperCase),
-      kwicPageK,
-      requireAll = true
-    ).select(col("rank"), col("doc_id"))
-    analyzedKwicPage(s, demoDamagedDocStoreDir(s, d), hits, fixturePhrase._1.toUpperCase, 3)
+    val dir = demoAnalyzedIndexDir(s, d)
+    val hits = conjunctiveFromIndex(s, dir, Seq(fixturePhrase._1.toUpperCase), kwicPageK, Folded)
+      .select(col("rank"), col("doc_id"))
+    kwicPage(s, dir, demoDamagedDocStoreDir(s, d), hits, fixturePhrase._1.toUpperCase, 3, Folded)
       .orderBy("rank", "pos")
   }
 
@@ -7570,7 +6573,7 @@ object Search {
   val searchRrfAnalyzed: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
     val lex =
-      analyzedBm25FromIndex(s, demoAnalyzedIndexDir(s, d), fixtureOrTerms.map(_.toUpperCase), topK)
+      bm25FromIndex(s, demoAnalyzedIndexDir(s, d), fixtureOrTerms.map(_.toUpperCase), topK, Folded)
         .select(col("doc_id").as("id"), col("rank"))
     val vec = Similarity
       .ivfTopKFromIndex(s, Similarity.demoIvfIndexDir(s, d), queryId = 0L, k = topK, nProbe = 16)

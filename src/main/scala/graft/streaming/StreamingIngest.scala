@@ -1012,7 +1012,7 @@ object StreamingIngest {
       searchIndexStream(stream, "doc_id", "text", idx, ckpt, Trigger.AvailableNow(), compactEvery = 3, analyzed = true)
         .awaitTermination()
       graft.ops.Search
-        .analyzedBm25FromIndex(s, idx, graft.ops.Search.fixtureOrTerms.map(_.toUpperCase), 10)
+        .bm25FromIndex(s, idx, graft.ops.Search.fixtureOrTerms.map(_.toUpperCase), 10, graft.ops.Search.Analyzer.Folded)
         .orderBy("rank")
         .localCheckpoint(true)
     } finally rmScratch(s, base)

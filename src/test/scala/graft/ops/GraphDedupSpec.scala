@@ -48,15 +48,20 @@ class GraphDedupSpec extends SparkSpec {
 
   test("bounded driver fast path equals the distributed star loop") {
     // maxDriverEdges = 0 forces the large-star/small-star loop; the
-    // default takes the driver union-find — both must produce the same
-    // (node, min-reachable-id) map on chains, stars, merges, singles
+    // default and Long.MaxValue take the driver union-find — all must
+    // produce the same (node, min-reachable-id) map on chains, stars,
+    // merges, singles
     val edges = ((1L until 40L).map(i => (i, i + 1)) ++
       Seq((100L, 101L), (101L, 102L), (200L, 300L), (300L, 250L))).toDF("src", "dst")
     val fast = GraphDedup.connectedComponents(edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val dist = GraphDedup.connectedComponents(edges, maxDriverEdges = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // an unbounded cap must still take (and complete) the driver path
+    val unbounded = GraphDedup.connectedComponents(edges, maxDriverEdges = Long.MaxValue)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fast == dist)
+    assert(unbounded == dist)
     assert(fast((200L)) == 200L && fast(250L) == 200L && fast(300L) == 200L)
   }
 

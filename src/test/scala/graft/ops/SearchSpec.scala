@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.ops.Search.Analyzer.Folded
 import org.apache.spark.sql.functions._
 
 class SearchSpec extends SparkSpec {
@@ -199,7 +200,7 @@ class SearchSpec extends SparkSpec {
     Search.saveSearchIndex(docs.filter(col("doc_id") === 1L), "doc_id", "text", dir, analyzed = true)
     Search.appendToSearchIndex(docs.filter(col("doc_id") =!= 1L), "doc_id", "text", dir, analyzed = true)
     // analyzed autocomplete on a DAMAGED prefix: base ⊕ increment fold
-    val ac = Search.autocomplete(spark, dir, "CAR", 10, analyzed = true).collect()
+    val ac = Search.autocomplete(spark, dir, "CAR", 10, Folded).collect()
       .map(r => (r.getAs[String]("token"), r.getAs[Long]("df"))).toSeq
     assert(ac == Seq(("card", 2L), ("care", 1L)), ac.toString)
     // the RAW dictionary keeps the damaged forms distinct
@@ -207,11 +208,11 @@ class SearchSpec extends SparkSpec {
     assert(raw == Seq("Card"), raw.toString)
     // compaction folds the increment and the probes don't move
     Search.compactSearchIndex(spark, dir)
-    val ac2 = Search.autocomplete(spark, dir, "CAR", 10, analyzed = true).collect()
+    val ac2 = Search.autocomplete(spark, dir, "CAR", 10, Folded).collect()
       .map(r => (r.getAs[String]("token"), r.getAs[Long]("df"))).toSeq
     assert(ac2 == ac)
     // analyzed fuzzy: damaged term "DOB!" reaches 'dog' at dist 1
-    val hits = Search.fuzzySearchFromIndex(spark, dir, "DOB!", 1, 8, 10, analyzed = true).collect()
+    val hits = Search.fuzzySearchFromIndex(spark, dir, "DOB!", 1, 8, 10, Folded).collect()
     assert(hits.map(_.getAs[Long]("doc_id")).toSet == Set(3L))
   }
 
@@ -593,14 +594,21 @@ class SearchSpec extends SparkSpec {
 
   test("round-14 index routes prune to their terms' bucket dirs (PartitionFilters pins)") {
     val d = "/root/testdata/sf0.001"
+    val an = Search.demoAnalyzedIndexDir(spark, d)
     val plans = Seq(
       Search.queries("search_min_match_index")(spark, d),
+      Search.minShouldMatchFromIndex(
+        spark, an, Search.fixtureMinTerms.map(_.toUpperCase), Search.fixtureMinMatch, 10, Folded),
       Search.queries("search_boolean_not_index")(spark, d),
       Search.queries("search_proximity_index")(spark, d),
       Search.queries("search_synonym_index")(spark, d),
       Search.queries("search_prefix_index")(spark, d),
+      Search.queries("search_prefix_analyzed_index")(spark, d),
       Search.queries("search_fuzzy_index")(spark, d),
-      Search.queries("search_wildcard_index")(spark, d)
+      Search.queries("search_fuzzy_analyzed_index")(spark, d),
+      Search.queries("search_wildcard_index")(spark, d),
+      Search.wildcardSearchFromIndex(
+        spark, an, Search.fixtureWildcard.toUpperCase, Search.fixtureWildcardExpand, 10, Folded)
     ).map(_.queryExecution.executedPlan.toString)
     plans.foreach { plan =>
       assert(plan.contains("PartitionFilters: [") && plan.contains("tbucket"), plan.take(2000))
@@ -615,7 +623,11 @@ class SearchSpec extends SparkSpec {
       Search.queries("search_query_string_range")(spark, d),
       Search.queries("search_query_string_analyzed")(spark, d),
       Search.queries("search_query_string_page")(spark, d),
+      Search.searchQueryStringPageAfter(
+        spark, Search.demoAnalyzedIndexDir(spark, d), Search.fixtureQueryStringWide.toUpperCase, 10,
+        Long.MaxValue, -1L, a = Folded),
       Search.queries("search_auto_correct_multi")(spark, d),
+      Search.queries("search_grouped_topk")(spark, d),
       Search.queries("search_grouped_topk_analyzed")(spark, d),
       Search.queries("search_facets_multi")(spark, d),
       Search.queries("search_bm25f_deleted")(spark, d)
@@ -746,22 +758,22 @@ class SearchSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("graft_qsa").toString + "/idx"
     Search.saveSearchIndex(docs, "doc_id", "text", dir, analyzed = true)
-    val got = Search.searchQueryStringAnalyzed(spark, dir, "+DUP Window^3 -Merge", 10)
+    val got = Search.searchQueryString(spark, dir, "+DUP Window^3 -Merge", 10, a = Folded)
       .collect().map(_.getAs[Long]("doc_id")).toSet
     assert(got == Set(1L, 2L), got.toString)
     // raw-only clauses have no analyzed artifacts to serve — loud
     intercept[IllegalArgumentException](
-      Search.searchQueryStringAnalyzed(spark, dir, "dup title:window", 10)
+      Search.searchQueryString(spark, dir, "dup title:window", 10, a = Folded)
     )
     intercept[IllegalArgumentException](
-      Search.searchQueryStringAnalyzed(spark, dir, "dup len:[1 TO 9]", 10)
+      Search.searchQueryString(spark, dir, "dup len:[1 TO 9]", 10, a = Folded)
     )
     // a clause that analyzes to pure punctuation is ill-formed
     intercept[IllegalArgumentException](
-      Search.searchQueryStringAnalyzed(spark, dir, "dup +...", 10)
+      Search.searchQueryString(spark, dir, "dup +...", 10, a = Folded)
     )
     // empty analyzed rewrite (no dictionary match) is an empty page
-    val none = Search.searchQueryStringAnalyzed(spark, dir, "zzzzzzzzzzzzzz~1", 10)
+    val none = Search.searchQueryString(spark, dir, "zzzzzzzzzzzzzz~1", 10, a = Folded)
     assert(none.columns.toSeq == Seq("rank", "doc_id", "score_micro") && none.count() == 0)
   }
 
@@ -779,7 +791,7 @@ class SearchSpec extends SparkSpec {
     Search.saveDocStore(docs, "doc_id", "text", storeDir, metaCols = Seq())
     // analyzed range facet: both hash∧join docs land in their adl bins
     // (doc 1: 6 analyzed tokens; doc 2: 3 — 'noise.' folds to 'noise')
-    val rf = Search.rangeFacetCountsAnalyzed(spark, idxDir, Seq("HASH", "join"), 4)
+    val rf = Search.rangeFacetCounts(spark, idxDir, Seq("HASH", "join"), 4, Folded)
     val got = rf.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got == Map(0L -> 1L, 4L -> 1L), got.toString)
     assert(
@@ -788,7 +800,7 @@ class SearchSpec extends SparkSpec {
     )
     // analyzed best passage: doc 2's snippet renders the ANALYZED
     // stream (aligned with apositions), damaged doc included
-    val bp = Search.bestPassagesAnalyzed(spark, idxDir, storeDir, Seq("HASH", "JOIN"), 2, 5)
+    val bp = Search.bestPassages(spark, idxDir, storeDir, Seq("HASH", "JOIN"), 2, 5, Folded)
     val snippets = bp.collect().map(r => (r.getLong(1), r.getString(4))).toMap
     assert(snippets(1L) == "hash join" && snippets(2L) == "hash join", snippets.toString)
   }
@@ -864,7 +876,7 @@ class SearchSpec extends SparkSpec {
     // analyzed = true still appends fine, and the analyzed probe sees the increment
     Search.appendToSearchIndex(more, "doc_id", "text", dir, analyzed = true)
     val got = Search
-      .analyzedFromIndex(spark, dir, Seq("DOG"), 10, requireAll = true)
+      .conjunctiveFromIndex(spark, dir, Seq("DOG"), 10, Folded)
       .collect().map(_.getAs[Long]("doc_id")).toSet
     assert(got == Set(1L, 3L), got.toString)
   }
@@ -1083,7 +1095,7 @@ class SearchSpec extends SparkSpec {
       (4L, "!!! ??? cat"),      // pure-punct tokens must drop, one term
       (5L, "scatter dogma")     // substrings only — exact analyzed match rejects
     ).toDF("doc_id", "text")
-    val got = Search.analyzedSearch(docs, "doc_id", "text", Seq("Cat", "DOG!"), 10, requireAll = true)
+    val got = Search.conjunctiveSearch(docs, "doc_id", "text", Seq("Cat", "DOG!"), 10, Folded)
       .collect().map(_.getAs[Long]("doc_id")).toSet
     assert(got == Set(1L, 2L, 3L), got.toString)
     // the UNanalyzed route misses the damaged docs — the analyzer is
@@ -1094,7 +1106,7 @@ class SearchSpec extends SparkSpec {
     // identical damage must score identically to the clean twin: docs
     // 1-3 carry the same analyzed token multiset, so scores tie and
     // rank falls back to doc_id
-    val ranked = Search.analyzedSearch(docs, "doc_id", "text", Seq("cat", "dog"), 10, requireAll = true)
+    val ranked = Search.conjunctiveSearch(docs, "doc_id", "text", Seq("cat", "dog"), 10, Folded)
       .collect().map(r => (r.getAs[Long]("rank"), r.getAs[Long]("doc_id"))).toSeq
     assert(ranked == Seq((1L, 1L), (2L, 2L), (3L, 3L)), ranked.toString)
   }
@@ -1114,13 +1126,13 @@ class SearchSpec extends SparkSpec {
     Search.compactSearchIndex(spark, dir)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getAs[Long]("rank"), r.getAs[Long]("doc_id"), r.getAs[Long]("score_micro"))).toSeq
-    val corpus = rows(Search.analyzedSearch(docs, "doc_id", "text", Seq("Cat", "DOG!"), 10, requireAll = true))
-    val probe = Search.analyzedFromIndex(spark, dir, Seq("Cat", "DOG!"), 10, requireAll = true)
+    val corpus = rows(Search.conjunctiveSearch(docs, "doc_id", "text", Seq("Cat", "DOG!"), 10, Folded))
+    val probe = Search.conjunctiveFromIndex(spark, dir, Seq("Cat", "DOG!"), 10, Folded)
     assert(rows(probe) == corpus, "index-served analyzed search must equal the corpus analyzed pass")
     assert(corpus.map(_._2).toSet == Set(1L, 2L, 3L, 6L), corpus.toString)
     // OR gate from the index too
-    val orCorpus = rows(Search.analyzedSearch(docs, "doc_id", "text", Seq("Cat"), 10, requireAll = false))
-    assert(rows(Search.analyzedFromIndex(spark, dir, Seq("Cat"), 10, requireAll = false)) == orCorpus)
+    val orCorpus = rows(Search.disjunctiveSearch(docs, "doc_id", "text", Seq("Cat"), 10, Folded))
+    assert(rows(Search.disjunctiveFromIndex(spark, dir, Seq("Cat"), 10, Folded)) == orCorpus)
     val plan = probe.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [") && plan.contains("tbucket"), plan.take(2000))
     assert(plan.contains("apostings"), "the analyzed probe must serve from the apostings relation")
@@ -1141,8 +1153,8 @@ class SearchSpec extends SparkSpec {
     Search.compactSearchIndex(spark, dir)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getAs[Long]("rank"), r.getAs[Long]("doc_id"), r.getAs[Long]("score_milli"))).toSeq
-    val corpus = rows(Search.analyzedBm25Search(docs, "doc_id", "text", Seq("Cat", "DOG!"), 10))
-    val probe = Search.analyzedBm25FromIndex(spark, dir, Seq("Cat", "DOG!"), 10)
+    val corpus = rows(Search.bm25Search(docs, "doc_id", "text", Seq("Cat", "DOG!"), 10, Folded))
+    val probe = Search.bm25FromIndex(spark, dir, Seq("Cat", "DOG!"), 10, Folded)
     assert(rows(probe) == corpus, "index-served analyzed BM25 must equal the corpus analyzed pass")
     assert(corpus.map(_._2).toSet == Set(1L, 2L, 3L, 4L, 5L), corpus.toString)
     // ameta repaired by compaction equals the corpus analyzed total
@@ -1166,14 +1178,14 @@ class SearchSpec extends SparkSpec {
       // two raw variants of the same analyzed term must not double-count
       11L -> "[hash]", 11L -> "HASH", 11L -> "join"
     ).toDF("query_id", "term")
-    val got = Search.analyzedBm25BatchFromIndex(spark, dir, batch, 5)
+    val got = Search.bm25BatchFromIndex(spark, dir, batch, 5, Folded)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .groupBy(_._1)
       .view
       .mapValues(_.map(t => (t._2, t._3, t._4)).sortBy(_._1).toSeq)
       .toMap
-    def single(terms: Seq[String]) = Search.analyzedBm25FromIndex(spark, dir, terms, 5)
+    def single(terms: Seq[String]) = Search.bm25FromIndex(spark, dir, terms, 5, Folded)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got(10L) == single(Seq("DUP", "Spark!")), s"q10: ${got(10L)}")
     assert(got(11L) == single(Seq("hash", "join")), s"q11: ${got(11L)}")
@@ -1192,7 +1204,7 @@ class SearchSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     def m(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_occurrences")).toMap
-    val corpus = m(Search.analyzedPhraseSearch(docs, "doc_id", "text", Seq("Hash", "JOIN.", "[big]")))
+    val corpus = m(Search.phraseSearch(docs, "doc_id", "text", Seq("Hash", "JOIN.", "[big]"), Folded))
     assert(corpus == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 7L -> 2L), corpus.toString)
     // the raw window route misses every damaged form — the analyzer is
     // load-bearing for phrases exactly as for term search
@@ -1202,22 +1214,22 @@ class SearchSpec extends SparkSpec {
     Search.saveSearchIndex(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", dir, analyzed = true)
     Search.appendToSearchIndex(docs.filter(col("doc_id") % 2 =!= 0), "doc_id", "text", dir, analyzed = true)
     Search.compactSearchIndex(spark, dir)
-    val probe = Search.analyzedPhraseFromIndex(spark, dir, Seq("Hash", "JOIN.", "[big]"))
+    val probe = Search.phraseFromIndex(spark, dir, Seq("Hash", "JOIN.", "[big]"), Folded)
     assert(m(probe) == corpus, "index-served analyzed phrase must equal the corpus analyzed window route")
     // repeated-term analyzed phrase: bigram "join join" nowhere; "hash join" everywhere adjacency holds
     assert(
-      m(Search.analyzedPhraseFromIndex(spark, dir, Seq("HASH", "Join"))) ==
-        m(Search.analyzedPhraseSearch(docs, "doc_id", "text", Seq("hash", "join")))
+      m(Search.phraseFromIndex(spark, dir, Seq("HASH", "Join"), Folded)) ==
+        m(Search.phraseSearch(docs, "doc_id", "text", Seq("hash", "join"), Folded))
     )
     val plan = probe.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [") && plan.contains("tbucket"), plan.take(2000))
     assert(plan.contains("apositions"), "the analyzed phrase probe must serve from apositions")
     // a phrase term that analyzes to empty is ill-formed, not silently shorter
     intercept[IllegalArgumentException] {
-      Search.analyzedPhraseSearch(docs, "doc_id", "text", Seq("hash", "!!!"))
+      Search.phraseSearch(docs, "doc_id", "text", Seq("hash", "!!!"), Folded)
     }
     intercept[IllegalArgumentException] {
-      Search.analyzedPhraseFromIndex(spark, dir, Seq("hash", "!!!"))
+      Search.phraseFromIndex(spark, dir, Seq("hash", "!!!"), Folded)
     }
   }
 
@@ -1252,7 +1264,7 @@ class SearchSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("doc_id", "pos").collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("pos"), r.getAs[String]("snippet"))).toSeq
-    val got = rows(Search.analyzedKwicSnippets(docs, "doc_id", "text", "CAT!", 1))
+    val got = rows(Search.kwicSnippets(docs, "doc_id", "text", "CAT!", 1, Folded))
     assert(
       got == Seq(
         (1L, 3L, "b CAT c"),
@@ -1266,7 +1278,7 @@ class SearchSpec extends SparkSpec {
     val raw = rows(Search.kwicSnippets(docs, "doc_id", "text", "cat", 1))
     assert(raw == Seq((3L, 1L, "cat z"), (5L, 2L, "!!! cat")), raw.toString)
     intercept[IllegalArgumentException] {
-      Search.analyzedKwicSnippets(docs, "doc_id", "text", "!!!", 1)
+      Search.kwicSnippets(docs, "doc_id", "text", "!!!", 1, Folded)
     }
   }
 
@@ -1385,8 +1397,8 @@ class SearchSpec extends SparkSpec {
     Search.saveSearchIndex(docs.filter(col("doc_id") =!= 2L), "doc_id", "text", refDir, analyzed = true)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
     assert(
-      rows(Search.analyzedBm25FromIndex(spark, dir, Seq("CAT", "DOG"), 10)) ==
-        rows(Search.analyzedBm25FromIndex(spark, refDir, Seq("CAT", "DOG"), 10)),
+      rows(Search.bm25FromIndex(spark, dir, Seq("CAT", "DOG"), 10, Folded)) ==
+        rows(Search.bm25FromIndex(spark, refDir, Seq("CAT", "DOG"), 10, Folded)),
       "analyzed BM25 through tombstones must equal a live-corpus rebuild (ameta exact)"
     )
   }
@@ -1498,19 +1510,19 @@ class SearchSpec extends SparkSpec {
     ).toDF("doc_id", "text", "lang")
     Search.saveSearchIndex(docs, "doc_id", "text", idxDir, analyzed = true)
     Search.saveDocStore(docs, "doc_id", "text", storeDir, metaCols = Seq("lang"))
-    val an = Search.analyzedFacetCounts(spark, idxDir, storeDir, Seq("CAT", "dog"), "lang")
+    val an = Search.facetCounts(spark, idxDir, storeDir, Seq("CAT", "dog"), "lang", Folded)
       .collect().map(r => r.getAs[String]("lang") -> r.getAs[Long]("n_hits")).toMap
     assert(an == Map("en" -> 1L, "de" -> 1L, "fr" -> 1L), an.toString)
     val raw = Search.facetCounts(spark, idxDir, storeDir, Seq("cat", "dog"), "lang")
       .collect().map(r => r.getAs[String]("lang") -> r.getAs[Long]("n_hits")).toMap
     assert(raw == Map("de" -> 1L), s"raw route must miss the damaged docs: $raw")
     // analyzed pages partition the analyzed ranking exactly
-    val all = Search.analyzedBm25FromIndex(spark, idxDir, Seq("CAT"), 4)
+    val all = Search.bm25FromIndex(spark, idxDir, Seq("CAT"), 4, Folded)
       .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("score_milli"))).toSeq
-    val p1 = Search.analyzedBm25FromIndex(spark, idxDir, Seq("CAT"), 2)
+    val p1 = Search.bm25FromIndex(spark, idxDir, Seq("CAT"), 2, Folded)
     val last = p1.orderBy(col("rank").desc).limit(1).head()
-    val p2 = Search.analyzedBm25PageAfter(
-      spark, idxDir, Seq("CAT"), 2, last.getAs[Long]("score_milli"), last.getAs[Long]("doc_id"))
+    val p2 = Search.bm25PageAfter(
+      spark, idxDir, Seq("CAT"), 2, last.getAs[Long]("score_milli"), last.getAs[Long]("doc_id"), Folded)
     val walked = (p1.orderBy("rank").collect() ++ p2.orderBy("rank").collect())
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("score_milli"))).toSeq
     assert(walked == all, s"$walked vs $all")
@@ -1526,9 +1538,9 @@ class SearchSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     Search.saveSearchIndex(docs, "doc_id", "text", idxDir, analyzed = true)
     Search.saveDocStore(docs, "doc_id", "text", storeDir)
-    val hits = Search.analyzedFromIndex(spark, idxDir, Seq("Cat"), 5, requireAll = true)
+    val hits = Search.conjunctiveFromIndex(spark, idxDir, Seq("Cat"), 5, Folded)
       .select(col("rank"), col("doc_id"))
-    val page = Search.analyzedKwicPage(spark, storeDir, hits, "Cat", 1)
+    val page = Search.kwicPage(spark, idxDir, storeDir, hits, "Cat", 1, Folded)
     val got = page.collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("pos"), r.getAs[String]("snippet")))
       .toSet
@@ -1596,13 +1608,12 @@ class SearchSpec extends SparkSpec {
     val d = "/root/testdata/sf0.001"
     val dir = Search.demoAnalyzedIndexDir(spark, d)
     val served = Search
-      .analyzedBatchFromIndex(
+      .batchedSearchFromIndex(
         spark,
         dir,
         Search.fixtureAnalyzedBatch.toDF("query_id", "term"),
         5,
-        Some(Search.fixtureAnalyzedModes.toDF("query_id", "mode"))
-      )
+        Some(Search.fixtureAnalyzedModes.toDF("query_id", "mode")), Folded)
       .orderBy("query_id", "rank")
       .collect()
       .map(r =>
@@ -1612,8 +1623,9 @@ class SearchSpec extends SparkSpec {
       .view
       .mapValues(_.map(t => (t._2, t._3, t._4)).toSeq)
       .toMap
-    def single(terms: Seq[String], requireAll: Boolean) = Search
-      .analyzedFromIndex(spark, dir, terms, 5, requireAll)
+    def single(terms: Seq[String], requireAll: Boolean) =
+      (if (requireAll) Search.conjunctiveFromIndex(spark, dir, terms, 5, Folded)
+       else Search.disjunctiveFromIndex(spark, dir, terms, 5, Folded))
       .orderBy("rank")
       .collect()
       .map(r => (r.getAs[Long]("rank"), r.getAs[Long]("doc_id"), r.getAs[Long]("score_micro")))
@@ -2140,6 +2152,20 @@ class SearchSpec extends SparkSpec {
     Search.saveSearchIndex(docs, "doc_id", "text", dir)
     val r = Search.hitCounts(spark, dir, Seq("dup", "spark", "dup")).head()
     assert(r.getAs[Long]("n_and") == 1L && r.getAs[Long]("n_or") == 2L)
+    // the term routes apply the same rule: a repeated term neither
+    // double-counts n_matched/score nor makes the AND gate unreachable
+    val routes: Seq[(String, Seq[String] => org.apache.spark.sql.DataFrame)] = Seq(
+      "conjunctiveSearch" -> (t => Search.conjunctiveSearch(docs, "doc_id", "text", t, 10)),
+      "disjunctiveSearch" -> (t => Search.disjunctiveSearch(docs, "doc_id", "text", t, 10)),
+      "conjunctiveFromIndex" -> (t => Search.conjunctiveFromIndex(spark, dir, t, 10)),
+      "disjunctiveFromIndex" -> (t => Search.disjunctiveFromIndex(spark, dir, t, 10))
+    )
+    routes.foreach { case (name, route) =>
+      def page(t: Seq[String]) = route(t).collect().map(_.toSeq).toSeq
+      val once = page(Seq("dup"))
+      assert(once.size == 2, s"$name: $once")
+      assert(page(Seq("dup", "dup")) == once, s"$name: a repeated term must answer like the single term")
+    }
   }
 
   test("chunk cid composition fails loudly when chunk_no would alias past chunkIdBase") {
@@ -2203,11 +2229,11 @@ class SearchSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("graft_aslop").toString + "/idx"
     Search.saveSearchIndex(docs, "doc_id", "text", dir, analyzed = true)
-    val got = Search.analyzedOrderedSlopFromIndex(spark, dir, "Hash", "JOIN", 3)
+    val got = Search.orderedSlopFromIndex(spark, dir, "Hash", "JOIN", 3, Folded)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_pairs")).toMap
     assert(got == Map(1L -> 1L, 3L -> 1L), got.toString)
     intercept[IllegalArgumentException] {
-      Search.analyzedOrderedSlopFromIndex(spark, dir, "!!!", "join", 3)
+      Search.orderedSlopFromIndex(spark, dir, "!!!", "join", 3, Folded)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.ops.Search.Analyzer.Folded
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -651,9 +652,9 @@ class StreamingIngestSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val batch = graft.ops.Search
-      .analyzedBm25Search(docs.toDF("doc_id", "text"), "doc_id", "text", Seq("Cat", "DOG!"), 10)
+      .bm25Search(docs.toDF("doc_id", "text"), "doc_id", "text", Seq("Cat", "DOG!"), 10, Folded)
     assert(
-      rows(graft.ops.Search.analyzedBm25FromIndex(spark, idx, Seq("Cat", "DOG!"), 10)) == rows(batch),
+      rows(graft.ops.Search.bm25FromIndex(spark, idx, Seq("Cat", "DOG!"), 10, Folded)) == rows(batch),
       "stream-maintained analyzed index must answer analyzed BM25 like the one-shot corpus pass"
     )
     // the apositions relation is stream-maintained too: the analyzed
@@ -661,8 +662,8 @@ class StreamingIngestSpec extends SparkSpec {
     def m(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(
-      m(graft.ops.Search.analyzedPhraseFromIndex(spark, idx, Seq("Cat", "DOG!"))) ==
-        m(graft.ops.Search.analyzedPhraseSearch(docs.toDF("doc_id", "text"), "doc_id", "text", Seq("Cat", "DOG!"))),
+      m(graft.ops.Search.phraseFromIndex(spark, idx, Seq("Cat", "DOG!"), Folded)) ==
+        m(graft.ops.Search.phraseSearch(docs.toDF("doc_id", "text"), "doc_id", "text", Seq("Cat", "DOG!"), Folded)),
       "stream-maintained apositions must answer analyzed phrase like the one-shot corpus pass"
     )
   }
