@@ -246,47 +246,19 @@ object LiveJdbc {
             case _ =>
               Outcome(p.ord, p.sql, "skipped")
           }
-        } catch { case e: Exception => Outcome(p.ord, p.sql, s"ERROR: ${e.getMessage}") }
+        } catch { case e: Exception => Outcome(p.ord, p.sql, ActionRunner.errorStatus(e)) }
 
-      runStaged(plan(columns, keys, constraintState), runOne)
+      // stage barrier per ordinal (loads before key import before
+      // validation); within a stage the per-table loads and validates
+      // run concurrently — each uses its own JDBC connections via the
+      // Spark writer/reader, only DDL shares the live connection and
+      // stays serial. Against a real MPP target this is the per-table
+      // parallelism the reference's import loop has; against embedded
+      // Derby it overlaps Spark job scheduling with target I/O.
+      Par.staged(plan(columns, keys, constraintState))(_.ord, runsConcurrently)(runOne)
     } finally conn.close()
   }
 
-  /** Stage barrier per ordinal (loads before key import before
-    * validation), but WITHIN a stage the per-table loads and
-    * validates are independent — run them concurrently (each uses
-    * its own JDBC connections via the Spark writer/reader; only
-    * DDL shares the live connection and stays serial). Against a
-    * real MPP target this is the per-table parallelism the
-    * reference's import loop has; against embedded Derby it overlaps
-    * Spark job scheduling with target I/O.
-    *
-    * Results are keyed by POSITION within the stage, not by Planned
-    * equality: two identical planned rows (hypothetical under
-    * today's planner, where constraint names are unique) must each
-    * run and report their own outcome, not collapse into one map
-    * key. Package-private so the duplicate-row case is unit-testable
-    * without a live target.
-    */
-  private[core] def runStaged(planned: Seq[Planned], runOne: Planned => Outcome): Seq[Outcome] =
-    planned
-      .groupBy(_.ord)
-      .toSeq
-      .sortBy(_._1)
-      .flatMap { case (_, group) =>
-        val indexed = group.zipWithIndex
-        val concurrent = indexed.filter { case (p, _) => p.kind == "load" || p.kind == "validate" }
-        if (concurrent.size > 1) {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(4, concurrent.size))
-          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-          try {
-            val done = Await
-              .result(Future.sequence(concurrent.map { case (p, i) => Future(i -> runOne(p)) }), Duration.Inf)
-              .toMap
-            indexed.map { case (p, i) => done.getOrElse(i, runOne(p)) }
-          } finally pool.shutdown()
-        } else group.map(runOne)
-      }
+  /** The planned kinds [[execute]] runs concurrently within a stage. */
+  private[core] def runsConcurrently(p: Planned): Boolean = p.kind == "load" || p.kind == "validate"
 }

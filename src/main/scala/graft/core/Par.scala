@@ -13,27 +13,76 @@ package graft.core
   * job's tasks — the wall cost per batch approaches max(job) instead
   * of sum(job). Plain FIFO scheduling is exactly the back-fill
   * behaviour wanted; threads are created per call so Spark's
-  * inheritable thread-locals (job group, scheduler pool) carry over.
+  * inheritable thread-locals (job group, scheduler pool, local
+  * properties) carry over.
   *
   * All thunks are awaited before the first failure is rethrown — a
   * failed sibling never leaves another thunk racing the caller's
-  * cleanup.
+  * cleanup — and the pool's threads have exited when a call returns.
   */
 object Par {
-  def run(thunks: (() => Unit)*): Unit = {
-    if (thunks.size <= 1) { thunks.foreach(t => t()); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
+
+  /** Name prefix of the worker threads, so a leak is observable. */
+  val ThreadPrefix = "graft-par-"
+
+  def run(thunks: (() => Unit)*): Unit = { all(thunks, thunks.size); () }
+
+  /** Run `thunks` on a per-call pool of at most `threads` threads and
+    * return their results in input order.
+    */
+  def all[B](thunks: Seq[() => B], threads: Int): Seq[B] = {
+    if (thunks.size <= 1 || threads <= 1) return thunks.map(_())
+    val workers = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(threads, thunks.size),
+      { (r: Runnable) =>
+        val t = new Thread(r, s"$ThreadPrefix${workers.size + 1}")
+        workers.add(t)
+        t
+      }
+    )
     try {
       val futs = thunks.map { t =>
-        pool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = t() })
+        pool.submit(new java.util.concurrent.Callable[B] { def call(): B = t() })
       }
-      val results = futs.map(f => scala.util.Try(f.get()))
-      results.foreach {
+      futs.map(f => scala.util.Try(f.get())).map {
         case scala.util.Failure(e: java.util.concurrent.ExecutionException) =>
           throw Option(e.getCause).getOrElse(e)
-        case scala.util.Failure(e) => throw e
-        case _                     => ()
+        case r => r.get
       }
-    } finally pool.shutdown()
+    } finally {
+      // every task has finished unless the caller was interrupted:
+      // then interrupt the stragglers too. Joining the workers (not
+      // just awaiting pool termination, which precedes their exit)
+      // means none is alive when the call returns.
+      pool.shutdownNow()
+      workers.forEach(_.join(60000))
+    }
   }
+
+  /** Stage barrier per ordinal, concurrency within a stage: `items`
+    * run in ascending `ord` (stable, so plan order is kept inside an
+    * ordinal); within one ordinal the items with `concurrent(item)`
+    * run together on a per-call pool of `min(4, n)` threads, then the
+    * rest run one after another on the calling thread. Outcomes come
+    * back in that plan order, keyed by position — two equal items
+    * each run and report their own outcome.
+    *
+    * This is the reference's per-table independence (each table is
+    * imported and checked on its own) applied to the Spark-bound
+    * actions of one section: loads of different tables write
+    * different targets and validations only read.
+    */
+  def staged[A, B](items: Seq[A])(ord: A => Int, concurrent: A => Boolean)(runOne: A => B): Seq[B] =
+    items.zipWithIndex
+      .groupBy { case (a, _) => ord(a) }
+      .toSeq
+      .sortBy(_._1)
+      .flatMap { case (_, group) =>
+        val (par, serial) = group.partition { case (a, _) => concurrent(a) }
+        val done = par.map(_._2).zip(all(par.map { case (a, _) => () => runOne(a) }, 4)) ++
+          serial.map { case (a, i) => i -> runOne(a) }
+        val byPos = done.toMap
+        group.map { case (_, i) => byPos(i) }
+      }
 }

@@ -1,7 +1,6 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.core.options.MigrationOptions
 
 /** Action runner: executes a MigrationPlan against a parquet-lake
@@ -19,6 +18,12 @@ object ActionRunner {
     * the target lake; Validate = wide-metric comparison source vs
     * loaded target (zero deviations = success). DDL/constraint actions
     * are metadata-only in a parquet lake and recorded as applied.
+    *
+    * Sections run in ordinal order; inside a section the loads (each
+    * table writes its own directory) and the validations (read-only)
+    * run concurrently through [[Par.staged]]. Outcomes come back in
+    * plan order, and a failing table reports `ERROR` on its own rows
+    * only.
     */
   def run(
       spark: SparkSession,
@@ -29,7 +34,11 @@ object ActionRunner {
   ): Seq[Outcome] = {
     val ordered = plan.actions.sortBy(a => (a.ord, a.sqlText))
     if (dryRun) return ordered.map(a => Outcome(a.ord, a.sqlText, "previewed"))
-    ordered.map { a =>
+    val sparkBound: MigrationAction => Boolean = {
+      case _: MigrationAction.Load | _: MigrationAction.Validate => true
+      case _ => false
+    }
+    Par.staged(ordered)(_.ord, sparkBound) { a =>
       val status =
         try {
           a match {
@@ -43,36 +52,35 @@ object ActionRunner {
               if (dev == 0) "validated" else s"DEVIATIONS: $dev"
             case _ => "applied"
           }
-        } catch { case e: Exception => s"ERROR: ${e.getMessage}" }
+        } catch { case e: Exception => errorStatus(e) }
       Outcome(a.ord, a.sqlText, status)
     }
   }
 
-  /** Differential validation: the wide metric row of both sides,
-    * type-gated by dtype, compared null-safely; returns the deviation
-    * count (reference CHECK_MIGRATION, §2.E).
+  /** The outcome status of a failed action: the exception's message,
+    * or its class when it carries none.
+    */
+  private[core] def errorStatus(e: Throwable): String =
+    s"ERROR: ${Option(e.getMessage).getOrElse(e.getClass.getName)}"
+
+  /** Differential validation (reference CHECK_MIGRATION, §2.E): the
+    * type-gated wide metric rows of both sides (the
+    * [[graft.ops.CheckMigration.metricSpec]] of the source schema),
+    * computed in ONE query and collected as one row, then compared
+    * metric by metric, null-safely, on the driver. Returns the number
+    * of deviating metrics — the `DEVIATION` rows of
+    * [[graft.ops.CheckMigration.deviationReport]] over the same two
+    * aggregates, without its melt, join and sort jobs.
     */
   def validate(source: DataFrame, target: DataFrame): Long = {
     import graft.ops.CheckMigration
-    val numeric = source.schema.fields.collect {
-      case f if f.dataType.typeName == "double" => (f.name, 2)
-      case f if f.dataType.typeName.startsWith("decimal") => (f.name, 2)
-      case f if Set("long", "integer", "short").contains(f.dataType.typeName) => (f.name, 0)
-    }.toSeq
-    val strings = source.schema.fields.collect { case f if f.dataType.typeName == "string" => f.name }.toSeq
-    val ts = source.schema.fields.collect {
-      case f if f.dataType.typeName.startsWith("timestamp") => f.name
-    }.toSeq
-    val metricCols = Seq("row_cnt") ++
-      numeric.flatMap { case (c, _) => Seq(s"${c}_nulls", s"${c}_min", s"${c}_max", s"${c}_sum") } ++
-      strings.flatMap(c => Seq(s"${c}_nulls", s"${c}_distinct", s"${c}_minlen", s"${c}_maxlen")) ++
-      ts.flatMap(c => Seq(s"${c}_min", s"${c}_max"))
-    val a = CheckMigration.wideMetricsAgg(source, numeric, strings, ts)
-    val b = CheckMigration.wideMetricsAgg(target, numeric, strings, ts)
-    CheckMigration
-      .deviationReport(a, b, metricCols)
-      .filter(col("status") === "DEVIATION")
-      .count()
+    val spec = CheckMigration.metricSpec(source.schema)
+    val a = CheckMigration.wideMetricsAgg(source, spec)
+    val b = CheckMigration.wideMetricsAgg(target, spec)
+    val n = a.columns.length
+    // positional names: the two sides share every metric name
+    val both = a.toDF((0 until n).map(i => s"a$i"): _*).crossJoin(b.toDF((0 until n).map(i => s"b$i"): _*)).head()
+    (0 until n).count(i => both.get(i) != both.get(n + i)).toLong
   }
 }
 

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types._
 
 /** CHECK_MIGRATION — the reference's validation subsystem and its
   * closest thing to a query engine (SURVEY.md §2.E;
@@ -25,6 +25,50 @@ object CheckMigration {
 
   private def dec(c: Column, scale: Int): Column = c.cast(DecimalType(36, scale))
 
+  /** The type-gated metric set of one table: which columns get which
+    * metrics in [[wideMetricsAgg]].
+    */
+  final case class MetricSpec(
+      numeric: Seq[(String, Int)],
+      strings: Seq[String],
+      timestamps: Seq[String],
+      dates: Seq[String] = Nil,
+      booleans: Seq[String] = Nil,
+      others: Seq[String] = Nil,
+      approxDistinct: Boolean = false
+  )
+
+  /** The metric set the reference's compiler gates by column type:
+    * integral (byte … long, scale 0) and fractional (float, double,
+    * decimal, scale 2) columns → NULLS/MIN/MAX/SUM; strings →
+    * NULLS/DISTINCT/MINLEN/MAXLEN; timestamps and dates → MIN/MAX as
+    * text; every other type → NULLS (+ TRUE for booleans), so no
+    * column is left unchecked.
+    */
+  def metricSpec(schema: StructType): MetricSpec = {
+    val fields = schema.fields.toSeq
+    def named(p: DataType => Boolean): Seq[String] = fields.collect { case f if p(f.dataType) => f.name }
+    val numeric = fields.flatMap { f =>
+      f.dataType match {
+        case FloatType | DoubleType | _: DecimalType => Some(f.name -> 2)
+        case ByteType | ShortType | IntegerType | LongType => Some(f.name -> 0)
+        case _ => None
+      }
+    }
+    val strings = named(_.isInstanceOf[StringType])
+    val timestamps = named(t => t == TimestampType || t == TimestampNTZType)
+    val dates = named(_ == DateType)
+    val booleans = named(_ == BooleanType)
+    val gated = (numeric.map(_._1) ++ strings ++ timestamps ++ dates ++ booleans).toSet
+    MetricSpec(numeric, strings, timestamps, dates, booleans, fields.map(_.name).filterNot(gated))
+  }
+
+  /** A column name as a quoted identifier, so it is never parsed:
+    * `x.y` is a column, not field y of struct x.
+    */
+  private def quoted(c: String): String = s"`${c.replace("`", "``")}`"
+  private def ref(c: String): Column = col(quoted(c))
+
   /** One wide, single-scan metrics row, mirroring the reference's
     * type-gated metric compiler (numeric → MIN/MAX/SUM in
     * DECIMAL(36,s); varchar → DISTINCT/MINLEN/MAXLEN; timestamp →
@@ -37,7 +81,11 @@ object CheckMigration {
       stringCols: Seq[String],
       timestampCols: Seq[String],
       approxDistinct: Boolean = false
-  ): DataFrame = {
+  ): DataFrame =
+    wideMetricsAgg(df, MetricSpec(numericCols, stringCols, timestampCols, approxDistinct = approxDistinct))
+
+  def wideMetricsAgg(df: DataFrame, spec: MetricSpec): DataFrame = {
+    def nulls(c: String): Column = sum(when(ref(c).isNull, 1).otherwise(0)).cast("bigint").as(s"${c}_nulls")
     // DISTINCT is the one metric whose exact form does not scale the
     // way the rest of the single-scan agg does: exact countDistinct
     // expands into a per-column shuffle of the distinct values, so a
@@ -47,32 +95,33 @@ object CheckMigration {
     // scale mode; both systems must then use the same sketch for the
     // deviation compare, which is why it is a flag, not the default.
     def distinctOf(c: String): Column =
-      if (approxDistinct) approx_count_distinct(col(c)).as(s"${c}_distinct")
-      else countDistinct(col(c)).as(s"${c}_distinct")
+      if (spec.approxDistinct) approx_count_distinct(ref(c)).as(s"${c}_distinct")
+      else countDistinct(ref(c)).as(s"${c}_distinct")
+    def minMaxText(cols: Seq[String], fmt: String): Seq[Column] = cols.flatMap { c =>
+      Seq(date_format(min(ref(c)), fmt).as(s"${c}_min"), date_format(max(ref(c)), fmt).as(s"${c}_max"))
+    }
     val metrics: Seq[Column] =
       Seq(count(lit(1)).as("row_cnt")) ++
-        numericCols.flatMap { case (c, s) =>
+        spec.numeric.flatMap { case (c, s) =>
           Seq(
-            sum(when(col(c).isNull, 1).otherwise(0)).cast("bigint").as(s"${c}_nulls"),
-            decStr(min(dec(col(c), s))).as(s"${c}_min"),
-            decStr(max(dec(col(c), s))).as(s"${c}_max"),
-            decStr(sum(dec(col(c), s)).cast(DecimalType(38, s))).as(s"${c}_sum")
+            nulls(c),
+            decStr(min(dec(ref(c), s))).as(s"${c}_min"),
+            decStr(max(dec(ref(c), s))).as(s"${c}_max"),
+            decStr(sum(dec(ref(c), s)).cast(DecimalType(38, s))).as(s"${c}_sum")
           )
         } ++
-        stringCols.flatMap { c =>
+        spec.strings.flatMap { c =>
           Seq(
-            sum(when(col(c).isNull, 1).otherwise(0)).cast("bigint").as(s"${c}_nulls"),
+            nulls(c),
             distinctOf(c),
-            min(length(col(c))).cast("bigint").as(s"${c}_minlen"),
-            max(length(col(c))).cast("bigint").as(s"${c}_maxlen")
+            min(length(ref(c))).cast("bigint").as(s"${c}_minlen"),
+            max(length(ref(c))).cast("bigint").as(s"${c}_maxlen")
           )
         } ++
-        timestampCols.flatMap { c =>
-          Seq(
-            date_format(min(col(c)), "yyyy-MM-dd HH:mm:ss").as(s"${c}_min"),
-            date_format(max(col(c)), "yyyy-MM-dd HH:mm:ss").as(s"${c}_max")
-          )
-        }
+        minMaxText(spec.timestamps, "yyyy-MM-dd HH:mm:ss") ++
+        minMaxText(spec.dates, "yyyy-MM-dd") ++
+        spec.booleans.flatMap(c => Seq(nulls(c), count(when(ref(c), 1)).as(s"${c}_true"))) ++
+        spec.others.map(nulls)
     df.agg(metrics.head, metrics.tail: _*)
   }
 
@@ -91,8 +140,12 @@ object CheckMigration {
     */
   def deviationReport(wideA: DataFrame, wideB: DataFrame, metricCols: Seq[String]): DataFrame = {
     def melt(df: DataFrame, valName: String): DataFrame = {
+      // names are SQL text here: escape the label, quote the column
       val pairs = metricCols
-        .map(m => s"'$m', cast($m as string)")
+        .map { m =>
+          val label = m.replace("\\", "\\\\").replace("'", "\\'")
+          s"'$label', cast(${quoted(m)} as string)"
+        }
         .mkString(", ")
       df.selectExpr(s"stack(${metricCols.size}, $pairs) as (metric, $valName)")
     }

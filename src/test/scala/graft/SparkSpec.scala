@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{Exceptional, Outcome}
+import org.scalatest.exceptions.TimeoutField
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimitedTests}
 import org.scalatest.time.{Minutes, Span}
@@ -28,4 +30,17 @@ abstract class SparkSpec extends AnyFunSuite with TimeLimitedTests {
     */
   override val timeLimit: Span = Span(10, Minutes)
   override val defaultTestSignaler: Signaler = ThreadSignaler
+
+  /** A test cut by the hang guard may leave its Spark jobs running (the
+    * interrupted thread is not the one running the tasks): cancel them
+    * so they do not spill into the next test or suite.
+    */
+  override def withFixture(test: NoArgTest): Outcome = {
+    val outcome = super.withFixture(test)
+    outcome match {
+      case Exceptional(_: TimeoutField) => SparkSession.getDefaultSession.foreach(_.sparkContext.cancelAllJobs())
+      case _ => ()
+    }
+    outcome
+  }
 }

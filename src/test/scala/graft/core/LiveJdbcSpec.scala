@@ -120,10 +120,9 @@ class LiveJdbcSpec extends SparkSpec {
     val dup = LiveJdbc.Planned(40, "s", "t", "LOAD S.T VIA PARALLEL JDBC WRITER", "load")
     val planned = Seq(dup, dup, LiveJdbc.Planned(40, "s", "u", "LOAD S.U VIA PARALLEL JDBC WRITER", "load"))
     val calls = new java.util.concurrent.atomic.AtomicInteger(0)
-    val out = LiveJdbc.runStaged(
-      planned,
-      p => LiveJdbc.Outcome(p.ord, p.sql, s"loaded#${calls.incrementAndGet()}")
-    )
+    val out = Par.staged(planned)(_.ord, LiveJdbc.runsConcurrently) { p =>
+      LiveJdbc.Outcome(p.ord, p.sql, s"loaded#${calls.incrementAndGet()}")
+    }
     // each planned row ran exactly once and reported its own outcome
     assert(calls.get() == 3)
     assert(out.size == 3)
