@@ -167,11 +167,13 @@ object Dedup {
     * predicate is bit-identical across engines and runs by
     * construction (r16 ADVICE: the rounded-double form left the only
     * float comparison in the dedup ensembles). Value-equal to the
-    * previous `round(jaccard, 6) >= t` filter for every n_union < 10⁶:
-    * that form additionally admits exact ratios in [t − 5·10⁻⁷, t),
-    * and no rational with denominator under 10⁶ lies in that window —
-    * audited empirically too (no fixture pair within 1% of the 0.5
-    * boundary at sf0.001/sf0.01). The `jaccard` OUTPUT column stays
+    * previous `round(jaccard, 6) >= t` filter while
+    * den(t)·n_union < 2·10⁶ (den(t) = t's reduced denominator; every
+    * n_union < 10⁶ at t = 0.5): that form additionally admits exact
+    * ratios in [t − 5·10⁻⁷, t), and a ratio with denominator n_union
+    * lies at least 1/(den(t)·n_union) from t — audited empirically
+    * too (no fixture pair within 1% of the 0.5 boundary at
+    * sf0.001/sf0.01). SCALE.md notes the n_union ≥ 10⁶ case. The `jaccard` OUTPUT column stays
     * round(·, 6) everywhere — only the comparison leaves floats.
     */
   def jaccardAtLeast(minJaccard: Double): Column = {

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming operators (SURVEY.md §3.2's Spark-native
@@ -17,6 +17,14 @@ import org.apache.spark.sql.types.StructType
   * checkpoint — per-file error quarantine and modified-file reload
   * stay in graft.sync.FileStateSync (Spark's file source cannot
   * express them natively; SURVEY.md §7.4.4).
+  *
+  * Every oracle-gated replay below runs on one combinator:
+  * [[withScratch]] owns its temp tree, [[fileReplay]] reads a parquet
+  * dir as one micro-batch per file, and [[drain]] runs the query to
+  * the end of its input — the one place a replay waits. The five
+  * index-maintenance builders share one exactly-once batch body
+  * ([[exactlyOnce]]), and the full-rewrite state replays share one
+  * crash-safe swap ([[rewriteState]]).
   */
 object StreamingIngest {
 
@@ -84,25 +92,6 @@ object StreamingIngest {
       .withWatermark(tsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark("content_hash")
 
-  /** Oracle-gated replay of [[dedupStream]]'s bounded-state exact
-    * dedup: the events table arrives as 4 micro-batch files and is
-    * deduplicated on (user_id, event_type) with
-    * dropDuplicatesWithinWatermark. The horizon (400 days) exceeds the
-    * fixture's whole time span, so no state is evicted mid-replay and
-    * the emitted key set must equal batch `SELECT DISTINCT` — the
-    * equality this gate pins. Eviction behavior (duplicates BEYOND the
-    * horizon re-emitting, state dropping) is the MemoryStream spec's
-    * subject: it needs controlled watermark advancement, which a file
-    * replay cannot express deterministically.
-    *
-    * Emission shape: unlike a windowed aggregate, the dedup operator
-    * emits a key's FIRST arrival in the batch that carries it (state
-    * only suppresses later copies), so no flush sentinel is needed —
-    * AvailableNow drains the backlog and the output is complete. Only
-    * the key columns are emitted: which physical row of an
-    * intra-batch duplicate group survives is partitioning-dependent,
-    * and a gate must not depend on it.
-    */
   /** A SESSION CLONE whose shuffle partitioning is derived from the
     * replay source's byte size instead of the session-wide default —
     * guide §2's scale-adaptive partitioning, applied to STATEFUL
@@ -137,9 +126,170 @@ object StreamingIngest {
     s2
   }
 
-  def dedupStreamExactReplay(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_exact_dedup_stream")
-    try {
+  /** Run `body` in a fresh scratch tree (`<java.io.tmpdir>/<prefix>…`)
+    * and delete the tree when `body` returns or throws. The replays
+    * MATERIALIZE their result (eager localCheckpoint) inside `body`,
+    * so the returned DataFrame never reads the deleted files — and a
+    * bench rep leaves /tmp exactly as it found it.
+    */
+  private[streaming] def withScratch[A](s: SparkSession, prefix: String)(body: java.nio.file.Path => A): A = {
+    val base = java.nio.file.Files.createTempDirectory(prefix)
+    try body(base)
+    finally {
+      val p = new org.apache.hadoop.fs.Path(base.toString)
+      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+    }
+  }
+
+  /** `src`'s parquet files as a stream of ONE FILE PER MICRO-BATCH: a
+    * replay source written as N files runs as N real micro-batches.
+    */
+  private[streaming] def fileReplay(s: SparkSession, src: String): DataFrame =
+    s.readStream
+      .schema(s.read.parquet(src).schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(src)
+
+  /** Spread a micro-batch across the cluster before its per-batch
+    * work (guide §2.5/§1.2): a file-source batch arrives with the
+    * source FILE's split count — one task for these replays
+    * (maxFilesPerTrigger = 1 over small files) — so every map-side
+    * stage downstream (shingling, hyperplane dots, tokenizing, model
+    * scoring, cosine verification) runs single-task however many cores
+    * exist; worse, a broadcast join keeps that parallelism all the way
+    * to the sink (JobProfile showed the embedding replay's per-batch
+    * verify as one 5 s task while 31 cores idled). One deterministic
+    * hash repartition to the context's default parallelism makes the
+    * per-batch compute cluster-wide; at 100 TB a real increment
+    * arrives as many splits and the same call is a cheap balancing
+    * pass of increment-sized data (never corpus-sized).
+    */
+  private def spread(batch: DataFrame, idCol: String): DataFrame =
+    batch.repartition(
+      batch.sparkSession.sparkContext.defaultParallelism,
+      col(idCol)
+    )
+
+  /** A writer that runs `each(batch, batchId)` on every micro-batch. */
+  private[streaming] def batches(df: DataFrame)(each: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    df.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) => each(batch.toDF(), batchId) }
+
+  /** Start `w` on the checkpoint `ckpt` under `trigger`. */
+  private def start(w: DataStreamWriter[_], ckpt: String, trigger: Trigger): StreamingQuery =
+    w.option("checkpointLocation", ckpt).trigger(trigger).start()
+
+  /** The replays' trigger: process everything waiting, then stop. */
+  private val replayTrigger: Trigger = Trigger.AvailableNow()
+
+  /** Wait for `q` to end. An interrupted wait (a test's hang guard,
+    * `Par`'s `shutdownNow`) stops the query before the interrupt
+    * propagates: otherwise the query thread keeps running while the
+    * caller's scratch cleanup deletes its checkpoint and sink.
+    */
+  private[streaming] def drain(q: StreamingQuery): Unit =
+    try q.awaitTermination()
+    finally if (q.isActive) q.stop()
+
+  /** Start `w` on the checkpoint `ckpt` under the replay trigger and
+    * [[drain]] it.
+    */
+  private[streaming] def drain(w: DataStreamWriter[_], ckpt: String): Unit =
+    drain(start(w, ckpt, replayTrigger))
+
+  /** `df` as an Append-mode parquet sink at `out`. */
+  private def parquetSink(df: Dataset[_], out: String): DataStreamWriter[_] =
+    df.writeStream.format("parquet").option("path", out).outputMode(OutputMode.Append)
+
+  /** A writer that appends `f(batch)` to the parquet dir `out` for
+    * every micro-batch — the filters-as-streams shape: per-doc output
+    * is pure in (doc, persisted artifact), nothing stateful
+    * accumulates.
+    */
+  private def appendEach(df: DataFrame, out: String)(f: DataFrame => DataFrame): DataStreamWriter[Row] =
+    batches(df)((batch, _) => f(batch).write.mode(SaveMode.Append).parquet(out))
+
+  /** The `compactEvery` cadence: every K-th batch folds the per-batch
+    * file accretion back; 0 disables (callers own maintenance).
+    */
+  private def compactDue(compactEvery: Int, batchId: Long): Boolean =
+    compactEvery > 0 && (batchId + 1) % compactEvery == 0
+
+  /** The exactly-once batch body of the index-maintenance streams
+    * ([[searchIndexStream]], [[fieldedIndexStream]], [[ivfIndexStream]],
+    * [[searchIndexCdcStream]], [[docStoreStream]]) over the index dir
+    * `dir`. The checkpoint identity gate runs BEFORE the skip gate: a
+    * fresh checkpoint restarts batch ids at 0 and the applied-batch
+    * marker alone would silently drop batches — fail loudly instead.
+    * A batch past the marker is applied, the marker is written LAST,
+    * and `compact` runs on the `compactEvery` cadence.
+    */
+  private def exactlyOnce(dir: String, checkpoint: String, compactEvery: Int)(
+      apply: (DataFrame, Long) => Unit
+  )(compact: SparkSession => Unit): (DataFrame, Long) => Unit = { (batch, batchId) =>
+    val bs = batch.sparkSession
+    graft.ops.Search.ensureStreamIdentity(bs, dir, checkpoint)
+    if (batchId > graft.ops.Search.lastAppliedSearchBatch(bs, dir)) {
+      apply(batch, batchId)
+      graft.ops.Search.writeLastAppliedSearchBatch(bs, dir, batchId)
+      if (compactDue(compactEvery, batchId)) compact(bs)
+    }
+  }
+
+  /** Streaming state kept by FULL REWRITE, exactly-once and crash-safe:
+    * `next` maps the current state (None before the first batch) to
+    * the new one, which is materialized (the merge READS the dir the
+    * swap replaces), written through `shape` into a staged generation
+    * together with the batch id (`_graft_last_batch`), and swapped in
+    * by [[graft.core.Compaction.replaceWith]]. A write that dies
+    * leaves the live state as it was — an overwrite in place deletes
+    * it before its job runs. A replayed batch (same checkpoint after a
+    * crash, or a full re-run against a fresh checkpoint) is detected
+    * by the in-generation marker and skipped, never applied twice. The
+    * materialized merge is released after the swap.
+    */
+  private[streaming] def rewriteState(
+      s: SparkSession,
+      stateDir: String,
+      batchId: Long,
+      shape: DataFrame => DataFrame = identity
+  )(next: Option[DataFrame] => DataFrame): Unit = {
+    graft.core.Compaction.recover(s, stateDir)
+    val applied = graft.core.Compaction
+      .readTextFile(s, s"$stateDir/_graft_last_batch")
+      .map(_.trim.toLong)
+      .getOrElse(-1L)
+    if (batchId > applied) {
+      val p = new org.apache.hadoop.fs.Path(stateDir)
+      val cur = if (p.getFileSystem(s.sessionState.newHadoopConf()).exists(p)) Some(s.read.parquet(stateDir)) else None
+      val merged = next(cur).localCheckpoint(true)
+      try graft.core.Compaction.replaceWith(s, stateDir) { staged =>
+        shape(merged).write.mode(SaveMode.Overwrite).parquet(staged)
+        graft.core.Compaction.writeTextFile(s, s"$staged/_graft_last_batch", s"$batchId\n")
+      } finally graft.ops.GraphDedup.releaseCheckpoints(merged)
+    }
+  }
+
+  /** Oracle-gated replay of [[dedupStream]]'s bounded-state exact
+    * dedup: the events table arrives as 4 micro-batch files and is
+    * deduplicated on (user_id, event_type) with
+    * dropDuplicatesWithinWatermark. The horizon (400 days) exceeds the
+    * fixture's whole time span, so no state is evicted mid-replay and
+    * the emitted key set must equal batch `SELECT DISTINCT` — the
+    * equality this gate pins. Eviction behavior (duplicates BEYOND the
+    * horizon re-emitting, state dropping) is the MemoryStream spec's
+    * subject: it needs controlled watermark advancement, which a file
+    * replay cannot express deterministically.
+    *
+    * Emission shape: unlike a windowed aggregate, the dedup operator
+    * emits a key's FIRST arrival in the batch that carries it (state
+    * only suppresses later copies), so no flush sentinel is needed —
+    * AvailableNow drains the backlog and the output is complete. Only
+    * the key columns are emitted: which physical row of an
+    * intra-batch duplicate group survives is partitioning-dependent,
+    * and a gate must not depend on it.
+    */
+  def dedupStreamExactReplay(s: SparkSession, d: String): DataFrame =
+    withScratch(s, "graft_exact_dedup_stream") { base =>
       val src = base.resolve("src").toString
       val out = base.resolve("keys").toString
       val ckpt = base.resolve("ckpt").toString
@@ -150,25 +300,13 @@ object StreamingIngest {
         .write
         .parquet(src)
       // state-store partition count derived from the replay's size
-      val s2 = statefulReplaySession(s, src)
-      val q = s2.readStream
-        .schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+      val keys = fileReplay(statefulReplaySession(s, src), src)
         .withWatermark("ts", "400 days")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type"))
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet")
-        .option("path", out)
-        .outputMode(OutputMode.Append)
-        .start()
-      q.awaitTermination()
+      drain(parquetSink(keys, out), ckpt)
       s.read.parquet(out).orderBy("user_id", "event_type").localCheckpoint(true)
-    } finally rmScratch(s, base)
-  }
+    }
 
   /** Streaming NEAR-dup flags with DISK-backed unbounded-horizon state:
     * each micro-batch probes the persisted MinHash signature index
@@ -216,20 +354,20 @@ object StreamingIngest {
       trigger: Trigger = Trigger.ProcessingTime(0L),
       compactEvery: Int = 0
   ): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    start(
+      batches(docs) { (batch, batchId) =>
         val (flags, sigNew) = graft.ops.Dedup
-          .incrementalDedupCached(spread(batch.toDF(), idCol), idCol, textCol, indexDir, minMatches)
+          .incrementalDedupCached(spread(batch, idCol), idCol, textCol, indexDir, minMatches)
         try {
           flags.write.mode(SaveMode.Append).parquet(outDir)
           graft.ops.Dedup.appendSignaturesToIndex(sigNew, indexDir)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+          if (compactDue(compactEvery, batchId))
             graft.ops.Dedup.compactMinhashIndex(batch.sparkSession, indexDir)
         } finally sigNew.unpersist()
-      }
-      .start()
+      },
+      checkpoint,
+      trigger
+    )
 
   /** The streaming near-dup route as an ORACLE-GATED batch query
     * (`dedup_stream_replay`): seed the index with the even docs, write
@@ -250,52 +388,11 @@ object StreamingIngest {
     * index as an FS copy of a prebuilt one instead of re-signing the
     * history corpus every run.
     */
-  /** Delete a replay's scratch tree. The replays MATERIALIZE their
-    * result (eager localCheckpoint) before this runs in their
-    * `finally`, so the returned DataFrame never reads the deleted
-    * files — and a bench rep leaves /tmp exactly as it found it.
-    */
-  private def rmScratch(s: SparkSession, base: java.nio.file.Path): Unit = {
-    val p = new org.apache.hadoop.fs.Path(base.toString)
-    p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-  }
-
-  /** Spread a micro-batch across the cluster before its per-batch
-    * work (guide §2.5/§1.2): a file-source batch arrives with the
-    * source FILE's split count — one task for these replays
-    * (maxFilesPerTrigger = 1 over small files) — so every map-side
-    * stage downstream (shingling, hyperplane dots, tokenizing, model
-    * scoring, cosine verification) runs single-task however many cores
-    * exist; worse, a broadcast join keeps that parallelism all the way
-    * to the sink (JobProfile showed the embedding replay's per-batch
-    * verify as one 5 s task while 31 cores idled). One deterministic
-    * hash repartition to the context's default parallelism makes the
-    * per-batch compute cluster-wide; at 100 TB a real increment
-    * arrives as many splits and the same call is a cheap balancing
-    * pass of increment-sized data (never corpus-sized).
-    */
-  private def spread(batch: DataFrame, idCol: String): DataFrame =
-    batch.repartition(
-      batch.sparkSession.sparkContext.defaultParallelism,
-      col(idCol)
-    )
-
   def dedupStreamReplay(
       s: SparkSession,
       docs: DataFrame,
       seedIndexFrom: Option[String] = None
-  ): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_replay")
-    try dedupStreamReplayIn(s, docs, seedIndexFrom, base)
-    finally rmScratch(s, base)
-  }
-
-  private def dedupStreamReplayIn(
-      s: SparkSession,
-      docs: DataFrame,
-      seedIndexFrom: Option[String],
-      base: java.nio.file.Path
-  ): DataFrame = {
+  ): DataFrame = withScratch(s, "graft_stream_replay") { base =>
     val idx = base.resolve("index").toString
     val src = base.resolve("src").toString
     val out = base.resolve("flags").toString
@@ -312,20 +409,18 @@ object StreamingIngest {
       .repartition(4, col("doc_id"))
       .write
       .parquet(src)
-    val stream = s.readStream
-      .schema(s.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-    nearDupFlagsStream(
-      stream,
-      "doc_id",
-      "text",
-      idx,
-      out,
-      ckpt,
-      graft.ops.Dedup.incrementalMinMatches,
-      Trigger.AvailableNow()
-    ).awaitTermination()
+    drain(
+      nearDupFlagsStream(
+        fileReplay(s, src),
+        "doc_id",
+        "text",
+        idx,
+        out,
+        ckpt,
+        graft.ops.Dedup.incrementalMinMatches,
+        replayTrigger
+      )
+    )
     val oddRef = col("ref_id") % 2 =!= 0
     s.read
       .parquet(out)
@@ -388,13 +483,11 @@ object StreamingIngest {
       mapBuckets: Int = 32,
       compactEvery: Int = 0
   ): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    start(
+      batches(docs) { (batch, batchId) =>
         val s = batch.sparkSession
         val (flags, sigNew) = graft.ops.Dedup
-          .incrementalDedupCached(spread(batch.toDF(), idCol), idCol, textCol, indexDir, minMatches)
+          .incrementalDedupCached(spread(batch, idCol), idCol, textCol, indexDir, minMatches)
         try {
           flags.write.mode(SaveMode.Append).parquet(outDir)
           graft.ops.Dedup.appendSignaturesToIndex(sigNew, indexDir)
@@ -403,7 +496,7 @@ object StreamingIngest {
           // map needs no twin: touched-bucket maintenance rewrites
           // each touched dir as exactly one file, so map file counts
           // are O(nBuckets) by construction, not O(stream lifetime))
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+          if (compactDue(compactEvery, batchId))
             graft.ops.Dedup.compactMinhashIndex(s, indexDir)
           // a flagless batch cannot change the map — skip the merge
           // and every dir touch
@@ -424,8 +517,10 @@ object StreamingIngest {
               )
           }
         } finally sigNew.unpersist()
-      }
-      .start()
+      },
+      checkpoint,
+      trigger
+    )
 
   /** The clustered streaming route as an oracle-gated query: same
     * parity replay as [[dedupStreamReplay]], but the checked output is
@@ -434,62 +529,50 @@ object StreamingIngest {
     * set, computed by the DuckDB oracle as a recursive walk over the
     * same pair CTEs. Scratch dirs are per-run.
     */
-  val dedupStreamClusters: (SparkSession, String) => DataFrame = (s, d) => {
-    val docs = graft.ops.Fixtures.documents(s, d)
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_cc")
-    try dedupStreamClustersIn(s, d, docs, base)
-    finally rmScratch(s, base)
-  }
-
-  private def dedupStreamClustersIn(
-      s: SparkSession,
-      d: String,
-      docs: DataFrame,
-      base: java.nio.file.Path
-  ): DataFrame = {
-    val idx = base.resolve("index").toString
-    val src = base.resolve("src").toString
-    val out = base.resolve("flags").toString
-    val ckpt = base.resolve("ckpt").toString
-    val mapDir = base.resolve("clustermap").toString
-    // seed the run's private index as an FS copy of the once-per-
-    // process demo index (same even-docs build dedup_incremental
-    // probes) — the replay measures probe/append/cluster, not
-    // re-signing the same history every rep
-    graft.core.Compaction.copyDir(s, graft.ops.Dedup.demoEvenMinhashIndex(s, d), idx)
-    // two micro-batches: batch 1 cold-starts the map, batch 2 takes the
-    // touched-bucket maintenance path — the two distinct code paths
-    // (dedup_stream_replay keeps 4 batches for flag-semantics coverage)
-    docs
-      .filter(col("doc_id") % 2 =!= 0)
-      .select("doc_id", "text")
-      .repartition(2, col("doc_id"))
-      .write
-      .parquet(src)
-    val stream = s.readStream
-      .schema(s.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-    clusteredNearDupStream(
-      stream,
-      "doc_id",
-      "text",
-      idx,
-      out,
-      ckpt,
-      graft.ops.Dedup.incrementalMinMatches,
-      mapDir,
-      Trigger.AvailableNow(),
-      // flagged-pair maps are output-sized; 4 buckets keep a demo
-      // cycle from writing 32 near-empty dirs
-      mapBuckets = 4
-    ).awaitTermination()
-    graft.ops.GraphDedup
-      .readClusterMap(s, mapDir)
-      .select(col("node").as("doc_id"), col("cluster_id"))
-      .orderBy("doc_id")
-      .localCheckpoint(true)
-  }
+  val dedupStreamClusters: (SparkSession, String) => DataFrame = (s, d) =>
+    withScratch(s, "graft_stream_cc") { base =>
+      val docs = graft.ops.Fixtures.documents(s, d)
+      val idx = base.resolve("index").toString
+      val src = base.resolve("src").toString
+      val out = base.resolve("flags").toString
+      val ckpt = base.resolve("ckpt").toString
+      val mapDir = base.resolve("clustermap").toString
+      // seed the run's private index as an FS copy of the once-per-
+      // process demo index (same even-docs build dedup_incremental
+      // probes) — the replay measures probe/append/cluster, not
+      // re-signing the same history every rep
+      graft.core.Compaction.copyDir(s, graft.ops.Dedup.demoEvenMinhashIndex(s, d), idx)
+      // two micro-batches: batch 1 cold-starts the map, batch 2 takes the
+      // touched-bucket maintenance path — the two distinct code paths
+      // (dedup_stream_replay keeps 4 batches for flag-semantics coverage)
+      docs
+        .filter(col("doc_id") % 2 =!= 0)
+        .select("doc_id", "text")
+        .repartition(2, col("doc_id"))
+        .write
+        .parquet(src)
+      drain(
+        clusteredNearDupStream(
+          fileReplay(s, src),
+          "doc_id",
+          "text",
+          idx,
+          out,
+          ckpt,
+          graft.ops.Dedup.incrementalMinMatches,
+          mapDir,
+          replayTrigger,
+          // flagged-pair maps are output-sized; 4 buckets keep a demo
+          // cycle from writing 32 near-empty dirs
+          mapBuckets = 4
+        )
+      )
+      graft.ops.GraphDedup
+        .readClusterMap(s, mapDir)
+        .select(col("node").as("doc_id"), col("cluster_id"))
+        .orderBy("doc_id")
+        .localCheckpoint(true)
+    }
 
   /** The watermarked WINDOW-aggregation route as an ORACLE-GATED batch
     * query (`events_stream_replay`): the events table replays through
@@ -512,70 +595,50 @@ object StreamingIngest {
     * answer would be approx_count_distinct, which an exact-match
     * oracle deliberately excludes).
     */
-  val eventsStreamReplay: (SparkSession, String) => DataFrame = (s, d) => {
-    val ev = graft.ops.Fixtures
-      .events(s, d)
-      .select(col("ts"), col("event_type"), col("value"))
-    val base = java.nio.file.Files.createTempDirectory("graft_events_replay")
-    try {
-      eventsStreamReplayIn(s, ev, base)
-    } finally rmScratch(s, base)
-  }
-
-  private def eventsStreamReplayIn(
-      s: SparkSession,
-      ev: DataFrame,
-      base: java.nio.file.Path
-  ): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val src = base.resolve("src").toString
-    val out = base.resolve("win").toString
-    val ckpt = base.resolve("ckpt").toString
-    ev.repartition(4, col("event_type")).write.parquet(src)
-    val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-    // state-store partition count derived from the replay's size
-    val s2 = statefulReplaySession(s, src)
-    def runOnce(): Unit = {
-      val q = s2.readStream
-        .schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .withWatermark("ts", "400 days")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          sum(col("value").cast(DecimalType(18, 2))).cast(DecimalType(38, 2)).as("total_value_dec")
+  val eventsStreamReplay: (SparkSession, String) => DataFrame = (s, d) =>
+    withScratch(s, "graft_events_replay") { base =>
+      import org.apache.spark.sql.types.DecimalType
+      val ev = graft.ops.Fixtures
+        .events(s, d)
+        .select(col("ts"), col("event_type"), col("value"))
+      val src = base.resolve("src").toString
+      val out = base.resolve("win").toString
+      val ckpt = base.resolve("ckpt").toString
+      ev.repartition(4, col("event_type")).write.parquet(src)
+      val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
+      // state-store partition count derived from the replay's size
+      val s2 = statefulReplaySession(s, src)
+      def runOnce(): Unit = {
+        val windows = fileReplay(s2, src)
+          .withWatermark("ts", "400 days")
+          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+          .agg(
+            count(lit(1)).as("n_events"),
+            sum(col("value").cast(DecimalType(18, 2))).cast(DecimalType(38, 2)).as("total_value_dec")
+          )
+        drain(parquetSink(windows, out), ckpt)
+      }
+      runOnce()
+      // phase 2: the flush sentinel — 402 days past the corpus max, so
+      // watermark = sentinel − 400 d clears every real window end
+      import s.implicits._
+      val sentinel = new java.sql.Timestamp(maxTs.getTime + 402L * 24 * 3600 * 1000)
+      Seq((sentinel, "__flush", 0.0))
+        .toDF("ts", "event_type", "value")
+        .write.mode(SaveMode.Append).parquet(src)
+      runOnce()
+      s.read
+        .parquet(out)
+        .filter(col("event_type") =!= "__flush")
+        .select(
+          expr("unix_micros(window.start) div 3600000000").as("hour_bucket"),
+          col("event_type"),
+          col("n_events"),
+          col("total_value_dec").cast("string").as("total_value")
         )
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet")
-        .option("path", out)
-        .outputMode(OutputMode.Append)
-        .start()
-      q.awaitTermination()
+        .orderBy("hour_bucket", "event_type")
+        .localCheckpoint(true)
     }
-    runOnce()
-    // phase 2: the flush sentinel — 402 days past the corpus max, so
-    // watermark = sentinel − 400 d clears every real window end
-    import s.implicits._
-    val sentinel = new java.sql.Timestamp(maxTs.getTime + 402L * 24 * 3600 * 1000)
-    Seq((sentinel, "__flush", 0.0))
-      .toDF("ts", "event_type", "value")
-      .write.mode(SaveMode.Append).parquet(src)
-    runOnce()
-    s.read
-      .parquet(out)
-      .filter(col("event_type") =!= "__flush")
-      .select(
-        expr("unix_micros(window.start) div 3600000000").as("hour_bucket"),
-        col("event_type"),
-        col("n_events"),
-        col("total_value_dec").cast("string").as("total_value")
-      )
-      .orderBy("hour_bucket", "event_type")
-      .localCheckpoint(true)
-  }
 
   /** Streaming ANOMALY maintenance: the hourly-counts state kept live
     * across micro-batches — the monitoring loop a pipeline runs
@@ -589,71 +652,38 @@ object StreamingIngest {
     *
     * State discipline: the state is AGGREGATE-sized ((types × hours),
     * not corpus-sized), so a full marker-committed rewrite per batch
-    * ([[graft.core.Compaction.replaceWith]]) is as cheap as any merge
-    * — the touched-bucket machinery exists for corpus-sized state
-    * (the cluster map), not for this. Idempotence: the applied batch
-    * id rides INSIDE the state generation (`_graft_last_batch`,
-    * swapped atomically with the counts), so a replayed batch — same
-    * checkpoint after a crash, or a full re-run against a fresh
-    * checkpoint — is detected and skipped, never double-counted.
+    * ([[rewriteState]]) is as cheap as any merge — the touched-bucket
+    * machinery exists for corpus-sized state (the cluster map), not
+    * for this; the rewrite lands as one file.
     */
   private[graft] def applyHourlyBatch(
       s: SparkSession,
       batch: DataFrame,
       batchId: Long,
       stateDir: String
-  ): Unit = {
-    graft.core.Compaction.recover(s, stateDir)
-    val applied = graft.core.Compaction
-      .readTextFile(s, s"$stateDir/_graft_last_batch")
-      .map(_.trim.toLong)
-      .getOrElse(-1L)
-    if (batchId <= applied) return // replay: the state already holds this batch
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val exists = p.getFileSystem(s.sessionState.newHadoopConf()).exists(p)
-    val bh = graft.ops.Events.hourlyCounts(batch)
-    val merged = (
-      if (exists)
-        s.read
-          .parquet(stateDir)
-          .unionByName(bh)
+  ): Unit =
+    rewriteState(s, stateDir, batchId, _.coalesce(1)) { cur =>
+      val bh = graft.ops.Events.hourlyCounts(batch)
+      cur.fold(bh)(
+        _.unionByName(bh)
           .groupBy(col("event_type"), col("hour_bucket"))
           .agg(sum(col("n")).cast("bigint").as("n"))
-      else bh
-    ).localCheckpoint(true) // the merge READS the dir the swap replaces
-    graft.core.Compaction.replaceWith(s, stateDir) { staged =>
-      merged.coalesce(1).write.mode("overwrite").parquet(staged)
-      graft.core.Compaction.writeTextFile(s, s"$staged/_graft_last_batch", s"$batchId\n")
+      )
     }
-  }
 
-  private[graft] def runAnomalyMaintenance(s: SparkSession, src: String, stateDir: String, ckpt: String): Unit = {
-    val q = s.readStream
-      .schema(s.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyHourlyBatch(s, batch, batchId, stateDir)
-      }
-      .start()
-    q.awaitTermination()
-  }
+  private[graft] def runAnomalyMaintenance(s: SparkSession, src: String, stateDir: String, ckpt: String): Unit =
+    drain(batches(fileReplay(s, src))((batch, batchId) => applyHourlyBatch(s, batch, batchId, stateDir)), ckpt)
 
-  val eventsAnomalyStream: (SparkSession, String) => DataFrame = (s, d) => {
-    val ev = graft.ops.Fixtures.events(s, d).select(col("event_type"), col("ts_nanos"))
-    val base = java.nio.file.Files.createTempDirectory("graft_events_anomaly")
-    try {
+  val eventsAnomalyStream: (SparkSession, String) => DataFrame = (s, d) =>
+    withScratch(s, "graft_events_anomaly") { base =>
+      val ev = graft.ops.Fixtures.events(s, d).select(col("event_type"), col("ts_nanos"))
       val src = base.resolve("src").toString
       val state = base.resolve("hourly").toString
       val ckpt = base.resolve("ckpt").toString
       ev.repartition(4, col("event_type")).write.parquet(src)
       runAnomalyMaintenance(s, src, state, ckpt)
       graft.ops.Events.anomalyFromHourly(s.read.parquet(state)).localCheckpoint(true)
-    } finally rmScratch(s, base)
-  }
+    }
 
   /** Streaming mixed-media ingest: binary payloads arrive as real
     * micro-batches and land, in one pass per batch, in the unified
@@ -668,32 +698,18 @@ object StreamingIngest {
     * This is the landing pass of a 100 TB media lake: the same corpus
     * batched ≡ streamed, which is what the shared oracle pins.
     */
-  def mediaStreamIngest(s: SparkSession, media: Dataset[graft.ops.Multimodal.MediaRow]): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_media_stream")
-    try {
+  def mediaStreamIngest(s: SparkSession, media: Dataset[graft.ops.Multimodal.MediaRow]): DataFrame =
+    withScratch(s, "graft_media_stream") { base =>
       val src = base.resolve("src").toString
       val out = base.resolve("meta").toString
       val ckpt = base.resolve("ckpt").toString
       // 4 source files ⇒ 4 real micro-batches under maxFilesPerTrigger=1
       media.toDF().repartition(4, col("doc_id")).write.parquet(src)
-      val stream = s.readStream
-        .schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
       import s.implicits._
-      graft.ops.Multimodal
-        .decodeMixed(stream.as[graft.ops.Multimodal.MediaRow])
-        .writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+      val meta = graft.ops.Multimodal.decodeMixed(fileReplay(s, src).as[graft.ops.Multimodal.MediaRow])
+      drain(parquetSink(meta, out), ckpt)
       s.read.parquet(out).orderBy("doc_id").localCheckpoint(true)
-    } finally rmScratch(s, base)
-  }
+    }
 
   /** The driver-registry wrapper: the same formula-derived mixed
     * corpus as the batch `multimodal_mixed_decode`, replayed through
@@ -723,38 +739,57 @@ object StreamingIngest {
     * nothing between batches, and per-batch memory is bounded by
     * maxFilesPerTrigger exactly like the ingest loops.
     */
-  def annStreamServe(s: SparkSession, queries: DataFrame, indexDir: String, k: Int, nProbe: Int): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_ann_stream")
-    try {
+  def annStreamServe(s: SparkSession, queries: DataFrame, indexDir: String, k: Int, nProbe: Int): DataFrame =
+    withScratch(s, "graft_ann_stream") { base =>
       val src = base.resolve("src").toString
       val out = base.resolve("answers").toString
       val ckpt = base.resolve("ckpt").toString
       queries.repartition(3, col("qid")).write.parquet(src)
-      val stream = s.readStream
-        .schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-      stream.writeStream
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          // the batch frame lives in the stream's CLONED session, whose
-          // function registry snapshot predates any outer-session
-          // registration — resolve the join (cosine_sim) there, not in
-          // the caller's session
-          val bs = batch.sparkSession
-          graft.functions.GraftFunctions.register(bs)
-          graft.ops.Similarity
-            .pqKnnJoin(bs, indexDir, batch.toDF(), k, nProbe)
-            .write
-            .mode(SaveMode.Append)
-            .parquet(out)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+      val answers = appendEach(fileReplay(s, src), out) { batch =>
+        // the batch frame lives in the stream's CLONED session, whose
+        // function registry snapshot predates any outer-session
+        // registration — resolve the join (cosine_sim) there, not in
+        // the caller's session
+        val bs = batch.sparkSession
+        graft.functions.GraftFunctions.register(bs)
+        graft.ops.Similarity.pqKnnJoin(bs, indexDir, batch, k, nProbe)
+      }
+      drain(answers, ckpt)
       s.read.parquet(out).orderBy("qid", "rank").localCheckpoint(true)
-    } finally rmScratch(s, base)
-  }
+    }
+
+  /** The embedding twin of [[nearDupFlagsStream]], reusable on any
+    * vector stream: per batch probe → flag append → bucket append →
+    * cache release, with the same `compactEvery` cadence knob folding
+    * the index's one-file-per-batch-per-bucket accretion back to one
+    * file per bucket dir (probes bit-identical across a compaction).
+    */
+  def embNearDupFlagsStream(
+      vecs: DataFrame,
+      indexDir: String,
+      outDir: String,
+      checkpoint: String,
+      minCos: Double,
+      trigger: Trigger = Trigger.ProcessingTime(0L),
+      compactEvery: Int = 0
+  ): StreamingQuery =
+    start(
+      batches(vecs) { (batch, batchId) =>
+        import graft.ops.Similarity
+        val (flags, nb) = Similarity
+          .incrementalEmbeddingDedupCached(spread(batch, "vec_id"), indexDir, minCos, sortOutput = false)
+        try {
+          flags.write.mode(SaveMode.Append).parquet(outDir)
+          Similarity.appendBucketsToIndex(
+            nb.select(col("new_id").as("vec_id"), col("vn").as("v"), col("bucket_id")),
+            indexDir)
+          if (compactDue(compactEvery, batchId))
+            Similarity.compactEmbeddingDedupIndex(batch.sparkSession, indexDir)
+        } finally nb.unpersist()
+      },
+      checkpoint,
+      trigger
+    )
 
   /** Streaming EMBEDDING near-dup flags — the semantic twin of
     * [[dedupStreamReplay]]: vector increments arrive as micro-batches,
@@ -778,42 +813,8 @@ object StreamingIngest {
     * pruned. [[graft.ops.Similarity.compactEmbeddingDedupIndex]] is
     * the cadence knob that folds the accretion back.
     */
-  /** The embedding twin of [[nearDupFlagsStream]], reusable on any
-    * vector stream: per batch probe → flag append → bucket append →
-    * cache release, with the same `compactEvery` cadence knob folding
-    * the index's one-file-per-batch-per-bucket accretion back to one
-    * file per bucket dir (probes bit-identical across a compaction).
-    */
-  def embNearDupFlagsStream(
-      vecs: DataFrame,
-      indexDir: String,
-      outDir: String,
-      checkpoint: String,
-      minCos: Double,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      compactEvery: Int = 0
-  ): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.ops.Similarity
-        val (flags, nb) = Similarity
-          .incrementalEmbeddingDedupCached(spread(batch.toDF(), "vec_id"), indexDir, minCos, sortOutput = false)
-        try {
-          flags.write.mode(SaveMode.Append).parquet(outDir)
-          Similarity.appendBucketsToIndex(
-            nb.select(col("new_id").as("vec_id"), col("vn").as("v"), col("bucket_id")),
-            indexDir)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            Similarity.compactEmbeddingDedupIndex(batch.sparkSession, indexDir)
-        } finally nb.unpersist()
-      }
-      .start()
-
-  def embDedupStreamReplay(s: SparkSession, d: String, compactEvery: Int = 0): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_emb_stream")
-    try {
+  def embDedupStreamReplay(s: SparkSession, d: String, compactEvery: Int = 0): DataFrame =
+    withScratch(s, "graft_emb_stream") { base =>
       import graft.ops.Similarity
       val idx = base.resolve("index").toString
       val src = base.resolve("src").toString
@@ -825,12 +826,7 @@ object StreamingIngest {
         .repartition(4, col("vec_id"))
         .write
         .parquet(src)
-      val stream = s.readStream
-        .schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-      embNearDupFlagsStream(stream, idx, out, ckpt, minCos = 0.3, Trigger.AvailableNow(), compactEvery)
-        .awaitTermination()
+      drain(embNearDupFlagsStream(fileReplay(s, src), idx, out, ckpt, minCos = 0.3, replayTrigger, compactEvery))
       // normalize away batch-boundary artifacts exactly like the text
       // replay: increment-origin refs (odd ids — clones land odd too)
       // orient (max, min) and src comes from the parity split
@@ -848,8 +844,7 @@ object StreamingIngest {
         .select("new_id", "ref_id", "src", "bucket_id", "cos_sim")
         .orderBy("new_id", "ref_id", "src")
         .localCheckpoint(true)
-    } finally rmScratch(s, base)
-  }
+    }
 
   /** SEARCH-INDEX maintenance as a stream — retrieval's member of the
     * filters-as-streams family: documents arrive as micro-batches and
@@ -890,24 +885,28 @@ object StreamingIngest {
       compactEvery: Int = 0,
       analyzed: Boolean = false,
       upsert: Boolean = false
-  ): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val bs = batch.sparkSession
-        // checkpoint identity gate BEFORE the skip gate: a fresh
-        // checkpoint restarts batch ids at 0 and the marker alone
-        // would silently drop batches — fail loudly instead
-        graft.ops.Search.ensureStreamIdentity(bs, indexDir, checkpoint)
-        if (batchId > graft.ops.Search.lastAppliedSearchBatch(bs, indexDir)) {
-          graft.ops.Search.applySearchIndexBatch(spread(batch.toDF(), idCol), idCol, textCol, indexDir, batchId, analyzed, upsert)
-          graft.ops.Search.writeLastAppliedSearchBatch(bs, indexDir, batchId)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            graft.ops.Search.compactSearchIndex(bs, indexDir)
-        }
-      }
-      .start()
+  ): StreamingQuery = {
+    val each = exactlyOnce(indexDir, checkpoint, compactEvery) { (batch, batchId) =>
+      graft.ops.Search.applySearchIndexBatch(spread(batch, idCol), idCol, textCol, indexDir, batchId, analyzed, upsert)
+    }(graft.ops.Search.compactSearchIndex(_, indexDir))
+    start(batches(docs)(each), checkpoint, trigger)
+  }
+
+  /** A fixture-corpus index replay: `docs` written as 4 files, their
+    * stream mapped by `stream` and drained through
+    * [[searchIndexStream]] into a fresh index with a compaction every
+    * 3 batches; `probe` then reads the index. Scratch dirs are per-run.
+    */
+  private def searchIndexReplay(s: SparkSession, prefix: String, docs: DataFrame, idCol: String, textCol: String,
+      analyzed: Boolean = false, stream: DataFrame => DataFrame = identity)(probe: String => DataFrame): DataFrame =
+    withScratch(s, prefix) { base =>
+      val src = base.resolve("src").toString
+      val idx = base.resolve("index").toString
+      docs.repartition(4, col("doc_id")).write.parquet(src)
+      drain(searchIndexStream(stream(fileReplay(s, src)), idCol, textCol, idx, base.resolve("ckpt").toString,
+        replayTrigger, compactEvery = 3, analyzed = analyzed))
+      probe(idx).orderBy("rank").localCheckpoint(true)
+    }
 
   /** The streaming-maintained search index as an ORACLE-GATED query:
     * the fixture corpus arrives as 4 real micro-batches (file source,
@@ -919,30 +918,11 @@ object StreamingIngest {
     * matter: postings/doclen rows are per-doc, and df/N/idf are
     * aggregates over the union the appends accumulate).
     */
-  def searchStreamProbe(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_search_stream")
-    try {
-      val src = base.resolve("src").toString
-      val idx = base.resolve("index").toString
-      val ckpt = base.resolve("ckpt").toString
-      graft.ops.Fixtures
-        .documents(s, d)
-        .select(col("doc_id"), col("text"))
-        .repartition(4, col("doc_id"))
-        .write
-        .parquet(src)
-      val stream = s.readStream
-        .schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-      searchIndexStream(stream, "doc_id", "text", idx, ckpt, Trigger.AvailableNow(), compactEvery = 3)
-        .awaitTermination()
-      graft.ops.Search
-        .conjunctiveFromIndex(s, idx, graft.ops.Search.fixtureAndTerms, 10)
-        .orderBy("rank")
-        .localCheckpoint(true)
-    } finally rmScratch(s, base)
-  }
+  def searchStreamProbe(s: SparkSession, d: String): DataFrame =
+    searchIndexReplay(s, "graft_search_stream",
+      graft.ops.Fixtures.documents(s, d).select(col("doc_id"), col("text")), "doc_id", "text") {
+      graft.ops.Search.conjunctiveFromIndex(s, _, graft.ops.Search.fixtureAndTerms, 10)
+    }
 
   /** STREAMING RAG INGESTION as an ORACLE-GATED query: documents
     * arrive as 4 real micro-batches, each batch CHUNKS in-plan
@@ -955,32 +935,12 @@ object StreamingIngest {
     * ingestion loop (stream → chunk → index → pooled retrieval) is
     * hash-gated end to end.
     */
-  def searchStreamChunkProbe(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_chunk_stream")
-    try {
-      val src = base.resolve("src").toString
-      val idx = base.resolve("index").toString
-      val ckpt = base.resolve("ckpt").toString
-      graft.ops.Fixtures
-        .documents(s, d)
-        .select(col("doc_id"), col("text"))
-        .repartition(4, col("doc_id"))
-        .write
-        .parquet(src)
-      val stream = s.readStream
-        .schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-      val chunked =
-        graft.ops.Search.chunkedDocs(stream, "doc_id", "text", graft.ops.Search.fixtureChunkSize)
-      searchIndexStream(chunked, "cid", "ctext", idx, ckpt, Trigger.AvailableNow(), compactEvery = 3)
-        .awaitTermination()
-      graft.ops.Search
-        .chunkBm25FromIndex(s, idx, graft.ops.Search.fixtureOrTerms, 10)
-        .orderBy("rank")
-        .localCheckpoint(true)
-    } finally rmScratch(s, base)
-  }
+  def searchStreamChunkProbe(s: SparkSession, d: String): DataFrame =
+    searchIndexReplay(s, "graft_chunk_stream",
+      graft.ops.Fixtures.documents(s, d).select(col("doc_id"), col("text")), "cid", "ctext",
+      stream = graft.ops.Search.chunkedDocs(_, "doc_id", "text", graft.ops.Search.fixtureChunkSize)) {
+      graft.ops.Search.chunkBm25FromIndex(s, _, graft.ops.Search.fixtureOrTerms, 10)
+    }
 
   /** The ANALYZED stream maintenance path as an ORACLE-GATED query —
     * [[searchStreamProbe]]'s twin for the mode real users run: the
@@ -993,30 +953,33 @@ object StreamingIngest {
     * analyzed maintenance lifecycle (batch apply → ledger sums →
     * compaction fold) is hash-gated end to end.
     */
-  def searchStreamAnalyzedProbe(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_search_stream_an")
-    try {
-      val src = base.resolve("src").toString
-      val idx = base.resolve("index").toString
-      val ckpt = base.resolve("ckpt").toString
-      graft.ops.Search
-        .damagedFixtureDocs(s, d)
-        .select(col("doc_id"), col("text"))
-        .repartition(4, col("doc_id"))
-        .write
-        .parquet(src)
-      val stream = s.readStream
-        .schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-      searchIndexStream(stream, "doc_id", "text", idx, ckpt, Trigger.AvailableNow(), compactEvery = 3, analyzed = true)
-        .awaitTermination()
-      graft.ops.Search
-        .bm25FromIndex(s, idx, graft.ops.Search.fixtureOrTerms.map(_.toUpperCase), 10, graft.ops.Search.Analyzer.Folded)
-        .orderBy("rank")
-        .localCheckpoint(true)
-    } finally rmScratch(s, base)
-  }
+  def searchStreamAnalyzedProbe(s: SparkSession, d: String): DataFrame =
+    searchIndexReplay(s, "graft_search_stream_an",
+      graft.ops.Search.damagedFixtureDocs(s, d).select(col("doc_id"), col("text")), "doc_id", "text",
+      analyzed = true) {
+      graft.ops.Search.bm25FromIndex(s, _, graft.ops.Search.fixtureOrTerms.map(_.toUpperCase), 10,
+        graft.ops.Search.Analyzer.Folded)
+    }
+
+  /** A two-phase replay on ONE checkpoint — the shape of the upsert
+    * and CDC probes: `initial` is written as 4 source files and `run`
+    * drains them, then `wave` lands as one more file in the SAME
+    * source dir and `run` drains again — restarting on the same
+    * checkpoint picks up exactly that file as the next batch (batch
+    * ids continue). `run` and `result` name their dirs through `at`
+    * (the source is `at("src")`); scratch dirs are per-run.
+    */
+  private def twoPhaseReplay(s: SparkSession, prefix: String, initial: DataFrame, wave: DataFrame)(
+      run: (String => String) => Unit
+  )(result: (String => String) => DataFrame): DataFrame =
+    withScratch(s, prefix) { base =>
+      val at = (name: String) => base.resolve(name).toString
+      initial.repartition(4, col("doc_id")).write.parquet(at("src"))
+      run(at)
+      wave.coalesce(1).write.mode("append").parquet(at("src"))
+      run(at)
+      result(at)
+    }
 
   /** Streaming UPSERT maintenance as an ORACLE-GATED query — documents
     * that CHANGE, the index shape real pipelines need (re-crawled
@@ -1035,38 +998,20 @@ object StreamingIngest {
     * hash-mismatch.
     */
   def searchStreamUpsertProbe(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_search_stream_up")
-    try {
-      val src = base.resolve("src").toString
-      val idx = base.resolve("index").toString
-      val ckpt = base.resolve("ckpt").toString
-      val docs = graft.ops.Fixtures.documents(s, d).select(col("doc_id"), col("text"))
-      docs.repartition(4, col("doc_id")).write.parquet(src)
-      val mkStream = () =>
-        s.readStream
-          .schema(s.read.parquet(src).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(src)
-      searchIndexStream(mkStream(), "doc_id", "text", idx, ckpt, Trigger.AvailableNow(), upsert = true)
-        .awaitTermination()
-      // the changed documents arrive as one more file in the SAME
-      // source dir; restarting the AvailableNow stream on the same
-      // checkpoint picks up exactly that file as the next batch
-      docs
-        .filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id"), expr("replace(text, 'dup', 'dupword')").as("text"))
-        .coalesce(1)
-        .write
-        .mode("append")
-        .parquet(src)
-      searchIndexStream(mkStream(), "doc_id", "text", idx, ckpt, Trigger.AvailableNow(), upsert = true)
-        .awaitTermination()
-      graft.ops.Search.compactSearchIndex(s, idx)
+    val docs = graft.ops.Fixtures.documents(s, d).select(col("doc_id"), col("text"))
+    val rewritten = docs
+      .filter(col("doc_id") % 7 === 3)
+      .select(col("doc_id"), expr("replace(text, 'dup', 'dupword')").as("text"))
+    twoPhaseReplay(s, "graft_search_stream_up", docs, rewritten) { at =>
+      drain(searchIndexStream(fileReplay(s, at("src")), "doc_id", "text", at("index"), at("ckpt"), replayTrigger,
+        upsert = true))
+    } { at =>
+      graft.ops.Search.compactSearchIndex(s, at("index"))
       graft.ops.Search
-        .bm25FromIndex(s, idx, graft.ops.Search.fixtureOrTerms, 10)
+        .bm25FromIndex(s, at("index"), graft.ops.Search.fixtureOrTerms, 10)
         .orderBy("rank")
         .localCheckpoint(true)
-    } finally rmScratch(s, base)
+    }
   }
 
   /** FIELDED (BM25F) index maintenance as a stream — the last index
@@ -1089,21 +1034,12 @@ object StreamingIngest {
       trigger: Trigger = Trigger.ProcessingTime(0L),
       compactEvery: Int = 0,
       upsert: Boolean = false
-  ): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val bs = batch.sparkSession
-        graft.ops.Search.ensureStreamIdentity(bs, indexDir, checkpoint)
-        if (batchId > graft.ops.Search.lastAppliedSearchBatch(bs, indexDir)) {
-          graft.ops.Search.applyFieldedIndexBatch(spread(batch.toDF(), idCol), idCol, fieldCols, indexDir, batchId, upsert)
-          graft.ops.Search.writeLastAppliedSearchBatch(bs, indexDir, batchId)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            graft.ops.Search.compactFieldedIndex(bs, indexDir)
-        }
-      }
-      .start()
+  ): StreamingQuery = {
+    val each = exactlyOnce(indexDir, checkpoint, compactEvery) { (batch, batchId) =>
+      graft.ops.Search.applyFieldedIndexBatch(spread(batch, idCol), idCol, fieldCols, indexDir, batchId, upsert)
+    }(graft.ops.Search.compactFieldedIndex(_, indexDir))
+    start(batches(docs)(each), checkpoint, trigger)
+  }
 
   /** The stream-maintained FIELDED index as an ORACLE-GATED query:
     * the fielded fixture corpus (title/body split) arrives as 4 real
@@ -1113,9 +1049,8 @@ object StreamingIngest {
     * lifecycle (batch apply → per-field ledger sums → compaction
     * fold) is hash-gated end to end.
     */
-  def searchStreamBm25fProbe(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_search_stream_fld")
-    try {
+  def searchStreamBm25fProbe(s: SparkSession, d: String): DataFrame =
+    withScratch(s, "graft_search_stream_fld") { base =>
       val src = base.resolve("src").toString
       val idx = base.resolve("index").toString
       val ckpt = base.resolve("ckpt").toString
@@ -1124,18 +1059,13 @@ object StreamingIngest {
         .repartition(4, col("doc_id"))
         .write
         .parquet(src)
-      val stream = s.readStream
-        .schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-      fieldedIndexStream(stream, "doc_id", Seq("title", "body"), idx, ckpt, Trigger.AvailableNow(), compactEvery = 3)
-        .awaitTermination()
+      drain(fieldedIndexStream(fileReplay(s, src), "doc_id", Seq("title", "body"), idx, ckpt, replayTrigger,
+        compactEvery = 3))
       graft.ops.Search
         .bm25fFromIndex(s, idx, graft.ops.Search.fixtureOrTerms, graft.ops.Search.fixtureBoosts, 10)
         .orderBy("rank")
         .localCheckpoint(true)
-    } finally rmScratch(s, base)
-  }
+    }
 
   /** Streaming fielded UPSERT — [[searchStreamUpsertProbe]]'s twin on
     * the BM25F tier: 4 batches build the index, a 5th re-sends every
@@ -1143,45 +1073,25 @@ object StreamingIngest {
     * checkpoint, batch ids continue), the upsert apply tombstones the
     * old versions, compaction purges and heals the per-field stats,
     * and the post-compaction BM25F probe must equal the fielded model
-    * over the FINAL document versions.
+    * over the FINAL document versions. The title/body split applies
+    * AFTER the rewrite, exactly like the oracle's.
     */
   def searchStreamBm25fUpsertProbe(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_search_stream_fldup")
-    try {
-      val src = base.resolve("src").toString
-      val idx = base.resolve("index").toString
-      val ckpt = base.resolve("ckpt").toString
-      val docs = graft.ops.Fixtures.documents(s, d).select(col("doc_id"), col("text"))
-      graft.ops.Search.fieldedDocsOf(docs).repartition(4, col("doc_id")).write.parquet(src)
-      val mkStream = () =>
-        s.readStream
-          .schema(s.read.parquet(src).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(src)
-      fieldedIndexStream(mkStream(), "doc_id", Seq("title", "body"), idx, ckpt, Trigger.AvailableNow(), upsert = true)
-        .awaitTermination()
-      // the rewritten docs arrive as one more file in the SAME source
-      // dir; restarting on the same checkpoint picks them up as the
-      // next batch — the title/body split applies AFTER the rewrite,
-      // exactly like the oracle's
+    val docs = graft.ops.Fixtures.documents(s, d).select(col("doc_id"), col("text"))
+    val rewritten = docs
+      .filter(col("doc_id") % 7 === 3)
+      .select(col("doc_id"), expr("replace(text, 'dup', 'dupword')").as("text"))
+    twoPhaseReplay(s, "graft_search_stream_fldup", graft.ops.Search.fieldedDocsOf(docs),
+      graft.ops.Search.fieldedDocsOf(rewritten)) { at =>
+      drain(fieldedIndexStream(fileReplay(s, at("src")), "doc_id", Seq("title", "body"), at("index"), at("ckpt"),
+        replayTrigger, upsert = true))
+    } { at =>
+      graft.ops.Search.compactFieldedIndex(s, at("index"))
       graft.ops.Search
-        .fieldedDocsOf(
-          docs
-            .filter(col("doc_id") % 7 === 3)
-            .select(col("doc_id"), expr("replace(text, 'dup', 'dupword')").as("text"))
-        )
-        .coalesce(1)
-        .write
-        .mode("append")
-        .parquet(src)
-      fieldedIndexStream(mkStream(), "doc_id", Seq("title", "body"), idx, ckpt, Trigger.AvailableNow(), upsert = true)
-        .awaitTermination()
-      graft.ops.Search.compactFieldedIndex(s, idx)
-      graft.ops.Search
-        .bm25fFromIndex(s, idx, graft.ops.Search.fixtureOrTerms, graft.ops.Search.fixtureBoosts, 10)
+        .bm25fFromIndex(s, at("index"), graft.ops.Search.fixtureOrTerms, graft.ops.Search.fixtureBoosts, 10)
         .orderBy("rank")
         .localCheckpoint(true)
-    } finally rmScratch(s, base)
+    }
   }
 
   /** IVF ANN-INDEX maintenance as a stream — the vector tier's member
@@ -1204,21 +1114,12 @@ object StreamingIngest {
       trigger: Trigger = Trigger.ProcessingTime(0L),
       compactEvery: Int = 0,
       upsert: Boolean = false
-  ): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val bs = batch.sparkSession
-        graft.ops.Search.ensureStreamIdentity(bs, indexDir, checkpoint)
-        if (batchId > graft.ops.Search.lastAppliedSearchBatch(bs, indexDir)) {
-          graft.ops.Similarity.applyIvfIndexBatch(batch.toDF(), indexDir, batchId, upsert)
-          graft.ops.Search.writeLastAppliedSearchBatch(bs, indexDir, batchId)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            graft.ops.Similarity.compactIvfIndex(bs, indexDir)
-        }
-      }
-      .start()
+  ): StreamingQuery = {
+    val each = exactlyOnce(indexDir, checkpoint, compactEvery) { (batch, batchId) =>
+      graft.ops.Similarity.applyIvfIndexBatch(batch, indexDir, batchId, upsert)
+    }(graft.ops.Similarity.compactIvfIndex(_, indexDir))
+    start(batches(vecs)(each), checkpoint, trigger)
+  }
 
   /** The stream-maintained IVF index as an ORACLE-GATED query: the
     * index is BUILT on the even vec_ids (seeded centroids + their
@@ -1234,27 +1135,20 @@ object StreamingIngest {
     * nProbe < nLists recall behavior of streamed rows is spec-pinned
     * separately (assignment parity with KMeansModel.transform).
     */
-  def annStreamIvfProbe(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_ivf_stream")
-    try {
+  def annStreamIvfProbe(s: SparkSession, d: String): DataFrame =
+    withScratch(s, "graft_ivf_stream") { base =>
       val src = base.resolve("src").toString
       val idx = base.resolve("index").toString
       val ckpt = base.resolve("ckpt").toString
       val emb = graft.ops.Fixtures.embeddings(s, d)
       graft.ops.Similarity.saveIvfIndex(emb.filter(col("vec_id") % 2 === 0), 16, idx)
       emb.filter(col("vec_id") % 2 =!= 0).repartition(3, col("vec_id")).write.parquet(src)
-      val stream = s.readStream
-        .schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-      ivfIndexStream(stream, idx, ckpt, Trigger.AvailableNow(), compactEvery = 2)
-        .awaitTermination()
+      drain(ivfIndexStream(fileReplay(s, src), idx, ckpt, replayTrigger, compactEvery = 2))
       graft.ops.Similarity
         .ivfTopKFromIndex(s, idx, queryId = 0L, k = 20, nProbe = 16)
         .select(col("vec_id"), col("label"), col("cos_sim"))
         .localCheckpoint(true)
-    } finally rmScratch(s, base)
-  }
+    }
 
   /** CDC INGESTION into the search index — the production ingestion
     * shape: the feed carries per-row operations (I/U/D) and the index
@@ -1279,31 +1173,22 @@ object StreamingIngest {
       trigger: Trigger = Trigger.ProcessingTime(0L),
       compactEvery: Int = 0,
       analyzed: Boolean = false
-  ): StreamingQuery =
-    feed.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val bs = batch.sparkSession
-        graft.ops.Search.ensureStreamIdentity(bs, indexDir, checkpoint)
-        if (batchId > graft.ops.Search.lastAppliedSearchBatch(bs, indexDir)) {
-          val b = spread(batch.toDF(), idCol)
-          graft.ops.Search.applySearchIndexBatch(
-            b.filter(col(opCol) =!= "D").drop(opCol),
-            idCol,
-            textCol,
-            indexDir,
-            batchId,
-            analyzed,
-            upsert = true,
-            tombstoneIds = Some(b.select(col(idCol)))
-          )
-          graft.ops.Search.writeLastAppliedSearchBatch(bs, indexDir, batchId)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            graft.ops.Search.compactSearchIndex(bs, indexDir)
-        }
-      }
-      .start()
+  ): StreamingQuery = {
+    val each = exactlyOnce(indexDir, checkpoint, compactEvery) { (batch, batchId) =>
+      val b = spread(batch, idCol)
+      graft.ops.Search.applySearchIndexBatch(
+        b.filter(col(opCol) =!= "D").drop(opCol),
+        idCol,
+        textCol,
+        indexDir,
+        batchId,
+        analyzed,
+        upsert = true,
+        tombstoneIds = Some(b.select(col(idCol)))
+      )
+    }(graft.ops.Search.compactSearchIndex(_, indexDir))
+    start(batches(feed)(each), checkpoint, trigger)
+  }
 
   /** The CDC-maintained index as an ORACLE-GATED query: 4 insert
     * batches build the index, a 5th batch carries a MIXED CDC wave —
@@ -1315,37 +1200,25 @@ object StreamingIngest {
     * hash-mismatch.
     */
   def searchStreamCdcProbe(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_search_cdc")
-    try {
-      val src = base.resolve("src").toString
-      val idx = base.resolve("index").toString
-      val ckpt = base.resolve("ckpt").toString
-      val docs = graft.ops.Fixtures.documents(s, d).select(col("doc_id"), col("text"))
-      docs.withColumn("op", lit("I")).repartition(4, col("doc_id")).write.parquet(src)
-      val mkStream = () =>
-        s.readStream
-          .schema(s.read.parquet(src).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(src)
-      searchIndexCdcStream(mkStream(), "doc_id", "text", "op", idx, ckpt, Trigger.AvailableNow())
-        .awaitTermination()
-      val wave = docs
-        .filter(col("doc_id") % 5 === 1)
-        .select(col("doc_id"), col("text"), lit("D").as("op"))
-        .union(
-          docs
-            .filter(col("doc_id") % 7 === 3 && col("doc_id") % 5 =!= 1)
-            .select(col("doc_id"), expr("replace(text, 'dup', 'dupword')").as("text"), lit("U").as("op"))
-        )
-      wave.coalesce(1).write.mode("append").parquet(src)
-      searchIndexCdcStream(mkStream(), "doc_id", "text", "op", idx, ckpt, Trigger.AvailableNow())
-        .awaitTermination()
-      graft.ops.Search.compactSearchIndex(s, idx)
+    val docs = graft.ops.Fixtures.documents(s, d).select(col("doc_id"), col("text"))
+    val wave = docs
+      .filter(col("doc_id") % 5 === 1)
+      .select(col("doc_id"), col("text"), lit("D").as("op"))
+      .union(
+        docs
+          .filter(col("doc_id") % 7 === 3 && col("doc_id") % 5 =!= 1)
+          .select(col("doc_id"), expr("replace(text, 'dup', 'dupword')").as("text"), lit("U").as("op"))
+      )
+    twoPhaseReplay(s, "graft_search_cdc", docs.withColumn("op", lit("I")), wave) { at =>
+      drain(searchIndexCdcStream(fileReplay(s, at("src")), "doc_id", "text", "op", at("index"), at("ckpt"),
+        replayTrigger))
+    } { at =>
+      graft.ops.Search.compactSearchIndex(s, at("index"))
       graft.ops.Search
-        .bm25FromIndex(s, idx, graft.ops.Search.fixtureOrTerms, 10)
+        .bm25FromIndex(s, at("index"), graft.ops.Search.fixtureOrTerms, 10)
         .orderBy("rank")
         .localCheckpoint(true)
-    } finally rmScratch(s, base)
+    }
   }
 
   /** DOC-STORE maintenance as a stream — the rendering tier's member
@@ -1367,21 +1240,12 @@ object StreamingIngest {
       metaCols: Seq[String] = Nil,
       compactEvery: Int = 0,
       upsert: Boolean = false
-  ): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val bs = batch.sparkSession
-        graft.ops.Search.ensureStreamIdentity(bs, storeDir, checkpoint)
-        if (batchId > graft.ops.Search.lastAppliedSearchBatch(bs, storeDir)) {
-          graft.ops.Search.applyDocStoreBatch(spread(batch.toDF(), idCol), idCol, textCol, storeDir, batchId, metaCols, upsert)
-          graft.ops.Search.writeLastAppliedSearchBatch(bs, storeDir, batchId)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            graft.ops.Search.compactDocStore(bs, storeDir)
-        }
-      }
-      .start()
+  ): StreamingQuery = {
+    val each = exactlyOnce(storeDir, checkpoint, compactEvery) { (batch, batchId) =>
+      graft.ops.Search.applyDocStoreBatch(spread(batch, idCol), idCol, textCol, storeDir, batchId, metaCols, upsert)
+    }(graft.ops.Search.compactDocStore(_, storeDir))
+    start(batches(docs)(each), checkpoint, trigger)
+  }
 
   /** The SERP's facet sidebar over STREAM-MAINTAINED artifacts, as an
     * ORACLE-GATED query — the full consistency loop: the corpus
@@ -1396,51 +1260,32 @@ object StreamingIngest {
     * failed purge all hash-mismatch.
     */
   def searchFacetsStreamProbe(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_facet_stream")
-    try {
-      val src = base.resolve("src").toString
-      val idx = base.resolve("index").toString
-      val store = base.resolve("store").toString
-      val ckptIdx = base.resolve("ckpt_idx").toString
-      val ckptStore = base.resolve("ckpt_store").toString
-      val docs = graft.ops.Fixtures.documents(s, d).select(col("doc_id"), col("text"), col("lang"))
-      docs.repartition(4, col("doc_id")).write.parquet(src)
-      val mkStream = () =>
-        s.readStream
-          .schema(s.read.parquet(src).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(src)
-      // the two sibling maintainers are fully independent (distinct
-      // artifact dirs, distinct checkpoints, read-only source) — drain
-      // them CONCURRENTLY (§2.6), and likewise compact them at the end
-      def drainBoth(): Unit = graft.core.Par.run(
-        () =>
-          searchIndexStream(mkStream(), "doc_id", "text", idx, ckptIdx, Trigger.AvailableNow(), upsert = true)
-            .awaitTermination(),
-        () =>
-          docStoreStream(
-            mkStream(), "doc_id", "text", store, ckptStore, Trigger.AvailableNow(),
-            metaCols = Seq("lang"), upsert = true
-          ).awaitTermination()
-      )
-      drainBoth()
-      docs
-        .filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id"), expr("replace(text, 'dup', 'dupword')").as("text"), col("lang"))
-        .coalesce(1)
-        .write
-        .mode("append")
-        .parquet(src)
-      drainBoth()
+    val docs = graft.ops.Fixtures.documents(s, d).select(col("doc_id"), col("text"), col("lang"))
+    val rewritten = docs
+      .filter(col("doc_id") % 7 === 3)
+      .select(col("doc_id"), expr("replace(text, 'dup', 'dupword')").as("text"), col("lang"))
+    // the two sibling maintainers are fully independent (distinct
+    // artifact dirs, distinct checkpoints, read-only source) — drain
+    // them CONCURRENTLY (§2.6), and likewise compact them at the end
+    twoPhaseReplay(s, "graft_facet_stream", docs, rewritten) { at =>
       graft.core.Par.run(
-        () => graft.ops.Search.compactSearchIndex(s, idx),
-        () => graft.ops.Search.compactDocStore(s, store)
+        () =>
+          drain(searchIndexStream(fileReplay(s, at("src")), "doc_id", "text", at("index"), at("ckpt_idx"),
+            replayTrigger, upsert = true)),
+        () =>
+          drain(docStoreStream(fileReplay(s, at("src")), "doc_id", "text", at("store"), at("ckpt_store"),
+            replayTrigger, metaCols = Seq("lang"), upsert = true))
+      )
+    } { at =>
+      graft.core.Par.run(
+        () => graft.ops.Search.compactSearchIndex(s, at("index")),
+        () => graft.ops.Search.compactDocStore(s, at("store"))
       )
       graft.ops.Search
-        .facetCounts(s, idx, store, graft.ops.Search.fixtureAndTerms, "lang")
+        .facetCounts(s, at("index"), at("store"), graft.ops.Search.fixtureAndTerms, "lang")
         .orderBy(desc("n_hits"), col("lang"))
         .localCheckpoint(true)
-    } finally rmScratch(s, base)
+    }
   }
 
   /** The quality FILTER as a stream: train the NB classifier once on
@@ -1454,10 +1299,9 @@ object StreamingIngest {
     * model join + doc-keyed sum ([[graft.ops.QualityClassifier.score]]),
     * appended to the flags dir; nothing stateful accumulates.
     */
-  def classifierStreamScores(s: SparkSession, d: String): DataFrame = {
-    import graft.ops.QualityClassifier
-    val base = java.nio.file.Files.createTempDirectory("graft_nb_stream")
-    try {
+  def classifierStreamScores(s: SparkSession, d: String): DataFrame =
+    withScratch(s, "graft_nb_stream") { base =>
+      import graft.ops.QualityClassifier
       val modelDir = base.resolve("model").toString
       val priorsDir = base.resolve("priors").toString
       val src = base.resolve("src").toString
@@ -1479,34 +1323,13 @@ object StreamingIngest {
         .repartition(4, col("doc_id"))
         .write
         .parquet(src)
-      s.readStream
-        .schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          QualityClassifier
-            .score(spread(batch, "doc_id"), loadedModel, loadedPriors)
-            .write
-            .mode("append")
-            .parquet(out)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+      val scores = appendEach(fileReplay(s, src), out) { batch =>
+        QualityClassifier.score(spread(batch, "doc_id"), loadedModel, loadedPriors)
+      }
+      drain(scores, ckpt)
       s.read.parquet(out).orderBy("doc_id").localCheckpoint(true)
-    } finally rmScratch(s, base)
-  }
+    }
 
-  /** Decontamination as a stream: the benchmark's n-gram digests are
-    * PERSISTED once (eval suites change rarely; the corpus is the
-    * thing that streams) and every arriving micro-batch probes the
-    * loaded digest artifact — per-doc flags are a pure function of
-    * (doc, digests), so the stream shares the batch route's oracle.
-    * Per batch: one shingle pass + broadcast digest join; hit rows
-    * append, nothing stateful accumulates.
-    */
   /** STREAM-STREAM inner join, oracle-gated end to end: two live
     * event feeds (views and clicks, replayed as real micro-batches
     * from separate file sources) joined on the user with an
@@ -1520,9 +1343,8 @@ object StreamingIngest {
     * watermark delay is effectively infinite (nothing drops), making
     * streamed ≡ batched provable and hash-gated.
     */
-  def eventsStreamStreamJoin(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_ss_join")
-    try {
+  def eventsStreamStreamJoin(s: SparkSession, d: String): DataFrame =
+    withScratch(s, "graft_ss_join") { base =>
       val vDir = base.resolve("views").toString
       val cDir = base.resolve("clicks").toString
       val out = base.resolve("pairs").toString
@@ -1541,15 +1363,13 @@ object StreamingIngest {
       // state-store partition count derived from the two sides' size
       val s2 = statefulReplaySession(s, vDir, cDir)
       def side(dir: String, tsCol: String, timeName: String) =
-        s2.readStream
-          .schema(s.read.parquet(dir).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(dir)
+        fileReplay(s2, dir)
           .withColumn(timeName, timestamp_micros(col(tsCol)))
           .withWatermark(timeName, "3650 days")
       val vs = side(vDir, "vus", "v_time")
       val cs = side(cDir, "cus", "c_time")
-      vs.join(
+      val pairs = vs
+        .join(
           cs,
           expr(
             "c_user = v_user AND c_time >= v_time AND c_time <= v_time + interval 1 hour"
@@ -1558,17 +1378,9 @@ object StreamingIngest {
         .select(
           col("view_id"), col("click_id"), col("v_user").as("user_id"),
           (col("cus") - col("vus")).cast("bigint").as("gap_us"))
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet")
-        .option("path", out)
-        .outputMode(OutputMode.Append)
-        .start()
-        .awaitTermination()
+      drain(parquetSink(pairs, out), ckpt)
       s.read.parquet(out).orderBy("view_id", "click_id").localCheckpoint(true)
-    } finally rmScratch(s, base)
-  }
+    }
 
   /** The reference's delta_import as a STREAM — a CDC feed (upserts +
     * delete tombstones, each with a change sequence) applied to a
@@ -1577,67 +1389,55 @@ object StreamingIngest {
     * tombstones are carried as rows, so the apply is COMMUTATIVE
     * across batches: whatever file order the stream surfaces, the
     * final table equals the one-shot fold of the whole feed — which is
-    * what lets this share a batch oracle at all. Each cycle
-    * materializes the merged state (eager localCheckpoint) before
-    * overwriting the state dir it just read (the cluster-map swap
-    * discipline, single-writer).
+    * what lets this share a batch oracle at all. Each cycle rewrites
+    * the merged state through [[rewriteState]]'s crash-safe swap
+    * (single-writer): a failed write leaves the previous batch's
+    * state in place, and a re-run on the same checkpoint resumes.
     *
     * Fixture feed from the customer dimension: full insert load, then
     * segment updates for every 5th key, then tombstones for every 11th
     * — the oracle replays the construction and keeps the max-seq
     * non-deleted row per key.
     */
-  def deltaApplyStream(s: SparkSession, d: String): DataFrame = {
-    import graft.ops.DeltaSync
-    val base = java.nio.file.Files.createTempDirectory("graft_cdc_apply")
-    try {
+  def deltaApplyStream(s: SparkSession, d: String): DataFrame =
+    withScratch(s, "graft_cdc_apply") { base =>
       val src = base.resolve("ops").toString
       val state = base.resolve("state").toString
       val ckpt = base.resolve("ckpt").toString
-      val c = graft.ops.Fixtures.customer(s, d).select(col("c_custkey"), col("c_mktsegment"))
-      val inserts = c
-        .withColumn("is_deleted", lit(0L))
-        .withColumn("seq", col("c_custkey").cast("long"))
-      val updates = c
-        .filter(col("c_custkey") % 5 === 0)
-        .withColumn("c_mktsegment", concat(col("c_mktsegment"), lit("_u")))
-        .withColumn("is_deleted", lit(0L))
-        .withColumn("seq", (col("c_custkey") + 10000000L).cast("long"))
-      val deletes = c
-        .filter(col("c_custkey") % 11 === 0)
-        .withColumn("is_deleted", lit(1L))
-        .withColumn("seq", (col("c_custkey") + 20000000L).cast("long"))
-      inserts.unionByName(updates).unionByName(deletes)
-        .repartition(4, col("c_custkey"))
-        .write.parquet(src)
-      val fs = new org.apache.hadoop.fs.Path(state)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      s.readStream
-        .schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val cur =
-            if (fs.exists(new org.apache.hadoop.fs.Path(state))) s.read.parquet(state)
-            else batch.limit(0)
-          val merged = DeltaSync
-            .applyOps(cur, batch, "c_custkey", "seq", Seq("c_mktsegment"))
-            .localCheckpoint(true)
-          try merged.write.mode(SaveMode.Overwrite).parquet(state)
-          finally graft.ops.GraphDedup.releaseCheckpoints(merged)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+      writeCdcFeed(s, d, src)
+      drain(batches(fileReplay(s, src))((batch, batchId) => rewriteState(s, state, batchId)(cdcMerge(batch))), ckpt)
       s.read.parquet(state)
         .filter(col("is_deleted") === 0L)
         .select(col("c_custkey"), col("c_mktsegment"), col("seq"))
         .orderBy("c_custkey")
         .localCheckpoint(true)
-    } finally rmScratch(s, base)
+    }
+
+  /** [[deltaApplyStream]]'s feed, written as 4 files into `src`. */
+  private[streaming] def writeCdcFeed(s: SparkSession, d: String, src: String): Unit = {
+    val c = graft.ops.Fixtures.customer(s, d).select(col("c_custkey"), col("c_mktsegment"))
+    val inserts = c
+      .withColumn("is_deleted", lit(0L))
+      .withColumn("seq", col("c_custkey").cast("long"))
+    val updates = c
+      .filter(col("c_custkey") % 5 === 0)
+      .withColumn("c_mktsegment", concat(col("c_mktsegment"), lit("_u")))
+      .withColumn("is_deleted", lit(0L))
+      .withColumn("seq", (col("c_custkey") + 10000000L).cast("long"))
+    val deletes = c
+      .filter(col("c_custkey") % 11 === 0)
+      .withColumn("is_deleted", lit(1L))
+      .withColumn("seq", (col("c_custkey") + 20000000L).cast("long"))
+    inserts.unionByName(updates).unionByName(deletes)
+      .repartition(4, col("c_custkey"))
+      .write.parquet(src)
   }
+
+  /** [[deltaApplyStream]]'s per-batch merge: `batch` folded into the
+    * current state (an empty state before the first batch).
+    */
+  private[streaming] def cdcMerge(batch: DataFrame)(cur: Option[DataFrame]): DataFrame =
+    graft.ops.DeltaSync.applyOps(cur.getOrElse(batch.limit(0)), batch, "c_custkey", "seq", Seq("c_mktsegment"))
 
   /** The CONTAINMENT screen as a stream — fourth member of the
     * filters-as-streams family: the collected corpus's chunk-digest
@@ -1646,10 +1446,9 @@ object StreamingIngest {
     * Per-doc pairs are pure in (doc, index) — the index is frozen, no
     * new×new pairs — so the stream shares the batch probe's oracle.
     */
-  def cdcContainmentStream(s: SparkSession, d: String): DataFrame = {
-    import graft.ops.Cdc
-    val base = java.nio.file.Files.createTempDirectory("graft_cdc_stream")
-    try {
+  def cdcContainmentStream(s: SparkSession, d: String): DataFrame =
+    withScratch(s, "graft_cdc_stream") { base =>
+      import graft.ops.Cdc
       val idxDir = base.resolve("chunk_index").toString
       val src = base.resolve("src").toString
       val out = base.resolve("pairs").toString
@@ -1662,32 +1461,26 @@ object StreamingIngest {
         .parquet(idxDir)
       val index = s.read.parquet(idxDir)
       arrivals.repartition(4, col("doc_id")).write.parquet(src)
-      s.readStream
-        .schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          Cdc
-            .containmentAgainstIndex(
-              spread(batch, "doc_id"), index, "doc_id", "text", Cdc.fixtureDivisor,
-              minContainmentMicro = 800000L, maxDocsPerChunk = 8)
-            .write
-            .mode("append")
-            .parquet(out)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+      val pairs = appendEach(fileReplay(s, src), out) { batch =>
+        Cdc.containmentAgainstIndex(
+          spread(batch, "doc_id"), index, "doc_id", "text", Cdc.fixtureDivisor,
+          minContainmentMicro = 800000L, maxDocsPerChunk = 8)
+      }
+      drain(pairs, ckpt)
       s.read.parquet(out).orderBy("new_id", "idx_id").localCheckpoint(true)
-    } finally rmScratch(s, base)
-  }
+    }
 
-  def decontaminateStream(s: SparkSession, d: String): DataFrame = {
-    import graft.ops.Decontamination
-    val base = java.nio.file.Files.createTempDirectory("graft_decon_stream")
-    try {
+  /** Decontamination as a stream: the benchmark's n-gram digests are
+    * PERSISTED once (eval suites change rarely; the corpus is the
+    * thing that streams) and every arriving micro-batch probes the
+    * loaded digest artifact — per-doc flags are a pure function of
+    * (doc, digests), so the stream shares the batch route's oracle.
+    * Per batch: one shingle pass + broadcast digest join; hit rows
+    * append, nothing stateful accumulates.
+    */
+  def decontaminateStream(s: SparkSession, d: String): DataFrame =
+    withScratch(s, "graft_decon_stream") { base =>
+      import graft.ops.Decontamination
       val digDir = base.resolve("digests").toString
       val src = base.resolve("src").toString
       val out = base.resolve("flags").toString
@@ -1705,25 +1498,12 @@ object StreamingIngest {
         .repartition(4, col("doc_id"))
         .write
         .parquet(src)
-      s.readStream
-        .schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          Decontamination
-            .contaminationAgainstDigests(spread(batch, "doc_id"), digests)
-            .write
-            .mode("append")
-            .parquet(out)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+      val flags = appendEach(fileReplay(s, src), out) { batch =>
+        Decontamination.contaminationAgainstDigests(spread(batch, "doc_id"), digests)
+      }
+      drain(flags, ckpt)
       s.read.parquet(out).orderBy("doc_id").localCheckpoint(true)
-    } finally rmScratch(s, base)
-  }
+    }
 
   /** The CCNet LM filter as a stream — third member of the
     * filters-as-streams family (classifier, decontamination, now the
@@ -1733,9 +1513,8 @@ object StreamingIngest {
     * model), so the stream shares perplexity_score's oracle exactly
     * (the fixture regime trains on the same corpus it scores).
     */
-  def perplexityStreamScores(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_ppl_stream")
-    try {
+  def perplexityStreamScores(s: SparkSession, d: String): DataFrame =
+    withScratch(s, "graft_ppl_stream") { base =>
       val modelDir = base.resolve("model").toString
       val src = base.resolve("src").toString
       val out = base.resolve("scores").toString
@@ -1744,25 +1523,12 @@ object StreamingIngest {
       graft.ops.CorpusStats.unigramModel(docs).repartition(1).write.parquet(modelDir)
       val model = s.read.parquet(modelDir)
       docs.select("doc_id", "text").repartition(4, col("doc_id")).write.parquet(src)
-      s.readStream
-        .schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.ops.CorpusStats
-            .scoreWithUnigramModel(spread(batch, "doc_id"), model)
-            .write
-            .mode("append")
-            .parquet(out)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+      val scores = appendEach(fileReplay(s, src), out) { batch =>
+        graft.ops.CorpusStats.scoreWithUnigramModel(spread(batch, "doc_id"), model)
+      }
+      drain(scores, ckpt)
       s.read.parquet(out).orderBy("doc_id").localCheckpoint(true)
-    } finally rmScratch(s, base)
-  }
+    }
 
   /** DSIR importance weighting as a stream — fifth filters-as-streams
     * member: the nBuckets-row importance model is PERSISTED once (it
@@ -1771,10 +1537,9 @@ object StreamingIngest {
     * foreachBatch. Per-doc log-weights are pure in (doc, model), so
     * the stream shares the batch dsir_weights oracle.
     */
-  def dsirStreamWeights(s: SparkSession, d: String): DataFrame = {
-    import graft.ops.DataSelection
-    val base = java.nio.file.Files.createTempDirectory("graft_dsir_stream")
-    try {
+  def dsirStreamWeights(s: SparkSession, d: String): DataFrame =
+    withScratch(s, "graft_dsir_stream") { base =>
+      import graft.ops.DataSelection
       val modelDir = base.resolve("model").toString
       val src = base.resolve("src").toString
       val out = base.resolve("weights").toString
@@ -1787,24 +1552,62 @@ object StreamingIngest {
         .parquet(modelDir)
       val model = s.read.parquet(modelDir)
       docs.select("doc_id", "text").repartition(4, col("doc_id")).write.parquet(src)
-      s.readStream
-        .schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          DataSelection
-            .weightsAgainstModel(spread(batch, "doc_id"), model, DataSelection.fixtureBuckets)
-            .write
-            .mode("append")
-            .parquet(out)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+      val weights = appendEach(fileReplay(s, src), out) { batch =>
+        DataSelection.weightsAgainstModel(spread(batch, "doc_id"), model, DataSelection.fixtureBuckets)
+      }
+      drain(weights, ckpt)
       s.read.parquet(out).orderBy("doc_id").localCheckpoint(true)
-    } finally rmScratch(s, base)
+    }
+
+  /** Streaming GROUPED linear counting — the CMS twin for
+    * cardinality: events arrive as micro-batches and the running
+    * state is the distinct (hour, bucket) pair set, bounded by
+    * |hours|·m whatever the event volume (the state-bounding argument
+    * that makes the sketch streaming-native; exact distinct state
+    * would grow with the user population). Post-drain, occupancy per
+    * hour reads the Complete-mode sink and the estimate is the shared
+    * arithmetic; the exact count is recomputed from the batch table
+    * (the sketch_topk pattern), so the stream shares
+    * events_hourly_distinct's oracle end to end.
+    */
+  def sketchStreamDistinct(s: SparkSession, d: String): DataFrame = {
+    val m = 4096
+    withScratch(s, "graft_lc_stream") { base =>
+      val src = base.resolve("src").toString
+      val ckpt = base.resolve("ckpt").toString
+      val ev = graft.ops.Fixtures
+        .events(s, d)
+        .withColumn("hour_bucket", expr("ts_nanos div 1000 div 3600000000"))
+        .select(col("hour_bucket"), col("user_id"))
+      ev.repartition(4, col("user_id")).write.parquet(src)
+      val sinkName = s"graft_lc_occupancy_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+      // state-store partition count derived from the replay's size;
+      // the memory sink registers in the clone, so the serve side
+      // (occupancy + exact recount over the SAME written rows) reads
+      // through the clone too — one session per plan, no cross-session
+      // DataFrame mixing
+      val s2 = statefulReplaySession(s, src)
+      val occupancy = fileReplay(s2, src)
+        .select(col("hour_bucket"), graft.ops.CorpusStats.lcBucketCol(col("user_id"), m).as("bucket"))
+        .groupBy(col("hour_bucket"), col("bucket"))
+        .agg(count(lit(1)).as("n"))
+      drain(occupancy.writeStream.outputMode(OutputMode.Complete).format("memory").queryName(sinkName), ckpt)
+      val occ = s2
+        .table(sinkName)
+        .groupBy(col("hour_bucket"))
+        .agg(count(lit(1)).cast("long").as("occupied"))
+      val out = s2.read
+        .parquet(src)
+        .groupBy(col("hour_bucket"))
+        .agg(countDistinct(col("user_id")).cast("long").as("exact"))
+        .join(occ, "hour_bucket")
+        .withColumn("est_milli", graft.ops.CorpusStats.lcEstimateCol(m))
+        .select(col("hour_bucket"), col("exact"), col("occupied"), col("est_milli"))
+        .orderBy("hour_bucket")
+        .localCheckpoint(true)
+      s2.catalog.dropTempView(sinkName)
+      out
+    }
   }
 
   /** STREAMING count-min counters + batch serve — the trending-token
@@ -1827,74 +1630,10 @@ object StreamingIngest {
     * to the batch sketch_topk_tokens — whose plain exact oracle this
     * query shares.
     */
-  /** Streaming GROUPED linear counting — the CMS twin for
-    * cardinality: events arrive as micro-batches and the running
-    * state is the distinct (hour, bucket) pair set, bounded by
-    * |hours|·m whatever the event volume (the state-bounding argument
-    * that makes the sketch streaming-native; exact distinct state
-    * would grow with the user population). Post-drain, occupancy per
-    * hour reads the Complete-mode sink and the estimate is the shared
-    * arithmetic; the exact count is recomputed from the batch table
-    * (the sketch_topk pattern), so the stream shares
-    * events_hourly_distinct's oracle end to end.
-    */
-  def sketchStreamDistinct(s: SparkSession, d: String): DataFrame = {
-    val m = 4096
-    val base = java.nio.file.Files.createTempDirectory("graft_lc_stream")
-    try {
-      val src = base.resolve("src").toString
-      val ckpt = base.resolve("ckpt").toString
-      val ev = graft.ops.Fixtures
-        .events(s, d)
-        .withColumn("hour_bucket", expr("ts_nanos div 1000 div 3600000000"))
-        .select(col("hour_bucket"), col("user_id"))
-      ev.repartition(4, col("user_id")).write.parquet(src)
-      val sinkName = s"graft_lc_occupancy_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-      // state-store partition count derived from the replay's size;
-      // the memory sink registers in the clone, so the serve side
-      // (occupancy + exact recount over the SAME written rows) reads
-      // through the clone too — one session per plan, no cross-session
-      // DataFrame mixing
-      val s2 = statefulReplaySession(s, src)
-      val stream = s2.readStream
-        .schema(s2.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-      stream
-        .select(col("hour_bucket"), graft.ops.CorpusStats.lcBucketCol(col("user_id"), m).as("bucket"))
-        .groupBy(col("hour_bucket"), col("bucket"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream
-        .outputMode(OutputMode.Complete)
-        .format("memory")
-        .queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-      val occ = s2
-        .table(sinkName)
-        .groupBy(col("hour_bucket"))
-        .agg(count(lit(1)).cast("long").as("occupied"))
-      val out = s2.read
-        .parquet(src)
-        .groupBy(col("hour_bucket"))
-        .agg(countDistinct(col("user_id")).cast("long").as("exact"))
-        .join(occ, "hour_bucket")
-        .withColumn("est_milli", graft.ops.CorpusStats.lcEstimateCol(m))
-        .select(col("hour_bucket"), col("exact"), col("occupied"), col("est_milli"))
-        .orderBy("hour_bucket")
-        .localCheckpoint(true)
-      s2.catalog.dropTempView(sinkName)
-      out
-    } finally rmScratch(s, base)
-  }
-
   def sketchStreamTopk(s: SparkSession, d: String): DataFrame = {
     val width = 1024
     val depth = 4
-    val base = java.nio.file.Files.createTempDirectory("graft_cms_stream")
-    try {
+    withScratch(s, "graft_cms_stream") { base =>
       val src = base.resolve("src").toString
       val ckpt = base.resolve("ckpt").toString
       val docs = graft.ops.Fixtures.documents(s, d)
@@ -1904,20 +1643,9 @@ object StreamingIngest {
       // the counters collect to a driver Seq (depth×width bounded), so
       // only the stream + its memory sink live on the clone
       val s2 = statefulReplaySession(s, src)
-      val stream = s2.readStream
-        .schema(s2.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-      graft.ops.CorpusStats
-        .cmsCounters(stream.select(explode(split(col("text"), " ")).as("token")), width, depth)
-        .writeStream
-        .outputMode(OutputMode.Complete)
-        .format("memory")
-        .queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+      val counts = graft.ops.CorpusStats
+        .cmsCounters(fileReplay(s2, src).select(explode(split(col("text"), " ")).as("token")), width, depth)
+      drain(counts.writeStream.outputMode(OutputMode.Complete).format("memory").queryName(sinkName), ckpt)
       val counters = s2
         .table(sinkName)
         .collect()
@@ -1929,7 +1657,7 @@ object StreamingIngest {
         .cmsProbe(toks, counters, minCount = 500L, width = width, depth = depth)
         .orderBy(desc("n"), col("token"))
         .localCheckpoint(true)
-    } finally rmScratch(s, base)
+    }
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -812,34 +812,45 @@ class StreamingIngestSpec extends SparkSpec {
 
   test("fresh-checkpoint restart on an existing index dir fails loudly (no silent batch drop)") {
     implicit val sc = spark.sqlContext
-    val idx = Files.createTempDirectory("graft_search_sid").toString + "/idx"
-    val ckptA = Files.createTempDirectory("graft_search_sid_cka").toString
-    val ckptB = Files.createTempDirectory("graft_search_sid_ckb").toString
-    val memA = MemoryStream[(Long, String)]
-    val qA = StreamingIngest.searchIndexStream(
-      memA.toDF().toDF("doc_id", "text"), "doc_id", "text", idx, ckptA)
-    memA.addData((1L, "cat dog"), (2L, "cat")); qA.processAllAvailable(); qA.stop()
-    // a NEW checkpoint restarts batch ids at 0: with only the marker
-    // gate, every batch until id > old marker would be silently lost —
-    // the identity gate must fail the stream instead
-    val memB = MemoryStream[(Long, String)]
-    val qB = StreamingIngest.searchIndexStream(
-      memB.toDF().toDF("doc_id", "text"), "doc_id", "text", idx, ckptB)
-    memB.addData((3L, "dog extra"))
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      qB.processAllAvailable()
+    // every exactly-once maintainer shares the gate: each is started on
+    // a stream of (doc_id, text, op) rows shaped the way it reads them
+    type Start = (org.apache.spark.sql.DataFrame, String, String) => org.apache.spark.sql.streaming.StreamingQuery
+    def checkGate(kind: String)(start: Start): Unit = StreamingIngest.withScratch(spark, s"graft_${kind}_sid") { base =>
+      val idx = base.resolve("idx").toString
+      val ckptA = base.resolve("cka").toString
+      val ckptB = base.resolve("ckb").toString
+      def stream(mem: MemoryStream[(Long, String, String)]) = mem.toDF().toDF("doc_id", "text", "op")
+      val memA = MemoryStream[(Long, String, String)]
+      val qA = start(stream(memA), idx, ckptA)
+      memA.addData((1L, "cat dog", "I"), (2L, "cat", "I")); qA.processAllAvailable(); qA.stop()
+      // a NEW checkpoint restarts batch ids at 0: with only the marker
+      // gate, every batch until id > old marker would be silently lost —
+      // the identity gate must fail the stream instead
+      val memB = MemoryStream[(Long, String, String)]
+      val qB = start(stream(memB), idx, ckptB)
+      memB.addData((3L, "dog extra", "I"))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        qB.processAllAvailable()
+      }
+      def chain(t: Throwable): Seq[String] =
+        Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).toSeq
+      assert(
+        chain(e).exists(_.contains("TOGETHER")),
+        s"$kind: expected the retain-or-discard-together guard, got: ${chain(e).mkString(" | ")}"
+      )
+      // the SAME checkpoint resuming is fine (identity matches)
+      val memC = MemoryStream[(Long, String, String)]
+      val qC = start(stream(memC), idx, ckptA)
+      memC.addData((3L, "dog extra", "I")); qC.processAllAvailable(); qC.stop()
     }
-    def chain(t: Throwable): Seq[String] =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).toSeq
-    assert(
-      chain(e).exists(_.contains("TOGETHER")),
-      s"expected the retain-or-discard-together guard, got: ${chain(e).mkString(" | ")}"
-    )
-    // the SAME checkpoint resuming is fine (identity matches)
-    val memC = MemoryStream[(Long, String)]
-    val qC = StreamingIngest.searchIndexStream(
-      memC.toDF().toDF("doc_id", "text"), "doc_id", "text", idx, ckptA)
-    memC.addData((3L, "dog extra")); qC.processAllAvailable(); qC.stop()
+    checkGate("search")((df, idx, ckpt) =>
+      StreamingIngest.searchIndexStream(df.drop("op"), "doc_id", "text", idx, ckpt))
+    checkGate("fielded")((df, idx, ckpt) =>
+      StreamingIngest.fieldedIndexStream(df.toDF("doc_id", "title", "body"), "doc_id", Seq("title", "body"), idx, ckpt))
+    checkGate("docstore")((df, idx, ckpt) =>
+      StreamingIngest.docStoreStream(df.drop("op"), "doc_id", "text", idx, ckpt))
+    checkGate("cdc")((df, idx, ckpt) =>
+      StreamingIngest.searchIndexCdcStream(df, "doc_id", "text", "op", idx, ckpt))
   }
 
   test("CDC apply: delete removes, update replaces, a LATER re-insert resurrects past the delete") {
@@ -866,5 +877,113 @@ class StreamingIngestSpec extends SparkSpec {
     )
     assert(ids("worm") == Set(1L), "re-insert after delete must serve")
     assert(ids("cat") == Set.empty[Long], "the resurrected doc serves only its NEW text")
+  }
+
+  test("an interrupted drain stops its query and still removes its scratch tree") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val started = new CountDownLatch(1)
+    val never = new CountDownLatch(1)
+    @volatile var scratch: java.nio.file.Path = null
+    @volatile var failure: Throwable = null
+    val before = spark.streams.active.map(_.id).toSet
+    val drainer = new Thread(() =>
+      try StreamingIngest.withScratch(spark, "graft_drain_interrupt") { base =>
+        scratch = base
+        val src = base.resolve("src").toString
+        spark.range(8).repartition(2).write.parquet(src)
+        val blocked = StreamingIngest.batches(StreamingIngest.fileReplay(spark, src)) { (_, _) =>
+          started.countDown()
+          never.await()
+        }
+        StreamingIngest.drain(blocked, base.resolve("ckpt").toString)
+      } catch { case e: Throwable => failure = e })
+    drainer.start()
+    assert(started.await(5, TimeUnit.MINUTES), "the first micro-batch never started")
+    val running = spark.streams.active.filterNot(q => before(q.id))
+    assert(running.length == 1)
+    drainer.interrupt()
+    drainer.join(TimeUnit.MINUTES.toMillis(5))
+    never.countDown() // frees the batch if the query was left running
+    assert(!drainer.isAlive, "the draining thread did not return")
+    assert(failure.isInstanceOf[InterruptedException], s"expected the interrupt to propagate, got $failure")
+    assert(!running.head.isActive, "the interrupted drain left its query running")
+    assert(scratch != null && !Files.exists(scratch), s"scratch tree $scratch left behind")
+  }
+
+  test("a failed CDC state write keeps the applied state; a re-run on the checkpoint finishes the fold") {
+    import org.apache.spark.sql.DataFrame
+    StreamingIngest.withScratch(spark, "graft_cdc_swap") { base =>
+      val src = base.resolve("ops").toString
+      val state = base.resolve("state").toString
+      val ckpt = base.resolve("ckpt").toString
+      StreamingIngest.writeCdcFeed(spark, "/root/testdata/sf0.001", src)
+      def rows(df: DataFrame): Set[Seq[Any]] =
+        df.select("c_custkey", "c_mktsegment", "is_deleted", "seq").collect().map(_.toSeq).toSet
+      def applyAll(shape: Long => DataFrame => DataFrame) =
+        StreamingIngest.batches(StreamingIngest.fileReplay(spark, src)) { (batch, batchId) =>
+          StreamingIngest.rewriteState(spark, state, batchId, shape(batchId))(StreamingIngest.cdcMerge(batch))
+        }
+      // batch 2's merged state fails INSIDE its write job, after the
+      // merge itself was materialized
+      val boom = udf((x: String) => if (x == "\u0000") x else throw new IllegalStateException("injected write failure"))
+      @volatile var afterFirst = Set.empty[Seq[Any]]
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        StreamingIngest.drain(
+          applyAll { batchId => df =>
+            if (batchId == 0L) afterFirst = rows(df)
+            if (batchId == 1L) df.withColumn("c_mktsegment", boom(col("c_mktsegment"))) else df
+          },
+          ckpt
+        )
+      }
+      assert(
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(t => String.valueOf(t.getMessage).contains("injected write failure")),
+        e.toString
+      )
+      assert(afterFirst.nonEmpty)
+      assert(rows(spark.read.parquet(state)) == afterFirst, "the failed write must leave batch 1's state in place")
+      assert(graft.core.Compaction.readTextFile(spark, s"$state/_graft_last_batch").map(_.trim) == Some("0"))
+      // the same checkpoint resumes at the failed batch and lands on the
+      // one-shot fold of the whole feed
+      StreamingIngest.drain(applyAll(_ => identity), ckpt)
+      assert(rows(spark.read.parquet(state)) == rows(StreamingIngest.cdcMerge(spark.read.parquet(src))(None)))
+      assert(!Files.exists(Paths.get(state + "__compacting")))
+    }
+  }
+
+  test("replays leave no running query and no scratch dir behind") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryStartedEvent, QueryTerminatedEvent}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    val prefixes = Seq("graft_cdc_apply", "graft_facet_stream", "graft_events_replay")
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def scratchDirs(): Set[String] =
+      tmp.listFiles().map(_.getName).filter(n => prefixes.exists(n.startsWith)).toSet
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    // query events reach the context's listener bus from every session,
+    // including the clones the stateful replays run in
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case q: QueryStartedEvent    => started.add(q.runId)
+        case q: QueryTerminatedEvent => ended.add(q.runId)
+        case _                       => ()
+      }
+    }
+    val before = scratchDirs()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Seq("delta_apply_stream", "search_facets_stream", "events_stream_replay").foreach { name =>
+        assert(StreamingIngest.queries(name)(spark, "/root/testdata/sf0.001").count() > 0, name)
+      }
+      // 1 CDC drain + 2 × 2 sibling facet drains + 2 window-replay phases
+      eventually(timeout(Span(60, Seconds))) {
+        assert(started.size == 7)
+        assert(ended.containsAll(started))
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(spark.streams.active.forall(q => !started.contains(q.runId)))
+    assert(scratchDirs() -- before == Set.empty[String])
   }
 }

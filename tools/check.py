@@ -4,6 +4,9 @@ run DuckDB oracle SQL against the fixture parquet tables and compare
 with the Verify parquet dumps (columns sorted by name, rows sorted).
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir> [query ...]
+
+A named query that has no oracle in <verifyOutDir>/oracle_sql.json is an
+error, and a run that compared no query exits nonzero.
 """
 import sys, os, json, glob
 import duckdb
@@ -29,6 +32,9 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_ok = n_bad = n_err = 0
+    for name in sorted(only - set(oracles)):
+        print(f"UNKNOWN  {name} (no oracle in {out_dir}/oracle_sql.json)")
+        n_err += 1
     for name in sorted(oracles):
         if only and name not in only:
             continue
@@ -70,7 +76,9 @@ def main():
             print(f"OK       {name} ({len(orn)} rows)")
             n_ok += 1
     print(f"\n{n_ok} ok, {n_bad} mismatched, {n_err} errored")
-    sys.exit(1 if (n_bad or n_err) else 0)
+    if n_ok + n_bad == 0:
+        print("nothing was compared")
+    sys.exit(1 if (n_bad or n_err or n_ok + n_bad == 0) else 0)
 
 if __name__ == "__main__":
     main()
