@@ -91,6 +91,29 @@ object Fixtures {
 
   private val demoIndexes = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** Dirs whose data outlives the call that made them — a memoized demo
+    * index serves the whole process, a returned DataFrame reads its
+    * scratch lazily — removed when the JVM exits.
+    */
+  private val processScratch = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  private lazy val reaper: Unit = {
+    sys.addShutdownHook(processScratch.forEach(f => org.apache.commons.io.FileUtils.deleteQuietly(f)))
+    ()
+  }
+
+  private def deleteAtExit(dir: String): Unit = {
+    reaper
+    processScratch.add(new java.io.File(dir))
+  }
+
+  /** A fresh `<java.io.tmpdir>/<prefix>…` dir removed when the JVM exits. */
+  def processScratchDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    deleteAtExit(dir)
+    dir
+  }
+
   /** Scratch dir for a self-contained query's demo index, built ONCE
     * per (kind, dataset) in this process. The application id in the
     * path keeps concurrent sessions (a bench and a verify run on the
@@ -108,6 +131,7 @@ object Fixtures {
           sys.props("java.io.tmpdir"),
           s"graft_${kind}_${md5hex(d)}_$appId"
         ).toString
+        deleteAtExit(dir)
         build(dir)
         dir
       }
@@ -122,7 +146,7 @@ object Fixtures {
     * action replays a tiny scan, not the now-uncached probe plan.
     */
   def materializedSorted(df: DataFrame, sortCols: Seq[String], caches: DataFrame*): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_mat").toString + "/r"
+    val out = processScratchDir("graft_mat") + "/r"
     df.write.parquet(out)
     caches.foreach(_.unpersist())
     df.sparkSession.read.parquet(out).orderBy(sortCols.map(col): _*)

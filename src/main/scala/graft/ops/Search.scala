@@ -61,6 +61,7 @@ import org.apache.spark.sql.functions._
 object Search {
   type Q = (SparkSession, String) => DataFrame
   import Fixtures._
+  import Generations.{hasTombstones, liveRows, Horizon, Increment, Kind, Ledger, Relation, Stats}
 
   /** Posting-head length: bounds the emitted row regardless of df. */
   private val headK = 16
@@ -739,8 +740,8 @@ object Search {
   /** The bucket-pruned read every index probe starts from: the terms'
     * token-hash buckets, computed driver-side (no Spark pass), become a
     * static PartitionFilter (spec-pinned) next to the token predicate,
-    * and dead rows drop through [[liveRows]] — or [[rowsAsOf]] for a
-    * time-travel read — directly over the scan. A probe for Q terms
+    * and dead rows drop through [[liveRows]] (as of a generation for a
+    * time-travel read) directly over the scan. A probe for Q terms
     * reads at most Q bucket dirs, never the index.
     */
   private def pruned(
@@ -753,7 +754,7 @@ object Search {
     val scan = rel.filter(
       col("tbucket").isin(terms.map(tokenBucket).distinct: _*) && col("token").isin(terms: _*)
     )
-    asOf.fold(liveRows(s, dir, scan))(g => rowsAsOf(s, dir, scan, g))
+    liveRows(s, dir, scan, asOf = asOf)
   }
 
   /** [[pruned]] over the analyzer's persisted postings. */
@@ -1696,12 +1697,11 @@ object Search {
       .mode("overwrite")
       .partitionBy("tbucket")
       .parquet(s"$dir/fpostings")
-    fieldedBase(docs, idCol, fieldCols)
-      .select(col("doc_id") +: fieldCols.map(f => col(s"dl_$f")): _*)
+    fieldedDocLengths(docs, idCol, fieldCols)
       .write
       .mode("overwrite")
       .parquet(s"$dir/fdoclen")
-    writeFmeta(s, dir, fieldedScalars(docs, idCol, fieldCols))
+    writeFmeta(s, dir, fieldScalars(fieldedBase(docs, idCol, fieldCols), fieldCols, docCount))
   }
 
   /** (doc_id, __toks_<f>…, dl_<f>…) — the shared projection under the
@@ -1738,27 +1738,30 @@ object Search {
       .reduce(_ unionByName _)
   }
 
-  /** Per-field scalar deltas for a doc set: (field, n_docs,
-    * total_toks) — ONE fused aggregate over the base projection.
+  /** (doc_id, dl_<f>…) — the fielded doc-keyed registry rows. */
+  private def fieldedDocLengths(docs: DataFrame, idCol: String, fieldCols: Seq[String]): DataFrame =
+    fieldedBase(docs, idCol, fieldCols).select(col("doc_id") +: fieldCols.map(f => col(s"dl_$f")): _*)
+
+  /** Per-field (n_docs, total_toks) over doc-keyed rows carrying the
+    * dl_<f> columns, `n` counting the docs — ONE fused aggregate.
     */
-  private def fieldedScalars(docs: DataFrame, idCol: String, fieldCols: Seq[String]): Seq[(String, Long, Long)] = {
-    val base = fieldedBase(docs, idCol, fieldCols)
-    val aggs = countDistinct(col("doc_id")).cast("long") +:
-      fieldCols.map(f => coalesce(sum(col(s"dl_$f")), lit(0L)).cast("long"))
-    val r = base.agg(aggs.head, aggs.tail: _*).head()
-    fieldCols.zipWithIndex.map { case (f, i) => (f, r.getLong(0), r.getLong(i + 1)) }
+  private def fieldScalars(rows: DataFrame, fieldCols: Seq[String], n: Column): Generations.Scalars = {
+    val r = rows.agg(n, fieldCols.map(f => coalesce(sum(col(s"dl_$f")), lit(0L)).cast("long")): _*).head()
+    fieldCols.zipWithIndex.map { case (f, i) => f -> Seq(r.getLong(0), r.getLong(i + 1)) }
   }
+
+  private def docCount: Column = countDistinct(col("doc_id")).cast("long")
 
   private val fmetaSchema =
     "message fmeta { optional binary field (UTF8); optional int64 n_docs; optional int64 total_toks; }"
 
-  private def writeFmeta(s: SparkSession, dir: String, rows: Seq[(String, Long, Long)]): Unit =
+  private def writeFmeta(s: SparkSession, dir: String, rows: Generations.Scalars): Unit =
     graft.core.ScalarParquet.overwriteDir(
       s.sessionState.newHadoopConf(),
       fsFor(s, dir),
       new org.apache.hadoop.fs.Path(s"$dir/fmeta"),
       fmetaSchema,
-      rows.map { case (f, n, t) => Seq(f, n, t) }
+      rows.map { case (f, v) => f +: v }
     )
 
   private def readFmeta(s: SparkSession, dir: String): Map[String, (Long, Long)] = {
@@ -1790,58 +1793,49 @@ object Search {
     )
   }
 
-  // ---- fielded meta-increment ledger (fmeta_inc) ----------------------
-  //
-  // The fielded twin of `meta_inc`: one (field, n_docs, total_toks)
-  // ROW-SET per applied increment under a deterministic tag name, and
-  // fmeta is the per-field SUM over the ledger — exactly-once batch
-  // maintenance at ledger cost (see the meta_inc block), × fields.
+  /** The fielded twin of `meta_inc`: one (field, n_docs, total_toks)
+    * row set per applied increment; fmeta is the per-field sum.
+    */
+  private val fieldedLedger = Ledger("fmeta_inc", fmetaSchema, key = Some("field"))
 
-  private def fledgerDir(dir: String) = s"$dir/fmeta_inc"
-
-  private def fledgerFiles(fs: org.apache.hadoop.fs.FileSystem, dir: String) =
-    Option(fs.globStatus(new org.apache.hadoop.fs.Path(s"${fledgerDir(dir)}/*.parquet")))
-      .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-
-  private def writeFledgerRows(
-      s: SparkSession,
-      dir: String,
-      rows: Seq[(String, Long, Long)],
-      tag: String
-  ): Unit =
-    graft.core.ScalarParquet.writeAtomic(
-      s.sessionState.newHadoopConf(),
-      fsFor(s, dir),
-      new org.apache.hadoop.fs.Path(fledgerDir(dir)),
-      s"$tag-0.parquet",
-      fmetaSchema,
-      rows.map { case (f, n, t) => Seq(f, n, t) }
+  /** The fielded index as a [[Generations]] kind: the postings index's
+    * protocol over fpostings/fdoclen with the per-field stats. Every
+    * batch is persisted — both relation writes and the scalar
+    * aggregate read it.
+    */
+  private def fieldedIndex(s: SparkSession, dir: String, fieldCols: Seq[String], idCol: String = "doc_id"): Kind =
+    Kind(
+      keyCol = "doc_id",
+      relations = Seq(
+        Relation(
+          "fpostings",
+          Some("tbucket"),
+          b => fieldedPostingRows(b, idCol, fieldCols).withColumn("tbucket", tokenBucketCol)
+        ),
+        Relation("fdoclen", None, b => fieldedDocLengths(b, idCol, fieldCols))
+      ),
+      stats = Some(
+        Stats(
+          fieldedLedger,
+          meta = "fmeta",
+          read = () => readFmeta(s, dir).toSeq.sorted.map { case (f, (n, t)) => f -> Seq(n, t) },
+          write = writeFmeta(s, dir, _),
+          batch = b => fieldScalars(fieldedBase(b, idCol, fieldCols), fieldCols, docCount),
+          deleted = ids =>
+            fieldScalars(
+              liveRows(s, dir, s.read.parquet(s"$dir/fdoclen")).join(broadcast(ids), "doc_id"),
+              fieldCols,
+              count(lit(1)).cast("long")
+            ),
+          rederive = () => fieldScalars(s.read.parquet(s"$dir/fdoclen"), fieldCols, docCount)
+        )
+      ),
+      persist = _ => true
     )
 
-  private def seedFledgerIfNeeded(s: SparkSession, dir: String): Unit = {
-    val fs = fsFor(s, dir)
-    if (fledgerFiles(fs, dir).isEmpty && fs.exists(new org.apache.hadoop.fs.Path(s"$dir/fmeta")))
-      writeFledgerRows(
-        s,
-        dir,
-        readFmeta(s, dir).toSeq.sorted.map { case (f, (n, t)) => (f, n, t) },
-        "seed"
-      )
-  }
-
-  private def fledgerSums(s: SparkSession, dir: String): Seq[(String, Long, Long)] = {
-    val m = scala.collection.mutable.Map.empty[String, (Long, Long)]
-    graft.core.ScalarParquet.foreachRow(
-      s.sessionState.newHadoopConf(),
-      fsFor(s, dir),
-      new org.apache.hadoop.fs.Path(fledgerDir(dir))
-    ) { g =>
-      val f = g.getString("field", 0)
-      val (n0, t0) = m.getOrElse(f, (0L, 0L))
-      m(f) = (n0 + g.getLong("n_docs", 0), t0 + g.getLong("total_toks", 0))
-    }
-    m.toSeq.map { case (f, (n, t)) => (f, n, t) }.sortBy(_._1)
-  }
+  /** [[fieldedIndex]] over the fields the index at `dir` was built with. */
+  private def fieldedIndexAt(s: SparkSession, dir: String): Kind =
+    fieldedIndex(s, dir, readFmeta(s, dir).keys.toSeq.sorted)
 
   /** APPEND new documents to a fielded index — fpostings/fdoclen grow
     * by the increment, fmeta's per-field scalars add the increment's
@@ -1872,65 +1866,37 @@ object Search {
       .mode("append")
       .partitionBy("tbucket")
       .parquet(s"$dir/fpostings")
-    fieldedBase(newDocs, idCol, fieldCols)
-      .select(col("doc_id") +: fieldCols.map(f => col(s"dl_$f")): _*)
+    fieldedDocLengths(newDocs, idCol, fieldCols)
       .write
       .mode("append")
       .parquet(s"$dir/fdoclen")
     val m0 = readFmeta(s, dir)
-    val inc = fieldedScalars(newDocs, idCol, fieldCols)
-    val merged = inc.map { case (f, n1, t1) => (f, m0(f)._1 + n1, m0(f)._2 + t1) }
+    val merged = fieldScalars(fieldedBase(newDocs, idCol, fieldCols), fieldCols, docCount).map {
+      case (f, Seq(n1, t1)) => f -> Seq(m0(f)._1 + n1, m0(f)._2 + t1)
+    }
     writeFmeta(s, dir, merged)
     // keep a maintaining stream's ledger invariant (fmeta = per-field
     // sum over fmeta_inc): appends are single-writer, never replayed —
     // a wholesale fold to one seed row-set is safe
-    val fs = fsFor(s, dir)
-    if (fledgerFiles(fs, dir).nonEmpty) {
-      fs.delete(new org.apache.hadoop.fs.Path(fledgerDir(dir)), true)
-      writeFledgerRows(s, dir, merged, "seed")
-    }
+    fieldedLedger.fold(s, dir, merged)
   }
 
-  /** DELETE documents from the fielded index — tombstones at
-    * high-gen + 1 over fpostings/fdoclen, per-field fmeta decremented
+  /** DELETE documents from the fielded index — the
+    * [[Generations.delete]] tombstones, per-field fmeta decremented
     * EXACTLY from the ids' currently-live fdoclen rows (double-deletes
     * move nothing), mirroring [[deleteFromSearchIndex]]. Purge at
     * [[compactFieldedIndex]].
     */
-  def deleteFromFieldedIndex(s: SparkSession, dir: String, ids: DataFrame): Unit = {
-    val fs = fsFor(s, dir)
-    val fields = readFmeta(s, dir).keys.toSeq.sorted
-    val asof = currentHighGen(s, dir, Seq("fpostings", "fdoclen", "tombstones")) + 1L
-    val idRel = ids.select(col(ids.columns.head).cast("long").as("doc_id")).distinct()
-    val hit = liveRows(s, dir, s.read.parquet(s"$dir/fdoclen")).join(broadcast(idRel), "doc_id")
-    val aggs = count(lit(1)).cast("long") +:
-      fields.map(f => coalesce(sum(col(s"dl_$f")), lit(0L)).cast("long"))
-    val r = hit.agg(aggs.head, aggs.tail: _*).head()
-    val nDel = r.getLong(0)
-    val tDel = fields.zipWithIndex.map { case (f, i) => f -> r.getLong(i + 1) }.toMap
-    // tombstones first, stats second (the [[deleteFromSearchIndex]]
-    // crash ordering: stale stats heal at compaction, never the
-    // reverse)
-    writeTombstones(s, dir, idRel.withColumn("asof", lit(asof)), asof)
-    val m0 = readFmeta(s, dir)
-    val merged = fields.map(f => (f, m0(f)._1 - nDel, m0(f)._2 - tDel(f)))
-    writeFmeta(s, dir, merged)
-    if (fledgerFiles(fs, dir).nonEmpty)
-      writeFledgerRows(s, dir, fields.map(f => (f, -nDel, -tDel(f))), s"del-$asof")
-  }
+  def deleteFromFieldedIndex(s: SparkSession, dir: String, ids: DataFrame): Unit =
+    Generations.delete(fieldedIndexAt(s, dir), s, dir, ids)
 
   /** Apply ONE micro-batch of fielded documents idempotently — the
     * unit [[graft.streaming.StreamingIngest.fieldedIndexStream]] runs
-    * inside foreachBatch; the exactly-once protocol is
-    * [[applySearchIndexBatch]]'s verbatim (crashed-attempt cleanup →
-    * staged renames under `gbatch-<gen>` names → batch-keyed ledger
-    * rows → fmeta as the ledger sum), with the fielded relations and
-    * the per-field ledger in place of the unfielded ones. Upsert
-    * batches tombstone their own ids at asof = gen first, so every
-    * older version dies while the batch's rows survive; the old
-    * versions' fmeta contributions stay counted until compaction (the
-    * documented Lucene stale-stats window — exact-match serving is
-    * unaffected, dead rows never score).
+    * inside foreachBatch, through [[Generations.apply]] (the fmeta_inc
+    * ledger in place of meta_inc). Upsert batches tombstone their own
+    * ids at the batch's generation; the old versions' fmeta
+    * contributions stay counted until compaction (the documented
+    * Lucene stale-stats window — dead rows never score).
     */
   private[graft] def applyFieldedIndexBatch(
       batch: DataFrame,
@@ -1940,96 +1906,20 @@ object Search {
       batchId: Long,
       upsert: Boolean = false
   ): Unit = {
-    import org.apache.hadoop.fs.Path
     val s = batch.sparkSession
-    val fs = fsFor(s, dir)
-    if (fs.exists(new Path(s"$dir/fmeta")))
+    if (fsFor(s, dir).exists(new org.apache.hadoop.fs.Path(s"$dir/fmeta")))
       requireFieldsMatch(s, dir, fieldCols, "applyFieldedIndexBatch")
-    seedFledgerIfNeeded(s, dir)
-    val gen = genBase(s, dir, Seq("fpostings", "fdoclen", "tombstones")) + batchId
-    Seq(s"$dir/fpostings/tbucket=*", s"$dir/fdoclen", tombstonesDir(dir), fledgerDir(dir))
-      .foreach { d =>
-        Option(fs.globStatus(new Path(s"$d/gbatch-$gen-*")))
-          .getOrElse(Array.empty)
-          .foreach(f => fs.delete(f.getPath, false))
-      }
-    val staged = s"$dir/_stage_f$batchId"
-    val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (upsert)
-        stageAndMove(
-          b.select(col(idCol).cast("long").as("doc_id")).distinct().withColumn("asof", lit(gen)),
-          s"$staged/tombstones",
-          tombstonesDir(dir),
-          partitionCol = None,
-          gen
-        )
-      // the two relation writes and the scalar aggregate are mutually
-      // independent over the persisted batch — overlap them (§2.6)
-      @volatile var scalars: Seq[(String, Long, Long)] = null
-      graft.core.Par.run(
-        () =>
-          stageAndMove(
-            fieldedPostingRows(b, idCol, fieldCols)
-              .withColumn("tbucket", tokenBucketCol)
-              .repartition(col("tbucket")),
-            s"$staged/fpostings",
-            s"$dir/fpostings",
-            partitionCol = Some("tbucket"),
-            gen
-          ),
-        () =>
-          stageAndMove(
-            fieldedBase(b, idCol, fieldCols)
-              .select(col("doc_id") +: fieldCols.map(f => col(s"dl_$f")): _*),
-            s"$staged/fdoclen",
-            s"$dir/fdoclen",
-            partitionCol = None,
-            gen
-          ),
-        () => scalars = fieldedScalars(b, idCol, fieldCols)
-      )
-      fs.delete(new Path(staged), true)
-      writeFledgerRows(s, dir, scalars, s"gbatch-$gen")
-      writeFmeta(s, dir, fledgerSums(s, dir))
-    } finally b.unpersist(false)
+    Generations.apply(fieldedIndex(s, dir, fieldCols, idCol), batch, idCol, dir, batchId, upsert)
   }
 
   /** Compact the fielded index: fpostings/fdoclen rewritten to one
     * file per dir (tombstones present → the rewrite IS the physical
     * purge), tombstones consumed, fmeta re-derived EXACTLY from the
-    * purged fdoclen relation (n_docs = countDistinct, per-field
-    * total_toks = sum dl_<f> — heals the documented upsert
-    * stale-stats window), and the fielded ledger folded back to one
-    * seed row-set. The one fielded maintenance step allowed to scan
-    * doc-keyed relations — amortized cadence, never the per-batch
-    * loop.
+    * purged fdoclen (healing the upsert stale-stats window), and the
+    * fielded ledger folded back to one seed row set.
     */
-  def compactFieldedIndex(spark: SparkSession, dir: String): Unit = {
-    val fs = fsFor(spark, dir)
-    val fields = readFmeta(spark, dir).keys.toSeq.sorted
-    val tomb = if (hasTombstones(spark, dir)) Some(tombstoneMaxAsof(spark, dir)) else None
-    val purgeGen = tomb.map(_.agg(max(col("t_asof"))).head().getLong(0)).getOrElse(-1L)
-    def rewriteRel(path: String, pc: Option[String]): Unit = tomb match {
-      case Some(t) => purgeRewrite(spark, path, pc, t, purgeGen)
-      case None    => graft.core.Compaction.compact(spark, path, pc, 1)
-    }
-    // the two relation rewrites are independent — overlap them (§2.6)
-    graft.core.Par.run(
-      () => rewriteRel(s"$dir/fpostings", Some("tbucket")),
-      () => rewriteRel(s"$dir/fdoclen", None)
-    )
-    if (tomb.isDefined) fs.delete(new org.apache.hadoop.fs.Path(tombstonesDir(dir)), true)
-    val aggs = countDistinct(col("doc_id")).cast("long") +:
-      fields.map(f => coalesce(sum(col(s"dl_$f")), lit(0L)).cast("long"))
-    val r = spark.read.parquet(s"$dir/fdoclen").agg(aggs.head, aggs.tail: _*).head()
-    val repaired = fields.zipWithIndex.map { case (f, i) => (f, r.getLong(0), r.getLong(i + 1)) }
-    writeFmeta(spark, dir, repaired)
-    if (fledgerFiles(fs, dir).nonEmpty) {
-      fs.delete(new org.apache.hadoop.fs.Path(fledgerDir(dir)), true)
-      writeFledgerRows(spark, dir, repaired, "seed")
-    }
-  }
+  def compactFieldedIndex(spark: SparkSession, dir: String): Unit =
+    Generations.compact(fieldedIndexAt(spark, dir), spark, dir)
 
   /** BM25F — fielded ranked retrieval with per-field boosts and
     * per-field length normalization (Zaragoza et al.'s field-weighted
@@ -2401,12 +2291,7 @@ object Search {
     // (meta = sum over dir/meta_inc): fold the ledger to one seed row
     // carrying the new totals — appends are single-writer and never
     // replayed, so a wholesale rewrite is safe here
-    val fs = fsFor(s, dir)
-    if (ledgerFiles(fs, dir).nonEmpty) {
-      val a = foldedTotalOrZero(s, dir)
-      fs.delete(new org.apache.hadoop.fs.Path(ledgerDir(dir)), true)
-      writeLedgerRow(s, dir, (n0 + n1, t0 + t1, a), "seed")
-    }
+    searchLedger.fold(s, dir, Seq("" -> Seq(n0 + n1, t0 + t1, foldedTotalOrZero(s, dir))))
   }
 
   // ---- exactly-once batch apply (the streaming maintainer's path) ----
@@ -2434,182 +2319,13 @@ object Search {
         "silently serve old results) — pass analyzed = true"
     )
 
-  /** Last batch id fully applied to the index at `dir` (−1 if none) —
-    * the skip gate that makes a foreachBatch REPLAY of an already-
-    * applied batch a no-op under at-least-once delivery.
+  /** The postings index's (n_docs, total_toks, total_atoks) ledger
+    * ([[Generations.Ledger]]); meta and ameta are its sums.
     */
-  private[graft] def lastAppliedSearchBatch(s: SparkSession, dir: String): Long = {
-    val fs = fsFor(s, dir)
-    val p = new org.apache.hadoop.fs.Path(dir, "_last_batch")
-    if (!fs.exists(p)) -1L
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    }
-  }
-
-  /** Guard against a FRESH-checkpoint restart on an existing index
-    * dir: foreachBatch batch ids restart at 0 with a new checkpoint,
-    * so the `_last_batch` skip gate alone would silently DROP every
-    * batch until the new ids pass the old marker. The index dir
-    * records the identity (checkpoint path) of the stream that
-    * maintains it; a mismatch fails loudly with the retain-or-discard-
-    * together contract instead of losing data. Writing the identity is
-    * idempotent (a replayed first batch rewrites the same value).
-    */
-  private[graft] def ensureStreamIdentity(s: SparkSession, dir: String, streamId: String): Unit = {
-    val fs = fsFor(s, dir)
-    val p = new org.apache.hadoop.fs.Path(dir, "_stream_id")
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val existing =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      require(
-        existing == streamId,
-        s"search index at $dir is maintained by the stream checkpointed at '$existing' but " +
-          s"this stream checkpoints at '$streamId': a fresh checkpoint restarts batch ids at 0 " +
-          "and the applied-batch marker would silently drop every batch until the ids pass it — " +
-          "retain or discard the checkpoint and the index dir TOGETHER"
-      )
-    } else {
-      val out = fs.create(p, true)
-      try out.write(s"$streamId\n".getBytes("UTF-8"))
-      finally out.close()
-    }
-  }
-
-  /** Advance the applied-batch marker — written only AFTER a batch's
-    * relation files and meta are on disk, so the marker never claims
-    * an unapplied batch. (The reverse crash — files applied, marker
-    * unwritten — replays the batch, whose apply is idempotent.)
-    */
-  private[graft] def writeLastAppliedSearchBatch(s: SparkSession, dir: String, batchId: Long): Unit = {
-    val fs = fsFor(s, dir)
-    val out = fs.create(new org.apache.hadoop.fs.Path(dir, "_last_batch"), true)
-    try out.write(s"$batchId\n".getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** Stage a relation increment then RENAME its data files into the
-    * live dir under names derived from the batch id (`gbatch-<B>-<i>`)
-    * — the deterministic naming that makes a batch's apply repeatable:
-    * a retry first deletes every `gbatch-<B>-*` file a crashed attempt
-    * left, then re-stages and re-moves, so the live relation holds the
-    * batch's rows EXACTLY once however many times the batch replays.
-    * The staged write is mode-overwrite (itself retry-safe) and the
-    * moves are filesystem renames (metadata ops, no data copy).
-    */
-  private[ops] def stageAndMove(
-      df: DataFrame,
-      stagedDir: String,
-      targetDir: String,
-      partitionCol: Option[String],
-      batchId: Long
-  ): Unit = {
-    import org.apache.hadoop.fs.Path
-    val s = df.sparkSession
-    val fs = fsFor(s, targetDir)
-    val w = df.write.mode("overwrite")
-    partitionCol.fold(w)(w.partitionBy(_)).parquet(stagedDir)
-    val glob = partitionCol match {
-      case Some(c) => new Path(s"$stagedDir/$c=*/part-*")
-      case None    => new Path(s"$stagedDir/part-*")
-    }
-    val files = Option(fs.globStatus(glob)).getOrElse(Array.empty).map(_.getPath).sortBy(_.toString)
-    files.zipWithIndex.foreach { case (src, i) =>
-      val destDir =
-        if (partitionCol.isDefined) new Path(targetDir, src.getParent.getName) else new Path(targetDir)
-      fs.mkdirs(destDir)
-      val dest = new Path(destDir, s"gbatch-$batchId-$i.parquet")
-      if (!fs.rename(src, dest))
-        throw new java.io.IOException(s"search-index batch apply: rename $src -> $dest failed")
-    }
-    fs.delete(new Path(stagedDir), true)
-  }
-
-  // ---- batch-keyed meta-increment ledger ----------------------------
-  //
-  // `dir/meta_inc/` holds ONE row per applied increment — the batch's
-  // three scalar deltas (n_docs, total_toks, total_atoks) under the
-  // deterministic `gbatch-<B>-0.parquet` name — and meta/ameta are the
-  // SUMS over the ledger. That keeps the exactly-once property (meta
-  // is still a pure function of on-disk state: a replayed batch
-  // deletes and rewrites its own ledger row, then re-sums) at
-  // LEDGER cost instead of corpus cost: the old recompute scanned the
-  // ENTIRE doclen relation (doc cardinality, ~10¹⁰ rows at 100 TB)
-  // and, on analyzed indexes, the ENTIRE apostings relation
-  // (corpus-token cardinality) per micro-batch — a scale-killer in a
-  // streaming hot loop. The ledger is batches-count-sized; compaction
-  // folds it back to one seed row.
-  //
-  // Cross-batch contract (same as appendToSearchIndex): increments
-  // carry NEW doc ids only — per-batch countDistinct sums equal the
-  // global count exactly when ids never repeat across batches (a
-  // repeated id would equally corrupt the relations themselves).
-
-  private def ledgerDir(dir: String) = s"$dir/meta_inc"
-
-  /** Ledger files currently on disk (empty array if the dir is absent). */
-  private def ledgerFiles(fs: org.apache.hadoop.fs.FileSystem, dir: String) =
-    Option(fs.globStatus(new org.apache.hadoop.fs.Path(s"${ledgerDir(dir)}/*.parquet")))
-      .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-
-  /** Seed the ledger from the CURRENT meta/ameta scalars — run once
-    * when a stream starts maintaining an index that predates the
-    * ledger (built by [[saveSearchIndex]] / grown by
-    * [[appendToSearchIndex]]). Trigger condition is "ledger has no
-    * FILES and meta exists": meta is only ever (re)written AFTER a
-    * batch's ledger row lands, so a non-empty ledger can never be
-    * wrongly re-seeded, and a crash that left an EMPTY ledger dir
-    * behind re-seeds correctly on replay.
-    */
-  private def seedLedgerIfNeeded(s: SparkSession, dir: String): Unit = {
-    val fs = fsFor(s, dir)
-    if (ledgerFiles(fs, dir).isEmpty && fs.exists(new org.apache.hadoop.fs.Path(s"$dir/meta"))) {
-      val (n0, t0) = readMeta(s, dir)
-      writeLedgerRow(s, dir, (n0, t0, foldedTotalOrZero(s, dir)), "seed")
-    }
-  }
-
-  /** Write one scalar ledger row under its deterministic
-    * `<tag>-0.parquet` name (replay overwrites) — driver-side
-    * temp+rename, zero Spark jobs.
-    */
-  private def writeLedgerRow(s: SparkSession, dir: String, row: (Long, Long, Long), tag: String): Unit =
-    graft.core.ScalarParquet.writeAtomic(
-      s.sessionState.newHadoopConf(),
-      fsFor(s, dir),
-      new org.apache.hadoop.fs.Path(ledgerDir(dir)),
-      s"$tag-0.parquet",
-      "message ledger { optional int64 n_docs; optional int64 total_toks; optional int64 total_atoks; }",
-      Seq(Seq(row._1, row._2, row._3))
-    )
-
-  /** The three meta scalars as the SUM over the increment ledger —
-    * ledger-sized I/O (one row per applied batch), never a corpus
-    * read; summed driver-side with no Spark job.
-    */
-  private def ledgerSums(s: SparkSession, dir: String): (Long, Long, Long) = {
-    var (n, t, a) = (0L, 0L, 0L)
-    graft.core.ScalarParquet.foreachRow(
-      s.sessionState.newHadoopConf(),
-      fsFor(s, dir),
-      new org.apache.hadoop.fs.Path(ledgerDir(dir))
-    ) { g =>
-      n += g.getLong("n_docs", 0)
-      t += g.getLong("total_toks", 0)
-      // field-existence check first: a legacy ledger file without the
-      // total_atoks column must read as 0, not throw
-      // InvalidRecordException from getFieldRepetitionCount
-      val hasAtoks =
-        (0 until g.getType.getFieldCount).exists(i => g.getType.getFieldName(i) == "total_atoks")
-      if (hasAtoks && g.getFieldRepetitionCount("total_atoks") > 0)
-        a += g.getLong("total_atoks", 0)
-    }
-    (n, t, a)
-  }
+  private val searchLedger = Ledger(
+    "meta_inc",
+    "message ledger { optional int64 n_docs; optional int64 total_toks; optional int64 total_atoks; }"
+  )
 
   // ---- term dictionary (the vocab relation) ---------------------------
   //
@@ -3397,156 +3113,18 @@ object Search {
       )
   }
 
-  // ---- tombstone deletes & upserts -----------------------------------
-  //
-  // Deleting (or replacing) documents in a corpus-scale inverted index
-  // cannot rewrite the files it touches — one doc's tokens scatter
-  // across every bucket dir. The shape that survives 100 TB is
-  // Lucene's: record deletions as TOMBSTONES, exclude dead rows at
-  // probe time (an anti-join against a deletes-since-last-compaction-
-  // sized relation), and purge physically at the compaction cadence.
-  //
-  // GENERATIONS make re-adding a deleted id (the upsert) correct
-  // without rewriting anything: an index row's generation is the batch
-  // id parsed from its FILE name (`gbatch-<B>-…` → B; base-build and
-  // batch-append files → −1), a tombstone is (doc_id, asof), and a row
-  // is DEAD iff some tombstone of its doc_id has asof > generation. An
-  // upsert batch B tombstones its ids at asof = B and lands its rows
-  // in gbatch-B files: every older version dies, the batch's own rows
-  // survive, and a LATER upsert's tombstone kills them in turn.
-  // Compaction applies tombstones physically and rewrites survivors
-  // under gbatch-<P> names, P = the max asof it consumed — survivors
-  // are immune to every tombstone the compaction applied, so a CRASHED
-  // purge rerun converges instead of re-killing them (a row is only
-  // ever re-judged by tombstones STRICTLY newer than its rewrite).
-
-  // the tombstone machinery is key-column-parametric (doc_id for the
-  // search index, vec_id for the IVF index) with doc_id the default —
-  // one implementation serves every tombstoned index here
-  private def tombstonesSchemaFor(keyCol: String) =
-    new org.apache.spark.sql.types.StructType()
-      .add(keyCol, "long")
-      .add("asof", "long")
-
-  private[ops] def tombstonesDir(dir: String) = s"$dir/tombstones"
-
-  private[ops] def hasTombstones(s: SparkSession, dir: String): Boolean =
-    fsFor(s, dir).exists(new org.apache.hadoop.fs.Path(tombstonesDir(dir)))
-
-  /** Row generation parsed from the source file name (scan-time,
-    * codegen'd regexp — no extra I/O): `gbatch-<B>-…` → B, anything
-    * else (base build, batch append) → −1.
-    */
-  private def genFromFileCol: org.apache.spark.sql.Column = {
-    val m = regexp_extract(input_file_name(), "gbatch-(\\d+)-", 1)
-    when(m === "", lit(-1L)).otherwise(m.cast("long"))
-  }
-
-  /** Tombstones folded to one (key, max asof) row per deleted id. */
-  private[ops] def tombstoneMaxAsof(s: SparkSession, dir: String, keyCol: String = "doc_id"): DataFrame =
-    s.read
-      .schema(tombstonesSchemaFor(keyCol))
-      .parquet(tombstonesDir(dir))
-      .groupBy(col(keyCol))
-      .agg(max(col("asof")).as("t_asof"))
-      .select(col(keyCol).as("t_key"), col("t_asof"))
-
-  /** Exclude DEAD rows from an index relation at probe time. Fast path
-    * first: no tombstones on disk → the relation is returned UNTOUCHED
-    * (zero plan change — the common case pays nothing, spec-pinned).
-    * Otherwise a left-anti join against the broadcast (doc_id,
-    * max asof) tombstone fold with the generation inequality: a row
-    * dies iff its file-name generation predates its id's newest
-    * tombstone. Must be applied directly over the pruned scan (before
-    * any shuffle) so input_file_name() still names the source file.
-    */
-  private[ops] def liveRows(
-      s: SparkSession,
-      dir: String,
-      rel: DataFrame,
-      keyCol: String = "doc_id"
-  ): DataFrame =
-    if (!hasTombstones(s, dir)) rel
-    else {
-      val g = rel.withColumn("__gen", genFromFileCol)
-      g.join(
-        broadcast(tombstoneMaxAsof(s, dir, keyCol)),
-        g(keyCol) === col("t_key") && col("__gen") < col("t_asof"),
-        "left_anti"
-      ).drop("__gen")
-    }
-
   // ---- time-travel (as-of-generation) reads ---------------------------
   //
   // The generation machinery already versions every row (file-name
   // gen) and every delete (tombstone asof) — TIME TRAVEL falls out:
   // the index as of generation G is the rows with gen ≤ G, minus the
-  // tombstones with asof ≤ G, scored against the ledger sums up to G.
-  // This is the retrieval-provenance primitive a training pipeline
-  // needs ("re-run the exact retrieval that built last week's
-  // dataset"), valid back to the LAST COMPACTION — a purge physically
-  // drops history, exactly Lucene's retention contract. Per-probe
-  // cost is the live probe's plus one tombstone-fold filter.
-
-  /** Tombstones folded per key over asof ≤ G only. */
-  private def tombstoneMaxAsofUpTo(
-      s: SparkSession,
-      dir: String,
-      asOfGen: Long,
-      keyCol: String = "doc_id"
-  ): DataFrame =
-    s.read
-      .schema(tombstonesSchemaFor(keyCol))
-      .parquet(tombstonesDir(dir))
-      .filter(col("asof") <= asOfGen)
-      .groupBy(col(keyCol))
-      .agg(max(col("asof")).as("t_asof"))
-      .select(col(keyCol).as("t_key"), col("t_asof"))
-
-  /** The relation as it stood AFTER generation G: rows with file
-    * generation ≤ G, dead iff a tombstone with asof ≤ G outranks
-    * their generation. Applied directly over the pruned scan (the
-    * input_file_name contract [[liveRows]] documents).
-    */
-  /** The last compaction's travel horizon (−1 if never compacted):
-    * compaction folds the ledger to one seed row and renames survivors
-    * to the purge generation (or −1 on the pure-compact path), so any
-    * as-of read at a generation BELOW it would silently serve empty
-    * pages or the live state — the guards in [[rowsAsOf]]/[[metaAsOf]]
-    * fail loudly instead.
-    */
-  private def asOfHorizon(s: SparkSession, dir: String): Long =
-    graft.core.Compaction
-      .readTextFile(s, s"$dir/_asof_horizon")
-      .map(_.trim.toLong)
-      .getOrElse(-1L)
-
-  private def requireAsOfInsideHorizon(s: SparkSession, dir: String, asOfGen: Long): Unit = {
-    val h = asOfHorizon(s, dir)
-    require(
-      asOfGen >= h,
-      s"as-of read at $dir: generation $asOfGen predates the last compaction " +
-        s"(horizon $h) — compaction ends the travel horizon"
-    )
-  }
-
-  private def rowsAsOf(
-      s: SparkSession,
-      dir: String,
-      rel: DataFrame,
-      asOfGen: Long,
-      keyCol: String = "doc_id"
-  ): DataFrame = {
-    requireAsOfInsideHorizon(s, dir, asOfGen)
-    val g = rel.withColumn("__gen", genFromFileCol).filter(col("__gen") <= asOfGen)
-    if (!hasTombstones(s, dir)) g.drop("__gen")
-    else
-      g.join(
-        broadcast(tombstoneMaxAsofUpTo(s, dir, asOfGen, keyCol)),
-        g(keyCol) === col("t_key") && col("__gen") < col("t_asof"),
-        "left_anti"
-      ).drop("__gen")
-  }
+  // tombstones with asof ≤ G ([[liveRows]] with `asOf`), scored
+  // against the ledger sums up to G. This is the retrieval-provenance
+  // primitive a training pipeline needs ("re-run the exact retrieval
+  // that built last week's dataset"), valid back to the LAST
+  // COMPACTION — a purge physically drops history, exactly Lucene's
+  // retention contract. Per-probe cost is the live probe's plus one
+  // tombstone-fold filter.
 
   /** The (N, total_toks) scalars at generation G — the ledger rows up
     * to G (the seed row, gen −1, predates every batch and always
@@ -3556,9 +3134,9 @@ object Search {
     */
   private def metaAsOf(s: SparkSession, dir: String, asOfGen: Long): (Long, Long) = {
     val fs = fsFor(s, dir)
-    requireAsOfInsideHorizon(s, dir, asOfGen)
+    Generations.requireAsOfInsideHorizon(s, dir, asOfGen)
     require(
-      ledgerFiles(fs, dir).nonEmpty,
+      searchLedger.files(s, dir).nonEmpty,
       s"as-of read at $dir: no increment ledger — only batch-apply/stream-maintained " +
         "indexes carry per-generation meta history"
     )
@@ -3567,7 +3145,7 @@ object Search {
     val genRe = "gbatch-(\\d+)-".r
     var (n, t) = (0L, 0L)
     val conf = s.sessionState.newHadoopConf()
-    ledgerFiles(fs, dir).map(_.getPath).sortBy(_.toString).foreach { p =>
+    searchLedger.files(s, dir).map(_.getPath).sortBy(_.toString).foreach { p =>
       val gen = genRe.findFirstMatchIn(p.getName).map(_.group(1).toLong).getOrElse(-1L)
       if (gen <= asOfGen)
         graft.core.ScalarParquet.foreachRow(conf, fs, p) { g =>
@@ -3637,89 +3215,108 @@ object Search {
       asOfGen: Long
   ): DataFrame = termSearchFromIndex(s, indexDir, terms, k, requireAll = true, asOf = Some(asOfGen))
 
-  /** High-water generation: max over the applied-batch marker, every
-    * data file's parsed `gbatch-<B>` generation, and every tombstone
-    * file's `del-<asof>` tag — a driver-side file LISTING, run only at
-    * the maintenance cadence (deletes), never in a probe.
+  /** The postings index as a [[Generations]] kind. Per tier: the
+    * bucketed postings (the doc length denormalized on every row;
+    * compaction re-derives — and on pre-vocab indexes backfills — the
+    * tier's vocab from them) and positions; the doc-keyed doclen; the
+    * vocab increments of tiers that carry a vocab, derived from the
+    * batch's persisted postings (upserts leave the old versions'
+    * counts in place until compaction — the Lucene stale-stats
+    * window); and the (n_docs, total_toks, total_atoks) stats behind
+    * meta/ameta, ledgered in meta_inc. Cache decisions, measured at
+    * fixture scale: the minimal raw path (no upsert, no folded tier, no
+    * vocab) reads the at-rest batch four times through cheap
+    * projections — caching it costs more than the re-scans save; every
+    * heavier path multiplies the readers and the persist wins outright
+    * (isolated A/B: upsert replay 23.9 → 14.5 s).
     */
-  /** Every generation-carrying relation of a search index, both tiers. */
-  private def indexRels: Seq[String] =
-    Analyzer.tiers(folded = true).flatMap(a => Seq(a.postings, a.positions)) ++ Seq("doclen", "tombstones")
-
-  private[ops] def currentHighGen(
+  private def postingsIndex(
       s: SparkSession,
       dir: String,
-      rels: Seq[String] = indexRels
-  ): Long = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsFor(s, dir)
-    val pat = "(?:gbatch|del)-(\\d+)-".r
-    val fileGens =
-      rels.flatMap { r =>
-        val p = new Path(s"$dir/$r")
-        if (!fs.exists(p)) Nil
-        else {
-          val it = fs.listFiles(p, true)
-          val b = scala.collection.mutable.ArrayBuffer.empty[Long]
-          while (it.hasNext) {
-            pat.findFirstMatchIn(it.next().getPath.getName).foreach(m => b += m.group(1).toLong)
+      folded: Boolean,
+      idCol: String = "doc_id",
+      textCol: String = "text"
+  ): Kind = {
+    val tiers = Analyzer.tiers(folded)
+    val vocabTiers = tiers.filter(a => fsFor(s, dir).exists(new org.apache.hadoop.fs.Path(vocabDir(dir, a))))
+    def bucketed(df: DataFrame) = df.withColumn("tbucket", tokenBucketCol)
+    def sumOf(c: String) = coalesce(sum(col(c)), lit(0L)).cast("long")
+    // (n_docs, total_toks) from `r`, total_atoks only on folded indexes
+    def scalars(r: org.apache.spark.sql.Row, atoks: => Long) =
+      Seq("" -> Seq(r.getLong(0), r.getLong(1), if (folded) atoks else 0L))
+    Kind(
+      keyCol = "doc_id",
+      relations = tiers.flatMap { a =>
+        Seq(
+          Relation(
+            a.postings,
+            Some("tbucket"),
+            b => bucketed(postingsWithDl(b, idCol, textCol, a)),
+            () => writeVocabFromPostings(s, dir, a)
+          ),
+          Relation(a.positions, Some("tbucket"), b => bucketed(positionalPostings(b, idCol, textCol, a)))
+        )
+      } :+ Relation("doclen", None, b => docLengths(b, idCol, textCol)),
+      increments = vocabTiers.map { a =>
+        Increment(
+          s"${a.vocab}_inc",
+          a.postings,
+          p => vocabFromPostingRows(p.select(col("token"), col("doc_id"), col("tf"))).coalesce(1)
+        )
+      },
+      stats = Some(
+        Stats(
+          searchLedger,
+          meta = "meta",
+          read = () => {
+            val (n, t) = readMeta(s, dir)
+            Seq("" -> Seq(n, t, foldedTotalOrZero(s, dir)))
+          },
+          write = m => {
+            val Seq(n, t, a) = m.head._2
+            writeMeta(s, dir, (n, t))
+            if (folded) writeAmeta(s, dir, a)
+          },
+          batch = b => {
+            val r = b.agg(countDistinct(col(idCol)).cast("long"), tiers.map(tokenTotal(textCol, _)): _*).head()
+            scalars(r, r.getLong(2))
+          },
+          deleted = ids => {
+            def hit(rel: DataFrame) = liveRows(s, dir, rel).join(broadcast(ids), "doc_id")
+            val r = hit(s.read.parquet(s"$dir/doclen")).agg(count(lit(1)).cast("long"), sumOf("dl")).head()
+            scalars(
+              r,
+              hit(s.read.schema(postingsSchema(Folded)).parquet(s"$dir/${Folded.postings}"))
+                .select(col("doc_id"), col(Folded.dl))
+                .distinct()
+                .agg(sumOf(Folded.dl))
+                .head()
+                .getLong(0)
+            )
+          },
+          rederive = () => {
+            val r = s.read.parquet(s"$dir/doclen").agg(countDistinct(col("doc_id")).cast("long"), sumOf("dl")).head()
+            scalars(r, foldedTotalFromPostings(s, dir))
           }
-          b.toSeq
-        }
-      }
-    (lastAppliedSearchBatch(s, dir) +: fileGens).max
+        )
+      ),
+      persist = upsert => folded || upsert || vocabTiers.contains(Raw),
+      horizon = Horizon.WithLedger
+    )
   }
 
   /** DELETE documents from the persisted index — the batch-API entry
-    * point (a stream replaces docs through the upsert apply instead).
-    * Writes tombstones at asof = high-water generation + 1 (killing
-    * every live row of those ids, whatever wrote it) and decrements
-    * the meta scalars EXACTLY — the (dl, adl) sums of the ids that are
-    * currently LIVE, so deleting an already-deleted or absent id moves
-    * nothing and BM25's N/avgdl stay exact through any delete pattern.
-    * The decrement pass reads the doclen relation (and, on analyzed
-    * indexes, the deleted ids' apostings rows) ONCE per delete call —
-    * maintenance-cadence work, never per-probe and never per-micro-
-    * batch. Physical purge happens at [[compactSearchIndex]], which
-    * also drops the tombstones. Single-writer, like every maintenance
-    * entry point here.
+    * point (a stream replaces docs through the upsert apply): the
+    * [[Generations.delete]] tombstones, with meta/ameta decremented by
+    * the ids' LIVE (dl, adl) sums, so deleting an already-deleted or
+    * absent id moves nothing and BM25's N/avgdl stay exact through any
+    * delete pattern. The decrement reads doclen (and, on analyzed
+    * indexes, the deleted ids' apostings rows) once per call —
+    * maintenance cadence, never per probe. [[compactSearchIndex]]
+    * purges physically.
     */
-  def deleteFromSearchIndex(s: SparkSession, dir: String, ids: DataFrame): Unit = {
-    val fs = fsFor(s, dir)
-    val asof = currentHighGen(s, dir) + 1L
-    val idRel = ids.select(col(ids.columns.head).cast("long").as("doc_id")).distinct()
-    // exact decrements, computed BEFORE the tombstones land (liveRows
-    // afterwards would exclude the very rows being measured): only
-    // currently-LIVE rows count, so double-deletes decrement once
-    val hit = liveRows(s, dir, s.read.parquet(s"$dir/doclen"))
-      .join(broadcast(idRel), "doc_id")
-    val hr = hit
-      .agg(count(lit(1)).cast("long"), coalesce(sum(col("dl")), lit(0L)).cast("long"))
-      .head()
-    val (nDel, tDel) = (hr.getLong(0), hr.getLong(1))
-    val analyzed = hasFoldedTier(s, dir)
-    val aDel =
-      if (!analyzed) 0L
-      else
-        liveRows(s, dir, s.read.schema(postingsSchema(Folded)).parquet(s"$dir/${Folded.postings}"))
-          .join(broadcast(idRel), "doc_id")
-          .select(col("doc_id"), col(Folded.dl))
-          .distinct()
-          .agg(coalesce(sum(col(Folded.dl)), lit(0L)).cast("long"))
-          .head()
-          .getLong(0)
-    // tombstones first, stats second: a crash between the two leaves a
-    // correct result set with stale stats (the Lucene window), healed
-    // by compaction — never the reverse (stats claiming deletes that
-    // don't serve)
-    writeTombstones(s, dir, idRel.withColumn("asof", lit(asof)), asof)
-    val (n0, t0) = readMeta(s, dir)
-    writeMeta(s, dir, (n0 - nDel, t0 - tDel))
-    if (analyzed) writeAmeta(s, dir, readAmeta(s, dir) - aDel)
-    // keep the streaming ledger invariant (meta = sum over the ledger)
-    if (ledgerFiles(fs, dir).nonEmpty)
-      writeLedgerRow(s, dir, (-nDel, -tDel, -aDel), s"del-$asof")
-  }
+  def deleteFromSearchIndex(s: SparkSession, dir: String, ids: DataFrame): Unit =
+    Generations.delete(postingsIndex(s, dir, hasFoldedTier(s, dir)), s, dir, ids)
 
   /** Seq convenience overload of [[deleteFromSearchIndex]]. */
   def deleteFromSearchIndex(s: SparkSession, dir: String, ids: Seq[Long]): Unit = {
@@ -3727,77 +3324,14 @@ object Search {
     deleteFromSearchIndex(s, dir, ids.toDF("doc_id"))
   }
 
-  /** The stream's GENERATION BASE for an index dir: batch N's rows
-    * carry generation base + N. 0 when the stream bootstraps the dir
-    * from nothing (every existing gate's file names are unchanged);
-    * adopting a PRE-EXISTING index records high-gen + 1, so the
-    * stream's generations — and its upsert tombstones' asof values —
-    * always exceed every generation already on disk. Without this, a
-    * stream adopting a previously deleted-and-purged index would
-    * write batch-0 tombstones at asof 0, unable to kill the purge's
-    * gbatch-<P> survivors, and stale document versions would serve
-    * silently. Recorded once at adoption (replays read the value).
-    */
-  private[ops] def genBase(s: SparkSession, dir: String, rels: Seq[String]): Long = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsFor(s, dir)
-    val p = new Path(dir, "_gen_base")
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    } else {
-      val base = currentHighGen(s, dir, rels) + 1L
-      fs.mkdirs(new Path(dir))
-      val out = fs.create(p, true)
-      try out.write(s"$base\n".getBytes("UTF-8"))
-      finally out.close()
-      base
-    }
-  }
-
-  /** Stage one tombstone file ((key, asof) rows) and rename it in
-    * under the `del-<asof>-0` name the high-gen file listing parses.
-    */
-  private[ops] def writeTombstones(s: SparkSession, dir: String, rows: DataFrame, asof: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsFor(s, dir)
-    val staged = s"$dir/_stage_del_$asof"
-    rows.coalesce(1).write.mode("overwrite").parquet(staged)
-    val src = fs.globStatus(new Path(s"$staged/part-*")).head.getPath
-    fs.mkdirs(new Path(tombstonesDir(dir)))
-    val dest = new Path(tombstonesDir(dir), s"del-$asof-0.parquet")
-    if (fs.exists(dest)) fs.delete(dest, false)
-    if (!fs.rename(src, dest))
-      throw new java.io.IOException(s"delete tombstone write: rename $src -> $dest failed")
-    fs.delete(new Path(staged), true)
-  }
-
   /** Apply ONE micro-batch of new documents to the index at `dir`,
     * idempotently — the unit [[graft.streaming.StreamingIngest
-    * .searchIndexStream]] runs inside foreachBatch. Every step is
-    * retry-safe, so foreachBatch's at-least-once delivery yields an
-    * exactly-once index:
-    *
-    *  1. seed the meta-increment ledger from the current meta if this
-    *     stream took over an index that predates it
-    *     ([[seedLedgerIfNeeded]] — a once-per-index-lifetime step);
-    *  2. delete any `gbatch-<B>-*` files a CRASHED prior attempt of
-    *     this same batch left in postings/positions/doclen/meta_inc;
-    *  3. stage the increment's relations and rename their files in
-    *     under `gbatch-<B>-<i>` names ([[stageAndMove]]);
-    *  4. write the batch's ledger row — its three scalar deltas,
-    *     computed from the BATCH alone (increment-sized aggregates) —
-    *     and rewrite meta/ameta as the SUM over the ledger. Still a
-    *     pure function of on-disk state (a replayed batch rewrites
-    *     its own row and re-sums to the same scalars), but at ledger
-    *     cost: the per-batch FULL doclen/apostings recompute this
-    *     replaces scanned doc-/corpus-token-cardinality relations in
-    *     the streaming hot loop.
-    *
-    * The first batch needs no bootstrap special case: appending onto
-    * not-yet-existing dirs creates them, and an all-empty batch's
-    * ledger row is (0, 0, 0).
+    * .searchIndexStream]] runs inside foreachBatch, through
+    * [[Generations.apply]]. Upsert batches tombstone their ids — or, on
+    * the CDC path, `tombstoneIds`: a delete op contributes a tombstone
+    * but no rows — at the batch's generation; the old versions' stats
+    * stay counted until compaction (the documented Lucene window,
+    * bounded by compactEvery — dead rows never score).
     */
   private[graft] def applySearchIndexBatch(
       batch: DataFrame,
@@ -3807,169 +3341,21 @@ object Search {
       batchId: Long,
       analyzed: Boolean = false,
       upsert: Boolean = false,
-      // CDC hook: tombstone THESE ids instead of the batch's own — a
-      // delete op contributes a tombstone but no rows (the batch holds
-      // only the inserted/updated docs)
       tombstoneIds: Option[DataFrame] = None
   ): Unit = {
-    import org.apache.hadoop.fs.Path
     val s = batch.sparkSession
-    val fs = fsFor(s, dir)
     requireFoldedTierMaintained(s, dir, analyzed, "applySearchIndexBatch")
-    seedLedgerIfNeeded(s, dir)
-    // the batch's GENERATION: its batch id offset by the dir's
-    // recorded base, so generations always exceed whatever a
-    // pre-adoption lifecycle (build / append / delete / purge) left
-    // on disk — see [[genBase]]
-    val gen = genBase(s, dir, indexRels) + batchId
-    val allTiers = Analyzer.tiers(folded = true)
-    (allTiers.flatMap(a => Seq(s"$dir/${a.postings}/tbucket=*", s"$dir/${a.positions}/tbucket=*")) ++
-      Seq(s"$dir/doclen", tombstonesDir(dir), ledgerDir(dir)) ++
-      allTiers.map(vocabIncDir(dir, _)))
-      .foreach { d =>
-        Option(fs.globStatus(new Path(s"$d/gbatch-$gen-*")))
-          .getOrElse(Array.empty)
-          .foreach(f => fs.delete(f.getPath, false))
-      }
-    val staged = s"$dir/_stage_$batchId"
-    // ---- one materialization of the batch and its grouped postings --
-    // The apply launches ~8 jobs per micro-batch (relations, scalars,
-    // vocab increments, ledger); each used to re-read the micro-batch
-    // source and re-tokenize from scratch — postingsWithDl was derived
-    // TWICE (relation write at the top, vocab increment at the bottom)
-    // and corpusScalars/analyzedTotal re-tokenized the batch two more
-    // times. Persist the batch and the grouped postings once, derive
-    // doclen/vocab/scalars from the persisted forms, and fuse the
-    // ledger scalars into ONE aggregate: every job after the first
-    // reads memory, not the source — the per-batch fixed-cost floor,
-    // not the asymptotics (those are already batch/ledger-sized).
-    // cache decisions, measured at fixture scale and reasoned at 100 TB:
-    // the minimal raw path (no upsert, no folded tier, no vocab yet)
-    // reads the at-rest micro-batch four times through cheap
-    // projections — caching it there costs more than the re-scans
-    // save; every heavier path (upsert tombstones, the folded tier,
-    // vocab increments) multiplies the consumers and the persist wins
-    // outright (isolated A/B: upsert replay 23.9 → 14.5 s)
-    // per tier: (analyzer, its grouped postings, whether it carries a
-    // vocab to increment) — the postings persist when the vocab
-    // increment re-reads them
-    val tiers = Analyzer.tiers(analyzed).map(a => (a, fs.exists(new Path(vocabDir(dir, a)))))
-    val persistBatch = analyzed || upsert || tiers.head._2 || tombstoneIds.isDefined
-    val b =
-      if (persistBatch) batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else batch
-    val pwds = tiers.map { case (a, hasVocab) =>
-      val p = postingsWithDl(b, idCol, textCol, a)
-      if (hasVocab) p.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else p
-    }
-    try {
-      // UPSERT: tombstone the batch's ids at asof = gen BEFORE the new
-      // rows land — every OLDER version of these docs dies (its
-      // file-name generation < gen) while the batch's own gbatch-<gen>
-      // rows survive (gen < gen is false). Same deterministic-name
-      // replay contract as every other per-batch file. The old
-      // versions' meta contributions stay counted until compaction
-      // purges them — the documented Lucene stale-stats window,
-      // bounded by compactEvery (exact-match serving is unaffected:
-      // dead rows never score).
-      if (upsert)
-        stageAndMove(
-          tombstoneIds
-            .getOrElse(b.select(col(idCol).cast("long").as("doc_id")))
-            .select(col(idCol).cast("long").as("doc_id"))
-            .distinct()
-            .withColumn("asof", lit(gen)),
-          s"$staged/tombstones",
-          tombstonesDir(dir),
-          partitionCol = None,
-          gen
-        )
-      // the batch's scalar deltas — increment-sized, in ONE fused
-      // aggregate over the persisted batch (was two jobs, each
-      // re-tokenizing the source: corpusScalars + analyzedTotal)
-      val scalarAggs = countDistinct(col(idCol)).cast("long") +: tiers.map(t => tokenTotal(textCol, t._1))
-      // the batch's relation writes, its scalar aggregate and its vocab
-      // increments are mutually independent (distinct staged dirs,
-      // distinct live dirs, all reading the persisted batch/postings) —
-      // overlap them (§2.6) so the per-batch wall approaches the
-      // slowest job instead of the sum of 4-7 tiny jobs' fixed floors
-      @volatile var scalarRow: org.apache.spark.sql.Row = null
-      val writes = Seq.newBuilder[() => Unit]
-      tiers.zip(pwds).foreach { case ((a, _), pwd) =>
-        writes += (() =>
-          stageAndMove(
-            pwd.withColumn("tbucket", tokenBucketCol).repartition(col("tbucket")),
-            s"$staged/${a.postings}",
-            s"$dir/${a.postings}",
-            partitionCol = Some("tbucket"),
-            gen
-          ))
-        writes += (() =>
-          stageAndMove(
-            positionalPostings(b, idCol, textCol, a)
-              .withColumn("tbucket", tokenBucketCol)
-              .repartition(col("tbucket")),
-            s"$staged/${a.positions}",
-            s"$dir/${a.positions}",
-            partitionCol = Some("tbucket"),
-            gen
-          ))
-      }
-      // doclen straight off the persisted batch — a pure projection
-      // (deriving it from the grouped postings would ADD a distinct
-      // shuffle to save a tokenize of in-memory rows: a bad trade)
-      writes += (() =>
-        stageAndMove(
-          docLengths(b, idCol, textCol),
-          s"$staged/doclen",
-          s"$dir/doclen",
-          partitionCol = None,
-          gen
-        ))
-      writes += (() => scalarRow = b.agg(scalarAggs.head, scalarAggs.tail: _*).head())
-      // the batch's vocab increment per tier under its deterministic
-      // gbatch name (the replay cleanup above already removed a prior
-      // attempt's), derived from the ALREADY-grouped persisted postings;
-      // upsert batches leave the OLD versions' vocab counts in place —
-      // the documented Lucene stale-stats window, healed at compaction
-      tiers.zip(pwds).foreach { case ((a, hasVocab), pwd) =>
-        if (hasVocab)
-          writes += (() =>
-            writeVocabIncrement(
-              s,
-              dir,
-              vocabFromPostingRows(pwd.select(col("token"), col("doc_id"), col("tf"))),
-              s"gbatch-$gen",
-              a
-            ))
-      }
-      graft.core.Par.run(writes.result(): _*)
-      fs.delete(new Path(staged), true)
-      val r = scalarRow
-      val (nb, tb) = (r.getLong(0), r.getLong(1))
-      val ab = if (analyzed) r.getLong(2) else 0L
-      writeLedgerRow(s, dir, (nb, tb, ab), s"gbatch-$gen")
-      val (n, t, a) = ledgerSums(s, dir)
-      writeMeta(s, dir, (n, t))
-      if (analyzed) writeAmeta(s, dir, a)
-    } finally {
-      tiers.zip(pwds).foreach { case ((_, hasVocab), pwd) => if (hasVocab) pwd.unpersist(false) }
-      if (persistBatch) b.unpersist(false)
-    }
+    Generations.apply(postingsIndex(s, dir, analyzed, idCol, textCol), batch, idCol, dir, batchId, upsert, tombstoneIds)
   }
 
   /** Rewrite the postings/positions back to one file per bucket dir
     * (and doclen to one file); values untouched, probes bit-identical
-    * pre/post (spec-pinned). Also rewrites `dir/meta` from the
-    * compacted doclen relation — n_docs = countDistinct(doc_id),
-    * total_toks = sum(dl) — which repairs any drift the documented
-    * non-atomic append window left behind, and FOLDS the streaming
-    * meta-increment ledger back to one seed row carrying the repaired
-    * scalars (preserving the invariant meta = sum over the ledger, so
-    * the per-batch apply stays ledger-cost between compactions).
-    * Compaction is the ONE maintenance step allowed to scan the
-    * doc-keyed relations — it runs at the amortized cadence that also
-    * bounds file counts, never in the per-batch hot loop.
+    * pre/post (spec-pinned); with live tombstones the rewrite is also
+    * the physical purge ([[Generations.compact]]). meta/ameta are
+    * re-derived from the compacted doc-keyed rows — repairing any drift
+    * the non-atomic append window or an upsert left — and a stream's
+    * ledger folds back to one seed row (meta = sum over the ledger
+    * still holds, so the per-batch apply stays ledger-cost).
     */
   def compactSearchIndex(spark: SparkSession, dir: String): Unit = {
     val fs = fsFor(spark, dir)
@@ -3986,76 +3372,7 @@ object Search {
           "compaction cannot backfill dl; rebuild the index"
       )
     }
-    // tombstones present → every relation rewrite is ALSO the physical
-    // purge: dead rows dropped, survivors renamed to the purge's
-    // generation (immune to the tombstones being consumed, so a
-    // crashed purge rerun converges); tombstones are then deleted and
-    // the meta recomputes below read the purged rows — stats heal to
-    // exact automatically
-    val tomb = if (hasTombstones(spark, dir)) Some(tombstoneMaxAsof(spark, dir)) else None
-    val purgeGen = tomb.map(_.agg(max(col("t_asof"))).head().getLong(0)).getOrElse(-1L)
-    // the travel horizon this compaction creates: every generation on
-    // disk BEFORE the rewrite destroys per-row history (pure-compact
-    // survivors re-parse as gen −1, purge survivors as purgeGen) —
-    // captured NOW, committed as `_asof_horizon` after the fold below
-    val horizon = currentHighGen(spark, dir)
-    def rewriteRel(path: String, pc: Option[String]): Unit = tomb match {
-      case Some(t) => purgeRewrite(spark, path, pc, t, purgeGen)
-      case None    => graft.core.Compaction.compact(spark, path, pc, 1)
-    }
-    // the per-relation rewrite CHAINS are mutually independent
-    // (distinct dirs; vocab/ameta derive from their own relation's
-    // rewrite) — overlap them (§2.6): compaction wall drops from the
-    // sum of 4-6 rewrites to the slowest chain
-    // the folded tier exists only on analyzed-enabled indexes; its
-    // meta scalar repairs from the compacted rows like the main meta
-    val hasFolded = hasFoldedTier(spark, dir)
-    @volatile var repairedAtoks = 0L
-    @volatile var doclenRow: org.apache.spark.sql.Row = null
-    val chains = Seq.newBuilder[() => Unit]
-    Analyzer.tiers(hasFolded).foreach { a =>
-      chains += (() => {
-        rewriteRel(s"$dir/${a.postings}", Some("tbucket"))
-        // re-derive the term dictionary from the (now purged) live
-        // postings — exact again after any tombstone window — consuming
-        // the increment files; also BACKFILLS pre-vocab indexes
-        writeVocabFromPostings(spark, dir, a)
-        if (a == Folded) {
-          repairedAtoks = foldedTotalFromPostings(spark, dir)
-          writeAmeta(spark, dir, repairedAtoks)
-        }
-      })
-      // a folded tier older than its positional relation has none
-      if (a == Raw || fs.exists(new org.apache.hadoop.fs.Path(s"$dir/${a.positions}")))
-        chains += (() => rewriteRel(s"$dir/${a.positions}", Some("tbucket")))
-    }
-    chains += (() => {
-      rewriteRel(s"$dir/doclen", None)
-      doclenRow = spark.read
-        .parquet(s"$dir/doclen")
-        .agg(
-          countDistinct(col("doc_id")).cast("long"),
-          coalesce(sum(col("dl")), lit(0L)).cast("long")
-        )
-        .head()
-    })
-    graft.core.Par.run(chains.result(): _*)
-    // every relation is purged: the tombstones are consumed (meta below
-    // recomputes from the purged doclen, so stats land exact)
-    if (tomb.isDefined) fs.delete(new org.apache.hadoop.fs.Path(tombstonesDir(dir)), true)
-    val r = doclenRow
-    writeMeta(spark, dir, (r.getLong(0), r.getLong(1)))
-    // fold the increment ledger: per-batch rows collapse to one seed
-    // row carrying the repaired scalars
-    if (ledgerFiles(fs, dir).nonEmpty) {
-      fs.delete(new org.apache.hadoop.fs.Path(ledgerDir(dir)), true)
-      writeLedgerRow(spark, dir, (r.getLong(0), r.getLong(1), repairedAtoks), "seed")
-      // as-of reads BELOW this generation would now silently serve the
-      // live state (the seed ledger row parses as gen −1 and the
-      // rewritten rows lost their history) — record the horizon so
-      // metaAsOf/rowsAsOf fail loudly instead of answering wrong
-      graft.core.Compaction.writeTextFile(spark, s"$dir/_asof_horizon", s"$horizon\n")
-    }
+    Generations.compact(postingsIndex(spark, dir, hasFoldedTier(spark, dir)), spark, dir)
   }
 
   /** MERGE independently-built shard indexes into ONE (the distributed
@@ -4111,7 +3428,7 @@ object Search {
 
   /** Destination file name for a moved shard file: deterministic from
     * the SOURCE identity (so a resumed move is idempotent) and
-    * neutralized so [[genFromFileCol]] parses it as generation −1
+    * neutralized so the generation parse ([[Generations]]) reads it as −1
     * (parts are tombstone-free, so every surviving row is a base row —
     * but their file names may still carry `gbatch-`/`del-` prefixes
     * the gen regex would match unanchored).
@@ -4351,58 +3668,6 @@ object Search {
     if (!fs.rename(new Path(staged), new Path(dest)))
       throw new java.io.IOException(s"doc-store merge: commit rename $staged -> $dest failed")
     parts.foreach(p => fs.delete(new Path(p), true))
-  }
-
-  /** Tombstone-applying rewrite of one index relation (the physical
-    * purge half of [[compactSearchIndex]]): survivors only, one file
-    * per bucket dir (the usual compaction contract), each file renamed
-    * to `gbatch-<purgeGen>-c<i>` INSIDE the staged generation before
-    * the crash-safe marker-commit swap. Survivors thereby carry the
-    * purge's generation: no tombstone this compaction consumed
-    * (asof ≤ purgeGen) can kill them again, so a rerun after a crash
-    * at ANY point re-purges already-purged relations as a no-op and
-    * converges — rows are only ever re-judged by tombstones STRICTLY
-    * newer than their rewrite.
-    */
-  private[ops] def purgeRewrite(
-      spark: SparkSession,
-      path: String,
-      partitionCol: Option[String],
-      tombAgg: DataFrame,
-      purgeGen: Long,
-      keyCol: String = "doc_id"
-  ): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsFor(spark, path)
-    if (!fs.exists(new Path(path))) return
-    graft.core.Compaction.replaceWith(spark, path) { staged =>
-      val rel = spark.read.parquet(path).withColumn("__gen", genFromFileCol)
-      val live = rel
-        .join(
-          broadcast(tombAgg),
-          rel(keyCol) === col("t_key") && col("__gen") < col("t_asof"),
-          "left_anti"
-        )
-        .drop("__gen")
-      partitionCol match {
-        case Some(c) => live.repartition(col(c)).write.mode("overwrite").partitionBy(c).parquet(staged)
-        case None    => live.coalesce(1).write.mode("overwrite").parquet(staged)
-      }
-      val glob = partitionCol match {
-        case Some(c) => new Path(s"$staged/$c=*/part-*")
-        case None    => new Path(s"$staged/part-*")
-      }
-      Option(fs.globStatus(glob))
-        .getOrElse(Array.empty)
-        .map(_.getPath)
-        .sortBy(_.toString)
-        .zipWithIndex
-        .foreach { case (src, i) =>
-          val dest = new Path(src.getParent, s"gbatch-$purgeGen-c$i.parquet")
-          if (!fs.rename(src, dest))
-            throw new java.io.IOException(s"purge rewrite: rename $src -> $dest failed")
-        }
-    }
   }
 
   /** BATCHED search serving: a whole RELATION of (query_id, term)
@@ -4683,7 +3948,7 @@ object Search {
   private[ops] def demoMergedIndexDir(s: SparkSession, d: String): String =
     Fixtures.demoIndexDir(s, "searchidx_merged", d) { dir =>
       val docs = documents(s, d)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_shards").toString
+      val tmp = Fixtures.processScratchDir("graft_shards")
       val parts = (0 until 3).map { i =>
         val p = s"$tmp/shard$i"
         saveSearchIndex(docs.filter(col("doc_id") % 3 === i), "doc_id", "text", p)
@@ -4902,7 +4167,7 @@ object Search {
 
   /** As-of SERP gate: hits AND snippets at generation 0 — the gen-1
     * upsert's "rewritten " prefix must be invisible in both tiers
-    * (index rows via rowsAsOf, store text via the store's rowsAsOf).
+    * (index rows and store text both through the as-of [[liveRows]]).
     */
   val searchAsOfPage: Q = (s, d) => {
     val idx = demoAsOfIndexDir(s, d)
@@ -5328,7 +4593,7 @@ object Search {
   private[ops] def demoMergedDocStoreDir(s: SparkSession, d: String): String =
     Fixtures.demoIndexDir(s, "docstore_merged", d) { dir =>
       val docs = documents(s, d)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_store_shards").toString
+      val tmp = Fixtures.processScratchDir("graft_store_shards")
       val parts = (0 until 3).map { i =>
         val p = s"$tmp/shard$i"
         saveDocStore(docs.filter(col("doc_id") % 3 === i), "doc_id", "text", p, metaCols = Seq("lang", "source"))
@@ -5535,7 +4800,7 @@ object Search {
       val p = new org.apache.hadoop.fs.Path(s"$dir/$rel")
       if (fs.exists(p)) s.read.parquet(s"$dir/$rel").count() else 0L
     }
-    val ledger = ledgerFiles(fs, dir).length.toLong
+    val ledger = searchLedger.files(s, dir).length.toLong
     Seq(
       (
         nDocs,
@@ -5793,23 +5058,32 @@ object Search {
   private def docStoreLive(s: SparkSession, storeDir: String): DataFrame =
     liveRows(s, storeDir, s.read.parquet(s"$storeDir/docs"))
 
+  /** The doc store as a [[Generations]] kind: one doc-bucketed
+    * relation and no stats. An upsert reads the batch twice
+    * (tombstones + rows), so it is persisted then; compaction always
+    * records the as-of horizon — [[docStoreAsOf]] must fail loudly below
+    * it instead of serving the live text under an old page.
+    */
+  private def docStore(idCol: String = "doc_id", textCol: String = "text", metaCols: Seq[String] = Nil): Kind =
+    Kind(
+      keyCol = "doc_id",
+      relations = Seq(Relation("docs", Some("dbucket"), b => docStoreRows(b, idCol, textCol, metaCols))),
+      persist = upsert => upsert,
+      horizon = Horizon.Always
+    )
+
   /** DELETE documents from the doc store — tombstones only (the store
     * has no meta scalars); [[compactDocStore]] purges physically.
     */
-  def deleteFromDocStore(s: SparkSession, dir: String, ids: DataFrame): Unit = {
-    val asof = currentHighGen(s, dir, rels = Seq("docs", "tombstones")) + 1L
-    val idRel = ids.select(col(ids.columns.head).cast("long").as("doc_id")).distinct()
-    writeTombstones(s, dir, idRel.withColumn("asof", lit(asof)), asof)
-  }
+  def deleteFromDocStore(s: SparkSession, dir: String, ids: DataFrame): Unit =
+    Generations.delete(docStore(), s, dir, ids)
 
   /** Apply ONE micro-batch of documents to the persisted doc store,
     * idempotently — [[graft.streaming.StreamingIngest.docStoreStream]]'s
     * unit, and the rendering tier's member of the index-maintenance
     * family: the SERP's snippets and facets must reflect the same
     * document versions the postings index serves, so the store
-    * maintains under the same generation/tombstone/exactly-once
-    * protocol (gbatch-<gen> names, crashed-attempt pre-delete, upsert
-    * tombstones at asof = gen).
+    * maintains under the same [[Generations]] protocol.
     */
   def applyDocStoreBatch(
       batch: DataFrame,
@@ -5819,58 +5093,15 @@ object Search {
       batchId: Long,
       metaCols: Seq[String] = Nil,
       upsert: Boolean = false
-  ): Unit = {
-    import org.apache.hadoop.fs.Path
-    val s = batch.sparkSession
-    val fs = fsFor(s, dir)
-    val gen = genBase(s, dir, Seq("docs", "tombstones")) + batchId
-    Seq(s"$dir/docs/dbucket=*", tombstonesDir(dir)).foreach { d =>
-      Option(fs.globStatus(new Path(s"$d/gbatch-$gen-*")))
-        .getOrElse(Array.empty)
-        .foreach(f => fs.delete(f.getPath, false))
-    }
-    // upsert reads the batch twice (tombstones + rows) — persist so
-    // the second job reads memory, not the micro-batch source
-    val b =
-      if (upsert) batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else batch
-    try {
-      if (upsert)
-        stageAndMove(
-          b.select(col(idCol).cast("long").as("doc_id")).distinct().withColumn("asof", lit(gen)),
-          s"$dir/_stage_store_tomb_$batchId",
-          tombstonesDir(dir),
-          partitionCol = None,
-          gen
-        )
-      stageAndMove(
-        docStoreRows(b, idCol, textCol, metaCols).repartition(col("dbucket")),
-        s"$dir/_stage_store_$batchId",
-        s"$dir/docs",
-        partitionCol = Some("dbucket"),
-        gen
-      )
-    } finally if (upsert) b.unpersist(false)
-  }
+  ): Unit =
+    Generations.apply(docStore(idCol, textCol, metaCols), batch, idCol, dir, batchId, upsert)
 
   /** Compact the store back to one file per bucket dir; with live
-    * tombstones the rewrite is ALSO the physical purge (the
-    * crash-convergent purge-generation contract of [[purgeRewrite]]),
-    * and the tombstones are consumed.
+    * tombstones the rewrite is ALSO the physical purge, and the
+    * tombstones are consumed.
     */
-  def compactDocStore(spark: SparkSession, dir: String): Unit = {
-    // same horizon contract as the index: the rewrite destroys per-row
-    // history, so as-of store reads below this generation must fail
-    // loudly ([[docStoreAsOf]] via rowsAsOf) instead of serving the
-    // live text under an old page
-    val horizon = currentHighGen(spark, dir, rels = Seq("docs", "tombstones"))
-    if (hasTombstones(spark, dir)) {
-      val tomb = tombstoneMaxAsof(spark, dir)
-      val purgeGen = tomb.agg(max(col("t_asof"))).head().getLong(0)
-      purgeRewrite(spark, s"$dir/docs", Some("dbucket"), tomb, purgeGen)
-      fsFor(spark, dir).delete(new org.apache.hadoop.fs.Path(tombstonesDir(dir)), true)
-    } else graft.core.Compaction.compact(spark, s"$dir/docs", Some("dbucket"), 1)
-    graft.core.Compaction.writeTextFile(spark, s"$dir/_asof_horizon", s"$horizon\n")
-  }
+  def compactDocStore(spark: SparkSession, dir: String): Unit =
+    Generations.compact(docStore(), spark, dir)
 
   /** FACET counts over a query's FULL match set, served from persisted
     * artifacts — the SERP sidebar ("123 hits in en, 41 in de"): the
@@ -6137,7 +5368,7 @@ object Search {
     * pure-punct filtering; ≤ k docs exploded) — the folded hit test
     * over raw tokens, raw snippets. The optional `asOf` generation
     * serves the ERA's snippets: both the positional read and the store
-    * read reconstruct through [[rowsAsOf]] (same horizon contract as
+    * read reconstruct through the as-of [[liveRows]] (same horizon contract as
     * every time-travel route), so an as-of page renders exactly what
     * the index served then. Gates: search_kwic_page_multi's oracle is
     * the UNION of the per-term page oracles; search_asof_page shares
@@ -6171,8 +5402,7 @@ object Search {
     val storeScan = s.read
       .parquet(s"$storeDir/docs")
       .filter(col("dbucket").isin(dbuckets: _*) && col("doc_id").isin(ids: _*))
-    val toks = asOf
-      .fold(liveRows(s, storeDir, storeScan))(g => rowsAsOf(s, storeDir, storeScan, g))
+    val toks = liveRows(s, storeDir, storeScan, asOf = asOf)
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
     val occ =
       if (a == Raw)
@@ -6201,13 +5431,13 @@ object Search {
   }
 
   /** The doc store as it stood after generation G — the rendering
-    * tier's time-travel read, mirroring the index's [[rowsAsOf]]: rows
+    * tier's time-travel read, mirroring the index's [[liveRows]]: rows
     * with file generation ≤ G survive unless a tombstone with
     * asof ≤ G outranks them. Same horizon contract (compactDocStore
     * records `_asof_horizon`; reads below it fail loudly).
     */
   def docStoreAsOf(s: SparkSession, storeDir: String, asOfGen: Long): DataFrame =
-    rowsAsOf(s, storeDir, s.read.parquet(s"$storeDir/docs"), asOfGen)
+    liveRows(s, storeDir, s.read.parquet(s"$storeDir/docs"), asOf = Some(asOfGen))
 
   /** The as-of rendered page: [[kwicPageMulti]] at one term with the
     * generation pinned — as-of hits plus their ERA's snippets.

@@ -166,7 +166,7 @@ object Similarity {
   ): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val assigned =
-      Search.liveRows(spark, dir, spark.read.parquet(s"$dir/assignments"), keyCol = "vec_id")
+      Generations.liveRows(spark, dir, spark.read.parquet(s"$dir/assignments"), keyCol = "vec_id")
     val probeLists = probedListsFor(spark, dir, assigned, queryId, nProbe)
     val q = assigned.filter(col("vec_id") === queryId).select(col("v").as("qv"))
     assigned
@@ -232,7 +232,7 @@ object Similarity {
     require(thresholds.nonEmpty, "recall report needs at least one threshold")
     require(thresholds.distinct.size == thresholds.size, s"duplicate thresholds: $thresholds")
     val assigned =
-      Search.liveRows(spark, dir, spark.read.parquet(s"$dir/assignments"), keyCol = "vec_id")
+      Generations.liveRows(spark, dir, spark.read.parquet(s"$dir/assignments"), keyCol = "vec_id")
     val probeLists = probedListsFor(spark, dir, assigned, queryId, nProbe)
     val q = assigned.filter(col("vec_id") === queryId).select(col("v").as("qv"))
     val scored = assigned
@@ -1087,7 +1087,7 @@ object Similarity {
     graft.functions.GraftFunctions.register(spark)
     // tombstone-aware like every index probe here: zero plan change
     // when no tombstones exist, a broadcast anti-join otherwise
-    val assigned = Search.liveRows(spark, dir, spark.read.parquet(s"$dir/assignments"), keyCol = "vec_id")
+    val assigned = Generations.liveRows(spark, dir, spark.read.parquet(s"$dir/assignments"), keyCol = "vec_id")
     val qv = assigned.filter(col("vec_id") === queryId).select("v").head().getSeq[Double](0).toArray
     val centroids = spark.read.parquet(s"$dir/centroids").collect().map { r =>
       (r.getAs[Int]("list_id"), r.getAs[scala.collection.Seq[Double]]("centroid").toArray)
@@ -1137,73 +1137,46 @@ object Similarity {
       .select(col("vec_id"), col("label"), col("v"), col("list_id"))
   }
 
+  /** The IVF index as a [[Generations]] kind: the list-partitioned
+    * assignments, keyed by vec_id, with no stats — probes derive
+    * everything from the rows. A batch's vectors are assigned in-plan
+    * against the persisted centroids ([[assignToCentroidsInPlan]]).
+    */
+  private def ivfIndex(s: SparkSession, dir: String): Generations.Kind =
+    Generations.Kind(
+      keyCol = "vec_id",
+      relations = Seq(
+        Generations.Relation(
+          "assignments",
+          Some("list_id"),
+          b => assignToCentroidsInPlan(withVec(b), s.read.parquet(s"$dir/centroids"))
+        )
+      )
+    )
+
   /** Apply ONE micro-batch of new vectors to the PERSISTED IVF index,
     * idempotently — the unit [[graft.streaming.StreamingIngest
     * .ivfIndexStream]] runs inside foreachBatch. Production IVF
     * maintenance holds the CENTROIDS fixed (they are the index's
     * geometry; refitting them would re-shuffle every list) and appends
-    * each new vector to its nearest list: assignment runs in-plan
-    * against the persisted centroids ([[assignToCentroidsInPlan]] —
-    * increment × nLists work), and the rows land in the partitioned
-    * `assignments/list_id=N/` layout under the same deterministic
-    * `gbatch-<B>` replay contract as the search index (crashed-attempt
-    * pre-delete + staged rename), so at-least-once delivery yields an
-    * exactly-once index. No meta scalars exist here — probes derive
-    * everything from the rows — so the apply is two steps, not four.
-    * List skew accretes as the data drifts from the fitted centroids;
-    * the rebuild (a fresh [[saveIvfIndex]]) is the amortized
-    * maintenance op, like compaction for the search index.
+    * each new vector to its nearest list (increment × nLists work),
+    * under the [[Generations]] protocol every persisted index here
+    * shares. A vector UPSERT (a re-embedded document) tombstones the
+    * batch's ids at its generation. List skew accretes as the data
+    * drifts from the fitted centroids; the rebuild (a fresh
+    * [[saveIvfIndex]]) is the amortized maintenance op.
     */
-  def applyIvfIndexBatch(batch: DataFrame, dir: String, batchId: Long, upsert: Boolean = false): Unit = {
-    import org.apache.hadoop.fs.Path
-    val s = batch.sparkSession
-    val fs = new Path(dir).getFileSystem(s.sessionState.newHadoopConf())
-    // generation = batch id + the dir's recorded base, so a stream
-    // adopting a pre-existing (possibly deleted-and-purged) index
-    // always writes generations newer than anything on disk —
-    // Search.genBase's scaladoc has the failure this prevents
-    val gen = Search.genBase(s, dir, Seq("assignments", "tombstones")) + batchId
-    Seq(s"$dir/assignments/list_id=*", Search.tombstonesDir(dir)).foreach { d =>
-      Option(fs.globStatus(new Path(s"$d/gbatch-$gen-*")))
-        .getOrElse(Array.empty)
-        .foreach(f => fs.delete(f.getPath, false))
-    }
-    // vector UPSERT (a re-embedded document): tombstone the batch's
-    // ids at asof = gen — older versions die, the batch's own
-    // gbatch-<gen> rows survive, exactly the search index's semantics
-    if (upsert)
-      Search.stageAndMove(
-        batch.select(col("vec_id").cast("long").as("vec_id")).distinct().withColumn("asof", lit(gen)),
-        s"$dir/_stage_ivf_tomb_$batchId",
-        Search.tombstonesDir(dir),
-        partitionCol = None,
-        gen
-      )
-    val centroids = s.read.parquet(s"$dir/centroids")
-    val assigned = assignToCentroidsInPlan(withVec(batch), centroids)
-      .repartition(col("list_id"))
-    Search.stageAndMove(
-      assigned,
-      s"$dir/_stage_ivf_$batchId",
-      s"$dir/assignments",
-      partitionCol = Some("list_id"),
-      gen
-    )
-  }
+  def applyIvfIndexBatch(batch: DataFrame, dir: String, batchId: Long, upsert: Boolean = false): Unit =
+    Generations.apply(ivfIndex(batch.sparkSession, dir), batch, "vec_id", dir, batchId, upsert)
 
-  /** DELETE vectors from the persisted IVF index — the batch-API
-    * entry point (a stream replaces vectors through the upsert apply).
-    * Tombstones at asof = high-water generation + 1; probes exclude
-    * dead rows through [[graft.ops.Search.liveRows]]'s broadcast
-    * anti-join, and [[compactIvfIndex]] purges physically. No meta
-    * scalars exist here, so the delete is ONE staged file write —
-    * nothing to decrement.
+  /** DELETE vectors from the persisted IVF index — the batch-API entry
+    * point (a stream replaces vectors through the upsert apply):
+    * tombstones only, nothing to decrement; probes exclude dead rows
+    * through [[Generations.liveRows]] and [[compactIvfIndex]] purges
+    * physically.
     */
-  def deleteFromIvfIndex(s: SparkSession, dir: String, ids: DataFrame): Unit = {
-    val asof = Search.currentHighGen(s, dir, rels = Seq("assignments", "tombstones")) + 1L
-    val idRel = ids.select(col(ids.columns.head).cast("long").as("vec_id")).distinct()
-    Search.writeTombstones(s, dir, idRel.withColumn("asof", lit(asof)), asof)
-  }
+  def deleteFromIvfIndex(s: SparkSession, dir: String, ids: DataFrame): Unit =
+    Generations.delete(ivfIndex(s, dir), s, dir, ids)
 
   /** Seq convenience overload of [[deleteFromIvfIndex]]. */
   def deleteFromIvfIndex(s: SparkSession, dir: String, ids: Seq[Long]): Unit = {
@@ -1212,21 +1185,11 @@ object Similarity {
   }
 
   /** Compact the IVF assignments back to one file per list dir; with
-    * live tombstones the rewrite is ALSO the physical purge (dead
-    * vectors dropped, survivors renamed to the purge generation so a
-    * crashed purge rerun converges — [[graft.ops.Search.purgeRewrite]]'s
-    * contract), and the tombstones are consumed.
+    * live tombstones the rewrite is ALSO the physical purge, and the
+    * tombstones are consumed.
     */
-  def compactIvfIndex(spark: SparkSession, dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    if (Search.hasTombstones(spark, dir)) {
-      val tomb = Search.tombstoneMaxAsof(spark, dir, keyCol = "vec_id")
-      val purgeGen = tomb.agg(max(col("t_asof"))).head().getLong(0)
-      Search.purgeRewrite(spark, s"$dir/assignments", Some("list_id"), tomb, purgeGen, keyCol = "vec_id")
-      fs.delete(new Path(Search.tombstonesDir(dir)), true)
-    } else graft.core.Compaction.compact(spark, s"$dir/assignments", Some("list_id"), 1)
-  }
+  def compactIvfIndex(spark: SparkSession, dir: String): Unit =
+    Generations.compact(ivfIndex(spark, dir), spark, dir)
 
   /** IVF list histogram. Centroid arithmetic is not engine-portable,
     * but the seeded, fixed-partitioning KMeans build is deterministic

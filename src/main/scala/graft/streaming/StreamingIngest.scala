@@ -217,35 +217,30 @@ object StreamingIngest {
   /** The exactly-once batch body of the index-maintenance streams
     * ([[searchIndexStream]], [[fieldedIndexStream]], [[ivfIndexStream]],
     * [[searchIndexCdcStream]], [[docStoreStream]]) over the index dir
-    * `dir`. The checkpoint identity gate runs BEFORE the skip gate: a
-    * fresh checkpoint restarts batch ids at 0 and the applied-batch
-    * marker alone would silently drop batches — fail loudly instead.
-    * A batch past the marker is applied, the marker is written LAST,
-    * and `compact` runs on the `compactEvery` cadence.
+    * `dir`: [[graft.ops.Generations.once]] gates the batch on the
+    * stream's identity and the applied-batch marker, and an applied
+    * batch runs `compact` on the `compactEvery` cadence.
     */
   private def exactlyOnce(dir: String, checkpoint: String, compactEvery: Int)(
       apply: (DataFrame, Long) => Unit
   )(compact: SparkSession => Unit): (DataFrame, Long) => Unit = { (batch, batchId) =>
     val bs = batch.sparkSession
-    graft.ops.Search.ensureStreamIdentity(bs, dir, checkpoint)
-    if (batchId > graft.ops.Search.lastAppliedSearchBatch(bs, dir)) {
-      apply(batch, batchId)
-      graft.ops.Search.writeLastAppliedSearchBatch(bs, dir, batchId)
-      if (compactDue(compactEvery, batchId)) compact(bs)
-    }
+    if (graft.ops.Generations.once(bs, dir, checkpoint, batchId)(apply(batch, batchId)) && compactDue(compactEvery, batchId))
+      compact(bs)
   }
 
   /** Streaming state kept by FULL REWRITE, exactly-once and crash-safe:
     * `next` maps the current state (None before the first batch) to
-    * the new one, which is materialized (the merge READS the dir the
-    * swap replaces), written through `shape` into a staged generation
-    * together with the batch id (`_graft_last_batch`), and swapped in
-    * by [[graft.core.Compaction.replaceWith]]. A write that dies
-    * leaves the live state as it was — an overwrite in place deletes
-    * it before its job runs. A replayed batch (same checkpoint after a
-    * crash, or a full re-run against a fresh checkpoint) is detected
-    * by the in-generation marker and skipped, never applied twice. The
-    * materialized merge is released after the swap.
+    * the new one, which is written through `shape` into a staged
+    * generation together with the batch id (`_graft_last_batch`) and
+    * swapped in by [[graft.core.Compaction.replaceWith]]. The merge
+    * READS the dir the swap replaces, straight from its plan: the swap
+    * deletes the live dir only after the staged write has committed.
+    * A write that dies leaves the live state as it was — an overwrite
+    * in place deletes it before its job runs. A replayed batch (same
+    * checkpoint after a crash, or a full re-run against a fresh
+    * checkpoint) is detected by the in-generation marker and skipped,
+    * never applied twice.
     */
   private[streaming] def rewriteState(
       s: SparkSession,
@@ -261,11 +256,10 @@ object StreamingIngest {
     if (batchId > applied) {
       val p = new org.apache.hadoop.fs.Path(stateDir)
       val cur = if (p.getFileSystem(s.sessionState.newHadoopConf()).exists(p)) Some(s.read.parquet(stateDir)) else None
-      val merged = next(cur).localCheckpoint(true)
-      try graft.core.Compaction.replaceWith(s, stateDir) { staged =>
-        shape(merged).write.mode(SaveMode.Overwrite).parquet(staged)
+      graft.core.Compaction.replaceWith(s, stateDir) { staged =>
+        shape(next(cur)).write.mode(SaveMode.Overwrite).parquet(staged)
         graft.core.Compaction.writeTextFile(s, s"$staged/_graft_last_batch", s"$batchId\n")
-      } finally graft.ops.GraphDedup.releaseCheckpoints(merged)
+      }
     }
   }
 

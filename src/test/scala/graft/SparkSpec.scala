@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.{Exceptional, Outcome}
+import org.scalatest.{BeforeAndAfterAll, Exceptional, Outcome}
 import org.scalatest.exceptions.TimeoutField
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimitedTests}
@@ -15,8 +15,23 @@ object TestSpark {
     .getOrCreate()
 }
 
-abstract class SparkSpec extends AnyFunSuite with TimeLimitedTests {
+abstract class SparkSpec extends AnyFunSuite with TimeLimitedTests with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** A fresh `<java.io.tmpdir>/<prefix>…` dir, deleted with everything
+    * under it when the suite ends.
+    */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+    finally super.afterAll()
 
   /** Hang guard, not a perf budget: the r16 driver artifact recorded
     * `tests_ok: false` with a streaming write killed inside the JVM

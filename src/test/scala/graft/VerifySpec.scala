@@ -23,7 +23,7 @@ class VerifySpec extends SparkSpec {
   }
 
   test("resume-from-manifest: a second Verify over a half-populated outDir runs only the missing queries") {
-    val out = Files.createTempDirectory("graft_verify_resume").toString
+    val out = tempDir("graft_verify_resume").toString
     val names = Set("search_kwic", "sketch_distinct")
     val sf = "/root/testdata/sf0.001"
     // first invocation: both queries execute

@@ -15,7 +15,7 @@ class CompactionSpec extends SparkSpec {
     new Path("/tmp").getFileSystem(spark.sessionState.newHadoopConf())
 
   test("compact round-trips rows and bounds the file count") {
-    val base = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val base = tempDir("graft_compact").toString
     val path = base + "/rel"
     // many appends -> many files
     (0 until 6).foreach { i =>
@@ -32,7 +32,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("a committed staged generation rolls FORWARD after a crash mid-swap") {
-    val base = java.nio.file.Files.createTempDirectory("graft_compact_fwd").toString
+    val base = tempDir("graft_compact_fwd").toString
     val path = base + "/rel"
     Seq((1L, "old")).toDF("id", "v").write.parquet(path)
     // crash state: staged write complete + marker dropped, live dir
@@ -49,7 +49,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("an UNcommitted staged dir is garbage — the live generation survives") {
-    val base = java.nio.file.Files.createTempDirectory("graft_compact_back").toString
+    val base = tempDir("graft_compact_back").toString
     val path = base + "/rel"
     Seq((1L, "live")).toDF("id", "v").write.parquet(path)
     val staged = path + "__compacting"

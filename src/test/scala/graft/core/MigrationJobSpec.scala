@@ -11,7 +11,7 @@ import scala.jdk.CollectionConverters._
 class MigrationJobSpec extends SparkSpec {
 
   test("migrate nation+region+customer end to end with zero deviations") {
-    val target = Files.createTempDirectory("graft_mig").toString
+    val target = tempDir("graft_mig").toString
     val result = MigrationJob.run(
       spark,
       "/root/testdata/sf0.001",
@@ -36,7 +36,7 @@ class MigrationJobSpec extends SparkSpec {
   }
 
   test("dry run previews without writing") {
-    val target = Files.createTempDirectory("graft_dry").toString
+    val target = tempDir("graft_dry").toString
     val cols = Catalog.readParquetColumns(spark, "/root/testdata/sf0.001", "tpch", Seq("region"))
     val plan = PlanBuilder.build(GenericJdbcDialect, cols, Nil)
     val out = ActionRunner.run(spark, plan, (_, t) => spark.read.parquet(s"/root/testdata/sf0.001/$t.parquet"), target, dryRun = true)
@@ -64,12 +64,12 @@ class MigrationJobSpec extends SparkSpec {
             seen.add(Thread.currentThread.getName -> sc.getLocalProperty("graft.test.marker"))
             spark.read.parquet(s"$sf/$t.parquet")
           },
-          Files.createTempDirectory("graft_conc").toString
+          tempDir("graft_conc").toString
         )
       finally sc.setLocalProperty("graft.test.marker", null)
     assert(liveRunners().isEmpty, liveRunners())
     // one action per call is the sequential baseline
-    val seqDir = Files.createTempDirectory("graft_seq").toString
+    val seqDir = tempDir("graft_seq").toString
     val sequential = plan.actions
       .sortBy(a => (a.ord, a.sqlText))
       .flatMap(a => ActionRunner.run(spark, PlanBuilder.MigrationPlan(Seq(a)), (_, t) => spark.read.parquet(s"$sf/$t.parquet"), seqDir))
@@ -92,7 +92,7 @@ class MigrationJobSpec extends SparkSpec {
       spark,
       plan,
       (_, t) => if (t == "nation") throw new IllegalStateException() else spark.read.parquet(s"$sf/$t.parquet"),
-      Files.createTempDirectory("graft_err").toString
+      tempDir("graft_err").toString
     )
     val errors = out.filter(_.status.startsWith("ERROR"))
     assert(errors.map(_.stmt).toSet == nationStmts && errors.size == 2, out.mkString("\n"))

@@ -73,7 +73,7 @@ class TypeRoundTripSpec extends SparkSpec {
       val schema = StructType(types.zipWithIndex.map { case (t, i) => StructField(s"c$i", t, nullable = true) })
       val row = Row.fromSeq(types.map(sampleFor))
       val df = spark.createDataFrame(java.util.List.of(row, Row.fromSeq(types.map(_ => null))), schema)
-      val dir = Files.createTempDirectory(s"rt_${dialect.name}").toString
+      val dir = tempDir(s"rt_${dialect.name}").toString
       df.write.mode("overwrite").parquet(dir)
       val back = spark.read.parquet(dir)
       assert(back.schema.map(_.dataType) == schema.map(_.dataType), s"${dialect.name}: schema drift")

@@ -116,7 +116,7 @@ class CentralitySpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val half = Centrality.pageRankFrom(docs, edges, "doc_id", None, 3).select("node", "rank_micro")
     // persist the snapshot the way a real job would (parquet), then resume
-    val snap = java.nio.file.Files.createTempDirectory("graft_pr_snap").toString + "/r"
+    val snap = tempDir("graft_pr_snap").toString + "/r"
     half.write.parquet(snap)
     val resumed = Centrality
       .pageRankFrom(docs, edges, "doc_id", Some(spark.read.parquet(snap)), 3)
@@ -174,7 +174,7 @@ class CentralitySpec extends SparkSpec {
   }
 
   test("persisted graph: round-trips canonical edges; neighborhood probe is partition-pruned and complete") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ndgraph").toString
+    val dir = tempDir("graft_ndgraph").toString
     // node 1's neighborhood spans both edge orientations: (1,2) forward,
     // (0,1) reverse — the undirected layout must serve BOTH from 1's bucket
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 35L), (17L, 33L)).toDF("src", "dst")
@@ -190,7 +190,7 @@ class CentralitySpec extends SparkSpec {
   }
 
   test("rank serving from persisted graph + snapshot equals the monolithic job") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ndgraph_rank").toString
+    val dir = tempDir("graft_ndgraph_rank").toString
     val docs = (1L to 30L).toDF("doc_id")
     val edges = (1L to 29L).map(i => (i, i + 1)).filter(_._1 % 3 != 0).toDF("src", "dst")
     Centrality.saveNearDupGraph(edges, dir)

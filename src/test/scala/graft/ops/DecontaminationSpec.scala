@@ -73,7 +73,7 @@ class DecontaminationSpec extends SparkSpec {
       (4L, "yy zz aa bb")
     ).toDF("doc_id", "text")
     val bench = Seq((100L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_decon_idx").toString
+    val dir = tempDir("graft_decon_idx").toString
     Search.saveSearchIndex(train, "doc_id", "text", dir)
     val benchToks = bench.select(explode(split(col("text"), " ")).as("token"))
       .distinct().collect().map(_.getString(0)).toSeq

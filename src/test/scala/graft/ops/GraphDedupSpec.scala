@@ -213,7 +213,7 @@ class GraphDedupSpec extends SparkSpec {
 
   test("persisted cluster map: touched-bucket maintenance equals full CC, untouched dirs byte-identical") {
     val nBuckets = 8
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_map_spec").toString + "/map"
+    val dir = tempDir("graft_cc_map_spec").toString + "/map"
     // day 0: one 51-node cluster (spreads over every bucket) + two
     // small clusters that day 1 will merge
     val day0 = (1L to 50L).map(i => (i, i + 1)) ++ Seq((100L, 101L), (110L, 111L))
@@ -286,7 +286,7 @@ class GraphDedupSpec extends SparkSpec {
 
   test("persisted map: a crash at any point of the per-dir swap rolls forward") {
     val nBuckets = 8
-    val base = java.nio.file.Files.createTempDirectory("graft_cc_map_crash").toString
+    val base = tempDir("graft_cc_map_crash").toString
     val dirA = base + "/mapA"
     val day0 = (1L to 50L).map(i => (i, i + 1)) ++ Seq((100L, 101L), (110L, 111L))
     val day1 = Seq((101L, 110L), (111L, 300L))
@@ -360,7 +360,7 @@ class GraphDedupSpec extends SparkSpec {
     for (seed <- Seq(5, 21)) {
       val rnd = new scala.util.Random(seed)
       val nBuckets = 8
-      val base = java.nio.file.Files.createTempDirectory(s"graft_cc_crash_rand$seed").toString
+      val base = tempDir(s"graft_cc_crash_rand$seed").toString
       val edges = Seq.fill(50)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong)).filter(e => e._1 != e._2)
       val (day0, day1) = edges.splitAt(30)
       val dirA = base + "/mapA"
@@ -428,7 +428,7 @@ class GraphDedupSpec extends SparkSpec {
   }
 
   test("persisted map: layout wins over a wrong caller bucket count; legacy mismatch fails loudly") {
-    val base = java.nio.file.Files.createTempDirectory("graft_cc_map_layout").toString
+    val base = tempDir("graft_cc_map_layout").toString
     val dir = base + "/map"
     val day0 = (1L to 50L).map(i => (i, i + 1))
     GraphDedup.saveClusterMap(GraphDedup.connectedComponents(day0.toDF("src", "dst")), dir, 8)
@@ -469,7 +469,7 @@ class GraphDedupSpec extends SparkSpec {
   }
 
   test("persisted map: a legacy map WITHOUT the cluster index falls back to the scan relabel") {
-    val base = java.nio.file.Files.createTempDirectory("graft_cc_map_noindex").toString
+    val base = tempDir("graft_cc_map_noindex").toString
     val dir = base + "/map"
     val day0 = (1L to 20L).map(i => (i, i + 1)) ++ Seq((100L, 101L), (110L, 111L))
     GraphDedup.saveClusterMap(GraphDedup.connectedComponents(day0.toDF("src", "dst")), dir, 8)
@@ -497,7 +497,7 @@ class GraphDedupSpec extends SparkSpec {
     val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {
-      val base = java.nio.file.Files.createTempDirectory("graft_cc_map_dyn").toString
+      val base = tempDir("graft_cc_map_dyn").toString
       val dir = base + "/map"
       // big map: many clusters spread over all 8 cbuckets
       val day0 = (1L to 200L by 2).map(i => (i, i + 1))
@@ -526,7 +526,7 @@ class GraphDedupSpec extends SparkSpec {
   }
 
   test("maintenance cycle releases its localCheckpoint caches (no growth across cycles)") {
-    val base = java.nio.file.Files.createTempDirectory("graft_cc_map_release").toString
+    val base = tempDir("graft_cc_map_release").toString
     val dir = base + "/map"
     val day0 = (1L to 40L).map(i => (i, i + 1)) ++ Seq((100L, 101L), (110L, 111L))
     GraphDedup.saveClusterMap(GraphDedup.connectedComponents(day0.toDF("src", "dst")), dir, 8)
@@ -548,7 +548,7 @@ class GraphDedupSpec extends SparkSpec {
   }
 
   test("readClusterMap fails loudly when a manifest bucket has no source at all") {
-    val base = java.nio.file.Files.createTempDirectory("graft_cc_map_orphan").toString
+    val base = tempDir("graft_cc_map_orphan").toString
     val dir = base + "/map"
     GraphDedup.saveClusterMap(
       GraphDedup.connectedComponents(Seq((1L, 2L), (10L, 11L)).toDF("src", "dst")),
@@ -574,7 +574,7 @@ class GraphDedupSpec extends SparkSpec {
 
   test("persisted map: INT-typed edge ids are cast to the map's node type before hashing") {
     import org.apache.spark.sql.types.IntegerType
-    val base = java.nio.file.Files.createTempDirectory("graft_cc_map_ints").toString
+    val base = tempDir("graft_cc_map_ints").toString
     val dir = base + "/map"
     val day0 = (1L to 50L).map(i => (i, i + 1)) ++ Seq((100L, 101L), (110L, 111L))
     GraphDedup.saveClusterMap(GraphDedup.connectedComponents(day0.toDF("src", "dst")), dir, 8)
@@ -600,7 +600,7 @@ class GraphDedupSpec extends SparkSpec {
       val rnd = new scala.util.Random(seed)
       val edges = Seq.fill(60)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong)).filter(e => e._1 != e._2)
       val batches = edges.grouped(20).toSeq
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_cc_map_rand$seed").toString + "/map"
+      val dir = tempDir(s"graft_cc_map_rand$seed").toString + "/map"
       GraphDedup.saveClusterMap(
         GraphDedup.connectedComponents(batches.head.toDF("src", "dst")),
         dir,

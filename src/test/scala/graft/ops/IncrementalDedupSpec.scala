@@ -12,7 +12,7 @@ class IncrementalDedupSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
 
   private def buildIndex(): String = {
-    val idx = java.nio.file.Files.createTempDirectory("graft_mh_spec").toString
+    val idx = tempDir("graft_mh_spec").toString
     val docs = Fixtures.documents(spark, sfDir)
     Dedup.saveMinhashIndex(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", idx)
     idx
@@ -108,7 +108,7 @@ class IncrementalDedupSpec extends SparkSpec {
   }
 
   test("cold start: probing a never-seeded index flags increment self-pairs only") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_mh_cold").toString + "/never_written"
+    val idx = tempDir("graft_mh_cold").toString + "/never_written"
     val inc = Fixtures.documents(spark, sfDir).filter(col("doc_id") % 2 =!= 0)
     val out = Dedup.incrementalDedup(inc, "doc_id", "text", idx, minMatches = 4).collect()
     assert(out.nonEmpty, "self-pairs among the odd docs should still flag")
@@ -175,7 +175,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // documents, so a full rebuild and an append-grown index must be
     // interchangeable for every future probe
     val docs = Fixtures.documents(spark, sfDir)
-    val base = java.nio.file.Files.createTempDirectory("graft_mh_rebuild")
+    val base = tempDir("graft_mh_rebuild")
     val rebuilt = base.resolve("rebuilt").toString
     val grown = base.resolve("grown").toString
     Dedup.saveMinhashIndex(docs, "doc_id", "text", rebuilt)

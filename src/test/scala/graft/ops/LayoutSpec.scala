@@ -46,7 +46,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("writeZordered round-trips the rows and lands one rectangle per file") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder").resolve("t").toString
+    val dir = tempDir("graft_zorder").resolve("t").toString
     val grid = (0L until 400L).map(i => (i % 20, i / 20)).toDF("x", "y")
     Layout.writeZordered(grid, "x", "y", nFiles = 4, dir)
     val back = spark.read.parquet(dir)

@@ -637,7 +637,7 @@ class MixtureCorpusStatsSpec extends SparkSpec {
     assert(occOnly.getLong(0) == gated.getAs[Long]("occupied"))
     assert(occOnly.getLong(1) == gated.getAs[Long]("est_milli"))
     // persisted two-increment merge ≡ one-shot sketch, state bounded
-    val dir = java.nio.file.Files.createTempDirectory("graft_lc").toString + "/sk"
+    val dir = tempDir("graft_lc").toString + "/sk"
     CorpusStats.appendDistinctSketch(vals.filter(col("v") % 2 === 0), "v", m, dir)
     CorpusStats.appendDistinctSketch(vals.filter(col("v") % 2 =!= 0), "v", m, dir)
     val merged = CorpusStats.mergedSketchEstimate(spark, dir, m).head()
@@ -661,7 +661,7 @@ class MixtureCorpusStatsSpec extends SparkSpec {
     // per-key value ranges OVERLAP (i % 41 for both keys) — a slot-set
     // union that ignored keys would under-count; the per-key law must hold
     val keyed = (1L to 600L).map(i => (s"k${i % 2}", i % 41)).toDF("k", "v")
-    val dir = java.nio.file.Files.createTempDirectory("graft_lcby").toString + "/sk"
+    val dir = tempDir("graft_lcby").toString + "/sk"
     CorpusStats.appendDistinctSketchBy(keyed.filter(col("v") % 2 === 0), "k", "v", m, dir)
     CorpusStats.appendDistinctSketchBy(keyed.filter(col("v") % 2 =!= 0), "k", "v", m, dir)
     val merged = CorpusStats.mergedSketchEstimateBy(spark, dir, m)

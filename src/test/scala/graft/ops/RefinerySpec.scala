@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class RefinerySpec extends SparkSpec {
 
   test("RunRefinery writes a consistent lake layout: stages, delivery, accounting, manifest") {
-    val out = java.nio.file.Files.createTempDirectory("graft_refinery_spec").toString
+    val out = tempDir("graft_refinery_spec").toString
     val layout = graft.tools.RunRefinery.run(
       spark,
       graft.tools.RunRefinery.resolveDocs(spark, "/root/testdata/sf0.001"),
@@ -57,9 +57,9 @@ class RefinerySpec extends SparkSpec {
     // 31 duplicates 1 exactly; 32 is a unique doc in another language
     val rows = base :+ ((31L, "en", base.head._3)) :+
       ((32L, "de", s"${para("uniq", 7)}\n\n${para("zwei", 9)}"))
-    val src = java.nio.file.Files.createTempDirectory("graft_refinery_ext_src").toString
+    val src = tempDir("graft_refinery_ext_src").toString
     rows.toDF("doc_id", "lang", "text").write.mode("overwrite").parquet(s"$src/corpus")
-    val out = java.nio.file.Files.createTempDirectory("graft_refinery_ext_out").toString
+    val out = tempDir("graft_refinery_ext_out").toString
     val layout = graft.tools.RunRefinery.run(
       spark,
       graft.tools.RunRefinery.resolveDocs(spark, s"$src/corpus"),

@@ -81,7 +81,7 @@ class SearchAnalyzerParitySpec extends SparkSpec {
   }
 
   private def check(t: Trial): Prop = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_parity").toString
+    val tmp = tempDir("graft_parity").toString
     val dmg = t.docs.toDF("doc_id", "text", "lang")
     val fld = t.docs
       .map { case (id, text, lang) => (id, text.split(" ").map(fold).filter(_.nonEmpty).mkString(" "), lang) }

@@ -134,16 +134,16 @@ class SearchSpec extends SparkSpec {
         Search.autocomplete(spark, dir, p, 100).collect()
       }.map(r => r.getAs[String]("token") -> ((r.getAs[Long]("df"), 0L))).toMap
     }
-    val full = java.nio.file.Files.createTempDirectory("graft_vocab_full").toString + "/idx"
+    val full = tempDir("graft_vocab_full").toString + "/idx"
     Search.saveSearchIndex(docs, "doc_id", "text", full)
-    val appended = java.nio.file.Files.createTempDirectory("graft_vocab_app").toString + "/idx"
+    val appended = tempDir("graft_vocab_app").toString + "/idx"
     Search.saveSearchIndex(docs.filter(col("doc_id") <= 2), "doc_id", "text", appended)
     Search.appendToSearchIndex(docs.filter(col("doc_id") > 2), "doc_id", "text", appended)
     // base ⊕ increment fold equals the one-shot dictionary
     assert(vocabOf(appended) == vocabOf(full))
     assert(vocabOf(full)("beta")._1 == 3L && vocabOf(full)("alpha")._1 == 3L)
     // a REPLAYED batch apply overwrites its own increment (no double count)
-    val streamed = java.nio.file.Files.createTempDirectory("graft_vocab_str").toString + "/idx"
+    val streamed = tempDir("graft_vocab_str").toString + "/idx"
     Search.saveSearchIndex(docs.filter(col("doc_id") <= 2), "doc_id", "text", streamed)
     Search.applySearchIndexBatch(docs.filter(col("doc_id") > 2), "doc_id", "text", streamed, 0L)
     val once = vocabOf(streamed)
@@ -165,7 +165,7 @@ class SearchSpec extends SparkSpec {
       (2L, "car card care"),
       (3L, "car dog dig dug")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_vocab_ac").toString + "/idx"
+    val dir = tempDir("graft_vocab_ac").toString + "/idx"
     Search.saveSearchIndex(docs, "doc_id", "text", dir)
     // df-desc, token-asc: car(3) card(2) then care/cart(1 each, alpha)
     val ac = Search.autocomplete(spark, dir, "car", 3).collect()
@@ -196,7 +196,7 @@ class SearchSpec extends SparkSpec {
       (2L, "[card] care"),
       (3L, "dog")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_avocab").toString + "/idx"
+    val dir = tempDir("graft_avocab").toString + "/idx"
     Search.saveSearchIndex(docs.filter(col("doc_id") === 1L), "doc_id", "text", dir, analyzed = true)
     Search.appendToSearchIndex(docs.filter(col("doc_id") =!= 1L), "doc_id", "text", dir, analyzed = true)
     // analyzed autocomplete on a DAMAGED prefix: base ⊕ increment fold
@@ -224,7 +224,7 @@ class SearchSpec extends SparkSpec {
       (4L, "cat bird")
     ).toDF("doc_id", "text")
     def freshShards(): (String, Seq[String]) = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_merge").toString
+      val tmp = tempDir("graft_merge").toString
       val parts = (0 until 2).map { i =>
         val p = s"$tmp/shard$i"
         Search.saveSearchIndex(docs.filter(col("doc_id") % 2 === i), "doc_id", "text", p)
@@ -271,7 +271,7 @@ class SearchSpec extends SparkSpec {
   test("mergeDocStores: merged store serves every shard's docs, parts consumed, tombstoned part refused") {
     val docs = Seq((1L, "alpha one"), (2L, "beta two"), (3L, "gamma three"), (4L, "delta four"))
       .toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_smerge").toString
+    val tmp = tempDir("graft_smerge").toString
     val parts = (0 until 2).map { i =>
       val p = s"$tmp/s$i"
       Search.saveDocStore(docs.filter(col("doc_id") % 2 === i), "doc_id", "text", p)
@@ -300,7 +300,7 @@ class SearchSpec extends SparkSpec {
       (4L, "common common common"),      // stopword only — idf 0, never selected
       (5L, "nothing here common")
     ).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mlt").toString
+    val tmp = tempDir("graft_mlt").toString
     val (idx, store) = (s"$tmp/idx", s"$tmp/store")
     Search.saveSearchIndex(docs, "doc_id", "text", idx)
     Search.saveDocStore(docs, "doc_id", "text", store)
@@ -380,7 +380,7 @@ class SearchSpec extends SparkSpec {
       (2L, "cat cut"),
       (3L, "dog")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_wild").toString + "/idx"
+    val dir = tempDir("graft_wild").toString + "/idx"
     Search.saveSearchIndex(docs, "doc_id", "text", dir)
     def ids(pattern: String, maxExpand: Int = 8) =
       Search.wildcardSearchFromIndex(spark, dir, pattern, maxExpand, 10).collect()
@@ -474,7 +474,7 @@ class SearchSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     toks.foreach(t => assert(Search.tokenBucket(t) == execBuckets(t), s"bucket mismatch for '$t'"))
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_searchidx").toString
+    val dir = tempDir("graft_searchidx").toString
     val docs = Seq(
       (1L, "cat dog"), (2L, "cat"), (3L, "dog cat extra"), (4L, "bird")
     ).toDF("doc_id", "text")
@@ -494,7 +494,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("as-of reads: every generation reconstructs its exact state; plain indexes refuse") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_asof").toString
+    val tmp = tempDir("graft_asof").toString
     val dir = s"$tmp/idx"
     val base = Seq((2L, "anchor original two")).toDF("doc_id", "text")
     Search.saveSearchIndex(base, "doc_id", "text", dir)
@@ -547,7 +547,7 @@ class SearchSpec extends SparkSpec {
       (3L, "cat gamma", "bird flies high"),
       (4L, "fish delta", "cat dog bird")
     ).toDF("doc_id", "title", "body")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fld_life").toString
+    val tmp = tempDir("graft_fld_life").toString
     val oneShot = s"$tmp/one"
     val grown = s"$tmp/grown"
     Search.saveFieldedSearchIndex(docs, "doc_id", flds, oneShot)
@@ -670,7 +670,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("index lifecycle: append grows N and postings; compaction leaves probes bit-identical") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_searchidx_app").toString
+    val dir = tempDir("graft_searchidx_app").toString
     val docs = Seq(
       (2L, "cat dog"), (4L, "cat"),            // the build half
       (1L, "dog cat cat"), (3L, "cat dog")     // the appended half
@@ -696,7 +696,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("compaction REPAIRS meta from doclen (the non-atomic append window heals)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_searchidx_repair").toString
+    val dir = tempDir("graft_searchidx_repair").toString
     val docs = Seq((1L, "cat dog"), (2L, "cat x y")).toDF("doc_id", "text")
     Search.saveSearchIndex(docs, "doc_id", "text", dir)
     // simulate the crash window: relations written, meta stale
@@ -716,8 +716,8 @@ class SearchSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     ids.foreach(i => assert(Search.docBucket(i) == execB(i), s"doc bucket mismatch for $i"))
 
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_kwicpage_idx").toString
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_kwicpage_store").toString + "/docs"
+    val idxDir = tempDir("graft_kwicpage_idx").toString
+    val storeDir = tempDir("graft_kwicpage_store").toString + "/docs"
     val docs = Seq(
       (1L, "a hash b hash c"), // 2 occurrences
       (2L, "hash only here"),  // 1 occurrence
@@ -756,7 +756,7 @@ class SearchSpec extends SparkSpec {
       (2L, "dup beta gamma."),
       (3L, "window merge dup")  // excluded by -merge
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_qsa").toString + "/idx"
+    val dir = tempDir("graft_qsa").toString + "/idx"
     Search.saveSearchIndex(docs, "doc_id", "text", dir, analyzed = true)
     val got = Search.searchQueryString(spark, dir, "+DUP Window^3 -Merge", 10, a = Folded)
       .collect().map(_.getAs[Long]("doc_id")).toSet
@@ -778,8 +778,8 @@ class SearchSpec extends SparkSpec {
   }
 
   test("analyzed page-surface twins: damaged docs recovered; probes pruned to bucket dirs") {
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_antwin_idx").toString + "/idx"
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_antwin_st").toString + "/docs"
+    val idxDir = tempDir("graft_antwin_idx").toString + "/idx"
+    val storeDir = tempDir("graft_antwin_st").toString + "/docs"
     // doc 2 is 'damaged' (uppercase + bracket punctuation): the raw
     // routes would miss it, the analyzed chain must recover it
     val docs = Seq(
@@ -806,9 +806,9 @@ class SearchSpec extends SparkSpec {
   }
 
   test("chunkPageFromIndex: winners render their OWN chunk text; store read is page-pruned") {
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_chunkpage_idx").toString + "/idx"
+    val idxDir = tempDir("graft_chunkpage_idx").toString + "/idx"
     val storeDir =
-      java.nio.file.Files.createTempDirectory("graft_chunkpage_store").toString + "/docs"
+      tempDir("graft_chunkpage_store").toString + "/docs"
     // chunkSize 2: doc 1's SECOND chunk carries the term twice (beats
     // its first), doc 2's first chunk once, doc 3 never matches
     val docs = Seq(
@@ -840,7 +840,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("pre-dl index format fails LOUDLY: no format_version marker → probes and compaction throw") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_searchidx_v1").toString
+    val dir = tempDir("graft_searchidx_v1").toString
     val docs = Seq((1L, "cat dog"), (2L, "cat x y")).toDF("doc_id", "text")
     Search.saveSearchIndex(docs, "doc_id", "text", dir)
     // simulate a v1 index: meta without the marker (its postings would
@@ -861,7 +861,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("maintaining an ANALYZED index with analyzed=false fails loudly (stale-twin guard)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_searchidx_antwin").toString
+    val dir = tempDir("graft_searchidx_antwin").toString
     val docs = Seq((1L, "cat dog"), (2L, "cat x")).toDF("doc_id", "text")
     Search.saveSearchIndex(docs, "doc_id", "text", dir, analyzed = true)
     val more = Seq((3L, "dog y")).toDF("doc_id", "text")
@@ -882,8 +882,8 @@ class SearchSpec extends SparkSpec {
   }
 
   test("bm25FromIndex: equals the corpus route bit for bit; scan is partition-pruned; appends accumulate") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_searchidx_bm25").toString
-    val dirApp = java.nio.file.Files.createTempDirectory("graft_searchidx_bm25app").toString
+    val dir = tempDir("graft_searchidx_bm25").toString
+    val dirApp = tempDir("graft_searchidx_bm25app").toString
     def pad(n: Int) = Seq.fill(n)("filler").mkString(" ")
     val docs = (Seq(
       (1L, "cat " + pad(9)),
@@ -911,7 +911,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("phraseFromIndex: equals the corpus window route; positions scan partition-pruned") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_searchidx_phrase").toString
+    val dir = tempDir("graft_searchidx_phrase").toString
     val docs = Seq(
       (1L, "hash join now hash join"), // 2 occurrences
       (2L, "hash x join"),             // both tokens, never adjacent
@@ -929,7 +929,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("n-term phraseFromIndex: overlapping + repeated-term phrases equal the corpus window route; scan pruned") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_searchidx_phrase3").toString
+    val dir = tempDir("graft_searchidx_phrase3").toString
     val docs = Seq(
       (1L, "a b c a b c a b c"), // 3 overlapping "a b c"
       (2L, "a b x c"),           // terms present, never consecutive
@@ -959,7 +959,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("bm25BatchFromIndex: each query's rows equal its single-query index route; group-limited") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_searchidx_bm25b").toString
+    val dir = tempDir("graft_searchidx_bm25b").toString
     def pad(n: Int) = Seq.fill(n)("filler").mkString(" ")
     val docs = (Seq(
       (1L, "cat " + pad(9)),
@@ -1030,7 +1030,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("batched index route: bucket-union pruning, rows equal the corpus-pass batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_searchidx_batch").toString
+    val dir = tempDir("graft_searchidx_batch").toString
     val docs = Seq(
       (1L, "cat dog"), (2L, "cat"), (3L, "dog bird"), (4L, "bird fox cat dog")
     ).toDF("doc_id", "text")
@@ -1112,7 +1112,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("analyzedFromIndex: equals the corpus analyzed route through append+compact; apostings scan partition-pruned") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_searchidx_an").toString
+    val dir = tempDir("graft_searchidx_an").toString
     val docs = Seq(
       (1L, "CAT dog"),
       (2L, "[cat] (dog)"),
@@ -1139,7 +1139,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("analyzedBm25FromIndex: equals the corpus analyzed-BM25 route through append+compact; adl is the ANALYZED length") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_searchidx_abm").toString
+    val dir = tempDir("graft_searchidx_abm").toString
     def pad(n: Int) = Seq.fill(n)("filler").mkString(" ")
     val docs = (Seq(
       (1L, "CAT " + pad(9)),                               // case-damaged, short
@@ -1192,7 +1192,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("analyzedPhraseSearch: adjacency over the FILTERED analyzed stream; index route equal through append+compact; apositions scan pruned") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_searchidx_aph").toString
+    val dir = tempDir("graft_searchidx_aph").toString
     val docs = Seq(
       (1L, "HASH JOIN big"),               // case-damaged adjacency
       (2L, "[hash] [join] [big]"),         // punct-wrapped adjacency
@@ -1335,8 +1335,8 @@ class SearchSpec extends SparkSpec {
   }
 
   test("delete: tombstone serving equals a live-corpus rebuild; idempotent decrement; purge heals") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_searchidx_tomb").toString
-    val refDir = java.nio.file.Files.createTempDirectory("graft_searchidx_tombref").toString
+    val dir = tempDir("graft_searchidx_tomb").toString
+    val refDir = tempDir("graft_searchidx_tombref").toString
     val docs = Seq(
       (1L, "cat dog"), (2L, "cat cat filler"), (3L, "dog cat extra"), (4L, "bird"), (5L, "cat")
     ).toDF("doc_id", "text")
@@ -1387,8 +1387,8 @@ class SearchSpec extends SparkSpec {
   }
 
   test("delete on an ANALYZED index: ameta decremented exactly, analyzed probes equal a rebuild") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_searchidx_tomb_an").toString
-    val refDir = java.nio.file.Files.createTempDirectory("graft_searchidx_tomb_anref").toString
+    val dir = tempDir("graft_searchidx_tomb_an").toString
+    val refDir = tempDir("graft_searchidx_tomb_anref").toString
     val docs = Seq(
       (1L, "CAT dog!"), (2L, "cat [cat] filler"), (3L, "dog cat extra"), (4L, "bird"), (5L, "Cat")
     ).toDF("doc_id", "text")
@@ -1404,8 +1404,8 @@ class SearchSpec extends SparkSpec {
   }
 
   test("upsert apply: old version dies, replacement serves, replay idempotent, purge converges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_searchidx_upsert").toString
-    val refDir = java.nio.file.Files.createTempDirectory("graft_searchidx_upsertref").toString
+    val dir = tempDir("graft_searchidx_upsert").toString
+    val refDir = tempDir("graft_searchidx_upsertref").toString
     val v1 = Seq((1L, "cat dog"), (2L, "bird seed")).toDF("doc_id", "text")
     val v2 = Seq((1L, "fish dog dog")).toDF("doc_id", "text")
     Search.applySearchIndexBatch(v1, "doc_id", "text", dir, batchId = 0L, upsert = true)
@@ -1443,11 +1443,16 @@ class SearchSpec extends SparkSpec {
       Seq((1L, "worm")).toDF("doc_id", "text"), "doc_id", "text", dir, batchId = 2L, upsert = true)
     assert(ids(Seq("fish")) == Set.empty[Long], "post-purge survivors must die under a newer upsert")
     assert(ids(Seq("worm")) == Set(1L))
+    // a batch whose id column is not named doc_id upserts the same way
+    Search.applySearchIndexBatch(
+      Seq((2L, "bird song")).toDF("id", "text"), "id", "text", dir, batchId = 3L, upsert = true)
+    assert(ids(Seq("seed")) == Set.empty[Long], "an upsert keyed by `id` must kill the old version")
+    assert(ids(Seq("song")) == Set(2L))
   }
 
   test("facetCounts: exact-token AND match set; the store scan reads facet columns, never text") {
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_facet_idx").toString
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_facet_store").toString + "/docs"
+    val idxDir = tempDir("graft_facet_idx").toString
+    val storeDir = tempDir("graft_facet_store").toString + "/docs"
     val docs = Seq(
       (1L, "cat dog", "en"),
       (2L, "cat dog cat", "en"),
@@ -1468,7 +1473,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("bm25PageAfter: pages partition the ranking exactly, ties cursor on doc_id, page plans top-k") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_page_idx").toString
+    val dir = tempDir("graft_page_idx").toString
     // 9 scoring docs; 4-7 share IDENTICAL text → identical scores, so
     // the page boundary lands inside a tie run and the cursor must
     // discriminate on doc_id alone
@@ -1500,8 +1505,8 @@ class SearchSpec extends SparkSpec {
   }
 
   test("analyzedFacetCounts recovers damaged docs the raw facet route misses; pages partition the analyzed ranking") {
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_facet_an_idx").toString
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_facet_an_store").toString
+    val idxDir = tempDir("graft_facet_an_idx").toString
+    val storeDir = tempDir("graft_facet_an_store").toString
     val docs = Seq(
       (1L, "CAT DOG", "en"),     // uppercased damage
       (2L, "cat dog", "de"),     // clean
@@ -1529,8 +1534,8 @@ class SearchSpec extends SparkSpec {
   }
 
   test("analyzedKwicPage: analyzed hit test over raw damaged tokens, page-pruned store scan") {
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_akwic_idx").toString
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_akwic_store").toString
+    val idxDir = tempDir("graft_akwic_idx").toString
+    val storeDir = tempDir("graft_akwic_store").toString
     val docs = Seq(
       (1L, "CAT x CAT"),  // uppercase damage, two occurrences
       (2L, "[cat] y z"),  // bracket damage
@@ -1553,8 +1558,8 @@ class SearchSpec extends SparkSpec {
   }
 
   test("doc-store upserts: kwicPage renders the NEW text, replay idempotent, purge physical") {
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_store_up_idx").toString
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_store_up").toString
+    val idxDir = tempDir("graft_store_up_idx").toString
+    val storeDir = tempDir("graft_store_up").toString
     val v1 = Seq((1L, "alpha hash beta"), (2L, "hash gamma")).toDF("doc_id", "text")
     val v2 = Seq((1L, "delta hash epsilon")).toDF("doc_id", "text")
     Search.applySearchIndexBatch(v1, "doc_id", "text", idxDir, batchId = 0L, upsert = true)
@@ -1584,7 +1589,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("searchIndexStats: invariants hold fresh, expose purge backlog, heal after compaction") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stats_idx").toString
+    val dir = tempDir("graft_stats_idx").toString
     val docs = Seq((1L, "a b c"), (2L, "a"), (3L, "b c")).toDF("doc_id", "text")
     Search.saveSearchIndex(docs, "doc_id", "text", dir)
     def stats() = Search.searchIndexStats(spark, dir).head()
@@ -1642,7 +1647,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("no tombstones → probe plans untouched (zero-cost fast path)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_searchidx_notomb").toString
+    val dir = tempDir("graft_searchidx_notomb").toString
     Search.saveSearchIndex(Seq((1L, "cat dog")).toDF("doc_id", "text"), "doc_id", "text", dir)
     val plan = Search.conjunctiveFromIndex(spark, dir, Seq("cat"), 10)
       .queryExecution.executedPlan.toString
@@ -1660,7 +1665,7 @@ class SearchSpec extends SparkSpec {
   ).toDF("doc_id", "text")
 
   private def freshMergeShards(tag: String): (String, Seq[String]) = {
-    val tmp = java.nio.file.Files.createTempDirectory(tag).toString
+    val tmp = tempDir(tag).toString
     val parts = (0 until 2).map { i =>
       val p = s"$tmp/shard$i"
       Search.saveSearchIndex(mergeFixtureDocs.filter(col("doc_id") % 2 === i), "doc_id", "text", p)
@@ -1758,7 +1763,7 @@ class SearchSpec extends SparkSpec {
       (3L, "garden log", "tomatoes and herbs no fruit this week"),
       (4L, "apple storage", "cellar stays cool apples keep till spring")
     ).toDF("doc_id", "title", "body")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bm25f").toString
+    val tmp = tempDir("graft_bm25f").toString
     // 1-field degeneration: same docs as one 'text' field — scores must
     // EQUAL the unfielded BM25 integers (the rational form reduces)
     val flat = docs.select(col("doc_id"), concat_ws(" ", col("title"), col("body")).as("text"))
@@ -1792,7 +1797,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("as-of doc store: era text serves, kwicPageAsOf renders it, horizon ends travel") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_asofstore").toString
+    val tmp = tempDir("graft_asofstore").toString
     val idx = s"$tmp/idx"
     val store = s"$tmp/store"
     val base = Seq((2L, "anchor original two")).toDF("doc_id", "text")
@@ -1837,7 +1842,7 @@ class SearchSpec extends SparkSpec {
   test("vocab increments consumed inside the committed swap: the crash window cannot double-count") {
     import org.apache.hadoop.fs.Path
     val fs = new Path("/").getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = java.nio.file.Files.createTempDirectory("graft_vocabinc").toString
+    val tmp = tempDir("graft_vocabinc").toString
     val dir = s"$tmp/idx"
     Search.saveSearchIndex(Seq((1L, "bird cat")).toDF("doc_id", "text"), "doc_id", "text", dir)
     Search.appendToSearchIndex(Seq((2L, "bird bird")).toDF("doc_id", "text"), "doc_id", "text", dir)
@@ -1905,7 +1910,7 @@ class SearchSpec extends SparkSpec {
       (2L, "common common common"), // common thrice
       (3L, "common rare")      // both
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_boost").toString + "/idx"
+    val dir = tempDir("graft_boost").toString + "/idx"
     Search.saveSearchIndex(docs, "doc_id", "text", dir)
     val plain = Search.disjunctiveFromIndex(spark, dir, Seq("rare", "common"), 10)
       .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("score_micro"))).toMap
@@ -1931,7 +1936,7 @@ class SearchSpec extends SparkSpec {
       (3L, "cat only here"),                                // not in AND match set
       (4L, "dog cat x")                                     // dl 3 → bucket 0
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_rfacet").toString + "/idx"
+    val dir = tempDir("graft_rfacet").toString + "/idx"
     Search.saveSearchIndex(docs, "doc_id", "text", dir)
     val got = Search.rangeFacetCounts(spark, dir, Seq("cat", "dog"), 32L)
       .collect().map(r => r.getAs[Long]("range_lo") -> r.getAs[Long]("n_hits")).toMap
@@ -1959,7 +1964,7 @@ class SearchSpec extends SparkSpec {
       (3L, "small stuff"),
       (4L, "other words")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_rx").toString + "/idx"
+    val dir = tempDir("graft_rx").toString + "/idx"
     Search.saveSearchIndex(docs, "doc_id", "text", dir)
     // ^s.a matches scan/spark/small (not stuff: s-t-u); cap 2 keeps the
     // two commonest (scan df 1, small df 1, spark df 1 — ties to token
@@ -1995,7 +2000,7 @@ class SearchSpec extends SparkSpec {
       (2L, "other title", "hash in the body"), // hash ONLY in body
       (3L, "hash hash", "more text")           // hash twice in title
     ).toDF("doc_id", "title", "body")
-    val dir = java.nio.file.Files.createTempDirectory("graft_fscope").toString + "/idx"
+    val dir = tempDir("graft_fscope").toString + "/idx"
     Search.saveFieldedSearchIndex(docs, "doc_id", Seq("title", "body"), dir)
     val got = Search.fieldedTermSearch(spark, dir, "title", Seq("hash"), 10)
       .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("score_micro")))
@@ -2015,7 +2020,7 @@ class SearchSpec extends SparkSpec {
       (3L, "dog only"),
       (4L, "neither")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_hc").toString + "/idx"
+    val dir = tempDir("graft_hc").toString + "/idx"
     Search.saveSearchIndex(docs, "doc_id", "text", dir)
     val r = Search.hitCounts(spark, dir, Seq("cat", "dog")).collect().head
     assert(r.getAs[Long]("n_and") == 1L && r.getAs[Long]("n_or") == 3L, r.toString)
@@ -2027,7 +2032,7 @@ class SearchSpec extends SparkSpec {
       (2L, "query engine"),
       (3L, "other words")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ac").toString + "/idx"
+    val dir = tempDir("graft_ac").toString + "/idx"
     Search.saveSearchIndex(docs, "doc_id", "text", dir)
     // exact term with hits: no correction
     val exact = Search.searchWithAutoCorrect(spark, dir, "query", 2, 10).collect()
@@ -2046,7 +2051,7 @@ class SearchSpec extends SparkSpec {
       (2L, "query engine"),
       (3L, "planner only")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_acm").toString + "/idx"
+    val dir = tempDir("graft_acm").toString + "/idx"
     Search.saveSearchIndex(docs, "doc_id", "text", dir)
     // 'planner' alive (must NOT be touched even though 'planter' would
     // be within distance); 'quer' dead -> corrects to 'query'
@@ -2101,7 +2106,7 @@ class SearchSpec extends SparkSpec {
 
   test("searchQueryString: field clause without a fielded dir and rangeless scoring guards") {
     val docs = Seq((1L, "dup alpha beta"), (2L, "window gamma")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_qs").toString + "/idx"
+    val dir = tempDir("graft_qs").toString + "/idx"
     Search.saveSearchIndex(docs, "doc_id", "text", dir)
     val e = intercept[IllegalArgumentException](
       Search.searchQueryString(spark, dir, "dup title:window", 10)
@@ -2134,7 +2139,7 @@ class SearchSpec extends SparkSpec {
 
   test("regexSearchFromIndex: whole-term anchoring (RegexpQuery semantics)") {
     val docs = Seq((1L, "spa span spanner respan"), (2L, "spa xyz")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_rx").toString + "/idx"
+    val dir = tempDir("graft_rx").toString + "/idx"
     Search.saveSearchIndex(docs, "doc_id", "text", dir)
     // 's.a' must match ONLY the three-char token 'spa' — unanchored
     // rlike would also expand span/spanner/respan
@@ -2148,7 +2153,7 @@ class SearchSpec extends SparkSpec {
 
   test("hitCounts: duplicate terms dedupe instead of zeroing n_and") {
     val docs = Seq((1L, "dup spark x"), (2L, "dup y")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_hc").toString + "/idx"
+    val dir = tempDir("graft_hc").toString + "/idx"
     Search.saveSearchIndex(docs, "doc_id", "text", dir)
     val r = Search.hitCounts(spark, dir, Seq("dup", "spark", "dup")).head()
     assert(r.getAs[Long]("n_and") == 1L && r.getAs[Long]("n_or") == 2L)
@@ -2188,7 +2193,7 @@ class SearchSpec extends SparkSpec {
       (4L, "window hash join"),      // excluded: must term absent
       (5L, "dup window join hash")   // excluded: phrase reversed
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_qs").toString + "/idx"
+    val dir = tempDir("graft_qs").toString + "/idx"
     Search.saveSearchIndex(docs, "doc_id", "text", dir)
     val got = Search.searchQueryString(spark, dir, "+dup window^3 -merge \"hash join\"", 10)
       .orderBy("rank").collect().map(_.getAs[Long]("doc_id")).toSeq
@@ -2227,7 +2232,7 @@ class SearchSpec extends SparkSpec {
       (2L, "[join] [x] [hash]"),  // bracketed AND reversed — must be excluded
       (3L, "hash, join!")         // edge punct strips, adjacent in the analyzed stream
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_aslop").toString + "/idx"
+    val dir = tempDir("graft_aslop").toString + "/idx"
     Search.saveSearchIndex(docs, "doc_id", "text", dir, analyzed = true)
     val got = Search.orderedSlopFromIndex(spark, dir, "Hash", "JOIN", 3, Folded)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_pairs")).toMap
@@ -2245,8 +2250,8 @@ class SearchSpec extends SparkSpec {
       (2L, "cat a b c d e f g h i j dog"),
       (3L, "nothing here")
     ).toDF("doc_id", "text")
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_bp").toString + "/idx"
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_bp").toString + "/store"
+    val idxDir = tempDir("graft_bp").toString + "/idx"
+    val storeDir = tempDir("graft_bp").toString + "/store"
     Search.saveSearchIndex(docs, "doc_id", "text", idxDir)
     Search.saveDocStore(docs, "doc_id", "text", storeDir)
     val got = Search.bestPassages(spark, idxDir, storeDir, Seq("cat", "dog"), 4, 5)

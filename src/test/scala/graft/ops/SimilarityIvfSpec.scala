@@ -100,7 +100,7 @@ class SimilarityIvfSpec extends SparkSpec {
 
   test("incremental embedding dedup prunes index partitions to the probe buckets") {
     val emb = Fixtures.embeddings(spark, dir)
-    val idx = java.nio.file.Files.createTempDirectory("graft_emb_spec").toString
+    val idx = tempDir("graft_emb_spec").toString
     Similarity.saveEmbeddingDedupIndex(emb.filter(col("vec_id") % 2 === 0), idx)
     val out = Similarity.incrementalEmbeddingDedup(emb.filter(col("vec_id") % 2 =!= 0), idx, 0.3)
     val rows = out.collect()
@@ -121,7 +121,7 @@ class SimilarityIvfSpec extends SparkSpec {
 
   test("embedding index: cold start probes empty, append closes the loop, compaction is value-neutral") {
     val emb = Fixtures.embeddings(spark, dir)
-    val idx = java.nio.file.Files.createTempDirectory("graft_emb_cold").toString + "/never_written"
+    val idx = tempDir("graft_emb_cold").toString + "/never_written"
     val b1 = emb.filter(col("vec_id") % 4 === 1)
     val b2 = emb.filter(col("vec_id") % 4 === 3)
     // cold start: no index dir — only self-pairs
@@ -151,7 +151,7 @@ class SimilarityIvfSpec extends SparkSpec {
 
   test("persisted IVF index serves queries identically and prunes list partitions") {
     val emb = Fixtures.embeddings(spark, dir)
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val idx = tempDir("graft_ivf").toString
     Similarity.saveIvfIndex(emb, nLists = 8, idx)
     // same results as the rebuild-per-query path at the same probes
     val live = Similarity.ivfTopK(emb, 0L, 10, nLists = 8, nProbe = 4).collect().map(_.getLong(0)).toSeq
@@ -166,7 +166,7 @@ class SimilarityIvfSpec extends SparkSpec {
 
   test("IVF-PQ: codes well-formed, ADC probe partition-pruned, training deterministic") {
     val emb = Fixtures.embeddings(spark, dir)
-    val idx = java.nio.file.Files.createTempDirectory("graft_pq").toString
+    val idx = tempDir("graft_pq").toString
     Similarity.savePqIndex(emb, nLists = 8, m = 8, codes = 16, idx)
     val assigned = spark.read.parquet(s"$idx/assignments")
     assert(assigned.count() == emb.count())
@@ -191,7 +191,7 @@ class SimilarityIvfSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters: [list_id"), plan.take(2000))
     // the point of PQ: the probe-side relation is a fraction of the
     // raw-vector index's bytes (64 doubles -> 8 small ints + a norm)
-    val ivfIdx = java.nio.file.Files.createTempDirectory("graft_pq_sz").toString
+    val ivfIdx = tempDir("graft_pq_sz").toString
     Similarity.saveIvfIndex(emb, nLists = 8, ivfIdx)
     def bytes(p: String): Long = {
       def walk(f: java.io.File): Long =
@@ -212,8 +212,8 @@ class SimilarityIvfSpec extends SparkSpec {
     // below even the random-pick baseline); at 500 vectors the
     // ordering is meaningful and deterministic
     val emb = Fixtures.embeddings(spark, "/root/testdata/sf0.01")
-    val ivfIdx = java.nio.file.Files.createTempDirectory("graft_pq_ivf").toString
-    val pqIdx = java.nio.file.Files.createTempDirectory("graft_pq_pq").toString
+    val ivfIdx = tempDir("graft_pq_ivf").toString
+    val pqIdx = tempDir("graft_pq_pq").toString
     Similarity.saveIvfIndex(emb, nLists = 8, ivfIdx)
     Similarity.savePqIndex(emb, nLists = 8, m = 8, codes = 16, pqIdx)
     // same memoized IVF fit -> identical list layout and probe set, so
@@ -285,7 +285,7 @@ class SimilarityIvfSpec extends SparkSpec {
 
   test("PQ drift report: generations stamped through append/compaction; shifted increment detected") {
     val emb = Fixtures.embeddings(spark, dir)
-    val idx = java.nio.file.Files.createTempDirectory("graft_pq_drift").toString
+    val idx = tempDir("graft_pq_drift").toString
     Similarity.savePqIndex(emb, nLists = 8, m = 8, codes = 16, idx)
     // crafted drift: every vector shifted +0.5 per dim — far off the
     // manifold the frozen codebooks were fit on
@@ -330,7 +330,7 @@ class SimilarityIvfSpec extends SparkSpec {
     val emb = Fixtures.embeddings(spark, dir)
     val evens = emb.filter(col("vec_id") % 2 === 0)
     val odds = emb.filter(col("vec_id") % 2 =!= 0)
-    val idx = java.nio.file.Files.createTempDirectory("graft_pq_append").toString
+    val idx = tempDir("graft_pq_append").toString
     Similarity.savePqIndex(evens, nLists = 8, m = 8, codes = 16, idx)
     val builtRows = spark.read.parquet(s"$idx/assignments").count()
     Similarity.appendToPqIndex(odds, idx)
@@ -341,7 +341,7 @@ class SimilarityIvfSpec extends SparkSpec {
     // assignment: re-append the EVEN vectors to a scratch copy and
     // compare (same frozen centroids — any disagreement would mean the
     // serve-path assignment diverges from the built layout)
-    val idx2 = java.nio.file.Files.createTempDirectory("graft_pq_append2").toString + "/idx"
+    val idx2 = tempDir("graft_pq_append2").toString + "/idx"
     graft.core.Compaction.copyDir(spark, idx, idx2)
     val builtAssign = spark.read
       .parquet(s"$idx/assignments")
@@ -377,7 +377,7 @@ class SimilarityIvfSpec extends SparkSpec {
   test("IVF-PQ: the batched k-NN join equals the per-query probe row for row") {
     import spark.implicits._
     val emb = Fixtures.embeddings(spark, dir)
-    val idx = java.nio.file.Files.createTempDirectory("graft_pq_knn").toString
+    val idx = tempDir("graft_pq_knn").toString
     Similarity.savePqIndex(emb, nLists = 8, m = 8, codes = 16, idx)
     val qs = emb
       .selectExpr("vec_id AS qid", "CAST(embedding AS ARRAY<DOUBLE>) AS qv")
@@ -542,7 +542,7 @@ class SimilarityIvfSpec extends SparkSpec {
 
   test("hardNegativesFromIndex: candidates indexed-only, scan partition-pruned, ranks agree") {
     val emb = Fixtures.embeddings(spark, dir)
-    val idx = java.nio.file.Files.createTempDirectory("graft_hn_idx").toString
+    val idx = tempDir("graft_hn_idx").toString
     Similarity.saveEmbeddingDedupIndex(emb.filter(col("vec_id") % 2 === 0), idx)
     val anchors = emb.filter(col("vec_id") % 50 === 0)
     val before = spark.sparkContext.getPersistentRDDs.keySet
@@ -677,7 +677,7 @@ class SimilarityIvfSpec extends SparkSpec {
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
     val d = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files.createTempDirectory("graft_bitext_idx").toString
+    val dir = tempDir("graft_bitext_idx").toString
     val emb = graft.ops.Fixtures.embeddings(spark, d)
     Similarity.saveBitextBucketIndex(emb, dir)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -698,7 +698,7 @@ class SimilarityIvfSpec extends SparkSpec {
 
   test("IVF stream maintenance: in-plan assignment matches the model; apply is replay-idempotent; probes prune") {
     val d = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_stream_idx").toString
+    val dir = tempDir("graft_ivf_stream_idx").toString
     val emb = graft.ops.Fixtures.embeddings(spark, d)
     val even = emb.filter(col("vec_id") % 2 === 0)
     val odd = emb.filter(col("vec_id") % 2 =!= 0)
@@ -744,8 +744,8 @@ class SimilarityIvfSpec extends SparkSpec {
 
   test("IVF deletes + upserts: tombstone probe ≡ live rebuild, purge physical, post-purge upsert still wins") {
     val d = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_del").toString
-    val refDir = java.nio.file.Files.createTempDirectory("graft_ivf_delref").toString
+    val dir = tempDir("graft_ivf_del").toString
+    val refDir = tempDir("graft_ivf_delref").toString
     val emb = graft.ops.Fixtures.embeddings(spark, d)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id", "label", "cos_sim").collect().map(_.toSeq).toSeq
@@ -777,7 +777,7 @@ class SimilarityIvfSpec extends SparkSpec {
     val after = probe(dir).collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Double]("cos_sim")).toMap
     assert(after.get(top.head).contains(1.0), s"re-added vector must serve its NEW embedding: $after")
     assert(
-      Search.liveRows(
+      Generations.liveRows(
         spark, dir, spark.read.parquet(s"$dir/assignments"), keyCol = "vec_id"
       ).filter(col("vec_id") === top.head).count() == 1,
       "exactly one live row for the upserted vector"

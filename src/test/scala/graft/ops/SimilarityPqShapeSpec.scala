@@ -85,7 +85,7 @@ class SimilarityPqShapeSpec extends SparkSpec {
     import spark0.implicits._
     val nLists = 8
     val nVecs = 64
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_shape").toString
+    val dir = tempDir("graft_pq_shape").toString
 
     // synthetic persisted index at production shape: codes assigned by
     // an integer formula (NOT by encoding — this test pins the SERVE

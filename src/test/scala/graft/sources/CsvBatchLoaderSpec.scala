@@ -7,7 +7,7 @@ import java.nio.file.{Files, Paths}
 class CsvBatchLoaderSpec extends SparkSpec {
 
   test("batched CSV load: size-balanced batches, all rows read exactly once") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = tempDir("graft_csv").toString
     val schema = StructType(Seq(StructField("id", IntegerType), StructField("name", StringType)))
     (1 to 5).foreach { i =>
       val rows = (1 to i * 10).map(r => s"${i * 1000 + r},row_$r").mkString("\n")

@@ -6,7 +6,7 @@ import graft.SparkSpec
 class FileListingSpec extends SparkSpec {
 
   private def mkFiles(n: Int): java.nio.file.Path = {
-    val dir = Files.createTempDirectory("graft_listing")
+    val dir = tempDir("graft_listing")
     (0 until n).foreach { i =>
       Files.writeString(dir.resolve(f"data_$i%03d.csv"), "x,y\n1,2\n")
     }

@@ -13,7 +13,7 @@ class JsonlLoaderSpec extends SparkSpec {
     .add("text", "string")
 
   test("quarantine catches non-JSON, truncated JSON and type mismatches verbatim") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_spec").resolve("src").toString
+    val dir = tempDir("graft_jsonl_spec").resolve("src").toString
     Seq((1L, "en", "good one"), (2L, "de", "gut zwei"))
       .toDF("doc_id", "lang", "text")
       .coalesce(1)
@@ -75,7 +75,7 @@ class JsonlLoaderSpec extends SparkSpec {
   }
 
   test("clean input quarantines nothing and round-trips exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_clean").resolve("src").toString
+    val dir = tempDir("graft_jsonl_clean").resolve("src").toString
     val docs = (1L to 50L).map(i => (i, if (i % 2 == 0) "en" else "de", s"text $i"))
     docs.toDF("doc_id", "lang", "text").repartition(3).write.json(dir)
     val (good, corrupt, raw) = JsonlLoader.readWithQuarantine(spark, dir, schema)

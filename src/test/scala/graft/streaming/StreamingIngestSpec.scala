@@ -11,9 +11,9 @@ class StreamingIngestSpec extends SparkSpec {
   import spark.implicits._
 
   test("file-source ingestion processes each file exactly once across restarts") {
-    val src = Files.createTempDirectory("graft_stream_src")
-    val out = Files.createTempDirectory("graft_stream_out").toString
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt").toString
+    val src = tempDir("graft_stream_src")
+    val out = tempDir("graft_stream_out").toString
+    val ckpt = tempDir("graft_stream_ckpt").toString
     def copyFixture(name: String): Unit = {
       val from = Paths.get("/root/testdata/sf0.001/nation.parquet")
       Files.copy(from, src.resolve(name), StandardCopyOption.REPLACE_EXISTING)
@@ -91,9 +91,9 @@ class StreamingIngestSpec extends SparkSpec {
     // history = even fixture docs; two arriving micro-batches split
     // the odd docs by doc_id % 4 (same shape as IncrementalDedupSpec)
     val sfDir = "/root/testdata/sf0.001"
-    val idx = Files.createTempDirectory("graft_mh_stream").toString
-    val out = Files.createTempDirectory("graft_mh_flags").toString
-    val ckpt = Files.createTempDirectory("graft_mh_ckpt").toString
+    val idx = tempDir("graft_mh_stream").toString
+    val out = tempDir("graft_mh_flags").toString
+    val ckpt = tempDir("graft_mh_ckpt").toString
     val docs = graft.ops.Fixtures.documents(spark, sfDir)
     graft.ops.Dedup.saveMinhashIndex(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", idx)
     def slice(r: Long): Seq[(Long, String)] = docs
@@ -124,7 +124,7 @@ class StreamingIngestSpec extends SparkSpec {
 
   test("near-dup stream starts cold without a seeded index and releases its per-batch caches") {
     implicit val sc = spark.sqlContext
-    val base = Files.createTempDirectory("graft_mh_cold_stream")
+    val base = tempDir("graft_mh_cold_stream")
     val idx = base.resolve("idx").toString // never seeded
     val out = base.resolve("out").toString
     val ckpt = base.resolve("ckpt").toString
@@ -168,7 +168,7 @@ class StreamingIngestSpec extends SparkSpec {
       .map(x => (x.getLong(0), x.getString(1)))
       .toSeq
     def run(compactEvery: Int): (String, String) = {
-      val base = Files.createTempDirectory(s"graft_mh_compact_$compactEvery")
+      val base = tempDir(s"graft_mh_compact_$compactEvery")
       val idx = base.resolve("idx").toString
       val out = base.resolve("out").toString
       val mem = MemoryStream[(Long, String)]
@@ -209,7 +209,7 @@ class StreamingIngestSpec extends SparkSpec {
 
   test("clustered stream survives a restart: checkpoint skips processed files, map converges") {
     val docs = graft.ops.Fixtures.documents(spark, "/root/testdata/sf0.001")
-    val base = Files.createTempDirectory("graft_cc_restart")
+    val base = tempDir("graft_cc_restart")
     val idx = base.resolve("idx").toString
     val src = base.resolve("src").toString
     val out = base.resolve("flags").toString
@@ -287,7 +287,7 @@ class StreamingIngestSpec extends SparkSpec {
     val sfDir = "/root/testdata/sf0.001"
     val emb = graft.ops.Fixtures.embeddings(spark, sfDir)
     def run(compactEvery: Int): (String, String) = {
-      val base = Files.createTempDirectory(s"graft_embcomp_$compactEvery")
+      val base = tempDir(s"graft_embcomp_$compactEvery")
       val idx = base.resolve("idx").toString
       val src = base.resolve("src").toString
       val out = base.resolve("out").toString
@@ -347,7 +347,7 @@ class StreamingIngestSpec extends SparkSpec {
       .collect()
       .map(r => (r.getAs[Long]("new_id"), r.getAs[Long]("ref_id"), r.getAs[String]("src"), r.getAs[Long]("n_match")))
       .toSet
-    val idx = Files.createTempDirectory("graft_mh_replay_ref").toString
+    val idx = tempDir("graft_mh_replay_ref").toString
     graft.ops.Dedup.saveMinhashIndex(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", idx)
     val oneShot = graft.ops.Dedup
       .incrementalDedup(
@@ -394,7 +394,7 @@ class StreamingIngestSpec extends SparkSpec {
     val ev = graft.ops.Fixtures
       .events(spark, "/root/testdata/sf0.001")
       .select(col("event_type"), col("ts_nanos"))
-    val base = java.nio.file.Files.createTempDirectory("graft_anomaly_idem")
+    val base = tempDir("graft_anomaly_idem")
     val src = base.resolve("src").toString
     val state = base.resolve("hourly").toString
     ev.repartition(4, col("event_type")).write.parquet(src)
@@ -604,8 +604,8 @@ class StreamingIngestSpec extends SparkSpec {
   test("stream-maintained search index: bootstrap + appends + mid-stream compaction ≡ one-shot build") {
     implicit val sc = spark.sqlContext
     import org.apache.spark.sql.functions._
-    val idx = Files.createTempDirectory("graft_search_stream_idx").toString + "/idx"
-    val ckpt = Files.createTempDirectory("graft_search_stream_ck").toString
+    val idx = tempDir("graft_search_stream_idx").toString + "/idx"
+    val ckpt = tempDir("graft_search_stream_ck").toString
     val docs = Seq(
       (1L, "cat dog"), (2L, "cat"), (3L, "dog cat extra"), (4L, "bird"),
       (5L, "cat dog cat"), (6L, "dog bird cat")
@@ -636,8 +636,8 @@ class StreamingIngestSpec extends SparkSpec {
     implicit val sc = spark.sqlContext
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val idx = Files.createTempDirectory("graft_search_stream_an").toString + "/idx"
-    val ckpt = Files.createTempDirectory("graft_search_stream_anck").toString
+    val idx = tempDir("graft_search_stream_an").toString + "/idx"
+    val ckpt = tempDir("graft_search_stream_anck").toString
     val docs = Seq(
       (1L, "CAT dog extra pad pad"), (2L, "[cat] pad"), (3L, "cat dog pad pad pad pad"),
       (4L, "Dog! pad pad"), (5L, "!!! cat pad"), (6L, "dog cat dog pad")
@@ -670,18 +670,18 @@ class StreamingIngestSpec extends SparkSpec {
 
   test("search-index batch apply is exactly-once under a full replay of an unmarked batch") {
     import spark.implicits._
-    val idx = Files.createTempDirectory("graft_search_replay").toString + "/idx"
+    val idx = tempDir("graft_search_replay").toString + "/idx"
     val a = Seq((1L, "cat dog"), (2L, "cat")).toDF("doc_id", "text")
     val b = Seq((3L, "dog cat extra"), (4L, "bird")).toDF("doc_id", "text")
     graft.ops.Search.applySearchIndexBatch(a, "doc_id", "text", idx, 0L)
-    graft.ops.Search.writeLastAppliedSearchBatch(spark, idx, 0L)
+    graft.ops.Generations.writeLastApplied(spark, idx, 0L)
     graft.ops.Search.applySearchIndexBatch(b, "doc_id", "text", idx, 1L)
     // CRASH window: batch 1's files and meta are on disk but the marker
     // is not — foreachBatch replays the batch IN FULL. The replay must
     // not duplicate postings/doclen rows or inflate meta.
     graft.ops.Search.applySearchIndexBatch(b, "doc_id", "text", idx, 1L)
-    graft.ops.Search.writeLastAppliedSearchBatch(spark, idx, 1L)
-    assert(graft.ops.Search.lastAppliedSearchBatch(spark, idx) == 1L)
+    graft.ops.Generations.writeLastApplied(spark, idx, 1L)
+    assert(graft.ops.Generations.lastApplied(spark, idx) == 1L)
     // doclen holds each doc exactly once
     assert(spark.read.parquet(s"$idx/doclen").count() == 4L)
     val meta = spark.read.parquet(s"$idx/meta").select("n_docs", "total_toks").head()
@@ -699,7 +699,7 @@ class StreamingIngestSpec extends SparkSpec {
 
   test("batch apply is LEDGER-cost: meta comes from dir/meta_inc sums, never a doclen/apostings scan") {
     import spark.implicits._
-    val idx = Files.createTempDirectory("graft_search_ledger").toString + "/idx"
+    val idx = tempDir("graft_search_ledger").toString + "/idx"
     val a = Seq((1L, "CAT dog"), (2L, "cat!")).toDF("doc_id", "text")
     val b = Seq((3L, "dog cat extra"), (4L, "bird")).toDF("doc_id", "text")
     graft.ops.Search.applySearchIndexBatch(a, "doc_id", "text", idx, 0L, analyzed = true)
@@ -728,7 +728,7 @@ class StreamingIngestSpec extends SparkSpec {
 
   test("fielded batch apply is LEDGER-cost and exactly-once: fmeta from fmeta_inc sums; replay converges") {
     import spark.implicits._
-    val idx = Files.createTempDirectory("graft_fld_ledger").toString + "/idx"
+    val idx = tempDir("graft_fld_ledger").toString + "/idx"
     val flds = Seq("title", "body")
     val a = Seq((1L, "big cat", "dog runs fast"), (2L, "small dog", "cat naps"))
       .toDF("doc_id", "title", "body")
@@ -759,7 +759,7 @@ class StreamingIngestSpec extends SparkSpec {
 
   test("fielded upsert apply: old versions die, per-field stats heal at compaction") {
     import spark.implicits._
-    val idx = Files.createTempDirectory("graft_fld_upsert").toString + "/idx"
+    val idx = tempDir("graft_fld_upsert").toString + "/idx"
     val flds = Seq("title", "body")
     val v1 = Seq((1L, "anchor one", "cat original text"), (2L, "anchor two", "dog keeps this"))
       .toDF("doc_id", "title", "body")
@@ -784,7 +784,7 @@ class StreamingIngestSpec extends SparkSpec {
 
   test("ledger lifecycle: seeded from a saveSearchIndex-built meta; folded to one row by compaction") {
     import spark.implicits._
-    val idx = Files.createTempDirectory("graft_search_ledger_seed").toString + "/idx"
+    val idx = tempDir("graft_search_ledger_seed").toString + "/idx"
     val base = Seq((1L, "cat dog"), (2L, "cat")).toDF("doc_id", "text")
     val inc = Seq((3L, "dog cat extra")).toDF("doc_id", "text")
     graft.ops.Search.saveSearchIndex(base, "doc_id", "text", idx)
@@ -855,7 +855,7 @@ class StreamingIngestSpec extends SparkSpec {
 
   test("CDC apply: delete removes, update replaces, a LATER re-insert resurrects past the delete") {
     import graft.ops.Search
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdc_apply").toString
+    val dir = tempDir("graft_cdc_apply").toString
     val b0 = Seq((1L, "cat dog"), (2L, "bird seed"), (3L, "cat tail")).toDF("doc_id", "text")
     Search.applySearchIndexBatch(b0, "doc_id", "text", dir, batchId = 0L, upsert = true)
     // mixed wave: D doc 1, U doc 3 — one apply, tombstones for BOTH,

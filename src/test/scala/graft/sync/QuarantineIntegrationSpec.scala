@@ -17,7 +17,7 @@ class QuarantineIntegrationSpec extends SparkSpec {
   import spark.implicits._
 
   test("corrupt file quarantines; retry after fix; done files untouched") {
-    val dir = Files.createTempDirectory("graft_quar").toString
+    val dir = tempDir("graft_quar").toString
     val schema = StructType(Seq(StructField("id", IntegerType), StructField("val", StringType)))
     Files.writeString(Paths.get(s"$dir/good1.csv"), "id,val\n1,a\n2,b\n")
     Files.writeString(Paths.get(s"$dir/good2.csv"), "id,val\n3,c\n")
