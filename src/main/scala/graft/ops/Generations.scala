@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.example.data.Group
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -44,19 +44,21 @@ object Generations {
   /** One generation-carrying relation of an index kind: its dir under
     * the index, the column its rows are co-located and partitioned by,
     * the rows a (possibly persisted) batch contributes, and any work
-    * that reads the relation once compaction has rewritten it.
+    * that reads the relation once a build or compaction has rewritten
+    * it.
     */
   final case class Relation(
       name: String,
       partitionCol: Option[String],
       rows: DataFrame => DataFrame,
-      compacted: () => Unit = () => ()
+      rewritten: () => Unit = () => ()
   )
 
   /** A per-batch side relation derived from the batch rows of the
     * relation named `of`: written under the same `gbatch-<gen>` names
-    * and replay cleanup, but never purged nor listed for the high-water
-    * generation — the owning relation's `compacted` step consumes it.
+    * and replay cleanup (plain appends: Spark's names), but never purged
+    * nor listed for the high-water generation — the owning relation's
+    * `rewritten` step consumes it.
     * The source rows are persisted while an increment re-reads them.
     */
   final case class Increment(name: String, of: String, rows: DataFrame => DataFrame)
@@ -119,8 +121,8 @@ object Generations {
     }
 
     /** Fold an existing ledger to one seed row set carrying `rows`
-      * (compaction, and the single-writer plain appends); true iff a
-      * ledger existed.
+      * (compaction, and the single-writer [[append]]); true iff a ledger
+      * existed.
       */
     def fold(s: SparkSession, dir: String, rows: => Scalars): Boolean =
       files(s, dir).nonEmpty && {
@@ -162,7 +164,8 @@ object Generations {
 
   /** An index kind: `keyCol` names the id column of its rows and
     * tombstones; `persist(upsert)` says whether a batch is persisted
-    * for its several readers.
+    * for its several readers ([[build]] and [[append]] ask with
+    * upsert = false).
     */
   final case class Kind(
       keyCol: String,
@@ -177,6 +180,10 @@ object Generations {
 
   private def fsFor(s: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(s.sessionState.newHadoopConf())
+
+  /** Per-key sums of scalar row sets, sorted by key. */
+  private def plus(rows: Scalars*): Scalars =
+    rows.flatten.groupMapReduce(_._1)(_._2)(_.zip(_).map { case (x, y) => x + y }).toSeq.sortBy(_._1)
 
   private def longOrZero(g: Group, field: String): Long =
     if (g.getType.containsField(field) && g.getFieldRepetitionCount(field) > 0) g.getLong(field, 0) else 0L
@@ -360,6 +367,13 @@ object Generations {
       .sortBy(_.toString)
       .toSeq
 
+  /** Write a relation's rows to `path` under Spark's `part-*` names,
+    * co-located by its partition column first (one file per partition
+    * dir — the small-files guard every index write here uses).
+    */
+  private def writeRelation(df: DataFrame, path: String, partitionCol: Option[String], mode: String): Unit =
+    partitionCol.fold(df.write)(c => df.repartition(col(c)).write.partitionBy(c)).mode(mode).parquet(path)
+
   /** Stage a relation increment (co-located by its partition column),
     * then RENAME its data files into the live dir as
     * `gbatch-<gen>-<i>` — the deterministic naming that makes a batch's
@@ -370,7 +384,7 @@ object Generations {
     */
   private def stageAndMove(df: DataFrame, staged: String, target: String, partitionCol: Option[String], gen: Long): Unit = {
     val fs = fsFor(df.sparkSession, target)
-    partitionCol.fold(df.write)(c => df.repartition(col(c)).write.partitionBy(c)).mode("overwrite").parquet(staged)
+    writeRelation(df, staged, partitionCol, "overwrite")
     partFiles(fs, staged, partitionCol).zipWithIndex.foreach { case (src, i) =>
       val destDir = if (partitionCol.isDefined) new Path(target, src.getParent.getName) else new Path(target)
       fs.mkdirs(destDir)
@@ -420,7 +434,100 @@ object Generations {
       }
     }
 
-  // ---- apply, delete, compact -------------------------------------------
+  // ---- build, append, apply, delete, compact ----------------------------
+
+  /** The relation-write loop [[build]], [[append]] and [[apply]] share:
+    * the kind's relation rows — and, with `increments`, its increment
+    * rows — are each handed to `write`, overlapped with the batch's
+    * scalar aggregate (they are independent over the batch). The batch
+    * is pinned when the kind persists it, and a relation an increment
+    * re-reads is pinned too; the pins are filled before the concurrent
+    * readers start. `first` runs over the (pinned) batch before any
+    * relation is written. Returns the batch's scalars.
+    */
+  private def writeBatch(
+      kind: Kind,
+      batch: DataFrame,
+      persist: Boolean,
+      increments: Boolean,
+      first: DataFrame => Unit = _ => ()
+  )(write: (String, Option[String], DataFrame) => Unit): Option[Scalars] = {
+    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = { pinned += df; df.persist(StorageLevel.MEMORY_AND_DISK) }
+    try {
+      val b = if (persist) pin(batch) else batch
+      val incs = if (increments) kind.increments else Nil
+      val rows = kind.relations.map { r =>
+        val df = r.rows(b)
+        r.name -> (if (incs.exists(_.of == r.name)) pin(df) else df)
+      }.toMap
+      // fill every pin with one job before its concurrent readers start
+      // (a reader on a half-filled cache recomputes it). The fill runs a
+      // fresh plan: a frame executed before it was pinned keeps a plan
+      // that misses its own cache entry. The relation pins read all of
+      // the batch, so filling them fills its pin too.
+      val rowPins = pinned.drop(if (persist) 1 else 0)
+      (if (rowPins.nonEmpty) rowPins else pinned).foreach(_.select("*").foreachPartition((_: Iterator[Row]) => ()))
+      first(b)
+      val writes =
+        kind.relations.map(r => (r.name, r.partitionCol, rows(r.name))) ++
+          incs.map(i => (i.name, None, i.rows(rows(i.of))))
+      graft.core.Par
+        .all(
+          kind.stats.map(st => () => Option(st.batch(b))).toSeq ++ writes.map { case (name, pc, df) =>
+            () => { write(name, pc, df); None }
+          },
+          writes.size + 1
+        )
+        .flatten
+        .headOption
+    } finally pinned.foreach(_.unpersist(false))
+  }
+
+  /** BUILD the index at `dir` from `docs`: every relation overwritten
+    * under Spark's `part-*` names, so built rows carry generation −1
+    * (below any batch a stream adopting the index later applies, and
+    * clear of its `gbatch-<gen>` replay cleanup); the stats written
+    * straight from the batch aggregate, with no ledger (a stream seeds
+    * one from them on adoption); then each relation's `rewritten` step
+    * (the postings' vocab derivation).
+    */
+  def build(kind: Kind, docs: DataFrame, dir: String): Unit = {
+    val scalars = writeBatch(kind, docs, kind.persist(false), increments = false) { (name, pc, df) =>
+      writeRelation(df, s"$dir/$name", pc, "overwrite")
+    }
+    for (st <- kind.stats; m <- scalars) st.write(m)
+    kind.relations.foreach(_.rewritten())
+  }
+
+  /** PLAIN APPEND `docs` (new ids only) to the index at `dir`: every
+    * relation and increment appended under Spark's `part-*` names
+    * (generation −1), the stats raised by the batch's, and a stream's
+    * ledger folded to one seed row set carrying the new totals — appends
+    * are single-writer and never replayed, so the wholesale fold is
+    * safe. Refused onto live tombstones: any tombstone (asof ≥ 0) would
+    * kill a re-added id's generation −1 rows; `op` names the caller in
+    * that refusal. Stats are read before anything is written, so an
+    * unreadable meta fails first.
+    */
+  def append(kind: Kind, docs: DataFrame, dir: String, op: String): Unit = {
+    val s = docs.sparkSession
+    require(
+      !hasTombstones(s, dir),
+      s"$op onto $dir with live tombstones: plain-append files carry no generation, so a " +
+        "tombstoned id's re-added rows would be wrongly killed — compact the index first " +
+        "(purges the tombstones) or maintain it through the streaming upsert apply"
+    )
+    val before = kind.stats.map(_.read())
+    val scalars = writeBatch(kind, docs, kind.persist(false), increments = true) { (name, pc, df) =>
+      writeRelation(df, s"$dir/$name", pc, "append")
+    }
+    for (st <- kind.stats; m0 <- before; m1 <- scalars) {
+      val m = plus(m0, m1)
+      st.write(m)
+      st.ledger.fold(s, dir, m)
+    }
+  }
 
   /** Apply ONE batch to the index at `dir`, idempotently:
     *
@@ -434,8 +541,7 @@ object Generations {
     *     BEFORE the new rows land: older versions die, the batch's own
     *     rows survive (gen < gen is false);
     *  4. stage every relation and increment and rename them in under
-    *     `gbatch-<gen>-<i>` names, overlapped with the batch's scalar
-    *     aggregate (they are independent over the persisted batch);
+    *     `gbatch-<gen>-<i>` names ([[writeBatch]]);
     *  5. write the batch's ledger rows and rewrite meta as the ledger
     *     sum.
     *
@@ -469,14 +575,7 @@ object Generations {
           fs.delete(f.getPath, false)
         }
       }
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = { pinned += df; df.persist(StorageLevel.MEMORY_AND_DISK) }
-    try {
-      val b = if (kind.persist(upsert)) pin(batch) else batch
-      val rows = kind.relations.map { r =>
-        val df = r.rows(b)
-        r.name -> (if (kind.increments.exists(_.of == r.name)) pin(df) else df)
-      }.toMap
+    val tombstones: DataFrame => Unit = b =>
       if (upsert)
         stageAndMove(
           tombstoneIds.getOrElse(b).select(col(idCol).cast("long").as(kind.keyCol)).distinct().withColumn("asof", lit(gen)),
@@ -485,21 +584,14 @@ object Generations {
           partitionCol = None,
           gen
         )
-      val writes =
-        kind.relations.map(r => (r.name, r.partitionCol, rows(r.name))) ++
-          kind.increments.map(i => (i.name, None, i.rows(rows(i.of))))
-      val scalars = graft.core.Par.all(
-        kind.stats.map(st => () => Option(st.batch(b))).toSeq ++ writes.map { case (name, pc, df) =>
-          () => { stageAndMove(df, s"$staged/$name", s"$dir/$name", pc, gen); None }
-        },
-        writes.size + 1
-      )
-      fs.delete(new Path(staged), true)
-      kind.stats.foreach { st =>
-        st.ledger.write(s, dir, scalars.flatten.head, s"gbatch-$gen")
-        st.write(st.ledger.sums(s, dir))
-      }
-    } finally pinned.foreach(_.unpersist(false))
+    val scalars = writeBatch(kind, batch, kind.persist(upsert), increments = true, tombstones) { (name, pc, df) =>
+      stageAndMove(df, s"$staged/$name", s"$dir/$name", pc, gen)
+    }
+    fs.delete(new Path(staged), true)
+    for (st <- kind.stats; m <- scalars) {
+      st.ledger.write(s, dir, m, s"gbatch-$gen")
+      st.write(st.ledger.sums(s, dir))
+    }
   }
 
   /** DELETE ids (the first column of `ids`) — the batch-API entry
@@ -548,7 +640,7 @@ object Generations {
           case Some(t) => purgeRewrite(s, path, r.partitionCol, t, purgeGen, kind.keyCol)
           case None    => graft.core.Compaction.compact(s, path, r.partitionCol, 1)
         }
-        r.compacted()
+        r.rewritten()
       }
     }: _*)
     if (tomb.isDefined) fs.delete(new Path(tombstonesDir(dir)), true)

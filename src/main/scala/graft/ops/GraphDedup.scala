@@ -91,11 +91,7 @@ object GraphDedup {
     // large-star/small-star loop below, unchanged.
     if (maxDriverEdges > 0L &&
         e0.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType)) {
-      // clamp BEFORE the +1: Long.MaxValue + 1 wraps negative, which
-      // would collect nothing and pass the empty probe off as the graph
-      val probed = e0
-        .limit((math.min(maxDriverEdges, Int.MaxValue - 1L) + 1).toInt)
-        .collect()
+      val probed = e0.limit(probeLimit(maxDriverEdges)).collect()
       if (probed.length <= maxDriverEdges) {
         releaseCheckpoints(e0)
         return driverUnionFind(
@@ -208,7 +204,7 @@ object GraphDedup {
     // fetches — an oversized increment falls back before the driver
     // holds more than the ceiling
     val e = rootEdges.filter(col("src") =!= col("dst")).localCheckpoint(true)
-    val probed = e.limit(math.min(maxDriverEdges + 1, Int.MaxValue.toLong).toInt).collect()
+    val probed = e.limit(probeLimit(maxDriverEdges)).collect()
     if (probed.length > maxDriverEdges) {
       // the distributed solve eagerly re-checkpoints its canonical
       // form up front, so e is dead as soon as the call returns
@@ -220,6 +216,13 @@ object GraphDedup {
       driverUnionFind(probed.map(r => (r.getLong(0), r.getLong(1))), s)
     }
   }
+
+  /** The size-probe `limit` for a driver edge ceiling: one edge past
+    * it, clamped BEFORE the +1 — `Long.MaxValue + 1` wraps negative and
+    * `limit(0)` would collect nothing, passing the empty probe off as
+    * the graph.
+    */
+  private def probeLimit(maxDriverEdges: Long): Int = (math.min(maxDriverEdges, Int.MaxValue - 1L) + 1).toInt
 
   /** Union-find over a driver-collected edge array: union always
     * attaches the larger root under the smaller, so the final root is

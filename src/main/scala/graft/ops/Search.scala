@@ -780,17 +780,6 @@ object Search {
     pruned(s, dir, s.read.schema(positionsSchema).parquet(s"$dir/${a.positions}"), terms, asOf)
       .select(col("token"), col("doc_id"), col("pos"))
 
-  /** The two corpus scalars every scorer needs: N (distinct docs) and
-    * total token count (BM25's avgdl numerator), computed in ONE
-    * aggregate pass.
-    */
-  private def corpusScalars(docs: DataFrame, idCol: String, textCol: String): (Long, Long) = {
-    val r = docs
-      .agg(countDistinct(col(idCol)).cast("long"), tokenTotal(textCol, Raw))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
-
   /** On-disk format version, stamped into `dir/meta`. Version 2 is the
     * dl-denormalized layout (postings rows carry the doc length);
     * version 1 (no marker) predates it — reading a v1 index with the
@@ -899,20 +888,6 @@ object Search {
       .head()
       .getLong(0)
 
-  /** Write one bucketed index relation (postings or positions shaped)
-    * partitioned by token-hash bucket, co-located to one file per
-    * bucket before the partitioned write (the small-files guard every
-    * index write here uses).
-    */
-  private def writeBucketed(rel: DataFrame, path: String, mode: String): Unit =
-    rel
-      .withColumn("tbucket", tokenBucketCol)
-      .repartition(col("tbucket"))
-      .write
-      .mode(mode)
-      .partitionBy("tbucket")
-      .parquet(path)
-
   /** Persist the inverted index partitioned by token-hash bucket:
     * `dir/postings/tbucket=N/` holds every (token, doc_id, tf) whose
     * token hashes to N, and `dir/positions/tbucket=N/` the positional
@@ -926,7 +901,15 @@ object Search {
     * query terms reads AT MOST |Q| bucket dirs plus two meta scalars
     * — per-probe I/O is occupied-bucket-sized, never index-sized.
     * `dir/doclen` stays as the meta-repair source and the doc-keyed
-    * relation other consumers (compaction's recount) read.
+    * relation other consumers (compaction's recount) read. Production
+    * search is ALWAYS analyzed, so with `analyzed` the index also
+    * carries the folded tier: the same bucket layout keyed by the
+    * FOLDED token's hash (query terms fold driver-side to the same
+    * key), the folded doc length denormalized per row for folded BM25.
+    * Each tier's term dictionary is derived from its just-written
+    * postings — the relation the prefix/fuzzy/autocomplete queries
+    * consult. The build is [[Generations.build]] of [[postingsIndex]]:
+    * built rows carry generation −1.
     */
   def saveSearchIndex(
       docs: DataFrame,
@@ -934,26 +917,8 @@ object Search {
       textCol: String,
       dir: String,
       analyzed: Boolean = false
-  ): Unit = {
-    // production search is ALWAYS analyzed, so the serving index can
-    // carry the folded tier: same bucket layout keyed by the FOLDED
-    // token's hash (query terms fold driver-side to the same key), the
-    // folded doc length denormalized per row for folded BM25
-    val tiers = Analyzer.tiers(analyzed)
-    tiers.foreach { a =>
-      writeBucketed(postingsWithDl(docs, idCol, textCol, a), s"$dir/${a.postings}", "overwrite")
-      writeBucketed(positionalPostings(docs, idCol, textCol, a), s"$dir/${a.positions}", "overwrite")
-    }
-    if (analyzed)
-      writeAmeta(docs.sparkSession, dir, docs.agg(tokenTotal(textCol, Folded)).head().getLong(0))
-    docLengths(docs, idCol, textCol).write.mode("overwrite").parquet(s"$dir/doclen")
-    writeMeta(docs.sparkSession, dir, corpusScalars(docs, idCol, textCol))
-    // the term dictionary per tier, derived from the just-written
-    // postings (a types-scale aggregate over data the build
-    // materialized anyway) — the dictionary prefix/fuzzy/autocomplete
-    // queries consult
-    tiers.foreach(writeVocabFromPostings(docs.sparkSession, dir, _))
-  }
+  ): Unit =
+    Generations.build(postingsIndex(docs.sparkSession, dir, analyzed, idCol, textCol), docs, dir)
 
   /** Conjunctive search served from the PERSISTED index: the query
     * terms' buckets are computed driver-side (no Spark pass) and the
@@ -1679,7 +1644,8 @@ object Search {
     * LIFECYCLE like the unfielded tiers: [[appendToFieldedSearchIndex]],
     * [[deleteFromFieldedIndex]] (tombstones), the streaming
     * [[applyFieldedIndexBatch]] (exactly-once, fmeta_inc ledger) and
-    * [[compactFieldedIndex]] (purge + stats heal).
+    * [[compactFieldedIndex]] (purge + stats heal). The build is
+    * [[Generations.build]] of [[fieldedIndex]].
     */
   def saveFieldedSearchIndex(
       docs: DataFrame,
@@ -1689,19 +1655,7 @@ object Search {
   ): Unit = {
     require(fieldCols.nonEmpty, "fielded index needs at least one field")
     require(fieldCols.distinct.size == fieldCols.size, s"duplicate fields: $fieldCols")
-    val s = docs.sparkSession
-    fieldedPostingRows(docs, idCol, fieldCols)
-      .withColumn("tbucket", tokenBucketCol)
-      .repartition(col("tbucket"))
-      .write
-      .mode("overwrite")
-      .partitionBy("tbucket")
-      .parquet(s"$dir/fpostings")
-    fieldedDocLengths(docs, idCol, fieldCols)
-      .write
-      .mode("overwrite")
-      .parquet(s"$dir/fdoclen")
-    writeFmeta(s, dir, fieldScalars(fieldedBase(docs, idCol, fieldCols), fieldCols, docCount))
+    Generations.build(fieldedIndex(docs.sparkSession, dir, fieldCols, idCol), docs, dir)
   }
 
   /** (doc_id, __toks_<f>…, dl_<f>…) — the shared projection under the
@@ -1837,13 +1791,11 @@ object Search {
   private def fieldedIndexAt(s: SparkSession, dir: String): Kind =
     fieldedIndex(s, dir, readFmeta(s, dir).keys.toSeq.sorted)
 
-  /** APPEND new documents to a fielded index — fpostings/fdoclen grow
-    * by the increment, fmeta's per-field scalars add the increment's
-    * exactly (same read-then-overwrite contract as the unfielded
-    * [[appendToSearchIndex]]). Same loud guard against appending onto
-    * live tombstones: plain-append files carry generation −1, so a
-    * tombstoned id's re-added rows would be wrongly killed — compact
-    * first or maintain through the streaming apply.
+  /** APPEND new documents to a fielded index through
+    * [[Generations.append]] — fpostings/fdoclen grow by the increment,
+    * fmeta's per-field scalars add the increment's exactly (same
+    * read-then-overwrite contract as the unfielded
+    * [[appendToSearchIndex]]), and onto live tombstones it refuses.
     */
   def appendToFieldedSearchIndex(
       newDocs: DataFrame,
@@ -1853,32 +1805,7 @@ object Search {
   ): Unit = {
     val s = newDocs.sparkSession
     requireFieldsMatch(s, dir, fieldCols, "appendToFieldedSearchIndex")
-    require(
-      !hasTombstones(s, dir),
-      s"appendToFieldedSearchIndex onto $dir with live tombstones: plain-append files " +
-        "carry no generation, so a tombstoned id's re-added rows would be wrongly " +
-        "killed — run compactFieldedIndex first or maintain through the streaming apply"
-    )
-    fieldedPostingRows(newDocs, idCol, fieldCols)
-      .withColumn("tbucket", tokenBucketCol)
-      .repartition(col("tbucket"))
-      .write
-      .mode("append")
-      .partitionBy("tbucket")
-      .parquet(s"$dir/fpostings")
-    fieldedDocLengths(newDocs, idCol, fieldCols)
-      .write
-      .mode("append")
-      .parquet(s"$dir/fdoclen")
-    val m0 = readFmeta(s, dir)
-    val merged = fieldScalars(fieldedBase(newDocs, idCol, fieldCols), fieldCols, docCount).map {
-      case (f, Seq(n1, t1)) => f -> Seq(m0(f)._1 + n1, m0(f)._2 + t1)
-    }
-    writeFmeta(s, dir, merged)
-    // keep a maintaining stream's ledger invariant (fmeta = per-field
-    // sum over fmeta_inc): appends are single-writer, never replayed —
-    // a wholesale fold to one seed row-set is safe
-    fieldedLedger.fold(s, dir, merged)
+    Generations.append(fieldedIndex(s, dir, fieldCols, idCol), newDocs, dir, "appendToFieldedSearchIndex")
   }
 
   /** DELETE documents from the fielded index — the
@@ -2235,7 +2162,12 @@ object Search {
     * both scalars from the doclen relation, so the maintenance cadence
     * that bounds file counts also heals the one non-atomic window.
     * Appends accrete one file per batch per bucket dir — bound that
-    * with [[compactSearchIndex]].
+    * with [[compactSearchIndex]]. Each tier with a vocab gets the new
+    * docs' term stats as one types-of-the-increment-scale file that
+    * readers fold base ⊕ increments (new doc ids only, so the group-sum
+    * is exact); a pre-vocab index skips it and compaction backfills.
+    * The append is [[Generations.append]] of [[postingsIndex]], which
+    * refuses onto live tombstones and folds a stream's ledger.
     */
   def appendToSearchIndex(
       newDocs: DataFrame,
@@ -2246,52 +2178,12 @@ object Search {
   ): Unit = {
     val s = newDocs.sparkSession
     requireFoldedTierMaintained(s, dir, analyzed, "appendToSearchIndex")
-    // plain-append files carry generation −1: appending onto LIVE
-    // tombstones would let any tombstone (asof ≥ 0) wrongly kill a
-    // re-added doc's new rows — fail loudly instead
     require(
-      !hasTombstones(s, dir),
-      s"appendToSearchIndex onto $dir with live tombstones: plain-append files carry no " +
-        "generation, so a tombstoned id's re-added rows would be wrongly killed — run " +
-        "compactSearchIndex first (purges the tombstones) or maintain through the " +
-        "streaming upsert apply"
+      !analyzed || hasFoldedTier(s, dir),
+      s"appendToSearchIndex(analyzed = true) onto the raw index at $dir would give " +
+        s"${Folded.postings} the appended documents only — rebuild it with analyzed = true"
     )
-    val tiers = Analyzer.tiers(analyzed)
-    tiers.foreach { a =>
-      writeBucketed(postingsWithDl(newDocs, idCol, textCol, a), s"$dir/${a.postings}", "append")
-      writeBucketed(positionalPostings(newDocs, idCol, textCol, a), s"$dir/${a.positions}", "append")
-    }
-    // same read-then-overwrite contract (and compaction repair) as the
-    // main meta
-    if (analyzed)
-      writeAmeta(s, dir, readAmeta(s, dir) + newDocs.agg(tokenTotal(textCol, Folded)).head().getLong(0))
-    docLengths(newDocs, idCol, textCol).write.mode("append").parquet(s"$dir/doclen")
-    // vocab increment per tier: the new docs' term stats land as one
-    // types-of-the-increment-scale file; readers fold base ⊕ increments
-    // (the append contract is new doc ids only, so the group-sum is
-    // exact). A pre-vocab index skips it — compaction backfills from
-    // postings, which now include these rows.
-    val appendTag = s"append-${java.util.UUID.randomUUID().toString.take(8)}"
-    tiers.foreach { a =>
-      if (fsFor(s, dir).exists(new org.apache.hadoop.fs.Path(vocabDir(dir, a))))
-        writeVocabIncrement(
-          s,
-          dir,
-          vocabFromPostingRows(
-            postingsWithDl(newDocs, idCol, textCol, a).select(col("token"), col("doc_id"), col("tf"))
-          ),
-          appendTag,
-          a
-        )
-    }
-    val (n0, t0) = readMeta(s, dir)
-    val (n1, t1) = corpusScalars(newDocs, idCol, textCol)
-    writeMeta(s, dir, (n0 + n1, t0 + t1))
-    // if a stream has maintained this index, keep its ledger invariant
-    // (meta = sum over dir/meta_inc): fold the ledger to one seed row
-    // carrying the new totals — appends are single-writer and never
-    // replayed, so a wholesale rewrite is safe here
-    searchLedger.fold(s, dir, Seq("" -> Seq(n0 + n1, t0 + t1, foldedTotalOrZero(s, dir))))
+    Generations.append(postingsIndex(s, dir, analyzed, idCol, textCol), newDocs, dir, "appendToSearchIndex")
   }
 
   // ---- exactly-once batch apply (the streaming maintainer's path) ----
@@ -2421,9 +2313,10 @@ object Search {
     }
     deleteConsumedIncrements(s, dir, a)
     // only unconsumed (post-swap) increments may remain; drop the dir
-    // when it emptied so the no-increment fast path stays a dir probe
-    val incPath = new Path(vocabIncDir(dir, a))
-    if (fs.exists(incPath) && !fs.listFiles(incPath, false).hasNext) fs.delete(incPath, true)
+    // when none did so the no-increment fast path stays a dir probe (a
+    // plain append's commit marker does not count)
+    if (Option(fs.globStatus(new Path(s"${vocabIncDir(dir, a)}/*.parquet"))).forall(_.isEmpty))
+      fs.delete(new Path(vocabIncDir(dir, a)), true)
   }
 
   private val consumedIncMarker = "_consumed_inc"
@@ -2448,33 +2341,6 @@ object Search {
     consumedIncNames(s, dir, a).foreach { n =>
       fs.delete(new org.apache.hadoop.fs.Path(vocabIncDir(dir, a), n), false)
     }
-  }
-
-  /** Stage one vocab increment and rename it under `<tag>-<i>.parquet`
-    * names — deterministic for the streaming path (tag = gbatch-<gen>,
-    * replay overwrites after the caller's cleanup), UUID-tagged for
-    * plain appends (never replayed).
-    */
-  private def writeVocabIncrement(
-      s: SparkSession,
-      dir: String,
-      inc: DataFrame,
-      tag: String,
-      a: Analyzer = Raw
-  ): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsFor(s, dir)
-    val staged = s"$dir/_stage_${a.vocab}_$tag"
-    inc.coalesce(1).write.mode("overwrite").parquet(staged)
-    val files = fs.globStatus(new Path(s"$staged/part-*")).map(_.getPath).sortBy(_.toString)
-    fs.mkdirs(new Path(vocabIncDir(dir, a)))
-    files.zipWithIndex.foreach { case (src, i) =>
-      val dest = new Path(vocabIncDir(dir, a), s"$tag-$i.parquet")
-      if (fs.exists(dest)) fs.delete(dest, false)
-      if (!fs.rename(src, dest))
-        throw new java.io.IOException(s"vocab increment write: rename $src -> $dest failed")
-    }
-    fs.delete(new Path(staged), true)
   }
 
   /** The folded vocab relation: base ⊕ increments group-summed (token
@@ -5031,12 +4897,7 @@ object Search {
       dir: String,
       metaCols: Seq[String] = Nil
   ): Unit =
-    docStoreRows(docs, idCol, textCol, metaCols)
-      .repartition(col("dbucket"))
-      .write
-      .mode("overwrite")
-      .partitionBy("dbucket")
-      .parquet(s"$dir/docs")
+    Generations.build(docStore(idCol, textCol, metaCols), docs, dir)
 
   private def docStoreRows(
       docs: DataFrame,

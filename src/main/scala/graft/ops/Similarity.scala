@@ -1053,19 +1053,12 @@ object Similarity {
     * ivfTopK exists only so the oracle-gated query is self-contained.
     * Assignments are written partitioned BY list id, so a probe of
     * nProbe lists reads exactly those partitions (partition pruning
-    * does the list selection for free).
+    * does the list selection for free) — the fitted model's own
+    * assignments, through [[Generations.build]].
     */
   def saveIvfIndex(emb: DataFrame, nLists: Int, dir: String): Unit = {
     val (assigned, model) = ivfAssignmentsCached(emb, nLists)
-    assigned
-      .select(col("vec_id"), col("label"), col("v"), col("list_id"))
-      // one file per list dir, not one per task × list (small-files
-      // guard for the partitioned index layout)
-      .repartition(col("list_id"))
-      .write
-      .mode("overwrite")
-      .partitionBy("list_id")
-      .parquet(s"$dir/assignments")
+    Generations.build(ivfIndex(_.select(col("vec_id"), col("label"), col("v"), col("list_id"))), assigned, dir)
     val spark = emb.sparkSession
     import spark.implicits._
     model.clusterCenters.zipWithIndex.toSeq
@@ -1138,21 +1131,17 @@ object Similarity {
   }
 
   /** The IVF index as a [[Generations]] kind: the list-partitioned
-    * assignments, keyed by vec_id, with no stats — probes derive
-    * everything from the rows. A batch's vectors are assigned in-plan
-    * against the persisted centroids ([[assignToCentroidsInPlan]]).
+    * assignments `assign` derives from a batch, keyed by vec_id, with
+    * no stats — probes derive everything from the rows.
+    */
+  private def ivfIndex(assign: DataFrame => DataFrame): Generations.Kind =
+    Generations.Kind(keyCol = "vec_id", relations = Seq(Generations.Relation("assignments", Some("list_id"), assign)))
+
+  /** [[ivfIndex]] maintained against the persisted centroids: a batch's
+    * vectors are assigned in-plan ([[assignToCentroidsInPlan]]).
     */
   private def ivfIndex(s: SparkSession, dir: String): Generations.Kind =
-    Generations.Kind(
-      keyCol = "vec_id",
-      relations = Seq(
-        Generations.Relation(
-          "assignments",
-          Some("list_id"),
-          b => assignToCentroidsInPlan(withVec(b), s.read.parquet(s"$dir/centroids"))
-        )
-      )
-    )
+    ivfIndex(b => assignToCentroidsInPlan(withVec(b), s.read.parquet(s"$dir/centroids")))
 
   /** Apply ONE micro-batch of new vectors to the PERSISTED IVF index,
     * idempotently — the unit [[graft.streaming.StreamingIngest

@@ -14,6 +14,7 @@ class GenerationsSpec extends SparkSpec {
     * interrupted), `probe` is its serving answer. `rels` are the dirs
     * a crashed attempt writes `gbatch-<gen>-*` files into (relations,
     * increments, ledger); `victim` is an id batch 1 leaves alone.
+    * `meta` reads (meta rows, ledger sums) for the ledgered kinds.
     */
   private case class KindCase(
       name: String,
@@ -23,9 +24,25 @@ class GenerationsSpec extends SparkSpec {
       build: String => Unit,
       replay: String => Unit,
       probe: String => Seq[Seq[Any]],
-      meta: Option[String => (Set[Seq[Any]], Set[Seq[Any]])],
+      meta: Option[(String => Set[Seq[Any]], String => Set[Seq[Any]])],
       delete: String => Unit,
-      compact: String => Unit
+      compact: String => Unit,
+      saved: Saved
+  )
+
+  /** A kind's save* entry point `save` over the doc set `d`, its batch
+    * apply `apply0` of batch 0 with `b` (ids disjoint from `d`'s), the
+    * doc-keyed relation `ids` whose live keys are compared, and
+    * whether the probe must equal a one-shot save of d ∪ b (IVF refits
+    * its centroids, so only its live ids compare).
+    */
+  private case class Saved(
+      save: (DataFrame, String) => Unit,
+      apply0: (DataFrame, String) => Unit,
+      d: DataFrame,
+      b: DataFrame,
+      ids: String,
+      sameProbe: Boolean = true
   )
 
   private def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq).toSeq
@@ -61,15 +78,29 @@ class GenerationsSpec extends SparkSpec {
             rows(Search.bm25FromIndex(s, dir, Seq("cat", "dog", "seed"), 10)) ++
             rows(Search.phraseFromIndex(s, dir, Seq("cat", "dog"), Folded)) ++
             rows(Search.autocomplete(s, dir, "d", 5, Folded)),
-        meta = Some { dir =>
-          val m = s.read.parquet(s"$dir/meta").select("n_docs", "total_toks")
-            .crossJoin(s.read.parquet(s"$dir/ameta").select("total_atoks"))
-          val l = s.read.parquet(s"$dir/meta_inc")
-            .agg(sum("n_docs"), sum("total_toks"), sum(coalesce(col("total_atoks"), lit(0L))))
-          (rows(m).toSet, rows(l).toSet)
-        },
+        meta = Some(
+          (
+            dir =>
+              rows(
+                s.read.parquet(s"$dir/meta").select("n_docs", "total_toks")
+                  .crossJoin(s.read.parquet(s"$dir/ameta").select("total_atoks"))
+              ).toSet,
+            dir =>
+              rows(
+                s.read.parquet(s"$dir/meta_inc")
+                  .agg(sum("n_docs"), sum("total_toks"), sum(coalesce(col("total_atoks"), lit(0L))))
+              ).toSet
+          )
+        ),
         delete = Search.deleteFromSearchIndex(s, _, Seq(2L)),
-        compact = Search.compactSearchIndex(s, _)
+        compact = Search.compactSearchIndex(s, _),
+        saved = Saved(
+          Search.saveSearchIndex(_, "doc_id", "text", _, analyzed = true),
+          Search.applySearchIndexBatch(_, "doc_id", "text", _, 0L, analyzed = true),
+          base,
+          b0,
+          "doclen"
+        )
       ),
       KindCase(
         "fielded",
@@ -80,13 +111,21 @@ class GenerationsSpec extends SparkSpec {
         replay = Search.applyFieldedIndexBatch(f1, "doc_id", fields, _, 1L, upsert = true),
         probe = dir =>
           rows(Search.bm25fFromIndex(s, dir, Seq("cat", "dog", "bird"), Seq("title" -> 2L, "body" -> 1L), 10)),
-        meta = Some { dir =>
-          val m = s.read.parquet(s"$dir/fmeta")
-          val l = s.read.parquet(s"$dir/fmeta_inc").groupBy("field").agg(sum("n_docs"), sum("total_toks"))
-          (rows(m).toSet, rows(l).toSet)
-        },
+        meta = Some(
+          (
+            dir => rows(s.read.parquet(s"$dir/fmeta")).toSet,
+            dir => rows(s.read.parquet(s"$dir/fmeta_inc").groupBy("field").agg(sum("n_docs"), sum("total_toks"))).toSet
+          )
+        ),
         delete = dir => Search.deleteFromFieldedIndex(s, dir, Seq(5L).toDF("doc_id")),
-        compact = Search.compactFieldedIndex(s, _)
+        compact = Search.compactFieldedIndex(s, _),
+        saved = Saved(
+          Search.saveFieldedSearchIndex(_, "doc_id", fields, _),
+          Search.applyFieldedIndexBatch(_, "doc_id", fields, _, 0L),
+          f0,
+          Seq((7L, "cat bird", "dog days"), (8L, "title", "cat")).toDF("doc_id", "title", "body"),
+          "fdoclen"
+        )
       ),
       KindCase(
         "doc store",
@@ -98,7 +137,14 @@ class GenerationsSpec extends SparkSpec {
         probe = dir => sorted(Generations.liveRows(s, dir, s.read.parquet(s"$dir/docs")).select("doc_id", "text", "lang")),
         meta = None,
         delete = dir => Search.deleteFromDocStore(s, dir, Seq(3L).toDF("doc_id")),
-        compact = Search.compactDocStore(s, _)
+        compact = Search.compactDocStore(s, _),
+        saved = Saved(
+          Search.saveDocStore(_, "doc_id", "text", _, Seq("lang")),
+          Search.applyDocStoreBatch(_, "doc_id", "text", _, 0L, Seq("lang")),
+          s0,
+          s1.filter(col("doc_id") =!= 2L),
+          "docs"
+        )
       ),
       KindCase(
         "IVF",
@@ -117,7 +163,15 @@ class GenerationsSpec extends SparkSpec {
           ) ++ rows(Similarity.ivfTopKFromIndex(s, dir, queryId = 0L, k = 10, nProbe = 8)),
         meta = None,
         delete = Similarity.deleteFromIvfIndex(s, _, Seq(7L)),
-        compact = Similarity.compactIvfIndex(s, _)
+        compact = Similarity.compactIvfIndex(s, _),
+        saved = Saved(
+          Similarity.saveIvfIndex(_, 8, _),
+          Similarity.applyIvfIndexBatch(_, _, 0L),
+          emb.filter(col("vec_id") % 2 === 0),
+          emb.filter(col("vec_id") % 2 =!= 0 && col("vec_id") < 40),
+          "assignments",
+          sameProbe = false
+        )
       )
     )
   }
@@ -158,15 +212,44 @@ class GenerationsSpec extends SparkSpec {
       k.replay(crashed)
       assert(k.probe(crashed) == k.probe(clean), s"${k.name}: the replay must answer like a clean apply")
       assert(!Files.exists(Paths.get(crashed, "_stage_1")), s"${k.name}: the stale staged dir must be gone")
-      k.meta.foreach { meta =>
-        val (m, ledger) = meta(crashed)
-        assert(m == ledger, s"${k.name}: meta must equal the ledger sum")
-        assert(m == meta(clean)._1, s"${k.name}: meta must equal a clean apply's")
+      k.meta.foreach { case (meta, ledger) =>
+        assert(meta(crashed) == ledger(crashed), s"${k.name}: meta must equal the ledger sum")
+        assert(meta(crashed) == meta(clean), s"${k.name}: meta must equal a clean apply's")
       }
       k.delete(crashed)
       assert(Files.exists(Paths.get(crashed, "tombstones")))
       k.compact(crashed)
       assert(!Files.exists(Paths.get(crashed, "tombstones")), s"${k.name}: compaction must consume the tombstones")
+    }
+  }
+
+  test("a built index is generation −1: adopting it keeps every built row and equals a one-shot build") {
+    import spark.implicits._
+    cases.foreach { k =>
+      val c = k.saved
+      val dir = tempDir("graft_gen_built").resolve("idx").toString
+      val oneShot = tempDir("graft_gen_oneshot").resolve("idx").toString
+      c.save(c.d, dir)
+      val names = Files.walk(Paths.get(dir)).iterator.asScala.map(_.getFileName.toString).toSeq
+      assert(!names.exists(_.startsWith("gbatch-")), s"${k.name}: a build writes no gbatch file")
+      assert(!names.exists(_.endsWith("meta_inc")), s"${k.name}: a build writes no ledger")
+      assert(!Files.exists(Paths.get(dir, "_gen_base")), s"${k.name}: a build records no generation base")
+      c.apply0(c.b, dir)
+      assert(
+        graft.core.Compaction.readTextFile(spark, s"$dir/_gen_base").map(_.trim).contains("0"),
+        s"${k.name}: adopting a built index starts at generation 0"
+      )
+      c.save(c.d.unionByName(c.b), oneShot)
+      def liveIds(d: String): Set[Long] =
+        Generations.liveRows(spark, d, spark.read.parquet(s"$d/${c.ids}"), keyCol = k.keyCol)
+          .select(col(k.keyCol).cast("long")).as[Long].collect().toSet
+      val want = c.d.unionByName(c.b).select(col(k.keyCol).cast("long")).as[Long].collect().toSet
+      assert(liveIds(dir) == want, s"${k.name}: no built row may be lost to the batch's generation")
+      assert(liveIds(oneShot) == want, s"${k.name}: the one-shot build holds d ∪ b")
+      if (c.sameProbe) assert(k.probe(dir) == k.probe(oneShot), s"${k.name}: adopted ≡ one-shot")
+      k.meta.foreach { case (meta, _) =>
+        assert(meta(dir) == meta(oneShot), s"${k.name}: adopted meta must equal a one-shot build's")
+      }
     }
   }
 }

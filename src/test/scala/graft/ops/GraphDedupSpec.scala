@@ -156,13 +156,18 @@ class GraphDedupSpec extends SparkSpec {
       val viaDistributed = run(0L)
       assert(viaDriver == viaDistributed, s"seed $seed")
       assert(viaDriver == cc(edges), s"seed $seed vs full CC")
-      // the cold-start solve must agree with distributed CC too
-      val inc = GraphDedup
-        .incrementComponents(edges.toDF("src", "dst"))
-        .collect()
-        .map(r => r.getLong(0) -> r.getLong(1))
-        .toMap
-      assert(inc == cc(edges), s"seed $seed incrementComponents")
+      // an unbounded ceiling must not wrap the size probe to limit(0)
+      assert(run(Long.MaxValue) == viaDriver, s"seed $seed Long.MaxValue ceiling")
+      // the cold-start solve must agree with distributed CC too, at
+      // the default and the unbounded ceiling
+      Seq(GraphDedup.defaultMaxDriverRootEdges, Long.MaxValue).foreach { cap =>
+        val inc = GraphDedup
+          .incrementComponents(edges.toDF("src", "dst"), cap)
+          .collect()
+          .map(r => r.getLong(0) -> r.getLong(1))
+          .toMap
+        assert(inc == cc(edges), s"seed $seed incrementComponents(maxDriverEdges = $cap)")
+      }
     }
   }
 

@@ -879,6 +879,15 @@ class SearchSpec extends SparkSpec {
       .conjunctiveFromIndex(spark, dir, Seq("DOG"), 10, Folded)
       .collect().map(_.getAs[Long]("doc_id")).toSet
     assert(got == Set(1L, 3L), got.toString)
+    // the reverse: an analyzed append onto a RAW index would give the
+    // folded tier the appended documents only — refused before writing
+    val raw = tempDir("graft_searchidx_rawtwin").toString
+    Search.saveSearchIndex(docs, "doc_id", "text", raw)
+    val e3 = intercept[IllegalArgumentException] {
+      Search.appendToSearchIndex(more, "doc_id", "text", raw, analyzed = true)
+    }
+    assert(e3.getMessage.contains("apostings"), e3.getMessage)
+    assert(!new java.io.File(s"$raw/apostings").exists, "nothing may be written before the refusal")
   }
 
   test("bm25FromIndex: equals the corpus route bit for bit; scan is partition-pruned; appends accumulate") {
