@@ -16,6 +16,8 @@ import org.apache.spark.sql.SparkSession
   * median of warm runs measures the plan. Same pattern as
   * tools/MicroBench.scala.
   *
+  * Both label maps below come from each query's `Query` record.
+  *
   * `shares_scan_with` marks queries whose number is NOT standalone:
   * they read state memoized by another query's run (the dual-wide
   * metrics cache, the IVF model memo), mirroring the reference's
@@ -42,6 +44,10 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
+    // optional comma-separated filter for local iteration; unset, the
+    // bench covers every registered query
+    val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSet)
+    val names = SparkEntry.select(only)
     val spark = graft.ops.Fixtures
       .sessionBuilder(s"local[$cpus]", cpus)
       .getOrCreate()
@@ -52,215 +58,6 @@ object Bench {
     try SparkEntry.entry(spark).count()
     catch { case _: Throwable => () }
 
-    // optional comma-separated filter for local iteration; the driver
-    // never sets it, so per-round benches always cover every query
-    val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSet)
-    val buildIncluded = Seq(
-      "dedup_incremental" -> "first_run",
-      "dedup_incremental_embedding" -> "first_run",
-      // shares the once-per-process even-id demo index build
-      "ann_hard_negatives_index" -> "first_run",
-      // builds the once-per-process token-bucketed postings index
-      "search_index_probe" -> "first_run",
-      // builds its even/odd append+compact lifecycle demo index once
-      "search_index_appended" -> "first_run",
-      // shares the once-per-process postings index build
-      "search_batch_index" -> "first_run",
-      // shares the once-per-process postings index build (doclen+meta)
-      "search_bm25_index" -> "first_run",
-      // shares the once-per-process postings index build
-      "search_batch_bm25" -> "first_run",
-      // shares the once-per-process postings index build
-      "search_disjunctive_index" -> "first_run",
-      // shares the once-per-process postings index build
-      "search_min_match_index" -> "first_run",
-      // dictionary tier: all serve from the demo index's vocab relation
-      "search_autocomplete" -> "first_run",
-      "search_prefix_index" -> "first_run",
-      "search_did_you_mean" -> "first_run",
-      "search_fuzzy_index" -> "first_run",
-      "search_wildcard_index" -> "first_run",
-      // builds its own evens+odds-append (uncompacted) demo index
-      "search_prefix_appended" -> "first_run",
-      // shares the demo index + doc store builds
-      "search_more_like_this" -> "first_run",
-      // shares the once-per-process postings index build
-      "search_synonym_index" -> "first_run",
-      "search_boolean_not_index" -> "first_run",
-      "search_proximity_index" -> "first_run",
-      // builds its own base+batch0+upsert-batch1 demo index once
-      "search_asof_probe" -> "first_run",
-      "search_asof_bm25" -> "first_run",
-      // shares that as-of demo index + builds its doc-store twin once
-      "search_asof_page" -> "first_run",
-      // builds the once-per-process fielded (title/body) index
-      "search_bm25f" -> "first_run",
-      // share the once-per-process demo index + doc store builds
-      "search_facet_filtered" -> "first_run",
-      "search_kwic_page_multi" -> "first_run",
-      // reads the demo index's vocab relation
-      "search_term_stats" -> "first_run",
-      // build three shard indexes + merge them once per process
-      "search_merged_probe" -> "first_run",
-      "search_merged_bm25" -> "first_run",
-      "search_merged_prefix" -> "first_run",
-      // shares the merged index build + builds the merged store once
-      "search_merged_kwic" -> "first_run",
-      // analyzed dictionary tier: share the analyzed demo index build
-      "search_autocomplete_analyzed" -> "first_run",
-      "search_did_you_mean_analyzed" -> "first_run",
-      "search_prefix_analyzed_index" -> "first_run",
-      "search_fuzzy_analyzed_index" -> "first_run",
-      // shares the once-per-process postings index build (its screen)
-      "decontaminate_via_index" -> "first_run",
-      // shares the append+compact lifecycle demo index build
-      "search_phrase_index" -> "first_run",
-      // builds the once-per-process ANALYZED damaged-corpus demo index
-      "search_analyzed_index" -> "first_run",
-      // shares the analyzed demo index build (apostings + ameta)
-      "search_analyzed_bm25_index" -> "first_run",
-      "search_batch_analyzed_bm25" -> "first_run",
-      "search_batch_analyzed_serve" -> "first_run",
-      // shares the append+compact lifecycle demo index build
-      "search_phrase3_index" -> "first_run",
-      // shares the analyzed demo index build (apositions)
-      "search_phrase_analyzed_index" -> "first_run",
-      // shares the postings-index + IVF-index demo builds
-      "search_rrf_index" -> "first_run",
-      "search_rrf_recall" -> "first_run",
-      // shares the analyzed demo index + IVF index builds
-      "search_rrf_analyzed" -> "first_run",
-      // builds the once-per-process persisted cluster map (LSH + CC)
-      "search_dedup_results_graph" -> "first_run",
-      // shares the postings-index build + builds the bucketed doc store
-      "search_kwic_page" -> "first_run",
-      // share the postings-index + doc-store demo builds
-      "search_facets" -> "first_run",
-      "search_page_after" -> "first_run",
-      // share the analyzed demo index (+ doc store) builds
-      "search_facets_analyzed" -> "first_run",
-      "search_page_after_analyzed" -> "first_run",
-      // shares the analyzed index + builds the damaged doc store
-      "search_kwic_page_analyzed" -> "first_run",
-      // shares the postings-index build; the probe is footer metadata
-      "search_index_stats" -> "first_run",
-      // each builds its once-per-process tombstoned / purged demo index
-      "search_delete_serve" -> "first_run",
-      "search_delete_bm25" -> "first_run",
-      "search_delete_compacted" -> "first_run",
-      // builds the once-per-process two-increment persisted sketch
-      "sketch_distinct_merged" -> "first_run",
-      // builds the once-per-process grouped two-increment sketch
-      "sketch_distinct_merged_by" -> "first_run",
-      // builds the once-per-process labeled bitext bucket index
-      "bitext_mine_index" -> "first_run",
-      // builds the once-per-process persisted graph + rank snapshot
-      "centrality_from_graph" -> "first_run",
-      // shares the persisted-graph build; probes are pruned reads
-      "graph_neighborhood" -> "first_run",
-      // serve wholly from the shared persisted graph + snapshot
-      "centrality_reps_graph" -> "first_run",
-      "centrality_trustrank_graph" -> "first_run",
-      // every rep rewrites the corpus source and replays the
-      // micro-batched index maintenance from a fresh checkpoint
-      "search_stream_probe" -> "every_run",
-      // chunked-RAG twin: every rep rewrites the source and replays
-      // the chunk-index maintenance from a fresh checkpoint
-      "search_stream_chunk" -> "every_run",
-      // fielded (BM25F) twins: every rep rewrites the fielded source
-      // and replays the fpostings maintenance from a fresh checkpoint
-      "search_stream_bm25f" -> "every_run",
-      "search_stream_bm25f_upsert" -> "every_run",
-      // analyzed twin: every rep rewrites the damaged-corpus source and
-      // replays the analyzed index maintenance from a fresh checkpoint
-      "search_stream_analyzed_probe" -> "every_run",
-      // every rep replays the 5-batch upsert stream + compaction
-      "search_stream_upsert" -> "every_run",
-      // every rep seeds the even-half IVF index and replays the odd
-      // half as micro-batches from a fresh checkpoint
-      "ann_stream_ivf_probe" -> "every_run",
-      // every rep replays the 5-batch upsert through BOTH sibling
-      // streams (postings index + doc store) and compacts both
-      "search_facets_stream" -> "every_run",
-      // every rep replays the 4-insert + mixed-I/U/D CDC feed and
-      // compacts
-      "search_stream_cdc" -> "every_run",
-      // every rep rewrites the JSONL scratch + damaged lines and runs
-      // the quarantine + repair round
-      "jsonl_repair" -> "every_run",
-      "ann_ivf_topk_index" -> "first_run",
-      // each builds its once-per-process tombstoned / purged IVF index
-      "ann_delete_topk" -> "first_run",
-      "ann_delete_compacted" -> "first_run",
-      "ann_pq_knn_join" -> "first_run",
-      // builds its own two-generation drifted index (build + append)
-      "pq_drift_report" -> "first_run",
-      // the stream replays seed their private mutable index as an FS
-      // copy of the shared demo index: first_run carries the index
-      // build, every rep still pays copy + full micro-batch replay
-      "dedup_stream_replay" -> "first_run",
-      "events_stream_replay" -> "every_run",
-      "events_anomaly_stream" -> "every_run",
-      // every rep rewrites the replay source and re-runs the
-      // micro-batched dedup from a fresh checkpoint
-      "dedup_stream_exact" -> "every_run",
-      // every rep rewrites the JSONL scratch + corrupt lines
-      "jsonl_ingest" -> "every_run",
-      // builds "yesterday's" component map inline before the
-      // increment-sized merge it exists to demonstrate
-      "dedup_clusters_incremental" -> "every_run",
-      "dedup_stream_clusters" -> "first_run",
-      // every rep synthesizes + writes the payload corpus and replays
-      // it through fresh micro-batches (scratch dirs per run)
-      "multimodal_stream_decode" -> "every_run",
-      // every rep rewrites the source and replays the counter stream
-      "sketch_stream_topk" -> "every_run",
-      // every rep rewrites the event source and replays the occupancy
-      // stream from a fresh checkpoint
-      "sketch_stream_distinct" -> "every_run",
-      // index memoized per process; each rep replays the query
-      // micro-batches against it
-      "ann_pq_stream_serve" -> "first_run",
-      // embedding twin of dedup_stream_replay: first_run builds the
-      // demo index, every rep pays copy + micro-batch replay
-      "dedup_stream_embedding" -> "first_run",
-      // every rep runs the 12-round distributed merge-training loop
-      // (1-row argmax per round) — training IS the query
-      "bpe_merges" -> "every_run",
-      // re-trains the merge table, then encodes the corpus through it
-      "bpe_encode_stats" -> "every_run",
-      // re-trains the merge table, then folds the dict to symbols
-      "bpe_vocab" -> "every_run",
-      // re-trains merges + vocab, then encodes the corpus to ids
-      "bpe_encode_ids" -> "every_run",
-      // every rep trains + persists the model, then replays the eval
-      // split as micro-batches against the loaded artifact
-      "nb_stream_scores" -> "every_run",
-      // every rep persists the benchmark digests and replays the
-      // corpus as micro-batches against them
-      "decontaminate_stream" -> "every_run",
-      // every rep persists the unigram model and replays the corpus
-      // as micro-batches against it
-      "perplexity_stream_scores" -> "every_run",
-      // every rep persists the chunk-digest index and replays the
-      // arrivals as micro-batches against it
-      "cdc_containment_stream" -> "every_run",
-      // every rep trains + persists the importance model, then
-      // replays the corpus as micro-batches against it
-      "dsir_stream_weights" -> "every_run",
-      // every rep writes the CDC feed and replays it through
-      // micro-batched state merges
-      "delta_apply_stream" -> "every_run",
-      // every rep writes both event feeds and replays the two-sided
-      // join through fresh micro-batches
-      "events_stream_stream_join" -> "every_run",
-      // re-trains the merge table before encoding (the bpe family)
-      "bpe_fertility" -> "every_run",
-      // runs the full seven-stage pipeline to label each doc's
-      // dropping stage (the pipeline_full shape)
-      "pipeline_provenance" -> "every_run"
-    )
-
     // `every_run` queries (stream replays) pay their FULL source
     // rewrite + fresh-checkpoint replay on every single run: a median
     // of three identical replays re-measures the same machinery at 3×
@@ -268,21 +65,19 @@ object Bench {
     // replay repetition). One cold first_run plus ONE replay rep
     // reports the same steady number; serving queries keep the full
     // rep count (their medians denoise real plan timings).
-    val everyRun = buildIncluded.collect { case (n, "every_run") => n }.toSet
-    val names = SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
     var medians = Vector.empty[(String, Double)]
     var firsts = Vector.empty[(String, Double)]
     var errors = Vector.empty[(String, String)]
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
+      val query = SparkEntry.registry(name)
       def once(): Double = {
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
+        query.run(spark, sfDir).count()
         (System.nanoTime() - t0) / 1e9
       }
       try {
         val first = once()
-        val effReps = if (everyRun(name)) math.min(1, reps) else reps
+        val effReps = if (query.build.contains(Query.EveryRun)) math.min(1, reps) else reps
         val runs = (1 to effReps).map(_ => once()).sorted
         firsts :+= (name -> first)
         medians :+= (name -> runs(runs.length / 2))
@@ -306,25 +101,14 @@ object Bench {
     val qs = numMap(medians)
     val fr = numMap(firsts)
     val es = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
-    // queries whose timing reads another query's memoized state — the
-    // named query's first_run carries the shared cost
-    val sharesScanWith = Seq(
-      "agg_metrics_summary" -> "agg_metrics_deviation",
-      "ann_ivf_topk_index" -> "ann_ivf_lists",
-      // read the PQ demo index ann_pq_knn_join built (alphabetically first)
-      "pq_quality" -> "ann_pq_knn_join",
-      "ann_pq_topk_index" -> "ann_pq_knn_join"
-    )
-    val shares = sharesScanWith
-      .filter { case (k, _) => medians.exists(_._1 == k) }
-      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-      .mkString("{", ",", "}")
-    // index queries whose timing includes building their own demo
-    // index — see the object scaladoc for the first_run/every_run split
-    val builds = buildIncluded
-      .filter { case (k, _) => medians.exists(_._1 == k) }
-      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-      .mkString("{", ",", "}")
+    // per-query labels from the records of the queries that ran — see
+    // the object scaladoc
+    def labels(label: Query => Option[String]): String =
+      medians
+        .flatMap { case (n, _) => label(SparkEntry.registry(n)).map(v => s"${jstr(n)}:${jstr(v)}") }
+        .mkString("{", ",", "}")
+    val shares = labels(_.sharesScanWith)
+    val builds = labels(_.build.map(_.label))
     val total = medians.map(_._2).sum
     val totalFirst = firsts.map(_._2).sum
     // headline FIRST (short: survives head-keeping captures whole),

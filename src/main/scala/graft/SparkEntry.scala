@@ -5,57 +5,69 @@ import graft.ops._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * `queries` is the union of every operator module's registry; each
-  * entry has a matching DuckDB `oracleSql` unless the operator is not
-  * SQL-expressible (those are covered by ScalaTest instead).
+  * Every operator module declares its queries once, as `Query` records
+  * (name, run function, DuckDB oracle, bench labels); `queries` and
+  * `oracleSql` are derived from those records.
   */
 object SparkEntry {
-  private val modules: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
+
+  /** Every registered query by name; a name registered twice fails here. */
+  lazy val registry: Map[String, Query] = Query.index(
     Seq(
-      (Relational.queries, Relational.oracles),
-      (CheckMigration.queries, CheckMigration.oracles),
-      (DdlGen.queries, DdlGen.oracles),
-      (StarSchema.queries, StarSchema.oracles),
-      (DeltaSync.queries, DeltaSync.oracles),
-      (Dedup.queries, Dedup.oracles),
-      (GraphDedup.queries, GraphDedup.oracles),
-      (Decontamination.queries, Decontamination.oracles),
-      (Paragraphs.queries, Paragraphs.oracles),
-      (Spans.queries, Spans.oracles),
-      (Safety.queries, Safety.oracles),
-      (Mixture.queries, Mixture.oracles),
-      (Cdc.queries, Cdc.oracles),
-      (DataSelection.queries, DataSelection.oracles),
-      (BpeTrain.queries, BpeTrain.oracles),
-      (QualityClassifier.queries, QualityClassifier.oracles),
-      (CorpusStats.queries, CorpusStats.oracles),
-      (Packing.queries, Packing.oracles),
-      (Profiling.queries, Profiling.oracles),
-      (VarcharInference.queries, VarcharInference.oracles),
-      (Similarity.queries, Similarity.oracles),
-      (TextAnalysis.queries, TextAnalysis.oracles),
-      (Chunking.queries, Chunking.oracles),
-      (Centrality.queries, Centrality.oracles),
-      (Search.queries, Search.oracles),
-      (Layout.queries, Layout.oracles),
-      (Multimodal.queries, Multimodal.oracles),
-      (Movement.queries, Movement.oracles),
-      (Events.queries, Events.oracles),
-      (TolerantMetrics.queries, TolerantMetrics.oracles),
-      (Pipeline.queries, Pipeline.oracles),
-      (graft.streaming.StreamingIngest.queries, graft.streaming.StreamingIngest.oracles)
-    )
+      Relational.registry,
+      CheckMigration.registry,
+      DdlGen.registry,
+      StarSchema.registry,
+      DeltaSync.registry,
+      Dedup.registry,
+      GraphDedup.registry,
+      Decontamination.registry,
+      Paragraphs.registry,
+      Spans.registry,
+      Safety.registry,
+      Mixture.registry,
+      Cdc.registry,
+      DataSelection.registry,
+      BpeTrain.registry,
+      QualityClassifier.registry,
+      CorpusStats.registry,
+      Packing.registry,
+      Profiling.registry,
+      VarcharInference.registry,
+      Similarity.registry,
+      TextAnalysis.registry,
+      Chunking.registry,
+      Centrality.registry,
+      Search.registry,
+      Layout.registry,
+      Multimodal.registry,
+      Movement.registry,
+      Events.registry,
+      TolerantMetrics.registry,
+      Pipeline.registry,
+      graft.streaming.StreamingIngest.registry
+    ).flatten
+  )
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.revenueNation(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(_._1).reduce(_ ++ _)
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, q) => n -> q.run }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    modules.map(_._2).reduce(_ ++ _)
+    * the same parquet tables. */
+  lazy val oracleSql: Map[String, String] =
+    registry.map { case (n, q) => n -> q.oracle }
+
+  /** The registered names a `SPARK_GRAFT_QUERIES` subset selects (all
+    * of them when unset), sorted; a name that is not registered fails,
+    * so a misspelled subset cannot silently run nothing. */
+  def select(only: Option[Set[String]]): Seq[String] = {
+    val unknown = only.getOrElse(Set.empty) -- registry.keySet
+    require(unknown.isEmpty, s"not registered queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    registry.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
+  }
 }

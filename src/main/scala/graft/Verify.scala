@@ -74,6 +74,7 @@ object Verify {
       only: Option[Set[String]],
       threads: Int
   ): Seq[String] = {
+    val names = SparkEntry.select(only)
     new java.io.File(outDir).mkdirs()
     // oracle dump FIRST: the compare harness needs it for whatever
     // subset of dumps a partial run manages to write
@@ -88,8 +89,6 @@ object Verify {
           if entry.contains("\"ok\": true") && new java.io.File(outDir, name).exists() =>
         name -> entry
     }.toMap
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
     val manifest = scala.collection.mutable.LinkedHashMap[String, String]()
     // carry completed entries forward so a resumed run converges to a
     // manifest covering EVERY query, not just this invocation's

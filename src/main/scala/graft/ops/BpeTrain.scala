@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
+import graft.Query.EveryRun
 
 /** Byte-pair-encoding vocabulary TRAINING (Sennrich, Haddow & Birch,
   * ACL 2016) — the tokenizer-training stage of a training-data
@@ -34,7 +36,6 @@ import org.apache.spark.sql.functions._
   * escape hatch), and it stays map-side — no shuffle, no driver data.
   */
 object BpeTrain {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   private def sqlLit(s: String): String =
@@ -369,22 +370,16 @@ object BpeTrain {
       .orderBy("lang")
   }
 
-  def queries: Map[String, Q] = Map(
-    "bpe_merges" -> bpeMerges,
-    "bpe_encode_stats" -> bpeEncodeStats,
-    "bpe_vocab" -> bpeVocab,
-    "bpe_fertility" -> bpeFertility,
-    "bpe_encode_ids" -> bpeEncodeIds
-  )
-
   /** Golden oracles, pinned by an INDEPENDENT reference implementation
     * (classic dict-based BPE in Python over the same parquet — the
     * strongest check available: two implementations, one answer).
     * Like the IVF golden oracles these are sf0.01-specific by
     * construction; the driver's gate runs there.
     */
-  def oracles: Map[String, String] = Map(
-    "bpe_merges" ->
+  lazy val registry: Seq[Query] = Seq(
+    // every bpe query re-trains the merge table: the 12-round
+    // distributed training loop is part of each run
+    Query("bpe_merges", bpeMerges,
       """SELECT CAST(rank AS BIGINT) AS rank, "left", "right", CAST(pair_freq AS BIGINT) AS pair_freq
         |FROM (VALUES
         |  (1, 'e', 'r', 4568),
@@ -399,8 +394,8 @@ object BpeTrain {
         |  (10, 'a', 't', 1845),
         |  (11, 'l', 'u', 1831),
         |  (12, 'i', 'n', 1796)
-        |) AS t(rank, "left", "right", pair_freq) ORDER BY rank""".stripMargin,
-    "bpe_vocab" ->
+        |) AS t(rank, "left", "right", pair_freq) ORDER BY rank""".stripMargin, build = Some(EveryRun)),
+    Query("bpe_vocab", bpeVocab,
       """SELECT symbol, CAST(n_occurrences AS BIGINT) AS n_occurrences
         |FROM (VALUES
         |  ('</w>', 12448),
@@ -438,18 +433,19 @@ object BpeTrain {
         |  ('v', 1809),
         |  ('w', 886),
         |  ('y', 1767)
-        |) AS t(symbol, n_occurrences) ORDER BY symbol""".stripMargin,
-    "bpe_encode_stats" ->
+        |) AS t(symbol, n_occurrences) ORDER BY symbol""".stripMargin, build = Some(EveryRun)),
+    Query("bpe_encode_stats", bpeEncodeStats,
       s"""SELECT lang, CAST(n_docs AS BIGINT) AS n_docs,
         |  CAST(total_bpe_tokens AS BIGINT) AS total_bpe_tokens,
         |  CAST(total_chars AS BIGINT) AS total_chars
         |FROM (VALUES
         |$encodeGoldenRows
         |) AS t(lang, n_docs, total_bpe_tokens, total_chars) ORDER BY lang""".stripMargin,
+      build = Some(EveryRun)),
     // the token/char totals are the SAME golden rows the encode-stats
     // gate pins (one independent reference, one answer); word counts
     // are BPE-independent, so the oracle recomputes them live
-    "bpe_fertility" ->
+    Query("bpe_fertility", bpeFertility,
       s"""WITH g AS (
         |  SELECT lang, CAST(total_bpe_tokens AS BIGINT) AS total_bpe_tokens,
         |    CAST(total_chars AS BIGINT) AS total_chars
@@ -462,8 +458,8 @@ object BpeTrain {
         |SELECT g.lang, w.n_words, g.total_bpe_tokens, g.total_chars,
         |  CAST(g.total_bpe_tokens * 1000000 // w.n_words AS BIGINT) AS fertility_micro,
         |  CAST(g.total_chars * 1000000 // g.total_bpe_tokens AS BIGINT) AS chars_per_token_micro
-        |FROM g JOIN w USING (lang) ORDER BY g.lang""".stripMargin,
-    "bpe_encode_ids" -> encodeIdsOracle
+        |FROM g JOIN w USING (lang) ORDER BY g.lang""".stripMargin, build = Some(EveryRun)),
+    Query("bpe_encode_ids", bpeEncodeIds, encodeIdsOracle, build = Some(EveryRun))
   )
 
   /** Golden rows for the id-sequence gate — same independent Python

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
 
 /** CONTENT-DEFINED CHUNKING (the Rabin-boundary recipe of LBFS/
   * rsync-family dedup): split each document where the CONTENT says so
@@ -23,7 +24,6 @@ import org.apache.spark.sql.functions._
   * aggregate. Expected chunk length is `divisor` words (geometric).
   */
 object Cdc {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   /** Fixture divisor: expected chunk ≈ 8 words. */
@@ -270,12 +270,6 @@ object Cdc {
     ).orderBy("new_id", "idx_id")
   }
 
-  def queries: Map[String, Q] = Map(
-    "cdc_chunk_stats" -> cdcChunkStats,
-    "cdc_containment" -> cdcContainment,
-    "cdc_containment_index" -> cdcContainmentIndex
-  )
-
   /** The tok→chunk-id→digest CTE block under a name prefix, for
     * oracles that chunk two relations.
     */
@@ -326,9 +320,9 @@ object Cdc {
        |   OR s.n_shared * 1000000 // iz.n_chunks_idx >= 800000
        |ORDER BY s.new_id, s.idx_id""".stripMargin
 
-  def oracles: Map[String, String] = Map(
-    "cdc_containment_index" -> containmentIndexOracle,
-    "cdc_containment" -> {
+  lazy val registry: Seq[Query] = Seq(
+    Query("cdc_containment_index", cdcContainmentIndex, containmentIndexOracle),
+    Query("cdc_containment", cdcContainment, {
       val bhash =
         "CAST(" + Dedup.hex12ValSql("md5('cdc|' || w[i])", 1) + s" AS BIGINT) % $fixtureDivisor"
       s"""WITH corpus AS (
@@ -361,8 +355,8 @@ object Cdc {
          |FROM shared s JOIN sizes z ON z.doc_id = s.contained
          |WHERE s.n_shared * 1000000 // z.n_chunks >= 800000
          |ORDER BY contained, container""".stripMargin
-    },
-    "cdc_chunk_stats" -> {
+    }),
+    Query("cdc_chunk_stats", cdcChunkStats, {
       val bhash = "CAST(" + Dedup.hex12ValSql("md5('cdc|' || word)", 1) + s" AS BIGINT) % $fixtureDivisor"
       s"""WITH tok AS (
          |  SELECT doc_id, lang, i - 1 AS pos, w[i] AS word,
@@ -392,6 +386,6 @@ object Cdc {
          |  CAST(sum(is_dup * n_words) AS BIGINT) AS dup_words,
          |  CAST(sum(is_dup) * 1000000 // count(*) AS BIGINT) AS dup_chunk_micro
          |FROM marked GROUP BY lang ORDER BY lang""".stripMargin
-    }
+    })
   )
 }

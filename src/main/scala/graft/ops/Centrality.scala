@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
+import graft.Query.FirstRun
 
 /** Graph centrality over the near-duplicate similarity graph — the
   * keeper-policy upgrade for dedup clusters: instead of "lowest id
@@ -48,7 +50,6 @@ import org.apache.spark.sql.functions._
   * pairs, not raw candidates.
   */
 object Centrality {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   /** Oracle-pinned knobs: 6 power iterations at damping 17/20. */
@@ -552,18 +553,6 @@ object Centrality {
     } finally GraphDedup.releaseCheckpoints(edges)
   }
 
-  def queries: Map[String, Q] = Map(
-    "centrality_pagerank" -> centralityPagerank,
-    "centrality_from_graph" -> centralityFromGraph,
-    "centrality_reps" -> centralityReps,
-    "centrality_reps_graph" -> repsFromGraph,
-    "centrality_trustrank" -> centralityTrustrank,
-    "centrality_trustrank_graph" -> trustrankFromGraph,
-    "graph_degree_hist" -> graphDegreeHist,
-    "graph_neighborhood" -> graphNeighborhood,
-    "graph_triangles" -> graphTriangles
-  )
-
   // ---- DuckDB oracles ------------------------------------------------
 
   /** K unrolled rank CTEs over the shared cluster-chain edge SQL
@@ -664,23 +653,23 @@ object Centrality {
        |FROM tr$iterations r JOIN trseed t ON t.node = r.node
        |ORDER BY doc_id""".stripMargin
 
-  def oracles: Map[String, String] = Map(
-    "centrality_pagerank" -> oraclePagerank,
-    "centrality_from_graph" -> oraclePagerank,
-    "graph_neighborhood" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("centrality_pagerank", centralityPagerank, oraclePagerank),
+    Query("centrality_from_graph", centralityFromGraph, oraclePagerank, build = Some(FirstRun)),
+    Query("graph_neighborhood", graphNeighborhood,
       s"""${GraphDedup.clusterChainSql},
          |pn AS (SELECT src AS node FROM und GROUP BY src ORDER BY src LIMIT 5)
          |SELECT u.src AS node, u.dst AS neighbor
          |FROM und u JOIN pn ON pn.node = u.src
-         |ORDER BY node, neighbor""".stripMargin,
-    "centrality_reps" -> oracleReps,
+         |ORDER BY node, neighbor""".stripMargin, build = Some(FirstRun)),
+    Query("centrality_reps", centralityReps, oracleReps),
     // reps served wholly from the persisted graph + snapshot must
     // equal the LSH-pass route — the shared oracle is the gate
-    "centrality_reps_graph" -> oracleReps,
-    "centrality_trustrank" -> oracleTrustrank,
+    Query("centrality_reps_graph", repsFromGraph, oracleReps, build = Some(FirstRun)),
+    Query("centrality_trustrank", centralityTrustrank, oracleTrustrank),
     // the seeded walk over persisted edges must be bit-identical
-    "centrality_trustrank_graph" -> oracleTrustrank,
-    "graph_degree_hist" ->
+    Query("centrality_trustrank_graph", trustrankFromGraph, oracleTrustrank, build = Some(FirstRun)),
+    Query("graph_degree_hist", graphDegreeHist,
       s"""${GraphDedup.clusterChainSql},
          |dg AS (SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges),
          |dgc AS (SELECT node, count(*) AS deg FROM dg GROUP BY node),
@@ -693,8 +682,8 @@ object Centrality {
          |    CAST((SELECT count(*) FROM documents) - (SELECT count(*) FROM dgc) AS BIGINT) AS n_docs)
          |SELECT deg_bucket, n_docs FROM bh
          |UNION ALL SELECT deg_bucket, n_docs FROM z
-         |ORDER BY deg_bucket""".stripMargin,
-    "graph_triangles" ->
+         |ORDER BY deg_bucket""".stripMargin),
+    Query("graph_triangles", graphTriangles,
       s"""${GraphDedup.clusterChainSql},
          |t1 AS (
          |  SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
@@ -703,6 +692,6 @@ object Centrality {
          |  SELECT CAST(count(*) AS BIGINT) AS n
          |  FROM t1 JOIN edges e3 ON e3.src = t1.a AND e3.dst = t1.c)
          |SELECT CAST((SELECT count(*) FROM edges) AS BIGINT) AS n_edges,
-         |  (SELECT n FROM tr) AS n_triangles""".stripMargin
+         |  (SELECT n FROM tr) AS n_triangles""".stripMargin)
   )
 }

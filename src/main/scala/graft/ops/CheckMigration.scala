@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.{Q, Query}
 
 /** CHECK_MIGRATION — the reference's validation subsystem and its
   * closest thing to a query engine (SURVEY.md §2.E;
@@ -20,7 +21,6 @@ import org.apache.spark.sql.types._
   * (double summation is not associative).
   */
 object CheckMigration {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   private def dec(c: Column, scale: Int): Column = c.cast(DecimalType(36, scale))
@@ -333,15 +333,6 @@ object CheckMigration {
     )
   }
 
-  def queries: Map[String, Q] = Map(
-    "agg_wide_metrics_lineitem" -> wideMetricsLineitem,
-    "agg_wide_metrics_events" -> wideMetricsEvents,
-    "agg_wide_metrics_documents" -> wideMetricsDocuments,
-    "agg_wide_metrics_approx" -> wideMetricsApprox,
-    "agg_metrics_deviation" -> metricsDeviation,
-    "agg_metrics_summary" -> metricsSummary
-  )
-
   private val wideSqlBody =
     """SELECT CAST(count(*) AS BIGINT) AS row_cnt,
       |  CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS l_quantity_nulls,
@@ -383,10 +374,10 @@ object CheckMigration {
        |FROM j ORDER BY metric""".stripMargin
   }
 
-  def oracles: Map[String, String] = Map(
-    "agg_wide_metrics_lineitem" -> wideSqlBody,
-    "agg_wide_metrics_approx" -> approxSqlOracle,
-    "agg_wide_metrics_events" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("agg_wide_metrics_lineitem", wideMetricsLineitem, wideSqlBody),
+    Query("agg_wide_metrics_approx", wideMetricsApprox, approxSqlOracle),
+    Query("agg_wide_metrics_events", wideMetricsEvents,
       """SELECT CAST(count(*) AS BIGINT) AS row_cnt,
         |  CAST(sum(CASE WHEN value IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS value_nulls,
         |  CAST(min(CAST(value AS DECIMAL(36,2))) AS VARCHAR) AS value_min,
@@ -398,8 +389,8 @@ object CheckMigration {
         |  CAST(max(length(event_type)) AS BIGINT) AS event_type_maxlen,
         |  strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS ts_min,
         |  strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS ts_max
-        |FROM events""".stripMargin,
-    "agg_wide_metrics_documents" ->
+        |FROM events""".stripMargin),
+    Query("agg_wide_metrics_documents", wideMetricsDocuments,
       """SELECT CAST(count(*) AS BIGINT) AS row_cnt,
         |  CAST(sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_chars_nulls,
         |  CAST(min(CAST(n_chars AS DECIMAL(36,0))) AS VARCHAR) AS n_chars_min,
@@ -413,8 +404,8 @@ object CheckMigration {
         |  CAST(count(DISTINCT source) AS BIGINT) AS source_distinct,
         |  CAST(min(length(source)) AS BIGINT) AS source_minlen,
         |  CAST(max(length(source)) AS BIGINT) AS source_maxlen
-        |FROM documents""".stripMargin,
-    "agg_metrics_deviation" ->
+        |FROM documents""".stripMargin),
+    Query("agg_metrics_deviation", metricsDeviation,
       s"""WITH wa AS ($wideSqlBody),
          |wb AS (${wideSqlBody.replace("FROM lineitem", "FROM lineitem WHERE l_linenumber <= 4")}),
          |ua AS (${meltSql("wa", "val_a")}),
@@ -422,8 +413,8 @@ object CheckMigration {
          |SELECT coalesce(ua.metric, ub.metric) AS metric, val_a, val_b,
          |  CASE WHEN val_a IS NOT DISTINCT FROM val_b THEN 'OK' ELSE 'DEVIATION' END AS status
          |FROM ua FULL JOIN ub ON ua.metric = ub.metric
-         |ORDER BY metric""".stripMargin,
-    "agg_metrics_summary" ->
+         |ORDER BY metric""".stripMargin),
+    Query("agg_metrics_summary", metricsSummary,
       s"""WITH wa AS ($wideSqlBody),
          |wb AS (${wideSqlBody.replace("FROM lineitem", "FROM lineitem WHERE l_linenumber <= 4")}),
          |ua AS (${meltSql("wa", "val_a")}),
@@ -435,6 +426,6 @@ object CheckMigration {
          |  CAST(sum(CASE WHEN status = 'DEVIATION' THEN 1 ELSE 0 END) AS BIGINT) AS n_deviation,
          |  CASE WHEN sum(CASE WHEN status = 'DEVIATION' THEN 1 ELSE 0 END) = 0
          |       THEN 'OK' ELSE 'DEVIATION' END AS overall
-         |FROM dev""".stripMargin
+         |FROM dev""".stripMargin, sharesScanWith = Some("agg_metrics_deviation"))
   )
 }

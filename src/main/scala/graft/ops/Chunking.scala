@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
 
 /** Token-window document chunking — the context-window prep step of a
   * retrieval / training pipeline: every document is cut into
@@ -26,7 +27,6 @@ import org.apache.spark.sql.functions._
   * expansion is bounded and linear, never quadratic.
   */
 object Chunking {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   /** window = tokens per chunk; stride = token distance between chunk
@@ -117,11 +117,6 @@ object Chunking {
       .orderBy("lang")
   }
 
-  def queries: Map[String, Q] = Map(
-    "chunk_documents" -> chunkDocumentsQ,
-    "chunk_stats" -> chunkStatsQ
-  )
-
   // ---- DuckDB oracles ------------------------------------------------
 
   private[ops] val chunksSql: String =
@@ -141,14 +136,14 @@ object Chunking {
        |    array_to_string(list_slice(toks, start_i, least(start_i + ${window - 1}, n_tokens)), ' ') AS chunk_text
        |  FROM ch_s)""".stripMargin
 
-  def oracles: Map[String, String] = Map(
-    "chunk_documents" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("chunk_documents", chunkDocumentsQ,
       s"""WITH $chunksSql
          |SELECT doc_id, chunk_idx, start_tok, n_toks,
          |  CAST(length(chunk_text) AS BIGINT) AS chunk_chars,
          |  CAST(${Dedup.hex12ValSql("md5(chunk_text)", 1)} AS BIGINT) AS chunk_fp
-         |FROM ch ORDER BY doc_id, chunk_idx""".stripMargin,
-    "chunk_stats" ->
+         |FROM ch ORDER BY doc_id, chunk_idx""".stripMargin),
+    Query("chunk_stats", chunkStatsQ,
       s"""WITH $chunksSql,
          |pd AS (
          |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
@@ -164,6 +159,6 @@ object Chunking {
          |  CAST(sum(n_tokens) AS BIGINT) AS tokens,
          |  CAST(sum(chunk_tokens) AS BIGINT) AS chunk_tokens,
          |  CAST(floor(sum(chunk_tokens) * 1000000.0 / sum(n_tokens)) AS BIGINT) AS expansion_micro
-         |FROM dj GROUP BY lang ORDER BY lang""".stripMargin
+         |FROM dj GROUP BY lang ORDER BY lang""".stripMargin)
   )
 }

@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
+import graft.Query.FirstRun
 
 /** Corpus-statistics operators: TF-IDF term ranking and unigram
   * language-model scoring (the CCNet/KenLM "perplexity filter" in its
@@ -17,7 +19,6 @@ import org.apache.spark.sql.functions._
   * in any execution order on both engines.
   */
 object CorpusStats {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   private val micro = 1e6
@@ -951,26 +952,8 @@ object CorpusStats {
       .orderBy("key")
   }
 
-  def queries: Map[String, Q] = Map(
-    "sketch_distinct" -> sketchDistinct,
-    "sketch_distinct_merged" -> sketchDistinctMerged,
-    "sketch_distinct_merged_by" -> sketchDistinctMergedBy,
-    "corpus_cube" -> corpusCubeQ,
-    "zipf_fit" -> zipfFitQ,
-    "pmi_top_pairs" -> pmiTopPairsQ,
-    "corpus_growth" -> corpusGrowthQ,
-    "source_concentration" -> sourceConcentrationQ,
-    "corpus_datasheet" -> corpusDatasheet,
-    "tfidf_top_terms" -> tfidfTopTerms,
-    "perplexity_score" -> perplexityScore,
-    "bigram_perplexity" -> bigramPerplexity,
-    "token_histogram" -> tokenHistogram,
-    "sketch_topk_tokens" -> sketchTopkTokens,
-    "ccnet_perplexity_buckets" -> ccnetPerplexityBuckets
-  )
-
-  def oracles: Map[String, String] = Map(
-    "sketch_distinct" -> {
+  lazy val registry: Seq[Query] = Seq(
+    Query("sketch_distinct", sketchDistinct, {
       def arm(name: String, table: String, c: String) =
         s"""SELECT '$name' AS column_name,
            |  CAST(count(DISTINCT $c) AS BIGINT) AS exact,
@@ -987,10 +970,10 @@ object CorpusStats {
          |    CAST(floor(-1.0 * $lcBuckets * ln(1.0 - CAST(occupied AS DOUBLE) / $lcBuckets) * 1000) AS BIGINT)
          |  ELSE NULL END AS est_milli
          |FROM rows0 ORDER BY column_name""".stripMargin
-    },
+    }),
     // merged two-increment sketch ≡ one-shot sketch (the merge law is
     // exact), so the oracle computes the one-shot occupancy directly
-    "sketch_distinct_merged" ->
+    Query("sketch_distinct_merged", sketchDistinctMerged,
       s"""WITH o AS (
          |  SELECT CAST(count(DISTINCT ${Dedup.hex12ValSql("md5('lc|' || CAST(l_partkey AS VARCHAR))", 1)} % $lcBuckets) AS BIGINT) AS occupied
          |  FROM lineitem)
@@ -998,11 +981,11 @@ object CorpusStats {
          |  CASE WHEN occupied < $lcBuckets THEN
          |    CAST(floor(-1.0 * $lcBuckets * ln(1.0 - CAST(occupied AS DOUBLE) / $lcBuckets) * 1000) AS BIGINT)
          |  ELSE NULL END AS est_milli
-         |FROM o""".stripMargin,
+         |FROM o""".stripMargin, build = Some(FirstRun)),
     // merged two-increment GROUPED sketch ≡ one-shot grouped sketch
     // (the merge law is per-key exact): the oracle computes the
     // one-shot grouped occupancy directly
-    "sketch_distinct_merged_by" ->
+    Query("sketch_distinct_merged_by", sketchDistinctMergedBy,
       s"""WITH o AS (
          |  SELECT l_returnflag AS key,
          |    CAST(count(DISTINCT ${Dedup.hex12ValSql("md5('lc|' || CAST(l_partkey AS VARCHAR))", 1)} % $lcBuckets) AS BIGINT) AS occupied
@@ -1011,22 +994,22 @@ object CorpusStats {
          |  CASE WHEN occupied < $lcBuckets THEN
          |    CAST(floor(-1.0 * $lcBuckets * ln(1.0 - CAST(occupied AS DOUBLE) / $lcBuckets) * 1000) AS BIGINT)
          |  ELSE NULL END AS est_milli
-         |FROM o ORDER BY key""".stripMargin,
+         |FROM o ORDER BY key""".stripMargin, build = Some(FirstRun)),
     // the sketch route is exact by construction (no false negatives +
     // exact recount), so the oracle is the PLAIN heavy-hitter query
-    "sketch_topk_tokens" ->
+    Query("sketch_topk_tokens", sketchTopkTokens,
       """WITH t AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents),
         |c AS (SELECT token, CAST(count(*) AS BIGINT) AS n FROM t GROUP BY token)
-        |SELECT token, n FROM c WHERE n >= 500 ORDER BY n DESC, token""".stripMargin,
-    "corpus_cube" ->
+        |SELECT token, n FROM c WHERE n >= 500 ORDER BY n DESC, token""".stripMargin),
+    Query("corpus_cube", corpusCubeQ,
       """SELECT coalesce(lang, '(all)') AS lang_g,
         |  coalesce(source, '(all)') AS source_g,
         |  CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS tokens
         |FROM documents
         |GROUP BY CUBE (lang, source)
-        |ORDER BY lang_g, source_g""".stripMargin,
-    "zipf_fit" ->
+        |ORDER BY lang_g, source_g""".stripMargin),
+    Query("zipf_fit", zipfFitQ,
       """WITH tf AS (
         |  SELECT lang, t, CAST(count(*) AS BIGINT) AS c
         |  FROM (SELECT lang, unnest(string_split(text, ' ')) AS t FROM documents)
@@ -1051,8 +1034,8 @@ object CorpusStats {
         |  CAST(CASE WHEN denom <= 0 THEN 0
         |       ELSE (numer * 1000) // denom * 1000 + ((numer * 1000) % denom) * 1000 // denom
         |       END AS BIGINT) AS neg_slope_micro
-        |FROM fin ORDER BY lang""".stripMargin,
-    "pmi_top_pairs" ->
+        |FROM fin ORDER BY lang""".stripMargin),
+    Query("pmi_top_pairs", pmiTopPairsQ,
       s"""WITH ws AS (SELECT string_split(text, ' ') AS w FROM documents),
          |toks AS (SELECT unnest(w) AS t FROM ws),
          |uni AS (SELECT t, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY t),
@@ -1070,8 +1053,8 @@ object CorpusStats {
          |JOIN uni u1 ON u1.t = b.w1
          |JOIN uni u2 ON u2.t = b.w2, n1, nb
          |WHERE b.c12 >= $pmiMinCount
-         |ORDER BY pmi_micro DESC, w1 ASC, w2 ASC LIMIT $pmiK""".stripMargin,
-    "corpus_growth" ->
+         |ORDER BY pmi_micro DESC, w1 ASC, w2 ASC LIMIT $pmiK""".stripMargin),
+    Query("corpus_growth", corpusGrowthQ,
       s"""WITH mx AS (SELECT max(doc_id) AS max_id FROM documents),
          |b AS (
          |  SELECT d.doc_id, d.text, d.doc_id // (mx.max_id // $growthBuckets + 1) AS bucket
@@ -1093,8 +1076,8 @@ object CorpusStats {
          |SELECT da.bucket, da.n_docs, da.n_dup_docs,
          |  CAST(da.n_dup_docs * 1000000 // da.n_docs AS BIGINT) AS dup_micro,
          |  CAST(coalesce(tn.n_new_tokens, 0) AS BIGINT) AS n_new_tokens
-         |FROM da LEFT JOIN tn USING (bucket) ORDER BY da.bucket""".stripMargin,
-    "source_concentration" ->
+         |FROM da LEFT JOIN tn USING (bucket) ORDER BY da.bucket""".stripMargin),
+    Query("source_concentration", sourceConcentrationQ,
       """WITH ps AS (
         |  SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
         |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS toks
@@ -1116,8 +1099,8 @@ object CorpusStats {
         |  CAST(min(CASE WHEN rn = 1 THEN toks END) * 1000000 // min(total_tokens) AS BIGINT)
         |    AS top_share_micro,
         |  CAST(sum(term_micro) AS BIGINT) AS entropy_micro
-        |FROM t GROUP BY lang ORDER BY lang""".stripMargin,
-    "corpus_datasheet" -> {
+        |FROM t GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("corpus_datasheet", corpusDatasheet, {
       val stop = TextAnalysis.stopList
       s"""WITH t AS (
          |  SELECT doc_id, lang, text,
@@ -1140,8 +1123,8 @@ object CorpusStats {
          |  CAST(sum(q_pass) AS BIGINT) AS n_quality_pass,
          |  CAST(sum(is_dup) * 1000000 // count(*) AS BIGINT) AS dup_doc_micro
          |FROM m GROUP BY lang ORDER BY lang""".stripMargin
-    },
-    "tfidf_top_terms" ->
+    }),
+    Query("tfidf_top_terms", tfidfTopTerms,
       """WITH tf AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
         |tfc AS (SELECT doc_id, token, count(*) AS tf FROM tf GROUP BY doc_id, token),
@@ -1159,8 +1142,8 @@ object CorpusStats {
         |  FROM scored)
         |SELECT doc_id, CAST(rank AS BIGINT) AS rank, token,
         |  CAST(tf AS BIGINT) AS tf, df, CAST(score_micro AS BIGINT) AS score_micro
-        |FROM ranked WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-    "perplexity_score" ->
+        |FROM ranked WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin),
+    Query("perplexity_score", perplexityScore,
       """WITH tf AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
         |tfc AS (SELECT doc_id, token, count(*) AS tf FROM tf GROUP BY doc_id, token),
@@ -1174,8 +1157,8 @@ object CorpusStats {
         |  CAST(sum(t.tf * m.nll_micro) AS BIGINT) AS total_nll_micro,
         |  CAST(floor(sum(t.tf * m.nll_micro) / sum(t.tf)) AS BIGINT) AS avg_nll_micro
         |FROM tfc t JOIN model m ON m.token = t.token
-        |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin,
-    "bigram_perplexity" ->
+        |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin),
+    Query("bigram_perplexity", bigramPerplexity,
       """WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |bg AS (
         |  SELECT doc_id, w[i] AS g1, w[i + 1] AS g2
@@ -1197,8 +1180,8 @@ object CorpusStats {
         |  CAST(sum(b.bc * m.nll2_micro) AS BIGINT) AS total_nll2_micro,
         |  CAST(sum(b.bc * m.nll2_micro) // sum(b.bc) AS BIGINT) AS avg_nll2_micro
         |FROM bc b JOIN model m USING (g1, g2)
-        |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin,
-    "ccnet_perplexity_buckets" ->
+        |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin),
+    Query("ccnet_perplexity_buckets", ccnetPerplexityBuckets,
       s"""WITH ${nllDuckSql("documents")},
          |scored AS (
          |  SELECT u.doc_id, u.avg_nll_micro, d.lang
@@ -1226,13 +1209,13 @@ object CorpusStats {
          |SELECT lang, bucket, CAST(count(*) AS BIGINT) AS n_docs,
          |  min(avg_nll_micro) AS min_avg_nll_micro,
          |  max(avg_nll_micro) AS max_avg_nll_micro
-         |FROM b GROUP BY lang, bucket ORDER BY lang, bucket""".stripMargin,
-    "token_histogram" ->
+         |FROM b GROUP BY lang, bucket ORDER BY lang, bucket""".stripMargin),
+    Query("token_histogram", tokenHistogram,
       """WITH t AS (
         |  SELECT lang, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens FROM documents)
         |SELECT lang, CAST(least(n_tokens // 10, 15) AS BIGINT) AS bucket,
         |  CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(n_tokens) AS BIGINT) AS tokens
-        |FROM t GROUP BY lang, bucket ORDER BY lang, bucket""".stripMargin
+        |FROM t GROUP BY lang, bucket ORDER BY lang, bucket""".stripMargin)
   )
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
 
 /** Data Selection via Importance Resampling — DSIR (Xie et al.,
   * NeurIPS 2023): pick raw-corpus documents that look like a small
@@ -38,7 +39,6 @@ import org.apache.spark.sql.functions._
   * section) with the published method itself.
   */
 object DataSelection {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   /** Fixture knobs — the oracle replicates all three. Production
@@ -173,11 +173,6 @@ object DataSelection {
       fixtureK
     ).orderBy("rank")
 
-  def queries: Map[String, Q] = Map(
-    "dsir_weights" -> dsirWeights,
-    "dsir_resample" -> dsirResample
-  )
-
   // ---- DuckDB oracles ------------------------------------------------
 
   private def bucketSql =
@@ -206,11 +201,11 @@ object DataSelection {
        |    CAST(sum(lambda_micro) AS BIGINT) AS logw_micro
        |  FROM f JOIN lam USING (bucket) GROUP BY f.doc_id)""".stripMargin
 
-  def oracles: Map[String, String] = Map(
-    "dsir_weights" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("dsir_weights", dsirWeights,
       s"""$weightsSqlBase
-         |SELECT doc_id, n_feats, logw_micro FROM dw ORDER BY doc_id""".stripMargin,
-    "dsir_resample" ->
+         |SELECT doc_id, n_feats, logw_micro FROM dw ORDER BY doc_id""".stripMargin),
+    Query("dsir_resample", dsirResample,
       s"""$weightsSqlBase,
          |scored AS (
          |  SELECT doc_id, n_feats, logw_micro,
@@ -221,6 +216,6 @@ object DataSelection {
          |    row_number() OVER (ORDER BY logw_micro + gumbel_micro DESC, doc_id ASC) AS rank
          |  FROM scored)
          |SELECT CAST(rank AS BIGINT) AS rank, doc_id, n_feats, logw_micro, gumbel_micro, score_micro
-         |FROM ranked WHERE rank <= $fixtureK ORDER BY rank""".stripMargin
+         |FROM ranked WHERE rank <= $fixtureK ORDER BY rank""".stripMargin)
   )
 }

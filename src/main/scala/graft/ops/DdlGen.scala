@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 
 /** DDL / metadata generators (SURVEY.md §2.C): CREATE SCHEMA / CREATE
   * TABLE / ADD PRIMARY KEY / ADD FOREIGN KEY statement streams built as
@@ -17,7 +18,6 @@ import org.apache.spark.sql.functions._
   * pattern scales to catalogs of millions of columns.
   */
 object DdlGen {
-  type Q = (SparkSession, String) => DataFrame
 
   private def qIdent(c: Column): Column = concat(lit("\""), upper(c), lit("\""))
 
@@ -285,30 +285,6 @@ object DdlGen {
     base.reduce(_ unionByName _).orderBy("ord", "stmt")
   }
 
-  def queries: Map[String, Q] = Map(
-    "ddl_create_table" -> ((s, _) =>
-      createTableStmts(FixtureCatalog.columnsDf(s)).orderBy("schema_name", "table_name")),
-    "ddl_primary_keys" -> ((s, _) =>
-      primaryKeyStmts(FixtureCatalog.keysDf(s))
-        .select("schema_name", "table_name", "stmt")
-        .orderBy("schema_name", "table_name")),
-    "ddl_foreign_keys" -> ((s, _) =>
-      foreignKeyStmts(FixtureCatalog.keysDf(s), FixtureCatalog.columnsDf(s))
-        .select("schema_name", "table_name", "stmt")
-        .orderBy("schema_name", "table_name", "stmt")),
-    "ddl_statement_stream" -> ((s, _) =>
-      statementStream(FixtureCatalog.columnsDf(s), FixtureCatalog.keysDf(s))),
-    "ddl_comments" -> ((s, _) =>
-      commentStmts(FixtureCatalog.commentsDf(s)).orderBy("schema_name", "table_name", "stmt")),
-    "ddl_partition_distribute" -> ((s, _) =>
-      distributeStmts(FixtureCatalog.extrasDf(s))
-        .select(lit(35).as("ord"), col("stmt"))
-        .unionByName(partitionStmts(FixtureCatalog.extrasDf(s)).select(lit(38).as("ord"), col("stmt")))
-        .orderBy("ord", "stmt")),
-    "ddl_view_review" -> ((s, _) =>
-      viewReviewStmts(FixtureCatalog.viewsDf(s)).orderBy("schema_name", "view_name"))
-  )
-
   private val colDefSql =
     """'"' || upper(col_name) || '" ' || type_name ||
       |  CASE WHEN col_default IS NOT NULL THEN ' DEFAULT ' || col_default ELSE '' END ||
@@ -347,19 +323,32 @@ object DdlGen {
        |  WHERE cols.schema_name = keys.ref_schema AND cols.table_name = keys.ref_table)
        |GROUP BY schema_name, table_name, constraint_name, ref_schema, ref_table""".stripMargin
 
-  def oracles: Map[String, String] = Map(
-    "ddl_create_table" -> s"""SELECT * FROM ($createTableSql) ORDER BY schema_name, table_name""",
-    "ddl_primary_keys" -> s"""SELECT * FROM ($primaryKeySql) ORDER BY schema_name, table_name""",
-    "ddl_foreign_keys" ->
-      s"""SELECT * FROM ($foreignKeySql) ORDER BY schema_name, table_name, stmt""",
-    "ddl_statement_stream" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("ddl_create_table",
+      (s, _) => createTableStmts(FixtureCatalog.columnsDf(s)).orderBy("schema_name", "table_name"),
+      s"""SELECT * FROM ($createTableSql) ORDER BY schema_name, table_name"""),
+    Query("ddl_primary_keys",
+      (s, _) =>
+        primaryKeyStmts(FixtureCatalog.keysDf(s))
+          .select("schema_name", "table_name", "stmt")
+          .orderBy("schema_name", "table_name"),
+      s"""SELECT * FROM ($primaryKeySql) ORDER BY schema_name, table_name"""),
+    Query("ddl_foreign_keys",
+      (s, _) =>
+        foreignKeyStmts(FixtureCatalog.keysDf(s), FixtureCatalog.columnsDf(s))
+          .select("schema_name", "table_name", "stmt")
+          .orderBy("schema_name", "table_name", "stmt"),
+      s"""SELECT * FROM ($foreignKeySql) ORDER BY schema_name, table_name, stmt"""),
+    Query("ddl_statement_stream",
+      (s, _) => statementStream(FixtureCatalog.columnsDf(s), FixtureCatalog.keysDf(s)),
       s"""SELECT ord, stmt FROM (
          |  SELECT 2 AS ord, stmt FROM ($createSchemaSql)
          |  UNION ALL SELECT 4 AS ord, stmt FROM ($createTableSql)
          |  UNION ALL SELECT 6 AS ord, stmt FROM ($primaryKeySql)
          |  UNION ALL SELECT 8 AS ord, stmt FROM ($foreignKeySql)
-         |) ORDER BY ord, stmt""".stripMargin,
-    "ddl_comments" ->
+         |) ORDER BY ord, stmt""".stripMargin),
+    Query("ddl_comments",
+      (s, _) => commentStmts(FixtureCatalog.commentsDf(s)).orderBy("schema_name", "table_name", "stmt"),
       s"""SELECT schema_name, table_name,
          |  CASE WHEN col_name IS NULL THEN
          |    'COMMENT ON TABLE "' || upper(schema_name) || '"."' || upper(table_name) ||
@@ -369,8 +358,13 @@ object DdlGen {
          |    '"."' || upper(col_name) || '" IS ''' || replace(comment, '''', '''''') || ''';'
          |  END AS stmt
          |FROM ${FixtureCatalog.commentsValuesSql}
-         |ORDER BY schema_name, table_name, stmt""".stripMargin,
-    "ddl_partition_distribute" ->
+         |ORDER BY schema_name, table_name, stmt""".stripMargin),
+    Query("ddl_partition_distribute",
+      (s, _) =>
+        distributeStmts(FixtureCatalog.extrasDf(s))
+          .select(lit(35).as("ord"), col("stmt"))
+          .unionByName(partitionStmts(FixtureCatalog.extrasDf(s)).select(lit(38).as("ord"), col("stmt")))
+          .orderBy("ord", "stmt"),
       s"""SELECT ord, stmt FROM (
          |  SELECT 35 AS ord,
          |    'ALTER TABLE "' || upper(schema_name) || '"."' || upper(table_name) ||
@@ -383,12 +377,13 @@ object DdlGen {
          |    'ALTER TABLE "' || upper(schema_name) || '"."' || upper(table_name) ||
          |    '" PARTITION BY ("' || upper(partition_col) || '");' AS stmt
          |  FROM ${FixtureCatalog.extrasValuesSql} WHERE partition_col IS NOT NULL
-         |) ORDER BY ord, stmt""".stripMargin,
-    "ddl_view_review" ->
+         |) ORDER BY ord, stmt""".stripMargin),
+    Query("ddl_view_review",
+      (s, _) => viewReviewStmts(FixtureCatalog.viewsDf(s)).orderBy("schema_name", "view_name"),
       s"""SELECT schema_name, view_name,
          |  '-- REVIEW: CREATE OR REPLACE FORCE VIEW "' || upper(schema_name) || '"."' ||
          |  upper(view_name) || '" AS ' || definition || ';' AS stmt
          |FROM ${FixtureCatalog.viewsValuesSql}
-         |ORDER BY schema_name, view_name""".stripMargin
+         |ORDER BY schema_name, view_name""".stripMargin)
   )
 }

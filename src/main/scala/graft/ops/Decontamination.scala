@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
+import graft.Query.FirstRun
 
 /** Benchmark decontamination: flag training documents that share any
   * word n-gram with an evaluation/benchmark set (the GPT-3 appendix-C
@@ -21,7 +23,6 @@ import org.apache.spark.sql.functions._
   * joined shuffle-side, and nothing here collects to the driver.
   */
 object Decontamination {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   /** Deterministic fixture split standing in for (training, benchmark):
@@ -331,26 +332,16 @@ object Decontamination {
     ngramNovelty(docs.filter(s"NOT ($refPred)"), docs.filter(refPred)).orderBy("doc_id")
   }
 
-  def queries: Map[String, Q] = Map(
-    "decontaminate" -> decontaminate,
-    "decontaminate_via_index" -> decontaminateViaIndex,
-    "decontaminate_bloom" -> decontaminateBloom,
-    "decontaminate_report" -> decontaminateReport,
-    "decontaminate_removal" -> decontaminateRemoval,
-    "decontaminate_semantic" -> decontaminateSemantic,
-    "ngram_novelty" -> ngramNoveltyQ
-  )
-
   /** The Bloom route is exact by construction (FPs verified away, FNs
     * impossible), so it shares the exact route's oracle.
     */
-  def oracles: Map[String, String] = Map(
-    "decontaminate_bloom" -> oracleSqlExact,
-    "decontaminate" -> oracleSqlExact,
+  lazy val registry: Seq[Query] = Seq(
+    Query("decontaminate_bloom", decontaminateBloom, oracleSqlExact),
+    Query("decontaminate", decontaminate, oracleSqlExact),
     // the index screen is sound (shared n-gram => shared token), so
     // the screened exact pass shares the full route's oracle
-    "decontaminate_via_index" -> oracleSqlExact,
-    "ngram_novelty" ->
+    Query("decontaminate_via_index", decontaminateViaIndex, oracleSqlExact, build = Some(FirstRun)),
+    Query("ngram_novelty", ngramNoveltyQ,
       s"""WITH prb AS (SELECT * FROM documents WHERE NOT ($refPred)),
          |ref AS (SELECT * FROM documents WHERE $refPred),
          |${Dedup.shinglesSqlNamed("psh", "prb")},
@@ -362,9 +353,9 @@ object Decontamination {
          |  CAST((count(*) - sum(CASE WHEN rg.shingle IS NOT NULL THEN 1 ELSE 0 END)) * 1000000
          |       // count(*) AS BIGINT) AS novelty_micro
          |FROM psh p LEFT JOIN rg ON rg.shingle = p.shingle
-         |GROUP BY p.doc_id ORDER BY p.doc_id""".stripMargin,
+         |GROUP BY p.doc_id ORDER BY p.doc_id""".stripMargin),
     // the UNION ALL replays the Spark side's seeded benchmark clones
-    "decontaminate_semantic" ->
+    Query("decontaminate_semantic", decontaminateSemantic,
       s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |bench AS (SELECT vec_id AS bench_id, v AS bv FROM e WHERE $benchVecPred),
          |train AS (SELECT * FROM e WHERE NOT ($benchVecPred)
@@ -386,9 +377,9 @@ object Decontamination {
          |  CAST(n_hits AS BIGINT) AS n_bench_hits,
          |  CAST(bench_id AS BIGINT) AS best_bench_id,
          |  cos_sim AS best_cos
-         |FROM ranked WHERE rn = 1 ORDER BY vec_id""".stripMargin,
+         |FROM ranked WHERE rn = 1 ORDER BY vec_id""".stripMargin),
     // benchmark-flagged positions + the Spans covered-set cut at k=3
-    "decontaminate_removal" ->
+    Query("decontaminate_removal", decontaminateRemoval,
       s"""WITH tr AS (SELECT doc_id, text FROM documents WHERE NOT ($benchPred)),
          |be AS (SELECT doc_id, text FROM documents WHERE $benchPred),
          |${Spans.windowsSql("tr", "", 3)},
@@ -401,8 +392,8 @@ object Decontamination {
          |  CAST(len(w.w) AS BIGINT) AS n_words,
          |  CAST(len(w.w) - coalesce(cl.n_kept, 0) AS BIGINT) AS n_words_removed,
          |  CAST(length(w.text) - length(coalesce(cl.ct, '')) AS BIGINT) AS chars_removed
-         |FROM w LEFT JOIN cl USING (doc_id) ORDER BY w.doc_id""".stripMargin,
-    "decontaminate_report" ->
+         |FROM w LEFT JOIN cl USING (doc_id) ORDER BY w.doc_id""".stripMargin),
+    Query("decontaminate_report", decontaminateReport,
       s"""WITH train AS (SELECT * FROM documents WHERE NOT ($benchPred)),
          |bench AS (SELECT * FROM documents WHERE $benchPred),
          |${Dedup.shinglesSqlFrom("train").replace("sh AS", "tsh AS")},
@@ -417,7 +408,7 @@ object Decontamination {
          |    row_number() OVER (PARTITION BY doc_id ORDER BY n_shared DESC, bench_id ASC) AS rank
          |  FROM per_bench)
          |SELECT doc_id, CAST(rank AS BIGINT) AS rank, bench_id, n_shared
-         |FROM ranked WHERE rank <= 2 ORDER BY doc_id, rank""".stripMargin
+         |FROM ranked WHERE rank <= 2 ORDER BY doc_id, rank""".stripMargin)
   )
 
   private lazy val oracleSqlExact: String =

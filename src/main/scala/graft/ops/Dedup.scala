@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
+import graft.Query.FirstRun
 
 /** Deduplication operators for LLM training-data pipelines (the
   * BASELINE.json north-star extensions; SURVEY.md §7.1 item 8).
@@ -34,7 +36,6 @@ import org.apache.spark.sql.functions._
   * 64-bit addition in both engines).
   */
 object Dedup {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   /** Exact near-zero-cost dedup over a content hash. Returns one row
@@ -812,18 +813,6 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  def queries: Map[String, Q] = Map(
-    "dedup_exact" -> dedupExact,
-    "dedup_minhash_lsh" -> dedupMinhashLsh,
-    "dedup_simhash" -> dedupSimhash,
-    "dedup_simhash_pairs" -> dedupSimhashPairs,
-    "dedup_ngram_jaccard" -> dedupNgramJaccard,
-    "dedup_blocked_fallback" -> dedupBlockedFallback,
-    "dedup_incremental" -> dedupIncremental,
-    "dedup_route_agreement" -> dedupRouteAgreement,
-    "dedup_source_matrix" -> dedupSourceMatrix
-  )
-
   /** SOURCE cross-duplication matrix — which sources copy from each
     * other: every verified near-dup pair mapped to its (source,
     * source) cell (unordered, lexicographic), counted. The provenance
@@ -954,11 +943,11 @@ object Dedup {
       .map(j => s"(CASE WHEN s$j >= 0 THEN ${1L << j} ELSE 0 END)")
       .mkString(" + ")
 
-  def oracles: Map[String, String] = Map(
-    "dedup_exact" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("dedup_exact", dedupExact,
       """SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents GROUP BY md5(text) ORDER BY keep_id""".stripMargin,
-    "dedup_source_matrix" ->
+        |FROM documents GROUP BY md5(text) ORDER BY keep_id""".stripMargin),
+    Query("dedup_source_matrix", dedupSourceMatrix,
       s"""WITH $shinglesSql,
          |$minhashSql,
          |$bandsSql,
@@ -986,11 +975,11 @@ object Dedup {
          |FROM vp
          |JOIN documents da ON da.doc_id = vp.doc_a
          |JOIN documents db ON db.doc_id = vp.doc_b
-         |GROUP BY 1, 2 ORDER BY src_lo, src_hi""".stripMargin,
+         |GROUP BY 1, 2 ORDER BY src_lo, src_hi""".stripMargin),
     // the three route chains verbatim (minhash verified ≥ 0.5, simhash
     // banded hamming ≤ 3, winnow containment ≥ 0.5), then EXISTS flags
     // per union pair and one stacked aggregate
-    "dedup_route_agreement" ->
+    Query("dedup_route_agreement", dedupRouteAgreement,
       s"""WITH $shinglesSql,
          |$minhashSql,
          |$bandsSql,
@@ -1064,8 +1053,8 @@ object Dedup {
          |  UNION ALL SELECT 'simhash_winnow', sum(in_sh * in_wn) FROM fl
          |  UNION ALL SELECT 'all_three', sum(in_mh * in_sh * in_wn) FROM fl
          |  UNION ALL SELECT 'any_route', count(*) FROM fl)
-         |ORDER BY route""".stripMargin,
-    "dedup_minhash_lsh" ->
+         |ORDER BY route""".stripMargin),
+    Query("dedup_minhash_lsh", dedupMinhashLsh,
       s"""WITH $shinglesSql,
          |$minhashSql,
          |$bandsSql,
@@ -1088,15 +1077,15 @@ object Dedup {
          |LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
          |JOIN sizes sa ON sa.doc_id = p.doc_a
          |JOIN sizes sb ON sb.doc_id = p.doc_b
-         |ORDER BY p.doc_a, p.doc_b""".stripMargin,
-    "dedup_simhash" -> {
+         |ORDER BY p.doc_a, p.doc_b""".stripMargin),
+    Query("dedup_simhash", dedupSimhash, {
       s"""WITH words AS (
          |  SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
          |hashed AS (SELECT doc_id, md5(word) AS h FROM words),
          |sums AS (SELECT doc_id, $simhashBitSumsSql FROM hashed GROUP BY doc_id)
          |SELECT doc_id, CAST($simhashFpSql AS BIGINT) AS simhash FROM sums ORDER BY doc_id""".stripMargin
-    },
-    "dedup_simhash_pairs" -> {
+    }),
+    Query("dedup_simhash_pairs", dedupSimhashPairs, {
       s"""WITH words AS (
          |  SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
          |hashed AS (SELECT doc_id, md5(word) AS h FROM words),
@@ -1115,12 +1104,12 @@ object Dedup {
          |SELECT doc_a, doc_b, CAST(bit_count(xor(sim_a, sim_b)) AS BIGINT) AS hamming
          |FROM pairs WHERE bit_count(xor(sim_a, sim_b)) <= 3
          |ORDER BY doc_a, doc_b""".stripMargin
-    },
+    }),
     // the routed fallback: exact word-set Jaccard for bounded blocks,
     // the full MinHash-LSH chain (shingle CTEs FROM the quarantined
     // docs) for oversized ones, same-block-restricted and verified at
     // the same threshold — the oracle replays both routes end to end.
-    "dedup_blocked_fallback" ->
+    Query("dedup_blocked_fallback", dedupBlockedFallback,
       s"""WITH d AS (
          |  SELECT doc_id, lang, CAST(floor(n_chars / 100.0) AS BIGINT) AS lb,
          |         list_distinct(string_split(text, ' ')) AS ws, text
@@ -1167,20 +1156,20 @@ object Dedup {
          |UNION ALL
          |SELECT doc_a, doc_b, n_inter, n_union, jaccard, 'lsh' AS method
          |FROM lsh_pairs WHERE ${jaccardAtLeastSql("n_inter", "n_union", 0.5)}
-         |ORDER BY doc_a, doc_b""".stripMargin,
+         |ORDER BY doc_a, doc_b""".stripMargin),
     // incremental replay: one shingle/minhash pass over ALL documents
     // (per-doc signatures are corpus-independent, so signing even and
     // odd docs separately — as the Spark side does — gives identical
     // values), bands split by parity, candidates per route, and the
     // same k-of-8 agreement estimator.
-    "dedup_incremental" -> {
+    Query("dedup_incremental", dedupIncremental, {
       s"""WITH $incrementalPairCtes
          |SELECT new_id, ref_id, src, n_match,
          |  round(n_match / $numHashes.0, 6) AS est_jaccard
          |FROM scored WHERE n_match >= $incrementalMinMatches
          |ORDER BY new_id, ref_id, src""".stripMargin
-    },
-    "dedup_ngram_jaccard" ->
+    }, build = Some(FirstRun)),
+    Query("dedup_ngram_jaccard", dedupNgramJaccard,
       s"""WITH docs AS (
         |  SELECT doc_id, lang, CAST(floor(n_chars / 100.0) AS BIGINT) AS len_bucket,
         |         list_distinct(string_split(text, ' ')) AS ws
@@ -1194,6 +1183,6 @@ object Dedup {
         |SELECT doc_a, doc_b, n_inter, n_union,
         |  round(CAST(n_inter AS DOUBLE) / n_union, 6) AS jaccard
         |FROM pairs WHERE ${jaccardAtLeastSql("n_inter", "n_union", 0.5)}
-        |ORDER BY doc_a, doc_b""".stripMargin
+        |ORDER BY doc_a, doc_b""".stripMargin)
   )
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
 
 /** Incremental delta sync (SURVEY.md §2.D #49; reference
   * delta_import/delta_import_on_primary_keys.sql:7-481): read the
@@ -24,7 +25,6 @@ import org.apache.spark.sql.functions._
   * delta_import:421).
   */
 object DeltaSync {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   /** MERGE target←delta on `keys`: delta rows win on key match
@@ -192,14 +192,8 @@ object DeltaSync {
     snapshotDiff(old, newer, "doc_id", "text").orderBy("doc_id")
   }
 
-  def queries: Map[String, Q] = Map(
-    "delta_merge_upsert" -> mergeUpsert,
-    "delta_merge_intersect" -> mergeIntersectUpsert,
-    "snapshot_diff" -> snapshotDiffQ
-  )
-
-  def oracles: Map[String, String] = Map(
-    "snapshot_diff" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("snapshot_diff", snapshotDiffQ,
       """WITH o AS (
         |  SELECT doc_id AS id, md5(text) AS oh FROM documents WHERE doc_id % 2 = 0),
         |n AS (
@@ -212,8 +206,8 @@ object DeltaSync {
         |       WHEN o.oh = n.nh THEN 'unchanged'
         |       ELSE 'changed' END AS status
         |FROM o FULL OUTER JOIN n ON o.id = n.id
-        |ORDER BY doc_id""".stripMargin,
-    "delta_merge_upsert" ->
+        |ORDER BY doc_id""".stripMargin),
+    Query("delta_merge_upsert", mergeUpsert,
       """WITH tgt AS (SELECT * FROM orders WHERE o_orderdate < TIMESTAMP '1998-01-01'),
         |wm AS (SELECT max(o_orderdate) AS m FROM tgt),
         |delta AS (SELECT o.* FROM orders o, wm WHERE o.o_orderdate >= wm.m)
@@ -222,8 +216,8 @@ object DeltaSync {
         |       CASE WHEN d.o_orderkey IS NOT NULL THEN d.o_orderstatus ELSE t.o_orderstatus END AS o_orderstatus,
         |       strftime(CASE WHEN d.o_orderkey IS NOT NULL THEN d.o_orderdate ELSE t.o_orderdate END, '%Y-%m-%d') AS o_orderdate_s
         |FROM tgt t FULL JOIN delta d ON t.o_orderkey = d.o_orderkey
-        |ORDER BY o_orderkey""".stripMargin,
-    "delta_merge_intersect" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("delta_merge_intersect", mergeIntersectUpsert,
       """WITH tgt AS (SELECT * FROM orders WHERE o_orderdate < TIMESTAMP '1998-01-01'),
         |wm AS (SELECT max(o_orderdate) AS m FROM tgt),
         |delta AS (SELECT o.o_orderkey, o.o_custkey, o.o_orderstatus, o.o_orderdate
@@ -234,6 +228,6 @@ object DeltaSync {
         |       t.o_orderpriority AS o_orderpriority,
         |       strftime(CASE WHEN d.o_orderkey IS NOT NULL THEN d.o_orderdate ELSE t.o_orderdate END, '%Y-%m-%d') AS o_orderdate_s
         |FROM tgt t FULL JOIN delta d ON t.o_orderkey = d.o_orderkey
-        |ORDER BY o_orderkey""".stripMargin
+        |ORDER BY o_orderkey""".stripMargin)
   )
 }

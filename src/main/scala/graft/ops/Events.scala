@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.{Q, Query}
 
 /** Event-stream operators over the `events` fixture: time-bucketed
   * aggregation, gap-based sessionization expressed relationally
@@ -16,7 +17,6 @@ import org.apache.spark.sql.types.DecimalType
   * engine timestamp types.
   */
 object Events {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   /** Tumbling-window counts per event type (1-hour buckets on epoch
@@ -279,21 +279,8 @@ object Events {
       .orderBy("hour_bucket")
   }
 
-  def queries: Map[String, Q] = Map(
-    "events_hourly_distinct" -> eventsHourlyDistinct,
-    "events_transitions" -> eventsTransitions,
-    "events_retention" -> eventsRetention,
-    "events_anomaly" -> eventsAnomaly,
-    "events_window_counts" -> eventsWindowCounts,
-    "events_sessions" -> eventsSessions,
-    "events_json_extract" -> eventsJsonExtract,
-    "events_asof_join" -> eventsAsofJoin,
-    "events_funnel" -> eventsFunnel,
-    "events_range_join" -> eventsRangeJoin
-  )
-
-  def oracles: Map[String, String] = Map(
-    "events_hourly_distinct" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("events_hourly_distinct", eventsHourlyDistinct,
       s"""WITH b AS (
          |  SELECT epoch_us(ts) // 3600000000 AS hour_bucket, user_id,
          |    ${Dedup.hex12ValSql("md5('lc|' || CAST(user_id AS VARCHAR))", 1)} % 4096 AS bucket
@@ -307,8 +294,8 @@ object Events {
          |  CASE WHEN occupied < 4096 THEN
          |    CAST(floor(-1.0 * 4096 * ln(1.0 - CAST(occupied AS DOUBLE) / 4096) * 1000) AS BIGINT)
          |  ELSE NULL END AS est_milli
-         |FROM g ORDER BY hour_bucket""".stripMargin,
-    "events_transitions" ->
+         |FROM g ORDER BY hour_bucket""".stripMargin),
+    Query("events_transitions", eventsTransitions,
       """WITH t AS (
         |  SELECT user_id, event_id, event_type,
         |    lead(event_type) OVER (PARTITION BY user_id
@@ -319,8 +306,8 @@ object Events {
         |  FROM t WHERE next_type IS NOT NULL GROUP BY event_type, next_type),
         |s AS (SELECT *, CAST(sum(n) OVER (PARTITION BY from_type) AS BIGINT) AS ft FROM g)
         |SELECT from_type, to_type, n, CAST(n * 1000000 // ft AS BIGINT) AS share_micro
-        |FROM s ORDER BY from_type, to_type""".stripMargin,
-    "events_retention" ->
+        |FROM s ORDER BY from_type, to_type""".stripMargin),
+    Query("events_retention", eventsRetention,
       """WITH act AS (
         |  SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day FROM events),
         |c AS (SELECT user_id, min(day) AS cohort_day FROM act GROUP BY user_id)
@@ -328,8 +315,8 @@ object Events {
         |  CAST(count(DISTINCT a.user_id) AS BIGINT) AS n_users
         |FROM act a JOIN c USING (user_id)
         |GROUP BY c.cohort_day, a.day - c.cohort_day
-        |ORDER BY cohort_day, day_offset""".stripMargin,
-    "events_anomaly" ->
+        |ORDER BY cohort_day, day_offset""".stripMargin),
+    Query("events_anomaly", eventsAnomaly,
       """WITH h AS (
         |  SELECT event_type, epoch_us(ts) // 3600000000 AS hour_bucket,
         |    CAST(count(*) AS BIGINT) AS n
@@ -342,14 +329,14 @@ object Events {
         |FROM h JOIN s USING (event_type)
         |WHERE h.n * s.H > s.S
         |  AND (h.n * s.H - s.S) * (h.n * s.H - s.S) > 9 * (s.H * s.SS - s.S * s.S)
-        |ORDER BY h.event_type, h.hour_bucket""".stripMargin,
-    "events_window_counts" ->
+        |ORDER BY h.event_type, h.hour_bucket""".stripMargin),
+    Query("events_window_counts", eventsWindowCounts,
       """SELECT epoch_us(ts) // 3600000000 AS hour_bucket, event_type,
         |  CAST(count(*) AS BIGINT) AS n_events,
         |  CAST(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS VARCHAR) AS total_value,
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-        |FROM events GROUP BY 1, 2 ORDER BY hour_bucket, event_type""".stripMargin,
-    "events_sessions" ->
+        |FROM events GROUP BY 1, 2 ORDER BY hour_bucket, event_type""".stripMargin),
+    Query("events_sessions", eventsSessions,
       """WITH t AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
         |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_ts
@@ -368,15 +355,15 @@ object Events {
         |SELECT user_id, CAST(max(session_id) AS BIGINT) AS n_sessions,
         |  max(n_events) AS max_session_events,
         |  CAST(sum(n_events) AS BIGINT) AS n_total_events
-        |FROM per_session GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "events_json_extract" ->
+        |FROM per_session GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Query("events_json_extract", eventsJsonExtract,
       """SELECT event_type,
         |  CAST(count(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS n_with_k,
         |  CAST(min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS k_min,
         |  CAST(max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS k_max,
         |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS k_sum
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "events_asof_join" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Query("events_asof_join", eventsAsofJoin,
       """WITH t AS (
         |  SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us,
         |    max(CASE WHEN event_type = 'click' THEN epoch_us(ts) END)
@@ -386,11 +373,11 @@ object Events {
         |SELECT user_id, event_id, ts_us, prev_click_ts,
         |       ts_us - prev_click_ts AS micros_since_click
         |FROM t WHERE event_type = 'purchase'
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
     // the oracle replays the range join directly (nested loop is fine
     // at oracle scale); the Spark side's bucket decomposition must
     // produce the same pairs
-    "events_range_join" ->
+    Query("events_range_join", eventsRangeJoin,
       """WITH e AS (SELECT epoch_us(ts) AS ts_us, user_id FROM events),
         |b AS (SELECT min(ts_us) AS t0, max(ts_us) AS t1 FROM e),
         |w AS (
@@ -404,8 +391,8 @@ object Events {
         |  FROM w JOIN e ON e.ts_us >= w.w_start AND e.ts_us < w.w_end)
         |SELECT window_id, w_start, w_end, CAST(count(*) AS BIGINT) AS n_events,
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-        |FROM j GROUP BY 1, 2, 3 ORDER BY window_id""".stripMargin,
-    "events_funnel" ->
+        |FROM j GROUP BY 1, 2, 3 ORDER BY window_id""".stripMargin),
+    Query("events_funnel", eventsFunnel,
       """WITH per_user AS (
         |  SELECT user_id,
         |    min(CASE WHEN event_type = 'click' THEN epoch_us(ts) END) AS first_click,
@@ -418,6 +405,6 @@ object Events {
         |  CAST(sum(CASE WHEN n_purchases > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_buyers,
         |  CAST(sum(CASE WHEN first_click IS NOT NULL AND last_purchase > first_click
         |            THEN 1 ELSE 0 END) AS BIGINT) AS n_converted
-        |FROM per_user""".stripMargin
+        |FROM per_user""".stripMargin)
   )
 }

@@ -490,9 +490,18 @@ object Generations {
     * clear of its `gbatch-<gen>` replay cleanup); the stats written
     * straight from the batch aggregate, with no ledger (a stream seeds
     * one from them on adoption); then each relation's `rewritten` step
-    * (the postings' vocab derivation).
+    * (the postings' vocab derivation). A rebuild onto a used dir first
+    * drops the generation state of the index it replaces — tombstones
+    * (which would kill the rebuilt generation −1 rows), ledger,
+    * increments, staged batches and markers — so it starts a fresh
+    * history; one dir holds one index.
     */
   def build(kind: Kind, docs: DataFrame, dir: String): Unit = {
+    val fs = fsFor(docs.sparkSession, dir)
+    (Seq("tombstones", "_gen_base", "_last_batch", "_stream_id", "_asof_horizon") ++
+      kind.increments.map(_.name) ++ kind.stats.map(_.ledger.name))
+      .foreach(n => fs.delete(new Path(s"$dir/$n"), true))
+    Option(fs.globStatus(new Path(s"$dir/_stage_*"))).getOrElse(Array.empty).foreach(f => fs.delete(f.getPath, true))
     val scalars = writeBatch(kind, docs, kind.persist(false), increments = false) { (name, pc, df) =>
       writeRelation(df, s"$dir/$name", pc, "overwrite")
     }

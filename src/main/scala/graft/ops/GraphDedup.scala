@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
+import graft.Query.EveryRun
 
 /** Cluster-level dedup: connected components over the near-duplicate
   * pair graph.
@@ -25,7 +27,6 @@ import org.apache.spark.sql.functions._
   * successive crawl snapshots, defeats it).
   */
 object GraphDedup {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   /** Connected components of an undirected graph given as (src, dst)
@@ -1024,13 +1025,6 @@ object GraphDedup {
 
   val dedupSavings: Q = (s, d) => dedupSavingsFrom(documents(s, d))
 
-  def queries: Map[String, Q] = Map(
-    "dedup_clusters" -> dedupClusters,
-    "dedup_clusters_incremental" -> dedupClustersIncremental,
-    "dedup_cluster_reps_quality" -> dedupClusterRepsQuality,
-    "dedup_savings" -> dedupSavings
-  )
-
   /** DuckDB oracle: the same verified-pair CTE chain as
     * dedup_minhash_lsh, then components via a recursive reachability
     * walk (min reachable id = cluster id). The recursion enumerates
@@ -1039,11 +1033,13 @@ object GraphDedup {
     * for an oracle over fixture-scale components it is the simplest
     * correct spelling.
     */
-  def oracles: Map[String, String] = Map(
-    // the incremental route must equal the full clustering bit for bit
-    "dedup_clusters_incremental" -> clustersOracle,
-    "dedup_clusters" -> clustersOracle,
-    "dedup_savings" ->
+  lazy val registry: Seq[Query] = Seq(
+    // the incremental route must equal the full clustering bit for bit;
+    // every run builds "yesterday's" component map inline before the
+    // increment-sized merge it exists to demonstrate
+    Query("dedup_clusters_incremental", dedupClustersIncremental, clustersOracle, build = Some(EveryRun)),
+    Query("dedup_clusters", dedupClusters, clustersOracle),
+    Query("dedup_savings", dedupSavings,
       s"""$clusterChainSql,
          |sv AS (
          |  SELECT d.source,
@@ -1059,8 +1055,8 @@ object GraphDedup {
          |  FROM sv GROUP BY source)
          |SELECT source, n_docs, n_kept, tokens, kept_tokens,
          |  CAST(floor((tokens - kept_tokens) * 1000000.0 / tokens) AS BIGINT) AS savings_micro
-         |FROM ag ORDER BY source""".stripMargin,
-    "dedup_cluster_reps_quality" ->
+         |FROM ag ORDER BY source""".stripMargin),
+    Query("dedup_cluster_reps_quality", dedupClusterRepsQuality,
       s"""$clusterChainSql,
          |${Pipeline.featuresSql.stripPrefix("WITH ")},
          |jo AS (
@@ -1074,7 +1070,7 @@ object GraphDedup {
          |SELECT s.cluster_id, s.cluster_size, r.doc_id AS rep_id,
          |  CAST(r.score_micro AS BIGINT) AS rep_score_micro
          |FROM sz s JOIN rk r ON r.cluster_id = s.cluster_id AND r.rn = 1
-         |ORDER BY s.cluster_id""".stripMargin
+         |ORDER BY s.cluster_id""".stripMargin)
   )
 
   private[ops] lazy val clusterChainSql: String =

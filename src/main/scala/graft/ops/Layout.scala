@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
 
 /** Multi-dimensional data layout: Z-ORDER (Morton) keys for
   * data-skipping file organization — the technique behind Delta's
@@ -25,7 +26,6 @@ import org.apache.spark.sql.functions._
   * wild value cannot corrupt a neighbor's interleave.
   */
 object Layout {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   private val bitsPerDim = 21
@@ -80,14 +80,10 @@ object Layout {
       )
       .orderBy("doc_id")
 
-  def queries: Map[String, Q] = Map(
-    "zorder_key" -> zorderKeyQ
-  )
-
-  def oracles: Map[String, String] = Map(
-    "zorder_key" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("zorder_key", zorderKeyQ,
       s"""SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars,
          |  CAST(${zorderDuckSql("doc_id", "n_chars")} AS BIGINT) AS zkey
-         |FROM documents ORDER BY doc_id""".stripMargin
+         |FROM documents ORDER BY doc_id""".stripMargin)
   )
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
 
 /** Data-mixture operators: deterministic stratified sampling — the
   * "mix 30% web, 2× books, 0.5× low-resource langs" step every
@@ -17,7 +18,6 @@ import org.apache.spark.sql.functions._
   * `df.sample()` does NOT have, being partition-layout-dependent).
   */
 object Mixture {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   private val drawBits = 48
@@ -530,20 +530,6 @@ object Mixture {
       .orderBy("lang", "copy")
   }
 
-  def queries: Map[String, Q] = Map(
-    "mixture_sample" -> mixtureSample,
-    "weighted_sample" -> weightedSampleQ,
-    "weighted_sample_stratified" -> weightedSampleStratifiedQ,
-    "mixture_accounting" -> mixtureAccounting,
-    "mixture_plan" -> mixturePlanQ,
-    "mixture_plan_temperature" -> mixturePlanTemperatureQ,
-    "holdout_split" -> holdoutSplitQ,
-    "holdout_cluster_split" -> holdoutClusterSplitQ,
-    "holdout_leakage" -> holdoutLeakageQ,
-    "epoch_plan" -> epochPlanQ,
-    "epoch_expand" -> epochExpandQ
-  )
-
   private[ops] def drawSql: String =
     "CAST(" + Dedup.hex12ValSql("md5('mix|' || CAST(doc_id AS VARCHAR))", 1) + " AS BIGINT)"
 
@@ -574,14 +560,14 @@ object Mixture {
        |    CAST(epochs * n_tokens + n_tokens * remainder_rate_bps // 10000 AS BIGINT) AS planned_tokens
        |  FROM ep_r)""".stripMargin
 
-  def oracles: Map[String, String] = Map(
-    "epoch_plan" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("epoch_plan", epochPlanQ,
       s"""WITH $epochPlanSql
          |SELECT stratum, n_docs, n_tokens, weight_bps, desired_tokens, epochs,
          |  remainder_rate_bps, planned_tokens,
          |  CAST(desired_tokens - planned_tokens AS BIGINT) AS shortfall_tokens
-         |FROM ep ORDER BY stratum""".stripMargin,
-    "epoch_expand" -> {
+         |FROM ep ORDER BY stratum""".stripMargin),
+    Query("epoch_expand", epochExpandQ, {
       val draw =
         "CAST(" + Dedup.hex12ValSql("md5('epoch|' || CAST(d.doc_id AS VARCHAR))", 1) + " AS BIGINT)"
       s"""WITH $epochPlanSql,
@@ -596,8 +582,8 @@ object Mixture {
          |  CAST(sum(n_tokens) AS BIGINT) AS tokens,
          |  CAST(bit_xor(doc_id) AS BIGINT) AS doc_xor
          |FROM x GROUP BY lang, copy ORDER BY lang, copy""".stripMargin
-    },
-    "holdout_leakage" -> {
+    }),
+    Query("holdout_leakage", holdoutLeakageQ, {
       def splitSql(c: String) = {
         val draw =
           "CAST(" + Dedup.hex12ValSql(s"md5('split|' || CAST($c AS VARCHAR))", 1) + " AS BIGINT)"
@@ -644,8 +630,8 @@ object Mixture {
          |  CAST(count(*) AS BIGINT) AS n_pairs,
          |  max(jaccard) AS max_jaccard
          |FROM leaks GROUP BY eval_split ORDER BY eval_split""".stripMargin
-    },
-    "holdout_cluster_split" -> {
+    }),
+    Query("holdout_cluster_split", holdoutClusterSplitQ, {
       val draw =
         "CAST(" + Dedup.hex12ValSql("md5('split|' || CAST(cluster_id AS VARCHAR))", 1) + " AS BIGINT)"
       s"""${GraphDedup.clusterChainSql},
@@ -662,8 +648,8 @@ object Mixture {
          |  CAST(sum(n_tokens) AS BIGINT) AS tokens,
          |  CAST(bit_xor(doc_id) AS BIGINT) AS doc_xor
          |FROM spl GROUP BY split ORDER BY split""".stripMargin
-    },
-    "holdout_split" -> {
+    }),
+    Query("holdout_split", holdoutSplitQ, {
       val draw =
         "CAST(" + Dedup.hex12ValSql("md5('split|' || CAST(doc_id AS VARCHAR))", 1) + " AS BIGINT)"
       s"""WITH a AS (
@@ -678,8 +664,8 @@ object Mixture {
          |  CAST(sum(n_tokens) AS BIGINT) AS tokens,
          |  CAST(bit_xor(doc_id) AS BIGINT) AS doc_xor
          |FROM a GROUP BY split ORDER BY split""".stripMargin
-    },
-    "mixture_plan_temperature" -> {
+    }),
+    Query("mixture_plan_temperature", mixturePlanTemperatureQ, {
       val inv = 1.0 / planTemperature
       s"""WITH b AS (
          |  SELECT lang AS stratum, CAST(count(*) AS BIGINT) AS n_docs,
@@ -695,8 +681,8 @@ object Mixture {
          |  CAST(least(10000, ($temperatureBudget * w_milli // w_total) * 10000 // n_tokens)
          |       AS BIGINT) AS rate_bps
          |FROM t ORDER BY stratum""".stripMargin
-    },
-    "mixture_plan" ->
+    }),
+    Query("mixture_plan", mixturePlanQ,
       s"""WITH t AS (
          |  SELECT lang AS stratum, CAST(count(*) AS BIGINT) AS n_docs,
          |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
@@ -704,13 +690,13 @@ object Mixture {
          |SELECT stratum, n_docs, n_tokens,
          |  CAST(least(10000, $planBudget * 10000 // n_tokens) AS BIGINT) AS rate_bps,
          |  CAST(n_tokens * least(10000, $planBudget * 10000 // n_tokens) // 10000 AS BIGINT) AS exp_kept_tokens
-         |FROM t ORDER BY stratum""".stripMargin,
-    "mixture_sample" ->
+         |FROM t ORDER BY stratum""".stripMargin),
+    Query("mixture_sample", mixtureSample,
       s"""SELECT doc_id, lang, $drawSql AS draw
          |FROM documents
          |WHERE $drawSql < $thresholdSql
-         |ORDER BY doc_id""".stripMargin,
-    "weighted_sample" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("weighted_sample", weightedSampleQ,
       s"""WITH ws AS (
          |  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
          |    $drawSql AS draw
@@ -725,8 +711,8 @@ object Mixture {
          |    CAST(row_number() OVER (ORDER BY key_micro DESC, doc_id ASC) AS BIGINT) AS rank
          |  FROM wk)
          |SELECT rank, doc_id, n_tokens, key_micro
-         |FROM wr WHERE rank <= 100 ORDER BY rank""".stripMargin,
-    "weighted_sample_stratified" ->
+         |FROM wr WHERE rank <= 100 ORDER BY rank""".stripMargin),
+    Query("weighted_sample_stratified", weightedSampleStratifiedQ,
       s"""WITH ws AS (
          |  SELECT doc_id, lang, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
          |    $drawSql AS draw
@@ -742,8 +728,8 @@ object Mixture {
          |                            ORDER BY key_micro DESC, doc_id ASC) AS BIGINT) AS rank
          |  FROM wk)
          |SELECT lang, rank, doc_id, n_tokens, key_micro
-         |FROM wr WHERE rank <= 20 ORDER BY lang, rank""".stripMargin,
-    "mixture_accounting" ->
+         |FROM wr WHERE rank <= 20 ORDER BY lang, rank""".stripMargin),
+    Query("mixture_accounting", mixtureAccounting,
       s"""WITH kept AS (
          |  SELECT lang FROM documents WHERE $drawSql < $thresholdSql),
          |tot AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_total FROM documents GROUP BY lang),
@@ -752,6 +738,6 @@ object Mixture {
          |  CAST(floor(coalesce(k.n_kept, 0) * 10000.0 / t.n_total) AS BIGINT) AS kept_bps,
          |  CAST(CASE WHEN t.lang = 'en' THEN 10000 ELSE ${(fixtureDefault * 10000).toLong} END AS BIGINT) AS planned_bps
          |FROM tot t LEFT JOIN k ON k.lang = t.lang
-         |ORDER BY t.lang""".stripMargin
+         |ORDER BY t.lang""".stripMargin)
   )
 }

@@ -5,13 +5,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.core.{ColumnMeta, KeyColumnMeta, KeyType, LiveJdbc, PartitionPlanner, PlanBuilder, GenericJdbcDialect}
 import graft.sync.FileStateSync
+import graft.{Q, Query}
+import graft.Query.EveryRun
 
 /** Data-movement operator queries (SURVEY.md §2.D): the bin-packed
   * partition-parallel read, the end-to-end migration plan stream, and
   * the incremental file-state merge.
   */
 object Movement {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   /** Partition-parallel read via the bin-packing planner: per-year row
@@ -398,19 +399,6 @@ object Movement {
     }
   }
 
-  def queries: Map[String, Q] = Map(
-    "skew_report" -> skewReportQ,
-    "parallel_read_union" -> parallelReadUnion,
-    "migration_plan" -> migrationPlan,
-    "live_migration" -> liveMigration,
-    "file_state_merge" -> fileStateMerge,
-    "file_listing" -> fileListing,
-    "jsonl_ingest" -> jsonlIngest,
-    "jsonl_repair" -> jsonlRepair,
-    "partition_plan" -> partitionPlan,
-    "fk_harmonization_plan" -> fkHarmonizationPlan
-  )
-
   private def liveMigrationOracle: String = {
     val rows = LiveJdbc
       .plan(liveCols, fixtureKeyMeta)
@@ -420,8 +408,8 @@ object Movement {
        |FROM (VALUES $rows) AS t(ord, stmt, status) ORDER BY ord, stmt""".stripMargin
   }
 
-  def oracles: Map[String, String] = Map(
-    "skew_report" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("skew_report", skewReportQ,
       """WITH c AS (
         |  SELECT CAST(o_custkey AS VARCHAR) AS key, CAST(count(*) AS BIGINT) AS n
         |  FROM orders GROUP BY 1),
@@ -433,45 +421,45 @@ object Movement {
         |  CAST(r.n * 1000000 // t.n_rows AS BIGINT) AS share_micro,
         |  CAST(CASE WHEN r.n * 1000000 // t.n_rows >= 10000 THEN 1 ELSE 0 END AS BIGINT)
         |    AS salt_recommended
-        |FROM r, t ORDER BY rank""".stripMargin,
-    "parallel_read_union" ->
+        |FROM r, t ORDER BY rank""".stripMargin),
+    Query("parallel_read_union", parallelReadUnion,
       """SELECT CAST(count(*) AS BIGINT) AS n_rows,
         |  CAST(count(DISTINCT o_orderkey) AS BIGINT) AS n_keys,
         |  CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS VARCHAR) AS total
-        |FROM orders""".stripMargin,
-    "migration_plan" -> migrationPlanOracle,
-    "live_migration" -> liveMigrationOracle,
-    "partition_plan" -> pinnedOracle(
+        |FROM orders""".stripMargin),
+    Query("migration_plan", migrationPlan, migrationPlanOracle),
+    Query("live_migration", liveMigration, liveMigrationOracle),
+    Query("partition_plan", partitionPlan, pinnedOracle(
       partitionPlanRows,
       "bin_id, part_name, n_rows",
       "CAST(bin_id AS INTEGER) AS bin_id, part_name, CAST(n_rows AS BIGINT) AS n_rows"
-    ),
-    "fk_harmonization_plan" -> pinnedOracle(
+    )),
+    Query("fk_harmonization_plan", fkHarmonizationPlan, pinnedOracle(
       fkPlanRows,
       "step, stmt",
       "CAST(step AS INTEGER) AS step, stmt"
-    ),
-    "file_listing" ->
+    )),
+    Query("file_listing", fileListing,
       """SELECT list_extract(string_split(file, '/'), -1) AS file_name
         |FROM glob('/root/testdata/sf0.01/*.parquet')
-        |ORDER BY file_name""".stripMargin,
+        |ORDER BY file_name""".stripMargin),
     // the oracle never touches the JSONL: the roundtrip + quarantine
     // must land exactly back on the parquet table (3 = injected lines)
-    "jsonl_ingest" ->
+    Query("jsonl_ingest", jsonlIngest,
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(len(text)) AS BIGINT) AS n_chars,
         |  CAST(bit_xor(doc_id) AS BIGINT) AS id_xor,
         |  CAST(3 AS BIGINT) AS n_corrupt
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin, build = Some(EveryRun)),
     // repair must restore the BOM-damaged docs exactly (full-table
     // stats again) leaving only the 2 unfixable lines quarantined
-    "jsonl_repair" ->
+    Query("jsonl_repair", jsonlRepair,
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(len(text)) AS BIGINT) AS n_chars,
         |  CAST(bit_xor(doc_id) AS BIGINT) AS id_xor,
         |  CAST(2 AS BIGINT) AS n_residue
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "file_state_merge" ->
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin, build = Some(EveryRun)),
+    Query("file_state_merge", fileStateMerge,
       s"""WITH listing AS (
          |  SELECT source || '/' || CAST(doc_id AS VARCHAR) AS file_name,
          |         n_chars AS last_modified
@@ -490,6 +478,6 @@ object Movement {
          |       WHEN s.status <> '${FileStateSync.StatusDone}' THEN '${FileStateSync.StatusUpdate}'
          |       ELSE '${FileStateSync.StatusDone}' END AS status
          |FROM listing l FULL JOIN state s ON l.file_name = s.file_name
-         |ORDER BY file_name""".stripMargin
+         |ORDER BY file_name""".stripMargin)
   )
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
 
 /** Multimodal-column plumbing: image/audio/video payloads are opaque
   * `BinaryType` columns with typed metadata. The Spark-side machinery
@@ -20,7 +21,6 @@ import org.apache.spark.sql.functions._
   * UDF batch would.
   */
 object Multimodal {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   /** A decoded media item: dimensions + a small feature vector. */
@@ -1024,33 +1024,14 @@ object Multimodal {
       .orderBy("doc_id")
   }
 
-  def queries: Map[String, Q] = Map(
-    "multimodal_meta" -> multimodalMeta,
-    "multimodal_frame_sample" -> multimodalFrameSample,
-    "multimodal_decode" -> multimodalDecode,
-    "multimodal_pixel_stats" -> multimodalPixelStats,
-    "multimodal_resize" -> multimodalResize,
-    "multimodal_audio_stats" -> multimodalAudioStats,
-    "multimodal_audio_decode" -> multimodalAudioDecode,
-    "multimodal_video_decode" -> multimodalVideoDecode,
-    "multimodal_video_frames" -> multimodalVideoFrames,
-    "multimodal_sniff" -> multimodalSniff,
-    "multimodal_mixed_decode" -> multimodalMixedDecode,
-    "multimodal_quarantine" -> multimodalQuarantine,
-    "multimodal_dhash" -> multimodalDhash,
-    "multimodal_image_dups" -> multimodalImageDups,
-    "multimodal_audio_fingerprint" -> multimodalAudioFingerprint,
-    "multimodal_video_checksum" -> multimodalVideoChecksum
-  )
-
-  def oracles: Map[String, String] = Map(
-    "multimodal_meta" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("multimodal_meta", multimodalMeta,
       """SELECT doc_id,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
         |  md5(text) AS content_md5,
         |  hex(encode(substr(text, 1, 8))) AS head_hex
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "multimodal_frame_sample" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("multimodal_frame_sample", multimodalFrameSample,
       s"""WITH f AS (
          |  SELECT doc_id, text,
          |         unnest(generate_series(0, CAST(ceil(length(text) / $frameChars.0) AS INT) - 1)) AS frame_idx
@@ -1058,22 +1039,22 @@ object Multimodal {
          |SELECT doc_id, CAST(frame_idx AS BIGINT) AS frame_idx,
          |       md5(substr(text, frame_idx * $frameChars + 1, $frameChars)) AS frame_md5
          |FROM f WHERE frame_idx % $sampleEveryNth = 0
-         |ORDER BY doc_id, frame_idx""".stripMargin,
+         |ORDER BY doc_id, frame_idx""".stripMargin),
     // the oracle recomputes the formula dims; Spark must recover them
     // from real PNG bytes via javax.imageio (TYPE_3BYTE_BGR -> 3
     // channels, single-frame PNG -> 1)
-    "multimodal_decode" ->
+    Query("multimodal_decode", multimodalDecode,
       """SELECT doc_id,
         |  CAST(16 + doc_id % 32 AS INT) AS img_width,
         |  CAST(16 + doc_id % 17 AS INT) AS img_height,
         |  CAST(3 AS INT) AS channels,
         |  CAST(1 AS INT) AS n_frames
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // the oracle recomputes per-channel sums arithmetically over the
     // (x, y) grid — Spark must recover them from real PNG bytes via a
     // full AWT raster decode (pixel(x,y): r=v, g=255-v, b=(v*7)%256
     // for v=(doc_id + x*31 + y*17)%256, the syntheticPng formula)
-    "multimodal_pixel_stats" ->
+    Query("multimodal_pixel_stats", multimodalPixelStats,
       """WITH p AS (
         |  SELECT doc_id,
         |         CAST(16 + doc_id % 32 AS BIGINT) AS w,
@@ -1087,11 +1068,11 @@ object Multimodal {
         |  CAST(sum(v) AS BIGINT) AS sum_r,
         |  CAST(sum(255 - v) AS BIGINT) AS sum_g,
         |  CAST(sum((v * 7) % 256) AS BIGINT) AS sum_b
-        |FROM px GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM px GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // the oracle recomputes the integer box-fit (24×20) from the
     // formula dims; Spark must produce a REAL resized PNG and report
     // the dimensions decoded from the OUTPUT bytes
-    "multimodal_resize" ->
+    Query("multimodal_resize", multimodalResize,
       """WITH p AS (
         |  SELECT doc_id,
         |         CAST(16 + doc_id % 32 AS INT) AS w,
@@ -1104,12 +1085,12 @@ object Multimodal {
         |  CAST(CASE WHEN w <= 24 AND h <= 20 THEN h
         |            WHEN w * 20 <= h * 24 THEN 20
         |            ELSE greatest(1, (h * 24) // w) END AS INT) AS out_height
-        |FROM p ORDER BY doc_id""".stripMargin,
+        |FROM p ORDER BY doc_id""".stripMargin),
     // the oracle reassembles each 16-bit little-endian signed sample
     // from the byte formula b(i)=(doc_id + i*131)%256; Spark must
     // recover the stats from real RIFF/WAVE bytes through the full
     // AudioInputStream PCM read
-    "multimodal_audio_stats" ->
+    Query("multimodal_audio_stats", multimodalAudioStats,
       """WITH p AS (
         |  SELECT doc_id,
         |         CAST(1 + doc_id % 2 AS BIGINT) AS ch,
@@ -1129,40 +1110,40 @@ object Multimodal {
         |  CAST(sum(val) AS BIGINT) AS pcm_sum,
         |  CAST(min(val) AS INT) AS pcm_min,
         |  CAST(max(val) AS INT) AS pcm_max
-        |FROM v GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM v GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // the oracle recomputes the audio formulas; Spark must recover
     // them from real RIFF/WAVE bytes via javax.sound.sampled
-    "multimodal_audio_decode" ->
+    Query("multimodal_audio_decode", multimodalAudioDecode,
       """SELECT doc_id,
         |  CAST(8000 * (1 + doc_id % 3) AS INT) AS sample_rate,
         |  CAST(1 + doc_id % 2 AS INT) AS audio_channels,
         |  CAST(16 AS INT) AS bits_per_sample,
         |  CAST(64 + doc_id % 128 AS BIGINT) AS n_audio_frames
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // the oracle recomputes the video formulas; Spark must recover
     // them by walking a real RIFF/AVI chunk tree to the avih header
-    "multimodal_video_decode" ->
+    Query("multimodal_video_decode", multimodalVideoDecode,
       """SELECT doc_id,
         |  CAST(16 * (2 + doc_id % 6) AS INT) AS vid_width,
         |  CAST(16 * (1 + doc_id % 4) AS INT) AS vid_height,
         |  CAST(8 + doc_id % 24 AS INT) AS n_video_frames,
         |  CAST(10000 * (1 + doc_id % 5) AS INT) AS micro_sec_per_frame
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // the oracle recomputes sampled frame offsets from the container's
     // deterministic layout: 296-byte preamble (12 RIFF + 72 JUNK +
     // 200 hdrl + 12 movi list header), then 32 bytes per frame chunk
     // (8-byte header + 24-byte data), data 8 bytes into the chunk
-    "multimodal_video_frames" ->
+    Query("multimodal_video_frames", multimodalVideoFrames,
       """SELECT doc_id,
         |  CAST(u.i AS INT) AS frame_idx,
         |  CAST(304 + 32 * u.i AS BIGINT) AS frame_offset,
         |  CAST(24 AS INT) AS frame_size
         |FROM documents, UNNEST(range(0, CAST(8 + doc_id % 24 AS BIGINT))) AS u(i)
         |WHERE u.i % 4 = 0
-        |ORDER BY doc_id, frame_idx""".stripMargin,
+        |ORDER BY doc_id, frame_idx""".stripMargin),
     // expected mime is formula-derived (id mod 4 picks the synthesized
     // container); Spark must classify genuine PNG/WAV/AVI bytes by magic
-    "multimodal_sniff" ->
+    Query("multimodal_sniff", multimodalSniff,
       """SELECT doc_id,
         |  CASE doc_id % 4
         |    WHEN 0 THEN 'image/png'
@@ -1170,11 +1151,11 @@ object Multimodal {
         |    WHEN 2 THEN 'video/avi'
         |    ELSE 'application/octet-stream'
         |  END AS mime
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // one gate over the whole mixed-lake pass: the oracle recomputes
     // each modality's populated fields and expects NULL elsewhere, so
     // a misrouted row or a wrong decoder answer both fail
-    "multimodal_mixed_decode" ->
+    Query("multimodal_mixed_decode", multimodalMixedDecode,
       """SELECT doc_id,
         |  CASE doc_id % 4
         |    WHEN 0 THEN 'image/png'
@@ -1188,12 +1169,12 @@ object Multimodal {
         |  CASE WHEN doc_id % 4 = 1 THEN CAST(64 + doc_id % 128 AS BIGINT) END AS n_audio_frames,
         |  CASE WHEN doc_id % 4 = 2 THEN CAST(16 * (2 + doc_id % 6) AS INT) END AS vid_width,
         |  CASE WHEN doc_id % 4 = 2 THEN CAST(8 + doc_id % 24 AS INT) END AS n_video_frames
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // torn payloads (id % 7 = 5, first 12 bytes) keep their magic, so
     // mime is still modality-derived; quarantined = routed-but-failed,
     // which the oracle derives from the two formulas alone (torn TEXT
     // payloads are octet-stream — unrecognized, never quarantined)
-    "multimodal_quarantine" ->
+    Query("multimodal_quarantine", multimodalQuarantine,
       """SELECT doc_id,
         |  CASE doc_id % 4
         |    WHEN 0 THEN 'image/png'
@@ -1202,13 +1183,13 @@ object Multimodal {
         |    ELSE 'application/octet-stream'
         |  END AS mime,
         |  CAST(CASE WHEN doc_id % 7 = 5 AND doc_id % 4 <> 3 THEN 1 ELSE 0 END AS INT) AS quarantined
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // the oracle recomputes every 9×8 grid sample and comparison bit
     // arithmetically: gray(x,y) = (v + (255-v) + v*7%256)/3 =
     // (255 + v*7%256)//3 for v=(doc_id + x*31 + y*17)%256, sampled at
     // x_k = k*w//9, y_r = r*h//8 — Spark must recover the same bits
     // from the DECODED raster of real PNG bytes
-    "multimodal_dhash" ->
+    Query("multimodal_dhash", multimodalDhash,
       """WITH p AS (
         |  SELECT doc_id,
         |         CAST(16 + doc_id % 32 AS BIGINT) AS w,
@@ -1225,13 +1206,13 @@ object Multimodal {
         |SELECT doc_id,
         |  CAST(sum(CASE WHEN r < 4 THEN bit * (CAST(1 AS BIGINT) << (r * 8 + k)) ELSE 0 END) AS BIGINT) AS dhash_lo,
         |  CAST(sum(CASE WHEN r >= 4 THEN bit * (CAST(1 AS BIGINT) << ((r - 4) * 8 + k)) ELSE 0 END) AS BIGINT) AS dhash_hi
-        |FROM b GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM b GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // same hash arithmetic with every image re-synthesized from
     // doc_id % 250, then the identical self-join — content-identical
     // rasters (ids 250 apart) MUST collide, plus whatever genuine
     // fingerprint collisions the corpus carries (both engines compute
     // them identically)
-    "multimodal_image_dups" ->
+    Query("multimodal_image_dups", multimodalImageDups,
       """WITH p AS (
         |  SELECT doc_id, doc_id % 250 AS sid,
         |         CAST(16 + (doc_id % 250) % 32 AS BIGINT) AS w,
@@ -1253,12 +1234,12 @@ object Multimodal {
         |SELECT a.doc_id AS dup_a, b.doc_id AS dup_b
         |FROM hsh a JOIN hsh b
         |  ON a.dhash_lo = b.dhash_lo AND a.dhash_hi = b.dhash_hi AND a.doc_id < b.doc_id
-        |ORDER BY dup_a, dup_b""".stripMargin,
+        |ORDER BY dup_a, dup_b""".stripMargin),
     // the oracle rebuilds every sample from the byte formula, assigns
     // it to its window via the floor-boundary inverse w = (32j+31)//n
     // (≡ the Scala loop's from=⌊w·n/32⌋ bounds), sums |sample| per
     // window and reproduces all 31 rising-energy bits
-    "multimodal_audio_fingerprint" ->
+    Query("multimodal_audio_fingerprint", multimodalAudioFingerprint,
       """WITH p AS (
         |  SELECT doc_id,
         |         CAST(1 + doc_id % 2 AS BIGINT) AS ch,
@@ -1280,11 +1261,11 @@ object Multimodal {
         |  FROM en a JOIN en nxt ON nxt.doc_id = a.doc_id AND nxt.w = a.w + 1
         |  WHERE a.w < 31)
         |SELECT doc_id, CAST(sum(bit * (CAST(1 AS BIGINT) << k)) AS BIGINT) AS audio_fp
-        |FROM b GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM b GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // sampled frame bytes are seed-derived — b(j)=(doc_id·13+i·7+j)%256
     // for frame i — so the oracle recomputes each sampled range's sum;
     // Spark must read the REAL bytes at the directory's offsets
-    "multimodal_video_checksum" ->
+    Query("multimodal_video_checksum", multimodalVideoChecksum,
       """WITH f AS (
         |  SELECT doc_id, u.i AS fi
         |  FROM documents, UNNEST(range(0, CAST(8 + doc_id % 24 AS BIGINT))) AS u(i)
@@ -1293,6 +1274,6 @@ object Multimodal {
         |  SELECT doc_id, fi, (doc_id * 13 + fi * 7 + j.i) % 256 AS bv
         |  FROM f, UNNEST(range(0, 24)) AS j(i))
         |SELECT doc_id, CAST(fi AS INT) AS frame_idx, CAST(sum(bv) AS BIGINT) AS frame_sum
-        |FROM s GROUP BY doc_id, fi ORDER BY doc_id, frame_idx""".stripMargin
+        |FROM s GROUP BY doc_id, fi ORDER BY doc_id, frame_idx""".stripMargin)
   )
 }

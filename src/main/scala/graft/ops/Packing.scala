@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
 
 /** Sequence packing: lay documents end to end into fixed token-budget
   * training sequences — the tokenizer-feed step between curation and
@@ -20,7 +21,6 @@ import org.apache.spark.sql.functions._
   * which is why real pipelines pack per shard.
   */
 object Packing {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   /** Per-doc packing map: (doc, stratum) -> sequence id + offset of
@@ -199,15 +199,8 @@ object Packing {
       maxBatchTokens
     ).orderBy("stratum", "bucket", "batch_idx")
 
-  def queries: Map[String, Q] = Map(
-    "pack_sequences" -> packSequencesQ,
-    "shard_manifest" -> shardManifestQ,
-    "corpus_shuffle" -> corpusShuffleQ,
-    "length_bucket_batches" -> lengthBucketBatchesQ
-  )
-
-  def oracles: Map[String, String] = Map(
-    "pack_sequences" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("pack_sequences", packSequencesQ,
       s"""WITH t AS (
          |  SELECT doc_id, lang AS stratum,
          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
@@ -222,8 +215,8 @@ object Packing {
          |  CAST(CASE WHEN floor((start_offset + n_tokens - 1) / $budget.0)
          |                  > floor(start_offset / $budget.0)
          |       THEN 1 ELSE 0 END AS BIGINT) AS spans_boundary
-         |FROM p ORDER BY doc_id""".stripMargin,
-    "shard_manifest" -> {
+         |FROM p ORDER BY doc_id""".stripMargin),
+    Query("shard_manifest", shardManifestQ, {
       val draw = "CAST(" + Dedup.hex12ValSql("md5('shard|' || CAST(doc_id AS VARCHAR))", 1) + " AS BIGINT)"
       s"""WITH a AS (
          |  SELECT doc_id, $draw % $nShards AS shard,
@@ -234,12 +227,12 @@ object Packing {
          |  CAST(sum(n_tokens) AS BIGINT) AS tokens,
          |  CAST(bit_xor(doc_id) AS BIGINT) AS doc_xor
          |FROM a GROUP BY shard ORDER BY shard""".stripMargin
-    },
-    "corpus_shuffle" -> {
+    }),
+    Query("corpus_shuffle", corpusShuffleQ, {
       val draw = "CAST(" + Dedup.hex12ValSql("md5('shuf|' || CAST(doc_id AS VARCHAR))", 1) + " AS BIGINT)"
       s"SELECT doc_id, $draw AS draw FROM documents ORDER BY draw, doc_id"
-    },
-    "length_bucket_batches" ->
+    }),
+    Query("length_bucket_batches", lengthBucketBatchesQ,
       s"""WITH t AS (
          |  SELECT doc_id, lang AS stratum,
          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
@@ -266,6 +259,6 @@ object Packing {
          |  CAST(n_docs * bucket_pad AS BIGINT) AS padded_tokens,
          |  CAST((n_docs * bucket_pad - sum_tokens) * 1000000 // (n_docs * bucket_pad) AS BIGINT)
          |    AS waste_micro
-         |FROM g ORDER BY stratum, bucket, batch_idx""".stripMargin
+         |FROM g ORDER BY stratum, bucket, batch_idx""".stripMargin)
   )
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
 
 /** Paragraph-structured operators: corpus-wide paragraph dedup and
   * per-document repetition quality signals (the Gopher-rules family).
@@ -16,7 +17,6 @@ import org.apache.spark.sql.functions._
   * grams).
   */
 object Paragraphs {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   private val chunk = 10
@@ -318,12 +318,6 @@ object Paragraphs {
       .orderBy("doc_id")
   }
 
-  def queries: Map[String, Q] = Map(
-    "dedup_paragraph" -> dedupParagraph,
-    "quality_repetition" -> qualityRepetition,
-    "lang_segments" -> langSegments
-  )
-
   /** DuckDB twin of the WordChunks segmentation over any (doc_id,
     * text) source — exposes CTE `p` (doc_id, para_idx, para); shared
     * with the pipeline oracle's paragraph-dedup stage.
@@ -336,8 +330,8 @@ object Paragraphs {
        |           i -> array_to_string(w[(i * $chunk + 1):(i * $chunk + $chunk)], ' '))) AS para
        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM $src))""".stripMargin
 
-  def oracles: Map[String, String] = Map(
-    "lang_segments" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("lang_segments", langSegments,
       s"""WITH ${parasSql("documents")},
          |pr AS (
          |  SELECT doc_id, para_idx,
@@ -357,8 +351,8 @@ object Paragraphs {
          |  FROM sw GROUP BY doc_id)
          |SELECT a.doc_id, d.lang, a.n_paras, a.n_en_paras, a.n_switches,
          |  CAST(CASE WHEN a.n_en_paras > 0 AND a.n_en_paras < a.n_paras THEN 1 ELSE 0 END AS BIGINT) AS mixed
-         |FROM ag a JOIN documents d USING (doc_id) ORDER BY a.doc_id""".stripMargin,
-    "dedup_paragraph" ->
+         |FROM ag a JOIN documents d USING (doc_id) ORDER BY a.doc_id""".stripMargin),
+    Query("dedup_paragraph", dedupParagraph,
       s"""WITH ${parasSql("documents")},
          |r AS (
          |  SELECT doc_id, para_idx, para,
@@ -369,8 +363,8 @@ object Paragraphs {
          |  CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
          |  CAST(count(*) - sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
          |  coalesce(string_agg(para, ' ' ORDER BY para_idx) FILTER (WHERE rn = 1), '') AS kept_text
-         |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "quality_repetition" ->
+         |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("quality_repetition", qualityRepetition,
       s"""WITH base AS (
          |  SELECT doc_id, text, string_split(text, ' ') AS w,
          |    list_transform(generate_series(0, CAST(ceil(len(string_split(text, ' ')) / $chunk.0) AS INT) - 1),
@@ -413,6 +407,6 @@ object Paragraphs {
          |FROM lines l
          |LEFT JOIN top2 t ON t.doc_id = l.doc_id
          |LEFT JOIN dup3 d ON d.doc_id = l.doc_id
-         |ORDER BY l.doc_id""".stripMargin
+         |ORDER BY l.doc_id""".stripMargin)
   )
 }

@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
+import graft.Query.EveryRun
 
 /** The composed training-data pipeline — the operators of this library
   * chained the way a corpus-preparation job actually runs them:
@@ -25,7 +27,6 @@ import org.apache.spark.sql.functions._
   * over the pair graph.
   */
 object Pipeline {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   private val minJaccard = 0.5
@@ -128,8 +129,7 @@ object Pipeline {
     * downstream consumer (measured 12× on the accounting query). This
     * is also the at-scale shape: a 100 TB pipeline CHECKPOINTS each
     * stage's survivor set to the lake (stage outputs are the restart
-    * points and audit artifacts), never one 7-deep lazy plan. Pass
-    * `materialize = false` for the pure composition (plan inspection).
+    * points and audit artifacts), never one 7-deep lazy plan.
     *
     * `seg` picks how the repetition rule and the paragraph-dedup stage
     * see "lines"/"paragraphs": the public default is blank-line blocks
@@ -144,11 +144,10 @@ object Pipeline {
     */
   def stagesFull(
       docs: DataFrame,
-      materialize: Boolean = true,
       seg: Paragraphs.Segmenter = Paragraphs.Segmenter.Delimiter(),
       spanPasses: Int = 1
   ): FullStages = {
-    def pin(df: DataFrame): DataFrame = if (materialize) df.localCheckpoint(true) else df
+    def pin(df: DataFrame): DataFrame = df.localCheckpoint(true)
     // stage 1 — stats quality: bit-identical to TextAnalysis.textStats
     // (pinned like the rest: the stopword-lambda projection is
     // expensive enough that its two consumers beat re-scanning — A/B'd
@@ -205,8 +204,7 @@ object Pipeline {
       if (spanPasses <= 1) Spans.spanRemoval(paraKept, "doc_id", "text")
       else
         Spans
-          .spanRemovalToFixedPoint(paraKept, "doc_id", "text", maxPasses = spanPasses,
-            materialize = materialize)
+          .spanRemovalToFixedPoint(paraKept, "doc_id", "text", maxPasses = spanPasses)
           .cleaned
     val spanKept = pin(paraKept
       .select("doc_id", "lang")
@@ -478,15 +476,6 @@ object Pipeline {
     per.unionByName(anyRow).orderBy("filter")
   }
 
-  def queries: Map[String, Q] = Map(
-    "pipeline_survivors" -> pipelineSurvivors,
-    "pipeline_full" -> pipelineFull,
-    "pipeline_provenance" -> pipelineProvenance,
-    "filter_attribution" -> filterAttribution,
-    "quality_features" -> qualityFeatures,
-    "curriculum_order" -> curriculumOrder
-  )
-
   /** The oracle replays all three stages from the same fragments the
     * standalone operators' oracles use (TextAnalysis quality rule,
     * Dedup shingle/minhash/band CTEs re-sourced from the exact-dedup
@@ -556,10 +545,10 @@ object Pipeline {
        |skl AS (SELECT f.lang, s2.doc_id, s2.text FROM sk s2 JOIN fk f USING (doc_id)),
        |mx AS (SELECT * FROM skl WHERE ${Mixture.drawSql} < ${Mixture.thresholdSql})""".stripMargin
 
-  def oracles: Map[String, String] = {
+  lazy val registry: Seq[Query] = {
     val stop = TextAnalysis.stopList
-    Map(
-      "pipeline_full" ->
+    Seq(
+      Query("pipeline_full", pipelineFull,
         s"""$fullChainSql,
            |a AS (
            |  SELECT lang, CAST(count(*) AS BIGINT) AS n_input,
@@ -582,8 +571,8 @@ object Pipeline {
            |FROM a LEFT JOIN b ON a.lang = b.lang LEFT JOIN c ON a.lang = c.lang
            |LEFT JOIN pg ON a.lang = pg.lang LEFT JOIN sg ON a.lang = sg.lang
            |LEFT JOIN r ON a.lang = r.lang LEFT JOIN m ON a.lang = m.lang
-           |ORDER BY a.lang""".stripMargin,
-      "pipeline_provenance" ->
+           |ORDER BY a.lang""".stripMargin),
+      Query("pipeline_provenance", pipelineProvenance,
         s"""$fullChainSql
            |SELECT t.doc_id, t.lang,
            |  CASE WHEN NOT (t.n_tokens >= 20 AND t.stop_pct BETWEEN 2 AND 60) THEN 'quality'
@@ -594,8 +583,8 @@ object Pipeline {
            |       WHEN t.doc_id NOT IN (SELECT doc_id FROM skl) THEN 'span'
            |       WHEN t.doc_id NOT IN (SELECT doc_id FROM mx) THEN 'mixture'
            |       ELSE 'kept' END AS stage
-           |FROM t ORDER BY t.doc_id""".stripMargin,
-      "filter_attribution" -> {
+           |FROM t ORDER BY t.doc_id""".stripMargin, build = Some(EveryRun)),
+      Query("filter_attribution", filterAttribution, {
         val blocked = Safety.demoBlocklist.map("'" + _ + "'").mkString(",")
         s"""WITH fl AS (
            |  SELECT doc_id, source,
@@ -668,8 +657,8 @@ object Pipeline {
            |  SELECT 'any', CAST(sum(CASE WHEN n_fails >= 1 THEN 1 ELSE 0 END) AS BIGINT),
            |    CAST(sum(CASE WHEN n_fails = 1 THEN 1 ELSE 0 END) AS BIGINT) FROM tot)
            |SELECT * FROM per ORDER BY filter""".stripMargin
-      },
-      "pipeline_survivors" ->
+      }),
+      Query("pipeline_survivors", pipelineSurvivors,
         s"""WITH t AS (
            |  SELECT doc_id, lang, text,
            |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
@@ -712,9 +701,9 @@ object Pipeline {
            |  CAST(coalesce(b.n, 0) AS BIGINT) AS n_exact_survivors,
            |  CAST(coalesce(c.n, 0) AS BIGINT) AS n_final_survivors
            |FROM a LEFT JOIN b ON a.lang = b.lang LEFT JOIN c ON a.lang = c.lang
-           |ORDER BY a.lang""".stripMargin,
-      "quality_features" -> s"$featuresSql\nSELECT * FROM features ORDER BY doc_id",
-      "curriculum_order" -> {
+           |ORDER BY a.lang""".stripMargin),
+      Query("quality_features", qualityFeatures, s"$featuresSql\nSELECT * FROM features ORDER BY doc_id"),
+      Query("curriculum_order", curriculumOrder, {
         val draw =
           "CAST(" + Dedup.hex12ValSql("md5('shard|' || CAST(doc_id AS VARCHAR))", 1) + " AS BIGINT)"
         s"""$featuresSql,
@@ -725,7 +714,7 @@ object Pipeline {
            |  FROM sh)
            |SELECT shard, CAST(rank AS BIGINT) AS rank, doc_id, score_micro
            |FROM rk WHERE rank <= 5 ORDER BY shard, rank""".stripMargin
-      }
+      })
     )
   }
 

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.{Q, Query}
 
 /** Data-profiling aggregations (SURVEY.md §2.E #55-57) — the
   * reference's post_load_optimization analysis queries re-expressed as
@@ -20,7 +21,6 @@ import org.apache.spark.sql.types.DecimalType
   * aggregation, one tiny shuffled row per partition, no second pass.
   */
 object Profiling {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   private val scales = 0 to 6
@@ -267,17 +267,6 @@ object Profiling {
 
   val encodingAdvisorQ: Q = (s, d) => encodingAdvisor(lineitem(s, d), advisorCols)
 
-  def queries: Map[String, Q] = Map(
-    "encoding_advisor" -> encodingAdvisorQ,
-    "profile_quantiles" -> profileQuantiles,
-    "profile_decimal_scale" -> profileDecimalScale,
-    "narrow_double_to_decimal" -> narrowDoubleToDecimal,
-    "narrow_decimal_width" -> narrowDecimalWidth,
-    "narrow_timestamp_to_date" -> narrowTimestampToDate,
-    "narrow_varchar_shrink" -> narrowVarcharShrink,
-    "profile_histogram" -> profileHistogram
-  )
-
   // ---- DuckDB oracles ------------------------------------------------
 
   private def violSql(c: String, s: Int): String =
@@ -319,8 +308,8 @@ object Profiling {
     s"SELECT $cols FROM lineitem"
   }
 
-  def oracles: Map[String, String] = Map(
-    "encoding_advisor" -> {
+  lazy val registry: Seq[Query] = Seq(
+    Query("encoding_advisor", encodingAdvisorQ, {
       val arms = advisorCols
         .map { c =>
           s"""SELECT '$c' AS column_name,
@@ -340,17 +329,17 @@ object Profiling {
          |       WHEN n_distinct * 1000 // n_rows <= 10 THEN 'DICTIONARY'
          |       ELSE 'PLAIN' END AS advice
          |FROM a ORDER BY column_name""".stripMargin
-    },
-    "profile_quantiles" -> quantileSqlOracle,
-    "profile_decimal_scale" -> s"SELECT * FROM ($profileMeltSql) ORDER BY col_name",
-    "narrow_double_to_decimal" ->
+    }),
+    Query("profile_quantiles", profileQuantiles, quantileSqlOracle),
+    Query("profile_decimal_scale", profileDecimalScale, s"SELECT * FROM ($profileMeltSql) ORDER BY col_name"),
+    Query("narrow_double_to_decimal", narrowDoubleToDecimal,
       s"""SELECT col_name,
          |  CAST(int_digits + best_scale AS BIGINT) AS precision,
          |  CAST(best_scale AS BIGINT) AS scale,
          |  'ALTER TABLE "TPCH"."LINEITEM" MODIFY ("' || upper(col_name) || '" DECIMAL(' ||
          |    CAST(int_digits + best_scale AS VARCHAR) || ',' || CAST(best_scale AS VARCHAR) || '));' AS stmt
-         |FROM ($profileMeltSql) WHERE best_scale >= 0 ORDER BY col_name""".stripMargin,
-    "narrow_decimal_width" ->
+         |FROM ($profileMeltSql) WHERE best_scale >= 0 ORDER BY col_name""".stripMargin),
+    Query("narrow_decimal_width", narrowDecimalWidth,
       """WITH wide AS (
         |  SELECT CAST(max(abs(l_orderkey)) AS BIGINT) AS l_orderkey_maxabs,
         |         CAST(max(abs(l_partkey)) AS BIGINT) AS l_partkey_maxabs,
@@ -367,8 +356,8 @@ object Profiling {
         |  CASE WHEN length(CAST(max_abs AS VARCHAR)) <= 9 THEN 'DECIMAL(9,0)'
         |       WHEN length(CAST(max_abs AS VARCHAR)) <= 18 THEN 'DECIMAL(18,0)'
         |       ELSE 'DECIMAL(36,0)' END AS proposal
-        |FROM melted ORDER BY col_name""".stripMargin,
-    "narrow_timestamp_to_date" ->
+        |FROM melted ORDER BY col_name""".stripMargin),
+    Query("narrow_timestamp_to_date", narrowTimestampToDate,
       """WITH tall AS (
         |  SELECT 'l_shipdate' AS col_name, l_shipdate AS ts FROM lineitem
         |  UNION ALL SELECT 'o_orderdate', o_orderdate FROM orders)
@@ -376,14 +365,14 @@ object Profiling {
         |  CAST(sum(CASE WHEN ts <> date_trunc('day', ts) THEN 1 ELSE 0 END) AS BIGINT) AS n_with_time,
         |  CASE WHEN sum(CASE WHEN ts <> date_trunc('day', ts) THEN 1 ELSE 0 END) = 0
         |       THEN 'DATE' ELSE 'TIMESTAMP' END AS proposal
-        |FROM tall GROUP BY col_name ORDER BY col_name""".stripMargin,
-    "profile_histogram" ->
+        |FROM tall GROUP BY col_name ORDER BY col_name""".stripMargin),
+    Query("profile_histogram", profileHistogram,
       """SELECT CAST(least(11, greatest(0, CAST(floor((o_totalprice - 0.0) / 50000.0) AS INTEGER))) AS BIGINT) AS bucket,
         |  CAST(count(*) AS BIGINT) AS n_rows,
         |  CAST(min(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR) AS lo_val,
         |  CAST(max(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR) AS hi_val
-        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "narrow_varchar_shrink" ->
+        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin),
+    Query("narrow_varchar_shrink", narrowVarcharShrink,
       """WITH wide AS (
         |  SELECT CAST(max(length(c_name)) AS BIGINT) AS c_name_maxlen,
         |         CAST(max(length(c_mktsegment)) AS BIGINT) AS c_mktsegment_maxlen
@@ -402,6 +391,6 @@ object Profiling {
         |  CASE WHEN new_len <> max_len THEN
         |    'ALTER TABLE "TPCH"."CUSTOMER" MODIFY ("' || upper(col_name) || '" VARCHAR(' ||
         |    CAST(new_len AS VARCHAR) || '));' END AS stmt
-        |FROM sized ORDER BY col_name""".stripMargin
+        |FROM sized ORDER BY col_name""".stripMargin)
   )
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
 
 /** The supervised QUALITY-CLASSIFIER loop of the GPT-3 / CCNet
   * pipelines: train a linear classifier on a labeled seed (curated =
@@ -30,7 +31,6 @@ import org.apache.spark.sql.functions._
   * the oracle.
   */
 object QualityClassifier {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   private[graft] val fixtureVocab = 128
@@ -157,12 +157,6 @@ object QualityClassifier {
       .withColumn("pos_rate_micro", expr("n_positive * 1000000 div n_docs"))
       .orderBy("bucket")
 
-  def queries: Map[String, Q] = Map(
-    "nb_classifier_scores" -> nbScores,
-    "nb_classifier_eval" -> nbEval,
-    "nb_calibration" -> nbCalibration
-  )
-
   private val scoredSqlBase =
     s"""WITH train AS (SELECT * FROM documents WHERE $trainPred),
        |ev AS (SELECT * FROM documents WHERE NOT ($trainPred)),
@@ -197,13 +191,13 @@ object QualityClassifier {
        |    coalesce(s.ll_micro, 0) + (SELECT prior_micro FROM pr) AS logodds_micro
        |  FROM ev LEFT JOIN sums s USING (doc_id))""".stripMargin
 
-  def oracles: Map[String, String] = Map(
-    "nb_classifier_scores" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("nb_classifier_scores", nbScores,
       s"""$scoredSqlBase
          |SELECT doc_id, lang, n_vocab_tokens, logodds_micro,
          |  CAST(CASE WHEN logodds_micro > 0 THEN 1 ELSE 0 END AS BIGINT) AS predicted
-         |FROM scored ORDER BY doc_id""".stripMargin,
-    "nb_classifier_eval" ->
+         |FROM scored ORDER BY doc_id""".stripMargin),
+    Query("nb_classifier_eval", nbEval,
       s"""$scoredSqlBase,
          |lab AS (
          |  SELECT CAST(CASE WHEN $positivePred THEN 1 ELSE 0 END AS BIGINT) AS actual,
@@ -219,8 +213,8 @@ object QualityClassifier {
          |SELECT tp, fp, fn, tn,
          |  CAST(CASE WHEN tp + fp = 0 THEN 0 ELSE tp * 1000000 // (tp + fp) END AS BIGINT) AS precision_micro,
          |  CAST(CASE WHEN tp + fn = 0 THEN 0 ELSE tp * 1000000 // (tp + fn) END AS BIGINT) AS recall_micro
-         |FROM cm""".stripMargin,
-    "nb_calibration" ->
+         |FROM cm""".stripMargin),
+    Query("nb_calibration", nbCalibration,
       s"""$scoredSqlBase,
          |lab AS (
          |  SELECT CAST(CASE WHEN $positivePred THEN 1 ELSE 0 END AS BIGINT) AS actual,
@@ -230,6 +224,6 @@ object QualityClassifier {
          |  CAST(count(*) AS BIGINT) AS n_docs,
          |  CAST(sum(actual) AS BIGINT) AS n_positive,
          |  CAST(sum(actual) * 1000000 // count(*) AS BIGINT) AS pos_rate_micro
-         |FROM lab GROUP BY bucket ORDER BY bucket""".stripMargin
+         |FROM lab GROUP BY bucket ORDER BY bucket""".stripMargin)
   )
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
 
 /** The relational primitives the reference's generators rely on
   * internally (SURVEY.md §2.G): scan/filter/project, sort-within-group
@@ -17,7 +18,6 @@ import org.apache.spark.sql.functions._
   * single-shuffle (or shuffle-free for the scan/limit ones).
   */
 object Relational {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   // §2.G scan + filter + project — pushdown-friendly: the filter and
@@ -118,47 +118,36 @@ object Relational {
       .select(col("r_name"), col("n_name"), Fixtures.decStr(col("revenue")).as("revenue"), col("n_items"))
       .orderBy("r_name", "n_name")
 
-  def queries: Map[String, Q] = Map(
-    "scan_filter_project" -> scanFilterProject,
-    "group_concat_customers" -> groupConcatCustomers,
-    "limit_sample" -> limitSample,
-    "null_safe_join" -> nullSafeJoin,
-    "anti_join" -> antiJoin,
-    "sequence_dim" -> sequenceDim,
-    "window_mode" -> windowMode,
-    "revenue_nation" -> revenueNation
-  )
-
-  def oracles: Map[String, String] = Map(
-    "scan_filter_project" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("scan_filter_project", scanFilterProject,
       """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_discount
         |FROM lineitem WHERE l_quantity > 30 AND l_returnflag = 'R'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "group_concat_customers" ->
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    Query("group_concat_customers", groupConcatCustomers,
       """SELECT n_name,
         |       string_agg(c_name, ',' ORDER BY c_name) AS customers,
         |       count(*) AS n_customers
         |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "limit_sample" ->
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    Query("limit_sample", limitSample,
       """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber LIMIT 1000""".stripMargin,
-    "null_safe_join" ->
+        |ORDER BY l_orderkey, l_linenumber LIMIT 1000""".stripMargin),
+    Query("null_safe_join", nullSafeJoin,
       """WITH c AS (SELECT nullif(c_nationkey % 5, 0) AS k FROM customer),
         |     s AS (SELECT DISTINCT nullif(s_nationkey % 5, 0) AS k2 FROM supplier)
         |SELECT k, CAST(count(*) AS BIGINT) AS n_matched
         |FROM c JOIN s ON c.k IS NOT DISTINCT FROM s.k2
-        |GROUP BY k ORDER BY k NULLS FIRST""".stripMargin,
-    "anti_join" ->
+        |GROUP BY k ORDER BY k NULLS FIRST""".stripMargin),
+    Query("anti_join", antiJoin,
       """SELECT c_custkey, c_name FROM customer c
         |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "sequence_dim" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Query("sequence_dim", sequenceDim,
       """SELECT l_returnflag, CAST(metric_id AS BIGINT) AS metric_id
         |FROM (SELECT DISTINCT l_returnflag FROM lineitem)
         |CROSS JOIN generate_series(0, 7) t(metric_id)
-        |ORDER BY l_returnflag, metric_id""".stripMargin,
-    "window_mode" ->
+        |ORDER BY l_returnflag, metric_id""".stripMargin),
+    Query("window_mode", windowMode,
       """WITH counts AS (
         |  SELECT o_orderstatus, o_orderpriority, CAST(count(*) AS BIGINT) AS cnt
         |  FROM orders GROUP BY 1, 2),
@@ -167,8 +156,8 @@ object Relational {
         |SELECT o_orderstatus, min(o_orderpriority) AS mode_priority,
         |       max(cnt) AS mode_cnt
         |FROM flagged WHERE cnt = max_cnt
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "revenue_nation" ->
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Query("revenue_nation", revenueNation,
       """SELECT r_name, n_name,
         |       CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))) AS DECIMAL(38,4)) AS VARCHAR) AS revenue,
         |       count(*) AS n_items
@@ -177,6 +166,6 @@ object Relational {
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin
+        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin)
   )
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
 
 /** Corpus-governance operators a training-data pipeline runs before
   * anything ships: PII signal scanning/redaction and source-level
@@ -16,7 +17,6 @@ import org.apache.spark.sql.functions._
   * a map-side pass is disqualified.
   */
 object Safety {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   /** The scan patterns — deliberately simple expressions that mean the
@@ -139,14 +139,8 @@ object Safety {
       autoBlockThreshold
     ).orderBy("source")
 
-  def queries: Map[String, Q] = Map(
-    "pii_signals" -> piiSignalsQ,
-    "source_blocklist" -> sourceBlocklistQ,
-    "source_auto_blocklist" -> sourceAutoBlocklistQ
-  )
-
-  def oracles: Map[String, String] = Map(
-    "source_auto_blocklist" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("source_auto_blocklist", sourceAutoBlocklistQ,
       s"""${Pipeline.featuresSql},
          |src AS (
          |  SELECT d.source, f.score_micro
@@ -158,8 +152,8 @@ object Safety {
          |SELECT source, n_docs,
          |  CAST(sum_score // n_docs AS BIGINT) AS avg_score_micro,
          |  CAST(CASE WHEN sum_score // n_docs < $autoBlockThreshold THEN 1 ELSE 0 END AS BIGINT) AS blocked
-         |FROM r ORDER BY source""".stripMargin,
-    "pii_signals" ->
+         |FROM r ORDER BY source""".stripMargin),
+    Query("pii_signals", piiSignalsQ,
       s"""WITH planted AS (
          |  SELECT doc_id,
          |    text
@@ -184,8 +178,8 @@ object Safety {
          |SELECT doc_id, n_emails, n_ips, n_phones,
          |  CAST(CASE WHEN n_emails + n_ips + n_phones > 0 THEN 1 ELSE 0 END AS BIGINT) AS has_pii,
          |  redacted
-         |FROM sig ORDER BY doc_id""".stripMargin,
-    "source_blocklist" ->
+         |FROM sig ORDER BY doc_id""".stripMargin),
+    Query("source_blocklist", sourceBlocklistQ,
       s"""SELECT source,
          |  CAST(count(*) AS BIGINT) AS n_docs,
          |  CAST(sum(CASE WHEN source IN (${demoBlocklist.map("'" + _ + "'").mkString(",")})
@@ -194,6 +188,6 @@ object Safety {
          |           THEN 0 ELSE 1 END) AS BIGINT) AS n_kept,
          |  CAST(sum(CASE WHEN source IN (${demoBlocklist.map("'" + _ + "'").mkString(",")})
          |           THEN 0 ELSE len(string_split(text, ' ')) END) AS BIGINT) AS tokens_kept
-         |FROM documents GROUP BY source ORDER BY source""".stripMargin
+         |FROM documents GROUP BY source ORDER BY source""".stripMargin)
   )
 }

@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
+import graft.Query.FirstRun
 
 /** Inverted-index build and keyword search over the corpus — the
   * retrieval side of a training-data pipeline (corpus exploration,
@@ -59,7 +61,6 @@ import org.apache.spark.sql.functions._
   * calls into the shared routes for existing callers.
   */
 object Search {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
   import Generations.{hasTombstones, liveRows, Horizon, Increment, Kind, Ledger, Relation, Stats}
 
@@ -5799,115 +5800,6 @@ object Search {
     dedupedResults(hits, lab).orderBy("new_rank")
   }
 
-  def queries: Map[String, Q] = Map(
-    "search_postings" -> searchPostings,
-    "search_conjunctive" -> searchConjunctive,
-    "search_disjunctive" -> searchDisjunctive,
-    "search_min_match" -> searchMinMatch,
-    "search_min_match_index" -> searchMinMatchIndex,
-    "search_autocomplete" -> searchAutocomplete,
-    "search_prefix" -> searchPrefix,
-    "search_prefix_index" -> searchPrefixIndex,
-    "search_prefix_appended" -> searchPrefixAppended,
-    "search_did_you_mean" -> searchDidYouMean,
-    "search_fuzzy_index" -> searchFuzzyIndex,
-    "search_wildcard_index" -> searchWildcardIndex,
-    "search_regex_index" -> searchRegexIndex,
-    "search_synonym" -> searchSynonym,
-    "search_synonym_index" -> searchSynonymIndex,
-    "search_boolean_not" -> searchBooleanNot,
-    "search_boolean_not_index" -> searchBooleanNotIndex,
-    "search_asof_probe" -> searchAsOfProbe,
-    "search_asof_bm25" -> searchAsOfBm25,
-    "search_asof_page_after" -> searchAsOfPageAfter,
-    "search_term_stats" -> searchTermStats,
-    "search_proximity" -> searchProximity,
-    "search_proximity_index" -> searchProximityIndex,
-    "search_phrase_slop" -> searchPhraseSlop,
-    "search_phrase_slop_index" -> searchPhraseSlopIndex,
-    "search_phrase_slop_analyzed" -> searchPhraseSlopAnalyzed,
-    "search_regex_analyzed_index" -> searchRegexAnalyzedIndex,
-    "search_term_boost" -> searchTermBoost,
-    "search_hit_count" -> searchHitCount,
-    "search_auto_correct" -> searchAutoCorrect,
-    "search_auto_correct_multi" -> searchAutoCorrectMulti,
-    "search_query_string" -> searchQueryStringQ,
-    "search_query_string_fielded" -> searchQueryStringFielded,
-    "search_query_string_fuzzy" -> searchQueryStringFuzzy,
-    "search_query_string_range" -> searchQueryStringRange,
-    "search_query_string_analyzed" -> searchQueryStringAnalyzedQ,
-    "search_query_string_page" -> searchQueryStringPage,
-    "search_chunk_bm25" -> searchChunkBm25,
-    "search_chunk_bm25_index" -> searchChunkBm25Index,
-    "search_chunk_page" -> searchChunkPage,
-    "search_chunk_bm25_appended" -> searchChunkBm25Appended,
-    "search_range_facet" -> searchRangeFacet,
-    "search_grouped_topk" -> searchGroupedTopK,
-    "search_best_passage" -> searchBestPassage,
-    "search_range_facet_analyzed" -> searchRangeFacetAnalyzed,
-    "search_grouped_topk_analyzed" -> searchGroupedTopKAnalyzed,
-    "search_best_passage_analyzed" -> searchBestPassageAnalyzed,
-    "search_retrieval_eval" -> searchRetrievalEval,
-    "search_more_like_this" -> searchMoreLikeThis,
-    "search_merged_probe" -> searchMergedProbe,
-    "search_merged_bm25" -> searchMergedBm25,
-    "search_merged_prefix" -> searchMergedPrefix,
-    "search_merged_kwic" -> searchMergedKwic,
-    "search_autocomplete_analyzed" -> searchAutocompleteAnalyzed,
-    "search_did_you_mean_analyzed" -> searchDidYouMeanAnalyzed,
-    "search_prefix_analyzed_index" -> searchPrefixAnalyzedIndex,
-    "search_fuzzy_analyzed_index" -> searchFuzzyAnalyzedIndex,
-    "search_bm25" -> searchBm25,
-    "search_bm25_index" -> searchBm25Index,
-    "search_batch_serve" -> searchBatchServe,
-    "search_batch_index" -> searchBatchIndex,
-    "search_batch_bm25" -> searchBatchBm25,
-    "search_index_probe" -> searchIndexProbe,
-    "search_index_appended" -> searchIndexAppended,
-    "search_delete_serve" -> searchDeleteServe,
-    "search_delete_bm25" -> searchDeleteBm25,
-    "search_delete_compacted" -> searchDeleteCompacted,
-    "search_disjunctive_index" -> searchDisjunctiveIndex,
-    "search_phrase" -> searchPhrase,
-    "search_phrase_index" -> searchPhraseIndex,
-    "search_phrase3" -> searchPhrase3,
-    "search_phrase3_index" -> searchPhrase3Index,
-    "search_rrf_hybrid" -> searchRrfHybrid,
-    "search_rrf_index" -> searchRrfIndex,
-    "search_rrf_recall" -> searchRrfRecall,
-    "search_rrf_weighted" -> searchRrfWeighted,
-    "search_rrf_analyzed" -> searchRrfAnalyzed,
-    "search_dedup_results" -> searchDedupResults,
-    "search_dedup_results_graph" -> searchDedupResultsGraph,
-    "search_kwic" -> searchKwic,
-    "search_kwic_analyzed" -> searchKwicAnalyzed,
-    "search_kwic_page" -> searchKwicPage,
-    "search_kwic_page_multi" -> searchKwicPageMulti,
-    "search_kwic_page_analyzed" -> searchKwicPageAnalyzed,
-    "search_facet_filtered" -> searchFacetFiltered,
-    "search_asof_page" -> searchAsOfPage,
-    "search_bm25f" -> searchBm25f,
-    "search_bm25f_appended" -> searchBm25fAppended,
-    "search_bm25f_deleted" -> searchBm25fDeleted,
-    "search_bm25f_del_compacted" -> searchBm25fDelCompacted,
-    "search_field_scoped" -> searchFieldScoped,
-    "search_field_scoped_deleted" -> searchFieldScopedDeleted,
-    "search_facets" -> searchFacets,
-    "search_facets_multi" -> searchFacetsMulti,
-    "search_page_after" -> searchPageAfter,
-    "search_facets_analyzed" -> searchFacetsAnalyzed,
-    "search_page_after_analyzed" -> searchPageAfterAnalyzed,
-    "search_index_stats" -> searchIndexStatsQ,
-    "search_analyzed" -> searchAnalyzed,
-    "search_analyzed_index" -> searchAnalyzedIndex,
-    "search_phrase_analyzed" -> searchPhraseAnalyzed,
-    "search_phrase_analyzed_index" -> searchPhraseAnalyzedIndex,
-    "search_analyzed_bm25" -> searchAnalyzedBm25,
-    "search_analyzed_bm25_index" -> searchAnalyzedBm25Index,
-    "search_batch_analyzed_bm25" -> searchBatchAnalyzedBm25,
-    "search_batch_analyzed_serve" -> searchBatchAnalyzedServe
-  )
-
   // ---- DuckDB oracles ------------------------------------------------
 
   /** SQL string literal with single quotes doubled: the Spark side
@@ -7413,8 +7305,8 @@ object Search {
 
   private lazy val oracleAnalyzedPhrase: String = oracleAnalyzedPhraseSql(fixtureAnalyzedPhrase)
 
-  def oracles: Map[String, String] = Map(
-    "search_postings" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("search_postings", searchPostings,
       s"""WITH $postingsSql,
          |fp AS (
          |  SELECT token,
@@ -7430,28 +7322,29 @@ object Search {
          |  FROM hd WHERE rn <= 16 GROUP BY token)
          |SELECT s.token, s.df, s.tf_total, h.postings_head, f.postings_fp
          |FROM stats s JOIN heads h USING (token) JOIN fp f USING (token)
-         |ORDER BY s.token""".stripMargin,
-    "search_conjunctive" -> oracleTermSearch(fixtureAndTerms, requireAll = true),
-    "search_disjunctive" -> oracleTermSearch(fixtureOrTerms, requireAll = false),
+         |ORDER BY s.token""".stripMargin),
+    Query("search_conjunctive", searchConjunctive, oracleTermSearch(fixtureAndTerms, requireAll = true)),
+    Query("search_disjunctive", searchDisjunctive, oracleTermSearch(fixtureOrTerms, requireAll = false)),
     // minimum_should_match: ≥ 2 of 3 terms — between AND and OR; the
     // index-served twin shares the oracle so corpus ≡ index is the gate
-    "search_min_match" ->
+    Query("search_min_match", searchMinMatch,
+      oracleTermSearch(fixtureMinTerms, requireAll = false, minMatch = fixtureMinMatch)),
+    Query("search_min_match_index", searchMinMatchIndex,
       oracleTermSearch(fixtureMinTerms, requireAll = false, minMatch = fixtureMinMatch),
-    "search_min_match_index" ->
-      oracleTermSearch(fixtureMinTerms, requireAll = false, minMatch = fixtureMinMatch),
+      build = Some(FirstRun)),
 
     // dictionary tier: autocomplete/did-you-mean serve from the vocab
     // relation alone; the oracle recomputes the dictionary from the
     // corpus, so vocab correctness is gated transitively
-    "search_autocomplete" ->
+    Query("search_autocomplete", searchAutocomplete,
       s"""WITH $postingsSql,
          |v AS (
          |  SELECT token, CAST(count(*) AS BIGINT) AS df FROM p
          |  WHERE starts_with(token, ${sqlLit(fixturePrefix)}) GROUP BY token),
          |top AS (SELECT token, df FROM v ORDER BY df DESC, token LIMIT $fixtureAutoN)
          |SELECT CAST(row_number() OVER (ORDER BY df DESC, token) AS BIGINT) AS rank, token, df
-         |FROM top ORDER BY rank""".stripMargin,
-    "search_did_you_mean" ->
+         |FROM top ORDER BY rank""".stripMargin, build = Some(FirstRun)),
+    Query("search_did_you_mean", searchDidYouMean,
       s"""WITH $postingsSql,
          |v AS (SELECT token, CAST(count(*) AS BIGINT) AS df FROM p GROUP BY token),
          |c AS (
@@ -7462,44 +7355,46 @@ object Search {
          |  ORDER BY dist, df DESC, token LIMIT $fixtureDymN)
          |SELECT CAST(row_number() OVER (ORDER BY dist, df DESC, token) AS BIGINT) AS rank,
          |  token, dist, df
-         |FROM f ORDER BY rank""".stripMargin,
+         |FROM f ORDER BY rank""".stripMargin, build = Some(FirstRun)),
     // the prefix page: corpus route, index-served route, and the
     // UNCOMPACTED appended index (vocab base ⊕ increment fold) all
     // share one oracle — the three-way equality is the gate
-    "search_prefix" -> oraclePrefixSearch,
-    "search_prefix_index" -> oraclePrefixSearch,
-    "search_prefix_appended" -> oraclePrefixSearch,
-    "search_fuzzy_index" -> oracleFuzzySearch,
-    "search_wildcard_index" -> oracleWildcardSearch,
-    "search_regex_index" -> oracleRegexSearch,
-    "search_rrf_weighted" -> oracleRrfWeighted,
-    "search_field_scoped" -> oracleFieldScoped,
+    Query("search_prefix", searchPrefix, oraclePrefixSearch),
+    Query("search_prefix_index", searchPrefixIndex, oraclePrefixSearch, build = Some(FirstRun)),
+    Query("search_prefix_appended", searchPrefixAppended, oraclePrefixSearch, build = Some(FirstRun)),
+    Query("search_fuzzy_index", searchFuzzyIndex, oracleFuzzySearch, build = Some(FirstRun)),
+    Query("search_wildcard_index", searchWildcardIndex, oracleWildcardSearch, build = Some(FirstRun)),
+    Query("search_regex_index", searchRegexIndex, oracleRegexSearch),
+    Query("search_rrf_weighted", searchRrfWeighted, oracleRrfWeighted),
+    Query("search_field_scoped", searchFieldScoped, oracleFieldScoped),
     // synonym groups: corpus and index routes share the gate
-    "search_synonym" -> oracleSynonym,
-    "search_synonym_index" -> oracleSynonym,
+    Query("search_synonym", searchSynonym, oracleSynonym),
+    Query("search_synonym_index", searchSynonymIndex, oracleSynonym, build = Some(FirstRun)),
     // boolean NOT: exact-token exclusion before the ranking
-    "search_boolean_not" -> oracleBooleanNot,
-    "search_boolean_not_index" -> oracleBooleanNot,
+    Query("search_boolean_not", searchBooleanNot, oracleBooleanNot),
+    Query("search_boolean_not_index", searchBooleanNotIndex, oracleBooleanNot, build = Some(FirstRun)),
     // time travel: the as-of-generation-0 probe serves the exact
     // pre-upsert state — original texts, batch-1 rows invisible, its
     // tombstones unapplied, N from the ledger history
-    "search_asof_probe" ->
+    Query("search_asof_probe", searchAsOfProbe,
       s"""WITH asofdocs AS (
          |  SELECT doc_id, text FROM documents
          |  WHERE doc_id % 2 = 0 OR doc_id % 4 = 1),
          |${oracleTermSearchChain(fixtureAndTerms, requireAll = true, src = "asofdocs")}
          |SELECT rank, doc_id, score_micro FROM ranked WHERE rank <= $topK ORDER BY rank""".stripMargin,
+      build = Some(FirstRun)),
     // ranked time travel: the full BM25 model (N, avgdl, df, dl)
     // reconstructed at generation 0
-    "search_asof_bm25" ->
+    Query("search_asof_bm25", searchAsOfBm25,
       s"""WITH asofdocs AS (
          |  SELECT doc_id, text FROM documents
          |  WHERE doc_id % 2 = 0 OR doc_id % 4 = 1),
          |${oracleBm25ChainFor(fixtureOrTerms, "asofdocs")}
          |SELECT rank, doc_id, score_milli FROM bmranked WHERE rank <= $topK ORDER BY rank""".stripMargin,
+      build = Some(FirstRun)),
     // PIT pagination: the as-of ranking's page 2, cursor = page 1's
     // last row (max rank <= k) over the pre-upsert corpus
-    "search_asof_page_after" ->
+    Query("search_asof_page_after", searchAsOfPageAfter,
       s"""WITH asofdocs AS (
          |  SELECT doc_id, text FROM documents
          |  WHERE doc_id % 2 = 0 OR doc_id % 4 = 1),
@@ -7515,46 +7410,46 @@ object Search {
          |  SELECT doc_id, score_milli,
          |    CAST(row_number() OVER (ORDER BY score_milli DESC, doc_id ASC) AS BIGINT) AS rank
          |  FROM apg2)
-         |SELECT rank, doc_id, score_milli FROM ar2 WHERE rank <= $topK ORDER BY rank""".stripMargin,
+         |SELECT rank, doc_id, score_milli FROM ar2 WHERE rank <= $topK ORDER BY rank""".stripMargin),
     // dictionary introspection: exact df/tf per probe term, absent
     // term yields NO row
-    "search_term_stats" -> {
+    Query("search_term_stats", searchTermStats, {
       val termList = (fixtureOrTerms :+ "zzzabsent").map(sqlLit).mkString(", ")
       s"""WITH $postingsSql
          |SELECT token, CAST(count(*) AS BIGINT) AS df, CAST(sum(tf) AS BIGINT) AS tf_total
          |FROM p WHERE token IN ($termList)
          |GROUP BY token ORDER BY token""".stripMargin
-    },
+    }, build = Some(FirstRun)),
     // unordered proximity at slop 3 — strictly wider than the phrase
-    "search_proximity" -> oracleProximity,
-    "search_proximity_index" -> oracleProximity,
+    Query("search_proximity", searchProximity, oracleProximity),
+    Query("search_proximity_index", searchProximityIndex, oracleProximity, build = Some(FirstRun)),
     // ordered slop: corpus and index twins share the in-order gate
-    "search_phrase_slop" -> oracleOrderedSlop,
-    "search_phrase_slop_index" -> oracleOrderedSlop,
-    "search_phrase_slop_analyzed" -> oracleAnalyzedOrderedSlop,
-    "search_regex_analyzed_index" -> oracleAnalyzedRegexSearch,
-    "search_term_boost" -> oracleTermBoost,
-    "search_hit_count" -> oracleHitCount,
-    "search_auto_correct" -> oracleAutoCorrect,
-    "search_auto_correct_multi" -> oracleAutoCorrectMulti,
-    "search_query_string" -> oracleQueryString,
-    "search_query_string_fielded" -> oracleQueryStringFielded,
-    "search_query_string_fuzzy" -> oracleQueryStringFuzzy,
-    "search_query_string_range" -> oracleQueryStringRange,
-    "search_query_string_analyzed" -> oracleQueryStringAnalyzed,
-    "search_query_string_page" -> oracleQueryStringPage,
+    Query("search_phrase_slop", searchPhraseSlop, oracleOrderedSlop),
+    Query("search_phrase_slop_index", searchPhraseSlopIndex, oracleOrderedSlop),
+    Query("search_phrase_slop_analyzed", searchPhraseSlopAnalyzed, oracleAnalyzedOrderedSlop),
+    Query("search_regex_analyzed_index", searchRegexAnalyzedIndex, oracleAnalyzedRegexSearch),
+    Query("search_term_boost", searchTermBoost, oracleTermBoost),
+    Query("search_hit_count", searchHitCount, oracleHitCount),
+    Query("search_auto_correct", searchAutoCorrect, oracleAutoCorrect),
+    Query("search_auto_correct_multi", searchAutoCorrectMulti, oracleAutoCorrectMulti),
+    Query("search_query_string", searchQueryStringQ, oracleQueryString),
+    Query("search_query_string_fielded", searchQueryStringFielded, oracleQueryStringFielded),
+    Query("search_query_string_fuzzy", searchQueryStringFuzzy, oracleQueryStringFuzzy),
+    Query("search_query_string_range", searchQueryStringRange, oracleQueryStringRange),
+    Query("search_query_string_analyzed", searchQueryStringAnalyzedQ, oracleQueryStringAnalyzed),
+    Query("search_query_string_page", searchQueryStringPage, oracleQueryStringPage),
     // chunk retrieval: corpus and index twins share the pooled oracle
-    "search_chunk_bm25" -> oracleChunkBm25,
-    "search_chunk_bm25_index" -> oracleChunkBm25,
-    "search_chunk_page" -> oracleChunkPage,
-    "search_chunk_bm25_appended" -> oracleChunkBm25,
-    "search_range_facet" -> oracleRangeFacet,
-    "search_grouped_topk" -> oracleGroupedTopK,
-    "search_best_passage" -> oracleBestPassage,
-    "search_range_facet_analyzed" -> oracleRangeFacetAnalyzed,
-    "search_grouped_topk_analyzed" -> oracleGroupedTopKAnalyzed,
-    "search_best_passage_analyzed" -> oracleBestPassageAnalyzed,
-    "search_retrieval_eval" -> {
+    Query("search_chunk_bm25", searchChunkBm25, oracleChunkBm25),
+    Query("search_chunk_bm25_index", searchChunkBm25Index, oracleChunkBm25),
+    Query("search_chunk_page", searchChunkPage, oracleChunkPage),
+    Query("search_chunk_bm25_appended", searchChunkBm25Appended, oracleChunkBm25),
+    Query("search_range_facet", searchRangeFacet, oracleRangeFacet),
+    Query("search_grouped_topk", searchGroupedTopK, oracleGroupedTopK),
+    Query("search_best_passage", searchBestPassage, oracleBestPassage),
+    Query("search_range_facet_analyzed", searchRangeFacetAnalyzed, oracleRangeFacetAnalyzed),
+    Query("search_grouped_topk_analyzed", searchGroupedTopKAnalyzed, oracleGroupedTopKAnalyzed),
+    Query("search_best_passage_analyzed", searchBestPassageAnalyzed, oracleBestPassageAnalyzed),
+    Query("search_retrieval_eval", searchRetrievalEval, {
       val runsVals = fixtureEvalRuns.map { case (q, dd, r) => s"($q, $dd, $r)" }.mkString(", ")
       val qrelVals = fixtureEvalQrels.map { case (q, dd, r) => s"($q, $dd, $r)" }.mkString(", ")
       s"""WITH runs(query_id, doc_id, rank) AS (VALUES $runsVals),
@@ -7585,24 +7480,25 @@ object Search {
          |  CAST(coalesce(h.dcg_micro, 0) * 1000000 // i.idcg_micro AS BIGINT) AS ndcg_micro
          |FROM basis b LEFT JOIN ha h USING (query_id) LEFT JOIN ideal i USING (query_id)
          |ORDER BY query_id""".stripMargin
-    },
-    "search_more_like_this" -> oracleMoreLikeThis,
+    }),
+    Query("search_more_like_this", searchMoreLikeThis, oracleMoreLikeThis, build = Some(FirstRun)),
     // the MERGED shard index serves the corpus routes' exact pages:
     // conjunctive gates the posting moves, BM25 the meta sums + dl,
     // prefix the vocab fold — three-shard build ≡ one-shot build
-    "search_merged_probe" -> oracleTermSearch(fixtureAndTerms, requireAll = true),
-    "search_merged_bm25" -> oracleBm25,
-    "search_merged_prefix" -> oraclePrefixSearch,
+    Query("search_merged_probe", searchMergedProbe, oracleTermSearch(fixtureAndTerms, requireAll = true),
+      build = Some(FirstRun)),
+    Query("search_merged_bm25", searchMergedBm25, oracleBm25, build = Some(FirstRun)),
+    Query("search_merged_prefix", searchMergedPrefix, oraclePrefixSearch, build = Some(FirstRun)),
     // analyzed dictionary tier on the damaged corpus: raw inputs carry
     // case/punct damage ("S", "[QUEY]", "SCAT!"), the analyzer folds
     // both sides, avocab rides build→append→compact
-    "search_autocomplete_analyzed" ->
+    Query("search_autocomplete_analyzed", searchAutocompleteAnalyzed,
       s"""WITH $analyzedDictSql,
          |pv AS (SELECT token, df FROM v WHERE starts_with(token, ${sqlLit(fixturePrefix)})),
          |top AS (SELECT token, df FROM pv ORDER BY df DESC, token LIMIT $fixtureAutoN)
          |SELECT CAST(row_number() OVER (ORDER BY df DESC, token) AS BIGINT) AS rank, token, df
-         |FROM top ORDER BY rank""".stripMargin,
-    "search_did_you_mean_analyzed" ->
+         |FROM top ORDER BY rank""".stripMargin, build = Some(FirstRun)),
+    Query("search_did_you_mean_analyzed", searchDidYouMeanAnalyzed,
       s"""WITH $analyzedDictSql,
          |c AS (
          |  SELECT token, df, CAST(levenshtein(token, ${sqlLit(fixtureTypo)}) AS BIGINT) AS dist
@@ -7612,48 +7508,52 @@ object Search {
          |  ORDER BY dist, df DESC, token LIMIT $fixtureDymN)
          |SELECT CAST(row_number() OVER (ORDER BY dist, df DESC, token) AS BIGINT) AS rank,
          |  token, dist, df
-         |FROM f ORDER BY rank""".stripMargin,
-    "search_prefix_analyzed_index" -> oracleAnalyzedPrefixSearch,
-    "search_fuzzy_analyzed_index" -> oracleAnalyzedFuzzySearch,
-    "search_bm25" -> oracleBm25,
+         |FROM f ORDER BY rank""".stripMargin, build = Some(FirstRun)),
+    Query("search_prefix_analyzed_index", searchPrefixAnalyzedIndex, oracleAnalyzedPrefixSearch,
+      build = Some(FirstRun)),
+    Query("search_fuzzy_analyzed_index", searchFuzzyAnalyzedIndex, oracleAnalyzedFuzzySearch,
+      build = Some(FirstRun)),
+    Query("search_bm25", searchBm25, oracleBm25),
     // BM25 served from the persisted index must land on the corpus
     // route's exact rows — sharing the oracle makes that the gate
-    "search_bm25_index" -> oracleBm25,
-    "search_batch_serve" -> oracleBatch,
+    Query("search_bm25_index", searchBm25Index, oracleBm25, build = Some(FirstRun)),
+    Query("search_batch_serve", searchBatchServe, oracleBatch),
     // index-served batch must equal the corpus-pass batch row for row
-    "search_batch_index" -> oracleBatch,
-    "search_batch_bm25" -> oracleBatchBm25,
+    Query("search_batch_index", searchBatchIndex, oracleBatch, build = Some(FirstRun)),
+    Query("search_batch_bm25", searchBatchBm25, oracleBatchBm25, build = Some(FirstRun)),
 
     // facet sidebar: exact-token AND match set joined to the corpus
     // lang column — counts, not pages, so the whole match set gates
-    "search_facets" ->
+    Query("search_facets", searchFacets,
       s"""WITH ${oracleTermSearchChain(fixtureAndTerms, requireAll = true)}
          |SELECT d.lang, CAST(count(*) AS BIGINT) AS n_hits
          |FROM scored s JOIN documents d USING (doc_id)
-         |GROUP BY d.lang ORDER BY n_hits DESC, d.lang""".stripMargin,
+         |GROUP BY d.lang ORDER BY n_hits DESC, d.lang""".stripMargin, build = Some(FirstRun)),
     // multi-facet sidebar: each dimension recomputed independently,
     // unioned under the facet tag
-    "search_facets_multi" ->
+    Query("search_facets_multi", searchFacetsMulti,
       s"""WITH ${oracleTermSearchChain(fixtureAndTerms, requireAll = true)}
          |SELECT 'lang' AS facet, CAST(d.lang AS VARCHAR) AS value, CAST(count(*) AS BIGINT) AS n_hits
          |FROM scored s JOIN documents d USING (doc_id) GROUP BY d.lang
          |UNION ALL
          |SELECT 'source' AS facet, CAST(d.source AS VARCHAR) AS value, CAST(count(*) AS BIGINT) AS n_hits
          |FROM scored s JOIN documents d USING (doc_id) GROUP BY d.source
-         |ORDER BY facet, value""".stripMargin,
+         |ORDER BY facet, value""".stripMargin),
     // keyset pagination: one global ranking, renumbered to the second
     // page — a cursor that skips or repeats a row hash-mismatches
-    "search_page_after" ->
+    Query("search_page_after", searchPageAfter,
       s"""WITH $oracleBm25Chain
          |SELECT CAST(row_number() OVER (ORDER BY rank) AS BIGINT) AS rank, doc_id, score_milli
          |FROM bmranked WHERE rank > $topK AND rank <= ${2 * topK} ORDER BY rank""".stripMargin,
+      build = Some(FirstRun)),
     // the ANALYZED twins of the two serving shapes above, on the
     // damaged corpus — production search is always analyzed
-    "search_facets_analyzed" -> oracleAnalyzedFacets,
-    "search_page_after_analyzed" -> oracleAnalyzedPageAfter,
+    Query("search_facets_analyzed", searchFacetsAnalyzed, oracleAnalyzedFacets, build = Some(FirstRun)),
+    Query("search_page_after_analyzed", searchPageAfterAnalyzed, oracleAnalyzedPageAfter,
+      build = Some(FirstRun)),
     // index monitoring: every engine-portable invariant recomputed
     // from the corpus; doclen = docs, positions = token occurrences
-    "search_index_stats" ->
+    Query("search_index_stats", searchIndexStatsQ,
       s"""WITH $postingsSql
          |SELECT
          |  (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) FROM documents) AS n_docs,
@@ -7662,60 +7562,67 @@ object Search {
          |  (SELECT CAST(count(*) AS BIGINT) FROM p0) AS positions_rows,
          |  (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) FROM documents) AS doclen_rows,
          |  CAST(0 AS BIGINT) AS tombstone_rows,
-         |  CAST(0 AS BIGINT) AS ledger_files""".stripMargin,
+         |  CAST(0 AS BIGINT) AS ledger_files""".stripMargin, build = Some(FirstRun)),
 
     // DELETE gates: the tombstoned (uncompacted) index and the
     // purged (compacted) index both serve the LIVE-corpus chain
     // exactly — scores included, because the delete decremented N
     // exactly and df comes from live rows only
-    "search_delete_serve" -> oracleDeleteServe,
-    "search_delete_bm25" -> oracleDeleteBm25,
-    "search_delete_compacted" -> oracleDeleteServe,
+    Query("search_delete_serve", searchDeleteServe, oracleDeleteServe, build = Some(FirstRun)),
+    Query("search_delete_bm25", searchDeleteBm25, oracleDeleteBm25, build = Some(FirstRun)),
+    Query("search_delete_compacted", searchDeleteCompacted, oracleDeleteServe, build = Some(FirstRun)),
 
     // the index-served route must land on the batch conjunctive's
     // exact rows — sharing the oracle makes the equality the gate
-    "search_index_probe" -> oracleTermSearch(fixtureAndTerms, requireAll = true),
+    Query("search_index_probe", searchIndexProbe, oracleTermSearch(fixtureAndTerms, requireAll = true),
+      build = Some(FirstRun)),
     // build+append+compact must be indistinguishable from one build
-    "search_index_appended" -> oracleTermSearch(fixtureAndTerms, requireAll = true),
+    Query("search_index_appended", searchIndexAppended, oracleTermSearch(fixtureAndTerms, requireAll = true),
+      build = Some(FirstRun)),
     // OR served from the index must equal the corpus-pass OR route
-    "search_disjunctive_index" -> oracleTermSearch(fixtureOrTerms, requireAll = false),
-    "search_phrase" -> oraclePhrase,
+    Query("search_disjunctive_index", searchDisjunctiveIndex,
+      oracleTermSearch(fixtureOrTerms, requireAll = false), build = Some(FirstRun)),
+    Query("search_phrase", searchPhrase, oraclePhrase),
     // index-served phrase (through build→append→compact) must equal
     // the corpus-pass window route row for row
-    "search_phrase_index" -> oraclePhrase,
-    "search_phrase3" -> oraclePhraseSql(fixturePhrase3),
+    Query("search_phrase_index", searchPhraseIndex, oraclePhrase, build = Some(FirstRun)),
+    Query("search_phrase3", searchPhrase3, oraclePhraseSql(fixturePhrase3)),
     // the n-term fold from the maintained index shares the corpus
     // trigram oracle — rarest-first equi-join chain ≡ window route
-    "search_phrase3_index" -> oraclePhraseSql(fixturePhrase3),
-    "search_rrf_hybrid" -> oracleRrf,
+    Query("search_phrase3_index", searchPhrase3Index, oraclePhraseSql(fixturePhrase3),
+      build = Some(FirstRun)),
+    Query("search_rrf_hybrid", searchRrfHybrid, oracleRrf),
     // served from the persisted search + IVF indexes (exhaustive
     // probe → exact), must equal the corpus-derived hybrid page
-    "search_rrf_index" -> oracleRrf,
+    Query("search_rrf_index", searchRrfIndex, oracleRrf, build = Some(FirstRun)),
     // the nProbe < nLists production configuration, vector leg replayed
     // from the ann_ivf_topk_index golden pin
-    "search_rrf_recall" -> oracleRrfRecall,
+    Query("search_rrf_recall", searchRrfRecall, oracleRrfRecall, build = Some(FirstRun)),
     // analyzed lexical leg ⊕ exhaustive vector leg — both recomputed
-    "search_rrf_analyzed" -> oracleRrfAnalyzed,
-    "search_dedup_results" -> oracleDedupResults,
+    Query("search_rrf_analyzed", searchRrfAnalyzed, oracleRrfAnalyzed, build = Some(FirstRun)),
+    Query("search_dedup_results", searchDedupResults, oracleDedupResults),
     // hits from the persisted search index, labels from the persisted
     // cluster map pruned to the hits' buckets — same page, from bytes
-    "search_dedup_results_graph" -> oracleDedupResults,
-    "search_analyzed" -> oracleAnalyzed,
-    "search_phrase_analyzed" -> oracleAnalyzedPhrase,
+    Query("search_dedup_results_graph", searchDedupResultsGraph, oracleDedupResults, build = Some(FirstRun)),
+    Query("search_analyzed", searchAnalyzed, oracleAnalyzed),
+    Query("search_phrase_analyzed", searchPhraseAnalyzed, oracleAnalyzedPhrase),
     // served from the maintained apositions relation, must land on the
     // corpus analyzed-window route's exact rows — shared oracle
-    "search_phrase_analyzed_index" -> oracleAnalyzedPhrase,
+    Query("search_phrase_analyzed_index", searchPhraseAnalyzedIndex, oracleAnalyzedPhrase,
+      build = Some(FirstRun)),
     // analyzed serving from the persisted apostings relation (through
     // build→append→compact) must equal the corpus-pass analyzed route
-    "search_analyzed_index" -> oracleAnalyzed,
-    "search_analyzed_bm25" -> oracleAnalyzedBm25,
+    Query("search_analyzed_index", searchAnalyzedIndex, oracleAnalyzed, build = Some(FirstRun)),
+    Query("search_analyzed_bm25", searchAnalyzedBm25, oracleAnalyzedBm25),
     // analyzed ranked serving from the persisted index (adl on posting
     // rows, ameta avgdl) must equal the corpus analyzed-BM25 pass
-    "search_analyzed_bm25_index" -> oracleAnalyzedBm25,
-    "search_batch_analyzed_bm25" -> oracleBatchAnalyzedBm25,
+    Query("search_analyzed_bm25_index", searchAnalyzedBm25Index, oracleAnalyzedBm25, build = Some(FirstRun)),
+    Query("search_batch_analyzed_bm25", searchBatchAnalyzedBm25, oracleBatchAnalyzedBm25,
+      build = Some(FirstRun)),
     // the analyzed batch tier with per-query AND/OR modes
-    "search_batch_analyzed_serve" -> oracleBatchAnalyzed,
-    "search_kwic" -> {
+    Query("search_batch_analyzed_serve", searchBatchAnalyzedServe, oracleBatchAnalyzed,
+      build = Some(FirstRun)),
+    Query("search_kwic", searchKwic, {
       val t = sqlLit(fixturePhrase._1)
       s"""WITH pt AS (
          |  SELECT doc_id, string_split(text, ' ') AS toks
@@ -7725,38 +7632,38 @@ object Search {
          |SELECT doc_id, CAST(pos AS BIGINT) AS pos,
          |  array_to_string(toks[greatest(1, pos - 3):least(len(toks), pos + 3)], ' ') AS snippet
          |FROM hit ORDER BY doc_id, pos""".stripMargin
-    },
+    }),
     // the page-served route must equal the corpus KWIC restricted to
     // the page's documents (the term-search chain re-derives the page)
-    "search_kwic_page" -> oracleKwicPage,
+    Query("search_kwic_page", searchKwicPage, oracleKwicPage, build = Some(FirstRun)),
     // multi-term page rendering: the union of the per-term page hits,
     // the matched term riding each row
-    "search_kwic_page_multi" -> oracleKwicPageMulti,
+    Query("search_kwic_page_multi", searchKwicPageMulti, oracleKwicPageMulti, build = Some(FirstRun)),
     // SERP filter click: corpus-level scoring model, facet-restricted
     // match set, page re-cut after the filter
-    "search_facet_filtered" -> oracleFacetFiltered,
+    Query("search_facet_filtered", searchFacetFiltered, oracleFacetFiltered, build = Some(FirstRun)),
     // as-of page rendering: hits AND snippets replayed over the
     // generation-0 corpus (the upsert's rewrite invisible)
-    "search_asof_page" -> oracleAsOfPage,
+    Query("search_asof_page", searchAsOfPage, oracleAsOfPage, build = Some(FirstRun)),
     // fielded scoring: the exact BM25F integer rational form over the
     // deterministic title/body split
-    "search_bm25f" -> oracleBm25f,
+    Query("search_bm25f", searchBm25f, oracleBm25f, build = Some(FirstRun)),
     // built-then-appended ≡ one-shot-built, bit for bit
-    "search_bm25f_appended" -> oracleBm25f,
+    Query("search_bm25f_appended", searchBm25fAppended, oracleBm25f),
     // BM25F through LIVE tombstones ≡ BM25F over the live corpus —
     // the whole fielded model recomputed over the filtered source
-    "search_bm25f_deleted" -> oracleBm25fFrom(fieldedLiveSrc),
+    Query("search_bm25f_deleted", searchBm25fDeleted, oracleBm25fFrom(fieldedLiveSrc)),
     // post-purge: tombstones consumed, fmeta re-derived — page frozen
-    "search_bm25f_del_compacted" -> oracleBm25fFrom(fieldedLiveSrc),
+    Query("search_bm25f_del_compacted", searchBm25fDelCompacted, oracleBm25fFrom(fieldedLiveSrc)),
     // field-scoped df/N over live rows only
-    "search_field_scoped_deleted" -> oracleFieldScopedFrom(fieldedLiveSrc),
+    Query("search_field_scoped_deleted", searchFieldScopedDeleted, oracleFieldScopedFrom(fieldedLiveSrc)),
     // the same page rendered from the MERGED index + MERGED store —
     // sharing the oracle gates the whole distributed SERP stack
-    "search_merged_kwic" -> oracleKwicPage,
+    Query("search_merged_kwic", searchMergedKwic, oracleKwicPage, build = Some(FirstRun)),
     // the analyzed page: the analyzed chain re-derives the page, the
     // damaged corpus provides the raw toks, the hit test analyzes the
     // raw token at each position — exactly the plan's arithmetic
-    "search_kwic_page_analyzed" -> {
+    Query("search_kwic_page_analyzed", searchKwicPageAnalyzed, {
       val t = sqlLit(analyzeTerm(fixturePhrase._1))
       s"""WITH ${oracleAnalyzedChainFor(Seq(analyzeTerm(fixturePhrase._1)), requireAll = true)},
          |page AS (SELECT doc_id, rank FROM aranked WHERE rank <= $kwicPageK),
@@ -7769,8 +7676,8 @@ object Search {
          |SELECT CAST(rank AS BIGINT) AS rank, doc_id, CAST(pos AS BIGINT) AS pos,
          |  array_to_string(toks[greatest(1, pos - 3):least(len(toks), pos + 3)], ' ') AS snippet
          |FROM hit ORDER BY rank, pos""".stripMargin
-    },
-    "search_kwic_analyzed" -> {
+    }, build = Some(FirstRun)),
+    Query("search_kwic_analyzed", searchKwicAnalyzed, {
       // the damaged-corpus chain; the hit test analyzes the RAW token
       // at each position (position-aligned, no filtering), snippets
       // slice the raw damaged tokens — what a renderer displays
@@ -7791,7 +7698,7 @@ object Search {
          |SELECT doc_id, CAST(pos AS BIGINT) AS pos,
          |  array_to_string(toks[greatest(1, pos - 3):least(len(toks), pos + 3)], ' ') AS snippet
          |FROM hit ORDER BY doc_id, pos""".stripMargin
-    }
+    })
   )
 
   /** Analyzed BM25 oracle over the damaged corpus: the analyzer chain

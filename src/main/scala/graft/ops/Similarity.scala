@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
+import graft.Query.FirstRun
 
 /** Similarity search over an embedding column (`Array[Float]`) — the
   * BASELINE.json ANN component.
@@ -18,7 +20,6 @@ import org.apache.spark.sql.functions._
   * scan ~256× at the cost of recall (the standard IVF/LSH trade).
   */
 object Similarity {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   private val dims = 64
@@ -2150,38 +2151,6 @@ object Similarity {
       .orderBy("q_id")
   }
 
-  def queries: Map[String, Q] = Map(
-    "ann_lsh_recall" -> annLshRecall,
-    "embedding_drift" -> embeddingDriftQ,
-    "embedding_quality" -> embeddingQuality,
-    "dedup_semantic" -> dedupSemantic,
-    "ann_cosine_topk" -> annCosineTopk,
-    "ann_rocchio" -> annRocchio,
-    "ann_range_search" -> annRangeSearch,
-    "ann_range_ivf" -> annRangeIvf,
-    "ann_mmr_topk" -> annMmrTopk,
-    "ann_range_recall" -> annRangeRecall,
-    "ann_knn_classifier" -> annKnnClassifier,
-    "ann_nearest_centroid" -> annNearestCentroid,
-    "ann_lsh_buckets" -> annLshBuckets,
-    "ann_lsh_topk" -> annLshTopk,
-    "ann_hard_negatives" -> annHardNegatives,
-    "ann_hard_negatives_index" -> annHardNegativesIndex,
-    "bitext_mine" -> bitextMine,
-    "bitext_mine_index" -> bitextMineIndex,
-    "sample_bucket_balanced" -> sampleBucketBalanced,
-    "dedup_embedding_cosine" -> dedupEmbeddingCosine,
-    "dedup_incremental_embedding" -> dedupIncrementalEmbedding,
-    "ann_ivf_lists" -> annIvfLists,
-    "ann_ivf_topk_index" -> annIvfTopkIndex,
-    "ann_delete_topk" -> annDeleteTopk,
-    "ann_delete_compacted" -> annDeleteCompacted,
-    "ann_pq_topk_index" -> annPqTopkIndex,
-    "ann_pq_knn_join" -> annPqKnnJoin,
-    "pq_quality" -> pqQuality,
-    "pq_drift_report" -> annPqDriftReport
-  )
-
   // ---- DuckDB oracles ------------------------------------------------
 
   /** The sf0.01 golden result of the persisted-IVF probe at the
@@ -2393,8 +2362,8 @@ object Similarity {
       .map(j => s"(CASE WHEN list_dot_product(v, ${planeDuckSql(j)}) >= 0 THEN ${1 << j} ELSE 0 END)")
       .mkString(" + ")
 
-  def oracles: Map[String, String] = Map(
-    "ann_lsh_recall" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("ann_lsh_recall", annLshRecall,
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |b AS (SELECT vec_id, v, CAST($bucketDuckSql AS BIGINT) AS bucket_id FROM e),
          |q AS (SELECT vec_id AS q_id, v AS qv, bucket_id AS q_bucket FROM b WHERE vec_id % 50 = 0),
@@ -2424,8 +2393,8 @@ object Similarity {
          |  CAST(coalesce(nc.n_candidates, 0) AS BIGINT) AS n_candidates,
          |  CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
          |  CAST(coalesce(h.n_hits, 0) * 1000000 // 10 AS BIGINT) AS recall_micro
-         |FROM q LEFT JOIN nc USING (q_id) LEFT JOIN h USING (q_id) ORDER BY q.q_id""".stripMargin,
-    "embedding_drift" ->
+         |FROM q LEFT JOIN nc USING (q_id) LEFT JOIN h USING (q_id) ORDER BY q.q_id""".stripMargin),
+    Query("embedding_drift", embeddingDriftQ,
       """WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
         |                  CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |h AS (
@@ -2440,8 +2409,8 @@ object Similarity {
         |      FROM o JOIN nw ON o.label = nw.label AND o.pos = nw.pos)
         |SELECT label, CAST(min(n_old) AS BIGINT) AS n_old, CAST(min(n_new) AS BIGINT) AS n_new,
         |  round(sum(co * cn) / (sqrt(sum(co * co)) * sqrt(sum(cn * cn))), 6) AS cos_sim
-        |FROM j GROUP BY label ORDER BY label""".stripMargin,
-    "embedding_quality" ->
+        |FROM j GROUP BY label ORDER BY label""".stripMargin),
+    Query("embedding_quality", embeddingQuality,
       """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |w AS (
         |  SELECT label, v, list_max(list_transform(v, x -> abs(x))) AS maxabs FROM e),
@@ -2459,24 +2428,24 @@ object Similarity {
         |  max(norm_micro) AS norm_max_micro,
         |  CAST(sum(norm_micro) // count(*) AS BIGINT) AS norm_avg_micro,
         |  max(err_micro) AS max_err_micro
-        |FROM m GROUP BY label ORDER BY label""".stripMargin,
-    "ann_cosine_topk" ->
+        |FROM m GROUP BY label ORDER BY label""".stripMargin),
+    Query("ann_cosine_topk", annCosineTopk,
       s"""$cosSqlBase
          |SELECT vec_id, label,
          |  round(list_dot_product(v, qv) /
          |        (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))), 6) AS cos_sim
-         |FROM e, q ORDER BY cos_sim DESC, vec_id ASC LIMIT 20""".stripMargin,
+         |FROM e, q ORDER BY cos_sim DESC, vec_id ASC LIMIT 20""".stripMargin),
     // radius search: brute and the exact (nProbe = nLists) IVF-served
     // twin share the threshold-over-round-6 semantics
-    "ann_range_search" -> oracleRangeSearch,
-    "ann_range_ivf" -> oracleRangeSearch,
-    "ann_mmr_topk" -> oracleMmrTopk,
-    "ann_range_recall" -> oracleRangeRecall,
-    "ann_knn_classifier" -> oracleKnnClassifier,
-    "ann_nearest_centroid" -> oracleNearestCentroid,
+    Query("ann_range_search", annRangeSearch, oracleRangeSearch),
+    Query("ann_range_ivf", annRangeIvf, oracleRangeSearch),
+    Query("ann_mmr_topk", annMmrTopk, oracleMmrTopk),
+    Query("ann_range_recall", annRangeRecall, oracleRangeRecall),
+    Query("ann_knn_classifier", annKnnClassifier, oracleKnnClassifier),
+    Query("ann_nearest_centroid", annNearestCentroid, oracleNearestCentroid),
     // Rocchio: q' rebuilt in SQL with the same float-op order (vec_id-
     // ordered centroid sums, same α/β/γ term order), feedback excluded
-    "ann_rocchio" -> {
+    Query("ann_rocchio", annRocchio, {
       val rel = fixtureRocchioRel.sorted
       val non = fixtureRocchioNonRel.sorted
       val relCtes = rel.zipWithIndex.map { case (id, j) => s"rv$j AS (SELECT v AS r$j FROM e WHERE vec_id = $id)" }
@@ -2497,17 +2466,17 @@ object Similarity {
          |        (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(pv, pv))), 6) AS cos_sim
          |FROM e, qp WHERE vec_id NOT IN ($excl)
          |ORDER BY cos_sim DESC, vec_id ASC LIMIT 20""".stripMargin
-    },
+    }),
     // vector deletes: brute force over the LIVE vectors only — shared
     // by the tombstone-served and the post-purge probe
-    "ann_delete_topk" -> oracleDeleteCosineTopk,
-    "ann_delete_compacted" -> oracleDeleteCosineTopk,
-    "ann_lsh_buckets" ->
+    Query("ann_delete_topk", annDeleteTopk, oracleDeleteCosineTopk, build = Some(FirstRun)),
+    Query("ann_delete_compacted", annDeleteCompacted, oracleDeleteCosineTopk, build = Some(FirstRun)),
+    Query("ann_lsh_buckets", annLshBuckets,
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |b AS (SELECT vec_id, CAST($bucketDuckSql AS BIGINT) AS bucket_id FROM e)
          |SELECT bucket_id, CAST(count(*) AS BIGINT) AS n_vectors, min(vec_id) AS min_vec_id
-         |FROM b GROUP BY bucket_id ORDER BY bucket_id""".stripMargin,
-    "sample_bucket_balanced" ->
+         |FROM b GROUP BY bucket_id ORDER BY bucket_id""".stripMargin),
+    Query("sample_bucket_balanced", sampleBucketBalanced,
       s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |b AS (SELECT vec_id, label, CAST($bucketDuckSql AS BIGINT) AS bucket_id FROM e),
          |d AS (
@@ -2519,8 +2488,8 @@ object Similarity {
          |    row_number() OVER (PARTITION BY bucket_id ORDER BY draw, vec_id) AS rank
          |  FROM d)
          |SELECT bucket_id, CAST(rank AS BIGINT) AS rank, vec_id, label
-         |FROM r WHERE rank <= 3 ORDER BY bucket_id, rank""".stripMargin,
-    "ann_lsh_topk" ->
+         |FROM r WHERE rank <= 3 ORDER BY bucket_id, rank""".stripMargin),
+    Query("ann_lsh_topk", annLshTopk,
       s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |b AS (SELECT vec_id, label, v, CAST($bucketDuckSql AS BIGINT) AS bucket_id FROM e),
          |q AS (SELECT v AS qv, bucket_id AS q_bucket FROM b WHERE vec_id = 0)
@@ -2528,10 +2497,10 @@ object Similarity {
          |  round(list_dot_product(v, qv) /
          |        (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))), 6) AS cos_sim
          |FROM b, q WHERE bucket_id = q_bucket
-         |ORDER BY cos_sim DESC, vec_id ASC LIMIT 10""".stripMargin,
+         |ORDER BY cos_sim DESC, vec_id ASC LIMIT 10""".stripMargin),
     // index route: even ids are the indexed candidates (the demo
     // index), anchors the %50 sample; no label column in the index
-    "ann_hard_negatives_index" ->
+    Query("ann_hard_negatives_index", annHardNegativesIndex,
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |b AS (SELECT vec_id, v, CAST($bucketDuckSql AS BIGINT) AS bucket_id FROM e),
          |a AS (SELECT vec_id AS anchor_id, v AS qv, bucket_id AS q_bucket FROM b WHERE vec_id % 50 = 0),
@@ -2546,8 +2515,8 @@ object Similarity {
          |                            ORDER BY cos_sim DESC, vec_id ASC) AS BIGINT) AS rank
          |  FROM cand WHERE cos_sim < 0.9 AND vec_id <> anchor_id)
          |SELECT anchor_id, rank, vec_id, cos_sim
-         |FROM neg WHERE rank <= 5 ORDER BY anchor_id, rank""".stripMargin,
-    "bitext_mine" ->
+         |FROM neg WHERE rank <= 5 ORDER BY anchor_id, rank""".stripMargin, build = Some(FirstRun)),
+    Query("bitext_mine", bitextMine,
       s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |x AS (SELECT vec_id AS x_id, v AS xv FROM e WHERE label = 0),
          |y AS (SELECT vec_id AS y_id, v AS yv FROM e WHERE label = 1),
@@ -2569,11 +2538,11 @@ object Similarity {
          |  FROM f JOIN kx USING (x_id) JOIN ky USING (y_id)
          |  WHERE kx.knn_x + ky.knn_y > 0)
          |SELECT x_id, y_id, cos_micro, margin_micro
-         |FROM m WHERE margin_micro >= 1010000 ORDER BY x_id""".stripMargin,
+         |FROM m WHERE margin_micro >= 1010000 ORDER BY x_id""".stripMargin),
     // index-restricted mining: the SAME margin tail over the in-bucket
     // cross-side candidate relation (LSH sign arithmetic is portable),
     // so the documented at-scale approximation is itself oracle-gated
-    "bitext_mine_index" ->
+    Query("bitext_mine_index", bitextMineIndex,
       s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |b AS (SELECT vec_id, label, v, CAST($bucketDuckSql AS BIGINT) AS bucket_id FROM e),
          |x AS (SELECT vec_id AS x_id, bucket_id, v AS xv FROM b WHERE label = 0),
@@ -2596,8 +2565,8 @@ object Similarity {
          |  FROM f JOIN kx USING (x_id) JOIN ky USING (y_id)
          |  WHERE kx.knn_x + ky.knn_y > 0)
          |SELECT x_id, y_id, cos_micro, margin_micro
-         |FROM m WHERE margin_micro >= 1010000 ORDER BY x_id""".stripMargin,
-    "ann_hard_negatives" ->
+         |FROM m WHERE margin_micro >= 1010000 ORDER BY x_id""".stripMargin, build = Some(FirstRun)),
+    Query("ann_hard_negatives", annHardNegatives,
       s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |b AS (SELECT vec_id, label, v, CAST($bucketDuckSql AS BIGINT) AS bucket_id FROM e),
          |a AS (SELECT vec_id AS anchor_id, v AS qv, bucket_id AS q_bucket FROM b WHERE vec_id % 50 = 0),
@@ -2612,8 +2581,8 @@ object Similarity {
          |                            ORDER BY cos_sim DESC, vec_id ASC) AS BIGINT) AS rank
          |  FROM cand WHERE cos_sim < 0.9 AND vec_id <> anchor_id)
          |SELECT anchor_id, rank, vec_id, label, cos_sim
-         |FROM neg WHERE rank <= 5 ORDER BY anchor_id, rank""".stripMargin,
-    "dedup_embedding_cosine" ->
+         |FROM neg WHERE rank <= 5 ORDER BY anchor_id, rank""".stripMargin),
+    Query("dedup_embedding_cosine", dedupEmbeddingCosine,
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |b AS (SELECT vec_id, v, CAST($bucketDuckSql AS BIGINT) AS bucket_id FROM e),
          |pairs AS (
@@ -2623,13 +2592,13 @@ object Similarity {
          |  FROM b a JOIN b x ON a.bucket_id = x.bucket_id AND a.vec_id < x.vec_id)
          |SELECT vec_a, vec_b, bucket_id, cos_sim
          |FROM pairs WHERE cos_sim >= 0.9
-         |ORDER BY vec_a, vec_b""".stripMargin,
+         |ORDER BY vec_a, vec_b""".stripMargin),
     // incremental replay: buckets over all vectors (per-vector bucket
     // ids are corpus-independent), parity split, routed pairs, exact
     // cosine at the same threshold. The UNION ALL replays the Spark
     // side's seeded clones — the 20 lowest even vectors re-arriving as
     // odd ids, flagging their indexed sources at cosine ≈ 1.0.
-    "dedup_incremental_embedding" ->
+    Query("dedup_incremental_embedding", dedupIncrementalEmbedding,
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
          |  UNION ALL
          |  SELECT $cloneIdBase + vec_id, CAST(embedding AS DOUBLE[])
@@ -2653,11 +2622,11 @@ object Similarity {
          |  FROM cand)
          |SELECT new_id, ref_id, src, bucket_id, cos_sim
          |FROM scored WHERE cos_sim >= 0.3
-         |ORDER BY new_id, ref_id, src""".stripMargin,
+         |ORDER BY new_id, ref_id, src""".stripMargin, build = Some(FirstRun)),
     // golden pin of the per-list SemDeDup sweep at sf0.01 (same
     // determinism argument as ann_ivf_lists; per-vector semantics are
     // spec-gated — see dedupSemantic scaladoc for the τ=0.35 choice).
-    "dedup_semantic" -> {
+    Query("dedup_semantic", dedupSemantic, {
       val pinned = Seq(
         (0, 41, 3, 333), (1, 39, 5, 287), (2, 49, 8, 152), (3, 17, 1, 232),
         (4, 17, 1, 498), (5, 23, 3, 143), (6, 59, 8, 185), (7, 11, 0, -1),
@@ -2668,32 +2637,32 @@ object Similarity {
          |  CAST(n_dropped AS BIGINT) AS n_dropped, CAST(first_dropped AS BIGINT) AS first_dropped
          |FROM (VALUES $pinned) AS t(list_id, n_vectors, n_dropped, first_dropped)
          |ORDER BY list_id""".stripMargin
-    },
+    }),
     // golden pin of the deterministic seeded-KMeans histogram at
     // sf0.01 (the correctness-gate scale); see annIvfLists scaladoc.
-    "ann_ivf_lists" -> {
+    Query("ann_ivf_lists", annIvfLists, {
       val pinned = Seq(
         0 -> 41, 1 -> 39, 2 -> 49, 3 -> 17, 4 -> 17, 5 -> 23, 6 -> 59, 7 -> 11,
         8 -> 33, 9 -> 25, 10 -> 44, 11 -> 61, 12 -> 54, 13 -> 1, 14 -> 21, 15 -> 5
       ).map { case (l, n) => s"($l, $n)" }.mkString(", ")
       s"""SELECT CAST(list_id AS INTEGER) AS list_id, CAST(n_vectors AS BIGINT) AS n_vectors
          |FROM (VALUES $pinned) AS t(list_id, n_vectors) ORDER BY list_id""".stripMargin
-    },
+    }),
     // golden pin of the persisted-index probe at sf0.01 (same
     // determinism argument as ann_ivf_lists; SimilarityIvfSpec proves
     // index-path = rebuild-path, this pin makes it driver-checked).
-    "ann_ivf_topk_index" -> {
+    Query("ann_ivf_topk_index", annIvfTopkIndex, {
       val pinned = ivfTopkGoldenSf001.map { case (v, lb, li, c) => s"($v, $lb, $li, $c)" }.mkString(", ")
       s"""SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(label AS INTEGER) AS label,
          |  CAST(list_id AS INTEGER) AS list_id, CAST(cos_sim AS DOUBLE) AS cos_sim
          |FROM (VALUES $pinned) AS t(vec_id, label, list_id, cos_sim)
          |ORDER BY cos_sim DESC, vec_id""".stripMargin
-    },
+    }, build = Some(FirstRun), sharesScanWith = Some("ann_ivf_lists")),
     // golden pin of the PQ asymmetric-distance probe at sf0.01 (same
     // determinism argument: seeded per-subspace fits over the fixed
     // featurization; SimilarityIvfSpec gates recall vs the exact
     // within-probed-lists answer and rerank equality).
-    "ann_pq_topk_index" -> {
+    Query("ann_pq_topk_index", annPqTopkIndex, {
       val pinned = Seq(
         (0L, 2, 0, "0.505653"),
         (73L, 6, 5, "0.302942"),
@@ -2710,10 +2679,10 @@ object Similarity {
          |  CAST(list_id AS INTEGER) AS list_id, CAST(adc_cos AS DOUBLE) AS adc_cos
          |FROM (VALUES $pinned) AS t(vec_id, label, list_id, adc_cos)
          |ORDER BY adc_cos DESC, vec_id""".stripMargin
-    },
+    }, sharesScanWith = Some("ann_pq_knn_join")),
     // golden pin of the batched PQ k-NN join at sf0.01 (SimilarityIvf
     // Spec pins batch == per-query path row for row).
-    "ann_pq_knn_join" -> {
+    Query("ann_pq_knn_join", annPqKnnJoin, {
       val pinned = Seq(
         (0L, 1L, 0L, 2, 0, "0.505653"),
         (0L, 2L, 73L, 6, 5, "0.302942"),
@@ -2736,14 +2705,14 @@ object Similarity {
          |  CAST(list_id AS INTEGER) AS list_id, CAST(adc_cos AS DOUBLE) AS adc_cos
          |FROM (VALUES $pinned) AS t(qid, rank, vec_id, label, list_id, adc_cos)
          |ORDER BY qid, rank""".stripMargin
-    },
+    }, build = Some(FirstRun)),
     // golden pin of the PQ reconstruction report at sf0.01. The ~0.82
     // avg error against unit-norm vectors is EXPECTED for 16-code
     // PQ over synthetic near-uniform embeddings (no cluster structure
     // to exploit) — the gate is that ADC RANKING still surfaces the
     // true neighbors (the recall spec), and that these numbers are
     // stable.
-    "pq_quality" -> {
+    Query("pq_quality", pqQuality, {
       val pinned = Seq(
         (0L, 50L, 813426L, 738583L, 999999L),
         (1L, 46L, 839433L, 742926L, 999999L),
@@ -2762,12 +2731,12 @@ object Similarity {
          |  CAST(norm_avg_micro AS BIGINT) AS norm_avg_micro
          |FROM (VALUES $pinned) AS t(label, n_vecs, max_err_micro, avg_err_micro, norm_avg_micro)
          |ORDER BY label""".stripMargin
-    },
+    }, sharesScanWith = Some("ann_pq_knn_join")),
     // golden pin of the per-generation drift report at sf0.01: the
     // +0.5-shifted generation-1 increment reconstructs ~5x worse than
     // the build generation through the frozen codebooks — the jump the
     // re-train trigger (pqDriftReport scaladoc) watches for.
-    "pq_drift_report" -> {
+    Query("pq_drift_report", annPqDriftReport, {
       val pinned = Seq(
         (0L, 500L, 843415L, 737970L),
         (1L, 100L, 3911406L, 3681276L)
@@ -2777,6 +2746,6 @@ object Similarity {
          |  CAST(avg_err_micro AS BIGINT) AS avg_err_micro
          |FROM (VALUES $pinned) AS t(generation, n_vecs, max_err_micro, avg_err_micro)
          |ORDER BY generation""".stripMargin
-    }
+    }, build = Some(FirstRun))
   )
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
 
 /** Exact duplicated-SPAN detection — the fixed-k engine analog of
   * ExactSubstr dedup (Lee et al. 2022, "Deduplicating Training Data
@@ -23,7 +24,6 @@ import org.apache.spark.sql.functions._
   * state, no all-pairs.
   */
 object Spans {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   private val k = 20
@@ -150,11 +150,10 @@ object Spans {
       idCol: String,
       textCol: String,
       spanWords: Int = k,
-      maxPasses: Int = 4,
-      materialize: Boolean = true
+      maxPasses: Int = 4
   ): FixedPointResult = {
     require(maxPasses >= 1, s"maxPasses must be >= 1, got $maxPasses")
-    def pin(df: DataFrame): DataFrame = if (materialize) df.localCheckpoint(true) else df
+    def pin(df: DataFrame): DataFrame = df.localCheckpoint(true)
     val orig = pin(docs.select(col(idCol).as("doc_id"), col(textCol).as("text")))
     var current = orig
     val passes = scala.collection.mutable.ArrayBuffer.empty[SpanPass]
@@ -268,13 +267,8 @@ object Spans {
 
   val spanRemovalQ: Q = (s, d) => spanRemoval(documents(s, d), "doc_id", "text").orderBy("doc_id")
 
-  def queries: Map[String, Q] = Map(
-    "substring_dup_spans" -> substringDupSpans,
-    "span_removal" -> spanRemovalQ
-  )
-
-  def oracles: Map[String, String] = Map(
-    "substring_dup_spans" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("substring_dup_spans", substringDupSpans,
       s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          |sp AS (
          |  SELECT doc_id, md5(array_to_string(w[i:i + $k - 1], ' ')) AS dig
@@ -286,18 +280,18 @@ object Spans {
          |  round(CAST(sum(CASE WHEN o.n_occ >= 2 THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6)
          |    AS dup_span_frac
          |FROM sp s JOIN occ o ON o.dig = s.dig
-         |GROUP BY s.doc_id ORDER BY s.doc_id""".stripMargin,
+         |GROUP BY s.doc_id ORDER BY s.doc_id""".stripMargin),
     // covered-set formulation: a word index is cut iff SOME flagged
     // span covers it — equivalent to the engine's merged-interval
     // complement (the intervals are exactly the covered set's runs)
-    "span_removal" ->
+    Query("span_removal", spanRemovalQ,
       s"""WITH ${cutSqlFrom("documents", "")}
          |SELECT w.doc_id,
          |  coalesce(cl.ct, '') AS clean_text,
          |  CAST(len(w.w) AS BIGINT) AS n_words,
          |  CAST(len(w.w) - coalesce(cl.n_kept, 0) AS BIGINT) AS n_words_removed,
          |  CAST(length(w.text) - length(coalesce(cl.ct, '')) AS BIGINT) AS chars_removed
-         |FROM w LEFT JOIN cl USING (doc_id) ORDER BY w.doc_id""".stripMargin
+         |FROM w LEFT JOIN cl USING (doc_id) ORDER BY w.doc_id""".stripMargin)
   )
 
   /** DuckDB window-digest CTEs over any (doc_id, text) source:

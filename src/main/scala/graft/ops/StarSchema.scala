@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
 
 /** Flat → star-schema decomposition (SURVEY.md §2.D #50; reference
   * post_load_optimization/Flat_To_Star_Schema/Convert_To_Star_Schema.sql:317-446):
@@ -21,7 +22,6 @@ import org.apache.spark.sql.functions._
   * full parallelism instead of collapsing onto one task.
   */
 object StarSchema {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   /** Build a dimension: distinct natural-key rows + dense-rank
@@ -232,14 +232,6 @@ object StarSchema {
       .orderBy("o_orderkey")
   }
 
-  def queries: Map[String, Q] = Map(
-    "star_dims" -> dims,
-    "star_fact" -> fact,
-    "star_fact_multidim" -> factMultiDim,
-    "scd2_versions" -> scd2Versions,
-    "scd2_asof_orders" -> scd2AsofOrders
-  )
-
   // the snapshot construction + change detection + validity windows,
   // shared by both SCD2 oracles; change detection compares the raw
   // separated attr concat (md5 equality ≡ string equality)
@@ -271,12 +263,12 @@ object StarSchema {
       |    CAST(row_number() OVER (PARTITION BY c_custkey ORDER BY snap_id) AS BIGINT) AS version
       |  FROM ch)""".stripMargin
 
-  def oracles: Map[String, String] = Map(
-    "scd2_versions" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("scd2_versions", scd2Versions,
       s"""WITH $scd2ChainSql
          |SELECT c_custkey, version, c_mktsegment, valid_from, valid_to
-         |FROM v ORDER BY c_custkey, version""".stripMargin,
-    "scd2_asof_orders" ->
+         |FROM v ORDER BY c_custkey, version""".stripMargin),
+    Query("scd2_asof_orders", scd2AsofOrders,
       s"""WITH $scd2ChainSql,
          |f AS (
          |  SELECT o_orderkey, o_custkey, CAST(o_orderkey % 3 AS BIGINT) AS order_snap
@@ -284,13 +276,13 @@ object StarSchema {
          |SELECT f.o_orderkey, f.o_custkey, f.order_snap, v.c_mktsegment, v.valid_from
          |FROM f JOIN v ON v.c_custkey = f.o_custkey
          |  AND f.order_snap >= v.valid_from AND f.order_snap < v.valid_to
-         |ORDER BY f.o_orderkey""".stripMargin,
-    "star_dims" ->
+         |ORDER BY f.o_orderkey""".stripMargin),
+    Query("star_dims", dims,
       """SELECT CAST(dense_rank() OVER (ORDER BY o_orderstatus, o_orderpriority) AS BIGINT) AS dim_id,
         |       o_orderstatus, o_orderpriority
         |FROM (SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders)
-        |ORDER BY dim_id""".stripMargin,
-    "star_fact" ->
+        |ORDER BY dim_id""".stripMargin),
+    Query("star_fact", fact,
       """WITH dim AS (
         |  SELECT CAST(dense_rank() OVER (ORDER BY o_orderstatus, o_orderpriority) AS BIGINT) AS dim_id,
         |         o_orderstatus, o_orderpriority
@@ -300,8 +292,8 @@ object StarSchema {
         |FROM orders o JOIN dim d
         |  ON o.o_orderstatus IS NOT DISTINCT FROM d.o_orderstatus
         | AND o.o_orderpriority IS NOT DISTINCT FROM d.o_orderpriority
-        |ORDER BY o_orderkey""".stripMargin,
-    "star_fact_multidim" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("star_fact_multidim", factMultiDim,
       """WITH dim_s AS (
         |  SELECT CAST(dense_rank() OVER (ORDER BY o_orderstatus) AS BIGINT) AS status_id, o_orderstatus
         |  FROM (SELECT DISTINCT o_orderstatus FROM orders)),
@@ -313,6 +305,6 @@ object StarSchema {
         |FROM orders o
         |JOIN dim_s s ON o.o_orderstatus IS NOT DISTINCT FROM s.o_orderstatus
         |JOIN dim_p p ON o.o_orderpriority IS NOT DISTINCT FROM p.o_orderpriority
-        |ORDER BY o_orderkey""".stripMargin
+        |ORDER BY o_orderkey""".stripMargin)
   )
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Q, Query}
 
 /** Text-analysis operators for training-data pipelines: quality
   * scoring, token counting (whitespace + BPE-ish regex), a language-ID
@@ -12,7 +13,6 @@ import org.apache.spark.sql.functions._
   * one pass, no shuffle except the final aggregations.
   */
 object TextAnalysis {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   private val stopwords = Seq("the", "a", "of", "to", "and", "in")
@@ -412,20 +412,6 @@ object TextAnalysis {
       )
       .orderBy("doc_id")
 
-  def queries: Map[String, Q] = Map(
-    "gopher_rules" -> gopherRules,
-    "markup_strip" -> markupStrip,
-    "doc_winnow" -> docWinnow,
-    "dedup_winnow_pairs" -> dedupWinnowPairs,
-    "lang_id_confusion" -> langIdConfusion,
-    "text_normalize" -> textNormalize,
-    "text_stats" -> textStats,
-    "token_count" -> tokenCount,
-    "lang_id_heuristic" -> langIdHeuristic,
-    "doc_fingerprint" -> docFingerprint,
-    "top_tokens_per_lang" -> topTokensPerLang
-  )
-
   /** The winnow selection CTE chain up to `sel` (doc_id, n_kgrams,
     * fph) — shared by the doc_winnow and dedup_winnow_pairs oracles.
     */
@@ -453,8 +439,8 @@ object TextAnalysis {
        |  FROM win WHERE pos <= greatest(0, n - $winnowW))""".stripMargin
   }
 
-  def oracles: Map[String, String] = Map(
-    "gopher_rules" -> {
+  lazy val registry: Seq[Query] = Seq(
+    Query("gopher_rules", gopherRules, {
       val stops = requiredStops.map(w => s"'$w'").mkString(", ")
       s"""WITH planted AS (
          |  SELECT doc_id,
@@ -492,8 +478,8 @@ object TextAnalysis {
          |        AND alpha_word_micro >= 800000
          |        AND n_req_stops >= 2 THEN 1 ELSE 0 END AS BIGINT) AS gopher_pass
          |FROM m ORDER BY doc_id""".stripMargin
-    },
-    "markup_strip" ->
+    }),
+    Query("markup_strip", markupStrip,
       """WITH marked AS (
         |  SELECT doc_id,
         |    CASE WHEN doc_id % 4 = 0
@@ -515,8 +501,8 @@ object TextAnalysis {
         |  FROM marked)
         |SELECT doc_id, clean_text,
         |  CAST(length(marked) - length(clean_text) AS BIGINT) AS chars_removed
-        |FROM stripped ORDER BY doc_id""".stripMargin,
-    "text_normalize" ->
+        |FROM stripped ORDER BY doc_id""".stripMargin),
+    Query("text_normalize", textNormalize,
       """WITH noisy AS (
         |  SELECT doc_id,
         |    text || CASE WHEN doc_id % 5 = 0 THEN '  Extra!!  NOISE?? mixedCase' ELSE '' END AS noisy
@@ -527,16 +513,16 @@ object TextAnalysis {
         |  FROM noisy)
         |SELECT doc_id, norm_text,
         |  CAST(CASE WHEN length(noisy) <> length(norm_text) THEN 1 ELSE 0 END AS BIGINT) AS changed
-        |FROM n ORDER BY doc_id""".stripMargin,
-    "doc_winnow" ->
+        |FROM n ORDER BY doc_id""".stripMargin),
+    Query("doc_winnow", docWinnow,
       s"""WITH $winnowSelSql
          |SELECT doc_id, n_kgrams,
          |  CAST(count(*) AS BIGINT) AS n_fp,
          |  CAST(bit_xor(fph) AS BIGINT) AS fp_xor,
          |  CAST(min(fph) AS BIGINT) AS fp_min,
          |  CAST(max(fph) AS BIGINT) AS fp_max
-         |FROM sel GROUP BY doc_id, n_kgrams ORDER BY doc_id""".stripMargin,
-    "dedup_winnow_pairs" ->
+         |FROM sel GROUP BY doc_id, n_kgrams ORDER BY doc_id""".stripMargin),
+    Query("dedup_winnow_pairs", dedupWinnowPairs,
       s"""WITH $winnowSelSql,
          |s2 AS (SELECT DISTINCT doc_id, fph FROM sel),
          |sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_fp FROM s2 GROUP BY doc_id),
@@ -552,14 +538,14 @@ object TextAnalysis {
          |JOIN sizes sa ON sa.doc_id = p.doc_a
          |JOIN sizes sb ON sb.doc_id = p.doc_b
          |WHERE p.n_shared * 1000000 // least(sa.n_fp, sb.n_fp) >= 500000
-         |ORDER BY p.doc_a, p.doc_b""".stripMargin,
-    "lang_id_confusion" ->
+         |ORDER BY p.doc_a, p.doc_b""".stripMargin),
+    Query("lang_id_confusion", langIdConfusion,
       s"""SELECT lang,
          |  CASE WHEN len(list_filter(string_split(text, ' '), w -> w IN ($stopList))) > 0
          |       THEN 'en' ELSE 'unknown' END AS pred,
          |  CAST(count(*) AS BIGINT) AS n_docs
-         |FROM documents GROUP BY 1, 2 ORDER BY lang, pred""".stripMargin,
-    "text_stats" ->
+         |FROM documents GROUP BY 1, 2 ORDER BY lang, pred""".stripMargin),
+    Query("text_stats", textStats,
       s"""SELECT doc_id, lang,
          |  CAST(length(text) AS BIGINT) AS n_chars2,
          |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
@@ -571,15 +557,15 @@ object TextAnalysis {
          |        AND CAST(floor(len(list_filter(string_split(text, ' '), w -> w IN ($stopList))) * 100.0
          |                       / len(string_split(text, ' '))) AS BIGINT) BETWEEN 2 AND 60
          |       THEN 'ok' ELSE 'low' END AS quality
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "token_count" ->
+         |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("token_count", tokenCount,
       """SELECT doc_id,
         |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_ws,
         |  CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS n_bpe,
         |  CAST(floor(length(text) * 100.0 / len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]'))) AS BIGINT)
         |    AS chars_per_token_pct
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "lang_id_heuristic" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("lang_id_heuristic", langIdHeuristic,
       s"""WITH scored AS (
          |  SELECT lang,
          |    CASE WHEN len(list_filter(string_split(text, ' '), w -> w IN ($stopList))) > 0
@@ -588,8 +574,8 @@ object TextAnalysis {
          |SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
          |  CAST(sum(CASE WHEN pred = lang THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
          |  CAST(sum(CASE WHEN pred = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_pred_en
-         |FROM scored GROUP BY lang ORDER BY lang""".stripMargin,
-    "doc_fingerprint" ->
+         |FROM scored GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("doc_fingerprint", docFingerprint,
       """WITH sh AS (
         |  SELECT DISTINCT doc_id, shingle FROM (
         |    SELECT doc_id,
@@ -597,8 +583,8 @@ object TextAnalysis {
         |                            i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingle
         |    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)))
         |SELECT doc_id, min(md5('fp|' || shingle)) AS fingerprint
-        |FROM sh GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "top_tokens_per_lang" ->
+        |FROM sh GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("top_tokens_per_lang", topTokensPerLang,
       """WITH counts AS (
         |  SELECT lang, unnest(string_split(text, ' ')) AS token
         |  FROM documents),
@@ -610,6 +596,6 @@ object TextAnalysis {
         |    CAST(row_number() OVER (PARTITION BY lang ORDER BY n DESC, token ASC) AS BIGINT) AS rank
         |  FROM agg)
         |SELECT lang, rank, token, n FROM ranked WHERE rank <= 5
-        |ORDER BY lang, rank""".stripMargin
+        |ORDER BY lang, rank""".stripMargin)
   )
 }

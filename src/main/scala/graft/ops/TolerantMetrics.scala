@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.{Q, Query}
 
 /** ClickHouse-tolerance metric variants (SURVEY.md §2.E #52; reference
   * clickhouse_to_exasol.sql:204-246): the target engine coerces
@@ -19,7 +20,6 @@ import org.apache.spark.sql.types.DecimalType
   * actually load-bearing in the asserted output.
   */
 object TolerantMetrics {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   private def finite(c: Column): Column =
@@ -54,10 +54,8 @@ object TolerantMetrics {
         decStr(sum(finite(col("qty")).cast(DecimalType(36, 2))).cast(DecimalType(38, 2))).as("qty_sum")
       )
 
-  def queries: Map[String, Q] = Map("tolerant_metrics" -> tolerantMetrics)
-
-  def oracles: Map[String, String] = Map(
-    "tolerant_metrics" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("tolerant_metrics", tolerantMetrics,
       """WITH t AS (
         |  SELECT CASE WHEN l_linenumber = 7 THEN '' ELSE l_returnflag END AS sflag,
         |         CASE WHEN l_orderkey % 97 = 0 THEN 'infinity'::DOUBLE
@@ -71,6 +69,6 @@ object TolerantMetrics {
         |  CAST(min(CAST(CASE WHEN isfinite(qty) THEN qty END AS DECIMAL(36,2))) AS VARCHAR) AS qty_min,
         |  CAST(max(CAST(CASE WHEN isfinite(qty) THEN qty END AS DECIMAL(36,2))) AS VARCHAR) AS qty_max,
         |  CAST(CAST(sum(CAST(CASE WHEN isfinite(qty) THEN qty END AS DECIMAL(36,2))) AS DECIMAL(38,2)) AS VARCHAR) AS qty_sum
-        |FROM t""".stripMargin
+        |FROM t""".stripMargin)
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.{Q, Query}
 
 /** Sampled VARCHAR type inference + multi-format date probe + the
   * legacy rich metric set (SURVEY.md §2.E #54, #56, #57).
@@ -21,7 +22,6 @@ import org.apache.spark.sql.types.DecimalType
   * the per-column aggregation.
   */
 object VarcharInference {
-  type Q = (SparkSession, String) => DataFrame
   import Fixtures._
 
   private val sampleRows = 2000
@@ -187,13 +187,6 @@ object VarcharInference {
       )
       .orderBy("col_name")
 
-  def queries: Map[String, Q] = Map(
-    "classify_varchar" -> classifyVarchar,
-    "classify_varchar_stmts" -> classifyVarcharStmts,
-    "date_probe" -> dateProbe,
-    "rich_metrics" -> richMetrics
-  )
-
   private val tallSampleSql =
     s"""WITH sample AS (SELECT * FROM orders ORDER BY o_orderkey LIMIT $sampleRows),
        |tall AS (
@@ -204,8 +197,8 @@ object VarcharInference {
        |  UNION ALL SELECT 'geo_wkt', 'POINT (' || CAST(o_orderkey % 100 AS VARCHAR) || ' ' || CAST(o_custkey % 100 AS VARCHAR) || ')' FROM sample
        |  UNION ALL SELECT 'interval_ds', CAST(o_orderkey % 30 AS VARCHAR) || ' 12:30:45' FROM sample)""".stripMargin
 
-  def oracles: Map[String, String] = Map(
-    "classify_varchar" ->
+  lazy val registry: Seq[Query] = Seq(
+    Query("classify_varchar", classifyVarchar,
       s"""$tallSampleSql,
          |classified AS (
          |  SELECT col_name, val,
@@ -239,8 +232,8 @@ object VarcharInference {
          |       WHEN n_bool + n_int = n_vals THEN 'DECIMAL(18,0)'
          |       WHEN n_bool + n_int + n_dec = n_vals THEN 'DECIMAL(18,6)'
          |       ELSE 'VARCHAR(' || CAST(max_len AS VARCHAR) || ')' END AS verdict
-         |FROM aggd ORDER BY col_name""".stripMargin,
-    "classify_varchar_stmts" -> {
+         |FROM aggd ORDER BY col_name""".stripMargin),
+    Query("classify_varchar_stmts", classifyVarcharStmts, {
       val classifySql = // re-derive the classify oracle body (same CTEs)
         s"""$tallSampleSql,
            |classified AS (
@@ -283,8 +276,8 @@ object VarcharInference {
            |  END AS stmt
            |FROM verdicts ORDER BY col_name""".stripMargin
       classifySql
-    },
-    "date_probe" ->
+    }),
+    Query("date_probe", dateProbe,
       """WITH src AS (
         |  SELECT CASE WHEN o_orderkey % 2 = 0 THEN strftime(o_orderdate, '%d/%m/%Y')
         |              ELSE strftime(o_orderdate, '%Y-%m-%d') END AS sval
@@ -296,8 +289,8 @@ object VarcharInference {
         |  CAST(sum(CASE WHEN try_strptime(sval, '%d/%m/%Y') IS NOT NULL
         |                 AND try_strptime(sval, '%m/%d/%Y') IS NOT NULL
         |            THEN 1 ELSE 0 END) AS BIGINT) AS n_ambiguous
-        |FROM src""".stripMargin,
-    "rich_metrics" ->
+        |FROM src""".stripMargin),
+    Query("rich_metrics", richMetrics,
       """WITH metrics AS (
         |  SELECT o_orderstatus,
         |    CAST(count(*) AS BIGINT) AS n_rows,
@@ -322,6 +315,6 @@ object VarcharInference {
         |  CAST(totalprice_sum AS DOUBLE) / n_rows AS totalprice_avg,
         |  priority_mode, priority_top, priority_occ, priority_minlen, priority_maxlen
         |FROM metrics JOIN mode ON o_orderstatus = st2
-        |ORDER BY o_orderstatus""".stripMargin
+        |ORDER BY o_orderstatus""".stripMargin)
   )
 }

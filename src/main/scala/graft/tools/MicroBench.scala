@@ -26,7 +26,7 @@ object MicroBench {
 
     time("simhash_declarative", 3)(graft.ops.Dedup.simhashDeclarative(docs, "doc_id", "text"))
     time("simhash_udaf", 3)(graft.ops.Dedup.simhashUdafVariant(docs, "doc_id", "text"))
-    time("dedup_embedding_cosine", 3)(graft.ops.Similarity.queries("dedup_embedding_cosine")(spark, sfDir))
+    time("dedup_embedding_cosine", 3)(graft.SparkEntry.queries("dedup_embedding_cosine")(spark, sfDir))
     spark.stop()
   }
 }

@@ -8,45 +8,23 @@ import org.scalatest.funsuite.AnyFunSuite
 class SparkEntrySpec extends AnyFunSuite {
 
   test("no query-name collisions across operator modules") {
-    import graft.ops._
-    val moduleMaps: Seq[(String, Set[String])] = Seq(
-      "Relational" -> Relational.queries.keySet,
-      "CheckMigration" -> CheckMigration.queries.keySet,
-      "DdlGen" -> DdlGen.queries.keySet,
-      "StarSchema" -> StarSchema.queries.keySet,
-      "DeltaSync" -> DeltaSync.queries.keySet,
-      "Dedup" -> Dedup.queries.keySet,
-      "GraphDedup" -> GraphDedup.queries.keySet,
-      "Decontamination" -> Decontamination.queries.keySet,
-      "Paragraphs" -> Paragraphs.queries.keySet,
-      "Spans" -> Spans.queries.keySet,
-      "Safety" -> Safety.queries.keySet,
-      "Mixture" -> Mixture.queries.keySet,
-      "Cdc" -> Cdc.queries.keySet,
-      "DataSelection" -> DataSelection.queries.keySet,
-      "BpeTrain" -> BpeTrain.queries.keySet,
-      "QualityClassifier" -> QualityClassifier.queries.keySet,
-      "CorpusStats" -> CorpusStats.queries.keySet,
-      "Packing" -> Packing.queries.keySet,
-      "Profiling" -> Profiling.queries.keySet,
-      "VarcharInference" -> VarcharInference.queries.keySet,
-      "Similarity" -> Similarity.queries.keySet,
-      "TextAnalysis" -> TextAnalysis.queries.keySet,
-      "Chunking" -> Chunking.queries.keySet,
-      "Centrality" -> Centrality.queries.keySet,
-      "Search" -> Search.queries.keySet,
-      "Layout" -> Layout.queries.keySet,
-      "Multimodal" -> Multimodal.queries.keySet,
-      "Movement" -> Movement.queries.keySet,
-      "Events" -> Events.queries.keySet,
-      "TolerantMetrics" -> TolerantMetrics.queries.keySet,
-      "Pipeline" -> Pipeline.queries.keySet,
-      "StreamingIngest" -> graft.streaming.StreamingIngest.queries.keySet
+    // `Query.index` refuses a name registered twice, so building
+    // SparkEntry's registry from every module's records checks them all
+    val q = Query("dup_name", (s, _) => s.emptyDataFrame, "SELECT 1")
+    val e = intercept[IllegalArgumentException](
+      Query.index(Seq(q, Query("other", q.run, "SELECT 2"), q.copy(oracle = "SELECT 3")))
     )
-    val all = moduleMaps.flatMap { case (m, ks) => ks.map(_ -> m) }
-    val dups = all.groupBy(_._1).filter(_._2.size > 1)
-    assert(dups.isEmpty, s"duplicate query names: $dups")
-    assert(SparkEntry.queries.size == all.size, "SparkEntry lost or gained entries vs modules")
+    assert(e.getMessage.endsWith(": dup_name"), e.getMessage)
+    assert(SparkEntry.registry.nonEmpty)
+  }
+
+  test("a query subset naming an unregistered query fails and lists it") {
+    assert(SparkEntry.select(Some(Set("revenue_nation"))) == Seq("revenue_nation"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Some(Set("revenue_nation", "revenue_natoin")))
+    )
+    assert(e.getMessage.endsWith(": revenue_natoin"), e.getMessage)
+    assert(SparkEntry.select(None) == SparkEntry.queries.keys.toSeq.sorted)
   }
 
   test("every oracle refers to a registered query") {

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
 class CentralitySpec extends SparkSpec {
@@ -127,12 +127,12 @@ class CentralitySpec extends SparkSpec {
 
   test("graph datasheet: degree buckets account for every doc; triangles count closed cliques") {
     val d = "/root/testdata/sf0.001"
-    val hist = Centrality.queries("graph_degree_hist")(spark, d)
+    val hist = SparkEntry.queries("graph_degree_hist")(spark, d)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val nDocs = Fixtures.documents(spark, d).count()
     assert(hist.values.sum == nDocs, s"buckets must partition the corpus: $hist vs $nDocs")
     assert(hist.keySet.subsetOf(Set(0L, 1L, 2L, 3L)))
-    val tri = Centrality.queries("graph_triangles")(spark, d).collect().head
+    val tri = SparkEntry.queries("graph_triangles")(spark, d).collect().head
     assert(tri.getAs[Long]("n_edges") > 0)
     // triangles are bounded by the wedge count of an n-edge graph
     assert(tri.getAs[Long]("n_triangles") >= 0)
@@ -153,9 +153,9 @@ class CentralitySpec extends SparkSpec {
 
   test("reps pick the highest-rank member per cluster, bit-consistent with the rank query") {
     val d = "/root/testdata/sf0.001"
-    val ranks = Centrality.queries("centrality_pagerank")(spark, d)
+    val ranks = SparkEntry.queries("centrality_pagerank")(spark, d)
       .select(col("doc_id"), col("rank_micro"))
-    val clusters = GraphDedup.queries("dedup_clusters")(spark, d)
+    val clusters = SparkEntry.queries("dedup_clusters")(spark, d)
       .select(col("doc_id"), col("cluster_id"))
     val wantReps = clusters
       .join(ranks, "doc_id")
@@ -167,7 +167,7 @@ class CentralitySpec extends SparkSpec {
       .select(col("cluster_id"), col("cluster_size"), col("b.id").as("rep_id"),
         (-col("b.nr")).as("rep_rank_micro"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    val gotReps = Centrality.queries("centrality_reps")(spark, d)
+    val gotReps = SparkEntry.queries("centrality_reps")(spark, d)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(gotReps == wantReps)
     assert(gotReps.nonEmpty && gotReps.exists(_._2._1 > 1), "fixture must contain a real cluster")

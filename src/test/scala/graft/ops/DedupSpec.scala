@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -201,7 +201,7 @@ class DedupSpec extends SparkSpec {
       df <- Seq(
         Dedup.dedupNgramJaccard(spark, "/root/testdata/sf0.001"),
         Dedup.dedupBlockedFallback(spark, "/root/testdata/sf0.001"),
-        Similarity.queries("dedup_embedding_cosine")(spark, "/root/testdata/sf0.001")
+        SparkEntry.queries("dedup_embedding_cosine")(spark, "/root/testdata/sf0.001")
       )
     ) {
       df.collect() // materialize so AQE finalizes the physical plan

@@ -252,4 +252,15 @@ class GenerationsSpec extends SparkSpec {
       }
     }
   }
+
+  test("a rebuild onto a used index dir inherits none of its generation state") {
+    import spark.implicits._
+    val dir = tempDir("graft_gen_rebuild").resolve("idx").toString
+    Search.saveSearchIndex(Seq((1L, "cat dog"), (2L, "cat")).toDF("doc_id", "text"), "doc_id", "text", dir)
+    Search.deleteFromSearchIndex(spark, dir, Seq(2L))
+    Search.saveSearchIndex(Seq((2L, "cat bird"), (3L, "cat")).toDF("doc_id", "text"), "doc_id", "text", dir)
+    val got = Search.conjunctiveFromIndex(spark, dir, Seq("cat"), 10).select("doc_id").as[Long].collect().toSet
+    assert(got == Set(2L, 3L), "the old tombstone of doc 2 must not kill its rebuilt rows")
+    assert(!Files.exists(Paths.get(dir, "tombstones")))
+  }
 }

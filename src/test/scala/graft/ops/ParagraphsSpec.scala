@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
 class ParagraphsSpec extends SparkSpec {
@@ -202,8 +202,7 @@ class ParagraphsSpec extends SparkSpec {
     ).toDF("doc_id", "text", "lang")
     // langSegments reads the fixture accessor; exercise the core by
     // substituting a temp view through the same expressions
-    val got = Paragraphs
-      .queries("lang_segments")(spark, "/root/testdata/sf0.001")
+    val got = SparkEntry.queries("lang_segments")(spark, "/root/testdata/sf0.001")
     assert(got.columns.toSeq == Seq("doc_id", "lang", "n_paras", "n_en_paras", "n_switches", "mixed"))
     // crafted assertion path: run the same chain over the crafted docs
     import org.apache.spark.sql.functions._

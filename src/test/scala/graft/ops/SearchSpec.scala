@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import graft.ops.Search.Analyzer.Folded
 import org.apache.spark.sql.functions._
 
@@ -111,8 +111,8 @@ class SearchSpec extends SparkSpec {
     assert(m3 == con)
     // index-served twin equals the corpus route on the fixture corpus
     val d = "/root/testdata/sf0.001"
-    val corpus = Search.queries("search_min_match")(spark, d).collect().toSeq
-    val index = Search.queries("search_min_match_index")(spark, d).collect().toSeq
+    val corpus = SparkEntry.queries("search_min_match")(spark, d).collect().toSeq
+    val index = SparkEntry.queries("search_min_match_index")(spark, d).collect().toSeq
     assert(corpus.nonEmpty && corpus == index)
     // out-of-range gates fail loudly
     intercept[IllegalArgumentException] {
@@ -369,8 +369,8 @@ class SearchSpec extends SparkSpec {
     }
     // index twin equals the corpus route on the fixture corpus
     val d = "/root/testdata/sf0.001"
-    val corpus = Search.queries("search_synonym")(spark, d).collect().toSeq
-    val index = Search.queries("search_synonym_index")(spark, d).collect().toSeq
+    val corpus = SparkEntry.queries("search_synonym")(spark, d).collect().toSeq
+    val index = SparkEntry.queries("search_synonym_index")(spark, d).collect().toSeq
     assert(corpus.nonEmpty && corpus == index)
   }
 
@@ -417,8 +417,8 @@ class SearchSpec extends SparkSpec {
       Search.booleanSearch(docs, "doc_id", "text", Seq("cat"), Seq("cat"), 10)
     }
     val d = "/root/testdata/sf0.001"
-    val corpus = Search.queries("search_boolean_not")(spark, d).collect().toSeq
-    val index = Search.queries("search_boolean_not_index")(spark, d).collect().toSeq
+    val corpus = SparkEntry.queries("search_boolean_not")(spark, d).collect().toSeq
+    val index = SparkEntry.queries("search_boolean_not_index")(spark, d).collect().toSeq
     assert(corpus.nonEmpty && corpus == index)
   }
 
@@ -434,17 +434,17 @@ class SearchSpec extends SparkSpec {
     assert(pairs(3) == Map(1L -> 1L, 2L -> 1L, 4L -> 3L), pairs(3).toString)
     assert(pairs(2) == Map(2L -> 1L, 4L -> 3L))
     val d = "/root/testdata/sf0.001"
-    val corpus = Search.queries("search_proximity")(spark, d).collect().toSeq
-    val index = Search.queries("search_proximity_index")(spark, d).collect().toSeq
+    val corpus = SparkEntry.queries("search_proximity")(spark, d).collect().toSeq
+    val index = SparkEntry.queries("search_proximity_index")(spark, d).collect().toSeq
     assert(corpus.nonEmpty && corpus == index)
     // proximity at slop 3 is strictly wider than the exact phrase
-    val phrase = Search.queries("search_phrase")(spark, d).collect().map(_.getAs[Long]("doc_id")).toSet
+    val phrase = SparkEntry.queries("search_phrase")(spark, d).collect().map(_.getAs[Long]("doc_id")).toSet
     val prox = corpus.map(_.getAs[Long]("doc_id")).toSet
     assert(phrase.subsetOf(prox) && prox.size > phrase.size)
   }
 
   test("conjunctive plan: top-k is TakeOrderedAndProject; contains-prune reaches the scan") {
-    val q = Search.queries("search_conjunctive")(spark, "/root/testdata/sf0.001")
+    val q = SparkEntry.queries("search_conjunctive")(spark, "/root/testdata/sf0.001")
     q.collect()
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), plan.take(1500))
@@ -596,17 +596,17 @@ class SearchSpec extends SparkSpec {
     val d = "/root/testdata/sf0.001"
     val an = Search.demoAnalyzedIndexDir(spark, d)
     val plans = Seq(
-      Search.queries("search_min_match_index")(spark, d),
+      SparkEntry.queries("search_min_match_index")(spark, d),
       Search.minShouldMatchFromIndex(
         spark, an, Search.fixtureMinTerms.map(_.toUpperCase), Search.fixtureMinMatch, 10, Folded),
-      Search.queries("search_boolean_not_index")(spark, d),
-      Search.queries("search_proximity_index")(spark, d),
-      Search.queries("search_synonym_index")(spark, d),
-      Search.queries("search_prefix_index")(spark, d),
-      Search.queries("search_prefix_analyzed_index")(spark, d),
-      Search.queries("search_fuzzy_index")(spark, d),
-      Search.queries("search_fuzzy_analyzed_index")(spark, d),
-      Search.queries("search_wildcard_index")(spark, d),
+      SparkEntry.queries("search_boolean_not_index")(spark, d),
+      SparkEntry.queries("search_proximity_index")(spark, d),
+      SparkEntry.queries("search_synonym_index")(spark, d),
+      SparkEntry.queries("search_prefix_index")(spark, d),
+      SparkEntry.queries("search_prefix_analyzed_index")(spark, d),
+      SparkEntry.queries("search_fuzzy_index")(spark, d),
+      SparkEntry.queries("search_fuzzy_analyzed_index")(spark, d),
+      SparkEntry.queries("search_wildcard_index")(spark, d),
       Search.wildcardSearchFromIndex(
         spark, an, Search.fixtureWildcard.toUpperCase, Search.fixtureWildcardExpand, 10, Folded)
     ).map(_.queryExecution.executedPlan.toString)
@@ -618,19 +618,19 @@ class SearchSpec extends SparkSpec {
   test("round-16 routes prune to their clauses' bucket dirs (PartitionFilters pins)") {
     val d = "/root/testdata/sf0.001"
     val plans = Seq(
-      Search.queries("search_query_string_fielded")(spark, d),
-      Search.queries("search_query_string_fuzzy")(spark, d),
-      Search.queries("search_query_string_range")(spark, d),
-      Search.queries("search_query_string_analyzed")(spark, d),
-      Search.queries("search_query_string_page")(spark, d),
+      SparkEntry.queries("search_query_string_fielded")(spark, d),
+      SparkEntry.queries("search_query_string_fuzzy")(spark, d),
+      SparkEntry.queries("search_query_string_range")(spark, d),
+      SparkEntry.queries("search_query_string_analyzed")(spark, d),
+      SparkEntry.queries("search_query_string_page")(spark, d),
       Search.searchQueryStringPageAfter(
         spark, Search.demoAnalyzedIndexDir(spark, d), Search.fixtureQueryStringWide.toUpperCase, 10,
         Long.MaxValue, -1L, a = Folded),
-      Search.queries("search_auto_correct_multi")(spark, d),
-      Search.queries("search_grouped_topk")(spark, d),
-      Search.queries("search_grouped_topk_analyzed")(spark, d),
-      Search.queries("search_facets_multi")(spark, d),
-      Search.queries("search_bm25f_deleted")(spark, d)
+      SparkEntry.queries("search_auto_correct_multi")(spark, d),
+      SparkEntry.queries("search_grouped_topk")(spark, d),
+      SparkEntry.queries("search_grouped_topk_analyzed")(spark, d),
+      SparkEntry.queries("search_facets_multi")(spark, d),
+      SparkEntry.queries("search_bm25f_deleted")(spark, d)
     ).map(_.queryExecution.executedPlan.toString)
     plans.foreach { plan =>
       assert(plan.contains("PartitionFilters: [") && plan.contains("tbucket"), plan.take(2000))
@@ -638,11 +638,11 @@ class SearchSpec extends SparkSpec {
     // the analyzed passage page's RETURNED plan is the render join —
     // its store read must prune to the page's dbucket dirs (the
     // positional tbucket prune runs inside the eager page step)
-    val bpPlan = Search.queries("search_best_passage_analyzed")(spark, d)
+    val bpPlan = SparkEntry.queries("search_best_passage_analyzed")(spark, d)
       .queryExecution.executedPlan.toString
     assert(bpPlan.contains("PartitionFilters: [") && bpPlan.contains("dbucket"), bpPlan.take(2000))
     // the multi-facet store read column-prunes: text must never load
-    val mfPlan = Search.queries("search_facets_multi")(spark, d)
+    val mfPlan = SparkEntry.queries("search_facets_multi")(spark, d)
       .queryExecution.executedPlan.toString
     assert(!mfPlan.contains("text#"), "multi-facet sidebar must not read the text column")
   }
@@ -1339,8 +1339,8 @@ class SearchSpec extends SparkSpec {
 
   test("fixture searches are non-degenerate at sf0.001") {
     val d = "/root/testdata/sf0.001"
-    assert(Search.queries("search_postings")(spark, d).count() > 0)
-    assert(Search.queries("search_phrase")(spark, d).count() > 0)
+    assert(SparkEntry.queries("search_postings")(spark, d).count() > 0)
+    assert(SparkEntry.queries("search_phrase")(spark, d).count() > 0)
   }
 
   test("delete: tombstone serving equals a live-corpus rebuild; idempotent decrement; purge heals") {
@@ -1903,13 +1903,13 @@ class SearchSpec extends SparkSpec {
     assert(pairs(3) == Map(1L -> 1L, 4L -> 2L), pairs(3).toString)
     assert(pairs(1) == Map(4L -> 1L), "slop 1 is exact adjacency")
     val d = "/root/testdata/sf0.001"
-    val corpus = Search.queries("search_phrase_slop")(spark, d).collect().toSeq
-    val index = Search.queries("search_phrase_slop_index")(spark, d).collect().toSeq
+    val corpus = SparkEntry.queries("search_phrase_slop")(spark, d).collect().toSeq
+    val index = SparkEntry.queries("search_phrase_slop_index")(spark, d).collect().toSeq
     assert(corpus.nonEmpty && corpus == index)
     // lattice on the shared fixture pair: exact phrase ⊆ ordered slop ⊆ unordered proximity
-    val phrase = Search.queries("search_phrase")(spark, d).collect().map(_.getAs[Long]("doc_id")).toSet
+    val phrase = SparkEntry.queries("search_phrase")(spark, d).collect().map(_.getAs[Long]("doc_id")).toSet
     val slop = corpus.map(_.getAs[Long]("doc_id")).toSet
-    val prox = Search.queries("search_proximity")(spark, d).collect().map(_.getAs[Long]("doc_id")).toSet
+    val prox = SparkEntry.queries("search_proximity")(spark, d).collect().map(_.getAs[Long]("doc_id")).toSet
     assert(phrase.subsetOf(slop) && slop.subsetOf(prox))
   }
 
@@ -1955,7 +1955,7 @@ class SearchSpec extends SparkSpec {
 
   test("groupedTopK: per-group cap binds; cap ≥ k reduces to the plain BM25 page") {
     val d = "/root/testdata/sf0.001"
-    val grouped = Search.queries("search_grouped_topk")(spark, d).collect()
+    val grouped = SparkEntry.queries("search_grouped_topk")(spark, d).collect()
     assert(grouped.nonEmpty)
     val perLang = grouped.groupBy(_.getAs[String]("lang")).view.mapValues(_.length)
     assert(perLang.values.forall(_ <= 3), perLang.toMap.toString)
@@ -2230,8 +2230,8 @@ class SearchSpec extends SparkSpec {
     assert(got.map(_._1).toSet == Set(1L, 2L))
     // fixture corpus: the index-served route must equal the corpus pass
     val d = "/root/testdata/sf0.001"
-    val corpus = Search.queries("search_chunk_bm25")(spark, d).collect().toSeq
-    val index = Search.queries("search_chunk_bm25_index")(spark, d).collect().toSeq
+    val corpus = SparkEntry.queries("search_chunk_bm25")(spark, d).collect().toSeq
+    val index = SparkEntry.queries("search_chunk_bm25_index")(spark, d).collect().toSeq
     assert(corpus.nonEmpty && corpus == index)
   }
 

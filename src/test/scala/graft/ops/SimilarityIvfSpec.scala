@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
 class SimilarityIvfSpec extends SparkSpec {
@@ -140,7 +140,7 @@ class SimilarityIvfSpec extends SparkSpec {
   }
 
   test("the incremental embedding query exercises the >=0.5 regime through the index route") {
-    val out = Similarity.queries("dedup_incremental_embedding")(spark, dir).collect()
+    val out = SparkEntry.queries("dedup_incremental_embedding")(spark, dir).collect()
     val strong = out.filter(r =>
       r.getAs[String]("src") == "index" && r.getAs[Double]("cos_sim") >= 0.5
     )
@@ -535,7 +535,7 @@ class SimilarityIvfSpec extends SparkSpec {
     assert(got.head._3 == 0.894427 && got(1)._3 == 0.743294, got.toString)
     // the rank-limit window must group-limit (k rows per anchor per
     // map partition forwarded, not the full candidate set)
-    val q = Similarity.queries("ann_hard_negatives")(spark, "/root/testdata/sf0.001")
+    val q = SparkEntry.queries("ann_hard_negatives")(spark, dir)
     q.collect()
     assert(q.queryExecution.executedPlan.toString.contains("WindowGroupLimit"))
   }
@@ -592,7 +592,7 @@ class SimilarityIvfSpec extends SparkSpec {
     assert(hcos > gcos, "premise: the hub pair must WIN on raw cosine")
     assert(gmargin > hmargin, s"margin must demote the hub: $all")
     // and the fixture-threshold query stays non-degenerate
-    val rows = Similarity.queries("bitext_mine")(spark, "/root/testdata/sf0.001").collect()
+    val rows = SparkEntry.queries("bitext_mine")(spark, dir).collect()
     assert(rows.nonEmpty)
     assert(rows.map(_.getLong(0)).distinct.length == rows.length, "one forward pair per x")
   }

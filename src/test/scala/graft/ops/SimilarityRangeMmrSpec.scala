@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Radius (range) search + MMR diversification — the two page-free ANN
@@ -162,7 +162,7 @@ class SimilarityRangeMmrSpec extends SparkSpec {
   }
 
   test("mmrTopK fixture query: rank-1 equals the brute top-1 (query excluded); k rows out") {
-    val got = Similarity.queries("ann_mmr_topk")(spark, d).orderBy("rank").collect()
+    val got = SparkEntry.queries("ann_mmr_topk")(spark, d).orderBy("rank").collect()
     assert(got.length == 4)
     val brute = Similarity.cosineTopK(Fixtures.embeddings(spark, d), 0L, 2)
       .collect().map(_.getAs[Long]("vec_id")).filter(_ != 0L).head

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import graft.ops.Search.Analyzer.Folded
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -330,8 +330,7 @@ class StreamingIngestSpec extends SparkSpec {
   test("embedding near-dup stream equals the one-shot incremental vector probe") {
     val sfDir = "/root/testdata/sf0.001"
     val streamed = StreamingIngest.embDedupStreamReplay(spark, sfDir).collect()
-    val oneShot = graft.ops.Similarity
-      .queries("dedup_incremental_embedding")(spark, sfDir)
+    val oneShot = SparkEntry.queries("dedup_incremental_embedding")(spark, sfDir)
       .collect()
     assert(streamed.toSeq == oneShot.toSeq)
     // the seeded clones must flag their indexed sources through the
@@ -570,8 +569,7 @@ class StreamingIngestSpec extends SparkSpec {
       .collect()
       .map(_.toSeq)
       .toSeq
-    val batch = graft.ops.CorpusStats
-      .queries("perplexity_score")(spark, d)
+    val batch = SparkEntry.queries("perplexity_score")(spark, d)
       .collect()
       .map(_.toSeq)
       .toSeq
@@ -585,8 +583,7 @@ class StreamingIngestSpec extends SparkSpec {
       .collect()
       .map(_.toSeq)
       .toSeq
-    val batch = graft.ops.CorpusStats
-      .queries("sketch_topk_tokens")(spark, d)
+    val batch = SparkEntry.queries("sketch_topk_tokens")(spark, d)
       .collect()
       .map(_.toSeq)
       .toSeq
@@ -975,7 +972,7 @@ class StreamingIngestSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       Seq("delta_apply_stream", "search_facets_stream", "events_stream_replay").foreach { name =>
-        assert(StreamingIngest.queries(name)(spark, "/root/testdata/sf0.001").count() > 0, name)
+        assert(SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count() > 0, name)
       }
       // 1 CDC drain + 2 × 2 sibling facet drains + 2 window-replay phases
       eventually(timeout(Span(60, Seconds))) {
