@@ -46,7 +46,7 @@ object Relational {
   val limitSample: Q = (s, d) =>
     lineitem(s, d)
       .select("l_orderkey", "l_linenumber", "l_quantity")
-      .orderBy("l_orderkey", "l_linenumber")
+      .orderBy("l_orderkey", "l_linenumber", "l_quantity")
       .limit(1000)
 
   // §2.G #70 null-safe equality join (Convert_To_Star_Schema.sql:372-380
@@ -131,7 +131,7 @@ object Relational {
         |GROUP BY n_name ORDER BY n_name""".stripMargin),
     Query("limit_sample", limitSample,
       """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber LIMIT 1000""".stripMargin),
+        |ORDER BY l_orderkey, l_linenumber, l_quantity LIMIT 1000""".stripMargin),
     Query("null_safe_join", nullSafeJoin,
       """WITH c AS (SELECT nullif(c_nationkey % 5, 0) AS k FROM customer),
         |     s AS (SELECT DISTINCT nullif(s_nationkey % 5, 0) AS k2 FROM supplier)

@@ -26,39 +26,39 @@ import graft.Query.FirstRun
   *    without shipping either side's postings.
   *
   *  - [[conjunctiveSearch]]: AND-of-terms search, coarse-then-exact.
-  *    A conjunctive match REQUIRES every query term as a substring, so
-  *    the corpus scan is pre-filtered with `contains(text, term)` for
-  *    all terms — a pushable predicate that prunes the explode to the
-  *    candidate docs (false positives only; the exact token match
-  *    re-checks). Scoring is the corpus convention: tf · smoothed-IDF
-  *    micro (floor(ln((N+1)/(df+1))·1e6), [[CorpusStats]]'s exact
-  *    form), summed over matched terms; AND semantics via
-  *    count(distinct matched term) = |query|. The query-term relation
-  *    is literal-sized, so the df model broadcast is bytes.
+  *    Scoring is the corpus convention: tf · smoothed-IDF micro
+  *    (floor(ln((N+1)/(df+1))·1e6), [[CorpusStats]]'s exact form),
+  *    summed over matched terms; AND semantics via count(distinct
+  *    matched term) = |query|. df per term is the posting count of the
+  *    term-pruned postings, and the query-term model is literal-sized,
+  *    so its broadcast is bytes.
   *
-  *  - [[phraseSearch]]: exact adjacent-bigram phrase match. Positions
-  *    come from one posexplode pass over the contains-pruned docs;
-  *    adjacency is lead(token) over (partition by doc, order by pos)
-  *    — a per-document window (a partition is one document, never
-  *    skewed) so the phrase check is a single pass with no self-join
-  *    re-scan.
+  *  - [[phraseSearch]]: exact n-term phrase match as a rarest-first
+  *    fold of (doc_id, start) equi-joins over the phrase terms' own
+  *    positions — no per-document window, no self-join beyond the
+  *    query's terms.
   *
-  * Every route has ONE implementation, and the token analyzer is a
-  * parameter of it: pass [[Analyzer.Raw]] (the default — tokens as
-  * written) or [[Analyzer.Folded]] (case and edge punctuation folded
-  * on both sides — the mode a production search box serves). The
-  * analyzer owns the query-term normalisation, the token column a
-  * route builds and prunes on, and the names of the persisted
-  * relations it reads, so the term, BM25, batch, phrase, slop, facet,
-  * grouped, passage, KWIC and query-string routes — corpus and index
-  * alike — share one code path per route; every index probe starts
-  * from the one bucket-pruned scan ([[pruned]]) and scores with the
-  * one idf model ([[idfModel]]). Builds and maintenance take
-  * `analyzed = true` to ALSO maintain the folded tier (a cold-start
-  * stream has no index yet to read that choice from).
-  * [[analyzedFromIndex]], [[analyzedBm25FromIndex]] and
-  * [[analyzedPhraseFromIndex]] keep their published names as one-line
-  * calls into the shared routes for existing callers.
+  * Every route has ONE implementation, and both the token analyzer and
+  * the index mode are parameters of it. The [[Analyzer]] is
+  * [[Analyzer.Raw]] (the default — tokens as written) or
+  * [[Analyzer.Folded]] (case and edge punctuation folded on both sides
+  * — the mode a production search box serves); it owns the query-term
+  * normalisation, the token column a route builds and prunes on, and
+  * the names of the persisted relations it reads. The [[Source]] is
+  * where the postings come from: the corpus read in place
+  * ([[Corpus]]: coarse `contains` prunes, pushable to the scan), a
+  * persisted index ([[Index]]: the one bucket-pruned scan, [[pruned]])
+  * or that index as of a generation ([[AsOf]]). So the term, BM25,
+  * chunk, batch, phrase, proximity, slop, prefix, boolean and synonym
+  * routes each score, gate and rank once, with the one idf model
+  * ([[idfModel]]). Builds and maintenance take `analyzed = true` to
+  * ALSO maintain the folded tier (a cold-start stream has no index yet
+  * to read that choice from). [[bm25FromIndex]],
+  * [[analyzedBm25FromIndex]], [[conjunctiveFromIndex]],
+  * [[analyzedFromIndex]], [[phraseFromIndex]] and
+  * [[analyzedPhraseFromIndex]] keep their published names — the
+  * serving benchmark calls them — as one-line calls into the shared
+  * routes over an [[Index]].
   */
 object Search {
   import Fixtures._
@@ -174,6 +174,103 @@ object Search {
   }
   import Analyzer.{Folded, Raw}
 
+  /** Where a route reads its postings from — the INDEX MODE, a
+    * parameter of every route exactly like the [[Analyzer]]. A route's
+    * scoring, gating and ranking are written once; a Source supplies
+    * the four inputs routes read, each under the route's analyzer:
+    *
+    *  - term-pruned postings (token, doc_id, tf, <the analyzer's dl>);
+    *  - term-pruned positions (token, doc_id, pos);
+    *  - the scalars N and (N, total tokens);
+    *  - the (token, df) dictionary the expansion routes rank.
+    *
+    * Postings and positions carry EVERY document holding a term, so df
+    * counted over them is exact. A [[Corpus]] therefore prunes its scan
+    * with the OR of the terms' coarse contains predicates — never the
+    * AND, which would drop single-term documents and undercount df.
+    */
+  sealed abstract class Source {
+    private[ops] def session: SparkSession
+
+    /** What error messages name. */
+    private[ops] def what: String
+    private[ops] def postings(terms: Seq[String], a: Analyzer): DataFrame
+    private[ops] def positions(terms: Seq[String], a: Analyzer): DataFrame
+
+    /** N, the live document count (analyzer-independent). */
+    private[ops] def nDocs: Long
+
+    /** (N, total tokens under the analyzer) — BM25's model scalars. */
+    private[ops] def scalars(a: Analyzer): (Long, Long)
+
+    /** (token, df) rows covering every token that contains `within` —
+      * the corpus prunes its pass with it, an index reads its vocab.
+      */
+    private[ops] def dictionary(a: Analyzer, within: String): DataFrame
+  }
+
+  /** The corpus read in place: each read is one contains-pruned pass
+    * over `docs` (pushable to the scan), N is countDistinct(id) — the
+    * convention the index meta shares.
+    */
+  final case class Corpus(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text") extends Source {
+    private[ops] def session: SparkSession = docs.sparkSession
+    private[ops] def what: String = "the corpus"
+    private def containing(terms: Seq[String], a: Analyzer): DataFrame =
+      docs.filter(terms.map(a.contains(textCol, _)).reduce(_ || _))
+    private[ops] def postings(terms: Seq[String], a: Analyzer): DataFrame =
+      postingsWithDl(containing(terms, a), idCol, textCol, a).filter(col("token").isin(terms: _*))
+    private[ops] def positions(terms: Seq[String], a: Analyzer): DataFrame =
+      positionalPostings(containing(terms, a), idCol, textCol, a).filter(col("token").isin(terms: _*))
+    private[ops] def nDocs: Long = docs.agg(countDistinct(col(idCol)).cast("long")).head().getLong(0)
+    private[ops] def scalars(a: Analyzer): (Long, Long) = {
+      val r = docs.agg(countDistinct(col(idCol)).cast("long"), tokenTotal(textCol, a)).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    private[ops] def dictionary(a: Analyzer, within: String): DataFrame =
+      Search.postings(containing(Seq(within), a), idCol, textCol, a)
+        .groupBy(col("token"))
+        .agg(count(lit(1)).cast("long").as("df"))
+  }
+
+  /** A persisted index at `dir`, read live or as of a generation: the
+    * terms' bucket dirs through [[pruned]], the meta scalars, the vocab
+    * (the live dictionary in both cases — it only SELECTS terms; df
+    * for scoring always comes from the pruned postings).
+    */
+  sealed abstract class Persisted(asOf: Option[Long]) extends Source {
+    def s: SparkSession
+    def dir: String
+    private[ops] def session: SparkSession = s
+    private[ops] def what: String = s"index at $dir"
+    private[ops] def postings(terms: Seq[String], a: Analyzer): DataFrame = postingsScan(s, dir, terms, a, asOf)
+    private[ops] def positions(terms: Seq[String], a: Analyzer): DataFrame = positionsScan(s, dir, terms, a, asOf)
+    private[ops] def dictionary(a: Analyzer, within: String): DataFrame = vocabRows(s, dir, a)
+  }
+
+  /** The live index. */
+  final case class Index(s: SparkSession, dir: String) extends Persisted(None) {
+    private[ops] def nDocs: Long = readMeta(s, dir)._1
+    private[ops] def scalars(a: Analyzer): (Long, Long) = a.scalars(s, dir)
+  }
+
+  /** TIME TRAVEL: the index exactly as it served after generation
+    * `gen` — later batches' rows invisible, later tombstones unapplied
+    * (an upsert's OLD version serves again), N and total tokens
+    * reconstructed from the increment ledger ([[metaAsOf]]). Valid
+    * back to the last compaction (a purge physically drops history,
+    * Lucene's retention contract); generations up to the first upsert
+    * reconstruct exactly, and across an upsert window the ledger N
+    * carries the documented Lucene overcount until compaction.
+    */
+  final case class AsOf(s: SparkSession, dir: String, gen: Long) extends Persisted(Some(gen)) {
+    private[ops] def nDocs: Long = metaAsOf(s, dir, gen)._1
+    private[ops] def scalars(a: Analyzer): (Long, Long) = {
+      require(a == Raw, "time-travel reads serve the raw tier only")
+      metaAsOf(s, dir, gen)
+    }
+  }
+
   /** Kept to two engine-portable operations so the DuckDB oracle runs
     * the same chain.
     */
@@ -269,30 +366,16 @@ object Search {
 
   private def idfName(scale: Long): String = if (scale == 1000L) "idf_milli" else "idf_micro"
 
-  /** (token, idf) model over PRUNED posting rows: df per token is the
-    * rows' count (postings are one row per (token, doc)), N comes from
-    * the index meta — the model every index probe broadcasts.
+  /** (token, idf) model over a source's term-pruned posting rows: df
+    * per token is the rows' count (postings are one row per (token,
+    * doc), every document holding the term included), N comes from the
+    * source — the model every route broadcasts.
     */
   private def idfModel(p: DataFrame, nDocs: Long, scale: Long): DataFrame =
     p.groupBy(col("token"))
       .agg(count(lit(1)).cast("long").as("df"))
       .withColumn(idfName(scale), idfCol(lit(nDocs + 1), scale))
       .select(col("token"), col(idfName(scale)))
-
-  /** (token, df) over the corpus for each query term: one pruned pass
-    * PER TERM — df over a conjunctive candidate set would undercount,
-    * so each term's df counts on its own single-term prune (term-count
-    * bounded).
-    */
-  private def corpusDf(docs: DataFrame, idCol: String, textCol: String, terms: Seq[String], a: Analyzer): DataFrame =
-    terms
-      .map { t =>
-        postings(docs.filter(a.contains(textCol, t)), idCol, textCol, a)
-          .filter(col("token") === t)
-          .groupBy(col("token"))
-          .agg(count(lit(1)).cast("long").as("df"))
-      }
-      .reduce(_ union _)
 
   /** Shared top-k tail: orderBy+limit plans as TakeOrderedAndProject
     * (per-partition heaps, no full sort); the rank column is stamped
@@ -310,6 +393,27 @@ object Search {
           .cast("bigint")
       )
       .select(col("rank"), col("doc_id"), col(scoreCol))
+  }
+
+  /** The batched routes' top-k tail: a rank-limit window per query
+    * (WindowGroupLimit forwards k rows per query per partition — never
+    * a global sort).
+    */
+  private def rankTopPerQuery(scored: DataFrame, scoreCol: String, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    scored
+      .withColumn(
+        "rank",
+        row_number()
+          .over(
+            Window
+              .partitionBy(col("query_id"))
+              .orderBy(col(scoreCol).desc, col("doc_id").asc)
+          )
+          .cast("bigint")
+      )
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col("doc_id"), col(scoreCol))
   }
 
   def invertedPostings(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
@@ -343,33 +447,22 @@ object Search {
   val searchPostings: Q = (s, d) =>
     invertedPostings(documents(s, d), "doc_id", "text").orderBy("token")
 
-  def conjunctiveSearch(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      terms: Seq[String],
-      k: Int,
-      a: Analyzer = Raw
-  ): DataFrame = termSearch(docs, idCol, textCol, terms, k, requireAll = true, a = a)
+  def conjunctiveSearch(src: Source, terms: Seq[String], k: Int, a: Analyzer = Raw): DataFrame =
+    termSearch(src, terms, k, requireAll = true, a = a)
 
-  /** OR-of-terms search: same scoring, scan pruned with the UNION of
-    * the per-term contains predicates (any term admits a candidate),
-    * AND-gate relaxed to ≥ 1 matched term. A doc matching more terms
-    * accumulates more score — the standard disjunctive ranking.
+  /** OR-of-terms search: same scoring, AND-gate relaxed to ≥ 1 matched
+    * term. A doc matching more terms accumulates more score — the
+    * standard disjunctive ranking.
     */
-  def disjunctiveSearch(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      terms: Seq[String],
-      k: Int,
-      a: Analyzer = Raw
-  ): DataFrame = termSearch(docs, idCol, textCol, terms, k, requireAll = false, a = a)
+  def disjunctiveSearch(src: Source, terms: Seq[String], k: Int, a: Analyzer = Raw): DataFrame =
+    termSearch(src, terms, k, requireAll = false, a = a)
 
+  /** The term route: df per term from the source's term-pruned
+    * postings (posting count = document frequency), micro-idf model
+    * broadcast, matched-count gate, optional must-not anti-join, top-k.
+    */
   private def termSearch(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
+      src: Source,
       rawTerms: Seq[String],
       k: Int,
       requireAll: Boolean,
@@ -383,22 +476,9 @@ object Search {
       minMatched >= 1 && minMatched <= terms.size,
       s"minMatched must be in [1, ${terms.size}], got $minMatched"
     )
-    // coarse prune: a substring hit is a necessary condition for the
-    // exact token match — AND of contains for conjunctive queries, OR
-    // for disjunctive — and pushes to the scan, keeping the explode
-    // candidate-sized
-    val containsTerms = terms.map(a.contains(textCol, _))
-    val pruned = docs.filter(
-      if (requireAll) containsTerms.reduce(_ && _) else containsTerms.reduce(_ || _)
-    )
-    val p = postings(pruned, idCol, textCol, a).filter(col("token").isin(terms: _*))
-    val nDocs = docs.agg(countDistinct(col(idCol)).as("n_docs"))
-    val dfModel = corpusDf(docs, idCol, textCol, terms, a)
-      .crossJoin(broadcast(nDocs))
-      .withColumn("idf_micro", idfCol(col("n_docs") + 1, 1000000L))
-      .select(col("token"), col("idf_micro"))
+    val p = src.postings(terms, a)
     val scored = p
-      .join(broadcast(dfModel), "token")
+      .join(broadcast(idfModel(p, src.nDocs, 1000000L)), "token")
       .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).cast("long").as("n_matched"),
@@ -423,31 +503,24 @@ object Search {
     * terms it does match. minMatched = 1 IS [[disjunctiveSearch]] and
     * minMatched = |terms| IS [[conjunctiveSearch]] (n_matched is
     * bounded by |terms|, so >= collapses to =) — the spec pins both
-    * ends. The coarse prune stays the OR of contains (any term admits
-    * a candidate; the exact n_matched gate runs after the token
-    * match), so the scan cost is the disjunctive route's.
+    * ends.
     */
   def minShouldMatchSearch(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
+      src: Source,
       terms: Seq[String],
       minMatched: Int,
       k: Int,
       a: Analyzer = Raw
-  ): DataFrame = termSearch(docs, idCol, textCol, terms, k, requireAll = false, minMatched, a = a)
+  ): DataFrame = termSearch(src, terms, k, requireAll = false, minMatched, a = a)
 
   val searchConjunctive: Q = (s, d) =>
-    conjunctiveSearch(documents(s, d), "doc_id", "text", fixtureAndTerms, topK)
-      .orderBy("rank")
+    conjunctiveSearch(Corpus(documents(s, d)), fixtureAndTerms, topK).orderBy("rank")
 
   val searchDisjunctive: Q = (s, d) =>
-    disjunctiveSearch(documents(s, d), "doc_id", "text", fixtureOrTerms, topK)
-      .orderBy("rank")
+    disjunctiveSearch(Corpus(documents(s, d)), fixtureOrTerms, topK).orderBy("rank")
 
   val searchMinMatch: Q = (s, d) =>
-    minShouldMatchSearch(documents(s, d), "doc_id", "text", fixtureMinTerms, fixtureMinMatch, topK)
-      .orderBy("rank")
+    minShouldMatchSearch(Corpus(documents(s, d)), fixtureMinTerms, fixtureMinMatch, topK).orderBy("rank")
 
   /** BM25 ranking (the standard retrieval scoring function), made
     * integer-EXACT by fixing k1 = 6/5 and b = 3/4 as rationals: the
@@ -465,19 +538,15 @@ object Search {
     *
     * Semantics are disjunctive (the BM25 norm): any term admits a
     * candidate, matched terms accumulate. dl is the candidate's token
-    * count under the analyzer; avgdl and N are two corpus scalars from
-    * one distributed aggregate. Same coarse-then-exact prune, broadcast
-    * term model and TakeOrderedAndProject top-k as
-    * [[disjunctiveSearch]].
+    * count under the analyzer; avgdl and N are the source's scalars
+    * (one aggregate over a corpus, two meta scalars on an index). Same
+    * term-pruned postings, broadcast term model and
+    * TakeOrderedAndProject top-k as [[disjunctiveSearch]]; the index
+    * serving ranked retrieval lands on the corpus pass's exact rows
+    * (search_bm25_index shares search_bm25's oracle).
     */
-  def bm25Search(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      terms: Seq[String],
-      k: Int,
-      a: Analyzer = Raw
-  ): DataFrame = rankTop(bm25ScoredCorpus(docs, idCol, textCol, terms, a), "score_milli", k)
+  def bm25Search(src: Source, terms: Seq[String], k: Int, a: Analyzer = Raw): DataFrame =
+    rankTop(bm25Scored(src, terms, a), "score_milli", k)
 
   /** The per-term BM25 contribution over (tf, dl-column) rows joined to
     * an idf_milli model — one BIGINT division.
@@ -485,38 +554,32 @@ object Search {
   private def bm25Contrib(avgdl: Long, dl: String): Column =
     expr(s"(44 * idf_milli * tf * $avgdl) div (20 * $avgdl * tf + 6 * $avgdl + 18 * $dl)")
 
-  /** The scored-candidate relation under [[bm25Search]] — factored out
-    * so chunk-level retrieval can pool scores per parent document
-    * before its own rank (exactly the [[bm25ScoredFromIndex]] seam on
-    * the corpus side).
+  /** (N, avgdl) of the source under the analyzer. An empty or
+    * all-empty-text source has no meaningful BM25 model: N = 0 divides
+    * by zero computing avgdl, and avgdl = 0 zeroes the contrib
+    * denominator for dl = 0 docs — fail loudly instead.
     */
-  private def bm25ScoredCorpus(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      rawTerms: Seq[String],
-      a: Analyzer
-  ): DataFrame = {
+  private def bm25Norms(src: Source, a: Analyzer): (Long, Long) = {
+    val (nDocs, totalToks) = src.scalars(a)
+    require(nDocs > 0, s"bm25 search: ${src.what} is empty (n_docs = 0)")
+    val avgdl = totalToks / nDocs
+    require(avgdl > 0, s"bm25 search: ${src.what} has avgdl = 0 (all-empty documents)")
+    (nDocs, avgdl)
+  }
+
+  /** The scored-candidate relation under [[bm25Search]] — factored out
+    * so keyset pagination ([[bm25PageAfter]]) can cursor-filter BEFORE
+    * the top-k, and chunk-level retrieval can pool scores per parent
+    * document before its own rank. dl rides each posting row (the
+    * index denormalizes it at build, [[postingsWithDl]]), so an index
+    * probe's total I/O is its terms' bucket dirs plus the meta scalars.
+    */
+  private def bm25Scored(src: Source, rawTerms: Seq[String], a: Analyzer = Raw): DataFrame = {
     val terms = a.terms(rawTerms)
     require(terms.nonEmpty, "bm25 search needs at least one non-empty term")
-    // N is countDistinct(id) — the ONE convention every search route
-    // shares (termSearch's model, the index meta): with duplicate doc
-    // ids a count(*) N would silently diverge from the others' idf
-    val stats = docs.agg(countDistinct(col(idCol)).cast("long"), tokenTotal(textCol, a)).head()
-    val (nDocs, totalToks) = (stats.getLong(0), stats.getLong(1))
-    require(nDocs > 0, "bm25 search over an empty corpus")
-    val avgdl = totalToks / nDocs
-    require(avgdl > 0, "bm25 search over an all-empty corpus (avgdl = 0)")
-    val p = postingsWithDl(
-      docs.filter(terms.map(a.contains(textCol, _)).reduce(_ || _)),
-      idCol,
-      textCol,
-      a
-    ).filter(col("token").isin(terms: _*))
-    val dfModel = corpusDf(docs, idCol, textCol, terms, a)
-      .withColumn("idf_milli", idfCol(lit(nDocs + 1), 1000L))
-      .select(col("token"), col("idf_milli"))
-    p.join(broadcast(dfModel), "token")
+    val (nDocs, avgdl) = bm25Norms(src, a)
+    val p = src.postings(terms, a).select(col("token"), col("doc_id"), col("tf"), col(a.dl))
+    p.join(broadcast(idfModel(p, nDocs, 1000L)), "token")
       .withColumn("contrib", bm25Contrib(avgdl, a.dl))
       .groupBy(col("doc_id"))
       .agg(
@@ -526,7 +589,7 @@ object Search {
   }
 
   val searchBm25: Q = (s, d) =>
-    bm25Search(documents(s, d), "doc_id", "text", fixtureOrTerms, topK).orderBy("rank")
+    bm25Search(Corpus(documents(s, d)), fixtureOrTerms, topK).orderBy("rank")
 
   // ---- Chunk-level retrieval (the RAG shape) --------------------------
 
@@ -594,39 +657,19 @@ object Search {
     * shape (long documents are indexed as fixed windows; a document
     * ranks by its BEST passage-chunk, so one on-topic window beats a
     * long document's diluted average — the reason RAG pipelines chunk
-    * at all): the corpus re-expresses as the chunk relation, BM25 runs
-    * over CHUNKS (N/avgdl/df/dl are all chunk-level — the model's
-    * collection IS the chunks), each doc keeps its best chunk (score
-    * desc, chunk_no asc), the page ranks docs. Output carries the
-    * winning chunk_no — the pointer a RAG pipeline feeds the reader.
+    * at all): the source holds CHUNKS (a corpus of [[chunkedDocs]], or
+    * an index built over them — composite chunk ids are ordinary ids
+    * to every index route), BM25 runs over them (N/avgdl/df/dl are all
+    * chunk-level — the model's collection IS the chunks), each doc
+    * keeps its best chunk (score desc, chunk_no asc), the page ranks
+    * docs. Output carries the winning chunk_no — the pointer a RAG
+    * pipeline feeds the reader.
     */
-  def chunkBm25TopK(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      terms: Seq[String],
-      chunkSize: Int,
-      k: Int
-  ): DataFrame = {
-    val ch = chunkRelation(docs, idCol, textCol, chunkSize)
-      .select(chunkCidCol.as("cid"), col("ctext"))
-    chunkPool(bm25ScoredCorpus(ch, "cid", "ctext", terms, Raw), k)
-  }
-
-  /** [[chunkBm25TopK]] served from a PERSISTED chunk index (the chunk
-    * relation indexed like any corpus — same bucketed layout, probes
-    * prune identically): scores from [[bm25ScoredFromIndex]], the same
-    * per-doc pooling. Shares the corpus route's oracle.
-    */
-  def chunkBm25FromIndex(
-      s: SparkSession,
-      indexDir: String,
-      terms: Seq[String],
-      k: Int
-  ): DataFrame = chunkPool(bm25ScoredFromIndex(s, indexDir, terms), k)
+  def chunkBm25TopK(src: Source, terms: Seq[String], k: Int): DataFrame =
+    chunkPool(bm25Scored(src, terms), k)
 
   /** CHUNK-PAGE rendering — the RAG reader feed that closes the loop
-    * [[chunkBm25FromIndex]] opens: the winning (doc_id, chunk_no)
+    * [[chunkBm25TopK]] opens: the winning (doc_id, chunk_no)
     * pointers of the chunk-BM25 page rendered as ACTUAL chunk text
     * from the doc store. The page is request-sized (collected
     * driver-side, the deduped-page pattern every rendering route
@@ -647,7 +690,7 @@ object Search {
   ): DataFrame = {
     import s.implicits._
     require(chunkSize >= 1, s"chunkSize must be >= 1, got $chunkSize")
-    val page = chunkBm25FromIndex(s, chunkIndexDir, terms, k)
+    val page = chunkBm25TopK(Index(s, chunkIndexDir), terms, k)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     if (page.isEmpty) {
@@ -921,39 +964,15 @@ object Search {
   ): Unit =
     Generations.build(postingsIndex(docs.sparkSession, dir, analyzed, idCol, textCol), docs, dir)
 
-  /** Conjunctive search served from the PERSISTED index: the query
-    * terms' buckets are computed driver-side (no Spark pass) and the
-    * scan is statically pruned to those partitions (a parquet
-    * PartitionFilter — spec-pinned), then the token equality, df
-    * model, AND filter, scoring and top-k run exactly as the batch
-    * [[conjunctiveSearch]] — same result, index-shaped I/O. df per
-    * term comes from the pruned postings themselves (posting count =
-    * document frequency), so the probe needs no corpus pass at all;
-    * N comes from the index meta.
+  /** [[conjunctiveSearch]] over an [[Index]] — a published name the
+    * serving benchmark calls.
     */
-  def conjunctiveFromIndex(
-      s: SparkSession,
-      indexDir: String,
-      terms: Seq[String],
-      k: Int,
-      a: Analyzer = Raw
-  ): DataFrame = termSearchFromIndex(s, indexDir, terms, k, requireAll = true, a = a)
+  def conjunctiveFromIndex(s: SparkSession, indexDir: String, terms: Seq[String], k: Int, a: Analyzer = Raw): DataFrame =
+    conjunctiveSearch(Index(s, indexDir), terms, k, a)
 
-  /** OR-of-terms from the persisted index — completes the index twin
-    * for every corpus search route; shares search_disjunctive's
-    * oracle (same df model: pruned posting counts ARE the corpus df).
-    */
-  def disjunctiveFromIndex(
-      s: SparkSession,
-      indexDir: String,
-      terms: Seq[String],
-      k: Int,
-      a: Analyzer = Raw
-  ): DataFrame = termSearchFromIndex(s, indexDir, terms, k, requireAll = false, a = a)
-
-  /** The search_serve benchmark's folded term route, kept under its
-    * published name: [[conjunctiveFromIndex]] / [[disjunctiveFromIndex]]
-    * with [[Analyzer.Folded]].
+  /** The serving benchmark's folded term route, kept under its
+    * published name: the term route over an [[Index]] with
+    * [[Analyzer.Folded]].
     */
   def analyzedFromIndex(
       s: SparkSession,
@@ -961,47 +980,7 @@ object Search {
       rawTerms: Seq[String],
       k: Int,
       requireAll: Boolean
-  ): DataFrame = termSearchFromIndex(s, indexDir, rawTerms, k, requireAll, a = Folded)
-
-  /** The index term route shared by the live and AS-OF probes: df from
-    * the pruned posting rows, micro-idf model broadcast, matched-count
-    * gate, optional must-not anti-join, top-k.
-    */
-  private def termSearchFromIndex(
-      s: SparkSession,
-      indexDir: String,
-      rawTerms: Seq[String],
-      k: Int,
-      requireAll: Boolean,
-      minMatched: Int = 1,
-      exclude: Option[DataFrame] = None,
-      a: Analyzer = Raw,
-      asOf: Option[Long] = None
-  ): DataFrame = {
-    val terms = a.terms(rawTerms)
-    require(terms.nonEmpty, "term search needs at least one non-empty term")
-    require(
-      minMatched >= 1 && minMatched <= terms.size,
-      s"minMatched must be in [1, ${terms.size}], got $minMatched"
-    )
-    val p = postingsScan(s, indexDir, terms, a, asOf)
-    val nDocs = asOf.fold(readMeta(s, indexDir))(g => metaAsOf(s, indexDir, g))._1
-    val scored = p
-      .join(broadcast(idfModel(p, nDocs, 1000000L)), "token")
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).cast("long").as("n_matched"),
-        sum(col("tf") * col("idf_micro")).cast("long").as("score_micro")
-      )
-      .filter(
-        if (requireAll) col("n_matched") === terms.size.toLong
-        else col("n_matched") >= minMatched.toLong
-      )
-    // exclusion join unhinted — must-not-df-sized, AQE's call (see
-    // the corpus route's note)
-    val gated = exclude.fold(scored)(e => scored.join(e, Seq("doc_id"), "left_anti"))
-    rankTop(gated, "score_micro", k)
-  }
+  ): DataFrame = termSearch(Index(s, indexDir), rawTerms, k, requireAll, a = Folded)
 
   /** The parsed form of a query string — the clause algebra the
     * serving routes already implement, reunited under one front door.
@@ -1388,13 +1367,13 @@ object Search {
       maxDist: Int,
       k: Int
   ): DataFrame = {
-    val exact = termSearchFromIndex(s, indexDir, Seq(term), k, requireAll = true)
+    val exact = conjunctiveSearch(Index(s, indexDir), Seq(term), k)
     if (!exact.limit(1).isEmpty) exact.withColumn("term_used", lit(term))
     else {
       didYouMean(s, indexDir, term, maxDist, n = 1).collect().headOption match {
         case Some(r) =>
           val corrected = r.getString(1)
-          termSearchFromIndex(s, indexDir, Seq(corrected), k, requireAll = true)
+          conjunctiveSearch(Index(s, indexDir), Seq(corrected), k)
             .withColumn("term_used", lit(corrected))
         case None => emptyHits(s).withColumn("term_used", lit(term))
       }
@@ -1441,23 +1420,9 @@ object Search {
     }
     // two typos may correct onto the same token — the OR page scores
     // the distinct set; terms_used keeps the per-clause story
-    termSearchFromIndex(s, indexDir, corrected.distinct, k, requireAll = false)
+    disjunctiveSearch(Index(s, indexDir), corrected.distinct, k)
       .withColumn("terms_used", lit(corrected.mkString(" ")))
   }
-
-  /** [[minShouldMatchSearch]] served from the persisted index: the
-    * terms' bucket dirs are statically pruned like every index route,
-    * the ≥ minMatched gate runs on the per-doc matched-term count —
-    * must land on the corpus route's exact rows (shared oracle).
-    */
-  def minShouldMatchFromIndex(
-      s: SparkSession,
-      indexDir: String,
-      terms: Seq[String],
-      minMatched: Int,
-      k: Int,
-      a: Analyzer = Raw
-  ): DataFrame = termSearchFromIndex(s, indexDir, terms, k, requireAll = false, minMatched, a = a)
 
   /** PER-TERM QUERY BOOSTS from the persisted index (`dup^1 window^3`
     * — Lucene's term boost, the knob every query DSL exposes): the
@@ -1466,7 +1431,7 @@ object Search {
     * reorder the page without touching the corpus model (df/idf stay
     * boost-free — a boost weights the query side, never the
     * statistics, matching every production engine). Plan shape is
-    * [[disjunctiveFromIndex]]'s exactly: terms' bucket dirs pruned
+    * [[disjunctiveSearch]]'s over an [[Index]]: terms' bucket dirs pruned
     * statically, df from the pruned rows, the boost map riding the
     * k-row broadcast model relation.
     */
@@ -1493,67 +1458,18 @@ object Search {
     rankTop(scored, "score_micro", k)
   }
 
-  /** BM25 served from the PERSISTED index — the ranked-retrieval
-    * serving shape: the terms' bucket dirs are statically pruned
-    * (driver-computed PartitionFilters, spec-pinned), df per term is
-    * the pruned postings' row count (posting count = document
-    * frequency), dl comes from the `dir/doclen` relation recorded at
-    * build/append time, and N/avgdl from the two `dir/meta` scalars —
-    * ZERO corpus passes AND zero corpus-cardinality reads: dl rides
-    * the posting row itself ([[postingsWithDl]] denormalizes it at
-    * build), so the probe's total I/O is its terms' bucket dirs plus
-    * two meta scalars. Same integer BM25 arithmetic (k1 = 6/5,
-    * b = 3/4, ONE BIGINT division per term), so it must land on
-    * [[bm25Search]]'s exact rows — search_bm25_index shares
-    * search_bm25's oracle, and that equality is the gate.
+  /** [[bm25Search]] over an [[Index]] — a published name the serving
+    * benchmark calls.
     */
-  def bm25FromIndex(
-      s: SparkSession,
-      indexDir: String,
-      terms: Seq[String],
-      k: Int,
-      a: Analyzer = Raw
-  ): DataFrame = rankTop(bm25ScoredFromIndex(s, indexDir, terms, a), "score_milli", k)
+  def bm25FromIndex(s: SparkSession, indexDir: String, terms: Seq[String], k: Int, a: Analyzer = Raw): DataFrame =
+    bm25Search(Index(s, indexDir), terms, k, a)
 
-  /** The search_serve benchmark's folded BM25 route, kept under its
-    * published name: [[bm25FromIndex]] with [[Analyzer.Folded]].
+  /** The serving benchmark's folded BM25 route, kept under its
+    * published name: [[bm25Search]] over an [[Index]] with
+    * [[Analyzer.Folded]].
     */
   def analyzedBm25FromIndex(s: SparkSession, indexDir: String, rawTerms: Seq[String], k: Int): DataFrame =
-    bm25FromIndex(s, indexDir, rawTerms, k, Folded)
-
-  /** The scored-candidate relation under [[bm25FromIndex]] — factored
-    * out so keyset pagination ([[bm25PageAfter]]) can cursor-filter
-    * BEFORE the top-k instead of ranking the whole result. Folded
-    * BM25 normalizes by the folded length riding each folded posting
-    * row, over the folded total from the index's folded meta.
-    */
-  private def bm25ScoredFromIndex(
-      s: SparkSession,
-      indexDir: String,
-      rawTerms: Seq[String],
-      a: Analyzer = Raw,
-      asOf: Option[Long] = None
-  ): DataFrame = {
-    val terms = a.terms(rawTerms)
-    require(terms.nonEmpty, "bm25 search needs at least one non-empty term")
-    require(asOf.isEmpty || a == Raw, "time-travel reads serve the raw tier only")
-    val (nDocs, totalToks) = asOf.fold(a.scalars(s, indexDir))(g => metaAsOf(s, indexDir, g))
-    // an empty or all-empty-text index has no meaningful BM25 model:
-    // nDocs = 0 divides by zero computing avgdl, and avgdl = 0 zeroes
-    // the contrib denominator for dl = 0 docs — fail loudly instead
-    require(nDocs > 0, s"bm25FromIndex: index at $indexDir is empty (n_docs = 0)")
-    val avgdl = totalToks / nDocs
-    require(avgdl > 0, s"bm25FromIndex: index at $indexDir has avgdl = 0 (all-empty documents)")
-    val p = postingsScan(s, indexDir, terms, a, asOf)
-      .select(col("token"), col("doc_id"), col("tf"), col(a.dl))
-    p.join(broadcast(idfModel(p, nDocs, 1000L)), "token")
-      .withColumn("contrib", bm25Contrib(avgdl, a.dl))
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).cast("long").as("n_matched"),
-        sum(col("contrib")).cast("long").as("score_milli")
-      )
-  }
+    bm25Search(Index(s, indexDir), rawTerms, k, Folded)
 
   /** KEYSET pagination — page N+1 without page N's work repeated as a
     * deepening top-(N+1)·k sort: the cursor is the LAST row the client
@@ -1563,22 +1479,22 @@ object Search {
     * (TakeOrderedAndProject over the pruned buckets — never a global
     * sort, never an OFFSET that forces materializing every earlier
     * page). Page-local ranks 1..k; the caller owns absolute numbering
-    * (it knows how many pages it has walked).
+    * (it knows how many pages it has walked). Over an [[AsOf]] source
+    * this is POINT-IN-TIME pagination — the search_after + PIT pairing
+    * every deep-pagination API ships (a cursor is only stable against a
+    * FROZEN index; paging a live index skips or repeats rows as
+    * maintenance lands between pages): page 2 of generation G is
+    * exactly what page 2 was WHEN the index stood at G.
     */
   def bm25PageAfter(
-      s: SparkSession,
-      indexDir: String,
+      src: Source,
       terms: Seq[String],
       k: Int,
       afterScoreMilli: Long,
       afterDocId: Long,
       a: Analyzer = Raw
   ): DataFrame =
-    rankTop(
-      afterCursor(bm25ScoredFromIndex(s, indexDir, terms, a), "score_milli", afterScoreMilli, afterDocId),
-      "score_milli",
-      k
-    )
+    rankTop(afterCursor(bm25Scored(src, terms, a), "score_milli", afterScoreMilli, afterDocId), "score_milli", k)
 
   /** Strictly-after rows of a (score, doc_id) keyset cursor. */
   private def afterCursor(scored: DataFrame, scoreCol: String, afterScore: Long, afterDocId: Long): DataFrame =
@@ -1588,7 +1504,7 @@ object Search {
 
   /** ATTRIBUTE-FILTERED ranked search from persisted artifacts — the
     * SERP filter click ("only lang=de results"): BM25 scores come from
-    * the postings index exactly as [[bm25FromIndex]] (same model — N,
+    * the postings index exactly as [[bm25Search]] (same model — N,
     * avgdl, df are corpus-level; a filter narrows the RESULT SET, not
     * the scoring model, matching every production engine's
     * filter-vs-query distinction), the filter resolves against the doc
@@ -1615,7 +1531,7 @@ object Search {
       .filter(col(facetCol) === facetValue)
       .select(col("doc_id"))
     rankTop(
-      bm25ScoredFromIndex(s, indexDir, terms).join(allowed, Seq("doc_id"), "left_semi"),
+      bm25Scored(Index(s, indexDir), terms).join(allowed, Seq("doc_id"), "left_semi"),
       "score_milli",
       k
     )
@@ -1962,37 +1878,39 @@ object Search {
     rankTop(scored, "score_micro", k)
   }
 
-  /** Two-term convenience overload of the n-term [[phraseFromIndex]]. */
-  def phraseFromIndex(s: SparkSession, indexDir: String, first: String, second: String): DataFrame =
-    phraseFromIndex(s, indexDir, Seq(first, second))
-
-  /** N-TERM phrase search served from the PERSISTED positional
-    * postings — real phrase queries are 3–5 tokens, not 2. The
-    * phrase's (distinct) terms prune the scan to their bucket dirs
-    * statically; a match at (doc, start) means term i sits at
-    * start + i for every offset, so each term's position relation
-    * maps to candidate starts (pos − i) and the fold is k−1 doc-keyed
-    * (doc_id, start) EQUI-joins — no corpus pass, no per-document
+  /** N-TERM phrase search — real phrase queries are 3–5 tokens, not
+    * 2. The phrase's (distinct) terms prune the source's positions (an
+    * index reads their bucket dirs statically); a match at (doc, start)
+    * means term i sits at start + i for every offset, so each term's
+    * position relation maps to candidate starts (pos − i) and the fold
+    * is k−1 doc-keyed (doc_id, start) EQUI-joins — no per-document
     * window, and never a positions self-join beyond the query's own
-    * terms. The fold is anchored at the RAREST term (a k-row
-    * aggregate over the pruned relation picks the order), so every
-    * intermediate is bounded by the rarest term's occurrence count —
-    * the classic smallest-posting-first phrase plan. A repeated term
-    * ("buffalo buffalo") joins its own relation once per offset,
-    * which is exactly the multiset semantics the window route checks.
-    * Must land on [[phraseSearch]]'s exact rows — the index gates
-    * share the corpus route's oracles.
+    * terms. The fold is anchored at the RAREST term (a k-row aggregate
+    * over the pruned relation picks the order), so every intermediate
+    * is bounded by the rarest term's occurrence count — the classic
+    * smallest-posting-first phrase plan. A repeated term ("buffalo
+    * buffalo") joins its own relation once per offset: multiset
+    * semantics. Under [[Analyzer.Folded]] positions number the
+    * FILTERED folded stream, so adjacency means "adjacent after
+    * punctuation-token drop".
     */
-  def phraseFromIndex(s: SparkSession, indexDir: String, rawTerms: Seq[String], a: Analyzer = Raw): DataFrame = {
+  def phraseSearch(src: Source, rawTerms: Seq[String], a: Analyzer = Raw): DataFrame = {
     val terms = phraseTerms(rawTerms, a)
-    phraseFoldOverPositions(positionsScan(s, indexDir, terms.distinct, a), terms)
+    phraseFoldOverPositions(src.positions(terms.distinct, a), terms)
   }
 
-  /** The search_serve benchmark's folded phrase route, kept under its
-    * published name: [[phraseFromIndex]] with [[Analyzer.Folded]].
+  /** [[phraseSearch]] over an [[Index]] — a published name the serving
+    * benchmark calls.
+    */
+  def phraseFromIndex(s: SparkSession, indexDir: String, rawTerms: Seq[String], a: Analyzer = Raw): DataFrame =
+    phraseSearch(Index(s, indexDir), rawTerms, a)
+
+  /** The serving benchmark's folded phrase route, kept under its
+    * published name: [[phraseSearch]] over an [[Index]] with
+    * [[Analyzer.Folded]].
     */
   def analyzedPhraseFromIndex(s: SparkSession, indexDir: String, rawTerms: Seq[String]): DataFrame =
-    phraseFromIndex(s, indexDir, rawTerms, Folded)
+    phraseSearch(Index(s, indexDir), rawTerms, Folded)
 
   /** A phrase's terms under the analyzer, IN ORDER with repeats kept —
     * every term must survive the analyzer (a pure-punct phrase term
@@ -2010,111 +1928,54 @@ object Search {
     * join"): documents where the two terms occur within `slop` token
     * positions of each other, n_pairs counting the qualifying
     * position pairs (the multiset convention the phrase routes use).
-    * The pair join is per-document over the two terms' OWN positions
-    * — bounded by the terms' occurrence counts, never a corpus
-    * self-join; position-difference semantics are offset-convention-
-    * free, so corpus (0-based) and oracle (1-based) agree by
-    * construction.
     */
-  def proximitySearch(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      first: String,
-      second: String,
-      slop: Int
-  ): DataFrame = {
-    require(first != second, "proximity needs two distinct terms")
-    require(slop >= 1, "proximity needs slop >= 1")
-    val pruned = docs.filter(col(textCol).contains(first) && col(textCol).contains(second))
-    val pos = positionalPostings(pruned, idCol, textCol)
-    proximityPairs(pos, first, second, slop)
-  }
-
-  /** [[proximitySearch]] served from the persisted positional
-    * postings: the two terms' bucket dirs prune the scan statically,
-    * then the identical per-document pair join.
-    */
-  def proximityFromIndex(
-      s: SparkSession,
-      indexDir: String,
-      first: String,
-      second: String,
-      slop: Int
-  ): DataFrame = {
-    require(first != second, "proximity needs two distinct terms")
-    require(slop >= 1, "proximity needs slop >= 1")
-    proximityPairs(positionsScan(s, indexDir, Seq(first, second)), first, second, slop)
-  }
-
-  private def proximityPairs(pos: DataFrame, first: String, second: String, slop: Int): DataFrame = {
-    val p1 = pos.filter(col("token") === first).select(col("doc_id"), col("pos").as("p1"))
-    val p2 = pos.filter(col("token") === second).select(col("doc_id"), col("pos").as("p2"))
-    p1.join(p2, "doc_id")
-      .filter(abs(col("p1") - col("p2")) <= slop.toLong)
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast("long").as("n_pairs"))
-  }
+  def proximitySearch(src: Source, first: String, second: String, slop: Int, a: Analyzer = Raw): DataFrame =
+    positionPairs(src, "proximity", first, second, slop, a)(abs(col("p1") - col("p2")) <= slop.toLong)
 
   /** ORDERED sloppy phrase (Lucene's sloppy PhraseQuery restricted to
     * in-order matches — `"hash join"~3` where "hash" must PRECEDE
     * "join"): qualifying pairs have 1 ≤ pos(second) − pos(first) ≤
     * slop, so slop = 1 is exact adjacency and the result sits strictly
     * between the exact phrase (⊆) and the unordered proximity (⊇) —
-    * three gates on one fixture pair pin the lattice. Same cost shape
-    * as [[proximitySearch]]: the pair join is per-document over the
-    * two terms' own positions, and position DIFFERENCES are
-    * offset-convention-free, so the 0-based corpus route and the
-    * 1-based oracle agree by construction.
+    * three gates on one fixture pair pin the lattice. Under
+    * [[Analyzer.Folded]] the slop distance counts folded tokens
+    * (`"Hash Join"~3` matches `HASH ... JOIN.`).
     */
-  def orderedSlopSearch(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      first: String,
-      second: String,
-      slop: Int
-  ): DataFrame = {
-    require(first != second, "ordered slop needs two distinct terms")
-    require(slop >= 1, "ordered slop needs slop >= 1")
-    val pruned = docs.filter(col(textCol).contains(first) && col(textCol).contains(second))
-    val pos = positionalPostings(pruned, idCol, textCol)
-    orderedSlopPairs(pos, first, second, slop)
-  }
+  def orderedSlopSearch(src: Source, first: String, second: String, slop: Int, a: Analyzer = Raw): DataFrame =
+    positionPairs(src, "ordered slop", first, second, slop, a)(
+      col("p2") - col("p1") >= 1L && col("p2") - col("p1") <= slop.toLong
+    )
 
-  /** [[orderedSlopSearch]] served from the persisted positional
-    * postings — bucket-pruned scan, identical pair join; shares the
-    * corpus route's oracle. Under [[Analyzer.Folded]] both terms fold
-    * driver-side (both must survive the analyzer) and positions come
-    * from the FILTERED folded stream, so the slop distance counts
-    * folded tokens (`"Hash Join"~3` matches `HASH ... JOIN.`).
+  /** The position-pair join under the proximity and ordered-slop
+    * routes: per document, every (p1, p2) position pair of the two
+    * terms that passes `within`, counted. The join is bounded by the
+    * terms' occurrence counts, never a corpus self-join; position
+    * DIFFERENCES are offset-convention-free, so the 0-based routes and
+    * the 1-based oracle agree by construction. Both terms must survive
+    * the analyzer.
     */
-  def orderedSlopFromIndex(
-      s: SparkSession,
-      indexDir: String,
+  private def positionPairs(
+      src: Source,
+      route: String,
       rawFirst: String,
       rawSecond: String,
       slop: Int,
-      a: Analyzer = Raw
-  ): DataFrame = {
+      a: Analyzer
+  )(within: Column): DataFrame = {
     val Seq(first, second) = phraseTerms(Seq(rawFirst, rawSecond), a)
-    require(first != second, "ordered slop needs two distinct terms")
-    require(slop >= 1, "ordered slop needs slop >= 1")
-    orderedSlopPairs(positionsScan(s, indexDir, Seq(first, second), a), first, second, slop)
-  }
-
-  private def orderedSlopPairs(pos: DataFrame, first: String, second: String, slop: Int): DataFrame = {
+    require(first != second, s"$route needs two distinct terms")
+    require(slop >= 1, s"$route needs slop >= 1")
+    val pos = src.positions(Seq(first, second), a)
     val p1 = pos.filter(col("token") === first).select(col("doc_id"), col("pos").as("p1"))
     val p2 = pos.filter(col("token") === second).select(col("doc_id"), col("pos").as("p2"))
     p1.join(p2, "doc_id")
-      .filter(col("p2") - col("p1") >= 1L && col("p2") - col("p1") <= slop.toLong)
+      .filter(within)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).cast("long").as("n_pairs"))
   }
 
-  /** The rarest-first equi-join fold shared by the raw and ANALYZED
-    * index phrase routes: `pos` is the QUERY-PRUNED positional
-    * relation (its terms' bucket dirs only). A k-row count probe
+  /** The rarest-first equi-join fold under [[phraseSearch]]: `pos` is
+    * the source's QUERY-PRUNED positional relation. A k-row count probe
     * orders the fold so every intermediate is bounded by the rarest
     * term's occurrence count.
     */
@@ -2440,19 +2301,22 @@ object Search {
       .select(col("rank"), col("token"), col("df"))
   }
 
-  /** Prefix terms ranked (df desc, token asc), top maxExpand — the
-    * dictionary half of the prefix route (Lucene's capped multi-term
-    * rewrite). Request-sized, so the collect is the standard probe-id
-    * driver step every index route here uses.
+  /** PREFIX search: the source's dictionary expands the prefix to its
+    * top-maxExpand terms (df desc, token asc — the capped expansion
+    * every production engine applies to multi-term rewrites; the
+    * collect is request-sized), then the standard disjunctive scoring
+    * runs over those terms. A document holding a token with this prefix
+    * necessarily contains the prefix as a SUBSTRING, so a corpus
+    * dictionary prunes its pass with one contains(prefix); an index
+    * reads its types-scale vocab. Scoring df recomputes from the
+    * postings — the dictionary only SELECTS terms, so a tombstone
+    * window can reorder a stale expansion but never mis-score a term.
     */
-  private def prefixExpansion(
-      s: SparkSession,
-      dir: String,
-      prefix: String,
-      maxExpand: Int,
-      a: Analyzer
-  ): Seq[String] =
-    vocabRows(s, dir, a)
+  def prefixSearch(src: Source, rawPrefix: String, maxExpand: Int, k: Int, a: Analyzer = Raw): DataFrame = {
+    val prefix = a.term(rawPrefix)
+    require(prefix.nonEmpty, "prefix search needs a non-empty prefix")
+    val terms = src
+      .dictionary(a, prefix)
       .filter(col("token").startsWith(prefix))
       .orderBy(col("df").desc, col("token").asc)
       .limit(maxExpand)
@@ -2460,26 +2324,7 @@ object Search {
       .collect()
       .map(_.getString(0))
       .toSeq
-
-  /** PREFIX search served from the persisted index: the vocab expands
-    * the prefix to its top-maxExpand terms (df desc, token asc — the
-    * capped expansion every production engine applies to multi-term
-    * rewrites), then the standard disjunctive scoring runs over those
-    * terms' pruned bucket dirs. Scoring df recomputes from live
-    * postings — the vocab only SELECTS terms, so a tombstone window
-    * can reorder a stale expansion but never mis-score a term.
-    */
-  def prefixSearchFromIndex(
-      s: SparkSession,
-      indexDir: String,
-      rawPrefix: String,
-      maxExpand: Int,
-      k: Int,
-      a: Analyzer = Raw
-  ): DataFrame = {
-    val prefix = a.term(rawPrefix)
-    require(prefix.nonEmpty, "prefix search needs a non-empty prefix")
-    expandedSearch(s, indexDir, prefixExpansion(s, indexDir, prefix, maxExpand, a), k, a)
+    expandedSearch(src, terms, k, a)
   }
 
   /** The disjunctive serve over a dictionary expansion (empty
@@ -2487,54 +2332,9 @@ object Search {
     * FIXPOINTS, so the route's term normalisation is the identity on
     * them — one scoring path per analyzer.
     */
-  private def expandedSearch(
-      s: SparkSession,
-      indexDir: String,
-      terms: Seq[String],
-      k: Int,
-      a: Analyzer
-  ): DataFrame =
-    if (terms.isEmpty) emptyHits(s)
-    else termSearchFromIndex(s, indexDir, terms, k, requireAll = false, a = a)
-
-  /** [[prefixSearchFromIndex]]'s corpus-pass twin (the oracle-shaped
-    * route): a document containing a token with this prefix
-    * necessarily contains the prefix as a SUBSTRING, so one pushable
-    * contains(prefix) prune is sound for the whole expansion at once —
-    * the route is two corpus passes total regardless of expansion
-    * size, never per-term passes. df over the pruned set IS the corpus
-    * df (every doc holding the token survives the prune).
-    */
-  def prefixSearch(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      prefix: String,
-      maxExpand: Int,
-      k: Int
-  ): DataFrame = {
-    require(prefix.nonEmpty, "prefix search needs a non-empty prefix")
-    val pruned = docs.filter(col(textCol).contains(prefix))
-    val cp = postings(pruned, idCol, textCol).filter(col("token").startsWith(prefix))
-    val nDocs = docs.agg(countDistinct(col(idCol)).as("n_docs"))
-    val expansion = cp
-      .groupBy(col("token"))
-      .agg(count(lit(1)).cast("long").as("df"))
-      .orderBy(col("df").desc, col("token").asc)
-      .limit(maxExpand)
-    val model = expansion
-      .crossJoin(broadcast(nDocs))
-      .withColumn("idf_micro", idfCol(col("n_docs") + 1, 1000000L))
-      .select(col("token"), col("idf_micro"))
-    val scored = cp
-      .join(broadcast(model), "token")
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).cast("long").as("n_matched"),
-        sum(col("tf") * col("idf_micro")).cast("long").as("score_micro")
-      )
-    rankTop(scored, "score_micro", k)
-  }
+  private def expandedSearch(src: Source, terms: Seq[String], k: Int, a: Analyzer): DataFrame =
+    if (terms.isEmpty) emptyHits(src.session)
+    else disjunctiveSearch(src, terms, k, a)
 
   /** WILDCARD search (Lucene's WildcardQuery under the capped
     * rewrite): the pattern uses `*` (any run) and `?` (one char),
@@ -2554,7 +2354,7 @@ object Search {
       a: Analyzer = Raw
   ): DataFrame = {
     require(pattern.nonEmpty, "wildcard search needs a non-empty pattern")
-    expandedSearch(s, indexDir, wildcardExpansion(s, indexDir, pattern, maxExpand, a), k, a)
+    expandedSearch(Index(s, indexDir), wildcardExpansion(s, indexDir, pattern, maxExpand, a), k, a)
   }
 
   /** REGEX term search (Lucene's RegexpQuery under the same capped
@@ -2587,7 +2387,7 @@ object Search {
       .collect()
       .map(_.getString(0))
       .toSeq
-    expandedSearch(s, indexDir, terms, k, a)
+    expandedSearch(Index(s, indexDir), terms, k, a)
   }
 
   /** Analyzer case fold for a REGEX pattern: lowercase LITERAL
@@ -2713,7 +2513,7 @@ object Search {
       .collect()
       .map(_.getString(0))
       .toSeq
-    expandedSearch(s, indexDir, terms, k, a)
+    expandedSearch(Index(s, indexDir), terms, k, a)
   }
 
   /** BOOLEAN must/must-not search (the NOT clause that completes the
@@ -2722,45 +2522,16 @@ object Search {
     * never wrongly excludes a NOT-"window" query (a NOT-contains prune
     * would). Scoring is the conjunctive accumulation over the must
     * terms only; the exclusion is one left-anti join against the
-    * must-not terms' exact-token doc set (contains-pruned, so the
-    * exclusion pass is candidate-sized).
+    * must-not terms' exact-token doc set, read through the same
+    * term-pruned postings as the scoring (an index's must-not bucket
+    * dirs), so the anti-join's build side is excluded-docs-sized.
     */
-  def booleanSearch(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      must: Seq[String],
-      mustNot: Seq[String],
-      k: Int
-  ): DataFrame = {
+  def booleanSearch(src: Source, must: Seq[String], mustNot: Seq[String], k: Int): DataFrame = {
     require(must.nonEmpty, "boolean search needs at least one must term")
     require(mustNot.nonEmpty, "boolean search with no must-not terms IS conjunctiveSearch")
     require(must.intersect(mustNot).isEmpty, s"terms in both must and mustNot: $must vs $mustNot")
-    val excluded = postings(
-      docs.filter(mustNot.map(t => col(textCol).contains(t)).reduce(_ || _)),
-      idCol,
-      textCol
-    ).filter(col("token").isin(mustNot: _*)).select(col("doc_id")).distinct()
-    termSearch(docs, idCol, textCol, must, k, requireAll = true, exclude = Some(excluded))
-  }
-
-  /** [[booleanSearch]] served from the persisted index: the must-not
-    * terms' bucket dirs prune the exclusion read exactly like the
-    * scoring read — the anti-join's build side is
-    * excluded-docs-sized.
-    */
-  def booleanSearchFromIndex(
-      s: SparkSession,
-      indexDir: String,
-      must: Seq[String],
-      mustNot: Seq[String],
-      k: Int
-  ): DataFrame = {
-    require(must.nonEmpty, "boolean search needs at least one must term")
-    require(mustNot.nonEmpty, "boolean search with no must-not terms IS conjunctiveFromIndex")
-    require(must.intersect(mustNot).isEmpty, s"terms in both must and mustNot: $must vs $mustNot")
-    val excluded = postingsScan(s, indexDir, mustNot).select(col("doc_id")).distinct()
-    termSearchFromIndex(s, indexDir, must, k, requireAll = true, exclude = Some(excluded))
+    val excluded = src.postings(mustNot, Raw).select(col("doc_id")).distinct()
+    termSearch(src, must, k, requireAll = true, exclude = Some(excluded))
   }
 
   /** SYNONYM-GROUP search (Lucene's query-time SynonymGraphFilter
@@ -2769,69 +2540,20 @@ object Search {
     * group tf is the SUM over member tokens, the group df counts docs
     * containing ANY member, idf comes from the group df, and the
     * AND/OR gate counts GROUPS matched, not tokens. The synonym table
-    * is config-scale (query-layer data); the corpus pays the ordinary
-    * coarse-then-exact pass with the prune = AND-over-groups of
-    * OR-over-members contains predicates (conjunctive) — still
-    * scan-level pushdown. Group df passes are group-count-bounded,
-    * like [[termSearch]]'s per-term df passes.
+    * is config-scale (query-layer data); the source reads the postings
+    * of the UNION of every group's members once, tokens map to their
+    * group in-plan, and group df = distinct docs over those rows.
     */
-  def synonymSearch(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      groups: Seq[Seq[String]],
-      k: Int,
-      requireAll: Boolean
-  ): DataFrame = {
-    val (gmap, all) = synonymGroupMap(docs.sparkSession, groups)
-    val groupContains =
-      groups.map(g => g.map(t => col(textCol).contains(t)).reduce(_ || _))
-    val pruned = docs.filter(
-      if (requireAll) groupContains.reduce(_ && _) else groupContains.reduce(_ || _)
-    )
-    val cp = postings(pruned, idCol, textCol)
-      .filter(col("token").isin(all: _*))
-      .join(broadcast(gmap), "token")
-      .groupBy(col("gid"), col("doc_id"))
-      .agg(sum(col("tf")).cast("long").as("tf"))
-    val nDocs = docs.agg(countDistinct(col(idCol)).as("n_docs"))
-    val dfModel = groups.zipWithIndex
-      .map { case (g, gid) =>
-        postings(docs.filter(g.map(t => col(textCol).contains(t)).reduce(_ || _)), idCol, textCol)
-          .filter(col("token").isin(g: _*))
-          .agg(countDistinct(col("doc_id")).cast("long").as("df"))
-          .select(lit(gid.toLong).as("gid"), col("df"))
-      }
-      .reduce(_ union _)
-      .crossJoin(broadcast(nDocs))
-      .withColumn("idf_micro", idfCol(col("n_docs") + 1, 1000000L))
-      .select(col("gid"), col("idf_micro"))
-    scoreSynonymGroups(cp, dfModel, groups.size, k, requireAll)
-  }
-
-  /** [[synonymSearch]] served from the persisted index: bucket dirs
-    * pruned to the UNION of every group's members, tokens mapped to
-    * their group in-plan, group df = distinct docs over the pruned
-    * live rows (= corpus group df), N from meta — same page, index
-    * I/O.
-    */
-  def synonymSearchFromIndex(
-      s: SparkSession,
-      indexDir: String,
-      groups: Seq[Seq[String]],
-      k: Int,
-      requireAll: Boolean
-  ): DataFrame = {
-    val (gmap, all) = synonymGroupMap(s, groups)
-    val p = postingsScan(s, indexDir, all).join(broadcast(gmap), "token")
+  def synonymSearch(src: Source, groups: Seq[Seq[String]], k: Int, requireAll: Boolean): DataFrame = {
+    val (gmap, all) = synonymGroupMap(src.session, groups)
+    val p = src.postings(all, Raw).join(broadcast(gmap), "token")
     val cp = p
       .groupBy(col("gid"), col("doc_id"))
       .agg(sum(col("tf")).cast("long").as("tf"))
-    val nDocs = readMeta(s, indexDir)._1
     val dfModel = p
       .groupBy(col("gid"))
       .agg(countDistinct(col("doc_id")).cast("long").as("df"))
-      .withColumn("idf_micro", idfCol(lit(nDocs + 1), 1000000L))
+      .withColumn("idf_micro", idfCol(lit(src.nDocs + 1), 1000000L))
       .select(col("gid"), col("idf_micro"))
     scoreSynonymGroups(cp, dfModel, groups.size, k, requireAll)
   }
@@ -2910,7 +2632,7 @@ object Search {
       .toSeq
     require(sel.nonEmpty, s"moreLikeThis: document $docId not found in the store at $storeDir")
     rankTop(
-      bm25ScoredFromIndex(s, indexDir, sel).filter(col("doc_id") =!= lit(docId)),
+      bm25Scored(Index(s, indexDir), sel).filter(col("doc_id") =!= lit(docId)),
       "score_milli",
       k
     )
@@ -3022,65 +2744,6 @@ object Search {
     }
     (n, t)
   }
-
-  /** TIME-TRAVEL BM25: the ranked page as of generation G — rows,
-    * tombstones, N and avgdl all reconstructed from history (dl rides
-    * each historical posting row, so length normalization needs no
-    * extra state). Same horizon contract as
-    * [[conjunctiveFromIndexAsOf]].
-    */
-  def bm25FromIndexAsOf(
-      s: SparkSession,
-      indexDir: String,
-      terms: Seq[String],
-      k: Int,
-      asOfGen: Long
-  ): DataFrame =
-    rankTop(bm25ScoredFromIndex(s, indexDir, terms, asOf = Some(asOfGen)), "score_milli", k)
-
-  /** POINT-IN-TIME keyset pagination — the search_after + PIT pairing
-    * every deep-pagination API ships (a cursor is only stable against
-    * a FROZEN index; paging a live index skips or repeats rows as
-    * maintenance lands between pages): the as-of scored relation
-    * cursor-filtered on the (score, id) keyset BEFORE the top-k, so
-    * page 2 of generation G is exactly what page 2 was WHEN the index
-    * stood at G. Same horizon contract as every time-travel route.
-    */
-  def bm25PageAfterAsOf(
-      s: SparkSession,
-      indexDir: String,
-      terms: Seq[String],
-      k: Int,
-      afterScoreMilli: Long,
-      afterDocId: Long,
-      asOfGen: Long
-  ): DataFrame =
-    rankTop(
-      afterCursor(
-        bm25ScoredFromIndex(s, indexDir, terms, asOf = Some(asOfGen)),
-        "score_milli",
-        afterScoreMilli,
-        afterDocId
-      ),
-      "score_milli",
-      k
-    )
-
-  /** TIME-TRAVEL conjunctive probe: the exact page the index served
-    * after generation `asOfGen` — later batches' rows invisible,
-    * later tombstones unapplied (an upsert's OLD version serves
-    * again), df and N reconstructed from history. Generations up to
-    * the first UPSERT reconstruct exactly; across an upsert window the
-    * ledger N carries the documented Lucene overcount until
-    * compaction (which also ends the travel horizon).
-    */
-  def conjunctiveFromIndexAsOf(
-      s: SparkSession,
-      indexDir: String,
-      terms: Seq[String],
-      k: Int,
-      asOfGen: Long
-  ): DataFrame = termSearchFromIndex(s, indexDir, terms, k, requireAll = true, asOf = Some(asOfGen))
 
   /** The postings index as a [[Generations]] kind. Per tier: the
     * bucketed postings (the doc length denormalized on every row;
@@ -3541,58 +3204,28 @@ object Search {
     * pairs answered in ONE pass — the shape that actually runs at
     * scale, where thousands of queries amortize a single index read
     * instead of each paying its own job (the same design as the
-    * batched PQ k-NN join). No per-query contains-prune is possible
-    * (every query has different terms); its place is taken by the
-    * posting relation restricted to the UNION of all query terms —
-    * with a persisted index that is the union of the terms' bucket
-    * dirs. Scoring joins postings to the query relation on token
-    * (queries broadcast — they are request-sized), AND-gates per
-    * (query, doc) on that query's term count, and takes top-k per
-    * query with a rank-limit window (WindowGroupLimit: k rows per
-    * query per partition forwarded — never a global sort).
+    * batched PQ k-NN join). No per-query prune is possible (every
+    * query has different terms); its place is taken by the source's
+    * postings for the UNION of all query terms — with a persisted
+    * index that is the union of the terms' bucket dirs. Scoring joins
+    * postings to the query relation on token (queries broadcast — they
+    * are request-sized), gates per (query, doc) by the query's MODE —
+    * AND requires every term matched, OR admits any (the mode changes
+    * only the gate, matching [[disjunctiveSearch]] vs
+    * [[conjunctiveSearch]]); queries without a mode row default to AND
+    * (the strict gate) — and takes top-k per query
+    * ([[rankTopPerQuery]]).
     */
   def batchedSearch(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
+      src: Source,
       queries: DataFrame, // (query_id, term)
       k: Int,
-      modes: Option[DataFrame] = None // (query_id, mode) — "AND" | "OR"; absent query_ids and None = all-AND
+      modes: Option[DataFrame] = None, // (query_id, mode) — "AND" | "OR"; absent query_ids and None = all-AND
+      a: Analyzer = Raw
   ): DataFrame = {
-    val allTerms = queries.select(col("term")).distinct()
-    val nDocs = docs.agg(countDistinct(col(idCol)).as("n_docs"))
-    // df per term over the corpus — one pass restricted to the term
-    // union (the isin pushes through the aggregate to the explode)
-    val p = postings(docs, idCol, textCol)
-      .join(broadcast(allTerms.withColumnRenamed("term", "token")), "token")
-    val dfModel = p
-      .groupBy(col("token"))
-      .agg(count(lit(1)).cast("long").as("df"))
-      .crossJoin(broadcast(nDocs))
-      .withColumn("idf_micro", idfCol(col("n_docs") + 1, 1000000L))
-      .select(col("token"), col("idf_micro"))
-    scoreBatch(p, queries, dfModel, k, modes)
-  }
-
-  /** Shared scoring tail of the two batched routes: broadcast-join the
-    * query relation and df model into the (token, doc_id, tf) posting
-    * relation, gate per (query, doc) by the query's MODE — AND
-    * requires every term matched, OR admits any (the per-query match
-    * gate is the only thing the mode changes; scoring is identical,
-    * matching [[disjunctiveSearch]] vs [[conjunctiveSearch]]) — then
-    * rank-limit per query. The modes relation is request-sized and
-    * broadcast like the queries themselves; queries without a mode
-    * row default to AND (the strict gate).
-    */
-  private def scoreBatch(
-      p: DataFrame,
-      queries: DataFrame,
-      dfModel: DataFrame,
-      k: Int,
-      modes: Option[DataFrame]
-  ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qSizes = queries.groupBy(col("query_id")).agg(count(lit(1)).cast("long").as("n_terms"))
+    val (batch, terms) = batchTerms(queries, a)
+    val p = src.postings(terms, a).select(col("token"), col("doc_id"), col("tf"))
+    val qSizes = batch.groupBy(col("query_id")).agg(count(lit(1)).cast("long").as("n_terms"))
     // mode-relation hygiene (request-sized, so the validation is
     // bytes): normalize case/whitespace so "or"/"Or " mean OR rather
     // than silently falling through to the strict AND gate, raise on
@@ -3625,10 +3258,10 @@ object Search {
               .as("mode")
           )
       }
-      .getOrElse(queries.select(col("query_id")).distinct().withColumn("mode", lit("AND")))
+      .getOrElse(batch.select(col("query_id")).distinct().withColumn("mode", lit("AND")))
     val scored = p
-      .join(broadcast(queries.withColumnRenamed("term", "token")), "token")
-      .join(broadcast(dfModel), "token")
+      .join(broadcast(batch.withColumnRenamed("term", "token")), "token")
+      .join(broadcast(idfModel(p, src.nDocs, 1000000L)), "token")
       .groupBy(col("query_id"), col("doc_id"))
       .agg(
         count(lit(1)).cast("long").as("n_matched"),
@@ -3640,43 +3273,11 @@ object Search {
         when(col("mode") === "OR", col("n_matched") >= 1L)
           .otherwise(col("n_matched") === col("n_terms"))
       )
-    scored
-      .withColumn(
-        "rank",
-        row_number()
-          .over(
-            Window
-              .partitionBy(col("query_id"))
-              .orderBy(col("score_micro").desc, col("doc_id").asc)
-          )
-          .cast("bigint")
-      )
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("doc_id"), col("score_micro"))
-  }
-
-  /** The batched route served from the PERSISTED index: the union of
-    * the batch's terms prunes to the union of their bucket dirs
-    * (driver-computed, static PartitionFilters), df comes from the
-    * pruned postings, and the scoring tail is [[scoreBatch]] verbatim
-    * — so the index-served batch must equal the corpus-pass batch row
-    * for row (it shares search_batch_serve's oracle).
-    */
-  def batchedSearchFromIndex(
-      s: SparkSession,
-      indexDir: String,
-      queries: DataFrame,
-      k: Int,
-      modes: Option[DataFrame] = None,
-      a: Analyzer = Raw
-  ): DataFrame = {
-    val (batch, terms) = batchTerms(queries, a)
-    val p = postingsScan(s, indexDir, terms, a).select(col("token"), col("doc_id"), col("tf"))
-    scoreBatch(p, batch, idfModel(p, readMeta(s, indexDir)._1, 1000000L), k, modes)
+    rankTopPerQuery(scored, "score_micro", k)
   }
 
   /** A (query_id, term) batch under the analyzer, plus its distinct
-    * terms driver-side for the bucket prune: terms normalise IN-PLAN
+    * terms driver-side for the term prune: terms normalise IN-PLAN
     * (the one analyzer site of a batched route — the collect is
     * request-sized by contract, a query batch is thousands of terms,
     * never corpus-scale), empties drop, and repeated or variant rows of
@@ -3695,69 +3296,44 @@ object Search {
 
   val searchBatchIndex: Q = (s, d) => {
     import s.implicits._
-    batchedSearchFromIndex(
-      s,
-      demoSearchIndexDir(s, d),
+    batchedSearch(
+      Index(s, demoSearchIndexDir(s, d)),
       fixtureBatch.toDF("query_id", "term"),
       k = 5,
       modes = Some(fixtureModes.toDF("query_id", "mode"))
     ).orderBy("query_id", "rank")
   }
 
-  /** BM25-scored BATCHED serving from the persisted index — the full
-    * production retrieval tier in one operator: a relation of
-    * (query_id, term) pairs, the union of the batch's term buckets
-    * statically pruned, df from the pruned postings, dl/avgdl/N from
-    * the build-time relations, ONE BIGINT division per (query, doc,
-    * term), rank-limit per query (WindowGroupLimit). BM25's norm is
+  /** BM25-scored BATCHED serving — the full production retrieval tier
+    * in one operator: a relation of (query_id, term) pairs, the
+    * source's postings for the union of the batch's terms, df from
+    * those rows, dl/avgdl/N from the source, ONE BIGINT division per
+    * (query, doc, term), rank-limit per query. BM25's norm is
     * disjunctive, so every query admits any-term candidates — no mode
     * relation needed.
     */
-  def bm25BatchFromIndex(
-      s: SparkSession,
-      indexDir: String,
+  def bm25BatchSearch(
+      src: Source,
       queries: DataFrame, // (query_id, term)
       k: Int,
       a: Analyzer = Raw
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (batch, terms) = batchTerms(queries, a)
-    val (nDocs, totalToks) = a.scalars(s, indexDir)
-    // same empty-index guard as bm25FromIndex: no docs → divide by
-    // zero, all-empty docs → zero contrib denominator for dl = 0
-    require(nDocs > 0, s"bm25BatchFromIndex: index at $indexDir is empty (n_docs = 0)")
-    val avgdl = totalToks / nDocs
-    require(avgdl > 0, s"bm25BatchFromIndex: index at $indexDir has avgdl = 0 (all-empty documents)")
-    val p = postingsScan(s, indexDir, terms, a).select(col("token"), col("doc_id"), col("tf"), col(a.dl))
+    val (nDocs, avgdl) = bm25Norms(src, a)
+    val p = src.postings(terms, a).select(col("token"), col("doc_id"), col("tf"), col(a.dl))
     val scored = p
       .join(broadcast(batch.withColumnRenamed("term", "token")), "token")
       .join(broadcast(idfModel(p, nDocs, 1000L)), "token")
       .withColumn("contrib", bm25Contrib(avgdl, a.dl))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("contrib")).cast("long").as("score_milli"))
-    scored
-      .withColumn(
-        "rank",
-        row_number()
-          .over(
-            Window
-              .partitionBy(col("query_id"))
-              .orderBy(col("score_milli").desc, col("doc_id").asc)
-          )
-          .cast("bigint")
-      )
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("doc_id"), col("score_milli"))
+    rankTopPerQuery(scored, "score_milli", k)
   }
 
   val searchBatchBm25: Q = (s, d) => {
     import s.implicits._
-    bm25BatchFromIndex(
-      s,
-      demoSearchIndexDir(s, d),
-      fixtureBatch.toDF("query_id", "term"),
-      k = 5
-    ).orderBy("query_id", "rank")
+    bm25BatchSearch(Index(s, demoSearchIndexDir(s, d)), fixtureBatch.toDF("query_id", "term"), k = 5)
+      .orderBy("query_id", "rank")
   }
 
   /** Fixture batch: three conjunctive queries plus one disjunctive,
@@ -3780,9 +3356,7 @@ object Search {
   val searchBatchServe: Q = (s, d) => {
     import s.implicits._
     batchedSearch(
-      documents(s, d),
-      "doc_id",
-      "text",
+      Corpus(documents(s, d)),
       fixtureBatch.toDF("query_id", "term"),
       k = 5,
       modes = Some(fixtureModes.toDF("query_id", "mode"))
@@ -3900,12 +3474,12 @@ object Search {
     autocomplete(s, demoSearchIndexDir(s, d), fixturePrefix, fixtureAutoN).orderBy("rank")
 
   val searchPrefix: Q = (s, d) =>
-    prefixSearch(documents(s, d), "doc_id", "text", fixturePrefix, fixturePrefixExpand, topK)
+    prefixSearch(Corpus(documents(s, d)), fixturePrefix, fixturePrefixExpand, topK)
       .orderBy("rank")
 
   /** Index-served prefix page, sharing search_prefix's oracle. */
   val searchPrefixIndex: Q = (s, d) =>
-    prefixSearchFromIndex(s, demoSearchIndexDir(s, d), fixturePrefix, fixturePrefixExpand, topK)
+    prefixSearch(Index(s, demoSearchIndexDir(s, d)), fixturePrefix, fixturePrefixExpand, topK)
       .orderBy("rank")
 
   /** Prefix page against the UNCOMPACTED appended index: the vocab
@@ -3913,7 +3487,7 @@ object Search {
     * full-corpus oracle gates the fold exactly.
     */
   val searchPrefixAppended: Q = (s, d) =>
-    prefixSearchFromIndex(s, demoVocabAppendIndexDir(s, d), fixturePrefix, fixturePrefixExpand, topK)
+    prefixSearch(Index(s, demoVocabAppendIndexDir(s, d)), fixturePrefix, fixturePrefixExpand, topK)
       .orderBy("rank")
 
   val searchDidYouMean: Q = (s, d) =>
@@ -4029,8 +3603,7 @@ object Search {
     }
 
   val searchAsOfProbe: Q = (s, d) =>
-    conjunctiveFromIndexAsOf(s, demoAsOfIndexDir(s, d), fixtureAndTerms, topK, asOfGen = 0L)
-      .orderBy("rank")
+    conjunctiveSearch(AsOf(s, demoAsOfIndexDir(s, d), 0L), fixtureAndTerms, topK).orderBy("rank")
 
   /** As-of SERP gate: hits AND snippets at generation 0 — the gen-1
     * upsert's "rewritten " prefix must be invisible in both tiers
@@ -4038,7 +3611,7 @@ object Search {
     */
   val searchAsOfPage: Q = (s, d) => {
     val idx = demoAsOfIndexDir(s, d)
-    val hits = conjunctiveFromIndexAsOf(s, idx, Seq(fixturePhrase._1), kwicPageK, asOfGen = 0L)
+    val hits = conjunctiveSearch(AsOf(s, idx, 0L), Seq(fixturePhrase._1), kwicPageK)
       .select(col("rank"), col("doc_id"))
     kwicPageAsOf(s, idx, demoAsOfDocStoreDir(s, d), hits, fixturePhrase._1, 3, asOfGen = 0L)
       .orderBy("rank", "pos")
@@ -4046,28 +3619,17 @@ object Search {
 
   /** Ranked time travel: BM25 as of generation 0 on the same demo. */
   val searchAsOfBm25: Q = (s, d) =>
-    bm25FromIndexAsOf(s, demoAsOfIndexDir(s, d), fixtureOrTerms, topK, asOfGen = 0L)
-      .orderBy("rank")
+    bm25Search(AsOf(s, demoAsOfIndexDir(s, d), 0L), fixtureOrTerms, topK).orderBy("rank")
 
   /** PIT pagination gate: page 2 of the generation-0 ranking, cursored
     * from page 1's last row — the oracle recomputes the cursor and the
     * page-2 window over the pre-upsert corpus.
     */
   val searchAsOfPageAfter: Q = (s, d) => {
-    val idx = demoAsOfIndexDir(s, d)
-    val last = bm25FromIndexAsOf(s, idx, fixtureOrTerms, topK, asOfGen = 0L)
-      .orderBy(desc("rank"))
-      .limit(1)
-      .head()
-    bm25PageAfterAsOf(
-      s,
-      idx,
-      fixtureOrTerms,
-      topK,
-      last.getAs[Long]("score_milli"),
-      last.getAs[Long]("doc_id"),
-      asOfGen = 0L
-    ).orderBy("rank")
+    val at0 = AsOf(s, demoAsOfIndexDir(s, d), 0L)
+    val last = bm25Search(at0, fixtureOrTerms, topK).orderBy(desc("rank")).limit(1).head()
+    bm25PageAfter(at0, fixtureOrTerms, topK, last.getAs[Long]("score_milli"), last.getAs[Long]("doc_id"))
+      .orderBy("rank")
   }
 
   /** Dictionary introspection gate: stats for the OR fixture terms
@@ -4082,12 +3644,12 @@ object Search {
   private[ops] val fixtureMustNot = Seq("merge")
 
   val searchBooleanNot: Q = (s, d) =>
-    booleanSearch(documents(s, d), "doc_id", "text", fixtureAndTerms, fixtureMustNot, topK)
+    booleanSearch(Corpus(documents(s, d)), fixtureAndTerms, fixtureMustNot, topK)
       .orderBy("rank")
 
   /** Index twin, sharing search_boolean_not's oracle. */
   val searchBooleanNotIndex: Q = (s, d) =>
-    booleanSearchFromIndex(s, demoSearchIndexDir(s, d), fixtureAndTerms, fixtureMustNot, topK)
+    booleanSearch(Index(s, demoSearchIndexDir(s, d)), fixtureAndTerms, fixtureMustNot, topK)
       .orderBy("rank")
 
   /** Proximity fixture: the phrase pair at slop 3 — matches strictly
@@ -4097,11 +3659,11 @@ object Search {
   private[ops] val fixtureSlop = 3
 
   val searchProximity: Q = (s, d) =>
-    proximitySearch(documents(s, d), "doc_id", "text", fixturePhrase._1, fixturePhrase._2, fixtureSlop)
+    proximitySearch(Corpus(documents(s, d)), fixturePhrase._1, fixturePhrase._2, fixtureSlop)
       .orderBy("doc_id")
 
   val searchProximityIndex: Q = (s, d) =>
-    proximityFromIndex(s, demoSearchIndexDir(s, d), fixturePhrase._1, fixturePhrase._2, fixtureSlop)
+    proximitySearch(Index(s, demoSearchIndexDir(s, d)), fixturePhrase._1, fixturePhrase._2, fixtureSlop)
       .orderBy("doc_id")
 
   /** Ordered-slop gates: the same fixture pair at the same slop, but
@@ -4110,11 +3672,11 @@ object Search {
     * twins share one oracle.
     */
   val searchPhraseSlop: Q = (s, d) =>
-    orderedSlopSearch(documents(s, d), "doc_id", "text", fixturePhrase._1, fixturePhrase._2, fixtureSlop)
+    orderedSlopSearch(Corpus(documents(s, d)), fixturePhrase._1, fixturePhrase._2, fixtureSlop)
       .orderBy("doc_id")
 
   val searchPhraseSlopIndex: Q = (s, d) =>
-    orderedSlopFromIndex(s, demoSearchIndexDir(s, d), fixturePhrase._1, fixturePhrase._2, fixtureSlop)
+    orderedSlopSearch(Index(s, demoSearchIndexDir(s, d)), fixturePhrase._1, fixturePhrase._2, fixtureSlop)
       .orderBy("doc_id")
 
   /** Analyzed ordered-slop gate on the damaged corpus: uppercased raw
@@ -4122,9 +3684,8 @@ object Search {
     * replays the damage + analyzer + in-order pair join.
     */
   val searchPhraseSlopAnalyzed: Q = (s, d) =>
-    orderedSlopFromIndex(
-      s,
-      demoAnalyzedIndexDir(s, d),
+    orderedSlopSearch(
+      Index(s, demoAnalyzedIndexDir(s, d)),
       fixturePhrase._1.toUpperCase,
       fixturePhrase._2.toUpperCase,
       fixtureSlop,
@@ -4235,18 +3796,13 @@ object Search {
     */
   private[ops] def demoChunkIndexDir(s: SparkSession, d: String): String =
     Fixtures.demoIndexDir(s, "searchidx_chunk", d) { dir =>
-      saveSearchIndex(
-        chunkRelation(documents(s, d), "doc_id", "text", fixtureChunkSize)
-          .select(chunkCidCol.as("cid"), col("ctext")),
-        "cid",
-        "ctext",
-        dir
-      )
+      saveSearchIndex(chunkedDocs(documents(s, d), "doc_id", "text", fixtureChunkSize), "cid", "ctext", dir)
     }
 
-  val searchChunkBm25: Q = (s, d) =>
-    chunkBm25TopK(documents(s, d), "doc_id", "text", fixtureOrTerms, fixtureChunkSize, topK)
-      .orderBy("rank")
+  val searchChunkBm25: Q = (s, d) => {
+    val chunks = chunkedDocs(documents(s, d), "doc_id", "text", fixtureChunkSize)
+    chunkBm25TopK(Corpus(chunks, "cid", "ctext"), fixtureOrTerms, topK).orderBy("rank")
+  }
 
   /** The chunk-index APPEND lifecycle demo — the claim "the chunk tier
     * inherits the ordinary index lifecycle" made checkable: half the
@@ -4256,8 +3812,7 @@ object Search {
     */
   private[ops] def demoAppendedChunkIndexDir(s: SparkSession, d: String): String =
     Fixtures.demoIndexDir(s, "searchidx_chunk_app", d) { dir =>
-      val ch = chunkRelation(documents(s, d), "doc_id", "text", fixtureChunkSize)
-        .select(chunkCidCol.as("cid"), col("ctext"))
+      val ch = chunkedDocs(documents(s, d), "doc_id", "text", fixtureChunkSize)
       saveSearchIndex(ch.filter((col("cid") / chunkIdBase) % 2 === 0), "cid", "ctext", dir)
       appendToSearchIndex(ch.filter((col("cid") / chunkIdBase) % 2 =!= 0), "cid", "ctext", dir)
     }
@@ -4266,11 +3821,11 @@ object Search {
     * for bit (shares the corpus chunk oracle).
     */
   val searchChunkBm25Appended: Q = (s, d) =>
-    chunkBm25FromIndex(s, demoAppendedChunkIndexDir(s, d), fixtureOrTerms, topK).orderBy("rank")
+    chunkBm25TopK(Index(s, demoAppendedChunkIndexDir(s, d)), fixtureOrTerms, topK).orderBy("rank")
 
   /** Index twin sharing the corpus chunk oracle. */
   val searchChunkBm25Index: Q = (s, d) =>
-    chunkBm25FromIndex(s, demoChunkIndexDir(s, d), fixtureOrTerms, topK).orderBy("rank")
+    chunkBm25TopK(Index(s, demoChunkIndexDir(s, d)), fixtureOrTerms, topK).orderBy("rank")
 
   /** Chunk-page gate — the RAG reader feed: the winning chunks
     * rendered as text from the doc store; the oracle recomputes the
@@ -4394,12 +3949,12 @@ object Search {
   private[ops] val fixtureSynGroups = Seq(Seq("fast", "slow"), Seq("big"))
 
   val searchSynonym: Q = (s, d) =>
-    synonymSearch(documents(s, d), "doc_id", "text", fixtureSynGroups, topK, requireAll = true)
+    synonymSearch(Corpus(documents(s, d)), fixtureSynGroups, topK, requireAll = true)
       .orderBy("rank")
 
   /** Index twin, sharing search_synonym's oracle. */
   val searchSynonymIndex: Q = (s, d) =>
-    synonymSearchFromIndex(s, demoSearchIndexDir(s, d), fixtureSynGroups, topK, requireAll = true)
+    synonymSearch(Index(s, demoSearchIndexDir(s, d)), fixtureSynGroups, topK, requireAll = true)
       .orderBy("rank")
 
   /** Retrieval-eval fixture: a 3-query run against graded judgments
@@ -4451,7 +4006,7 @@ object Search {
     bm25FromIndex(s, demoMergedIndexDir(s, d), fixtureOrTerms, topK).orderBy("rank")
 
   val searchMergedPrefix: Q = (s, d) =>
-    prefixSearchFromIndex(s, demoMergedIndexDir(s, d), fixturePrefix, fixturePrefixExpand, topK)
+    prefixSearch(Index(s, demoMergedIndexDir(s, d)), fixturePrefix, fixturePrefixExpand, topK)
       .orderBy("rank")
 
   /** Three shard doc stores merged by renames — the store half of the
@@ -4494,9 +4049,8 @@ object Search {
       .orderBy("rank")
 
   val searchPrefixAnalyzedIndex: Q = (s, d) =>
-    prefixSearchFromIndex(
-      s,
-      demoAnalyzedIndexDir(s, d),
+    prefixSearch(
+      Index(s, demoAnalyzedIndexDir(s, d)),
       fixturePrefix.toUpperCase,
       fixturePrefixExpand,
       topK,
@@ -4518,11 +4072,11 @@ object Search {
     * oracle — the equality IS the gate.
     */
   val searchMinMatchIndex: Q = (s, d) =>
-    minShouldMatchFromIndex(s, demoSearchIndexDir(s, d), fixtureMinTerms, fixtureMinMatch, topK)
+    minShouldMatchSearch(Index(s, demoSearchIndexDir(s, d)), fixtureMinTerms, fixtureMinMatch, topK)
       .orderBy("rank")
 
   val searchDisjunctiveIndex: Q = (s, d) =>
-    disjunctiveFromIndex(s, demoSearchIndexDir(s, d), fixtureOrTerms, topK)
+    disjunctiveSearch(Index(s, demoSearchIndexDir(s, d)), fixtureOrTerms, topK)
       .orderBy("rank")
 
   /** The distinct documents holding ANY of the given terms, served
@@ -4555,45 +4109,11 @@ object Search {
     * [[searchPhrase]]'s corpus-pass oracle in one query.
     */
   val searchPhraseIndex: Q = (s, d) =>
-    phraseFromIndex(s, demoAppendedSearchIndexDir(s, d), fixturePhrase._1, fixturePhrase._2)
+    phraseFromIndex(s, demoAppendedSearchIndexDir(s, d), Seq(fixturePhrase._1, fixturePhrase._2))
       .orderBy("doc_id")
-
-  def phraseSearch(docs: DataFrame, idCol: String, textCol: String, first: String, second: String): DataFrame =
-    phraseSearch(docs, idCol, textCol, Seq(first, second))
-
-  /** N-term corpus-pass phrase match: one posexplode over the
-    * contains-pruned candidates, then lead(token, i) per offset over
-    * the per-document window — a single pass whatever the phrase
-    * length (k−1 lead columns share one window sort). Under
-    * [[Analyzer.Folded]] positions number the FILTERED folded stream,
-    * so adjacency means "adjacent after punctuation-token drop".
-    */
-  def phraseSearch(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      rawTerms: Seq[String],
-      a: Analyzer = Raw
-  ): DataFrame = {
-    val terms = phraseTerms(rawTerms, a)
-    val pruned = docs.filter(terms.distinct.map(a.contains(textCol, _)).reduce(_ && _))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val withLeads = terms.indices.tail.foldLeft(positionalPostings(pruned, idCol, textCol, a)) { (df, i) =>
-      df.withColumn(s"__next_$i", lead(col("token"), i).over(w))
-    }
-    withLeads
-      .filter(
-        terms.indices.tail
-          .map(i => col(s"__next_$i") === terms(i))
-          .foldLeft(col("token") === terms.head)(_ && _)
-      )
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast("long").as("n_occurrences"))
-  }
 
   val searchPhrase: Q = (s, d) =>
-    phraseSearch(documents(s, d), "doc_id", "text", fixturePhrase._1, fixturePhrase._2)
-      .orderBy("doc_id")
+    phraseSearch(Corpus(documents(s, d)), Seq(fixturePhrase._1, fixturePhrase._2)).orderBy("doc_id")
 
   /** 3-term fixture phrase (oracle-pinned): extends [[fixturePhrase]]
     * by one token, ~5 occurrences at sf0.01.
@@ -4602,7 +4122,7 @@ object Search {
 
   /** Trigram corpus-pass route. */
   val searchPhrase3: Q = (s, d) =>
-    phraseSearch(documents(s, d), "doc_id", "text", fixturePhrase3).orderBy("doc_id")
+    phraseSearch(Corpus(documents(s, d)), fixturePhrase3).orderBy("doc_id")
 
   /** Trigram served from the MAINTAINED index (build-even → append-odd
     * → compact), sharing [[searchPhrase3]]'s oracle — the n-term fold
@@ -4632,7 +4152,7 @@ object Search {
     * damage + the same analyzer chain).
     */
   val searchAnalyzed: Q = (s, d) =>
-    conjunctiveSearch(damagedFixtureDocs(s, d), "doc_id", "text", fixtureAndTerms.map(_.toUpperCase), topK, Folded)
+    conjunctiveSearch(Corpus(damagedFixtureDocs(s, d)), fixtureAndTerms.map(_.toUpperCase), topK, Folded)
       .orderBy("rank")
 
   /** Once-per-process ANALYZED demo index over the damaged corpus,
@@ -4719,8 +4239,7 @@ object Search {
     val raw = fixtureOrTerms.map(_.toUpperCase)
     val last = bm25FromIndex(s, dir, raw, topK, Folded).orderBy(desc("rank")).limit(1).head()
     bm25PageAfter(
-      s,
-      dir,
+      Index(s, dir),
       raw,
       topK,
       last.getAs[Long]("score_milli"),
@@ -4739,7 +4258,7 @@ object Search {
 
   /** Analyzed BM25 corpus route over the damaged corpus. */
   val searchAnalyzedBm25: Q = (s, d) =>
-    bm25Search(damagedFixtureDocs(s, d), "doc_id", "text", fixtureOrTerms.map(_.toUpperCase), topK, Folded)
+    bm25Search(Corpus(damagedFixtureDocs(s, d)), fixtureOrTerms.map(_.toUpperCase), topK, Folded)
       .orderBy("rank")
 
   /** Analyzed BM25 served from the maintained analyzed index, sharing
@@ -4771,9 +4290,8 @@ object Search {
     */
   val searchBatchAnalyzedServe: Q = (s, d) => {
     import s.implicits._
-    batchedSearchFromIndex(
-      s,
-      demoAnalyzedIndexDir(s, d),
+    batchedSearch(
+      Index(s, demoAnalyzedIndexDir(s, d)),
       fixtureAnalyzedBatch.toDF("query_id", "term"),
       k = 5,
       modes = Some(fixtureAnalyzedModes.toDF("query_id", "mode")),
@@ -4783,9 +4301,8 @@ object Search {
 
   val searchBatchAnalyzedBm25: Q = (s, d) => {
     import s.implicits._
-    bm25BatchFromIndex(
-      s,
-      demoAnalyzedIndexDir(s, d),
+    bm25BatchSearch(
+      Index(s, demoAnalyzedIndexDir(s, d)),
       fixtureAnalyzedBatch.toDF("query_id", "term"),
       k = 5,
       Folded
@@ -4801,7 +4318,7 @@ object Search {
 
   /** Analyzed trigram, corpus route, over the damaged corpus. */
   val searchPhraseAnalyzed: Q = (s, d) =>
-    phraseSearch(damagedFixtureDocs(s, d), "doc_id", "text", fixtureAnalyzedPhrase, Folded)
+    phraseSearch(Corpus(damagedFixtureDocs(s, d)), fixtureAnalyzedPhrase, Folded)
       .orderBy("doc_id")
 
   /** Analyzed trigram served from the MAINTAINED analyzed index
@@ -5086,7 +4603,7 @@ object Search {
     import org.apache.spark.sql.expressions.Window
     require(perGroup >= 1, s"perGroup must be >= 1, got $perGroup")
     val meta = docStoreLive(s, storeDir).select(col("doc_id"), col(facetCol))
-    val kept = bm25ScoredFromIndex(s, indexDir, terms, a)
+    val kept = bm25Scored(Index(s, indexDir), terms, a)
       .join(meta, "doc_id")
       .withColumn(
         "gr",
@@ -5381,8 +4898,7 @@ object Search {
       .limit(1)
       .head()
     bm25PageAfter(
-      s,
-      dir,
+      Index(s, dir),
       fixtureOrTerms,
       topK,
       last.getAs[Long]("score_milli"),
@@ -5584,7 +5100,7 @@ object Search {
     */
   val searchRrfHybrid: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    val lex = bm25Search(documents(s, d), "doc_id", "text", fixtureOrTerms, topK)
+    val lex = bm25Search(Corpus(documents(s, d)), fixtureOrTerms, topK)
       .select(col("doc_id").as("id"), col("rank"))
     val vec = Similarity
       .cosineTopK(embeddings(s, d), 0L, topK)
@@ -5737,7 +5253,7 @@ object Search {
     // it — 4 corpus scans become 1 (§2.4/§6)
     val docs = documents(s, d).select(col("doc_id"), col("text")).localCheckpoint(true)
     try {
-      val hits = disjunctiveSearch(docs, "doc_id", "text", fixtureOrTerms, dedupResultsK)
+      val hits = disjunctiveSearch(Corpus(docs), fixtureOrTerms, dedupResultsK)
         .select(col("rank"), col("doc_id"))
       val edges = Dedup
         .lshCandidatesWithJaccard(docs, "doc_id", "text")
@@ -5772,7 +5288,7 @@ object Search {
 
   /** The deduped result page served END-TO-END from persisted
     * artifacts: hits from the token-bucketed search index
-    * ([[disjunctiveFromIndex]]), labels from the persisted cluster
+    * ([[disjunctiveSearch]]), labels from the persisted cluster
     * map — and the map read is PRUNED to the hits' bucket dirs (the
     * hit list is request-sized, so collecting its ≤k bucket ids is a
     * bytes-scale driver step, the incremental-dedup probe pattern).
@@ -5781,7 +5297,7 @@ object Search {
     * equal the served bytes row for row.
     */
   val searchDedupResultsGraph: Q = (s, d) => {
-    val hits = disjunctiveFromIndex(s, demoSearchIndexDir(s, d), fixtureOrTerms, dedupResultsK)
+    val hits = disjunctiveSearch(Index(s, demoSearchIndexDir(s, d)), fixtureOrTerms, dedupResultsK)
       .select(col("rank"), col("doc_id"))
       // request-sized; one materialization feeds the bucket collect
       // and the label join
@@ -7237,9 +6753,10 @@ object Search {
        |  doc_id, cluster_id, CAST(rank AS BIGINT) AS orig_rank
        |FROM best WHERE rn = 1 ORDER BY new_rank""".stripMargin
 
-  /** N-term phrase oracle — shared by the corpus window routes and the
-    * positional-postings index serves (through the append+compact
-    * lifecycle); the k−1 leads mirror the Spark window route exactly.
+  /** N-term phrase oracle — shared by [[phraseSearch]] over the corpus
+    * and over the positional-postings index (through the append+compact
+    * lifecycle); the k−1 leads check adjacency independently of the
+    * route's rarest-first equi-join fold.
     */
   private def oraclePhraseSql(terms: Seq[String]): String = {
     val containsAll = terms.distinct.map(t => s"contains(text, ${sqlLit(t)})").mkString(" AND ")
@@ -7584,11 +7101,11 @@ object Search {
       oracleTermSearch(fixtureOrTerms, requireAll = false), build = Some(FirstRun)),
     Query("search_phrase", searchPhrase, oraclePhrase),
     // index-served phrase (through build→append→compact) must equal
-    // the corpus-pass window route row for row
+    // the corpus-pass route row for row
     Query("search_phrase_index", searchPhraseIndex, oraclePhrase, build = Some(FirstRun)),
     Query("search_phrase3", searchPhrase3, oraclePhraseSql(fixturePhrase3)),
     // the n-term fold from the maintained index shares the corpus
-    // trigram oracle — rarest-first equi-join chain ≡ window route
+    // trigram oracle — rarest-first equi-join chain ≡ the oracle's leads
     Query("search_phrase3_index", searchPhrase3Index, oraclePhraseSql(fixturePhrase3),
       build = Some(FirstRun)),
     Query("search_rrf_hybrid", searchRrfHybrid, oracleRrf),
@@ -7607,7 +7124,7 @@ object Search {
     Query("search_analyzed", searchAnalyzed, oracleAnalyzed),
     Query("search_phrase_analyzed", searchPhraseAnalyzed, oracleAnalyzedPhrase),
     // served from the maintained apositions relation, must land on the
-    // corpus analyzed-window route's exact rows — shared oracle
+    // corpus analyzed route's exact rows — shared oracle
     Query("search_phrase_analyzed_index", searchPhraseAnalyzedIndex, oracleAnalyzedPhrase,
       build = Some(FirstRun)),
     // analyzed serving from the persisted apostings relation (through

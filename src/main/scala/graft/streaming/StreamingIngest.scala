@@ -935,7 +935,7 @@ object StreamingIngest {
     searchIndexReplay(s, "graft_chunk_stream",
       graft.ops.Fixtures.documents(s, d).select(col("doc_id"), col("text")), "cid", "ctext",
       stream = graft.ops.Search.chunkedDocs(_, "doc_id", "text", graft.ops.Search.fixtureChunkSize)) {
-      graft.ops.Search.chunkBm25FromIndex(s, _, graft.ops.Search.fixtureOrTerms, 10)
+      dir => graft.ops.Search.chunkBm25TopK(graft.ops.Search.Index(s, dir), graft.ops.Search.fixtureOrTerms, 10)
     }
 
   /** The ANALYZED stream maintenance path as an ORACLE-GATED query —

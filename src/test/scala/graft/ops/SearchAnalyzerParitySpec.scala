@@ -10,13 +10,17 @@ import org.scalacheck.rng.Seed
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
-/** The analyzer collapse as a property: on a corpus carrying case and
-  * punctuation damage, every route served under [[Search.Analyzer.Folded]]
-  * must answer exactly like the same route under [[Search.Analyzer.Raw]]
-  * over the corpus folded up front (each token lowercased, its
-  * non-alphanumeric edges stripped, empty results dropped) with folded
-  * query terms. A wrong relation name, length column or avgdl source on
-  * either side breaks the equality.
+/** The analyzer and index-mode collapses as one property. On a corpus
+  * carrying case and punctuation damage, every route served under
+  * [[Search.Analyzer.Folded]] must answer exactly like the same route
+  * under [[Search.Analyzer.Raw]] over the corpus folded up front (each
+  * token lowercased, its non-alphanumeric edges stripped, empty results
+  * dropped) with folded query terms. Every route that takes a
+  * [[Search.Source]] must also answer alike over the corpus
+  * ([[Search.Corpus]]) and over an index of the same documents built
+  * through the maintained lifecycle (even ids saved, odd ids appended,
+  * then compacted). A wrong relation name, length column, avgdl source
+  * or a df taken over a too-narrow candidate set breaks an equality.
   */
 class SearchAnalyzerParitySpec extends SparkSpec {
   import spark.implicits._
@@ -80,23 +84,34 @@ class SearchAnalyzerParitySpec extends SparkSpec {
     finally pool.shutdown()
   }
 
+  /** Build-even → append-odd → compact: the maintained index. */
+  private def maintainedIndex(docs: DataFrame, idCol: String, textCol: String, dir: String, analyzed: Boolean) = {
+    val even = (col(idCol) / Search.chunkIdBase).cast("long") % 2 === 0
+    val byDoc = if (idCol == "cid") even else col(idCol) % 2 === 0
+    Search.saveSearchIndex(docs.filter(byDoc), idCol, textCol, dir, analyzed)
+    Search.appendToSearchIndex(docs.filter(!byDoc), idCol, textCol, dir, analyzed)
+    Search.compactSearchIndex(spark, dir)
+  }
+
   private def check(t: Trial): Prop = {
     val tmp = tempDir("graft_parity").toString
     val dmg = t.docs.toDF("doc_id", "text", "lang")
     val fld = t.docs
       .map { case (id, text, lang) => (id, text.split(" ").map(fold).filter(_.nonEmpty).mkString(" "), lang) }
       .toDF("doc_id", "text", "lang")
+    val chunks = Search.chunkedDocs(fld, "doc_id", "text", 3)
     val (dIdx, fIdx, dStore, fStore) = (s"$tmp/didx", s"$tmp/fidx", s"$tmp/dstore", s"$tmp/fstore")
+    val cIdx = s"$tmp/cidx"
     inParallel(Seq(
-      () => Search.saveSearchIndex(dmg, "doc_id", "text", dIdx, analyzed = true),
-      () => Search.saveSearchIndex(fld, "doc_id", "text", fIdx),
+      () => maintainedIndex(dmg, "doc_id", "text", dIdx, analyzed = true),
+      () => maintainedIndex(fld, "doc_id", "text", fIdx, analyzed = false),
+      () => maintainedIndex(chunks, "cid", "ctext", cIdx, analyzed = false),
       () => Search.saveDocStore(dmg, "doc_id", "text", dStore, metaCols = Seq("lang")),
       () => Search.saveDocStore(fld, "doc_id", "text", fStore, metaCols = Seq("lang"))
     ))
     val raw = t.terms
     val ft = raw.map(fold)
-    val batch = Seq(1L -> raw(0), 1L -> raw(1), 2L -> raw(2), 2L -> raw(0)).toDF("query_id", "term")
-    val fBatch = Seq(1L -> ft(0), 1L -> ft(1), 2L -> ft(2), 2L -> ft(0)).toDF("query_id", "term")
+    val batchOf = (ts: Seq[String]) => Seq(1L -> ts(0), 1L -> ts(1), 2L -> ts(2), 2L -> ts(0)).toDF("query_id", "term")
     val modes = Seq(1L -> "AND", 2L -> "OR").toDF("query_id", "mode")
 
     // (route, folded answer over the damaged corpus, raw answer over the folded one)
@@ -106,31 +121,60 @@ class SearchAnalyzerParitySpec extends SparkSpec {
         val b = rows(f(fld, fIdx, fStore, ft, Raw))
         (a == b) :| s"$name: folded $a vs raw-over-folded $b"
       }
+    // both axes at once: Folded over the damaged docs and Raw over the
+    // folded docs, each over the corpus and over the maintained index
+    def collapsed(name: String)(f: (Search.Source, Seq[String], Search.Analyzer) => DataFrame) =
+      () => {
+        val answers = Seq(
+          "Folded/Corpus" -> rows(f(Search.Corpus(dmg), raw, Folded)),
+          "Folded/Index" -> rows(f(Search.Index(spark, dIdx), raw, Folded)),
+          "Raw/Corpus" -> rows(f(Search.Corpus(fld), ft, Raw)),
+          "Raw/Index" -> rows(f(Search.Index(spark, fIdx), ft, Raw))
+        )
+        (answers.map(_._2).distinct.size == 1) :| s"$name: ${answers.mkString("; ")}"
+      }
+    // the source axis alone, for the raw-only routes: the corpus and its
+    // maintained index agree on the damaged docs (raw terms) and on the
+    // folded docs (folded terms)
+    def sources(name: String)(f: (Search.Source, Seq[String]) => DataFrame) =
+      () => {
+        val pairs = Seq(
+          (rows(f(Search.Corpus(dmg), raw)), rows(f(Search.Index(spark, dIdx), raw))),
+          (rows(f(Search.Corpus(fld), ft)), rows(f(Search.Index(spark, fIdx), ft)))
+        )
+        pairs.forall { case (c, i) => c == i } :| s"$name: (corpus, index) $pairs"
+      }
     // page-2 cursor: the raw page-1 tail (a cursor past everything when empty)
     val cursor = Search.bm25FromIndex(spark, fIdx, ft, 2).orderBy(desc("rank")).take(1).headOption
       .fold((Long.MaxValue, -1L))(r => (r.getAs[Long]("score_milli"), r.getAs[Long]("doc_id")))
     val qs = (ts: Seq[String]) => s"+${ts(0)} ${ts(1)}^2 -${ts(2)}"
     val kwicHits = (idx: String, ts: Seq[String], a: Search.Analyzer) =>
       Search.conjunctiveFromIndex(spark, idx, ts.take(1), 3, a).select("rank", "doc_id")
+    // a damaged prefix (upper-cased) under Folded, the folded one under Raw
+    val prefixOf = (ts: Seq[String], a: Search.Analyzer) => {
+      val p = fold(ts(0)).take(2)
+      if (a == Folded) p.toUpperCase else p
+    }
     val props = Seq(
-      same("conjunctiveSearch")((d, _, _, ts, a) =>
-        Search.conjunctiveSearch(d, "doc_id", "text", ts.take(2), 10, a)),
-      same("disjunctiveSearch")((d, _, _, ts, a) => Search.disjunctiveSearch(d, "doc_id", "text", ts, 10, a)),
-      same("minShouldMatchSearch")((d, _, _, ts, a) =>
-        Search.minShouldMatchSearch(d, "doc_id", "text", ts, 2, 10, a)),
-      same("bm25Search")((d, _, _, ts, a) => Search.bm25Search(d, "doc_id", "text", ts, 10, a)),
-      same("phraseSearch")((d, _, _, ts, a) => Search.phraseSearch(d, "doc_id", "text", ts.take(2), a)),
-      same("conjunctiveFromIndex")((_, i, _, ts, a) => Search.conjunctiveFromIndex(spark, i, ts.take(2), 10, a)),
-      same("disjunctiveFromIndex")((_, i, _, ts, a) => Search.disjunctiveFromIndex(spark, i, ts, 10, a)),
-      same("minShouldMatchFromIndex")((_, i, _, ts, a) => Search.minShouldMatchFromIndex(spark, i, ts, 2, 10, a)),
-      same("bm25FromIndex")((_, i, _, ts, a) => Search.bm25FromIndex(spark, i, ts, 10, a)),
-      same("bm25PageAfter")((_, i, _, ts, a) => Search.bm25PageAfter(spark, i, ts, 2, cursor._1, cursor._2, a)),
-      same("bm25BatchFromIndex")((_, i, _, _, a) =>
-        Search.bm25BatchFromIndex(spark, i, if (a == Raw) fBatch else batch, 3, a)),
-      same("batchedSearchFromIndex")((_, i, _, _, a) =>
-        Search.batchedSearchFromIndex(spark, i, if (a == Raw) fBatch else batch, 3, Some(modes), a)),
-      same("phraseFromIndex")((_, i, _, ts, a) => Search.phraseFromIndex(spark, i, ts.take(2), a)),
-      same("orderedSlopFromIndex")((_, i, _, ts, a) => Search.orderedSlopFromIndex(spark, i, ts(0), ts(1), 3, a)),
+      collapsed("conjunctiveSearch")((src, ts, a) => Search.conjunctiveSearch(src, ts.take(2), 10, a)),
+      collapsed("disjunctiveSearch")((src, ts, a) => Search.disjunctiveSearch(src, ts, 10, a)),
+      collapsed("minShouldMatchSearch")((src, ts, a) => Search.minShouldMatchSearch(src, ts, 2, 10, a)),
+      collapsed("bm25Search")((src, ts, a) => Search.bm25Search(src, ts, 10, a)),
+      collapsed("bm25PageAfter")((src, ts, a) => Search.bm25PageAfter(src, ts, 2, cursor._1, cursor._2, a)),
+      collapsed("bm25BatchSearch")((src, ts, a) => Search.bm25BatchSearch(src, batchOf(ts), 3, a)),
+      collapsed("batchedSearch")((src, ts, a) => Search.batchedSearch(src, batchOf(ts), 3, Some(modes), a)),
+      collapsed("phraseSearch")((src, ts, a) => Search.phraseSearch(src, ts.take(2), a)),
+      collapsed("proximitySearch")((src, ts, a) => Search.proximitySearch(src, ts(0), ts(1), 3, a)),
+      collapsed("orderedSlopSearch")((src, ts, a) => Search.orderedSlopSearch(src, ts(0), ts(1), 3, a)),
+      collapsed("prefixSearch")((src, ts, a) => Search.prefixSearch(src, prefixOf(ts, a), 2, 10, a)),
+      sources("booleanSearch")((src, ts) => Search.booleanSearch(src, ts.take(2), Seq(ts(2)), 10)),
+      sources("synonymSearch")((src, ts) =>
+        Search.synonymSearch(src, Seq(Seq(ts(0), ts(1)), Seq(ts(2))), 10, requireAll = false)),
+      () => {
+        val c = rows(Search.chunkBm25TopK(Search.Corpus(chunks, "cid", "ctext"), ft, 10))
+        val i = rows(Search.chunkBm25TopK(Search.Index(spark, cIdx), ft, 10))
+        (c == i) :| s"chunkBm25TopK: corpus $c vs index $i"
+      },
       same("facetCounts")((_, i, st, ts, a) => Search.facetCounts(spark, i, st, ts.take(1), "lang", a)),
       same("rangeFacetCounts")((_, i, _, ts, a) => Search.rangeFacetCounts(spark, i, ts.take(1), 3L, a)),
       same("groupedTopKFromIndex")((_, i, st, ts, a) =>

@@ -63,7 +63,7 @@ class SearchSpec extends SparkSpec {
       (5L, "dog bird")                // one term
     ).toDF("doc_id", "text")
     val got = Search
-      .conjunctiveSearch(docs, "doc_id", "text", Seq("cat", "dog"), 10)
+      .conjunctiveSearch(Search.Corpus(docs), Seq("cat", "dog"), 10)
       .collect()
       .map(r => (r.getAs[Long]("rank"), r.getAs[Long]("doc_id")))
     assert(got.map(_._2).toSet == Set(1L, 2L), got.mkString(","))
@@ -78,7 +78,7 @@ class SearchSpec extends SparkSpec {
       (4L, "bird")          // neither
     ).toDF("doc_id", "text")
     val got = Search
-      .disjunctiveSearch(docs, "doc_id", "text", Seq("cat", "dog"), 10)
+      .disjunctiveSearch(Search.Corpus(docs), Seq("cat", "dog"), 10)
       .collect()
       .map(r => r.getAs[Long]("doc_id") -> ((r.getAs[Long]("rank"), r.getAs[Long]("score_micro"))))
       .toMap
@@ -97,17 +97,17 @@ class SearchSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val terms = Seq("cat", "dog", "bird")
     def ids(m: Int) = Search
-      .minShouldMatchSearch(docs, "doc_id", "text", terms, m, 10)
+      .minShouldMatchSearch(Search.Corpus(docs), terms, m, 10)
       .collect()
       .map(_.getAs[Long]("doc_id"))
       .toSet
     assert(ids(2) == Set(1L, 2L, 4L), "m=2 admits exactly the ≥2-term docs")
     // m = 1 IS disjunctive, m = |terms| IS conjunctive — rows included
-    val dis = Search.disjunctiveSearch(docs, "doc_id", "text", terms, 10).collect().toSeq
-    val m1 = Search.minShouldMatchSearch(docs, "doc_id", "text", terms, 1, 10).collect().toSeq
+    val dis = Search.disjunctiveSearch(Search.Corpus(docs), terms, 10).collect().toSeq
+    val m1 = Search.minShouldMatchSearch(Search.Corpus(docs), terms, 1, 10).collect().toSeq
     assert(m1 == dis)
-    val con = Search.conjunctiveSearch(docs, "doc_id", "text", terms, 10).collect().toSeq
-    val m3 = Search.minShouldMatchSearch(docs, "doc_id", "text", terms, 3, 10).collect().toSeq
+    val con = Search.conjunctiveSearch(Search.Corpus(docs), terms, 10).collect().toSeq
+    val m3 = Search.minShouldMatchSearch(Search.Corpus(docs), terms, 3, 10).collect().toSeq
     assert(m3 == con)
     // index-served twin equals the corpus route on the fixture corpus
     val d = "/root/testdata/sf0.001"
@@ -116,7 +116,7 @@ class SearchSpec extends SparkSpec {
     assert(corpus.nonEmpty && corpus == index)
     // out-of-range gates fail loudly
     intercept[IllegalArgumentException] {
-      Search.minShouldMatchSearch(docs, "doc_id", "text", terms, 4, 10).collect()
+      Search.minShouldMatchSearch(Search.Corpus(docs), terms, 4, 10).collect()
     }
   }
 
@@ -184,9 +184,9 @@ class SearchSpec extends SparkSpec {
     assert(hits.map(_.getAs[Long]("doc_id")).toSet == Set(1L, 3L), "docs holding 'dog'")
     // no dictionary term within reach → the empty page, not an error
     assert(Search.fuzzySearchFromIndex(spark, dir, "zzzzzz", 1, 8, 10).collect().isEmpty)
-    assert(Search.prefixSearchFromIndex(spark, dir, "zz", 4, 10).collect().isEmpty)
+    assert(Search.prefixSearch(Search.Index(spark, dir), "zz", 4, 10).collect().isEmpty)
     // prefix cap binds: maxExpand=1 keeps only the highest-df term
-    val capped = Search.prefixSearchFromIndex(spark, dir, "d", 1, 10).collect()
+    val capped = Search.prefixSearch(Search.Index(spark, dir), "d", 1, 10).collect()
     assert(capped.map(_.getAs[Long]("doc_id")).toSet == Set(1L, 3L), "only 'dog' expands")
   }
 
@@ -354,7 +354,7 @@ class SearchSpec extends SparkSpec {
       (5L, "big only")        // group 2 only
     ).toDF("doc_id", "text")
     val groups = Seq(Seq("fast", "quick"), Seq("big"))
-    val got = Search.synonymSearch(docs, "doc_id", "text", groups, 10, requireAll = true).collect()
+    val got = Search.synonymSearch(Search.Corpus(docs), groups, 10, requireAll = true).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("score_micro")).toMap
     assert(got.keySet == Set(1L, 2L, 3L), got.toString)
     // group df = 4 docs contain fast OR quick; both single-member docs
@@ -365,7 +365,7 @@ class SearchSpec extends SparkSpec {
     assert(got(3L) == 2 * idf1 + idf2, "doc 3's group tf is the SUM over members")
     // a term in two groups is ambiguous — loud failure
     intercept[IllegalArgumentException] {
-      Search.synonymSearch(docs, "doc_id", "text", Seq(Seq("fast"), Seq("fast", "big")), 10, requireAll = true)
+      Search.synonymSearch(Search.Corpus(docs), Seq(Seq("fast"), Seq("fast", "big")), 10, requireAll = true)
     }
     // index twin equals the corpus route on the fixture corpus
     val d = "/root/testdata/sf0.001"
@@ -400,7 +400,7 @@ class SearchSpec extends SparkSpec {
       (3L, "cat dog birdhouse"),  // 'birdhouse' is NOT the token 'bird' → kept
       (4L, "cat only")
     ).toDF("doc_id", "text")
-    val got = Search.booleanSearch(docs, "doc_id", "text", Seq("cat", "dog"), Seq("bird"), 10)
+    val got = Search.booleanSearch(Search.Corpus(docs), Seq("cat", "dog"), Seq("bird"), 10)
       .collect().map(r => (r.getAs[Long]("rank"), r.getAs[Long]("doc_id")))
     assert(got.map(_._2).toSet == Set(2L, 3L), got.mkString(","))
     assert(got.map(_._1).toSeq == Seq(1L, 2L), "ranks stay dense after exclusion")
@@ -410,11 +410,11 @@ class SearchSpec extends SparkSpec {
       (1L, "cat cat cat dog nope"), // top-scored, excluded
       (2L, "cat dog")
     ).toDF("doc_id", "text")
-    val page1 = Search.booleanSearch(hi, "doc_id", "text", Seq("cat", "dog"), Seq("nope"), 1)
+    val page1 = Search.booleanSearch(Search.Corpus(hi), Seq("cat", "dog"), Seq("nope"), 1)
       .collect().map(_.getAs[Long]("doc_id"))
     assert(page1.toSeq == Seq(2L), "exclusion happens BEFORE the page cut")
     intercept[IllegalArgumentException] {
-      Search.booleanSearch(docs, "doc_id", "text", Seq("cat"), Seq("cat"), 10)
+      Search.booleanSearch(Search.Corpus(docs), Seq("cat"), Seq("cat"), 10)
     }
     val d = "/root/testdata/sf0.001"
     val corpus = SparkEntry.queries("search_boolean_not")(spark, d).collect().toSeq
@@ -429,7 +429,7 @@ class SearchSpec extends SparkSpec {
       (3L, "hash a a a a join"),    // distance 5: out at slop 3
       (4L, "hash join now hash z join") // pairs within 3: (1,2)=1, (2,4)... positions 1,4 hash; 2,6 join → |1-2|=1, |1-6|=5, |4-2|=2, |4-6|=2 → 3 pairs
     ).toDF("doc_id", "text")
-    def pairs(slop: Int) = Search.proximitySearch(docs, "doc_id", "text", "hash", "join", slop)
+    def pairs(slop: Int) = Search.proximitySearch(Search.Corpus(docs), "hash", "join", slop)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_pairs")).toMap
     assert(pairs(3) == Map(1L -> 1L, 2L -> 1L, 4L -> 3L), pairs(3).toString)
     assert(pairs(2) == Map(2L -> 1L, 4L -> 3L))
@@ -459,7 +459,7 @@ class SearchSpec extends SparkSpec {
       (4L, "a hash join b")            // 1 occurrence
     ).toDF("doc_id", "text")
     val got = Search
-      .phraseSearch(docs, "doc_id", "text", "hash", "join")
+      .phraseSearch(Search.Corpus(docs), Seq("hash", "join"))
       .collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_occurrences"))
       .toMap
@@ -481,7 +481,7 @@ class SearchSpec extends SparkSpec {
     Search.saveSearchIndex(docs, "doc_id", "text", dir)
     val probe = Search.conjunctiveFromIndex(spark, dir, Seq("cat", "dog"), 10)
     val got = probe.collect().map(_.getAs[Long]("doc_id")).toSet
-    val batch = Search.conjunctiveSearch(docs, "doc_id", "text", Seq("cat", "dog"), 10)
+    val batch = Search.conjunctiveSearch(Search.Corpus(docs), Seq("cat", "dog"), 10)
       .collect().map(r => (r.getAs[Long]("rank"), r.getAs[Long]("doc_id"), r.getAs[Long]("score_micro")))
     assert(got == Set(1L, 3L))
     assert(
@@ -504,7 +504,7 @@ class SearchSpec extends SparkSpec {
       Seq((3L, "anchor rewritten three")).toDF("doc_id", "text"), "doc_id", "text", dir, 1L,
       upsert = true)
     def idsAsOf(term: String, g: Long) =
-      Search.conjunctiveFromIndexAsOf(spark, dir, Seq(term), 10, g).collect()
+      Search.conjunctiveSearch(Search.AsOf(spark, dir, g), Seq(term), 10).collect()
         .map(_.getAs[Long]("doc_id")).toSet
     // generation 0: the original version of doc 3 serves
     assert(idsAsOf("original", 0L) == Set(2L, 3L))
@@ -518,7 +518,7 @@ class SearchSpec extends SparkSpec {
     // ranked time travel: BM25 at gen 0 finds the original, not the
     // rewrite, and at gen 1 the inverse
     def bm25Ids(term: String, g: Long) =
-      Search.bm25FromIndexAsOf(spark, dir, Seq(term), 10, g).collect()
+      Search.bm25Search(Search.AsOf(spark, dir, g), Seq(term), 10).collect()
         .map(_.getAs[Long]("doc_id")).toSet
     assert(bm25Ids("original", 0L) == Set(2L, 3L) && bm25Ids("original", 1L) == Set(2L))
     assert(bm25Ids("rewritten", 1L) == Set(3L))
@@ -530,7 +530,7 @@ class SearchSpec extends SparkSpec {
     val plain = s"$tmp/plain"
     Search.saveSearchIndex(base, "doc_id", "text", plain)
     intercept[IllegalArgumentException] {
-      Search.conjunctiveFromIndexAsOf(spark, plain, Seq("anchor"), 10, 0L)
+      Search.conjunctiveSearch(Search.AsOf(spark, plain, 0L), Seq("anchor"), 10)
     }
     // compaction ends the travel horizon: the purged index serves the
     // live state at every surviving generation
@@ -597,8 +597,8 @@ class SearchSpec extends SparkSpec {
     val an = Search.demoAnalyzedIndexDir(spark, d)
     val plans = Seq(
       SparkEntry.queries("search_min_match_index")(spark, d),
-      Search.minShouldMatchFromIndex(
-        spark, an, Search.fixtureMinTerms.map(_.toUpperCase), Search.fixtureMinMatch, 10, Folded),
+      Search.minShouldMatchSearch(
+        Search.Index(spark, an), Search.fixtureMinTerms.map(_.toUpperCase), Search.fixtureMinMatch, 10, Folded),
       SparkEntry.queries("search_boolean_not_index")(spark, d),
       SparkEntry.queries("search_proximity_index")(spark, d),
       SparkEntry.queries("search_synonym_index")(spark, d),
@@ -659,7 +659,7 @@ class SearchSpec extends SparkSpec {
       (4L, "cat " + pad(19))
     ) ++ (5L to 8L).map(i => (i, pad(10)))).toDF("doc_id", "text")
     val got = Search
-      .bm25Search(docs, "doc_id", "text", Seq("cat"), 10)
+      .bm25Search(Search.Corpus(docs), Seq("cat"), 10)
       .collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("score_milli"))
       .toMap
@@ -686,7 +686,7 @@ class SearchSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("rank"), r.getAs[Long]("doc_id"), r.getAs[Long]("score_micro")))
       .toSeq
     val before = probe()
-    val batch = Search.conjunctiveSearch(docs, "doc_id", "text", Seq("cat", "dog"), 10)
+    val batch = Search.conjunctiveSearch(Search.Corpus(docs), Seq("cat", "dog"), 10)
       .collect()
       .map(r => (r.getAs[Long]("rank"), r.getAs[Long]("doc_id"), r.getAs[Long]("score_micro")))
       .toSeq
@@ -905,7 +905,7 @@ class SearchSpec extends SparkSpec {
     Search.appendToSearchIndex(docs.filter(col("doc_id") % 2 =!= 0), "doc_id", "text", dirApp)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getAs[Long]("rank"), r.getAs[Long]("doc_id"), r.getAs[Long]("score_milli"))).toSeq
-    val corpus = rows(Search.bm25Search(docs, "doc_id", "text", Seq("cat", "dog"), 10))
+    val corpus = rows(Search.bm25Search(Search.Corpus(docs), Seq("cat", "dog"), 10))
     val probe = Search.bm25FromIndex(spark, dir, Seq("cat", "dog"), 10)
     assert(rows(probe) == corpus, "index-served BM25 must equal the corpus pass")
     // the maintained index's meta (N, total_toks) must accumulate to
@@ -930,7 +930,7 @@ class SearchSpec extends SparkSpec {
     Search.saveSearchIndex(docs.filter(col("doc_id") <= 2), "doc_id", "text", dir)
     Search.appendToSearchIndex(docs.filter(col("doc_id") > 2), "doc_id", "text", dir)
     Search.compactSearchIndex(spark, dir)
-    val probe = Search.phraseFromIndex(spark, dir, "hash", "join")
+    val probe = Search.phraseFromIndex(spark, dir, Seq("hash", "join"))
     val got = probe.collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_occurrences")).toMap
     assert(got == Map(1L -> 2L, 4L -> 1L), got.toString)
     val plan = probe.queryExecution.executedPlan.toString
@@ -954,15 +954,15 @@ class SearchSpec extends SparkSpec {
       df.collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_occurrences")).toMap
     val probe = Search.phraseFromIndex(spark, dir, Seq("a", "b", "c"))
     assert(m(probe) == Map(1L -> 3L, 4L -> 1L), m(probe).toString)
-    assert(m(probe) == m(Search.phraseSearch(docs, "doc_id", "text", Seq("a", "b", "c"))))
+    assert(m(probe) == m(Search.phraseSearch(Search.Corpus(docs), Seq("a", "b", "c"))))
     // repeated-term phrase: "a a a" occurs twice in doc 5 (pos 1-3, 2-4)
     val rep = Search.phraseFromIndex(spark, dir, Seq("a", "a", "a"))
     assert(m(rep) == Map(5L -> 2L), m(rep).toString)
-    assert(m(rep) == m(Search.phraseSearch(docs, "doc_id", "text", Seq("a", "a", "a"))))
+    assert(m(rep) == m(Search.phraseSearch(Search.Corpus(docs), Seq("a", "a", "a"))))
     // 4-term
     val four = Search.phraseFromIndex(spark, dir, Seq("c", "a", "b", "c"))
     assert(m(four) == Map(1L -> 2L), m(four).toString)
-    assert(m(four) == m(Search.phraseSearch(docs, "doc_id", "text", Seq("c", "a", "b", "c"))))
+    assert(m(four) == m(Search.phraseSearch(Search.Corpus(docs), Seq("c", "a", "b", "c"))))
     val plan = probe.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [") && plan.contains("tbucket"), plan.take(2000))
   }
@@ -978,7 +978,7 @@ class SearchSpec extends SparkSpec {
     ) ++ (5L to 8L).map(i => (i, pad(10)))).toDF("doc_id", "text")
     Search.saveSearchIndex(docs, "doc_id", "text", dir)
     val queries = Seq((10L, "cat"), (10L, "dog"), (20L, "bird")).toDF("query_id", "term")
-    val out = Search.bm25BatchFromIndex(spark, dir, queries, k = 5)
+    val out = Search.bm25BatchSearch(Search.Index(spark, dir), queries, k = 5)
     val byQuery = out.collect()
       .groupBy(_.getAs[Long]("query_id"))
       .view.mapValues(_.map(r => (r.getAs[Long]("rank"), r.getAs[Long]("doc_id"), r.getAs[Long]("score_milli"))).sorted.toSeq)
@@ -1003,7 +1003,7 @@ class SearchSpec extends SparkSpec {
       (20L, "cat"), (20L, "dog")  // no mode row → AND
     ).toDF("query_id", "term")
     val modes = Seq((10L, "OR")).toDF("query_id", "mode")
-    val got = Search.batchedSearch(docs, "doc_id", "text", queries, k = 5, Some(modes))
+    val got = Search.batchedSearch(Search.Corpus(docs), queries, k = 5, Some(modes))
       .collect()
       .groupBy(_.getAs[Long]("query_id"))
       .view.mapValues(_.map(_.getAs[Long]("doc_id")).toSet).toMap
@@ -1022,7 +1022,7 @@ class SearchSpec extends SparkSpec {
       (10L, "cat"), (10L, "dog"), // AND query
       (20L, "bird")               // single-term query
     ).toDF("query_id", "term")
-    val out = Search.batchedSearch(docs, "doc_id", "text", queries, k = 5)
+    val out = Search.batchedSearch(Search.Corpus(docs), queries, k = 5)
     val got = out.collect()
       .groupBy(_.getAs[Long]("query_id"))
       .view.mapValues(_.map(_.getAs[Long]("doc_id")).toSet).toMap
@@ -1050,8 +1050,8 @@ class SearchSpec extends SparkSpec {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq
-    val fromIndex = Search.batchedSearchFromIndex(spark, dir, queries, 5)
-    assert(rows(fromIndex) == rows(Search.batchedSearch(docs, "doc_id", "text", queries, 5)))
+    val fromIndex = Search.batchedSearch(Search.Index(spark, dir), queries, 5)
+    assert(rows(fromIndex) == rows(Search.batchedSearch(Search.Corpus(docs), queries, 5)))
     val plan = fromIndex.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [") && plan.contains("tbucket"), plan.take(2000))
   }
@@ -1065,7 +1065,7 @@ class SearchSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val qTerms = (0 until 50).map(q => (q.toLong, Seq(s"tok${(q * 97) % 5000}", s"tok${(q * 97 + 13) % 5000}")))
     val queries = qTerms.flatMap { case (q, ts) => ts.map(q -> _) }.toDF("query_id", "term")
-    val out = Search.batchedSearch(docs, "doc_id", "text", queries, k = 5).collect()
+    val out = Search.batchedSearch(Search.Corpus(docs), queries, k = 5).collect()
     // soundness: every hit really contains ALL its query's terms
     val corpus = (1L to 2000L)
       .map(i => i -> (0 until 10).map(j => s"tok${(i * 7 + j * 13) % 5000}"))
@@ -1104,18 +1104,18 @@ class SearchSpec extends SparkSpec {
       (4L, "!!! ??? cat"),      // pure-punct tokens must drop, one term
       (5L, "scatter dogma")     // substrings only — exact analyzed match rejects
     ).toDF("doc_id", "text")
-    val got = Search.conjunctiveSearch(docs, "doc_id", "text", Seq("Cat", "DOG!"), 10, Folded)
+    val got = Search.conjunctiveSearch(Search.Corpus(docs), Seq("Cat", "DOG!"), 10, Folded)
       .collect().map(_.getAs[Long]("doc_id")).toSet
     assert(got == Set(1L, 2L, 3L), got.toString)
     // the UNanalyzed route misses the damaged docs — the analyzer is
     // load-bearing, not cosmetic
-    val raw = Search.conjunctiveSearch(docs, "doc_id", "text", Seq("cat", "dog"), 10)
+    val raw = Search.conjunctiveSearch(Search.Corpus(docs), Seq("cat", "dog"), 10)
       .collect().map(_.getAs[Long]("doc_id")).toSet
     assert(raw == Set(3L), raw.toString)
     // identical damage must score identically to the clean twin: docs
     // 1-3 carry the same analyzed token multiset, so scores tie and
     // rank falls back to doc_id
-    val ranked = Search.conjunctiveSearch(docs, "doc_id", "text", Seq("cat", "dog"), 10, Folded)
+    val ranked = Search.conjunctiveSearch(Search.Corpus(docs), Seq("cat", "dog"), 10, Folded)
       .collect().map(r => (r.getAs[Long]("rank"), r.getAs[Long]("doc_id"))).toSeq
     assert(ranked == Seq((1L, 1L), (2L, 2L), (3L, 3L)), ranked.toString)
   }
@@ -1135,13 +1135,13 @@ class SearchSpec extends SparkSpec {
     Search.compactSearchIndex(spark, dir)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getAs[Long]("rank"), r.getAs[Long]("doc_id"), r.getAs[Long]("score_micro"))).toSeq
-    val corpus = rows(Search.conjunctiveSearch(docs, "doc_id", "text", Seq("Cat", "DOG!"), 10, Folded))
+    val corpus = rows(Search.conjunctiveSearch(Search.Corpus(docs), Seq("Cat", "DOG!"), 10, Folded))
     val probe = Search.conjunctiveFromIndex(spark, dir, Seq("Cat", "DOG!"), 10, Folded)
     assert(rows(probe) == corpus, "index-served analyzed search must equal the corpus analyzed pass")
     assert(corpus.map(_._2).toSet == Set(1L, 2L, 3L, 6L), corpus.toString)
     // OR gate from the index too
-    val orCorpus = rows(Search.disjunctiveSearch(docs, "doc_id", "text", Seq("Cat"), 10, Folded))
-    assert(rows(Search.disjunctiveFromIndex(spark, dir, Seq("Cat"), 10, Folded)) == orCorpus)
+    val orCorpus = rows(Search.disjunctiveSearch(Search.Corpus(docs), Seq("Cat"), 10, Folded))
+    assert(rows(Search.disjunctiveSearch(Search.Index(spark, dir), Seq("Cat"), 10, Folded)) == orCorpus)
     val plan = probe.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [") && plan.contains("tbucket"), plan.take(2000))
     assert(plan.contains("apostings"), "the analyzed probe must serve from the apostings relation")
@@ -1162,7 +1162,7 @@ class SearchSpec extends SparkSpec {
     Search.compactSearchIndex(spark, dir)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getAs[Long]("rank"), r.getAs[Long]("doc_id"), r.getAs[Long]("score_milli"))).toSeq
-    val corpus = rows(Search.bm25Search(docs, "doc_id", "text", Seq("Cat", "DOG!"), 10, Folded))
+    val corpus = rows(Search.bm25Search(Search.Corpus(docs), Seq("Cat", "DOG!"), 10, Folded))
     val probe = Search.bm25FromIndex(spark, dir, Seq("Cat", "DOG!"), 10, Folded)
     assert(rows(probe) == corpus, "index-served analyzed BM25 must equal the corpus analyzed pass")
     assert(corpus.map(_._2).toSet == Set(1L, 2L, 3L, 4L, 5L), corpus.toString)
@@ -1187,7 +1187,7 @@ class SearchSpec extends SparkSpec {
       // two raw variants of the same analyzed term must not double-count
       11L -> "[hash]", 11L -> "HASH", 11L -> "join"
     ).toDF("query_id", "term")
-    val got = Search.bm25BatchFromIndex(spark, dir, batch, 5, Folded)
+    val got = Search.bm25BatchSearch(Search.Index(spark, dir), batch, 5, Folded)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .groupBy(_._1)
@@ -1213,29 +1213,29 @@ class SearchSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     def m(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_occurrences")).toMap
-    val corpus = m(Search.phraseSearch(docs, "doc_id", "text", Seq("Hash", "JOIN.", "[big]"), Folded))
+    val corpus = m(Search.phraseSearch(Search.Corpus(docs), Seq("Hash", "JOIN.", "[big]"), Folded))
     assert(corpus == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 7L -> 2L), corpus.toString)
-    // the raw window route misses every damaged form — the analyzer is
+    // the raw route misses every damaged form — the analyzer is
     // load-bearing for phrases exactly as for term search
-    val raw = m(Search.phraseSearch(docs, "doc_id", "text", Seq("hash", "join", "big")))
+    val raw = m(Search.phraseSearch(Search.Corpus(docs), Seq("hash", "join", "big")))
     assert(raw == Map(3L -> 1L, 7L -> 2L), raw.toString)
     // served from the maintained analyzed index: build-even → append-odd → compact
     Search.saveSearchIndex(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", dir, analyzed = true)
     Search.appendToSearchIndex(docs.filter(col("doc_id") % 2 =!= 0), "doc_id", "text", dir, analyzed = true)
     Search.compactSearchIndex(spark, dir)
     val probe = Search.phraseFromIndex(spark, dir, Seq("Hash", "JOIN.", "[big]"), Folded)
-    assert(m(probe) == corpus, "index-served analyzed phrase must equal the corpus analyzed window route")
+    assert(m(probe) == corpus, "index-served analyzed phrase must equal the corpus analyzed route")
     // repeated-term analyzed phrase: bigram "join join" nowhere; "hash join" everywhere adjacency holds
     assert(
       m(Search.phraseFromIndex(spark, dir, Seq("HASH", "Join"), Folded)) ==
-        m(Search.phraseSearch(docs, "doc_id", "text", Seq("hash", "join"), Folded))
+        m(Search.phraseSearch(Search.Corpus(docs), Seq("hash", "join"), Folded))
     )
     val plan = probe.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [") && plan.contains("tbucket"), plan.take(2000))
     assert(plan.contains("apositions"), "the analyzed phrase probe must serve from apositions")
     // a phrase term that analyzes to empty is ill-formed, not silently shorter
     intercept[IllegalArgumentException] {
-      Search.phraseSearch(docs, "doc_id", "text", Seq("hash", "!!!"), Folded)
+      Search.phraseSearch(Search.Corpus(docs), Seq("hash", "!!!"), Folded)
     }
     intercept[IllegalArgumentException] {
       Search.phraseFromIndex(spark, dir, Seq("hash", "!!!"), Folded)
@@ -1497,7 +1497,7 @@ class SearchSpec extends SparkSpec {
       case (acc, _) =>
         val last = acc.last.orderBy(col("rank").desc).limit(1).head()
         acc :+ Search.bm25PageAfter(
-          spark, dir, Seq("cat"), 3, last.getAs[Long]("score_milli"), last.getAs[Long]("doc_id"))
+          Search.Index(spark, dir), Seq("cat"), 3, last.getAs[Long]("score_milli"), last.getAs[Long]("doc_id"))
     }
     val walked = pages.flatMap(
       _.orderBy("rank").collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("score_milli")))
@@ -1508,7 +1508,7 @@ class SearchSpec extends SparkSpec {
     assert(tieScores.nonEmpty, "fixture must contain a tie run")
     tieScores.values.foreach(run => assert(run.map(_._1) == run.map(_._1).sorted))
     // a later page still plans the top-k heap, not a global sort
-    val plan = Search.bm25PageAfter(spark, dir, Seq("cat"), 3, walked(5)._2, walked(5)._1)
+    val plan = Search.bm25PageAfter(Search.Index(spark, dir), Seq("cat"), 3, walked(5)._2, walked(5)._1)
       .queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), plan.take(1500))
   }
@@ -1536,7 +1536,7 @@ class SearchSpec extends SparkSpec {
     val p1 = Search.bm25FromIndex(spark, idxDir, Seq("CAT"), 2, Folded)
     val last = p1.orderBy(col("rank").desc).limit(1).head()
     val p2 = Search.bm25PageAfter(
-      spark, idxDir, Seq("CAT"), 2, last.getAs[Long]("score_milli"), last.getAs[Long]("doc_id"), Folded)
+      Search.Index(spark, idxDir), Seq("CAT"), 2, last.getAs[Long]("score_milli"), last.getAs[Long]("doc_id"), Folded)
     val walked = (p1.orderBy("rank").collect() ++ p2.orderBy("rank").collect())
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("score_milli"))).toSeq
     assert(walked == all, s"$walked vs $all")
@@ -1622,9 +1622,8 @@ class SearchSpec extends SparkSpec {
     val d = "/root/testdata/sf0.001"
     val dir = Search.demoAnalyzedIndexDir(spark, d)
     val served = Search
-      .batchedSearchFromIndex(
-        spark,
-        dir,
+      .batchedSearch(
+        Search.Index(spark, dir),
         Search.fixtureAnalyzedBatch.toDF("query_id", "term"),
         5,
         Some(Search.fixtureAnalyzedModes.toDF("query_id", "mode")), Folded)
@@ -1639,7 +1638,7 @@ class SearchSpec extends SparkSpec {
       .toMap
     def single(terms: Seq[String], requireAll: Boolean) =
       (if (requireAll) Search.conjunctiveFromIndex(spark, dir, terms, 5, Folded)
-       else Search.disjunctiveFromIndex(spark, dir, terms, 5, Folded))
+       else Search.disjunctiveSearch(Search.Index(spark, dir), terms, 5, Folded))
       .orderBy("rank")
       .collect()
       .map(r => (r.getAs[Long]("rank"), r.getAs[Long]("doc_id"), r.getAs[Long]("score_micro")))
@@ -1824,7 +1823,7 @@ class SearchSpec extends SparkSpec {
     val at0 = texts(Search.docStoreAsOf(spark, store, 0L))
     assert(at0 == Map(2L -> "anchor original two", 3L -> "anchor original three"), at0.toString)
     // the rendered as-of page shows the ERA's snippets
-    val hits = Search.conjunctiveFromIndexAsOf(spark, idx, Seq("original"), 10, 0L)
+    val hits = Search.conjunctiveSearch(Search.AsOf(spark, idx, 0L), Seq("original"), 10)
       .select(col("rank"), col("doc_id"))
     val snips = Search.kwicPageAsOf(spark, idx, store, hits, "original", 1, 0L)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("snippet")).toMap
@@ -1839,7 +1838,7 @@ class SearchSpec extends SparkSpec {
     // wrong → loud): pre-compaction generations refuse after compaction
     Search.compactSearchIndex(spark, idx)
     val e2 = intercept[IllegalArgumentException] {
-      Search.conjunctiveFromIndexAsOf(spark, idx, Seq("anchor"), 10, 0L).collect()
+      Search.conjunctiveSearch(Search.AsOf(spark, idx, 0L), Seq("anchor"), 10).collect()
     }
     assert(e2.getMessage.contains("travel horizon"), e2.getMessage)
     // at-or-above the horizon still serves (the live state)
@@ -1898,7 +1897,7 @@ class SearchSpec extends SparkSpec {
       (3L, "hash a a a a join"),    // distance 5: out at slop 3
       (4L, "hash join now hash z join") // ordered within 3: (1,2), (4,6) → 2 pairs (|1→6|=5 out)
     ).toDF("doc_id", "text")
-    def pairs(slop: Int) = Search.orderedSlopSearch(docs, "doc_id", "text", "hash", "join", slop)
+    def pairs(slop: Int) = Search.orderedSlopSearch(Search.Corpus(docs), "hash", "join", slop)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_pairs")).toMap
     assert(pairs(3) == Map(1L -> 1L, 4L -> 2L), pairs(3).toString)
     assert(pairs(1) == Map(4L -> 1L), "slop 1 is exact adjacency")
@@ -1921,7 +1920,7 @@ class SearchSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val dir = tempDir("graft_boost").toString + "/idx"
     Search.saveSearchIndex(docs, "doc_id", "text", dir)
-    val plain = Search.disjunctiveFromIndex(spark, dir, Seq("rare", "common"), 10)
+    val plain = Search.disjunctiveSearch(Search.Index(spark, dir), Seq("rare", "common"), 10)
       .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("score_micro"))).toMap
     val unit = Search.boostedSearchFromIndex(spark, dir, Seq("rare" -> 1L, "common" -> 1L), 10)
       .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("score_micro"))).toMap
@@ -2169,10 +2168,10 @@ class SearchSpec extends SparkSpec {
     // the term routes apply the same rule: a repeated term neither
     // double-counts n_matched/score nor makes the AND gate unreachable
     val routes: Seq[(String, Seq[String] => org.apache.spark.sql.DataFrame)] = Seq(
-      "conjunctiveSearch" -> (t => Search.conjunctiveSearch(docs, "doc_id", "text", t, 10)),
-      "disjunctiveSearch" -> (t => Search.disjunctiveSearch(docs, "doc_id", "text", t, 10)),
+      "conjunctiveSearch" -> (t => Search.conjunctiveSearch(Search.Corpus(docs), t, 10)),
+      "disjunctiveSearch" -> (t => Search.disjunctiveSearch(Search.Corpus(docs), t, 10)),
       "conjunctiveFromIndex" -> (t => Search.conjunctiveFromIndex(spark, dir, t, 10)),
-      "disjunctiveFromIndex" -> (t => Search.disjunctiveFromIndex(spark, dir, t, 10))
+      "disjunctiveFromIndex" -> (t => Search.disjunctiveSearch(Search.Index(spark, dir), t, 10))
     )
     routes.foreach { case (name, route) =>
       def page(t: Seq[String]) = route(t).collect().map(_.toSeq).toSeq
@@ -2187,7 +2186,8 @@ class SearchSpec extends SparkSpec {
     val long = Seq.fill(1001)("t").mkString(" ")
     val docs = Seq((7L, long)).toDF("doc_id", "text")
     val e = intercept[Exception] {
-      Search.chunkBm25TopK(docs, "doc_id", "text", Seq("t"), 1, 5).collect()
+      val chunks = Search.Corpus(Search.chunkedDocs(docs, "doc_id", "text", 1), "cid", "ctext")
+      Search.chunkBm25TopK(chunks, Seq("t"), 5).collect()
     }
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
@@ -2221,7 +2221,8 @@ class SearchSpec extends SparkSpec {
     val doc1 = (Seq.fill(16)("x") ++ Seq("cat", "cat", "cat") ++ Seq.fill(13)("y")).mkString(" ")
     val doc2 = (Seq("cat") ++ Seq.fill(15)("z") ++ Seq("cat") ++ Seq.fill(15)("w")).mkString(" ")
     val docs = Seq((1L, doc1), (2L, doc2)).toDF("doc_id", "text")
-    val got = Search.chunkBm25TopK(docs, "doc_id", "text", Seq("cat"), 16, 10)
+    val chunks = Search.Corpus(Search.chunkedDocs(docs, "doc_id", "text", 16), "cid", "ctext")
+    val got = Search.chunkBm25TopK(chunks, Seq("cat"), 10)
       .orderBy("rank").collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("chunk_no")))
     // doc 1's second window holds tf=3 at dl=16 — beats doc 2's best
@@ -2243,11 +2244,11 @@ class SearchSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val dir = tempDir("graft_aslop").toString + "/idx"
     Search.saveSearchIndex(docs, "doc_id", "text", dir, analyzed = true)
-    val got = Search.orderedSlopFromIndex(spark, dir, "Hash", "JOIN", 3, Folded)
+    val got = Search.orderedSlopSearch(Search.Index(spark, dir), "Hash", "JOIN", 3, Folded)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_pairs")).toMap
     assert(got == Map(1L -> 1L, 3L -> 1L), got.toString)
     intercept[IllegalArgumentException] {
-      Search.orderedSlopFromIndex(spark, dir, "!!!", "join", 3, Folded)
+      Search.orderedSlopSearch(Search.Index(spark, dir), "!!!", "join", 3, Folded)
     }
   }
 

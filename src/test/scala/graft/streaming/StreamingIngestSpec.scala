@@ -619,7 +619,7 @@ class StreamingIngestSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val batch = graft.ops.Search
-      .conjunctiveSearch(docs.toDF("doc_id", "text"), "doc_id", "text", Seq("cat", "dog"), 10)
+      .conjunctiveSearch(graft.ops.Search.Corpus(docs.toDF("doc_id", "text")), Seq("cat", "dog"), 10)
     assert(
       rows(graft.ops.Search.conjunctiveFromIndex(spark, idx, Seq("cat", "dog"), 10)) == rows(batch),
       "stream-maintained index must answer like the one-shot corpus pass"
@@ -649,7 +649,7 @@ class StreamingIngestSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val batch = graft.ops.Search
-      .bm25Search(docs.toDF("doc_id", "text"), "doc_id", "text", Seq("Cat", "DOG!"), 10, Folded)
+      .bm25Search(graft.ops.Search.Corpus(docs.toDF("doc_id", "text")), Seq("Cat", "DOG!"), 10, Folded)
     assert(
       rows(graft.ops.Search.bm25FromIndex(spark, idx, Seq("Cat", "DOG!"), 10, Folded)) == rows(batch),
       "stream-maintained analyzed index must answer analyzed BM25 like the one-shot corpus pass"
@@ -660,7 +660,7 @@ class StreamingIngestSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(
       m(graft.ops.Search.phraseFromIndex(spark, idx, Seq("Cat", "DOG!"), Folded)) ==
-        m(graft.ops.Search.phraseSearch(docs.toDF("doc_id", "text"), "doc_id", "text", Seq("Cat", "DOG!"), Folded)),
+        m(graft.ops.Search.phraseSearch(graft.ops.Search.Corpus(docs.toDF("doc_id", "text")), Seq("Cat", "DOG!"), Folded)),
       "stream-maintained apositions must answer analyzed phrase like the one-shot corpus pass"
     )
   }
@@ -687,7 +687,7 @@ class StreamingIngestSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val batch = graft.ops.Search
-      .conjunctiveSearch(a.unionByName(b), "doc_id", "text", Seq("cat", "dog"), 10)
+      .conjunctiveSearch(graft.ops.Search.Corpus(a.unionByName(b)), Seq("cat", "dog"), 10)
     assert(
       rows(graft.ops.Search.conjunctiveFromIndex(spark, idx, Seq("cat", "dog"), 10)) == rows(batch),
       "a replayed batch must leave the index identical to a clean run"
