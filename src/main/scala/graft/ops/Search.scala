@@ -48,7 +48,7 @@ import graft.Query.FirstRun
   * where the postings come from: the corpus read in place
   * ([[Corpus]]: coarse `contains` prunes, pushable to the scan), a
   * persisted index ([[Index]]: the one bucket-pruned scan, [[pruned]])
-  * or that index as of a generation ([[AsOf]]). So the term, BM25,
+  * read live or as of a generation. So the term, BM25,
   * chunk, batch, phrase, proximity, slop, prefix, boolean and synonym
   * routes each score, gate and rank once, with the one idf model
   * ([[idfModel]]). Builds and maintenance take `analyzed = true` to
@@ -125,6 +125,11 @@ object Search {
       */
     private[ops] def contains(textCol: String, t: String): Column
 
+    /** Coarse prune: a necessary condition for the normalised terms `ts`
+      * to occur as consecutive tokens (a phrase).
+      */
+    private[ops] def adjacent(textCol: String, ts: Seq[String]): Column
+
     /** Case fold for a dictionary pattern (a glob, or a regex whose
       * escapes must survive).
       */
@@ -146,6 +151,8 @@ object Search {
       private[ops] def token(c: Column): Column = c
       private[ops] def tokens(textCol: String): Column = split(col(textCol), " ")
       private[ops] def contains(textCol: String, t: String): Column = col(textCol).contains(t)
+      // consecutive split(' ') tokens are joined by exactly one space
+      private[ops] def adjacent(textCol: String, ts: Seq[String]): Column = col(textCol).contains(ts.mkString(" "))
       private[ops] def pattern(p: String, regex: Boolean): String = p
       private[ops] def scalars(s: SparkSession, dir: String): (Long, Long) = readMeta(s, dir)
     }
@@ -161,6 +168,11 @@ object Search {
       private[ops] def tokens(textCol: String): Column = atoksCol(textCol)
       // an analyzed token's body appears contiguously in the lowered text
       private[ops] def contains(textCol: String, t: String): Column = lower(col(textCol)).contains(t)
+      // between two consecutive folded tokens the lowered text holds only
+      // their stripped edges, spaces and pure-punct tokens: a non-empty
+      // run of non-alphanumerics
+      private[ops] def adjacent(textCol: String, ts: Seq[String]): Column =
+        lower(col(textCol)).rlike(ts.map(java.util.regex.Pattern.quote).mkString("[^a-z0-9]+"))
       private[ops] def pattern(p: String, regex: Boolean): String =
         if (regex) lowerRegexLiterals(p) else p.toLowerCase
       private[ops] def scalars(s: SparkSession, dir: String): (Long, Long) =
@@ -181,24 +193,44 @@ object Search {
     *
     *  - term-pruned postings (token, doc_id, tf, <the analyzer's dl>);
     *  - term-pruned positions (token, doc_id, pos);
-    *  - the scalars N and (N, total tokens);
+    *  - N, as the idf column it feeds, and (N, total tokens);
     *  - the (token, df) dictionary the expansion routes rank.
     *
-    * Postings and positions carry EVERY document holding a term, so df
-    * counted over them is exact. A [[Corpus]] therefore prunes its scan
-    * with the OR of the terms' coarse contains predicates — never the
-    * AND, which would drop single-term documents and undercount df.
+    * Postings carry EVERY document holding a term, so df counted over
+    * them is exact. Positions need only carry the documents holding ALL
+    * the terms: their readers (phrase, proximity, ordered slop) match
+    * every term and take no df.
     */
   sealed abstract class Source {
     private[ops] def session: SparkSession
 
     /** What error messages name. */
     private[ops] def what: String
-    private[ops] def postings(terms: Seq[String], a: Analyzer): DataFrame
-    private[ops] def positions(terms: Seq[String], a: Analyzer): DataFrame
 
-    /** N, the live document count (analyzer-independent). */
-    private[ops] def nDocs: Long
+    private[ops] def postings(terms: Seq[String], a: Analyzer): DataFrame
+
+    /** What an expansion route scores: `terms` is a request-sized
+      * (token, df) relation drawn from [[dictionary]], each token
+      * containing the substring `cover`. Returns postings covering those
+      * tokens (the inner join with the idf model drops any other token)
+      * and the (token, df) rows their idf is computed from; None for an
+      * empty expansion. An index collects the tokens for its static
+      * bucket prune and recounts df over the pruned postings (its
+      * dictionary trails tombstones until compaction); a corpus
+      * dictionary's df is exact, so a corpus scores with it in-plan.
+      */
+    private[ops] def expanded(terms: DataFrame, a: Analyzer, cover: String): Option[(DataFrame, DataFrame)]
+
+    /** Positions of `terms`; `phrase`, when given, is the in-order term
+      * sequence the reader matches as consecutive tokens, which a corpus
+      * also prunes by ([[Analyzer.adjacent]]).
+      */
+    private[ops] def positions(terms: Seq[String], a: Analyzer, phrase: Seq[String] = Nil): DataFrame
+
+    /** `rows` (carrying a `df` column) with the smoothed idf at `scale`
+      * added, N being the live document count (analyzer-independent).
+      */
+    private[ops] def idf(rows: DataFrame, scale: Long): DataFrame
 
     /** (N, total tokens under the analyzer) — BM25's model scalars. */
     private[ops] def scalars(a: Analyzer): (Long, Long)
@@ -207,68 +239,111 @@ object Search {
       * the corpus prunes its pass with it, an index reads its vocab.
       */
     private[ops] def dictionary(a: Analyzer, within: String): DataFrame
+
+    /** Per-token row counts of `rel`, one of this source's term-pruned
+      * relations, when that probe is request-sized; empty when it would
+      * cost another pass over the source (callers then keep their
+      * query order).
+      */
+    private[ops] def tokenCounts(rel: DataFrame): Map[String, Long]
   }
 
-  /** The corpus read in place: each read is one contains-pruned pass
-    * over `docs` (pushable to the scan), N is countDistinct(id) — the
-    * convention the index meta shares.
+  /** The corpus read in place: each read is one pass over `docs`; N is
+    * countDistinct(id), the convention the index meta shares, joined
+    * into the idf model in-plan rather than counted by a job of its own.
+    * Postings of a few terms prune the pass with the OR of their coarse
+    * contains predicates (pushable, and never the AND, which would drop
+    * single-term documents and undercount df); a batch-sized term set
+    * prunes by exact token membership instead, so the pass costs one
+    * hash probe per token rather than one substring scan per term.
+    * Positions prune with the AND (every reader needs all its terms)
+    * and, for a phrase, the analyzer's adjacency condition. No count
+    * probe: each would be a further pass.
     */
   final case class Corpus(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text") extends Source {
     private[ops] def session: SparkSession = docs.sparkSession
     private[ops] def what: String = "the corpus"
-    private def containing(terms: Seq[String], a: Analyzer): DataFrame =
-      docs.filter(terms.map(a.contains(textCol, _)).reduce(_ || _))
+    private def containing(subs: Seq[String], a: Analyzer, all: Boolean = false): DataFrame =
+      if (subs.size > Corpus.maxContains) docs
+      else {
+        val has = subs.map(a.contains(textCol, _))
+        docs.filter(if (all) has.reduce(_ && _) else has.reduce(_ || _))
+      }
     private[ops] def postings(terms: Seq[String], a: Analyzer): DataFrame =
       postingsWithDl(containing(terms, a), idCol, textCol, a).filter(col("token").isin(terms: _*))
-    private[ops] def positions(terms: Seq[String], a: Analyzer): DataFrame =
-      positionalPostings(containing(terms, a), idCol, textCol, a).filter(col("token").isin(terms: _*))
-    private[ops] def nDocs: Long = docs.agg(countDistinct(col(idCol)).cast("long")).head().getLong(0)
+    private[ops] def expanded(terms: DataFrame, a: Analyzer, cover: String): Option[(DataFrame, DataFrame)] =
+      Some((postingsWithDl(containing(Seq(cover), a), idCol, textCol, a), terms))
+    private[ops] def positions(terms: Seq[String], a: Analyzer, phrase: Seq[String] = Nil): DataFrame = {
+      val all = containing(terms, a, all = true)
+      val candidates = if (phrase.isEmpty) all else all.filter(a.adjacent(textCol, phrase))
+      positionalPostings(candidates, idCol, textCol, a).filter(col("token").isin(terms: _*))
+    }
+    private[ops] def idf(rows: DataFrame, scale: Long): DataFrame =
+      rows
+        .crossJoin(broadcast(docs.agg(countDistinct(col(idCol)).cast("long").as("__n"))))
+        .withColumn(idfName(scale), idfCol(col("__n") + 1, scale))
+        .drop("__n")
     private[ops] def scalars(a: Analyzer): (Long, Long) = {
       val r = docs.agg(countDistinct(col(idCol)).cast("long"), tokenTotal(textCol, a)).head()
       (r.getLong(0), r.getLong(1))
     }
+    // over the same pass `expanded` scores, so the plan shares its scan
     private[ops] def dictionary(a: Analyzer, within: String): DataFrame =
-      Search.postings(containing(Seq(within), a), idCol, textCol, a)
-        .groupBy(col("token"))
-        .agg(count(lit(1)).cast("long").as("df"))
+      dfRows(postingsWithDl(containing(Seq(within), a), idCol, textCol, a))
+    private[ops] def tokenCounts(rel: DataFrame): Map[String, Long] = Map.empty
   }
 
-  /** A persisted index at `dir`, read live or as of a generation: the
-    * terms' bucket dirs through [[pruned]], the meta scalars, the vocab
-    * (the live dictionary in both cases — it only SELECTS terms; df
-    * for scoring always comes from the pruned postings).
+  object Corpus {
+
+    /** The most contains predicates a corpus prune ORs together. */
+    private val maxContains = 16
+  }
+
+  /** A persisted index at `dir`: the terms' bucket dirs through
+    * [[pruned]], the meta scalars, the vocab (the live dictionary in
+    * both cases — it only SELECTS terms; df for scoring always comes
+    * from the pruned postings).
+    *
+    * With `asOf = Some(gen)` it is read by TIME TRAVEL: the index
+    * exactly as it served after generation `gen` — later batches' rows
+    * invisible, later tombstones unapplied (an upsert's OLD version
+    * serves again), N and total tokens reconstructed from the increment
+    * ledger ([[metaAsOf]]). Valid back to the last compaction (a purge
+    * physically drops history, Lucene's retention contract);
+    * generations up to the first upsert reconstruct exactly, and across
+    * an upsert window the ledger N carries the documented Lucene
+    * overcount until compaction.
     */
-  sealed abstract class Persisted(asOf: Option[Long]) extends Source {
-    def s: SparkSession
-    def dir: String
+  final case class Index(s: SparkSession, dir: String, asOf: Option[Long] = None) extends Source {
     private[ops] def session: SparkSession = s
     private[ops] def what: String = s"index at $dir"
     private[ops] def postings(terms: Seq[String], a: Analyzer): DataFrame = postingsScan(s, dir, terms, a, asOf)
-    private[ops] def positions(terms: Seq[String], a: Analyzer): DataFrame = positionsScan(s, dir, terms, a, asOf)
-    private[ops] def dictionary(a: Analyzer, within: String): DataFrame = vocabRows(s, dir, a)
-  }
-
-  /** The live index. */
-  final case class Index(s: SparkSession, dir: String) extends Persisted(None) {
-    private[ops] def nDocs: Long = readMeta(s, dir)._1
-    private[ops] def scalars(a: Analyzer): (Long, Long) = a.scalars(s, dir)
-  }
-
-  /** TIME TRAVEL: the index exactly as it served after generation
-    * `gen` — later batches' rows invisible, later tombstones unapplied
-    * (an upsert's OLD version serves again), N and total tokens
-    * reconstructed from the increment ledger ([[metaAsOf]]). Valid
-    * back to the last compaction (a purge physically drops history,
-    * Lucene's retention contract); generations up to the first upsert
-    * reconstruct exactly, and across an upsert window the ledger N
-    * carries the documented Lucene overcount until compaction.
-    */
-  final case class AsOf(s: SparkSession, dir: String, gen: Long) extends Persisted(Some(gen)) {
-    private[ops] def nDocs: Long = metaAsOf(s, dir, gen)._1
-    private[ops] def scalars(a: Analyzer): (Long, Long) = {
-      require(a == Raw, "time-travel reads serve the raw tier only")
-      metaAsOf(s, dir, gen)
+    private[ops] def expanded(terms: DataFrame, a: Analyzer, cover: String): Option[(DataFrame, DataFrame)] = {
+      val ts = terms.select("token").collect().map(_.getString(0)).toSeq
+      if (ts.isEmpty) None
+      else {
+        val p = postings(ts, a)
+        Some((p, dfRows(p)))
+      }
     }
+    private[ops] def positions(terms: Seq[String], a: Analyzer, phrase: Seq[String] = Nil): DataFrame =
+      positionsScan(s, dir, terms, a, asOf)
+    private def nDocs: Long = asOf.fold(readMeta(s, dir))(metaAsOf(s, dir, _))._1
+    private[ops] def idf(rows: DataFrame, scale: Long): DataFrame = withIdf(rows, nDocs, scale)
+    private[ops] def scalars(a: Analyzer): (Long, Long) = asOf match {
+      case None => a.scalars(s, dir)
+      case Some(gen) =>
+        require(a == Raw, "time-travel reads serve the raw tier only")
+        metaAsOf(s, dir, gen)
+    }
+    private[ops] def dictionary(a: Analyzer, within: String): DataFrame = vocabRows(s, dir, a)
+    private[ops] def tokenCounts(rel: DataFrame): Map[String, Long] =
+      rel
+        .groupBy(col("token"))
+        .agg(count(lit(1)).as("n"))
+        .collect()
+        .map(r => r.getString(0) -> r.getLong(1))
+        .toMap
   }
 
   /** Kept to two engine-portable operations so the DuckDB oracle runs
@@ -366,16 +441,28 @@ object Search {
 
   private def idfName(scale: Long): String = if (scale == 1000L) "idf_milli" else "idf_micro"
 
-  /** (token, idf) model over a source's term-pruned posting rows: df
-    * per token is the rows' count (postings are one row per (token,
-    * doc), every document holding the term included), N comes from the
-    * source — the model every route broadcasts.
+  /** `rows` (carrying a `df` column) with the idf at `scale` over a
+    * known N added.
+    */
+  private def withIdf(rows: DataFrame, nDocs: Long, scale: Long): DataFrame =
+    rows.withColumn(idfName(scale), idfCol(lit(nDocs + 1), scale))
+
+  /** (token, df) over term-pruned posting rows: df per token is the
+    * rows' count (postings are one row per (token, doc), every document
+    * holding the term included).
+    */
+  private def dfRows(p: DataFrame): DataFrame =
+    p.groupBy(col("token")).agg(count(lit(1)).cast("long").as("df"))
+
+  /** (token, idf) model over term-pruned posting rows with a known N —
+    * the model every route broadcasts.
     */
   private def idfModel(p: DataFrame, nDocs: Long, scale: Long): DataFrame =
-    p.groupBy(col("token"))
-      .agg(count(lit(1)).cast("long").as("df"))
-      .withColumn(idfName(scale), idfCol(lit(nDocs + 1), scale))
-      .select(col("token"), col(idfName(scale)))
+    withIdf(dfRows(p), nDocs, scale).select(col("token"), col(idfName(scale)))
+
+  /** [[idfModel]] over (token, df) rows with N from the source. */
+  private def idfModel(src: Source, dfs: DataFrame, scale: Long): DataFrame =
+    src.idf(dfs, scale).select(col("token"), col(idfName(scale)))
 
   /** Shared top-k tail: orderBy+limit plans as TakeOrderedAndProject
     * (per-partition heaps, no full sort); the rank column is stamped
@@ -477,17 +564,35 @@ object Search {
       s"minMatched must be in [1, ${terms.size}], got $minMatched"
     )
     val p = src.postings(terms, a)
+    scoreTerms(
+      src,
+      p,
+      dfRows(p),
+      if (requireAll) col("n_matched") === terms.size.toLong else col("n_matched") >= minMatched.toLong,
+      exclude,
+      k
+    )
+  }
+
+  /** The term route's scoring tail: postings `p` joined to the
+    * micro-idf model over the (token, df) rows `dfs`, gated, top-k.
+    */
+  private def scoreTerms(
+      src: Source,
+      p: DataFrame,
+      dfs: DataFrame,
+      gate: Column,
+      exclude: Option[DataFrame],
+      k: Int
+  ): DataFrame = {
     val scored = p
-      .join(broadcast(idfModel(p, src.nDocs, 1000000L)), "token")
+      .join(broadcast(idfModel(src, dfs, 1000000L)), "token")
       .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).cast("long").as("n_matched"),
         sum(col("tf") * col("idf_micro")).cast("long").as("score_micro")
       )
-      .filter(
-        if (requireAll) col("n_matched") === terms.size.toLong
-        else col("n_matched") >= minMatched.toLong
-      )
+      .filter(gate)
     // must-not exclusion BEFORE the page is cut, so rank k+1 can
     // enter the page. NO broadcast hint: the exclusion set is
     // must-not-df-sized — a stopword-ish NOT term is corpus-scale at
@@ -1479,7 +1584,7 @@ object Search {
     * (TakeOrderedAndProject over the pruned buckets — never a global
     * sort, never an OFFSET that forces materializing every earlier
     * page). Page-local ranks 1..k; the caller owns absolute numbering
-    * (it knows how many pages it has walked). Over an [[AsOf]] source
+    * (it knows how many pages it has walked). Over an as-of [[Index]]
     * this is POINT-IN-TIME pagination — the search_after + PIT pairing
     * every deep-pagination API ships (a cursor is only stable against a
     * FROZEN index; paging a live index skips or repeats rows as
@@ -1896,7 +2001,8 @@ object Search {
     */
   def phraseSearch(src: Source, rawTerms: Seq[String], a: Analyzer = Raw): DataFrame = {
     val terms = phraseTerms(rawTerms, a)
-    phraseFoldOverPositions(src.positions(terms.distinct, a), terms)
+    val pos = src.positions(terms.distinct, a, phrase = terms)
+    phraseFoldOverPositions(pos, terms, src.tokenCounts(pos))
   }
 
   /** [[phraseSearch]] over an [[Index]] — a published name the serving
@@ -1975,22 +2081,16 @@ object Search {
   }
 
   /** The rarest-first equi-join fold under [[phraseSearch]]: `pos` is
-    * the source's QUERY-PRUNED positional relation. A k-row count probe
-    * orders the fold so every intermediate is bounded by the rarest
-    * term's occurrence count.
+    * the source's QUERY-PRUNED positional relation, `counts` its
+    * per-term occurrence counts (k rows, probe-sized) — they order the
+    * fold so every intermediate is bounded by the rarest term's
+    * occurrence count. A corpus has no cheap probe; its positions are
+    * pruned to the documents holding every term, which already bounds
+    * the fold, so it keeps the phrase order. Each fold arm re-reads the
+    * PRUNED relation (bucket-sized I/O on an index, and keeping the
+    * scans in the plan keeps the PartitionFilters prune verifiable).
     */
-  private def phraseFoldOverPositions(pos: DataFrame, terms: Seq[String]): DataFrame = {
-    // per-term occurrence counts: k rows, probe-sized — orders the
-    // fold rarest-first so intermediates never exceed the rarest
-    // term's postings. Each fold arm re-reads the PRUNED dirs (bucket-
-    // sized I/O, and keeping the scans in the plan keeps the
-    // PartitionFilters prune verifiable)
-    val counts = pos
-      .groupBy(col("token"))
-      .agg(count(lit(1)).as("n"))
-      .collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-      .toMap
+  private def phraseFoldOverPositions(pos: DataFrame, terms: Seq[String], counts: Map[String, Long]): DataFrame = {
     val ordered = terms.zipWithIndex.sortBy { case (t, _) => counts.getOrElse(t, 0L) }
     val (t0, i0) = ordered.head
     val anchor = pos
@@ -2303,28 +2403,28 @@ object Search {
 
   /** PREFIX search: the source's dictionary expands the prefix to its
     * top-maxExpand terms (df desc, token asc — the capped expansion
-    * every production engine applies to multi-term rewrites; the
-    * collect is request-sized), then the standard disjunctive scoring
-    * runs over those terms. A document holding a token with this prefix
-    * necessarily contains the prefix as a SUBSTRING, so a corpus
-    * dictionary prunes its pass with one contains(prefix); an index
-    * reads its types-scale vocab. Scoring df recomputes from the
-    * postings — the dictionary only SELECTS terms, so a tombstone
-    * window can reorder a stale expansion but never mis-score a term.
+    * every production engine applies to multi-term rewrites), then the
+    * standard disjunctive scoring runs over those terms' postings
+    * ([[Source.expanded]]). A document holding a token with this
+    * prefix necessarily contains the prefix as a SUBSTRING, so a corpus
+    * reads one contains(prefix)-pruned pass for both the dictionary and
+    * the scoring, and scores with the dictionary's exact df in-plan. An
+    * index reads its types-scale vocab, collects the request-sized
+    * expansion for its bucket prune and recounts df from the postings —
+    * its vocab only SELECTS terms, so a tombstone window can reorder a
+    * stale expansion but never mis-score a term.
     */
   def prefixSearch(src: Source, rawPrefix: String, maxExpand: Int, k: Int, a: Analyzer = Raw): DataFrame = {
     val prefix = a.term(rawPrefix)
     require(prefix.nonEmpty, "prefix search needs a non-empty prefix")
-    val terms = src
+    val expansion = src
       .dictionary(a, prefix)
       .filter(col("token").startsWith(prefix))
       .orderBy(col("df").desc, col("token").asc)
       .limit(maxExpand)
-      .select("token")
-      .collect()
-      .map(_.getString(0))
-      .toSeq
-    expandedSearch(src, terms, k, a)
+    src
+      .expanded(expansion, a, prefix)
+      .fold(emptyHits(src.session)) { case (p, dfs) => scoreTerms(src, p, dfs, col("n_matched") >= 1L, None, k) }
   }
 
   /** The disjunctive serve over a dictionary expansion (empty
@@ -2550,10 +2650,8 @@ object Search {
     val cp = p
       .groupBy(col("gid"), col("doc_id"))
       .agg(sum(col("tf")).cast("long").as("tf"))
-    val dfModel = p
-      .groupBy(col("gid"))
-      .agg(countDistinct(col("doc_id")).cast("long").as("df"))
-      .withColumn("idf_micro", idfCol(lit(src.nDocs + 1), 1000000L))
+    val dfModel = src
+      .idf(p.groupBy(col("gid")).agg(countDistinct(col("doc_id")).cast("long").as("df")), 1000000L)
       .select(col("gid"), col("idf_micro"))
     scoreSynonymGroups(cp, dfModel, groups.size, k, requireAll)
   }
@@ -3261,7 +3359,7 @@ object Search {
       .getOrElse(batch.select(col("query_id")).distinct().withColumn("mode", lit("AND")))
     val scored = p
       .join(broadcast(batch.withColumnRenamed("term", "token")), "token")
-      .join(broadcast(idfModel(p, src.nDocs, 1000000L)), "token")
+      .join(broadcast(idfModel(src, dfRows(p), 1000000L)), "token")
       .groupBy(col("query_id"), col("doc_id"))
       .agg(
         count(lit(1)).cast("long").as("n_matched"),
@@ -3603,7 +3701,7 @@ object Search {
     }
 
   val searchAsOfProbe: Q = (s, d) =>
-    conjunctiveSearch(AsOf(s, demoAsOfIndexDir(s, d), 0L), fixtureAndTerms, topK).orderBy("rank")
+    conjunctiveSearch(Index(s, demoAsOfIndexDir(s, d), Some(0L)), fixtureAndTerms, topK).orderBy("rank")
 
   /** As-of SERP gate: hits AND snippets at generation 0 — the gen-1
     * upsert's "rewritten " prefix must be invisible in both tiers
@@ -3611,7 +3709,7 @@ object Search {
     */
   val searchAsOfPage: Q = (s, d) => {
     val idx = demoAsOfIndexDir(s, d)
-    val hits = conjunctiveSearch(AsOf(s, idx, 0L), Seq(fixturePhrase._1), kwicPageK)
+    val hits = conjunctiveSearch(Index(s, idx, Some(0L)), Seq(fixturePhrase._1), kwicPageK)
       .select(col("rank"), col("doc_id"))
     kwicPageAsOf(s, idx, demoAsOfDocStoreDir(s, d), hits, fixturePhrase._1, 3, asOfGen = 0L)
       .orderBy("rank", "pos")
@@ -3619,14 +3717,14 @@ object Search {
 
   /** Ranked time travel: BM25 as of generation 0 on the same demo. */
   val searchAsOfBm25: Q = (s, d) =>
-    bm25Search(AsOf(s, demoAsOfIndexDir(s, d), 0L), fixtureOrTerms, topK).orderBy("rank")
+    bm25Search(Index(s, demoAsOfIndexDir(s, d), Some(0L)), fixtureOrTerms, topK).orderBy("rank")
 
   /** PIT pagination gate: page 2 of the generation-0 ranking, cursored
     * from page 1's last row — the oracle recomputes the cursor and the
     * page-2 window over the pre-upsert corpus.
     */
   val searchAsOfPageAfter: Q = (s, d) => {
-    val at0 = AsOf(s, demoAsOfIndexDir(s, d), 0L)
+    val at0 = Index(s, demoAsOfIndexDir(s, d), Some(0L))
     val last = bm25Search(at0, fixtureOrTerms, topK).orderBy(desc("rank")).limit(1).head()
     bm25PageAfter(at0, fixtureOrTerms, topK, last.getAs[Long]("score_milli"), last.getAs[Long]("doc_id"))
       .orderBy("rank")

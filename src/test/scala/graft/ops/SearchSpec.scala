@@ -504,7 +504,7 @@ class SearchSpec extends SparkSpec {
       Seq((3L, "anchor rewritten three")).toDF("doc_id", "text"), "doc_id", "text", dir, 1L,
       upsert = true)
     def idsAsOf(term: String, g: Long) =
-      Search.conjunctiveSearch(Search.AsOf(spark, dir, g), Seq(term), 10).collect()
+      Search.conjunctiveSearch(Search.Index(spark, dir, Some(g)), Seq(term), 10).collect()
         .map(_.getAs[Long]("doc_id")).toSet
     // generation 0: the original version of doc 3 serves
     assert(idsAsOf("original", 0L) == Set(2L, 3L))
@@ -518,7 +518,7 @@ class SearchSpec extends SparkSpec {
     // ranked time travel: BM25 at gen 0 finds the original, not the
     // rewrite, and at gen 1 the inverse
     def bm25Ids(term: String, g: Long) =
-      Search.bm25Search(Search.AsOf(spark, dir, g), Seq(term), 10).collect()
+      Search.bm25Search(Search.Index(spark, dir, Some(g)), Seq(term), 10).collect()
         .map(_.getAs[Long]("doc_id")).toSet
     assert(bm25Ids("original", 0L) == Set(2L, 3L) && bm25Ids("original", 1L) == Set(2L))
     assert(bm25Ids("rewritten", 1L) == Set(3L))
@@ -530,7 +530,7 @@ class SearchSpec extends SparkSpec {
     val plain = s"$tmp/plain"
     Search.saveSearchIndex(base, "doc_id", "text", plain)
     intercept[IllegalArgumentException] {
-      Search.conjunctiveSearch(Search.AsOf(spark, plain, 0L), Seq("anchor"), 10)
+      Search.conjunctiveSearch(Search.Index(spark, plain, Some(0L)), Seq("anchor"), 10)
     }
     // compaction ends the travel horizon: the purged index serves the
     // live state at every surviving generation
@@ -1823,7 +1823,7 @@ class SearchSpec extends SparkSpec {
     val at0 = texts(Search.docStoreAsOf(spark, store, 0L))
     assert(at0 == Map(2L -> "anchor original two", 3L -> "anchor original three"), at0.toString)
     // the rendered as-of page shows the ERA's snippets
-    val hits = Search.conjunctiveSearch(Search.AsOf(spark, idx, 0L), Seq("original"), 10)
+    val hits = Search.conjunctiveSearch(Search.Index(spark, idx, Some(0L)), Seq("original"), 10)
       .select(col("rank"), col("doc_id"))
     val snips = Search.kwicPageAsOf(spark, idx, store, hits, "original", 1, 0L)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("snippet")).toMap
@@ -1838,7 +1838,7 @@ class SearchSpec extends SparkSpec {
     // wrong → loud): pre-compaction generations refuse after compaction
     Search.compactSearchIndex(spark, idx)
     val e2 = intercept[IllegalArgumentException] {
-      Search.conjunctiveSearch(Search.AsOf(spark, idx, 0L), Seq("anchor"), 10).collect()
+      Search.conjunctiveSearch(Search.Index(spark, idx, Some(0L)), Seq("anchor"), 10).collect()
     }
     assert(e2.getMessage.contains("travel horizon"), e2.getMessage)
     // at-or-above the horizon still serves (the live state)
