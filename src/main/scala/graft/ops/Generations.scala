@@ -290,15 +290,17 @@ object Generations {
       rel: DataFrame,
       keyCol: String = "doc_id",
       asOf: Option[Long] = None
-  ): DataFrame =
-    if (asOf.isEmpty && !hasTombstones(s, dir)) rel
+  ): DataFrame = {
+    val tombstoned = hasTombstones(s, dir)
+    if (asOf.isEmpty && !tombstoned) rel
     else {
       asOf.foreach(requireAsOfInsideHorizon(s, dir, _))
       val g = rel.withColumn("__gen", genFromFileCol)
       val seen = asOf.fold(g)(a => g.filter(col("__gen") <= a))
-      if (hasTombstones(s, dir)) dropDead(seen, tombstoneMaxAsof(s, dir, keyCol, asOf), keyCol)
+      if (tombstoned) dropDead(seen, tombstoneMaxAsof(s, dir, keyCol, asOf), keyCol)
       else seen.drop("__gen")
     }
+  }
 
   /** Fail an as-of read at a generation below the last compaction's
     * `_asof_horizon` (−1 if never compacted): compaction renames

@@ -803,11 +803,8 @@ object Search {
         .empty[(Long, Long, Long, Long, String)]
         .toDF("rank", "doc_id", "chunk_no", "score_milli", "chunk_text")
     }
-    val ids = page.map(_._2).distinct.toSeq
-    val dbuckets = ids.map(docBucket).distinct
     val ranked = page.toSeq.toDF("rank", "doc_id", "chunk_no", "score_milli")
-    val toks = docStoreLive(s, storeDir)
-      .filter(col("dbucket").isin(dbuckets: _*) && col("doc_id").isin(ids: _*))
+    val toks = docStorePage(s, storeDir, page.map(_._2).distinct.toSeq)
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
     broadcast(ranked)
       .join(toks, "doc_id")
@@ -887,23 +884,71 @@ object Search {
     .add("tbucket", "long")
 
   /** The bucket-pruned read every index probe starts from: the terms'
-    * token-hash buckets, computed driver-side (no Spark pass), become a
-    * static PartitionFilter (spec-pinned) next to the token predicate,
-    * and dead rows drop through [[liveRows]] (as of a generation for a
-    * time-travel read) directly over the scan. A probe for Q terms
-    * reads at most Q bucket dirs, never the index.
+    * token-hash buckets, computed driver-side (no Spark pass), are the
+    * only dirs of the relation `dir/rel` listed ([[bucketProbe]]) and
+    * a static PartitionFilter (spec-pinned) next to the token
+    * predicate; dead rows drop through [[liveRows]] (as of a generation
+    * for a time-travel read) directly over the scan. A probe for Q
+    * terms lists and reads at most Q bucket dirs, never the index, and
+    * runs as one partition while those dirs fit one scan split.
     */
   private def pruned(
       s: SparkSession,
       dir: String,
-      rel: DataFrame,
+      rel: String,
+      schema: org.apache.spark.sql.types.StructType,
       terms: Seq[String],
       asOf: Option[Long] = None
+  ): DataFrame =
+    bucketProbe(s, dir, rel, "tbucket", terms.map(tokenBucket), col("token").isin(terms: _*), Some(schema), asOf)
+
+  /** The request-sized read of a bucketed relation `dir/rel`: rows of
+    * the `part` buckets `buckets` that pass `keep`, live through
+    * [[liveRows]] (as of `asOf`).
+    *
+    *   - LISTING: only the existing `part=<b>` dirs are listed, read
+    *     with `basePath` so `part` stays a partition column (the
+    *     bucket filter still plans as a PartitionFilter, and liveRows'
+    *     `input_file_name` generation parse still sees the file). A
+    *     whole-root read would list every bucket dir — with more than
+    *     32 of them Spark runs a listing job of its own per probe.
+    *     A missing `dir/rel` fails as a whole-root read does; with none
+    *     of the bucket dirs present the read is the empty relation of
+    *     `schema` (an inferred-schema read falls back to the root,
+    *     which the bucket filter then empties).
+    *   - PARTITIONS: when the listed files total at most
+    *     `spark.sql.files.maxPartitionBytes` — Spark's own size for one
+    *     scan task — the rows are `coalesce(1)`, so the aggregate,
+    *     join and top-k above plan with no shuffle; above that size the
+    *     read keeps its splits and the plan its exchanges, so a
+    *     corpus-sized bucket still scales out.
+    */
+  private def bucketProbe(
+      s: SparkSession,
+      dir: String,
+      rel: String,
+      part: String,
+      buckets: Seq[Long],
+      keep: Column,
+      schema: Option[org.apache.spark.sql.types.StructType],
+      asOf: Option[Long]
   ): DataFrame = {
-    val scan = rel.filter(
-      col("tbucket").isin(terms.map(tokenBucket).distinct: _*) && col("token").isin(terms: _*)
-    )
-    liveRows(s, dir, scan, asOf = asOf)
+    val root = s"$dir/$rel"
+    val fs = fsFor(s, root)
+    val bs = buckets.distinct
+    val dirs = bs.map(b => s"$root/$part=$b").filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
+    val reader = schema.fold(s.read)(s.read.schema)
+    val read = schema match {
+      case Some(st) if dirs.isEmpty && fs.exists(new org.apache.hadoop.fs.Path(root)) =>
+        s.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), st)
+      case _ if dirs.isEmpty => reader.parquet(root)
+      case _ => reader.option("basePath", root).parquet(dirs: _*)
+    }
+    val live = liveRows(s, dir, read.filter(col(part).isin(bs: _*) && keep), asOf = asOf)
+    val listedBytes = read.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.collect { case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation => r.location.sizeInBytes }
+    if (listedBytes.exists(_ <= s.sessionState.conf.filesMaxPartitionBytes)) live.coalesce(1) else live
   }
 
   /** [[pruned]] over the analyzer's persisted postings. */
@@ -914,7 +959,7 @@ object Search {
       a: Analyzer = Raw,
       asOf: Option[Long] = None
   ): DataFrame =
-    pruned(s, dir, s.read.schema(postingsSchema(a)).parquet(s"$dir/${a.postings}"), terms, asOf)
+    pruned(s, dir, a.postings, postingsSchema(a), terms, asOf)
 
   /** [[pruned]] over the analyzer's persisted positions, as (token,
     * doc_id, pos).
@@ -926,7 +971,7 @@ object Search {
       a: Analyzer = Raw,
       asOf: Option[Long] = None
   ): DataFrame =
-    pruned(s, dir, s.read.schema(positionsSchema).parquet(s"$dir/${a.positions}"), terms, asOf)
+    pruned(s, dir, a.positions, positionsSchema, terms, asOf)
       .select(col("token"), col("doc_id"), col("pos"))
 
   /** On-disk format version, stamped into `dir/meta`. Version 2 is the
@@ -1236,7 +1281,7 @@ object Search {
     val terms = fieldTerms.map(_._2).distinct
     val pairCond =
       fieldTerms.map { case (f, t, _) => col("field") === f && col("token") === t }.reduce(_ || _)
-    val fp = pruned(s, fdir, s.read.parquet(s"$fdir/fpostings"), terms)
+    val fp = pruned(s, fdir, "fpostings", fpostingsSchema(fmeta.keys), terms)
       .filter(pairCond)
       .select(col("field"), col("token"), col("doc_id"), col("tf"))
     // per-field N riding a CASE chain — the request's fields only
@@ -1714,6 +1759,15 @@ object Search {
       .reduce(_ unionByName _)
   }
 
+  /** Schema of a persisted fpostings relation over `fields`. */
+  private def fpostingsSchema(fields: Iterable[String]) = {
+    val keys = new org.apache.spark.sql.types.StructType()
+      .add("token", "string")
+      .add("doc_id", "long")
+      .add("field", "string")
+    fields.toSeq.sorted.foldLeft(keys)((st, f) => st.add(s"dl_$f", "long")).add("tf", "long").add("tbucket", "long")
+  }
+
   /** (doc_id, dl_<f>…) — the fielded doc-keyed registry rows. */
   private def fieldedDocLengths(docs: DataFrame, idCol: String, fieldCols: Seq[String]): DataFrame =
     fieldedBase(docs, idCol, fieldCols).select(col("doc_id") +: fieldCols.map(f => col(s"dl_$f")): _*)
@@ -1924,7 +1978,7 @@ object Search {
     }
     // tombstone gating directly over the pruned scan (liveRows'
     // input_file_name contract) — a deleted doc's rows never score
-    val scan = pruned(s, dir, s.read.parquet(s"$dir/fpostings"), terms)
+    val scan = pruned(s, dir, "fpostings", fpostingsSchema(meta.keys), terms)
     val aggCols =
       fields.map(f =>
         coalesce(sum(when(col("field") === f, col("tf"))), lit(0L)).cast("long").as(s"tf_$f")
@@ -1974,7 +2028,8 @@ object Search {
       meta.contains(field),
       s"field '$field' not in the index at $dir (fields: ${meta.keys.toSeq.sorted.mkString(", ")})"
     )
-    val p = pruned(s, dir, s.read.parquet(s"$dir/fpostings").filter(col("field") === field), terms)
+    val p = pruned(s, dir, "fpostings", fpostingsSchema(meta.keys), terms)
+      .filter(col("field") === field)
       .select(col("token"), col("doc_id"), col("tf"))
     val scored = p
       .join(broadcast(idfModel(p, meta(field)._1, 1000000L)), "token")
@@ -2712,9 +2767,7 @@ object Search {
       k: Int
   ): DataFrame = {
     require(maxQueryTerms >= 1, "moreLikeThis needs maxQueryTerms >= 1")
-    val srcBucket = docBucket(docId)
-    val dt = docStoreLive(s, storeDir)
-      .filter(col("dbucket") === lit(srcBucket) && col("doc_id") === lit(docId))
+    val dt = docStorePage(s, storeDir, Seq(docId))
       .select(explode(split(col("text"), " ")).as("token"))
       .groupBy(col("token"))
       .agg(count(lit(1)).cast("long").as("tf"))
@@ -4535,6 +4588,13 @@ object Search {
   private def docStoreLive(s: SparkSession, storeDir: String): DataFrame =
     liveRows(s, storeDir, s.read.parquet(s"$storeDir/docs"))
 
+  /** The store's live rows of a page's `ids` (as of `asOf` for an
+    * era's page), listed and read from the ids' dbucket dirs only
+    * ([[bucketProbe]]; PartitionFilters, spec-pinned).
+    */
+  private def docStorePage(s: SparkSession, storeDir: String, ids: Seq[Long], asOf: Option[Long] = None): DataFrame =
+    bucketProbe(s, storeDir, "docs", "dbucket", ids.map(docBucket), col("doc_id").isin(ids: _*), None, asOf)
+
   /** The doc store as a [[Generations]] kind: one doc-bucketed
     * relation and no stats. An upsert reads the batch twice
     * (tombstones + rows), so it is persisted then; compaction always
@@ -4784,12 +4844,9 @@ object Search {
         .empty[(Long, Long, Long, Long, String)]
         .toDF("rank", "doc_id", "start", "score_micro", "snippet")
     }
-    val ids = page.map(_._1).toSeq
-    val dbuckets = ids.map(docBucket).distinct
     // the page's token arrays under the analyzer, so positions and
     // rendering stay aligned even on damaged documents
-    val toks = docStoreLive(s, storeDir)
-      .filter(col("dbucket").isin(dbuckets: _*) && col("doc_id").isin(ids: _*))
+    val toks = docStorePage(s, storeDir, page.map(_._1).toSeq)
       .select(col("doc_id"), a.tokens("text").as("toks"))
     val ranked = page.zipWithIndex.toSeq
       .map { case ((id, st, sc), i) => (i + 1L, id, st, sc) }
@@ -4874,12 +4931,8 @@ object Search {
         .empty[(Long, Long, String, Long, String)]
         .toDF("rank", "doc_id", "term", "pos", "snippet")
     }
-    val dbuckets = ids.map(docBucket).distinct
     val ranks = hitRows.toSeq.toDF("rank", "doc_id")
-    val storeScan = s.read
-      .parquet(s"$storeDir/docs")
-      .filter(col("dbucket").isin(dbuckets: _*) && col("doc_id").isin(ids: _*))
-    val toks = liveRows(s, storeDir, storeScan, asOf = asOf)
+    val toks = docStorePage(s, storeDir, ids, asOf)
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
     val occ =
       if (a == Raw)

@@ -2279,4 +2279,159 @@ class SearchSpec extends SparkSpec {
       .orderBy("rank").collect()
     assert(ranked.head.getAs[Long]("doc_id") == 1L)
   }
+
+  /** Jobs started while `body` runs on this thread, as each job's task
+    * count: the job group tags them (AQE's pool threads inherit it) and
+    * a marker job in the same group, seen last, flushes the listener bus.
+    */
+  private def jobTasks(body: => Unit): Seq[Int] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"probe-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          seen.add((Option(e.properties.getProperty("spark.job.description")).getOrElse(""), e.stageInfos.map(_.numTasks).sum))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "")
+      body
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      import org.scalatest.concurrent.Eventually._
+      import org.scalatest.time.{Seconds, Span}
+      eventually(timeout(Span(30, Seconds)))(assert(seen.stream().anyMatch(_._1 == "marker")))
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq.filter(_._1 != "marker").map(_._2)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("index probes list only their terms' bucket dirs and run request-sized scans as one partition") {
+    import Search.Analyzer.Raw
+    // 1,200 distinct tokens: every one of the 64 token-hash buckets is
+    // occupied in every tier, so a whole-root read would list 64 dirs
+    val docs = (1L to 400L)
+      .map(i => (i, (0 until 9).map(j => (i * 37 + j * 131) % 1200).map(t => if (t % 3 == 0) s"W$t," else s"w$t").mkString(" ")))
+      .toDF("doc_id", "text")
+    val dir = tempDir("graft_probe_shape").toString + "/idx"
+    Search.saveSearchIndex(docs, "doc_id", "text", dir, analyzed = true)
+    Seq(Raw, Folded).flatMap(a => Seq(a.postings, a.positions)).foreach { rel =>
+      val n = new java.io.File(s"$dir/$rel").listFiles().count(_.getName.startsWith("tbucket="))
+      assert(n == 64, s"$rel has $n bucket dirs")
+    }
+    val idx = Search.Index(spark, dir)
+    val doc7 = docs.filter(col("doc_id") === 7L).head().getString(1).split(" ").toSeq
+    val (terms, phrase) = (doc7.take(2), doc7.slice(2, 4))
+    val routes: Seq[(String, Search.Analyzer, Seq[String], Int, () => org.apache.spark.sql.DataFrame)] =
+      Seq(Raw, Folded).flatMap { a =>
+        Seq(
+          ("bm25", a, terms, 3, () => Search.bm25Search(idx, terms, 10, a)),
+          ("conj", a, terms, 3, () => Search.conjunctiveSearch(idx, terms, 10, a)),
+          ("phrase", a, phrase, 4, () => Search.phraseSearch(idx, phrase, a))
+        )
+      }
+    routes.foreach { case (name, a, ts, maxJobs, route) =>
+      val what = s"$name/$a"
+      val buckets = ts.map(a.term).map(Search.tokenBucket).toSet
+      var df: org.apache.spark.sql.DataFrame = null
+      val jobs = jobTasks { df = route(); assert(df.collect().nonEmpty, what) }
+      assert(jobs.forall(_ < 32), s"$what: a job of >= 32 tasks lists the whole relation: $jobs")
+      assert(jobs.size <= maxJobs, s"$what: ${jobs.size} jobs > $maxJobs: $jobs")
+      val files = df.inputFiles.toSeq
+      assert(files.nonEmpty, what)
+      files.foreach { f =>
+        val b = "/tbucket=(\\d+)/".r.findFirstMatchIn(f).map(_.group(1).toLong)
+        assert(f.contains(dir) && b.exists(buckets), s"$what read $f outside its buckets $buckets")
+      }
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters: [") && plan.contains("tbucket"), plan.take(2000))
+    }
+    // the one-partition path depends on input size: below the listed
+    // bytes the scan keeps its splits and the route its exchanges
+    val shuffle = "\\bExchange\\b".r
+    def bm25Plan() = Search.bm25Search(idx, terms, 10).queryExecution.executedPlan.toString
+    assert(shuffle.findFirstIn(bm25Plan()).isEmpty, bm25Plan())
+    val bytes = Search.bm25Search(idx, terms, 10).inputFiles.map(f => new java.io.File(new java.net.URI(f)).length).sum
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, (bytes - 1).toString)
+    try assert(shuffle.findFirstIn(bm25Plan()).nonEmpty, bm25Plan())
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("index probes see every maintenance op at once; absent buckets and raw-only folded probes behave as before") {
+    import Search.Analyzer.Raw
+    val dir = tempDir("graft_probe_fresh").toString + "/idx"
+    val base = Seq(
+      (1L, "Red fox jumps over the lazy dog"),
+      (2L, "the red fox sleeps"),
+      (3L, "a lazy dog, a red fox.")
+    )
+    val baseBuckets = (for {
+      a <- Seq(Raw, Folded); (_, t) <- base; w <- t.split(" ") if a.term(w).nonEmpty
+    } yield Search.tokenBucket(a.term(w))).toSet
+    // a term whose bucket dir no tier of the base index has
+    val novel = Iterator.from(0).map(i => s"novel$i").find(t => !baseBuckets(Search.tokenBucket(t))).get
+    val phrase = Seq("red", "fox")
+    var docs = base
+    def answers(src: Search.Source, a: Search.Analyzer) = (
+      Search.phraseSearch(src, phrase, a).collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq,
+      Search.conjunctiveSearch(src, Seq("lazy", novel), 100, a).collect().map(_.getAs[Long]("doc_id")).sorted.toSeq,
+      Search.bm25Search(src, Seq(novel), 100, a).collect().map(_.getAs[Long]("doc_id")).sorted.toSeq
+    )
+    def agrees(step: String): Unit = Seq(Raw, Folded).foreach { a =>
+      val want = answers(Search.Corpus(docs.toDF("doc_id", "text")), a)
+      assert(answers(Search.Index(spark, dir), a) == want, s"after $step under $a")
+    }
+    Search.saveSearchIndex(base.toDF("doc_id", "text"), "doc_id", "text", dir, analyzed = true)
+    agrees("build")
+    // absent bucket dir: empty rows with the route's schema
+    val empty = Search.bm25Search(Search.Index(spark, dir), Seq(novel), 10)
+    assert(empty.collect().isEmpty)
+    assert(empty.schema.map(f => (f.name, f.dataType)) ==
+      Search.bm25Search(Search.Index(spark, dir), Seq("fox"), 10).schema.map(f => (f.name, f.dataType)))
+    assert(Search.phraseSearch(Search.Index(spark, dir), Seq(novel, novel + "x")).collect().isEmpty)
+    val added = Seq((4L, s"the RED fox met $novel and a lazy cat"))
+    Search.appendToSearchIndex(added.toDF("doc_id", "text"), "doc_id", "text", dir, analyzed = true)
+    docs ++= added
+    agrees("append")
+    val batch0 = Seq((5L, s"lazy $novel red fox"))
+    Search.applySearchIndexBatch(batch0.toDF("doc_id", "text"), "doc_id", "text", dir, 0L, analyzed = true)
+    docs ++= batch0
+    agrees("apply batch")
+    val atGen0 = docs
+    val upsert = Seq((2L, s"the red fox is $novel and lazy"))
+    Search.applySearchIndexBatch(upsert.toDF("doc_id", "text"), "doc_id", "text", dir, 1L, analyzed = true, upsert = true)
+    docs = docs.filterNot(_._1 == 2L) ++ upsert
+    agrees("upsert")
+    // time travel: generation 0 serves the state before the upsert
+    val asOf = Search.conjunctiveSearch(Search.Index(spark, dir, Some(0L)), Seq("red", "fox"), 100)
+      .collect().map(_.getAs[Long]("doc_id")).sorted.toSeq
+    assert(asOf == Search.conjunctiveSearch(Search.Corpus(atGen0.toDF("doc_id", "text")), Seq("red", "fox"), 100)
+      .collect().map(_.getAs[Long]("doc_id")).sorted.toSeq)
+    Search.deleteFromSearchIndex(spark, dir, Seq(1L, 4L))
+    docs = docs.filterNot(d => d._1 == 1L || d._1 == 4L)
+    agrees("delete")
+    Search.compactSearchIndex(spark, dir)
+    agrees("compact")
+    docs = Seq((9L, s"red fox $novel lazy"), (10L, "Lazy red FOX"))
+    Search.saveSearchIndex(docs.toDF("doc_id", "text"), "doc_id", "text", dir, analyzed = true)
+    agrees("rebuild")
+    // a folded probe on a raw-only index still fails loudly
+    val raw = tempDir("graft_probe_raw").toString + "/idx"
+    Search.saveSearchIndex(base.toDF("doc_id", "text"), "doc_id", "text", raw)
+    intercept[IllegalStateException](Search.bm25Search(Search.Index(spark, raw), Seq("fox"), 10, Folded))
+    Seq(
+      Folded.postings -> (() => Search.conjunctiveSearch(Search.Index(spark, raw), Seq("fox"), 10, Folded)),
+      Folded.positions -> (() => Search.phraseSearch(Search.Index(spark, raw), phrase, Folded))
+    ).foreach { case (rel, route) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](route().collect())
+      assert(e.getMessage.contains(s"$raw/$rel"), e.getMessage)
+    }
+  }
 }
