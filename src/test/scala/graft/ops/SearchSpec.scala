@@ -2313,8 +2313,9 @@ class SearchSpec extends SparkSpec {
 
   test("index probes list only their terms' bucket dirs and run request-sized scans as one partition") {
     import Search.Analyzer.Raw
-    // 1,200 distinct tokens: every one of the 64 token-hash buckets is
-    // occupied in every tier, so a whole-root read would list 64 dirs
+    // up to 1,200 distinct tokens: every one of the 64 token-hash buckets
+    // is occupied in every tier (asserted), so a whole-root read would
+    // list 64 dirs
     val docs = (1L to 400L)
       .map(i => (i, (0 until 9).map(j => (i * 37 + j * 131) % 1200).map(t => if (t % 3 == 0) s"W$t," else s"w$t").mkString(" ")))
       .toDF("doc_id", "text")
